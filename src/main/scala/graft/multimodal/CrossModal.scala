@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * per-row score + gate AFTER pairing, which makes the gate a
   * STATELESS projection/filter: it composes pre-sink into a streaming
   * feed exactly like the literal quality model (no join, no state, no
-  * watermark — see `Streams.crossModalGatedCurationFeed`).
+  * watermark — see `Streams.crossModalGate`).
   *
   * Missing-modality contract: `cosine_sim` is NULL when either vector
   * is null, the dimensions disagree, or an element is null — and a

@@ -4979,7 +4979,7 @@ object LlmPipeline {
     * the growing best-cell array, same total tie order — so a drift
     * anywhere in seed counts, selection, ilog2 scoring, the DP, or
     * the per-doc fold breaks the hash. This is the scoring leg the
-    * [[graft.streaming.Streams.ulmGatedCurationFeed]] gate serves.
+    * [[graft.streaming.Streams.ulmGateFromSnapshot]] gate serves.
     * Scale: train is the q148 shape (one corpus scan + KB frames);
     * scoring folds once per DISTINCT word and joins back word-keyed.
     */

@@ -178,905 +178,6 @@ object Streams {
       .drop("__content_fp")
   }
 
-  /** Streamed CROSS-RUN content dedup — the glue that makes
-    * [[graft.ingest.DedupStore]] consumable from a stream: every
-    * micro-batch runs the two-phase check-persist-record cycle against
-    * the store, writing each batch's survivors to its own
-    * `batch=<id>` subdirectory of `outDir` (readable as one table —
-    * Spark exposes `batch` as a partition column).
-    *
-    * Delivery semantics, per crash window (foreachBatch replays are
-    * at-least-once):
-    *  - survivors in `outDir` are EXACTLY-ONCE: a replayed batch id
-    *    that already has its `_SUCCESS` marker is not rewritten (a
-    *    replay AFTER the store recorded the hashes would recompute an
-    *    EMPTY survivor set and overwrite data with nothing), and a
-    *    half-written directory (no marker) is recomputed from the
-    *    unchanged store and overwritten cleanly;
-    *  - store hash rows are AT-LEAST-ONCE: hashes are recorded from the
-    *    committed survivor directory (the persisted read-back the
-    *    DedupStore contract asks for), re-recorded on replay — never
-    *    lost, duplicates reclaimed by DedupStore.compactStore.
-    * Within-batch + cross-batch + cross-RESTART duplicates all collapse;
-    * StreamingSpec drives the crash matrix. `outDir` + `checkpointDir`
-    * are ONE unit (batch ids name the subdirectories): reset both or
-    * neither — a fresh checkpoint against a populated outDir sees old
-    * batch directories as committed, which is exactly what makes a
-    * full-history replay a no-op instead of a data loss.
-    */
-  def dedupThroughStore(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "dedup_through_store",
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.path(spark, storePath),
-        { graft.ingest.DedupStore.compactStore(spark, storePath); () },
-        Some(() => { graft.ingest.DedupStore
-          .buildBloomSidecar(spark, storePath); () })))(
-      // the bloom-aware check is a strict superset: identical answers
-      // with no sidecar (IngestSpec/PropertySpec equality laws), and
-      // micro-batches skip the store history once an operator has built
-      // one (DedupStore.buildBloomSidecar on the compaction schedule —
-      // or inline: `maintenanceEvery` > 0 lets the appender run its own
-      // maintenance every N batches when the StoreStats signals fire,
-      // so a year-long feed self-maintains without an external
-      // scheduler)
-      batch => graft.ingest.DedupStore
-        .newUniqueWithBloom(batch, textCol, idCol, storePath),
-      committed => graft.ingest.DedupStore
-        .recordHashes(committed, textCol, storePath))
-
-  /** Inline self-maintenance for the store-backed cycles, driven by
-    * the [[graft.ingest.StoreStats]] signals the reports were built to
-    * feed: compaction when `compactionDue` (the tombstone backlog is
-    * approaching the broadcast ceiling, or file-count pressure), a
-    * sidecar rebuild when `sidecarStale` (residual share past 25%) —
-    * and always after a compaction, whose rewritten file names void
-    * the old sidecar's coverage. Stores without a path-form sidecar
-    * pass None and only compact.
-    */
-  private def maintainIfDue(stats: => graft.ingest.StoreStats.Stats,
-      compact: => Unit, rebuildSidecar: Option[() => Unit]): Unit = {
-    val s = stats
-    if (s.compactionDue) {
-      compact
-      rebuildSidecar.foreach(_.apply())
-    } else if (s.sidecarStale) rebuildSidecar.foreach(_.apply())
-  }
-
-  /** [[dedupThroughStore]] against the BUCKETED catalog store
-    * ([[graft.ingest.DedupStore.ensureBucketedStore]]) — identical
-    * delivery semantics; the per-micro-batch anti-join plans zero
-    * exchanges on the ever-growing store side, which is the form that
-    * holds up when the stream has been running for a year. The table
-    * is created on first use (`buckets` sizes it then; an existing
-    * table's bucket count wins).
-    */
-  def dedupThroughBucketedStore(docs: DataFrame, textCol: String,
-      idCol: String, table: String, outDir: String,
-      checkpointDir: String, buckets: Int = 32,
-      maintenanceEvery: Int = 0): StreamingQuery = {
-    graft.ingest.DedupStore.ensureBucketedStore(
-      docs.sparkSession, table, buckets)
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "dedup_through_bucketed_store",
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.bucketed(spark, table),
-        { graft.ingest.DedupStore.compactBucketedStore(spark, table); () },
-        Some(() => { graft.ingest.DedupStore
-          .buildBloomSidecarBucketed(spark, table); () })))(
-      // bloom-aware for the same reason as dedupThroughStore; the
-      // bucketed sidecar lives in the table directory and retires with
-      // compaction's swap, so the stream needs no coordination
-      batch => graft.ingest.DedupStore
-        .newUniqueBucketedWithBloom(batch, textCol, idCol, table),
-      committed => graft.ingest.DedupStore
-        .recordHashesBucketed(committed, textCol, table))
-  }
-
-  /** The shared micro-batch cycle of the store-backed dedup sinks:
-    * check (`newUnique*` / `newNearUnique`) → persist survivors
-    * exactly-once into `batch=<id>` → record at-least-once from the
-    * committed read-back. See [[dedupThroughStore]] for the
-    * delivery-semantics contract; `check`/`record` inject the store
-    * form and `committedSchema` maps the input schema to the survivor
-    * schema (a batch with zero survivors commits a data-file-less
-    * directory that schema inference cannot read, so the read-back
-    * schema must be explicit).
-    */
-  private def dedupThroughStoreWith(docs: DataFrame, textCol: String,
-      outDir: String, checkpointDir: String, queryName: String,
-      committedSchema: org.apache.spark.sql.types.StructType =>
-        org.apache.spark.sql.types.StructType =
-        _.add("content_hash", org.apache.spark.sql.types.StringType),
-      maintenanceEvery: Int = 0,
-      maintain: SparkSession => Unit = _ => (),
-      // batch-id-aware check override (the observed full-stack form
-      // writes its yield frame keyed by batch id); when set, `check`
-      // is ignored. Runs only on UNCOMMITTED batches, like `check`.
-      checkWithId: Option[(DataFrame, Long) => DataFrame] = None)(
-      check: DataFrame => DataFrame,
-      record: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = new org.apache.hadoop.fs.Path(outDir, s"batch=$batchId")
-        val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-        val committed = fs.exists(
-          new org.apache.hadoop.fs.Path(target, "_SUCCESS"))
-        if (!committed) {
-          val fresh = checkWithId.map(_(batch, batchId))
-            .getOrElse(check(batch))
-            .localCheckpoint(true) // one evaluation feeds the write
-          try fresh.write.mode("overwrite").parquet(target.toString)
-          finally fresh.unpersist()
-        }
-        // record from the COMMITTED read-back
-        record(
-          spark.read.schema(committedSchema(batch.schema))
-            .parquet(target.toString))
-        // r14 inline self-maintenance: AFTER the record step (so the
-        // just-recorded batch counts toward the signals), every
-        // `maintenanceEvery` batches. The single-writer assumption the
-        // stores already document makes this safe: the appender IS the
-        // writer, so running compaction between its own batches can
-        // never race an append. A replayed committed batch still
-        // reaches here — maintenance is idempotent (signals re-check).
-        if (maintenanceEvery > 0 && (batchId + 1) % maintenanceEvery == 0)
-          maintain(spark)
-        ()
-      }
-      .start()
-
-  /** Streamed CROSS-RUN NEAR dedup — [[dedupThroughStore]]'s cycle over
-    * [[graft.ingest.NearDupStore]]: every micro-batch drops documents
-    * that near-duplicate ANY previously recorded document (band-key
-    * equi-join + ≥8/16 signature verification), persists survivors
-    * exactly-once into `batch=<id>`, and records their banded
-    * signatures at-least-once from the committed read-back. Survivor
-    * rows keep the input schema unchanged (no hash column is added).
-    * Within-micro-batch near-dups are NOT collapsed here — that is the
-    * q28/q60 pipeline's job; compose [[streamingContentDedup]] upstream
-    * for exact within-stream dups. Same replay matrix as the exact
-    * forms: committed batch directories are skipped, so a full-history
-    * replay after checkpoint loss is a no-op.
-    */
-  def nearDedupThroughStore(docs: DataFrame, textCol: String,
-      idCol: String, storePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "near_dedup_through_store", committedSchema = identity,
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.path(spark, storePath),
-        { graft.ingest.NearDupStore.compactStore(spark, storePath); () },
-        Some(() => { graft.ingest.NearDupStore
-          .buildBloomSidecar(spark, storePath); () })))(
-      // bloom-aware like the exact/span cycles (r14 closed the family
-      // asymmetry — the path-form near store now has a sidecar too)
-      batch => graft.ingest.NearDupStore
-        .newNearUniqueWithBloom(batch, textCol, idCol, storePath),
-      committed => graft.ingest.NearDupStore
-        .recordSignatures(committed, textCol, idCol, storePath))
-
-  /** Streamed CROSS-RUN PERCEPTUAL IMAGE dedup — [[dedupThroughStore]]'s
-    * cycle keyed on [[graft.multimodal.Multimodal.aHash64]] instead of
-    * text: every micro-batch's images decode through the production
-    * path, fingerprint to the 64-bit perceptual hash (hex-packed into
-    * `__phash`), and the EXACT store machinery runs unchanged on that
-    * column — so a re-encoded, block-upscaled, or sub-bit-brightness
-    * copy of anything EVER ingested drops, across batches, restarts,
-    * and runs, with the store family's whole contract (two-phase
-    * crash-safe records, Bloom sidecars, compaction, exactly-once
-    * survivors / at-least-once records) inherited rather than rebuilt.
-    * Undecodable payloads cannot be fingerprinted and DROP at the gate
-    * (the [[graft.multimodal.Multimodal.decodeImages]] posture — audit
-    * by anti-joining survivors against the feed). Within-batch copies
-    * collapse on the hash (min-id keeper), like the text cycle.
-    */
-  def imageDedupThroughStore(media: DataFrame, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    mediaDedupThroughStore(media, idCol, storePath, outDir,
-      checkpointDir, "image_dedup_through_store", maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.aHash64(
-        graft.multimodal.Multimodal.decodeImages(batch)))
-
-  /** [[imageDedupThroughStore]]'s audio flank — the same store cycle
-    * keyed on [[graft.multimodal.Multimodal.audioHash64]], so a
-    * re-encoded or volume-normalized copy of any recording ever
-    * ingested drops cross-run (the loudness-invariance the energy-
-    * profile hash guarantees).
-    */
-  def audioDedupThroughStore(media: DataFrame, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    mediaDedupThroughStore(media, idCol, storePath, outDir,
-      checkpointDir, "audio_dedup_through_store", maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.audioHash64(batch))
-
-  /** The media CURATION FEED — [[curationFeedThroughStores]]'s staging
-    * for media columns: every micro-batch fingerprints ONCE (decode +
-    * perceptual hash, the expensive step — its band columns ride the
-    * row from then on), checks the EXACT store first (byte-identical
-    * and perceptually-identical copies collapse on the hex-packed
-    * hash), the survivors against the NEAR store
-    * ([[graft.ingest.MediaNearStore]]: band candidate join + Hamming
-    * ≤ 3 verify — the mildly-retouched/requantized variants whose
-    * hash moves a bit or three), and what remains lands exactly-once
-    * with BOTH stores recorded at-least-once from the committed
-    * read-back's own band columns (no re-decode). Undecodable
-    * payloads drop at the fingerprint join. Inline self-maintenance
-    * (`maintenanceEvery`) compacts both stores and rebuilds their
-    * sidecars on the StoreStats signals, like the text feeds.
-    */
-  def imageCurationFeedThroughStores(media: DataFrame, idCol: String,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0): StreamingQuery =
-    mediaCurationFeed(media, idCol, exactStorePath, nearStorePath,
-      outDir, checkpointDir, "image_curation_feed", maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.aHash64(
-        graft.multimodal.Multimodal.decodeImages(batch)))
-
-  /** [[imageCurationFeedThroughStores]]'s audio flank (energy-profile
-    * hash — loudness-invariant exact stage, Hamming-banded near
-    * stage).
-    */
-  def audioCurationFeedThroughStores(media: DataFrame, idCol: String,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0): StreamingQuery =
-    mediaCurationFeed(media, idCol, exactStorePath, nearStorePath,
-      outDir, checkpointDir, "audio_curation_feed", maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.audioHash64(batch))
-
-  /** [[imageCurationFeedThroughStores]] with the q129 QUALITY GATE
-    * staged FIRST — quality → exact → near, in increasing per-payload
-    * cost beyond the shared decode, off ONE
-    * [[graft.multimodal.Multimodal.imageProfile]] pass (hash bands and
-    * quality facts from a single plane walk — at 100 TB the decode is
-    * the cost and must not run per stage). Gate rejects drop before
-    * any store probe and are never recorded (the
-    * [[qualityGatedCurationFeed]] posture: rejects are not "seen"; a
-    * later resubmission under relaxed thresholds is judged afresh).
-    * Thresholds default to q129's.
-    */
-  def imageCurationFeedGated(media: DataFrame, idCol: String,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0,
-      minDim: Int = 8, maxAspectFp: Long = 4000000L,
-      minBrightFp: Long = 100000L, maxBrightFp: Long = 900000L,
-      minDistinct: Long = 16L): StreamingQuery =
-    mediaCurationFeed(media, idCol, exactStorePath, nearStorePath,
-      outDir, checkpointDir, "image_curation_feed_gated",
-      maintenanceEvery,
-      gate = imageQualityGate(minDim, maxAspectFp, minBrightFp,
-        maxBrightFp, minDistinct))(
-      batch => graft.multimodal.Multimodal.imageProfile(
-        graft.multimodal.Multimodal.decodeImages(batch)))
-
-  /** The q129 rule as a batch gate over an `imageProfile`d frame —
-    * ONE definition for the path and bucketed gated feeds.
-    */
-  private def imageQualityGate(minDim: Int, maxAspectFp: Long,
-      minBrightFp: Long, maxBrightFp: Long,
-      minDistinct: Long): DataFrame => DataFrame =
-    df => df.filter(
-        least(col("width"), col("height")) >= minDim &&
-          expr("(greatest(width, height) * 1000000L) div " +
-            "least(width, height)") <= maxAspectFp &&
-          expr("(px_sum * 1000000L) div (255L * width * height)")
-            .between(minBrightFp, maxBrightFp) &&
-          col("n_distinct") >= minDistinct)
-      .drop("width", "height", "px_sum", "n_distinct")
-
-  /** The q130 rule as a batch gate over an `audioProfile`d frame. */
-  private def audioQualityGate(minDurationMs: Long, maxClipFp: Long,
-      minMeanEnergy: Long): DataFrame => DataFrame =
-    df => df.filter(
-        expr("(n_samples * 1000L) div sample_rate") >= minDurationMs &&
-          expr("(n_clipped * 1000000L) div n_samples") <= maxClipFp &&
-          expr("energy div n_samples") >= minMeanEnergy)
-      .drop("sample_rate", "n_samples", "n_clipped", "energy")
-
-  /** [[imageCurationFeedGated]]'s audio flank — q130's gate (duration,
-    * clip ratio, silence floor) staged before the exact/near stores,
-    * off one [[graft.multimodal.Multimodal.audioProfile]] PCM walk.
-    */
-  def audioCurationFeedGated(media: DataFrame, idCol: String,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0,
-      minDurationMs: Long = 100L, maxClipFp: Long = 10000L,
-      minMeanEnergy: Long = 10000L): StreamingQuery =
-    mediaCurationFeed(media, idCol, exactStorePath, nearStorePath,
-      outDir, checkpointDir, "audio_curation_feed_gated",
-      maintenanceEvery,
-      gate = audioQualityGate(minDurationMs, maxClipFp,
-        minMeanEnergy))(
-      batch => graft.multimodal.Multimodal.audioProfile(batch))
-
-  /** [[imageCurationFeedGated]] against BUCKETED catalog tables —
-    * the quality → exact → near staging (one fused decode) with both
-    * stores' probes planning zero store-side exchanges; the gated
-    * matrix closed along the store-form axis. Gate semantics are
-    * [[imageCurationFeedGated]]'s verbatim (shared definition):
-    * rejects drop before any store probe and are never recorded.
-    */
-  def imageCurationFeedGatedBucketed(media: DataFrame, idCol: String,
-      exactTable: String, nearTable: String, outDir: String,
-      checkpointDir: String, buckets: Int = 32,
-      maintenanceEvery: Int = 0, minDim: Int = 8,
-      maxAspectFp: Long = 4000000L, minBrightFp: Long = 100000L,
-      maxBrightFp: Long = 900000L,
-      minDistinct: Long = 16L): StreamingQuery =
-    mediaCurationFeedBucketed(media, idCol, exactTable, nearTable,
-      outDir, checkpointDir, "image_curation_feed_gated_bucketed",
-      buckets, maintenanceEvery,
-      gate = imageQualityGate(minDim, maxAspectFp, minBrightFp,
-        maxBrightFp, minDistinct))(
-      batch => graft.multimodal.Multimodal.imageProfile(
-        graft.multimodal.Multimodal.decodeImages(batch)))
-
-  /** [[imageCurationFeedGatedBucketed]]'s audio flank. */
-  def audioCurationFeedGatedBucketed(media: DataFrame, idCol: String,
-      exactTable: String, nearTable: String, outDir: String,
-      checkpointDir: String, buckets: Int = 32,
-      maintenanceEvery: Int = 0, minDurationMs: Long = 100L,
-      maxClipFp: Long = 10000L,
-      minMeanEnergy: Long = 10000L): StreamingQuery =
-    mediaCurationFeedBucketed(media, idCol, exactTable, nearTable,
-      outDir, checkpointDir, "audio_curation_feed_gated_bucketed",
-      buckets, maintenanceEvery,
-      gate = audioQualityGate(minDurationMs, maxClipFp,
-        minMeanEnergy))(
-      batch => graft.multimodal.Multimodal.audioProfile(batch))
-
-  private def mediaCurationFeed(media: DataFrame, idCol: String,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, queryName: String, maintenanceEvery: Int,
-      gate: DataFrame => DataFrame = identity)(
-      hashOf: DataFrame => DataFrame): StreamingQuery = {
-    val it = org.apache.spark.sql.types.IntegerType
-    dedupThroughStoreWith(media, "__phash", outDir, checkpointDir,
-      queryName,
-      committedSchema = _
-        .add("band0", it).add("band1", it).add("band2", it)
-        .add("band3", it)
-        .add("__phash", org.apache.spark.sql.types.StringType)
-        .add("content_hash", org.apache.spark.sql.types.StringType),
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => {
-        maintainIfDue(
-          graft.ingest.StoreStats.path(spark, exactStorePath),
-          { graft.ingest.DedupStore
-            .compactStore(spark, exactStorePath); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecar(spark, exactStorePath); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.path(spark, nearStorePath),
-          { graft.ingest.MediaNearStore
-            .compactStore(spark, nearStorePath); () },
-          Some(() => { graft.ingest.MediaNearStore
-            .buildBloomSidecar(spark, nearStorePath); () }))
-      })(
-      batch => {
-        val hs = hashOf(batch
-            .select(col(idCol).as("media_id"), col("content")))
-          .withColumnRenamed("media_id", "__hid")
-          .withColumn("__phash",
-            concat(lpad(hex(col("band3")), 4, "0"),
-              lpad(hex(col("band2")), 4, "0"),
-              lpad(hex(col("band1")), 4, "0"),
-              lpad(hex(col("band0")), 4, "0")))
-        val withBands = gate(
-          batch.join(hs, batch(idCol) <=> hs("__hid")).drop("__hid"))
-        val exactSurvivors = graft.ingest.DedupStore
-          .newUniqueWithBloom(withBands, "__phash", idCol,
-            exactStorePath)
-        graft.ingest.MediaNearStore.newNearUniqueWithBloom(
-          exactSurvivors, idCol,
-          exactSurvivors.select(col(idCol).as("media_id"),
-            col("band0"), col("band1"), col("band2"), col("band3")),
-          nearStorePath)
-      },
-      committed => {
-        graft.ingest.DedupStore
-          .recordHashes(committed, "__phash", exactStorePath)
-        graft.ingest.MediaNearStore.recordHashes(
-          committed.select(col(idCol).as("media_id"), col("band0"),
-            col("band1"), col("band2"), col("band3")), nearStorePath)
-      })
-  }
-
-  /** [[imageCurationFeedThroughStores]] against BUCKETED catalog
-    * tables — the year-of-recording form for media: the exact probe's
-    * anti-join and the near store's band candidate join both plan
-    * zero exchanges on their ever-growing store sides (`__phash` and
-    * `band_key` as the at-rest bucket keys, LayoutSpec-pinned), both
-    * bloom-aware; same one-decode staging and replay matrix as the
-    * path form.
-    */
-  def imageCurationFeedThroughBucketedStores(media: DataFrame,
-      idCol: String, exactTable: String, nearTable: String,
-      outDir: String, checkpointDir: String, buckets: Int = 32,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    mediaCurationFeedBucketed(media, idCol, exactTable, nearTable,
-      outDir, checkpointDir, "image_curation_feed_bucketed", buckets,
-      maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.aHash64(
-        graft.multimodal.Multimodal.decodeImages(batch)))
-
-  /** [[imageCurationFeedThroughBucketedStores]]'s audio flank. */
-  def audioCurationFeedThroughBucketedStores(media: DataFrame,
-      idCol: String, exactTable: String, nearTable: String,
-      outDir: String, checkpointDir: String, buckets: Int = 32,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    mediaCurationFeedBucketed(media, idCol, exactTable, nearTable,
-      outDir, checkpointDir, "audio_curation_feed_bucketed", buckets,
-      maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.audioHash64(batch))
-
-  /** [[mediaCurationFeed]] with both stores as bucketed catalog
-    * tables — probes, records, sidecars, compaction, and the inline
-    * maintenance signals all through the bucketed forms; the
-    * fingerprint staging (one decode, hex-packed `__phash`, band
-    * columns riding the row) is the path form's, verbatim.
-    */
-  /** Streamed CROSS-RUN PERCEPTUAL NEAR dedup for images —
-    * [[nearDedupThroughStore]]'s cycle over
-    * [[graft.ingest.MediaNearStore]]: every micro-batch fingerprints
-    * ONCE, drops images within Hamming ≤ 3 of ANY previously recorded
-    * hash (band candidate join + exact bitwise verify), persists
-    * survivors exactly-once, and records their bands at-least-once
-    * from the committed read-back's own hash columns (no re-decode).
-    * The near-only flank of the staged feeds — for pipelines that run
-    * their exact stage elsewhere. Undecodable payloads cannot be
-    * fingerprinted and DROP at the fingerprint join (the staged
-    * feeds' posture — audit by anti-joining survivors).
-    */
-  def imageNearDedupThroughStore(media: DataFrame, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    mediaNearDedupThroughStore(media, idCol, storePath, outDir,
-      checkpointDir, "image_near_dedup_through_store",
-      maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.aHash64(
-        graft.multimodal.Multimodal.decodeImages(batch)))
-
-  /** [[imageNearDedupThroughStore]]'s audio flank (energy-profile
-    * hash — loudness-invariant).
-    */
-  def audioNearDedupThroughStore(media: DataFrame, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    mediaNearDedupThroughStore(media, idCol, storePath, outDir,
-      checkpointDir, "audio_near_dedup_through_store",
-      maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.audioHash64(batch))
-
-  /** [[imageNearDedupThroughStore]]'s VIDEO flank — the container-
-    * derived size-profile fingerprint
-    * ([[graft.multimodal.Multimodal.videoHash64]]: a KB-scale stsz box
-    * walk, NO bitstream decode), so a re-muxed or re-stamped copy of
-    * an already-ingested clip — byte-different container, identical
-    * sample table — is dropped cross-run exactly like a re-encoded
-    * image or re-mastered recording (StreamingSpec plants one). This
-    * closes the media near-dup matrix's video hole; only bitstream-
-    * level perceptual hashing remains behind the external-decoder
-    * boundary.
-    */
-  def videoNearDedupThroughStore(media: DataFrame, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    mediaNearDedupThroughStore(media, idCol, storePath, outDir,
-      checkpointDir, "video_near_dedup_through_store",
-      maintenanceEvery)(
-      batch => graft.multimodal.Multimodal.videoHash64(batch))
-
-  private def mediaNearDedupThroughStore(media: DataFrame,
-      idCol: String, storePath: String, outDir: String,
-      checkpointDir: String, queryName: String, maintenanceEvery: Int)(
-      hashOf: DataFrame => DataFrame): StreamingQuery = {
-    val it = org.apache.spark.sql.types.IntegerType
-    dedupThroughStoreWith(media, idCol, outDir, checkpointDir,
-      queryName,
-      committedSchema = _
-        .add("band0", it).add("band1", it).add("band2", it)
-        .add("band3", it),
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.path(spark, storePath),
-        { graft.ingest.MediaNearStore
-          .compactStore(spark, storePath); () },
-        Some(() => { graft.ingest.MediaNearStore
-          .buildBloomSidecar(spark, storePath); () })))(
-      batch => {
-        val hs = hashOf(batch
-            .select(col(idCol).as("media_id"), col("content")))
-          .withColumnRenamed("media_id", "__hid")
-        val withBands =
-          batch.join(hs, batch(idCol) <=> col("__hid")).drop("__hid")
-        graft.ingest.MediaNearStore.newNearUniqueWithBloom(
-          withBands, idCol,
-          withBands.select(col(idCol).as("media_id"), col("band0"),
-            col("band1"), col("band2"), col("band3")), storePath)
-      },
-      committed => graft.ingest.MediaNearStore.recordHashes(
-        committed.select(col(idCol).as("media_id"), col("band0"),
-          col("band1"), col("band2"), col("band3")), storePath))
-  }
-
-  /** The VIDEO curation feed — the modality's staged form now that
-    * container metadata is REAL (q131/q132): the q132 quality gate
-    * FIRST (one KB-scale ISO BMFF walk per payload — unparseable,
-    * too-short, absurd-duration, tiny, extreme-aspect containers drop
-    * before anything else), then the EXACT content store (md5 of the
-    * payload bytes hex-packed into `__vhash` — byte-identical
-    * re-uploads collapse cross-run with the store family's whole
-    * contract). No perceptual NEAR stage: without bitstream decode
-    * there is no plane to hash — the documented external-decoder
-    * boundary; a deployment with a decoder slots
-    * [[graft.ingest.MediaNearStore]] here exactly as the image feed
-    * does. Gate rejects drop before the store probe and are never
-    * recorded (the gated-feed posture: a resubmission under relaxed
-    * thresholds is judged afresh).
-    */
-  def videoCurationFeedGated(media: DataFrame, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0, minDurationMs: Long = 1000L,
-      maxDurationMs: Long = 14400000L, minDim: Int = 64,
-      maxAspectFp: Long = 4000000L): StreamingQuery =
-    dedupThroughStoreWith(media, "__vhash", outDir, checkpointDir,
-      "video_curation_feed_gated",
-      committedSchema = _
-        .add("__vhash", org.apache.spark.sql.types.StringType)
-        .add("content_hash", org.apache.spark.sql.types.StringType),
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.path(spark, storePath),
-        { graft.ingest.DedupStore.compactStore(spark, storePath); () },
-        Some(() => { graft.ingest.DedupStore
-          .buildBloomSidecar(spark, storePath); () })))(
-      batch => {
-        val meta = graft.multimodal.Multimodal
-          .parseVideoMeta(batch
-            .select(col(idCol).as("media_id"), col("content")))
-          .toDF()
-          .withColumnRenamed("media_id", "__mid")
-        val gated = batch
-          .join(meta, batch(idCol) <=> col("__mid"))
-          // the q132 rule; aspect guarded against poisoned/zero dims
-          // (ANSI division) exactly like the registry query
-          .withColumn("__aspect_fp",
-            when(col("width") > 0 && col("height") > 0,
-              expr("(greatest(width, height) * 1000000L) div " +
-                "least(width, height)")).otherwise(lit(-1L)))
-          .filter(col("timescale") > 0 &&
-            col("duration_ms").between(minDurationMs, maxDurationMs) &&
-            least(col("width"), col("height")) >= minDim &&
-            col("__aspect_fp").between(0L, maxAspectFp))
-          .drop("__mid", "timescale", "duration", "duration_ms",
-            "width", "height", "__aspect_fp")
-          .withColumn("__vhash", md5(col("content")))
-        graft.ingest.DedupStore.newUniqueWithBloom(gated, "__vhash",
-          idCol, storePath)
-      },
-      committed => graft.ingest.DedupStore
-        .recordHashes(committed, "__vhash", storePath))
-
-  /** The q132 rule as a batch gate over a `videoProfile`d frame — ONE
-    * definition for the path and bucketed staged video feeds.
-    * Unparseable containers never reach the gate (the profile kernel
-    * drops them), so only the threshold legs live here.
-    */
-  private def videoQualityGate(minDurationMs: Long, maxDurationMs: Long,
-      minDim: Int, maxAspectFp: Long): DataFrame => DataFrame =
-    df => df
-      // aspect guarded against poisoned/zero dims (ANSI division)
-      // exactly like the registry query and the byte-exact feed — an
-      // audio-only track's tkhd carries width = height = 0, and a
-      // reordered conjunct must never divide by it
-      .withColumn("__aspect_fp",
-        when(col("width") > 0 && col("height") > 0,
-          expr("(greatest(width, height) * 1000000L) div " +
-            "least(width, height)")).otherwise(lit(-1L)))
-      .filter(
-        col("duration_ms").between(minDurationMs, maxDurationMs) &&
-          least(col("width"), col("height")) >= minDim &&
-          col("__aspect_fp").between(0L, maxAspectFp))
-      .drop("timescale", "duration_ms", "width", "height", "__aspect_fp")
-
-  /** The staged VIDEO curation feed with a real NEAR stage — the
-    * [[imageCurationFeedGated]] shape on the video pillar, now that
-    * the container-derived fingerprint exists: quality gate (q132's
-    * metadata rule) → EXACT store (the hex-packed size-profile hash —
-    * byte-identical re-uploads AND re-muxed copies collapse) → NEAR
-    * store (banded Hamming ≤ 3 — the re-edited cut whose profile
-    * moved a bit or three), all off ONE
-    * [[graft.multimodal.Multimodal.videoProfile]] pass (two KB-scale
-    * box walks per payload; no bitstream is ever decoded — the feed
-    * prices a 100 TB crawl's video column at container-walk cost).
-    * [[videoCurationFeedGated]] remains the byte-exact form for
-    * deployments that want md5-of-payload semantics.
-    */
-  def videoCurationFeedGatedNear(media: DataFrame, idCol: String,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0,
-      minDurationMs: Long = 1000L, maxDurationMs: Long = 14400000L,
-      minDim: Int = 64, maxAspectFp: Long = 4000000L): StreamingQuery =
-    mediaCurationFeed(media, idCol, exactStorePath, nearStorePath,
-      outDir, checkpointDir, "video_curation_feed_gated_near",
-      maintenanceEvery,
-      gate = videoQualityGate(minDurationMs, maxDurationMs, minDim,
-        maxAspectFp))(
-      batch => graft.multimodal.Multimodal.videoProfile(batch))
-
-  /** [[videoCurationFeedGatedNear]] against BUCKETED catalog tables —
-    * the video column of the gated bucketed matrix (zero store-side
-    * exchanges on both probes, the image/audio flanks' posture).
-    */
-  def videoCurationFeedGatedNearBucketed(media: DataFrame,
-      idCol: String, exactTable: String, nearTable: String,
-      outDir: String, checkpointDir: String, buckets: Int = 32,
-      maintenanceEvery: Int = 0, minDurationMs: Long = 1000L,
-      maxDurationMs: Long = 14400000L, minDim: Int = 64,
-      maxAspectFp: Long = 4000000L): StreamingQuery =
-    mediaCurationFeedBucketed(media, idCol, exactTable, nearTable,
-      outDir, checkpointDir, "video_curation_feed_gated_near_bucketed",
-      buckets, maintenanceEvery,
-      gate = videoQualityGate(minDurationMs, maxDurationMs, minDim,
-        maxAspectFp))(
-      batch => graft.multimodal.Multimodal.videoProfile(batch))
-
-  private def mediaCurationFeedBucketed(media: DataFrame, idCol: String,
-      exactTable: String, nearTable: String, outDir: String,
-      checkpointDir: String, queryName: String, buckets: Int,
-      maintenanceEvery: Int,
-      gate: DataFrame => DataFrame = identity)(
-      hashOf: DataFrame => DataFrame): StreamingQuery = {
-    val spark = media.sparkSession
-    graft.ingest.DedupStore.ensureBucketedStore(spark, exactTable,
-      buckets)
-    graft.ingest.MediaNearStore.ensureBucketedStore(spark, nearTable,
-      buckets)
-    val it = org.apache.spark.sql.types.IntegerType
-    dedupThroughStoreWith(media, "__phash", outDir, checkpointDir,
-      queryName,
-      committedSchema = _
-        .add("band0", it).add("band1", it).add("band2", it)
-        .add("band3", it)
-        .add("__phash", org.apache.spark.sql.types.StringType)
-        .add("content_hash", org.apache.spark.sql.types.StringType),
-      maintenanceEvery = maintenanceEvery,
-      maintain = s2 => {
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, exactTable),
-          { graft.ingest.DedupStore
-            .compactBucketedStore(s2, exactTable); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecarBucketed(s2, exactTable); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, nearTable),
-          { graft.ingest.MediaNearStore
-            .compactBucketedStore(s2, nearTable); () },
-          Some(() => { graft.ingest.MediaNearStore
-            .buildBloomSidecarBucketed(s2, nearTable); () }))
-      })(
-      batch => {
-        val hs = hashOf(batch
-            .select(col(idCol).as("media_id"), col("content")))
-          .withColumnRenamed("media_id", "__hid")
-          .withColumn("__phash",
-            concat(lpad(hex(col("band3")), 4, "0"),
-              lpad(hex(col("band2")), 4, "0"),
-              lpad(hex(col("band1")), 4, "0"),
-              lpad(hex(col("band0")), 4, "0")))
-        val withBands = gate(
-          batch.join(hs, batch(idCol) <=> hs("__hid")).drop("__hid"))
-        val exactSurvivors = graft.ingest.DedupStore
-          .newUniqueBucketedWithBloom(withBands, "__phash", idCol,
-            exactTable)
-        graft.ingest.MediaNearStore.newNearUniqueBucketedWithBloom(
-          exactSurvivors, idCol,
-          exactSurvivors.select(col(idCol).as("media_id"),
-            col("band0"), col("band1"), col("band2"), col("band3")),
-          nearTable)
-      },
-      committed => {
-        graft.ingest.DedupStore
-          .recordHashesBucketed(committed, "__phash", exactTable)
-        graft.ingest.MediaNearStore.recordHashesBucketed(
-          committed.select(col(idCol).as("media_id"), col("band0"),
-            col("band1"), col("band2"), col("band3")), nearTable)
-      })
-  }
-
-  /** The shared media cycle: fingerprint the batch with `hashOf`
-    * ((media_id, content) → (media_id, band0..band3)), hex-pack the
-    * bands into `__phash` (band3 high — the canonical 16-hex-digit
-    * spelling), and run the exact-store dedup cycle on that column.
-    * The store is hash-agnostic by design: `__phash` plays the text
-    * role, so probes, records, sidecars, and compaction are the
-    * SAME code paths IngestSpec already laws.
-    */
-  private def mediaDedupThroughStore(media: DataFrame, idCol: String,
-      storePath: String, outDir: String, checkpointDir: String,
-      queryName: String, maintenanceEvery: Int)(
-      hashOf: DataFrame => DataFrame): StreamingQuery =
-    dedupThroughStoreWith(media, "__phash", outDir, checkpointDir,
-      queryName,
-      committedSchema = _
-        .add("__phash", org.apache.spark.sql.types.StringType)
-        .add("content_hash", org.apache.spark.sql.types.StringType),
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.path(spark, storePath),
-        { graft.ingest.DedupStore.compactStore(spark, storePath); () },
-        Some(() => { graft.ingest.DedupStore
-          .buildBloomSidecar(spark, storePath); () })))(
-      batch => {
-        val hs = hashOf(batch
-            .select(col(idCol).as("media_id"), col("content")))
-          .select(col("media_id").as("__hid"),
-            concat(lpad(hex(col("band3")), 4, "0"),
-              lpad(hex(col("band2")), 4, "0"),
-              lpad(hex(col("band1")), 4, "0"),
-              lpad(hex(col("band0")), 4, "0")).as("__phash"))
-        graft.ingest.DedupStore.newUniqueWithBloom(
-          batch.join(hs, batch(idCol) <=> hs("__hid")).drop("__hid"),
-          "__phash", idCol, storePath)
-      },
-      committed => graft.ingest.DedupStore
-        .recordHashes(committed, "__phash", storePath))
-
-  /** Streamed CROSS-RUN SPAN dedup — the cycle over
-    * [[graft.ingest.SpanStore]]: every micro-batch drops documents
-    * whose recycled-text share against ANY previously recorded text
-    * reaches `maxDupShare` (the passage-mashup case the exact and near
-    * cycles both miss), persists survivors exactly-once into
-    * `batch=<id>`, and records their window hashes at-least-once from
-    * the committed read-back. Same replay matrix as the sibling
-    * cycles: committed batch directories are skipped, so full-history
-    * replay after checkpoint loss is a no-op.
-    */
-  def spanDedupThroughStore(docs: DataFrame, textCol: String,
-      idCol: String, storePath: String, outDir: String,
-      checkpointDir: String, maxDupShare: Double = 0.5,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "span_dedup_through_store", committedSchema = identity,
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.path(spark, storePath),
-        { graft.ingest.SpanStore.compactStore(spark, storePath); () },
-        Some(() => { graft.ingest.SpanStore
-          .buildBloomSidecar(spark, storePath); () })))(
-      // bloom-aware for the same reason as dedupThroughStore: identical
-      // answers with no sidecar, and micro-batches skip the store
-      // history once an operator builds one (SpanStore.buildBloomSidecar
-      // on the compaction schedule — this store is the family's largest)
-      batch => graft.ingest.SpanStore
-        .newSpanUniqueWithBloom(batch, textCol, idCol, storePath,
-          maxDupShare),
-      committed => graft.ingest.SpanStore
-        .recordWindows(committed, textCol, idCol, storePath))
-
-  /** Streamed CROSS-RUN CDC-chunk dedup — [[spanDedupThroughStore]]'s
-    * cycle over [[graft.ingest.CdcChunkStore]]: every micro-batch drops
-    * documents whose content-defined-chunk recycled share vs ALL
-    * history reaches `maxDupShare`, persists survivors exactly-once
-    * into `batch=<id>`, and records their chunk hashes at-least-once
-    * from the committed read-back. The insertion-robust streaming form:
-    * an edited re-submission of recorded text still matches history
-    * chunk-for-chunk past the edit (where the fixed-window span store
-    * pays ~1 row per character for the same robustness, this store pays
-    * ~1 per 16 tokens). Same replay matrix as the family: committed
-    * batch directories are skipped, so a full-history replay after
-    * checkpoint loss is a no-op.
-    */
-  def cdcChunkDedupThroughStore(docs: DataFrame, textCol: String,
-      idCol: String, storePath: String, outDir: String,
-      checkpointDir: String, maxDupShare: Double = 0.5,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "cdc_chunk_dedup_through_store", committedSchema = identity,
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.path(spark, storePath),
-        { graft.ingest.CdcChunkStore.compactStore(spark, storePath); () },
-        Some(() => { graft.ingest.CdcChunkStore
-          .buildBloomSidecar(spark, storePath); () })))(
-      batch => graft.ingest.CdcChunkStore
-        .newChunkUniqueWithBloom(batch, textCol, idCol, storePath,
-          maxDupShare),
-      committed => graft.ingest.CdcChunkStore
-        .recordChunks(committed, textCol, idCol, storePath))
-
-  /** [[cdcChunkDedupThroughStore]] against the BUCKETED chunk-store
-    * table — identical delivery semantics; the per-micro-batch chunk
-    * semi-join plans zero exchanges on the ever-growing chunk history.
-    * Bloom-aware like the siblings.
-    */
-  def cdcChunkDedupThroughBucketedStore(docs: DataFrame, textCol: String,
-      idCol: String, table: String, outDir: String,
-      checkpointDir: String, maxDupShare: Double = 0.5,
-      buckets: Int = 32, maintenanceEvery: Int = 0): StreamingQuery = {
-    graft.ingest.CdcChunkStore.ensureBucketedStore(
-      docs.sparkSession, table, buckets)
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "cdc_chunk_dedup_through_bucketed_store", committedSchema = identity,
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.bucketed(spark, table),
-        { graft.ingest.CdcChunkStore.compactBucketedStore(spark, table)
-          () },
-        Some(() => { graft.ingest.CdcChunkStore
-          .buildBloomSidecarBucketed(spark, table); () })))(
-      batch => graft.ingest.CdcChunkStore
-        .newChunkUniqueBucketedWithBloom(batch, textCol, idCol, table,
-          maxDupShare),
-      committed => graft.ingest.CdcChunkStore
-        .recordChunksBucketed(committed, textCol, idCol, table))
-  }
-
-  /** [[nearDedupThroughStore]] against the BUCKETED band-store table —
-    * identical delivery semantics; the per-micro-batch band candidate
-    * join plans zero exchanges on the ever-growing signature history.
-    * Bloom-aware like the siblings.
-    */
-  def nearDedupThroughBucketedStore(docs: DataFrame, textCol: String,
-      idCol: String, table: String, outDir: String,
-      checkpointDir: String, buckets: Int = 32,
-      maintenanceEvery: Int = 0): StreamingQuery = {
-    graft.ingest.NearDupStore.ensureBucketedStore(
-      docs.sparkSession, table, buckets)
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "near_dedup_through_bucketed_store", committedSchema = identity,
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.bucketed(spark, table),
-        { graft.ingest.NearDupStore.compactBucketedStore(spark, table); () },
-        Some(() => { graft.ingest.NearDupStore
-          .buildBloomSidecarBucketed(spark, table); () })))(
-      batch => graft.ingest.NearDupStore
-        .newNearUniqueBucketedWithBloom(batch, textCol, idCol, table),
-      committed => graft.ingest.NearDupStore
-        .recordSignaturesBucketed(committed, textCol, idCol, table))
-  }
-
-  /** [[spanDedupThroughStore]] against the BUCKETED span-store table —
-    * identical delivery semantics; the per-micro-batch window semi-join
-    * plans zero exchanges on the ever-growing store side (the form that
-    * holds up when the stream has been recording for a year). Bloom-
-    * aware like the siblings; the in-table sidecar retires with
-    * compaction's swap.
-    */
-  def spanDedupThroughBucketedStore(docs: DataFrame, textCol: String,
-      idCol: String, table: String, outDir: String,
-      checkpointDir: String, maxDupShare: Double = 0.5,
-      buckets: Int = 32, maintenanceEvery: Int = 0): StreamingQuery = {
-    graft.ingest.SpanStore.ensureBucketedStore(
-      docs.sparkSession, table, buckets)
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "span_dedup_through_bucketed_store", committedSchema = identity,
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => maintainIfDue(
-        graft.ingest.StoreStats.bucketed(spark, table),
-        { graft.ingest.SpanStore.compactBucketedStore(spark, table); () },
-        Some(() => { graft.ingest.SpanStore
-          .buildBloomSidecarBucketed(spark, table); () })))(
-      batch => graft.ingest.SpanStore
-        .newSpanUniqueBucketedWithBloom(batch, textCol, idCol, table,
-          maxDupShare),
-      committed => graft.ingest.SpanStore
-        .recordWindowsBucketed(committed, textCol, idCol, table))
-  }
-
   /** Stream-stream interval join — the streaming form of the q23 as-of
     * attribution: each purchase joins signups of the same user within
     * the preceding `lookback`. Both sides carry watermarks and the join
@@ -1961,7 +1062,7 @@ object Streams {
     * StreamingSpec pins the law. For the literal-model serving /
     * gating form, collect the snapshot weights
     * (`QualityModel.collectWeights(qualityWeights(…), dims)`) into
-    * [[qualityGatedCurationFeed]].
+    * [[qualityGate]], or use [[qualityGateFromSnapshot]].
     */
   def scoreQuality(docs: DataFrame, statsPath: String,
       dims: Int = graft.queries.LlmPipeline.QualityDims): DataFrame = {
@@ -1979,7 +1080,7 @@ object Streams {
     * ([[graft.operators.CorpusExport.selectAndShard]], shared
     * verbatim), lands exactly-once in `outDir/data/batch=<id>/shard=N/`
     * (the `batch=<id>` + `_SUCCESS` commit protocol of
-    * [[dedupThroughStore]] — committed batches skip on replay), and
+    * [[curationFeed]] — committed batches skip on replay), and
     * the per-group manifest accumulates in
     * `outDir/_export_manifest/batch=<id>` via the versioned-snapshot
     * protocol of [[maintainTermStats]] (merged from the COMMITTED
@@ -2175,389 +1276,636 @@ object Streams {
         new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
       .map(_.getPath.getName.stripPrefix("batch=").toLong)
 
-  /** Streamed CURATION FEED — the full continuously-fed-corpus loop,
-    * q80's streaming analog: every micro-batch is checked against the
-    * cross-run EXACT store first (formatting variants of anything ever
-    * ingested collapse on the content hash), the survivors against the
-    * cross-run NEAR store (paraphrase-grade variants of history drop on
-    * verified banded signatures), and what remains lands exactly-once
-    * in `batch=<id>` directories with BOTH stores recorded
-    * at-least-once from the committed read-back. Same replay matrix as
-    * the single-store cycles; within-batch NEAR dups are the q28/q60
-    * pipeline's job (exact within-batch dups DO collapse — newUnique
-    * keeps one keeper per hash). Survivor rows carry the exact store's
-    * `content_hash` column, which the record step reuses rather than
-    * recomputing the upstream plan.
+  /** Where a cross-run dedup store lives: a parquet directory
+    * ([[Path]]) or a bucketed catalog table ([[Bucketed]]). The layout
+    * picks the store's probe, record, compaction, sidecar rebuild and
+    * [[graft.ingest.StoreStats]] signal; every probe is bloom-aware
+    * (identical answers with no sidecar, and micro-batches skip the
+    * covered history once one is built).
     */
-  def curationFeedThroughStores(docs: DataFrame, textCol: String,
-      idCol: String, exactStorePath: String, nearStorePath: String,
-      outDir: String, checkpointDir: String): StreamingQuery =
-    // no maintenanceEvery here: Scala forbids default arguments on two
-    // overloads of one name, and the 3-store form is the full one —
-    // compose the span stage (or pass an empty span store) to get
-    // inline self-maintenance
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "curation_feed_through_stores")(
-      batch => graft.ingest.NearDupStore.newNearUniqueWithBloom(
-        graft.ingest.DedupStore
-          .newUnique(batch, textCol, idCol, exactStorePath),
-        textCol, idCol, nearStorePath),
-      committed => {
-        graft.ingest.DedupStore
-          .recordHashes(committed, textCol, exactStorePath)
-        graft.ingest.NearDupStore
-          .recordSignatures(committed, textCol, idCol, nearStorePath)
-      })
+  sealed trait StoreLayout
 
-  /** [[curationFeedThroughStores]] (3-store form) behind the
-    * model-based quality GATE: the literal-model filter
-    * (operators.QualityModel.keepGood — weights and threshold as plan
-    * literals, stateless per-row projection, no join/state/watermark)
-    * runs FIRST, before any store probe, extending the
-    * cheapest-check-first staging one stage earlier: a document the
-    * model rejects never prices a store lookup, and — deliberately —
-    * is never RECORDED either (rejects are not "seen"; a later
-    * re-submission after a model retrain gets judged afresh). The
-    * model is trained offline (batch QualityModel.train/threshold)
-    * and its integers are pinned for the life of the stream — the
-    * same pin-at-start posture as indexIngestStream's centroids;
-    * retrain → restart the stream (or rotate via the versioned
-    * lifecycle).
-    */
-  def qualityGatedCurationFeed(docs: DataFrame, textCol: String,
-      idCol: String, denseWeights: Seq[Long], thFp: Long, dims: Int,
-      exactStorePath: String, nearStorePath: String,
-      spanStorePath: String, outDir: String,
-      checkpointDir: String): StreamingQuery =
-    curationFeedThroughStores(
-      graft.operators.QualityModel.keepGood(docs, textCol,
-        denseWeights, thFp, dims),
-      textCol, idCol, exactStorePath, nearStorePath, spanStorePath,
-      outDir, checkpointDir)
+  final case class Path(dir: String) extends StoreLayout
 
-  /** [[qualityGatedCurationFeed]] with the MODEL resolved from the
-    * latest committed [[maintainQualityModel]] snapshot at stream
-    * start — the maintainer→serving loop closed: weights derive from
-    * the snapshot (bit-identical to batch-training on everything the
-    * maintainer has seen — the StreamingSpec law), the threshold
-    * calibrates on a caller-supplied labeled CALIBRATION frame
-    * against those weights (the q111 posture: a held-out or recent
-    * slice in production; the training corpus for the exact-parity
-    * form), and both pin as plan literals for the stream's life. The
-    * literal gate is a stateless PRE-SINK projection — it cannot swap
-    * literals mid-stream, so rotation = restart (or the LM feed's
-    * in-cycle gate, which can refresh); that is the documented trade
-    * for a gate with zero per-batch model cost.
+  /** A bucketed catalog table, created on first use with `buckets` (an
+    * existing table's bucket count wins). Its probes plan zero
+    * exchanges on the ever-growing store side (LayoutSpec-pinned) —
+    * the form that holds up when a stream has been recording for a
+    * year; the in-table sidecar retires with compaction's swap.
     */
-  def qualityGatedCurationFeedFromSnapshot(docs: DataFrame,
-      textCol: String, idCol: String, qualityStatsPath: String,
-      calibration: DataFrame, exactStorePath: String,
-      nearStorePath: String, spanStorePath: String, outDir: String,
-      checkpointDir: String,
-      dims: Int = graft.queries.LlmPipeline.QualityDims): StreamingQuery = {
-    val spark = docs.sparkSession
-    // no barrier: both references re-read a KB-scale snapshot file,
-    // not a corpus plan (the termDriftBetween rationale)
-    val w = qualityWeights(spark, qualityStatsPath)
-    val dense = graft.operators.QualityModel.collectWeights(w, dims)
-    val thFp = graft.operators.QualityModel
-      .threshold(graft.queries.LlmPipeline.qualityLabeledOf(calibration),
-        "toks", "y", w, dims)
-      .collect()(0).getLong(0)
-    qualityGatedCurationFeed(docs, textCol, idCol, dense, thFp, dims,
-      exactStorePath, nearStorePath, spanStorePath, outDir,
-      checkpointDir)
-  }
+  final case class Bucketed(table: String, buckets: Int = 32)
+      extends StoreLayout
 
-  /** [[curationFeedThroughStores]] (2-store form) behind the streamed
-    * BIGRAM-LM gate — the CCNet composition closed end to end in
-    * streaming: documents whose [[scoreLm]] fixed-point mean falls
-    * below `minLlMeanFp` (derive the cut from q113's q115-histogram
-    * boundaries — e.g. drop the tail tercile) are rejected BEFORE any
-    * store probe, and like the linear-model gate their rejects are
-    * never recorded (a re-submission after the LM improves gets judged
-    * afresh). The MODEL is the latest [[maintainBigramLm]] snapshot,
-    * read and PINNED at stream start (the centroid / QualityModel
-    * pin-at-start posture — a concurrently-maintained snapshot must
-    * not drift the gate mid-batch). The MODEL-REFRESH leg:
-    * `modelRefreshEvery` > 0 re-resolves the latest COMMITTED snapshot
-    * every N processed batches — the old barrier is released, the new
-    * snapshot materialized, and gating continues against the fresher
-    * model, so a year-long feed tracks a concurrently-maintained LM
-    * without restarts. Refresh points count PROCESSED (uncommitted)
-    * batches, so gating is at-least-once-consistent across replays:
-    * a replayed committed batch skips the gate entirely (its
-    * survivors are already committed), and the stores' delivery
-    * matrix is unchanged. Each pin holds ONE barrier at a time — not
-    * the per-batch accumulation the r13 leak fix outlawed; the
-    * returned thunk releases the CURRENT one after
-    * `awaitTermination()` if the session lives on. Documents with
-    * fewer than two tokens are unscorable and drop at the gate (the
-    * CCNet reading: no perplexity, no admission). The gate itself
-    * runs INSIDE the micro-batch cycle: unlike the stateless
-    * literal-model filter it aggregates per-document bigrams, which a
-    * streaming frame cannot express pre-sink.
+  /** One step of a [[curationFeed]] micro-batch. `check` narrows the
+    * batch: a gate drops rejects, a store probe drops what its history
+    * already holds, a fingerprint stage joins hash columns onto the
+    * row. `record` writes the committed survivors into the stage's
+    * store, `maintain` runs the store's inline upkeep, and
+    * `addedColumns` are the columns `check` appends to the row (the
+    * committed read-back declares them: a zero-survivor batch commits
+    * a data-file-less directory that schema inference cannot read).
+    * `label` names the stage in the observed yield frames — q150's
+    * [[graft.operators.CurationOutcome]] vocabulary where the stage has
+    * a q150 counterpart.
     */
-  def lmGatedCurationFeed(docs: DataFrame, textCol: String,
-      idCol: String, statsPath: String, minLlMeanFp: Long,
-      exactStorePath: String, nearStorePath: String, outDir: String,
+  final case class Stage(label: String, check: DataFrame => DataFrame,
+      record: DataFrame => Unit = _ => (),
+      maintain: SparkSession => Unit = _ => (),
+      addedColumns: Seq[StructField] = Nil)
+
+  /** The streamed CURATION FEED: every micro-batch runs `stages` in
+    * order — each stage's check sees only what the earlier stages kept,
+    * so cheap and history-independent gates go first and a gate's
+    * rejects never price, or poison, a later store — persists the
+    * survivors into their own `batch=<id>` subdirectory of `outDir`
+    * (readable as one table; Spark exposes `batch` as a partition
+    * column), then records every stage's store from the committed
+    * read-back.
+    *
+    * Delivery semantics, per crash window (foreachBatch replays are
+    * at-least-once):
+    *  - survivors in `outDir` are EXACTLY-ONCE: a replayed batch id
+    *    that already has its `_SUCCESS` marker is not rewritten (a
+    *    replay AFTER the stores recorded would recompute an EMPTY
+    *    survivor set and overwrite data with nothing), and a
+    *    half-written directory (no marker) is recomputed from the
+    *    unchanged stores and overwritten cleanly. A replayed committed
+    *    batch skips every check, so gates and yields run once per
+    *    batch id;
+    *  - store records are AT-LEAST-ONCE: recorded from the committed
+    *    survivor directory (the persisted read-back the store contract
+    *    asks for), re-recorded on replay — never lost, duplicates
+    *    reclaimed by compaction.
+    * Within-batch exact copies collapse at the exact stage (one keeper
+    * per hash); within-batch NEAR copies are the q28/q60 pipeline's
+    * job. `outDir` + `checkpointDir` are ONE unit (batch ids name the
+    * subdirectories): reset both or neither — a fresh checkpoint
+    * against a populated outDir sees old batch directories as
+    * committed, which is what makes a full-history replay a no-op
+    * instead of a data loss.
+    *
+    * `maintenanceEvery` > 0 runs every stage's `maintain` every N
+    * batches, after the record step (so the just-recorded batch counts
+    * toward the StoreStats signals): the appender IS the stores' single
+    * writer, so compacting between its own batches never races an
+    * append, and a year-long feed self-maintains without an external
+    * scheduler.
+    *
+    * Each batch runs as ONE composed plan. `yieldDir` turns on per-stage
+    * observability instead ([[observedStageRun]]): per-batch
+    * (outcome, n_docs) yield frames, plus with `rejectSampleSlots` > 0
+    * a content-addressed sample of each stage's rejects, keyed by
+    * `idCol` and showing `textCol`; [[readCurationYields]] is the
+    * cumulative report.
+    */
+  def curationFeed(docs: DataFrame, stages: Seq[Stage], outDir: String,
       checkpointDir: String, maintenanceEvery: Int = 0,
-      modelRefreshEvery: Int = 0): (StreamingQuery, () => Unit) = {
-    val spark = docs.sparkSession
-    val model = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      graft.operators.Exec.materialize(readTermStats(spark, statsPath)))
-    val processed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "lm_gated_curation_feed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = twoStoreMaintain(exactStorePath, nearStorePath))(
-      batch => {
-        refreshPinnedModel(model, batch.sparkSession, statsPath,
-          processed.getAndIncrement(), modelRefreshEvery)
-        val kept = scoreLmAgainst(
-            batch.select(col(idCol).as("doc_id"),
-              col(textCol).as("text")), model.get())
-          .filter(col("ll_mean_fp") >= minLlMeanFp)
-          .select(col("doc_id").as("__lm_keep_id"))
-        val gated = batch.join(kept,
-          batch(idCol) <=> kept("__lm_keep_id"), "left_semi")
-        twoStoreCheck(textCol, idCol, exactStorePath,
-          nearStorePath)(gated)
-      },
-      twoStoreRecord(textCol, idCol, exactStorePath, nearStorePath))
-    (q, () => graft.operators.Exec.release(model.get()))
+      yieldDir: Option[String] = None, rejectSampleSlots: Int = 0,
+      idCol: String = "doc_id", textCol: String = "text"): StreamingQuery = {
+    val pendingRelease = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    docs.writeStream
+      .queryName(stages.map(_.label).mkString("curation_feed:", ",", ""))
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        val target = new org.apache.hadoop.fs.Path(outDir, s"batch=$batchId")
+        val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
+        if (!fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))) {
+          val fresh = yieldDir
+            .map(yd => observedStageRun(stages, idCol, textCol, yd,
+              rejectSampleSlots, pendingRelease)(batch, batchId))
+            .getOrElse(stages.foldLeft(batch)((d, s) => s.check(d)))
+            .localCheckpoint(true) // one evaluation feeds the write
+          try fresh.write.mode("overwrite").parquet(target.toString)
+          finally fresh.unpersist()
+        }
+        val committed = spark.read
+          .schema(StructType(batch.schema ++ stages.flatMap(_.addedColumns)))
+          .parquet(target.toString)
+        stages.foreach(_.record(committed))
+        // a replayed committed batch reaches here too: maintenance is
+        // idempotent (the signals re-check)
+        if (maintenanceEvery > 0 && (batchId + 1) % maintenanceEvery == 0)
+          stages.foreach(_.maintain(spark))
+        ()
+      }
+      .start()
   }
 
-  /** [[curationFeedThroughStores]] (2-store form) behind the
-    * BENCHMARK-CONTAMINATION gate — the one standing curation stage
-    * every production pretraining feed runs that the dedup stores
-    * cannot express: documents sharing ≥ `minSharedGrams` distinct
-    * 3-word shingles with the registered benchmark set
-    * ([[graft.ingest.ContaminationStore]] — q53's gram rule, ONE
-    * kernel definition) are dropped BEFORE any dedup-store probe.
-    * Staging rationale: the gate is a per-row kernel + a semi-join
-    * whose store side is broadcast-scale BY DESIGN (a held-out
-    * benchmark is KB–GB of grams at any corpus size), so it is the
-    * cheapest store-backed check in the chain — and uniquely, its
-    * verdict is INDEPENDENT of feed history: a contaminated document
-    * must drop on every run even if the feed has never admitted
-    * anything, which is why it cannot ride the exact/near stores'
-    * "seen" semantics. Rejects are dropped, never recorded anywhere
-    * (the quality-gate doctrine: a resubmission after a benchmark
-    * RETRACTION is judged afresh against the then-live store).
-    * The contamination store is READ-ONLY here — registration
-    * ([[graft.ingest.ContaminationStore.recordBenchmark]]) is an
-    * offline act, so a concurrently registered benchmark takes effect
-    * on the next micro-batch without coordination. Inline
-    * self-maintenance covers all THREE stores (the contamination
-    * store's tombstone backlog from retractions compacts on the same
-    * schedule its siblings do).
+  /** The FULL production curation stack as ONE streamed feed — every
+    * gate and store staged in the order a production pretraining
+    * pipeline runs them (CCNet's order; the q150 decision-log order):
+    *
+    *   blocklist → language → contamination → quality → lm_score →
+    *   exact → near → span
+    *
+    * [[curationFeed]] over [[fullStackStages]] with the three dedup
+    * stores at path layouts; see there for the staging rationale and
+    * [[curationFeed]] for delivery, maintenance and the `yieldDir`
+    * observability leg.
     */
-  def contaminationGatedCurationFeed(docs: DataFrame, textCol: String,
-      idCol: String, contamStorePath: String, exactStorePath: String,
-      nearStorePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0,
-      minSharedGrams: Int = 1): StreamingQuery =
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "contamination_gated_curation_feed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = s2 => {
-        maintainIfDue(
-          graft.ingest.StoreStats.path(s2, contamStorePath),
-          { graft.ingest.ContaminationStore
-            .compactStore(s2, contamStorePath); () },
-          Some(() => { graft.ingest.ContaminationStore
-            .buildBloomSidecar(s2, contamStorePath); () }))
-        twoStoreMaintain(exactStorePath, nearStorePath)(s2)
-      })(
-      batch => twoStoreCheck(textCol, idCol, exactStorePath,
-        nearStorePath)(
-        graft.ingest.ContaminationStore.newCleanWithBloom(
-          batch, textCol, idCol, contamStorePath, minSharedGrams)),
-      twoStoreRecord(textCol, idCol, exactStorePath, nearStorePath))
-
-  /** [[curationFeedThroughStores]] (2-store form) behind the
-    * CROSS-MODAL alignment gate — the CLIP-score filter as a feed
-    * stage: each arriving row carries BOTH modality vectors (the
-    * caller's upstream pairing join, co-partitionable by the shared
-    * id at any scale), and rows whose caption↔image cosine falls
-    * below `minAlignment` drop BEFORE any store probe
-    * ([[graft.multimodal.CrossModal.keepAligned]] — a stateless
-    * per-row native-codegen filter, so like the literal quality gate
-    * it composes pre-sink: no join, no state, no watermark, zero
-    * per-batch model cost). A pair with an UNDEFINED score (missing
-    * modality, dimension mismatch — NULL; zero-norm degenerate — NaN,
-    * explicitly guarded) is misaligned by definition and drops the
-    * same way. Rejects are dropped, never recorded (the
-    * gate doctrine: a re-scraped caption for the same image is judged
-    * afresh). Dedup keys on the text side: `textCol` is the caption —
-    * the media content dedups through its own gated media feeds.
-    */
-  def crossModalGatedCurationFeed(docs: DataFrame, textCol: String,
-      idCol: String, captionVecCol: String, imageVecCol: String,
-      minAlignment: Double, exactStorePath: String,
-      nearStorePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(
-      graft.multimodal.CrossModal.keepAligned(docs, captionVecCol,
-        imageVecCol, minAlignment),
-      textCol, outDir, checkpointDir,
-      "crossmodal_gated_curation_feed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = twoStoreMaintain(exactStorePath, nearStorePath))(
-      twoStoreCheck(textCol, idCol, exactStorePath, nearStorePath),
-      twoStoreRecord(textCol, idCol, exactStorePath, nearStorePath))
-
-  /** [[curationFeedThroughStores]] (2-store form) behind the
-    * URL/DOMAIN BLOCKLIST gate — stage #1 of every production
-    * web-curation pipeline (listed domains drop before any content
-    * work prices them): rows whose `keyCol` (the extracted domain —
-    * the caller's projection, q55's derivation) is ON the standing
-    * blocklist drop BEFORE any dedup probe, via
-    * [[graft.ingest.DedupStore.newUnseenWithBloom]] — the membership
-    * probe that preserves row multiplicity (every doc of an unlisted
-    * domain survives; a blocklist is a content-hash store whose
-    * recorded keys are domains, so the gate is ZERO new machinery and
-    * inherits normalization ≈ case-insensitive domain matching,
-    * bloom pruning, retraction = un-listing, compaction). Like the
-    * contamination gate its verdict is history-INDEPENDENT (the list
-    * is maintained offline; a domain listed mid-stream takes effect
-    * next micro-batch) and rejects are never recorded anywhere.
-    * Inline maintenance covers all three stores.
-    */
-  def blocklistGatedCurationFeed(docs: DataFrame, textCol: String,
+  def fullStackCurationFeed(docs: DataFrame, textCol: String,
       idCol: String, keyCol: String, blocklistStorePath: String,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "blocklist_gated_curation_feed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = s2 => {
-        maintainIfDue(
-          graft.ingest.StoreStats.path(s2, blocklistStorePath),
-          { graft.ingest.DedupStore
-            .compactStore(s2, blocklistStorePath); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecar(s2, blocklistStorePath); () }))
-        twoStoreMaintain(exactStorePath, nearStorePath)(s2)
-      })(
-      batch => twoStoreCheck(textCol, idCol, exactStorePath,
-        nearStorePath)(
-        graft.ingest.DedupStore.newUnseenWithBloom(
-          batch, keyCol, blocklistStorePath)),
-      twoStoreRecord(textCol, idCol, exactStorePath, nearStorePath))
-
-  /** The exact+near maintenance block every 2-store gated feed shares
-    * — ONE definition (the compact+bloom pairing cannot drift between
-    * feed legs; it was copied verbatim in four of them before r18).
-    */
-  private def twoStoreMaintain(exactStorePath: String,
-      nearStorePath: String)(s2: SparkSession): Unit = {
-    maintainIfDue(
-      graft.ingest.StoreStats.path(s2, exactStorePath),
-      { graft.ingest.DedupStore.compactStore(s2, exactStorePath); () },
-      Some(() => { graft.ingest.DedupStore
-        .buildBloomSidecar(s2, exactStorePath); () }))
-    maintainIfDue(
-      graft.ingest.StoreStats.path(s2, nearStorePath),
-      { graft.ingest.NearDupStore
-        .compactStore(s2, nearStorePath); () },
-      Some(() => { graft.ingest.NearDupStore
-        .buildBloomSidecar(s2, nearStorePath); () }))
-  }
-
-  /** The exact → near probe chain of the 2-store feeds. */
-  private def twoStoreCheck(textCol: String, idCol: String,
-      exactStorePath: String, nearStorePath: String)(
-      batch: DataFrame): DataFrame =
-    graft.ingest.NearDupStore.newNearUniqueWithBloom(
-      graft.ingest.DedupStore.newUniqueWithBloom(
-        batch, textCol, idCol, exactStorePath),
-      textCol, idCol, nearStorePath)
-
-  /** The committed-read-back recording of the 2-store feeds. */
-  private def twoStoreRecord(textCol: String, idCol: String,
-      exactStorePath: String, nearStorePath: String)(
-      committed: DataFrame): Unit = {
-    graft.ingest.DedupStore
-      .recordHashes(committed, textCol, exactStorePath)
-    graft.ingest.NearDupStore
-      .recordSignatures(committed, textCol, idCol, nearStorePath)
-  }
-
-  /** The ULM perplexity gate as a batch transform — ONE definition
-    * shared by [[ulmGatedCurationFeed]] and the full-stack feeds (the
-    * gate and the stack that composes it can never drift apart): keep
-    * rows whose [[graft.operators.Ulm.scoreDocs]] 1e-6 fixed-point
-    * mean Viterbi log-likelihood per piece clears `minLlMeanFp`.
-    * Zero-token rows are unscorable and drop (no perplexity, no
-    * admission). The vocab is plan literals (the Viterbi fold's map
-    * literal) — no join against any model frame; the one join is the
-    * id-keyed semi against the row's own score.
-    */
-  private def ulmScoreGate(textCol: String, idCol: String,
-      vocab: Seq[(String, Long)], minLlMeanFp: Long,
-      maxLen: Int = 4)(batch: DataFrame): DataFrame = {
-    val kept = graft.operators.Ulm.scoreDocs(
-        batch.select(col(idCol).as("doc_id"),
-          col(textCol).as("text")), "text", vocab, maxLen)
-      .filter(col("ll_mean_fp") >= minLlMeanFp)
-      .select(col("doc_id").as("__ulm_keep_id"))
-    batch.join(kept, batch(idCol) <=> kept("__ulm_keep_id"),
-      "left_semi")
-  }
-
-  /** The EIGHT stage functions of the full-stack feeds — blocklist →
-    * (optional main-content extraction) → language → contamination →
-    * quality → lm_score → exact → near → span — as ONE labelled list
-    * (labels = [[graft.operators.CurationOutcome]], q150's outcome
-    * vocabulary): the path and bucketed forms differ only in the
-    * three injected dedup-leg functions, so the stage chain and its
-    * observability labels cannot drift between them, or between the
-    * plain fold (one composed plan — today's feed path) and the
-    * observed per-stage run ([[observedStageRun]]).
-    */
-  private def fullStackStageFns(textCol: String, idCol: String,
-      keyCol: String, blocklistStorePath: String,
       lidModels: Seq[(String, Seq[Long])], lidDims: Int,
       keepLangSet: Set[String], contamStorePath: String,
       denseWeights: Seq[Long], thFp: Long, dims: Int,
       ulmVocab: Seq[(String, Long)], minLlMeanFp: Long,
-      ulmMaxLen: Int, minSharedGrams: Int,
-      extractMainContent: Boolean,
-      exactCheck: DataFrame => DataFrame,
-      nearCheck: DataFrame => DataFrame,
-      spanCheck: DataFrame => DataFrame)
-      : Seq[(String, DataFrame => DataFrame)] = {
-    val O = graft.operators.CurationOutcome
+      exactStorePath: String, nearStorePath: String,
+      spanStorePath: String, outDir: String, checkpointDir: String,
+      maintenanceEvery: Int = 0, minSharedGrams: Int = 1,
+      ulmMaxLen: Int = 4,
+      extractMainContent: Boolean = false,
+      yieldDir: Option[String] = None,
+      rejectSampleSlots: Int = 0): StreamingQuery =
+    curationFeed(docs,
+      fullStackStages(textCol, idCol, keyCol, blocklistStorePath,
+        lidModels, lidDims, keepLangSet, contamStorePath, denseWeights,
+        thFp, dims, ulmVocab, minLlMeanFp, Path(exactStorePath),
+        Path(nearStorePath), Path(spanStorePath), minSharedGrams,
+        ulmMaxLen, extractMainContent),
+      outDir, checkpointDir, maintenanceEvery, yieldDir,
+      rejectSampleSlots, idCol, textCol)
+
+  /** The full-stack stage list, labelled with q150's outcome vocabulary.
+    * Staging rationale: the blocklist membership probe is the cheapest
+    * check (one broadcast-scale anti-join on the domain key) and
+    * history-INDEPENDENT, so it runs first; the learned LANGUAGE gate
+    * is next (CCNet's stage #2: bucket the crawl by LID before any
+    * content work); the contamination gate follows (per-row gram kernel
+    * + a Bloom-pruned broadcast semi-join against the KB–GB benchmark
+    * store), also history-independent; the literal-model quality gate
+    * and the ULM LM-score gate are stateless per-row plan literals
+    * pinned at stream start (deriving a cut per batch would make
+    * admission depend on batch boundaries); then the three dedup
+    * stores in increasing per-document cost. The blocklist and
+    * contamination stores stay on their PATH stores at any scale — both
+    * are broadcast-scale by design — so only the three ever-growing
+    * dedup stores take a [[StoreLayout]]. `extractMainContent` runs
+    * [[graft.operators.MainContent.extract]] right after the (text-free)
+    * domain gate — the web-pipeline position: every later gate and
+    * store judges the MAIN content, so two pages differing only in
+    * nav/footer dedup as exact copies. Extraction drops no rows, so it
+    * folds into the blocklist stage for yield accounting.
+    */
+  def fullStackStages(textCol: String, idCol: String, keyCol: String,
+      blocklistStorePath: String, lidModels: Seq[(String, Seq[Long])],
+      lidDims: Int, keepLangSet: Set[String], contamStorePath: String,
+      denseWeights: Seq[Long], thFp: Long, dims: Int,
+      ulmVocab: Seq[(String, Long)], minLlMeanFp: Long,
+      exact: StoreLayout, near: StoreLayout, span: StoreLayout,
+      minSharedGrams: Int = 1, ulmMaxLen: Int = 4,
+      extractMainContent: Boolean = false): Seq[Stage] = {
+    val blocked = blocklistGate(keyCol, blocklistStorePath)
     Seq(
-      // the CONTENT-EXTRACTION stage sits between the (text-free)
-      // domain gate and the LID gate — exactly where a web pipeline
-      // runs it: everything downstream judges the MAIN content, so
-      // boilerplate can neither carry a page through a gate nor
-      // poison a dedup store (nav-only variants hash identical).
-      // Extraction drops no rows, so it folds into the blocklist
-      // stage for yield accounting.
-      O.Blocklisted -> { b: DataFrame =>
-        val blocked = graft.ingest.DedupStore.newUnseenWithBloom(
-          b, keyCol, blocklistStorePath)
-        if (extractMainContent)
-          graft.operators.MainContent.extract(blocked, textCol)
-        else blocked
-      },
-      O.Language -> ((b: DataFrame) => graft.operators.LangId
-        .keepLangs(b, textCol, lidModels, lidDims, keepLangSet)),
-      O.Contaminated -> ((b: DataFrame) => graft.ingest
-        .ContaminationStore.newCleanWithBloom(b, textCol, idCol,
-          contamStorePath, minSharedGrams)),
-      O.Quality -> ((b: DataFrame) => graft.operators.QualityModel
-        .keepGood(b, textCol, denseWeights, thFp, dims)),
-      O.LmScore -> ((b: DataFrame) => ulmScoreGate(textCol, idCol,
-        ulmVocab, minLlMeanFp, ulmMaxLen)(b)),
-      O.ExactDup -> exactCheck,
-      O.NearDup -> nearCheck,
-      O.SpanDup -> spanCheck)
+      if (extractMainContent)
+        blocked.copy(check = blocked.check andThen mainContent(textCol).check)
+      else blocked,
+      languageGate(textCol, lidModels, lidDims, keepLangSet),
+      contaminationGate(textCol, idCol, contamStorePath, minSharedGrams),
+      qualityGate(textCol, denseWeights, thFp, dims),
+      ulmGate(textCol, idCol, ulmVocab, minLlMeanFp, ulmMaxLen),
+      exactDedup(exact, textCol, idCol),
+      nearDedup(near, textCol, idCol),
+      spanDedup(span, textCol, idCol))
   }
+
+  /** A store's calls in one layout form. */
+  private final case class StoreOps(
+      probe: (DataFrame, String) => DataFrame,
+      record: (DataFrame, String) => Unit,
+      compact: (SparkSession, String) => Unit,
+      sidecar: (SparkSession, String) => Unit)
+
+  /** A dedup store as a stage: `layout` picks the path or bucketed
+    * calls (a bucketed table is ensured now, at its requested size).
+    */
+  private def storeStage(label: String, layout: StoreLayout,
+      path: StoreOps, bucketed: StoreOps,
+      ensure: (SparkSession, String, Int) => Unit,
+      addedColumns: Seq[StructField] = Nil): Stage = {
+    val (ops, at, stats) = layout match {
+      case Path(dir) =>
+        (path, dir, graft.ingest.StoreStats.path(_: SparkSession, dir))
+      case Bucketed(table, buckets) =>
+        ensure(SparkSession.active, table, buckets)
+        (bucketed, table,
+          graft.ingest.StoreStats.bucketed(_: SparkSession, table))
+    }
+    Stage(label, ops.probe(_, at), ops.record(_, at),
+      s => maintainIfDue(stats(s), ops.compact(s, at), ops.sidecar(s, at)),
+      addedColumns)
+  }
+
+  /** Inline self-maintenance for a store, driven by the
+    * [[graft.ingest.StoreStats]] signals: compaction when
+    * `compactionDue` (the tombstone backlog is approaching the
+    * broadcast ceiling, or file-count pressure), always followed by a
+    * sidecar rebuild (the rewritten file names void the old sidecar's
+    * coverage); a sidecar rebuild alone when `sidecarStale` (residual
+    * share past 25%).
+    */
+  private def maintainIfDue(stats: graft.ingest.StoreStats.Stats,
+      compact: => Unit, rebuildSidecar: => Unit): Unit =
+    if (stats.compactionDue) { compact; rebuildSidecar }
+    else if (stats.sidecarStale) rebuildSidecar
+
+  /** Cross-run EXACT dedup ([[graft.ingest.DedupStore]]) keyed on
+    * `keyCol`'s normalized content hash: formatting variants of
+    * anything ever recorded drop, within-batch copies collapse to the
+    * min-id keeper. Survivors carry the store's `content_hash`, which
+    * the record step reuses. The store is hash-agnostic: a media feed
+    * keys it on a fingerprint column (`__phash`, `__vhash`).
+    */
+  def exactDedup(layout: StoreLayout, keyCol: String,
+      idCol: String): Stage = {
+    val D = graft.ingest.DedupStore
+    storeStage(graft.operators.CurationOutcome.ExactDup, layout,
+      StoreOps(D.newUniqueWithBloom(_, keyCol, idCol, _),
+        D.recordHashes(_, keyCol, _), D.compactStore(_, _),
+        D.buildBloomSidecar(_, _)),
+      StoreOps(D.newUniqueBucketedWithBloom(_, keyCol, idCol, _),
+        D.recordHashesBucketed(_, keyCol, _), D.compactBucketedStore(_, _),
+        D.buildBloomSidecarBucketed(_, _)),
+      D.ensureBucketedStore(_, _, _),
+      Seq(StructField("content_hash", StringType)))
+  }
+
+  /** Cross-run NEAR dedup ([[graft.ingest.NearDupStore]]): documents
+    * that near-duplicate ANY recorded document (band-key equi-join +
+    * ≥8/16 signature verification) drop. Adds no column.
+    */
+  def nearDedup(layout: StoreLayout, textCol: String,
+      idCol: String): Stage = {
+    val N = graft.ingest.NearDupStore
+    storeStage(graft.operators.CurationOutcome.NearDup, layout,
+      StoreOps(N.newNearUniqueWithBloom(_, textCol, idCol, _),
+        N.recordSignatures(_, textCol, idCol, _), N.compactStore(_, _),
+        N.buildBloomSidecar(_, _)),
+      StoreOps(N.newNearUniqueBucketedWithBloom(_, textCol, idCol, _),
+        N.recordSignaturesBucketed(_, textCol, idCol, _),
+        N.compactBucketedStore(_, _), N.buildBloomSidecarBucketed(_, _)),
+      N.ensureBucketedStore(_, _, _))
+  }
+
+  /** Cross-run SPAN dedup ([[graft.ingest.SpanStore]]): documents whose
+    * recycled-window share against ALL recorded text reaches
+    * `maxDupShare` drop — the passage mashup the exact and near stages
+    * both miss. Adds no column.
+    */
+  def spanDedup(layout: StoreLayout, textCol: String, idCol: String,
+      maxDupShare: Double = 0.5): Stage = {
+    val S = graft.ingest.SpanStore
+    storeStage(graft.operators.CurationOutcome.SpanDup, layout,
+      StoreOps(S.newSpanUniqueWithBloom(_, textCol, idCol, _, maxDupShare),
+        S.recordWindows(_, textCol, idCol, _), S.compactStore(_, _),
+        S.buildBloomSidecar(_, _)),
+      StoreOps(
+        S.newSpanUniqueBucketedWithBloom(_, textCol, idCol, _, maxDupShare),
+        S.recordWindowsBucketed(_, textCol, idCol, _),
+        S.compactBucketedStore(_, _), S.buildBloomSidecarBucketed(_, _)),
+      S.ensureBucketedStore(_, _, _))
+  }
+
+  /** Cross-run CDC-CHUNK dedup ([[graft.ingest.CdcChunkStore]]): the
+    * insertion-robust form of [[spanDedup]] — an edited re-submission
+    * still matches history chunk-for-chunk past the edit, at ~1 store
+    * row per 16 tokens instead of ~1 per character. Adds no column.
+    */
+  def chunkDedup(layout: StoreLayout, textCol: String, idCol: String,
+      maxDupShare: Double = 0.5): Stage = {
+    val C = graft.ingest.CdcChunkStore
+    storeStage("chunk_dup", layout,
+      StoreOps(C.newChunkUniqueWithBloom(_, textCol, idCol, _, maxDupShare),
+        C.recordChunks(_, textCol, idCol, _), C.compactStore(_, _),
+        C.buildBloomSidecar(_, _)),
+      StoreOps(
+        C.newChunkUniqueBucketedWithBloom(_, textCol, idCol, _, maxDupShare),
+        C.recordChunksBucketed(_, textCol, idCol, _),
+        C.compactBucketedStore(_, _), C.buildBloomSidecarBucketed(_, _)),
+      C.ensureBucketedStore(_, _, _))
+  }
+
+  /** Cross-run PERCEPTUAL NEAR dedup ([[graft.ingest.MediaNearStore]])
+    * over the `band0..band3` columns a fingerprint stage put on the row:
+    * media within Hamming ≤ 3 of ANY recorded hash drop (band candidate
+    * join + exact bitwise verify), and the record step reads the
+    * committed row's own bands (no re-decode).
+    */
+  def mediaNearDedup(layout: StoreLayout, idCol: String): Stage = {
+    val M = graft.ingest.MediaNearStore
+    def bands(df: DataFrame): DataFrame =
+      df.select(col(idCol).as("media_id") +: bandCols.map(col): _*)
+    storeStage(graft.operators.CurationOutcome.NearDup, layout,
+      StoreOps((b, p) => M.newNearUniqueWithBloom(b, idCol, bands(b), p),
+        (c, p) => M.recordHashes(bands(c), p), M.compactStore(_, _),
+        M.buildBloomSidecar(_, _)),
+      StoreOps(
+        (b, t) => M.newNearUniqueBucketedWithBloom(b, idCol, bands(b), t),
+        (c, t) => M.recordHashesBucketed(bands(c), t),
+        M.compactBucketedStore(_, _), M.buildBloomSidecarBucketed(_, _)),
+      M.ensureBucketedStore(_, _, _))
+  }
+
+  /** The URL/DOMAIN BLOCKLIST gate — stage #1 of every production
+    * web-curation pipeline: rows whose `keyCol` (the extracted domain)
+    * is on the blocklist store drop, via the multiplicity-preserving
+    * membership probe [[graft.ingest.DedupStore.newUnseenWithBloom]] (a
+    * blocklist is a content-hash store whose keys are domains:
+    * case-insensitive matching, bloom pruning, retraction =
+    * un-listing). History-INDEPENDENT and read-only here (listing is
+    * offline; a mid-stream listing takes effect next batch); `maintain`
+    * compacts it on the feed's schedule.
+    */
+  def blocklistGate(keyCol: String, storePath: String): Stage = {
+    val D = graft.ingest.DedupStore
+    Stage(graft.operators.CurationOutcome.Blocklisted,
+      D.newUnseenWithBloom(_, keyCol, storePath),
+      maintain = s => maintainIfDue(
+        graft.ingest.StoreStats.path(s, storePath),
+        D.compactStore(s, storePath), D.buildBloomSidecar(s, storePath)))
+  }
+
+  /** The BENCHMARK-CONTAMINATION gate: documents sharing ≥
+    * `minSharedGrams` distinct 3-word shingles with the registered
+    * benchmark set ([[graft.ingest.ContaminationStore]], q53's gram
+    * rule) drop. Its verdict is history-INDEPENDENT — a contaminated
+    * document drops on every run, even one that has admitted nothing —
+    * and the store is read-only here (registration is offline; a
+    * retraction reopens the gate); `maintain` compacts the retraction
+    * backlog on the feed's schedule.
+    */
+  def contaminationGate(textCol: String, idCol: String,
+      storePath: String, minSharedGrams: Int = 1): Stage = {
+    val C = graft.ingest.ContaminationStore
+    Stage(graft.operators.CurationOutcome.Contaminated,
+      C.newCleanWithBloom(_, textCol, idCol, storePath, minSharedGrams),
+      maintain = s => maintainIfDue(
+        graft.ingest.StoreStats.path(s, storePath),
+        C.compactStore(s, storePath), C.buildBloomSidecar(s, storePath)))
+  }
+
+  /** The learned LANGUAGE-ID gate (CCNet's stage #2): documents whose
+    * [[graft.operators.LangId.predictLiteral]] language falls outside
+    * `keepLangs` drop, as do documents with no features. Models train
+    * offline and pin as plan literals (rotation = restart).
+    */
+  def languageGate(textCol: String, models: Seq[(String, Seq[Long])],
+      dims: Int, keepLangs: Set[String]): Stage =
+    Stage(graft.operators.CurationOutcome.Language,
+      graft.operators.LangId.keepLangs(_, textCol, models, dims, keepLangs))
+
+  /** The literal-model QUALITY gate ([[graft.operators.QualityModel]]
+    * `keepGood`: weights and threshold as plan literals, a stateless
+    * per-row projection). Trained offline, pinned for the stream's
+    * life.
+    */
+  def qualityGate(textCol: String, denseWeights: Seq[Long], thFp: Long,
+      dims: Int): Stage =
+    Stage(graft.operators.CurationOutcome.Quality,
+      graft.operators.QualityModel.keepGood(_, textCol, denseWeights, thFp,
+        dims))
+
+  /** [[qualityGate]] with the MODEL resolved from the latest committed
+    * [[maintainQualityModel]] snapshot now — the maintainer→serving
+    * loop closed: weights derive from the snapshot (bit-identical to
+    * batch training on everything the maintainer has seen), the
+    * threshold calibrates on `calibration` against those weights (the
+    * q111 posture), and both pin as plan literals (rotation = restart).
+    */
+  def qualityGateFromSnapshot(textCol: String, statsPath: String,
+      calibration: DataFrame,
+      dims: Int = graft.queries.LlmPipeline.QualityDims): Stage = {
+    val QM = graft.operators.QualityModel
+    // no barrier: both references re-read a KB-scale snapshot file,
+    // not a corpus plan (the termDriftBetween rationale)
+    val w = qualityWeights(calibration.sparkSession, statsPath)
+    val thFp = QM.threshold(
+        graft.queries.LlmPipeline.qualityLabeledOf(calibration), "toks",
+        "y", w, dims)
+      .collect()(0).getLong(0)
+    qualityGate(textCol, QM.collectWeights(w, dims), thFp, dims)
+  }
+
+  /** The streamed BIGRAM-LM gate (the CCNet composition): documents
+    * whose [[scoreLm]] fixed-point mean falls below `minLlMeanFp` drop;
+    * documents with fewer than two tokens are unscorable and drop too.
+    * The model is the latest [[maintainBigramLm]] snapshot, pinned now
+    * as ONE materialized barrier. The refresh leg:
+    * `modelRefreshEvery` > 0 re-resolves the latest committed snapshot
+    * every N checked batches ([[refreshPinnedModel]]), so a year-long
+    * feed tracks a concurrently-maintained LM without restarts;
+    * replayed committed batches skip the check and do not count. The
+    * returned thunk releases the current pin after the stream ends.
+    */
+  def bigramLmGate(textCol: String, idCol: String, statsPath: String,
+      minLlMeanFp: Long, modelRefreshEvery: Int = 0): (Stage, () => Unit) = {
+    val model = new java.util.concurrent.atomic.AtomicReference[DataFrame](
+      graft.operators.Exec.materialize(
+        readTermStats(SparkSession.active, statsPath)))
+    val checked = new java.util.concurrent.atomic.AtomicLong(0L)
+    (Stage(graft.operators.CurationOutcome.LmScore, batch => {
+      refreshPinnedModel(model, batch.sparkSession, statsPath,
+        checked.getAndIncrement(), modelRefreshEvery)
+      val kept = scoreLmAgainst(
+          batch.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+          model.get())
+        .filter(col("ll_mean_fp") >= minLlMeanFp)
+        .select(col("doc_id").as("__lm_keep_id"))
+      batch.join(kept, batch(idCol) <=> kept("__lm_keep_id"), "left_semi")
+    }), () => graft.operators.Exec.release(model.get()))
+  }
+
+  /** The ULM perplexity gate: keep rows whose
+    * [[graft.operators.Ulm.scoreDocs]] 1e-6 fixed-point mean Viterbi
+    * log-likelihood per piece clears `minLlMeanFp`; zero-token rows are
+    * unscorable and drop. The vocab rides as plan literals (the Viterbi
+    * fold's map literal) — the one join is the id-keyed semi against
+    * the row's own score.
+    */
+  def ulmGate(textCol: String, idCol: String, vocab: Seq[(String, Long)],
+      minLlMeanFp: Long, maxLen: Int = 4): Stage =
+    Stage(graft.operators.CurationOutcome.LmScore, batch => {
+      val kept = graft.operators.Ulm.scoreDocs(
+          batch.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+          "text", vocab, maxLen)
+        .filter(col("ll_mean_fp") >= minLlMeanFp)
+        .select(col("doc_id").as("__ulm_keep_id"))
+      batch.join(kept, batch(idCol) <=> kept("__ulm_keep_id"), "left_semi")
+    })
+
+  /** [[ulmGate]] with the vocab trained now from the latest
+    * [[maintainTermCounts]] snapshot ([[ulmVocabFromSnapshot]]: the
+    * retrain reads the KB-scale (term, n) snapshot, never the corpus).
+    * The refresh leg: `modelRefreshEvery` > 0 re-trains from the latest
+    * committed snapshot every N checked batches and swaps the vocab —
+    * plain driver-side literals, so no barrier to manage.
+    */
+  def ulmGateFromSnapshot(textCol: String, idCol: String,
+      statsPath: String, minLlMeanFp: Long, modelRefreshEvery: Int = 0,
+      maxLen: Int = 4, maxVocab: Int = 256, emRounds: Int = 2): Stage = {
+    def train(spark: SparkSession) =
+      ulmVocabFromSnapshot(spark, statsPath, maxLen, maxVocab, emRounds)
+    val vocab = new java.util.concurrent.atomic.AtomicReference(
+      train(SparkSession.active))
+    val checked = new java.util.concurrent.atomic.AtomicLong(0L)
+    Stage(graft.operators.CurationOutcome.LmScore, batch => {
+      val n = checked.getAndIncrement()
+      if (modelRefreshEvery > 0 && n > 0 && n % modelRefreshEvery == 0)
+        vocab.set(train(batch.sparkSession))
+      ulmGate(textCol, idCol, vocab.get(), minLlMeanFp, maxLen).check(batch)
+    })
+  }
+
+  /** The CROSS-MODAL alignment gate — the CLIP-score filter: each row
+    * carries both modality vectors (the caller's pairing join), and
+    * rows whose caption↔image cosine falls below `minAlignment` drop,
+    * as do pairs with an undefined score (NULL or NaN)
+    * ([[graft.multimodal.CrossModal.keepAligned]]).
+    */
+  def crossModalGate(captionVecCol: String, imageVecCol: String,
+      minAlignment: Double): Stage =
+    Stage("misaligned", graft.multimodal.CrossModal.keepAligned(_,
+      captionVecCol, imageVecCol, minAlignment))
+
+  /** Boilerplate removal ([[graft.operators.MainContent.extract]]):
+    * `textCol` becomes the page's main content, so every later stage
+    * judges — and every store records — the content, not the nav and
+    * footer. Drops no rows.
+    */
+  def mainContent(textCol: String): Stage =
+    Stage("main_content", graft.operators.MainContent.extract(_, textCol))
+
+  private val bandCols = Seq("band0", "band1", "band2", "band3")
+
+  /** The shared media fingerprint step: `hashOf` maps (media_id,
+    * content) to (media_id, band0..band3[, quality facts]), ONE pass
+    * per payload — at 100 TB the decode is the cost and must not run per
+    * stage. The bands ride the row from here on, hex-packed into
+    * `__phash` as well (band3 high — the canonical 16-hex-digit
+    * spelling) for [[exactDedup]]; `gate` filters on the quality facts
+    * and drops them. Payloads that cannot be fingerprinted drop at the
+    * join (audit by anti-joining survivors against the feed).
+    */
+  private def mediaStage(label: String, idCol: String,
+      gate: DataFrame => DataFrame = identity)(
+      hashOf: DataFrame => DataFrame): Stage =
+    Stage(label, batch => {
+      val hs = hashOf(batch.select(col(idCol).as("media_id"), col("content")))
+        .withColumnRenamed("media_id", "__hid")
+        .withColumn("__phash", concat(bandCols.reverse.map(b =>
+          lpad(hex(col(b)), 4, "0")): _*))
+      gate(batch.join(hs, batch(idCol) <=> hs("__hid")).drop("__hid"))
+    }, addedColumns = bandCols.map(StructField(_, IntegerType)) :+
+      StructField("__phash", StringType))
+
+  /** Image perceptual fingerprint
+    * ([[graft.multimodal.Multimodal.aHash64]] over the production
+    * decode): a re-encoded, block-upscaled or sub-bit-brightness copy
+    * hashes identical (exact stage) or within a few bits (near stage).
+    */
+  def imageFingerprint(idCol: String): Stage =
+    mediaStage("undecodable", idCol)(b => graft.multimodal.Multimodal
+      .aHash64(graft.multimodal.Multimodal.decodeImages(b)))
+
+  /** Audio fingerprint ([[graft.multimodal.Multimodal.audioHash64]], the
+    * loudness-invariant energy-profile hash).
+    */
+  def audioFingerprint(idCol: String): Stage =
+    mediaStage("undecodable", idCol)(graft.multimodal.Multimodal.audioHash64)
+
+  /** Video fingerprint ([[graft.multimodal.Multimodal.videoHash64]]: a
+    * KB-scale stsz box walk, no bitstream decode) — a re-muxed copy
+    * hashes identical, a one-frame re-edit within a bit or three.
+    */
+  def videoFingerprint(idCol: String): Stage =
+    mediaStage("undecodable", idCol)(graft.multimodal.Multimodal.videoHash64)
+
+  /** [[imageFingerprint]] with q129's QUALITY GATE off the same pass
+    * ([[graft.multimodal.Multimodal.imageProfile]]: hash bands and
+    * quality facts from a single plane walk). Rejects drop before any
+    * store probe and are never recorded (a resubmission under relaxed
+    * thresholds is judged afresh). Thresholds default to q129's.
+    */
+  def imageQualityGate(idCol: String, minDim: Int = 8,
+      maxAspectFp: Long = 4000000L, minBrightFp: Long = 100000L,
+      maxBrightFp: Long = 900000L, minDistinct: Long = 16L): Stage =
+    mediaStage(graft.operators.CurationOutcome.Quality, idCol,
+      _.filter(
+          least(col("width"), col("height")) >= minDim &&
+            expr("(greatest(width, height) * 1000000L) div " +
+              "least(width, height)") <= maxAspectFp &&
+            expr("(px_sum * 1000000L) div (255L * width * height)")
+              .between(minBrightFp, maxBrightFp) &&
+            col("n_distinct") >= minDistinct)
+        .drop("width", "height", "px_sum", "n_distinct"))(
+      b => graft.multimodal.Multimodal.imageProfile(
+        graft.multimodal.Multimodal.decodeImages(b)))
+
+  /** [[audioFingerprint]] with q130's gate (duration, clip ratio,
+    * silence floor) off one [[graft.multimodal.Multimodal.audioProfile]]
+    * PCM walk.
+    */
+  def audioQualityGate(idCol: String, minDurationMs: Long = 100L,
+      maxClipFp: Long = 10000L, minMeanEnergy: Long = 10000L): Stage =
+    mediaStage(graft.operators.CurationOutcome.Quality, idCol,
+      _.filter(
+          expr("(n_samples * 1000L) div sample_rate") >= minDurationMs &&
+            expr("(n_clipped * 1000000L) div n_samples") <= maxClipFp &&
+            expr("energy div n_samples") >= minMeanEnergy)
+        .drop("sample_rate", "n_samples", "n_clipped", "energy"))(
+      graft.multimodal.Multimodal.audioProfile)
+
+  /** q132's container rule (duration window, min dim, max aspect) over
+    * parsed video metadata; drops the metadata columns. The aspect is
+    * guarded against zero dims (ANSI division) exactly like the
+    * registry query — an audio-only track's tkhd carries width =
+    * height = 0, and a reordered conjunct must never divide by it.
+    */
+  private def videoRule(minDurationMs: Long, maxDurationMs: Long,
+      minDim: Int, maxAspectFp: Long)(df: DataFrame): DataFrame =
+    df.withColumn("__aspect_fp",
+        when(col("width") > 0 && col("height") > 0,
+          expr("(greatest(width, height) * 1000000L) div " +
+            "least(width, height)")).otherwise(lit(-1L)))
+      .filter(col("duration_ms").between(minDurationMs, maxDurationMs) &&
+        least(col("width"), col("height")) >= minDim &&
+        col("__aspect_fp").between(0L, maxAspectFp))
+      .drop("timescale", "duration_ms", "width", "height", "__aspect_fp")
+
+  /** [[videoFingerprint]] with q132's quality gate off ONE
+    * [[graft.multimodal.Multimodal.videoProfile]] pass (two KB-scale
+    * box walks per payload; unparseable containers drop at the
+    * profile join).
+    */
+  def videoQualityGate(idCol: String, minDurationMs: Long = 1000L,
+      maxDurationMs: Long = 14400000L, minDim: Int = 64,
+      maxAspectFp: Long = 4000000L): Stage =
+    mediaStage(graft.operators.CurationOutcome.Quality, idCol,
+      videoRule(minDurationMs, maxDurationMs, minDim, maxAspectFp))(
+      graft.multimodal.Multimodal.videoProfile)
+
+  /** The BYTE-EXACT video gate: q132's container rule over
+    * [[graft.multimodal.Multimodal.parseVideoMeta]] (unparseable,
+    * too-short, absurd-duration, tiny and extreme-aspect containers
+    * drop), then the md5 of the payload in `__vhash` for an
+    * [[exactDedup]] keyed on it — for deployments that want
+    * byte-identical re-uploads, not re-muxes, to collapse.
+    */
+  def videoContainerGate(idCol: String, minDurationMs: Long = 1000L,
+      maxDurationMs: Long = 14400000L, minDim: Int = 64,
+      maxAspectFp: Long = 4000000L): Stage =
+    Stage(graft.operators.CurationOutcome.Quality, batch => {
+      val meta = graft.multimodal.Multimodal
+        .parseVideoMeta(batch.select(col(idCol).as("media_id"),
+          col("content")))
+        .toDF().withColumnRenamed("media_id", "__mid")
+      videoRule(minDurationMs, maxDurationMs, minDim, maxAspectFp)(
+          batch.join(meta, batch(idCol) <=> col("__mid"))
+            .filter(col("timescale") > 0))
+        .drop("__mid", "duration")
+        .withColumn("__vhash", md5(col("content")))
+    }, addedColumns = Seq(StructField("__vhash", StringType)))
 
   /** The q46 content-addressed sampling slot in [0, 100) keyed on the
     * id column — md5, NOT rand(): the sampled reject log is stable
@@ -2567,7 +1915,7 @@ object Streams {
     expr(s"cast(conv(substring(md5(cast($idCol as string)), 1, 15), " +
       "16, 10) as bigint) % 100")
 
-  /** Per-batch OBSERVED run of the eight-stage chain — the feed's
+  /** Per-batch OBSERVED run of a [[curationFeed]] stage list — the feed's
     * per-stage yield observability (the StoreStats posture: a small
     * metadata frame beside the data, never a re-run of the batch
     * audit over the corpus): fold the stages with a materialization
@@ -2575,8 +1923,8 @@ object Streams {
     * commit
     *
     *   `yieldDir/yields/batch=<id>`  — (batch_id, outcome, n_docs):
-    *     one row per [[graft.operators.CurationOutcome]] drop stage
-    *     with the documents that stage dropped this batch, plus the
+    *     one row per stage label with the documents that stage
+    *     dropped this batch, plus the
     *     `kept` row with the batch's survivors — so cumulative
     *     streamed yields are the same GROUP BY outcome report as the
     *     batch q150 decision log (StreamingSpec pins the equality);
@@ -2604,7 +1952,7 @@ object Streams {
     * one batch however long the stream runs.
     */
   private def observedStageRun(
-      stages: Seq[(String, DataFrame => DataFrame)],
+      stages: Seq[Stage],
       idCol: String, textCol: String, yieldDir: String,
       rejectSampleSlots: Int,
       pending: scala.collection.mutable.ArrayBuffer[DataFrame])(
@@ -2619,15 +1967,15 @@ object Streams {
     var curN = cur.count()
     val yields = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
     val rejectParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for ((label, f) <- stages) {
-      val next = graft.operators.Exec.materialize(f(cur))
+    for (stage <- stages) {
+      val next = graft.operators.Exec.materialize(stage.check(cur))
       val nextN = next.count()
-      yields += ((batchId, label, curN - nextN))
+      yields += ((batchId, stage.label, curN - nextN))
       if (rejectSampleSlots > 0 && nextN != curN)
         rejectParts += cur
           .join(next.select(col(idCol)), Seq(idCol), "left_anti")
           .filter(sampleSlotExpr(idCol) < rejectSampleSlots)
-          .select(col(idCol).as("doc_id"), lit(label).as("stage"),
+          .select(col(idCol).as("doc_id"), lit(stage.label).as("stage"),
             col(textCol).cast(org.apache.spark.sql.types.StringType)
               .as("text"))
       barriers += next
@@ -2675,308 +2023,7 @@ object Streams {
       .groupBy("outcome")
       .agg(org.apache.spark.sql.functions.sum("n_docs").as("n_docs"))
 
-  /** [[curationFeedThroughStores]] (2-store form) behind the LEARNED
-    * LANGUAGE-ID gate — CCNet's stage #2 (bucket the crawl by learned
-    * LID before any content work): documents whose
-    * [[graft.operators.LangId.predictLiteral]] language falls outside
-    * `keepLangs` drop BEFORE any store probe. The gate is stateless
-    * per-row end to end (K plan-literal weight vectors, Generate
-    * barriers, in-projection argmax — the literal quality gate's
-    * posture), so it composes PRE-SINK: no join, no state, no
-    * watermark interaction, zero per-batch model cost. Models train
-    * OFFLINE on labeled data ([[graft.operators.LangId.train]] +
-    * collectModels) and pin as plan literals for the stream's life
-    * (rotation = restart, the pin-at-start posture). Rejects are
-    * dropped, never recorded (a document resubmitted after a model
-    * retrain — or under a widened keep-set — is judged afresh);
-    * documents with no features drop at the gate.
-    */
-  def lidGatedCurationFeed(docs: DataFrame, textCol: String,
-      idCol: String, models: Seq[(String, Seq[Long])], dims: Int,
-      keepLangs: Set[String], exactStorePath: String,
-      nearStorePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(
-      graft.operators.LangId.keepLangs(docs, textCol, models, dims,
-        keepLangs),
-      textCol, outDir, checkpointDir, "lid_gated_curation_feed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = twoStoreMaintain(exactStorePath, nearStorePath))(
-      twoStoreCheck(textCol, idCol, exactStorePath, nearStorePath),
-      twoStoreRecord(textCol, idCol, exactStorePath, nearStorePath))
-
-  /** [[curationFeedThroughStores]] (2-store form) behind the
-    * UNIGRAM-LM perplexity gate — the CCNet "filter by LM score under
-    * the target-domain tokenizer" loop closed over the ULM family:
-    * documents whose [[graft.operators.Ulm.scoreDocs]] 1e-6
-    * fixed-point mean Viterbi log-likelihood per piece falls below
-    * `minLlMeanFp` drop BEFORE any store probe (derive the cut from
-    * q152's score distribution — e.g. the q115-histogram tail
-    * tercile, the q113/lmGated doctrine), and rejects are never
-    * recorded (a resubmission after the vocab improves is judged
-    * afresh). The MODEL is the unigram-LM vocabulary trained from the
-    * latest [[maintainTermCounts]] snapshot at stream start
-    * ([[ulmVocabFromSnapshot]] — the maintainer→serving loop: the
-    * retrain reads the KB-scale (term, n) snapshot, never the
-    * corpus), pinned as a plain driver-side Seq — unlike the bigram
-    * gate there is NO DataFrame pin to barrier-manage, the vocab IS
-    * plan literals (the Viterbi fold's map literal), so the refresh
-    * leg (`modelRefreshEvery` > 0) just re-trains from the latest
-    * committed snapshot every N processed batches and swaps the
-    * reference; gating is at-least-once-consistent across replays
-    * exactly as the bigram form (a replayed committed batch skips the
-    * gate entirely). Documents with zero tokens are unscorable and
-    * drop at the gate (no perplexity, no admission). The gate runs
-    * inside the micro-batch cycle (it aggregates per-document piece
-    * scores — a streaming frame cannot express that pre-sink).
-    */
-  def ulmGatedCurationFeed(docs: DataFrame, textCol: String,
-      idCol: String, statsPath: String, minLlMeanFp: Long,
-      exactStorePath: String, nearStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0,
-      modelRefreshEvery: Int = 0, maxLen: Int = 4, maxVocab: Int = 256,
-      emRounds: Int = 2): StreamingQuery = {
-    val spark = docs.sparkSession
-    val vocab = new java.util.concurrent.atomic.AtomicReference[
-      Seq[(String, Long)]](
-      ulmVocabFromSnapshot(spark, statsPath, maxLen, maxVocab, emRounds))
-    val processed = new java.util.concurrent.atomic.AtomicLong(0L)
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "ulm_gated_curation_feed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = twoStoreMaintain(exactStorePath, nearStorePath))(
-      batch => {
-        val n = processed.getAndIncrement()
-        if (modelRefreshEvery > 0 && n > 0 && n % modelRefreshEvery == 0)
-          vocab.set(ulmVocabFromSnapshot(batch.sparkSession, statsPath,
-            maxLen, maxVocab, emRounds))
-        twoStoreCheck(textCol, idCol, exactStorePath, nearStorePath)(
-          ulmScoreGate(textCol, idCol, vocab.get(), minLlMeanFp,
-            maxLen)(batch))
-      },
-      twoStoreRecord(textCol, idCol, exactStorePath, nearStorePath))
-  }
-
-  /** The FULL production curation stack as ONE streamed feed — every
-    * gate and store staged in the order a production pretraining
-    * pipeline runs them (CCNet's order; the q150 decision-log order):
-    *
-    *   blocklist → language → contamination → quality → lm_score →
-    *   exact → near → span
-    *
-    * Staging rationale, stage by stage: the blocklist membership probe
-    * is the cheapest check (one broadcast-scale anti-join on the
-    * domain key) and history-INDEPENDENT, so it runs first — a listed
-    * domain's documents never price anything else; the learned
-    * LANGUAGE gate is next (CCNet's stage #2: bucket the crawl by LID
-    * before any content work — [[graft.operators.LangId.keepLangs]],
-    * K plan-literal weight vectors, stateless per-row, no-confidence
-    * rejects drop); the contamination gate follows (per-row gram
-    * kernel + a Bloom-pruned broadcast semi-join against the KB–GB
-    * benchmark store), also history-independent; the literal-model
-    * quality gate is a stateless per-row projection (zero per-batch
-    * model cost, weights and threshold pinned at stream start — the
-    * [[qualityGatedCurationFeed]] posture); the LM-SCORE gate closes
-    * CCNet's loop ([[ulmScoreGate]] — the ULM vocab rides as plan
-    * literals, `minLlMeanFp` pinned at stream start: deriving the cut
-    * per batch would make admission depend on batch boundaries; q150
-    * derives the same cut corpus-wide via its histogram rule); then
-    * the three dedup stores in increasing per-document cost exactly
-    * as [[curationFeedThroughStores]] stages them. Every gate's
-    * rejects are dropped and NEVER recorded anywhere (a stage's
-    * reject cannot poison any later stage's history — re-submission
-    * after a benchmark retraction, an un-listing, a model retrain, or
-    * a widened keep-set is judged afresh); only documents that clear
-    * ALL EIGHT stages commit, and the three dedup stores record
-    * at-least-once from the committed read-back. The blocklist and
-    * contamination stores are READ-ONLY here (maintained offline; a
-    * mid-stream listing or registration takes effect next
-    * micro-batch); both models train OFFLINE (LID on labeled data via
-    * [[graft.operators.LangId.train]]+collectModels, the ULM vocab
-    * from the maintained term-counts snapshot via
-    * [[ulmVocabFromSnapshot]]) and pin for the stream's life (rotation
-    * = restart, the pin-at-start posture). The MULTIMODAL branch of
-    * the stack is the cross-modal (CLIP-score) alignment gate — a
-    * paired image/caption feed runs [[crossModalGatedCurationFeed]]'s
-    * leg in place of the text LM gate; it stays a separate feed
-    * because its input grain is the PAIR, not the document. Inline
-    * self-maintenance covers all five stores on one schedule. Same
-    * exactly-once commit + replay matrix as every feed in the family:
-    * a replayed committed batch skips gates and stores entirely.
-    * `extractMainContent` inserts the
-    * [[graft.operators.MainContent.extract]] boilerplate-removal
-    * stage between the (text-free) domain gate and the LID gate — the
-    * web-pipeline position: every later gate and store judges the
-    * MAIN content, so two pages differing only in nav/footer dedup as
-    * exact copies (the StreamingSpec boilerplate-invariance law).
-    * `yieldDir` turns on per-stage OBSERVABILITY: each batch writes
-    * its (outcome, n_docs) yield frame — q150's label vocabulary —
-    * and (with `rejectSampleSlots` > 0) a content-addressed sample of
-    * each stage's rejects beside the commit; see [[observedStageRun]]
-    * for the exactly-once/replay contract and [[readCurationYields]]
-    * for the cumulative report.
-    */
-  def fullStackCurationFeed(docs: DataFrame, textCol: String,
-      idCol: String, keyCol: String, blocklistStorePath: String,
-      lidModels: Seq[(String, Seq[Long])], lidDims: Int,
-      keepLangSet: Set[String], contamStorePath: String,
-      denseWeights: Seq[Long], thFp: Long, dims: Int,
-      ulmVocab: Seq[(String, Long)], minLlMeanFp: Long,
-      exactStorePath: String, nearStorePath: String,
-      spanStorePath: String, outDir: String, checkpointDir: String,
-      maintenanceEvery: Int = 0, minSharedGrams: Int = 1,
-      ulmMaxLen: Int = 4,
-      extractMainContent: Boolean = false,
-      yieldDir: Option[String] = None,
-      rejectSampleSlots: Int = 0): StreamingQuery = {
-    val stageFns = fullStackStageFns(textCol, idCol, keyCol,
-      blocklistStorePath, lidModels, lidDims, keepLangSet,
-      contamStorePath, denseWeights, thFp, dims, ulmVocab,
-      minLlMeanFp, ulmMaxLen, minSharedGrams, extractMainContent,
-      b => graft.ingest.DedupStore.newUniqueWithBloom(
-        b, textCol, idCol, exactStorePath),
-      b => graft.ingest.NearDupStore.newNearUniqueWithBloom(
-        b, textCol, idCol, nearStorePath),
-      b => graft.ingest.SpanStore.newSpanUniqueWithBloom(
-        b, textCol, idCol, spanStorePath))
-    val pendingRelease =
-      scala.collection.mutable.ArrayBuffer[DataFrame]()
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "full_stack_curation_feed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = s2 => {
-        maintainIfDue(
-          graft.ingest.StoreStats.path(s2, blocklistStorePath),
-          { graft.ingest.DedupStore
-            .compactStore(s2, blocklistStorePath); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecar(s2, blocklistStorePath); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.path(s2, contamStorePath),
-          { graft.ingest.ContaminationStore
-            .compactStore(s2, contamStorePath); () },
-          Some(() => { graft.ingest.ContaminationStore
-            .buildBloomSidecar(s2, contamStorePath); () }))
-        twoStoreMaintain(exactStorePath, nearStorePath)(s2)
-        maintainIfDue(
-          graft.ingest.StoreStats.path(s2, spanStorePath),
-          { graft.ingest.SpanStore
-            .compactStore(s2, spanStorePath); () },
-          Some(() => { graft.ingest.SpanStore
-            .buildBloomSidecar(s2, spanStorePath); () }))
-      },
-      checkWithId = yieldDir.map(yd =>
-        observedStageRun(stageFns, idCol, textCol, yd,
-          rejectSampleSlots, pendingRelease) _))(
-      batch => stageFns.foldLeft(batch) { case (d, (_, f)) => f(d) },
-      committed => {
-        graft.ingest.DedupStore
-          .recordHashes(committed, textCol, exactStorePath)
-        graft.ingest.NearDupStore
-          .recordSignatures(committed, textCol, idCol, nearStorePath)
-        graft.ingest.SpanStore
-          .recordWindows(committed, textCol, idCol, spanStorePath)
-      })
-  }
-
-  /** [[fullStackCurationFeed]] against BUCKETED dedup tables — the
-    * year-of-recording form of the flagship composition: the three
-    * ever-growing dedup stores ride the bucketed catalog (zero
-    * store-side exchanges on every probe, plan-asserted in
-    * LayoutSpec's family laws), while the blocklist and contamination
-    * gates stay on their PATH stores deliberately — both are
-    * broadcast-scale at any corpus size BY DESIGN (a domain list is
-    * KB–MB, a held-out benchmark KB–GB of grams), so a bucketed form
-    * would buy nothing and cost a catalog table each (the r17
-    * contamination-store disposition) — and the two learned gates
-    * (LID, ULM LM-score) are PLAN LITERALS with no store at all. Same
-    * staging order, same rejects-never-recorded law, same replay
-    * matrix, and same `yieldDir` observability leg
-    * ([[observedStageRun]] — shared stage list, shared labels) as the
-    * path form.
-    */
-  def fullStackCurationFeedBucketed(docs: DataFrame, textCol: String,
-      idCol: String, keyCol: String, blocklistStorePath: String,
-      lidModels: Seq[(String, Seq[Long])], lidDims: Int,
-      keepLangSet: Set[String], contamStorePath: String,
-      denseWeights: Seq[Long], thFp: Long, dims: Int,
-      ulmVocab: Seq[(String, Long)], minLlMeanFp: Long,
-      exactTable: String, nearTable: String,
-      spanTable: String, outDir: String, checkpointDir: String,
-      buckets: Int = 32, maintenanceEvery: Int = 0,
-      minSharedGrams: Int = 1, ulmMaxLen: Int = 4,
-      extractMainContent: Boolean = false,
-      yieldDir: Option[String] = None,
-      rejectSampleSlots: Int = 0): StreamingQuery = {
-    val spark = docs.sparkSession
-    graft.ingest.DedupStore.ensureBucketedStore(spark, exactTable,
-      buckets)
-    graft.ingest.NearDupStore.ensureBucketedStore(spark, nearTable,
-      buckets)
-    graft.ingest.SpanStore.ensureBucketedStore(spark, spanTable,
-      buckets)
-    val stageFns = fullStackStageFns(textCol, idCol, keyCol,
-      blocklistStorePath, lidModels, lidDims, keepLangSet,
-      contamStorePath, denseWeights, thFp, dims, ulmVocab,
-      minLlMeanFp, ulmMaxLen, minSharedGrams, extractMainContent,
-      b => graft.ingest.DedupStore.newUniqueBucketedWithBloom(
-        b, textCol, idCol, exactTable),
-      b => graft.ingest.NearDupStore.newNearUniqueBucketedWithBloom(
-        b, textCol, idCol, nearTable),
-      b => graft.ingest.SpanStore.newSpanUniqueBucketedWithBloom(
-        b, textCol, idCol, spanTable))
-    val pendingRelease =
-      scala.collection.mutable.ArrayBuffer[DataFrame]()
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "full_stack_curation_feed_bucketed",
-      maintenanceEvery = maintenanceEvery,
-      maintain = s2 => {
-        maintainIfDue(
-          graft.ingest.StoreStats.path(s2, blocklistStorePath),
-          { graft.ingest.DedupStore
-            .compactStore(s2, blocklistStorePath); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecar(s2, blocklistStorePath); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.path(s2, contamStorePath),
-          { graft.ingest.ContaminationStore
-            .compactStore(s2, contamStorePath); () },
-          Some(() => { graft.ingest.ContaminationStore
-            .buildBloomSidecar(s2, contamStorePath); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, exactTable),
-          { graft.ingest.DedupStore
-            .compactBucketedStore(s2, exactTable); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecarBucketed(s2, exactTable); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, nearTable),
-          { graft.ingest.NearDupStore
-            .compactBucketedStore(s2, nearTable); () },
-          Some(() => { graft.ingest.NearDupStore
-            .buildBloomSidecarBucketed(s2, nearTable); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, spanTable),
-          { graft.ingest.SpanStore
-            .compactBucketedStore(s2, spanTable); () },
-          Some(() => { graft.ingest.SpanStore
-            .buildBloomSidecarBucketed(s2, spanTable); () }))
-      },
-      checkWithId = yieldDir.map(yd =>
-        observedStageRun(stageFns, idCol, textCol, yd,
-          rejectSampleSlots, pendingRelease) _))(
-      batch => stageFns.foldLeft(batch) { case (d, (_, f)) => f(d) },
-      committed => {
-        graft.ingest.DedupStore
-          .recordHashesBucketed(committed, textCol, exactTable)
-        graft.ingest.NearDupStore
-          .recordSignaturesBucketed(committed, textCol, idCol, nearTable)
-        graft.ingest.SpanStore
-          .recordWindowsBucketed(committed, textCol, idCol, spanTable)
-      })
-  }
-
-  /** The model-refresh policy of [[lmGatedCurationFeed]], extracted so
+  /** The model-refresh policy of [[bigramLmGate]], extracted so
     * the adoption semantics are directly testable: when due (`every`
     * > 0, n > 0, n % every == 0), re-resolve the LATEST COMMITTED
     * snapshot under `statsPath`, materialize it, swap it into the pin,
@@ -2993,108 +2040,6 @@ object Streams {
         readTermStats(spark, statsPath))
       graft.operators.Exec.release(model.getAndSet(fresh))
     }
-
-  /** [[curationFeedThroughStores]] with the SPAN store as a third
-    * stage: exact → near → span, in increasing per-document cost, so
-    * the window scan only prices documents that already survived the
-    * cheaper checks. Survivors clear ALL THREE histories (whole-doc
-    * copies, paraphrases, and passage mashups), and all three stores
-    * record at-least-once from the committed read-back.
-    */
-  def curationFeedThroughStores(docs: DataFrame, textCol: String,
-      idCol: String, exactStorePath: String, nearStorePath: String,
-      spanStorePath: String, outDir: String,
-      checkpointDir: String, maintenanceEvery: Int = 0): StreamingQuery =
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "curation_feed_through_stores",
-      maintenanceEvery = maintenanceEvery,
-      maintain = spark => {
-        maintainIfDue(
-          graft.ingest.StoreStats.path(spark, exactStorePath),
-          { graft.ingest.DedupStore
-            .compactStore(spark, exactStorePath); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecar(spark, exactStorePath); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.path(spark, nearStorePath),
-          { graft.ingest.NearDupStore
-            .compactStore(spark, nearStorePath); () },
-          Some(() => { graft.ingest.NearDupStore
-            .buildBloomSidecar(spark, nearStorePath); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.path(spark, spanStorePath),
-          { graft.ingest.SpanStore
-            .compactStore(spark, spanStorePath); () },
-          Some(() => { graft.ingest.SpanStore
-            .buildBloomSidecar(spark, spanStorePath); () }))
-      })(
-      batch => graft.ingest.SpanStore.newSpanUniqueWithBloom(
-        graft.ingest.NearDupStore.newNearUniqueWithBloom(
-          graft.ingest.DedupStore
-            .newUniqueWithBloom(batch, textCol, idCol, exactStorePath),
-          textCol, idCol, nearStorePath),
-        textCol, idCol, spanStorePath),
-      committed => {
-        graft.ingest.DedupStore
-          .recordHashes(committed, textCol, exactStorePath)
-        graft.ingest.NearDupStore
-          .recordSignatures(committed, textCol, idCol, nearStorePath)
-        graft.ingest.SpanStore
-          .recordWindows(committed, textCol, idCol, spanStorePath)
-      })
-
-  /** The 3-store curation feed against BUCKETED catalog tables — the
-    * year-of-recording form: all three probes (exact anti-join, band
-    * candidate join, window semi-join) plan zero exchanges on their
-    * ever-growing store sides, all three bloom-aware. Same exact →
-    * near → span staging and replay matrix as the path form.
-    */
-  def curationFeedThroughBucketedStores(docs: DataFrame, textCol: String,
-      idCol: String, exactTable: String, nearTable: String,
-      spanTable: String, outDir: String, checkpointDir: String,
-      buckets: Int = 32, maintenanceEvery: Int = 0): StreamingQuery = {
-    val spark = docs.sparkSession
-    graft.ingest.DedupStore.ensureBucketedStore(spark, exactTable, buckets)
-    graft.ingest.NearDupStore.ensureBucketedStore(spark, nearTable, buckets)
-    graft.ingest.SpanStore.ensureBucketedStore(spark, spanTable, buckets)
-    dedupThroughStoreWith(docs, textCol, outDir, checkpointDir,
-      "curation_feed_through_bucketed_stores",
-      maintenanceEvery = maintenanceEvery,
-      maintain = s2 => {
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, exactTable),
-          { graft.ingest.DedupStore
-            .compactBucketedStore(s2, exactTable); () },
-          Some(() => { graft.ingest.DedupStore
-            .buildBloomSidecarBucketed(s2, exactTable); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, nearTable),
-          { graft.ingest.NearDupStore
-            .compactBucketedStore(s2, nearTable); () },
-          Some(() => { graft.ingest.NearDupStore
-            .buildBloomSidecarBucketed(s2, nearTable); () }))
-        maintainIfDue(
-          graft.ingest.StoreStats.bucketed(s2, spanTable),
-          { graft.ingest.SpanStore
-            .compactBucketedStore(s2, spanTable); () },
-          Some(() => { graft.ingest.SpanStore
-            .buildBloomSidecarBucketed(s2, spanTable); () }))
-      })(
-      batch => graft.ingest.SpanStore.newSpanUniqueBucketedWithBloom(
-        graft.ingest.NearDupStore.newNearUniqueBucketedWithBloom(
-          graft.ingest.DedupStore
-            .newUniqueBucketedWithBloom(batch, textCol, idCol, exactTable),
-          textCol, idCol, nearTable),
-        textCol, idCol, spanTable),
-      committed => {
-        graft.ingest.DedupStore
-          .recordHashesBucketed(committed, textCol, exactTable)
-        graft.ingest.NearDupStore
-          .recordSignaturesBucketed(committed, textCol, idCol, nearTable)
-        graft.ingest.SpanStore
-          .recordWindowsBucketed(committed, textCol, idCol, spanTable)
-      })
-  }
 
   /** Streaming IVF-index maintenance — the freshness leg of the
     * trainer → index → serve lifecycle ([[graft.operators.KMeans]] →
@@ -3190,7 +2135,7 @@ object Streams {
 
   /** Inline self-maintenance for the versioned-index appenders — the
     * [[graft.operators.IndexStats]] signals consumed the way the
-    * store cycles consume StoreStats (see [[dedupThroughStore]]):
+    * store stages consume StoreStats (see [[maintainIfDue]]):
     * `vacuumDue` → [[graft.operators.AnnIndex.vacuumRetracted]] (the
     * retraction backlog is approaching the broadcast ceiling —
     * physically drop it BEFORE probes fall off the broadcast plan),

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ingest.Warehouse
 import graft.streaming.Streams
+import graft.streaming.Streams.{Bucketed, Path, curationFeed}
 
 /** Structured Streaming mode: the readStream→foreachBatch port of the
   * reference's poll loop (etl/app.py:253-278) and the event-time windowed
@@ -19,6 +20,38 @@ class StreamingSpec extends SparkSuite {
 
   private def writeFile(dir: String, name: String, content: String): Unit =
     Files.writeString(java.nio.file.Paths.get(dir, name), content)
+
+  /** Spark jobs started per micro-batch while `body` runs, keyed by
+    * (query id, batch id) — the local properties every job of a
+    * micro-batch carries. A marker job flushes the FIFO listener bus
+    * before the counts are read.
+    */
+  private def jobsPerBatch(body: => Unit): Map[(String, Long), Int] = {
+    val jobs = scala.collection.mutable.Map[(String, Long), Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
+        if (prop("graft.test.flush").nonEmpty) flushed.countDown()
+        for (q <- prop("sql.streaming.queryId");
+             b <- prop("streaming.sql.batchId")) jobs.synchronized {
+          jobs((q, b.toLong)) = jobs.getOrElse((q, b.toLong), 0) + 1
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setLocalProperty("graft.test.flush", "1")
+      try spark.range(1).collect()
+      finally spark.sparkContext.setLocalProperty("graft.test.flush", null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not deliver the marker job")
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.synchronized(jobs.toMap)
+  }
 
   private val clientsCsv =
     """client_id,nom,prenom,email,telephone,adresse
@@ -793,74 +826,86 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val D = graft.ingest.DedupStore
     val SS = graft.ingest.StoreStats
-    val srcDir = java.nio.file.Files.createTempDirectory("sm-src").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("sm-out").toString + "/out"
-    val ckpt = java.nio.file.Files.createTempDirectory("sm-ckpt").toString
-    val store = java.nio.file.Files
-      .createTempDirectory("sm-store").toString + "/hashes"
-    // history + a pending takedown backlog
-    D.recordHashes((1 to 50).map(i => (i.toLong, s"seed doc $i"))
-      .toDF("doc_id", "text"), "text", store)
-    D.retract(Seq((0L, "seed doc 1"), (0L, "seed doc 2"))
-      .toDF("doc_id", "text"), "text", store)
-    assert(SS.path(spark, store).tombstoneBytes > 0L)
     val probe = Seq((9001L, "seed doc 5"), (9002L, "brand new"))
       .toDF("doc_id", "text")
-    def broadcasts(): Int =
-      D.newUnique(probe, "text", "doc_id", store)
-        .queryExecution.sparkPlan.collect {
-          case e: BroadcastHashJoinExec => e
-        }.size
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    Seq((101L, "fresh alpha"), (102L, "fresh beta"),
-      (5L, "seed doc 5"))
-      .toDF("doc_id", "text").coalesce(1).write
-      .mode("overwrite").parquet(s"$srcDir/b1")
-    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // any BroadcastExchange left is OUR gatedHint hint
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // ceiling under the backlog: the probe has DEGRADED to the
-      // shuffle fallback — the state self-maintenance exists to fix
-      spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
-      assert(broadcasts() === 0,
-        "over-ceiling backlog should ride the shuffle fallback")
-      assert(SS.path(spark, store).compactionDue)
-      graft.streaming.Streams.dedupThroughStore(
-        spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", store, outDir, ckpt,
-        maintenanceEvery = 1).awaitTermination()
-      // maintenance ran INSIDE the stream: backlog compacted away,
-      // sidecar rebuilt over the rewritten files
-      val s = SS.path(spark, store)
-      assert(s.tombstoneBytes === 0L,
-        "the mid-stream compaction must have cleared the backlog")
-      assert(!s.compactionDue)
-      assert(s.sidecarPresent && !s.sidecarStale,
-        "compaction voids sidecar coverage — maintenance must rebuild")
-      // delivery semantics untouched: dup of history dropped, fresh kept
-      val survivors = spark.read
-        .schema(schema.add("content_hash",
-          org.apache.spark.sql.types.StringType))
-        .parquet(outDir).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(survivors === Set(101L, 102L))
-      // a NEW takedown-list-sized backlog probes on the broadcast plan
-      // again under the DEFAULT ceiling — the gate is healthy
-      spark.conf.unset("graft.tombstone.broadcast.maxBytes")
-      D.retract(Seq((0L, "fresh alpha")).toDF("doc_id", "text"),
-        "text", store)
-      assert(broadcasts() >= 1,
-        "post-maintenance probes must be back on the broadcast plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      spark.conf.unset("graft.tombstone.broadcast.maxBytes")
+    // one law, two stage lists over the backlogged exact store: the
+    // exact stage alone, and the exact → near feed (every stage list
+    // self-maintains, and every exact stage probes bloom-aware)
+    val inputs: Seq[(String, String => Seq[Streams.Stage])] = Seq(
+      "exact" -> (store =>
+        Seq(Streams.exactDedup(Path(store), "text", "doc_id"))),
+      "exact+near" -> (store => Seq(
+        Streams.exactDedup(Path(store), "text", "doc_id"),
+        Streams.nearDedup(Path(tmpDir("sm-near") + "/bands"), "text",
+          "doc_id"))))
+    for ((tag, stagesOf) <- inputs) {
+      val srcDir = tmpDir("sm-src")
+      val outDir = tmpDir("sm-out") + "/out"
+      val ckpt = tmpDir("sm-ckpt")
+      val store = tmpDir("sm-store") + "/hashes"
+      // history + a pending takedown backlog
+      D.recordHashes((1 to 50).map(i => (i.toLong, s"seed doc $i"))
+        .toDF("doc_id", "text"), "text", store)
+      D.retract(Seq((0L, "seed doc 1"), (0L, "seed doc 2"))
+        .toDF("doc_id", "text"), "text", store)
+      assert(SS.path(spark, store).tombstoneBytes > 0L)
+      def broadcasts(): Int =
+        D.newUnique(probe, "text", "doc_id", store)
+          .queryExecution.sparkPlan.collect {
+            case e: BroadcastHashJoinExec => e
+          }.size
+      Seq((101L, "fresh alpha"), (102L, "fresh beta"),
+        (5L, "seed doc 5"))
+        .toDF("doc_id", "text").coalesce(1).write
+        .mode("overwrite").parquet(s"$srcDir/b1")
+      val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        // any BroadcastExchange left is OUR gatedHint hint
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        // ceiling under the backlog: the probe has DEGRADED to the
+        // shuffle fallback — the state self-maintenance exists to fix
+        spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
+        assert(broadcasts() === 0,
+          s"$tag: over-ceiling backlog should ride the shuffle fallback")
+        assert(SS.path(spark, store).compactionDue)
+        curationFeed(
+          spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true").parquet(srcDir),
+          stagesOf(store), outDir, ckpt,
+          maintenanceEvery = 1).awaitTermination()
+        // maintenance ran INSIDE the stream: backlog compacted away,
+        // sidecar rebuilt over the rewritten files
+        val s = SS.path(spark, store)
+        assert(s.tombstoneBytes === 0L,
+          s"$tag: the mid-stream compaction must have cleared the backlog")
+        assert(!s.compactionDue, tag)
+        assert(s.sidecarPresent && !s.sidecarStale,
+          s"$tag: compaction voids sidecar coverage — maintenance must " +
+            "rebuild")
+        // delivery semantics untouched: dup of history dropped, fresh kept
+        val survivors = spark.read
+          .schema(schema.add("content_hash",
+            org.apache.spark.sql.types.StringType))
+          .parquet(outDir).select("doc_id")
+          .collect().map(_.getLong(0)).toSet
+        assert(survivors === Set(101L, 102L), tag)
+        // a NEW takedown-list-sized backlog probes on the broadcast plan
+        // again under the DEFAULT ceiling — the gate is healthy
+        spark.conf.unset("graft.tombstone.broadcast.maxBytes")
+        D.retract(Seq((0L, "fresh alpha")).toDF("doc_id", "text"),
+          "text", store)
+        assert(broadcasts() >= 1,
+          s"$tag: post-maintenance probes must be back on the broadcast " +
+            "plan")
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+        spark.conf.unset("graft.tombstone.broadcast.maxBytes")
+      }
     }
   }
 
@@ -999,10 +1044,12 @@ class StreamingSpec extends SparkSuite {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
-    def drain(): Unit = graft.streaming.Streams.imageDedupThroughStore(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "media_id", store, outDir, ckpt).awaitTermination()
+      Seq(Streams.imageFingerprint("media_id"),
+        Streams.exactDedup(Path(store), "__phash", "media_id")),
+      outDir, ckpt).awaitTermination()
     Seq((1L, img(1, 1)), (2L, img(2, 1))).toDF("media_id", "content")
       .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
     drain()
@@ -1061,10 +1108,13 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
     def drain(): Unit =
-      graft.streaming.Streams.imageCurationFeedThroughStores(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "media_id", exactStore, nearStore, outDir, ckpt)
+        Seq(Streams.imageFingerprint("media_id"),
+          Streams.exactDedup(Path(exactStore), "__phash", "media_id"),
+          Streams.mediaNearDedup(Path(nearStore), "media_id")),
+        outDir, ckpt)
         .awaitTermination()
     Seq((1L, imgA), (2L, imgD)).toDF("media_id", "content")
       .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
@@ -1118,10 +1168,13 @@ class StreamingSpec extends SparkSuite {
         org.apache.spark.sql.types.StructField("content",
           org.apache.spark.sql.types.BinaryType)))
       def drain(): Unit =
-        graft.streaming.Streams.imageCurationFeedThroughBucketedStores(
+        curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          "media_id", exactT, nearT, outDir, ckpt, buckets = 8)
+          Seq(Streams.imageFingerprint("media_id"),
+            Streams.exactDedup(Bucketed(exactT, 8), "__phash", "media_id"),
+            Streams.mediaNearDedup(Bucketed(nearT, 8), "media_id")),
+          outDir, ckpt)
           .awaitTermination()
       Seq((1L, imgA), (2L, imgD)).toDF("media_id", "content")
         .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
@@ -1159,55 +1212,76 @@ class StreamingSpec extends SparkSuite {
     "retouched variant behind the gate") {
     import spark.implicits._
     import graft.multimodal.Multimodal.{Codec => C}
-    val srcDir = tmpDir("imgg-src")
-    val outDir = tmpDir("imgg-out") + "/media"
-    val exactStore = tmpDir("imgg-exact") + "/phashes"
-    val nearStore = tmpDir("imgg-near") + "/bands"
-    val ckpt = tmpDir("imgg-ckpt")
-    def base(x: Int, y: Int): Int = (x / 2) * 8 + (y / 2) * 4
-    val imgA = C.encodePng(16, 16, base)
-    val imgAvar = C.encodePng(16, 16,
-      (x, y) => if (x < 2 && y < 2) 48 else base(x, y))
-    val imgB = C.encodePng(16, 16, (x, y) => (x * 16 + y) % 256)
-    // quality reject: 4x4 (min dim < 8) but otherwise healthy, so the
-    // relaxed-threshold run admits it
-    val tiny = C.encodePng(4, 4, (x, y) => 64 + x * 16 + y * 4)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("media_id",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
-    def drain(minDim: Int): Unit =
-      graft.streaming.Streams.imageCurationFeedGated(
-        spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(srcDir),
-        "media_id", exactStore, nearStore, outDir, ckpt,
-        minDim = minDim).awaitTermination()
-    Seq((1L, imgA), (2L, tiny)).toDF("media_id", "content")
-      .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
-    drain(minDim = 8)
-    Seq((3L, imgAvar), (4L, imgB), (5L, tiny))
-      .toDF("media_id", "content")
-      .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b2")
-    drain(minDim = 8)
-    val it = org.apache.spark.sql.types.IntegerType
-    def survivors(): Set[Long] = spark.read
-      .schema(schema.add("band0", it).add("band1", it).add("band2", it)
-        .add("band3", it)
-        .add("__phash", org.apache.spark.sql.types.StringType)
-        .add("content_hash", org.apache.spark.sql.types.StringType))
-      .parquet(outDir).select("media_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(survivors() === Set(1L, 4L),
-      "gate rejects and the near-variant must drop; good fresh " +
-        "content must survive")
-    // byte-identical resubmission under a relaxed gate: admitted —
-    // proof the reject was never recorded in the exact store
-    Seq((6L, tiny)).toDF("media_id", "content")
-      .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b3")
-    drain(minDim = 1)
-    assert(survivors() === Set(1L, 4L, 6L),
-      "a gate reject must not poison the perceptual dedup history")
+    // one law per modality: `a`, its Hamming-1 retouch `aVar`, fresh
+    // `b`, and `tiny` — a quality reject under the strict gate but
+    // otherwise healthy, so the relaxed gate admits it
+    def law(tag: String, gate: Boolean => Streams.Stage,
+        a: Array[Byte], aVar: Array[Byte], b: Array[Byte],
+        tiny: Array[Byte]): Unit = {
+      val srcDir = tmpDir(s"$tag-src")
+      val outDir = tmpDir(s"$tag-out") + "/media"
+      val exactStore = tmpDir(s"$tag-exact") + "/phashes"
+      val nearStore = tmpDir(s"$tag-near") + "/bands"
+      val ckpt = tmpDir(s"$tag-ckpt")
+      def drain(relaxed: Boolean): Unit =
+        curationFeed(
+          spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true").parquet(srcDir),
+          Seq(gate(relaxed),
+            Streams.exactDedup(Path(exactStore), "__phash", "media_id"),
+            Streams.mediaNearDedup(Path(nearStore), "media_id")),
+          outDir, ckpt).awaitTermination()
+      Seq((1L, a), (2L, tiny)).toDF("media_id", "content")
+        .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
+      drain(relaxed = false)
+      Seq((3L, aVar), (4L, b), (5L, tiny))
+        .toDF("media_id", "content")
+        .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b2")
+      drain(relaxed = false)
+      val it = org.apache.spark.sql.types.IntegerType
+      def survivors(): Set[Long] = spark.read
+        .schema(schema.add("band0", it).add("band1", it).add("band2", it)
+          .add("band3", it)
+          .add("__phash", org.apache.spark.sql.types.StringType)
+          .add("content_hash", org.apache.spark.sql.types.StringType))
+        .parquet(outDir).select("media_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(survivors() === Set(1L, 4L),
+        s"$tag: gate rejects and the near-variant must drop; good fresh " +
+          "content must survive")
+      // byte-identical resubmission under a relaxed gate: admitted —
+      // proof the reject was never recorded in the exact store
+      Seq((6L, tiny)).toDF("media_id", "content")
+        .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b3")
+      drain(relaxed = true)
+      assert(survivors() === Set(1L, 4L, 6L),
+        s"$tag: a gate reject must not poison the perceptual dedup history")
+    }
+    def base(x: Int, y: Int): Int = (x / 2) * 8 + (y / 2) * 4
+    // image: the retouch brightens one aHash box; the reject is 4x4
+    // (min dim < 8)
+    law("imgg", relaxed => Streams.imageQualityGate("media_id",
+        minDim = if (relaxed) 1 else 8),
+      C.encodePng(16, 16, base),
+      C.encodePng(16, 16, (x, y) => if (x < 2 && y < 2) 48 else base(x, y)),
+      C.encodePng(16, 16, (x, y) => (x * 16 + y) % 256),
+      C.encodePng(4, 4, (x, y) => 64 + x * 16 + y * 4))
+    // audio: the retouch lifts one energy segment; the reject is 80 ms
+    // of sound (under 100 ms)
+    def lvl(i: Int): Int = if (i / 10 < 32) 100 else 1000
+    def wav(n: Int)(f: Int => Int): Array[Byte] =
+      C.encodeWavPcm16(Array.tabulate(n)(f), 4000)
+    law("audg", relaxed => Streams.audioQualityGate("media_id",
+        minDurationMs = if (relaxed) 1L else 100L),
+      wav(640)(lvl),
+      wav(640)(i => if (i / 10 == 7) 1000 else lvl(i)),
+      wav(640)(i => lvl(639 - i)),
+      wav(320)(i => if ((i / 5) % 2 == 0) 100 else 1000))
   }
 
   test("gated bucketed image curation feed: the quality/exact/near " +
@@ -1237,11 +1311,13 @@ class StreamingSpec extends SparkSuite {
         org.apache.spark.sql.types.StructField("content",
           org.apache.spark.sql.types.BinaryType)))
       def drain(minDim: Int): Unit =
-        graft.streaming.Streams.imageCurationFeedGatedBucketed(
+        curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          "media_id", exactT, nearT, outDir, ckpt, buckets = 8,
-          minDim = minDim).awaitTermination()
+          Seq(Streams.imageQualityGate("media_id", minDim = minDim),
+            Streams.exactDedup(Bucketed(exactT, 8), "__phash", "media_id"),
+            Streams.mediaNearDedup(Bucketed(nearT, 8), "media_id")),
+          outDir, ckpt).awaitTermination()
       Seq((1L, imgA), (2L, tiny)).toDF("media_id", "content")
         .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
       drain(minDim = 8)
@@ -1292,10 +1368,12 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
     def drain(): Unit =
-      graft.streaming.Streams.imageNearDedupThroughStore(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "media_id", store, outDir, ckpt).awaitTermination()
+        Seq(Streams.imageFingerprint("media_id"),
+          Streams.mediaNearDedup(Path(store), "media_id")),
+        outDir, ckpt).awaitTermination()
     Seq((1L, imgA)).toDF("media_id", "content")
       .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
     drain()
@@ -1338,10 +1416,12 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
     def drain(minDim: Int): Unit =
-      graft.streaming.Streams.videoCurationFeedGated(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "media_id", store, outDir, ckpt, minDim = minDim)
+        Seq(Streams.videoContainerGate("media_id", minDim = minDim),
+          Streams.exactDedup(Path(store), "__vhash", "media_id")),
+        outDir, ckpt)
         .awaitTermination()
     Seq((1L, good), (2L, tiny), (3L, "garbage bytes".getBytes))
       .toDF("media_id", "content")
@@ -1393,10 +1473,12 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
     def drain(): Unit =
-      graft.streaming.Streams.videoNearDedupThroughStore(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "media_id", store, outDir, ckpt).awaitTermination()
+        Seq(Streams.videoFingerprint("media_id"),
+          Streams.mediaNearDedup(Path(store), "media_id")),
+        outDir, ckpt).awaitTermination()
     Seq((1L, orig)).toDF("media_id", "content")
       .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
     drain()
@@ -1427,11 +1509,6 @@ class StreamingSpec extends SparkSuite {
     "stage, fresh content survives") {
     import spark.implicits._
     import graft.multimodal.Multimodal.{Codec => C}
-    val srcDir = tmpDir("vidgated-src")
-    val outDir = tmpDir("vidgated-out") + "/media"
-    val exact = tmpDir("vidgated-exact") + "/hashes"
-    val near = tmpDir("vidgated-near") + "/bands"
-    val ckpt = tmpDir("vidgated-ckpt")
     def base(i: Int): Int = if (i / 10 < 32) 100 else 1000
     val n = 640
     def clip(sz: Int => Int, pad: Int = 0, w: Int = 640,
@@ -1449,30 +1526,47 @@ class StreamingSpec extends SparkSuite {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
-    def drain(): Unit =
-      graft.streaming.Streams.videoCurationFeedGatedNear(
-        spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(srcDir),
-        "media_id", exact, near, outDir, ckpt).awaitTermination()
-    Seq((1L, orig), (2L, tiny), (3L, "garbage".getBytes))
-      .toDF("media_id", "content")
-      .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
-    drain()
-    Seq((4L, remux), (5L, reEdit), (6L, fresh), (7L, short))
-      .toDF("media_id", "content")
-      .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b2")
-    drain()
-    val it = org.apache.spark.sql.types.IntegerType
-    def survivors(): Set[Long] = spark.read
-      .schema(schema.add("band0", it).add("band1", it)
-        .add("band2", it).add("band3", it)
-        .add("__phash", org.apache.spark.sql.types.StringType)
-        .add("content_hash", org.apache.spark.sql.types.StringType))
-      .parquet(outDir).select("media_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(survivors() === Set(1L, 6L),
-      "gate rejects, the re-mux, and the re-edit must drop; only the " +
-        "original and the genuinely different cut survive")
+    // one law per store layout: path directories, then bucketed
+    // catalog tables
+    val tables = Seq("vid_gated_exact_t", "vid_gated_near_t")
+    def dropTables(): Unit = for (t <- tables; x <- Seq("", "_compact_stage"))
+      spark.sql(s"DROP TABLE IF EXISTS $t$x")
+    dropTables()
+    try for ((tag, exact, near) <- Seq(
+        ("vidgated", Path(tmpDir("vidgated-exact") + "/hashes"),
+          Path(tmpDir("vidgated-near") + "/bands")),
+        ("vidgatedb", Bucketed(tables(0), 8), Bucketed(tables(1), 8)))) {
+      val srcDir = tmpDir(s"$tag-src")
+      val outDir = tmpDir(s"$tag-out") + "/media"
+      val ckpt = tmpDir(s"$tag-ckpt")
+      def drain(): Unit =
+        curationFeed(
+          spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true").parquet(srcDir),
+          Seq(Streams.videoQualityGate("media_id"),
+            Streams.exactDedup(exact, "__phash", "media_id"),
+            Streams.mediaNearDedup(near, "media_id")),
+          outDir, ckpt).awaitTermination()
+      Seq((1L, orig), (2L, tiny), (3L, "garbage".getBytes))
+        .toDF("media_id", "content")
+        .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
+      drain()
+      Seq((4L, remux), (5L, reEdit), (6L, fresh), (7L, short))
+        .toDF("media_id", "content")
+        .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b2")
+      drain()
+      val it = org.apache.spark.sql.types.IntegerType
+      def survivors(): Set[Long] = spark.read
+        .schema(schema.add("band0", it).add("band1", it)
+          .add("band2", it).add("band3", it)
+          .add("__phash", org.apache.spark.sql.types.StringType)
+          .add("content_hash", org.apache.spark.sql.types.StringType))
+        .parquet(outDir).select("media_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(survivors() === Set(1L, 6L),
+        s"$tag: gate rejects, the re-mux, and the re-edit must drop; " +
+          "only the original and the genuinely different cut survive")
+    } finally dropTables()
   }
 
   test("cross-run audio dedup: a volume-normalized re-encode drops at " +
@@ -1493,10 +1587,12 @@ class StreamingSpec extends SparkSuite {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("content",
         org.apache.spark.sql.types.BinaryType)))
-    def drain(): Unit = graft.streaming.Streams.audioDedupThroughStore(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "media_id", store, outDir, ckpt).awaitTermination()
+      Seq(Streams.audioFingerprint("media_id"),
+        Streams.exactDedup(Path(store), "__phash", "media_id")),
+      outDir, ckpt).awaitTermination()
     Seq((1L, wav(base))).toDF("media_id", "content")
       .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
     drain()
@@ -1657,12 +1753,14 @@ class StreamingSpec extends SparkSuite {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    val (q, releaseModel) = graft.streaming.Streams.lmGatedCurationFeed(
+    val (lmGate, releaseModel) =
+      Streams.bigramLmGate("text", "doc_id", statsPath, cut)
+    curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "text", "doc_id", statsPath, cut, exactStore, nearStore,
-      outDir, ckpt)
-    q.awaitTermination()
+      Seq(lmGate, Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+        Streams.nearDedup(Path(nearStore), "text", "doc_id")),
+      outDir, ckpt).awaitTermination()
     releaseModel()
     val survivors = spark.read
       .schema(schema.add("content_hash",
@@ -1720,10 +1818,12 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
     def drain(ckpt: String): Unit =
-      graft.streaming.Streams.lidGatedCurationFeed(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", dense, dims, keep, exactStore, nearStore,
+        Seq(Streams.languageGate("text", dense, dims, keep),
+          Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id")),
         outDir, ckpt).awaitTermination()
     drain(tmpDir("lidg-ckpt1"))
     def survivors(): Set[Long] = spark.read
@@ -1792,11 +1892,14 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
     def drain(ckpt: String): Unit =
-      graft.streaming.Streams.ulmGatedCurationFeed(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", statsPath, cut, exactStore, nearStore,
-        outDir, ckpt, maxLen = 4, maxVocab = 64, emRounds = 1)
+        Seq(Streams.ulmGateFromSnapshot("text", "doc_id", statsPath, cut,
+            maxLen = 4, maxVocab = 64, emRounds = 1),
+          Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id")),
+        outDir, ckpt)
         .awaitTermination()
     drain(tmpDir("ulmg-ckpt1"))
     def survivors(): Set[Long] = spark.read
@@ -1968,10 +2071,11 @@ class StreamingSpec extends SparkSuite {
     def deliver(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(): Unit = graft.streaming.Streams.dedupThroughStore(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "text", "doc_id", store, outDir, ckpt).awaitTermination()
+      Seq(Streams.exactDedup(Path(store), "text", "doc_id")),
+      outDir, ckpt).awaitTermination()
     def survivors(): Seq[(Long, String)] = spark.read.parquet(outDir)
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
@@ -2347,10 +2451,11 @@ class StreamingSpec extends SparkSuite {
     def deliver(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(): Unit = graft.streaming.Streams.nearDedupThroughStore(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "text", "doc_id", store, outDir, ckpt).awaitTermination()
+      Seq(Streams.nearDedup(Path(store), "text", "doc_id")),
+      outDir, ckpt).awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val doc1 = (1 to 60).map(i => s"alpha$i token$i word$i").mkString(" ")
@@ -2403,10 +2508,11 @@ class StreamingSpec extends SparkSuite {
     def deliver(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(): Unit = graft.streaming.Streams.spanDedupThroughStore(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "text", "doc_id", store, outDir, ckpt).awaitTermination()
+      Seq(Streams.spanDedup(Path(store), "text", "doc_id")),
+      outDir, ckpt).awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val doc1 = (1 to 30).map(i => f"alpha$i%02d lake$i%02d").mkString(" ")
@@ -2461,10 +2567,11 @@ class StreamingSpec extends SparkSuite {
         rows.toDF("doc_id", "text").coalesce(1).write
           .mode("overwrite").parquet(s"$srcDir/$name")
       def drain(): Unit =
-        graft.streaming.Streams.nearDedupThroughBucketedStore(
+        curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          "text", "doc_id", table, outDir, ckpt).awaitTermination()
+          Seq(Streams.nearDedup(Bucketed(table), "text", "doc_id")),
+          outDir, ckpt).awaitTermination()
       def survivors(): Seq[Long] = spark.read.parquet(outDir)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       val doc1 = (1 to 60).map(i => s"alpha$i token$i word$i").mkString(" ")
@@ -2519,10 +2626,11 @@ class StreamingSpec extends SparkSuite {
         rows.toDF("doc_id", "text").coalesce(1).write
           .mode("overwrite").parquet(s"$srcDir/$name")
       def drain(): Unit =
-        graft.streaming.Streams.spanDedupThroughBucketedStore(
+        curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          "text", "doc_id", table, outDir, ckpt).awaitTermination()
+          Seq(Streams.spanDedup(Bucketed(table), "text", "doc_id")),
+          outDir, ckpt).awaitTermination()
       def survivors(): Seq[Long] = spark.read.parquet(outDir)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       val doc1 = (1 to 30).map(i => f"alpha$i%02d lake$i%02d").mkString(" ")
@@ -2576,10 +2684,11 @@ class StreamingSpec extends SparkSuite {
     def deliver(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(): Unit = graft.streaming.Streams.cdcChunkDedupThroughStore(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "text", "doc_id", store, outDir, ckpt).awaitTermination()
+      Seq(Streams.chunkDedup(Path(store), "text", "doc_id")),
+      outDir, ckpt).awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val doc1 = (1 to 150).map(i => f"alpha$i%03d lake$i%03d").mkString(" ")
@@ -2637,10 +2746,11 @@ class StreamingSpec extends SparkSuite {
         rows.toDF("doc_id", "text").coalesce(1).write
           .mode("overwrite").parquet(s"$srcDir/$name")
       def drain(): Unit =
-        graft.streaming.Streams.cdcChunkDedupThroughBucketedStore(
+        curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          "text", "doc_id", table, outDir, ckpt).awaitTermination()
+          Seq(Streams.chunkDedup(Bucketed(table), "text", "doc_id")),
+          outDir, ckpt).awaitTermination()
       def survivors(): Seq[Long] = spark.read.parquet(outDir)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       val doc1 = (1 to 150).map(i => f"alpha$i%03d lake$i%03d")
@@ -2717,11 +2827,12 @@ class StreamingSpec extends SparkSuite {
     val b2 = (41L to 80L).map(i =>
       (i, if (i % 3 == 0) "fr" else "en", mkDoc(i))) ++
       Seq((200L, "en", mkDoc(1)), (201L, "fr", mkDoc(42))) // dups
-    def curate(): Unit = graft.streaming.Streams
-      .curationFeedThroughStores(
+    def curate(): Unit = curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", exactStore, nearStore, curatedDir, ckptC)
+        Seq(Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id")),
+        curatedDir, ckptC)
       .awaitTermination()
     val th = Seq(("en", 700000L), ("fr", 900000L))
     def export(): Unit = graft.streaming.Streams.exportMixStream(
@@ -2791,10 +2902,13 @@ class StreamingSpec extends SparkSuite {
     def deliver(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(): Unit = graft.streaming.Streams.curationFeedThroughStores(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "text", "doc_id", exactStore, nearStore, spanStore, outDir, ckpt)
+      Seq(Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+        Streams.nearDedup(Path(nearStore), "text", "doc_id"),
+        Streams.spanDedup(Path(spanStore), "text", "doc_id")),
+      outDir, ckpt)
       .awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -2857,10 +2971,13 @@ class StreamingSpec extends SparkSuite {
         rows.toDF("doc_id", "text").coalesce(1).write
           .mode("overwrite").parquet(s"$srcDir/$name")
       def drain(): Unit =
-        graft.streaming.Streams.curationFeedThroughBucketedStores(
+        curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          "text", "doc_id", tables(0), tables(1), tables(2), outDir, ckpt)
+          Seq(Streams.exactDedup(Bucketed(tables(0)), "text", "doc_id"),
+            Streams.nearDedup(Bucketed(tables(1)), "text", "doc_id"),
+            Streams.spanDedup(Bucketed(tables(2)), "text", "doc_id")),
+          outDir, ckpt)
           .awaitTermination()
       def survivors(): Seq[Long] = spark.read.parquet(outDir)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -2919,10 +3036,12 @@ class StreamingSpec extends SparkSuite {
     def deliver(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(): Unit = graft.streaming.Streams.curationFeedThroughStores(
+    def drain(): Unit = curationFeed(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      "text", "doc_id", exactStore, nearStore, outDir, ckpt)
+      Seq(Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+        Streams.nearDedup(Path(nearStore), "text", "doc_id")),
+      outDir, ckpt)
       .awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -2979,10 +3098,11 @@ class StreamingSpec extends SparkSuite {
       def deliver(name: String, rows: Seq[(Long, String)]): Unit =
         rows.toDF("doc_id", "text").coalesce(1).write
           .mode("overwrite").parquet(s"$srcDir/$name")
-      def drain(): Unit = graft.streaming.Streams.dedupThroughBucketedStore(
+      def drain(): Unit = curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", table, outDir, ckpt, buckets = 4)
+        Seq(Streams.exactDedup(Bucketed(table, 4), "text", "doc_id")),
+        outDir, ckpt)
         .awaitTermination()
       def survivors(): Seq[(Long, String)] = spark.read.parquet(outDir)
         .select("doc_id", "text").collect()
@@ -3107,11 +3227,14 @@ class StreamingSpec extends SparkSuite {
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
     def drain(weights: Seq[Long]): Unit =
-      graft.streaming.Streams.qualityGatedCurationFeed(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", weights, 0L, dims,
-        exactStore, nearStore, spanStore, outDir, ckpt)
+        Seq(Streams.qualityGate("text", weights, 0L, dims),
+          Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id"),
+          Streams.spanDedup(Path(spanStore), "text", "doc_id")),
+        outDir, ckpt)
         .awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -3164,12 +3287,16 @@ class StreamingSpec extends SparkSuite {
     def deliver(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streams.contaminationGatedCurationFeed(
+    // contamination gate → exact → near, one run over `src`
+    def run(src: String, out: String, ckpt: String): Unit =
+      curationFeed(
         spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", contamStore, exactStore, nearStore,
-        outDir, ckpt).awaitTermination()
+          .option("recursiveFileLookup", "true").parquet(src),
+        Seq(Streams.contaminationGate("text", "doc_id", contamStore),
+          Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id")),
+        out, ckpt).awaitTermination()
+    def drain(ckpt: String): Unit = run(srcDir, outDir, ckpt)
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val good = (1 to 60).map(i => s"alpha$i token$i word$i").mkString(" ")
@@ -3201,11 +3328,7 @@ class StreamingSpec extends SparkSuite {
     Seq((20L, leaky), (21L, good), (22L, fresh))
       .toDF("doc_id", "text").coalesce(1).write
       .mode("overwrite").parquet(s"$srcDir2/b1")
-    graft.streaming.Streams.contaminationGatedCurationFeed(
-      spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true").parquet(srcDir2),
-      "text", "doc_id", contamStore, exactStore, nearStore,
-      outDir2, tmpDir("cgate-ckpt3")).awaitTermination()
+    run(srcDir2, outDir2, tmpDir("cgate-ckpt3"))
     assert(spark.read.parquet(outDir2)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       === Seq(22L),
@@ -3220,11 +3343,7 @@ class StreamingSpec extends SparkSuite {
     val srcDir3 = tmpDir("cgate-src3")
     Seq((30L, leaky)).toDF("doc_id", "text").coalesce(1).write
       .mode("overwrite").parquet(s"$srcDir3/b1")
-    graft.streaming.Streams.contaminationGatedCurationFeed(
-      spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true").parquet(srcDir3),
-      "text", "doc_id", contamStore, exactStore, nearStore,
-      outDir3, tmpDir("cgate-ckpt4")).awaitTermination()
+    run(srcDir3, outDir3, tmpDir("cgate-ckpt4"))
     assert(spark.read.parquet(outDir3)
       .select("doc_id").collect().map(_.getLong(0)).toSeq === Seq(30L),
       "a retraction must reopen the gate for resubmissions")
@@ -3256,11 +3375,13 @@ class StreamingSpec extends SparkSuite {
         .withColumn("iv", col("iv").cast("array<double>"))
         .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/$name")
     def drain(ckpt: String = tmpDir("xmgate-ckpt")): Unit =
-      graft.streaming.Streams.crossModalGatedCurationFeed(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", "cv", "iv", 0.25,
-        exactStore, nearStore, outDir, ckpt).awaitTermination()
+        Seq(Streams.crossModalGate("cv", "iv", 0.25),
+          Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id")),
+        outDir, ckpt).awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val capA = (1 to 60).map(i => s"alpha$i caption$i word$i")
@@ -3329,10 +3450,12 @@ class StreamingSpec extends SparkSuite {
     try {
       spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
       assert(SS.path(spark, contamStore).compactionDue)
-      graft.streaming.Streams.contaminationGatedCurationFeed(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", contamStore, exactStore, nearStore,
+        Seq(Streams.contaminationGate("text", "doc_id", contamStore),
+          Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id")),
         outDir, tmpDir("cmaint-ckpt"),
         maintenanceEvery = 1).awaitTermination()
       val s = SS.path(spark, contamStore)
@@ -3375,10 +3498,12 @@ class StreamingSpec extends SparkSuite {
       rows.toDF("doc_id", "domain", "text").coalesce(1).write
         .mode("overwrite").parquet(s"$srcDir/$name")
     def drain(ckpt: String): Unit =
-      graft.streaming.Streams.blocklistGatedCurationFeed(
+      curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
-        "text", "doc_id", "domain", blocklist, exactStore, nearStore,
+        Seq(Streams.blocklistGate("domain", blocklist),
+          Streams.exactDedup(Path(exactStore), "text", "doc_id"),
+          Streams.nearDedup(Path(nearStore), "text", "doc_id")),
         outDir, ckpt).awaitTermination()
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -3563,7 +3688,7 @@ class StreamingSpec extends SparkSuite {
     deliver("b1", Seq((1L, docA, ok), (2L, docB, ok),
       (3L, blockedText, "bad.example.com"), (4L, leaky, ok),
       (5L, spam, ok), (6L, wrongLang, ok), (7L, lowLm, ok)))
-    drain(ckpt1)
+    val observedJobs = jobsPerBatch(drain(ckpt1))
     assert(survivors() === Seq(1L, 2L),
       "exactly the gate-clean docs must land")
     // batch-0 yields: one count per outcome label, first-drop
@@ -3608,7 +3733,7 @@ class StreamingSpec extends SparkSuite {
       (11L, footerDoc, ok),
       (12L, mashup, ok),
       (13L, gammaText, ok)))
-    drain(ckpt1)
+    val observedJobs1 = jobsPerBatch(drain(ckpt1))
     assert(survivors() === Seq(1L, 2L, 13L),
       "copy/paraphrase/mashup must drop via the store legs")
     // batch-1 yields: the dedup legs charge their own labels
@@ -3647,6 +3772,13 @@ class StreamingSpec extends SparkSuite {
     assert(spark.read.parquet(s"$yieldRoot/yields")
       .select("batch_id").distinct().count() === 2L,
       "replay must add no yield batch")
+    // THE WORK COUNTER: Spark jobs per observed micro-batch (one
+    // barrier + count per stage, the yield and reject writes, the
+    // commit, the three store records) — a composer that adds a
+    // barrier changes this pin
+    assert((observedJobs ++ observedJobs1).toSeq.sortBy(_._1._2)
+      .map(_._2) === Seq(64, 65),
+      "jobs per observed full-stack micro-batch changed")
   }
 
   test("full-stack curation feed against BUCKETED dedup tables: same " +
@@ -3739,13 +3871,13 @@ class StreamingSpec extends SparkSuite {
           .mode("overwrite").parquet(s"$srcDir/$name")
       val yieldRoot = tmpDir("fscb-yield")
       def drain(ckpt: String): Unit =
-        graft.streaming.Streams.fullStackCurationFeedBucketed(
+        curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          "text", "doc_id", "domain", blockStore,
-          lidModels, lidDims, Set("en"), contamStore,
-          dense, 0L, dims, ulmVocab, minLl,
-          tables(0), tables(1), tables(2),
+          Streams.fullStackStages("text", "doc_id", "domain", blockStore,
+            lidModels, lidDims, Set("en"), contamStore,
+            dense, 0L, dims, ulmVocab, minLl,
+            Bucketed(tables(0)), Bucketed(tables(1)), Bucketed(tables(2))),
           outDir, ckpt, yieldDir = Some(yieldRoot)).awaitTermination()
       def survivors(): Seq[Long] = spark.read.parquet(outDir)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -3872,7 +4004,7 @@ class StreamingSpec extends SparkSuite {
     val ok = "ok.example.com"
     val ckpt = tmpDir("mce-ckpt")
     deliver("b1", Seq((1L, page(contentA, navX), ok)))
-    drain(ckpt)
+    val plainJobs = jobsPerBatch(drain(ckpt))
     val landed = spark.read.parquet(outDir)
     assert(landed.select("doc_id").collect().map(_.getLong(0)).toSeq
       === Seq(1L))
@@ -3883,11 +4015,17 @@ class StreamingSpec extends SparkSuite {
     // fresh content under doc 1's boilerplate → lands
     deliver("b2", Seq((2L, page(contentA, navY), ok),
       (3L, page(contentB, navX), ok)))
-    drain(ckpt)
+    val plainJobs1 = jobsPerBatch(drain(ckpt))
     assert(spark.read.parquet(outDir).select("doc_id")
       .collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L),
       "boilerplate-only variant must dedup; shared boilerplate must " +
         "not collide fresh content")
+    // THE WORK COUNTER: Spark jobs per plain (one composed plan)
+    // full-stack micro-batch — pinned so a composer that adds a
+    // barrier fails here, not only in the benchmark
+    assert((plainJobs ++ plainJobs1).toSeq.sortBy(_._1._2)
+      .map(_._2) === Seq(26, 31),
+      "jobs per plain full-stack micro-batch changed")
   }
 
   test("quality-gated feed FROM the maintained snapshot: gating " +
@@ -3938,14 +4076,19 @@ class StreamingSpec extends SparkSuite {
         .parquet(outDir).select("doc_id")
         .collect().map(_.getLong(0)).toSet
     }
+    def stores(ex: String, nr: String, sp: String): Seq[Streams.Stage] =
+      Seq(Streams.exactDedup(Path(ex), "text", "doc_id"),
+        Streams.nearDedup(Path(nr), "text", "doc_id"),
+        Streams.spanDedup(Path(sp), "text", "doc_id"))
     val control = runFeed("lit") { (src, ex, nr, sp, out, ck) =>
-      graft.streaming.Streams.qualityGatedCurationFeed(
-        src, "text", "doc_id", dense, thFp, dims, ex, nr, sp, out, ck)
+      curationFeed(src,
+        Streams.qualityGate("text", dense, thFp, dims) +:
+          stores(ex, nr, sp), out, ck)
     }
     val fromSnap = runFeed("snap") { (src, ex, nr, sp, out, ck) =>
-      graft.streaming.Streams.qualityGatedCurationFeedFromSnapshot(
-        src, "text", "doc_id", statsPath, docs, ex, nr, sp, out, ck,
-        dims)
+      curationFeed(src,
+        Streams.qualityGateFromSnapshot("text", statsPath, docs, dims) +:
+          stores(ex, nr, sp), out, ck)
     }
     assert(fromSnap === control,
       "snapshot-resolved gating diverged from the one-shot literal gate")
