@@ -91,19 +91,22 @@ object Ingest {
   /** O9 (idempotent variant — the readme's stated intent, readme.md:27
     * "évitement des doublons"): drop in-batch duplicates on the business
     * key, then anti-join against already-loaded keys. The existing side
-    * is reduced to a keys-only distinct projection (column pruning keeps
-    * the scan narrow) with NO broadcast hint: at 100 TB the existing key
-    * set exceeds any broadcast budget, so the join must be free to
-    * shuffle on the key (or co-locate via a bucketed keys projection);
-    * AQE picks broadcast by itself when the table is actually small.
+    * is reduced to a keys-only projection (column pruning keeps the scan
+    * narrow) and NOT made distinct: a left-anti join emits each batch
+    * row at most once whatever the multiplicity of its matches, so a
+    * `distinct` there would only add an aggregate (and its shuffle) over
+    * the whole existing key set. No broadcast hint either: at 100 TB the
+    * existing key set exceeds any broadcast budget, so the join must be
+    * free to shuffle on the key (or co-locate via a bucketed keys
+    * projection); AQE picks broadcast by itself when the table is
+    * actually small.
     */
   def dedupe(batch: DataFrame, existing: Option[DataFrame],
       keys: Seq[String]): DataFrame = {
     val inBatch = batch.dropDuplicates(keys)
     existing match {
       case Some(e) => inBatch.join(
-        e.select(keys.map(col).toSeq: _*).distinct(),
-        keys, "left_anti")
+        e.select(keys.map(col).toSeq: _*), keys, "left_anti")
       case None => inBatch
     }
   }

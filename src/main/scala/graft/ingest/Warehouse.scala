@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
@@ -18,6 +18,16 @@ import graft.Tables
   *   FK orphan check for facts (O10) → append (O8) → metadata upsert
   *   (O12) with success/error status (O13).
   *
+  * The poll cycle's reads of the warehouse's own tables
+  * (`storedTable`, `keyProjection`, `metadata`) carry each table's
+  * stored schema, the one the writer coerces to, so building their
+  * frames runs no Spark job; `table` stays schema-on-read for
+  * dashboards over externally populated tables. A directory
+  * with no data file below it (absent, or holding only an interrupted
+  * write's `_temporary` staging files) is "no data": tables read as
+  * None, the control table as empty, and a keys projection falls back
+  * to the full table and is rebuilt from it on the next append.
+  *
   * At scale: dims are plain parquet dirs (broadcast-size by design); the
   * ventes fact is date-partitioned on sale_date at append time, so
   * time-range queries prune partitions (the reference's date_vente
@@ -29,46 +39,52 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   private val entities = Seq("clients", "produits", "ventes") // dims first
   private def tablePath(name: String): String = s"$root/$name"
-  private val metadataPath = s"$root/file_metadata"
+  private val metadataPath = tablePath("file_metadata")
 
-  private val contracts: Map[String, StructType] = Map(
-    "clients" -> Tables.clientsSchema,
-    "produits" -> Tables.produitsSchema,
-    "ventes" -> Tables.ventesSchema)
+  /** The schema each table is stored with, fixed by contract: the
+    * entity contract minus `date_creation` (no delivery carries it, so
+    * `prepareBatch` never writes it), lineage columns last, all
+    * nullable as parquet reads them; ventes adds its `sale_date`
+    * partition column. The writer coerces to it and every poll-cycle
+    * read of the warehouse's own tables passes it, so no such read
+    * re-infers (one Spark job each) a schema the warehouse itself fixed.
+    */
+  private val stored: Map[String, StructType] = {
+    def written(s: StructType) = StructType(s.fields
+      .filterNot(_.name == "date_creation").map(_.copy(nullable = true)))
+    Map(
+      "clients" -> written(Tables.clientsSchema),
+      "produits" -> written(Tables.produitsSchema),
+      "ventes" -> written(Tables.ventesSchema).add("sale_date", DateType),
+      "file_metadata" -> written(Tables.fileMetadataSchema))
+  }
   private val businessKey: Map[String, String] = Map(
     "clients" -> "client_id", "produits" -> "produit_id",
     "ventes" -> "vente_id")
 
   // -- table access -----------------------------------------------------
 
-  private def exists(path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** None when absent or when the directory exists but holds no parquet
-    * data files anywhere below it (interrupted/empty write) — "no data
-    * yet". The no-data case is decided by an explicit file listing, NOT
-    * by catching AnalysisException: schema inference also throws that on
-    * a non-empty table with corrupt footers, and mapping it to "no data"
-    * would silently disable the dedup anti-join and re-admit every
-    * previously-loaded key as 'success'. Any exception from a directory
-    * that does hold data files therefore propagates.
+  /** True when `path` holds a data file anywhere below it. The no-data
+    * case is decided by an explicit file listing, NOT by catching
+    * AnalysisException: a read also throws that on a non-empty table
+    * with corrupt footers, and mapping it to "no data" would silently
+    * disable the dedup anti-join and re-admit every previously-loaded
+    * key as 'success'. Any exception from a directory that does hold
+    * data files therefore propagates.
     */
-  def table(name: String): Option[DataFrame] = {
-    val p = new Path(tablePath(name))
+  private def hasDataFiles(path: String): Boolean = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
+    fs.exists(p) && {
       // Recursive so partitioned layouts (ventes/sale_date=…/*.parquet)
       // are seen. ANY non-marker file counts as data — not just
       // *.parquet names: a table populated by an external tool with
       // unsuffixed parquet files must fail LOUD on read problems, not
       // be classified "empty" (which would silently disable the dedup
       // anti-join). Markers are judged on EVERY path component relative
-      // to the table root, not just the leaf: an interrupted write
-      // leaves part files under _temporary/…, and counting those as
-      // data would turn "no data yet" into a persistent read failure
+      // to the root, not just the leaf: an interrupted write leaves
+      // part files under _temporary/…, and counting those as data
+      // would turn "no data yet" into a persistent read failure
       // (Spark's own file index prunes _-/.-prefixed directories).
       val qualifiedRoot = fs.makeQualified(p).toString
       val it = fs.listFiles(p, true)
@@ -76,15 +92,40 @@ final class Warehouse(spark: SparkSession, root: String) {
       while (!hasData && it.hasNext) {
         val f = it.next().getPath.toString
         val rel = f.stripPrefix(qualifiedRoot).stripPrefix("/")
-        // rel empty ⇒ the table path IS a single data file (externally
+        // rel empty ⇒ the path IS a single data file (externally
         // materialized single-file table) — data, not a marker: the
         // root's own name is the table name, never _-/.-prefixed.
         hasData = rel.isEmpty || rel.split('/').forall(c =>
           !c.startsWith("_") && !c.startsWith("."))
       }
-      if (hasData) Some(spark.read.parquet(tablePath(name))) else None
+      hasData
     }
   }
+
+  /** The parquet data at `path` read with `schema`; None when
+    * [[hasDataFiles]] finds none (absent, or an interrupted/empty
+    * write) — "no data yet".
+    */
+  private def readStored(path: String, schema: StructType): Option[DataFrame] =
+    if (hasDataFiles(path)) Some(spark.read.schema(schema).parquet(path))
+    else None
+
+  /** A table as its files hold it (schema-on-read: every column,
+    * including ones an external tool wrote) — the view dashboards
+    * register (graft.SqlSurface.registerWarehouse). None while it holds
+    * no data files. The poll cycle reads through [[storedTable]].
+    */
+  def table(name: String): Option[DataFrame] =
+    if (hasDataFiles(tablePath(name)))
+      Some(spark.read.parquet(tablePath(name)))
+    else None
+
+  /** One of `clients`, `produits`, `ventes` or `file_metadata`, read
+    * with its stored schema (building the frame runs no Spark job); None
+    * while it holds no data files.
+    */
+  private[graft] def storedTable(name: String): Option[DataFrame] =
+    readStored(tablePath(name), stored(name))
 
   // -- keys-only projection (scale path for O9 dedup) --------------------
 
@@ -94,33 +135,33 @@ final class Warehouse(spark: SparkSession, root: String) {
     * dedup anti-join's existing side reads THIS (one key column) instead
     * of scanning the full table — at 100 TB the keys projection is a
     * small fraction of the fact and is the natural bucketing candidate
-    * (bucket by key → co-located, shuffle-free anti-join). None ⇒ caller
-    * falls back to a keys projection of the full table (correct, wider
-    * scan).
+    * (bucket by key → co-located, shuffle-free anti-join). None (absent,
+    * or no data files) ⇒ caller falls back to a keys projection of the
+    * full table (correct, wider scan).
     */
   def keyProjection(name: String): Option[DataFrame] =
-    if (exists(keysPath(name))) Some(spark.read.parquet(keysPath(name)))
-    else None
+    readStored(keysPath(name),
+      StructType(Seq(stored(name)(businessKey(name)))))
 
   /** Maintain the keys projection after a data append. If the
-    * projection exists, append just the batch's keys; if it is MISSING
-    * (first append, or deleted after an earlier failure), rebuild it
-    * from the FULL table — rebuilding from only the current batch would
-    * leave earlier keys out and silently re-admit duplicates on
-    * re-delivery. On ANY failure the projection is deleted outright: a
-    * missing projection only widens the next dedup scan to the
-    * full-table fallback, a partial one would corrupt dedup. Fail
-    * towards correctness.
+    * projection holds data, append just the batch's keys; if it holds
+    * NONE (first append, deleted after an earlier failure, or only an
+    * interrupted write's staging files), rebuild it from the FULL
+    * table — rebuilding from only the current batch would leave earlier
+    * keys out and silently re-admit duplicates on re-delivery. On ANY
+    * failure the projection is deleted outright: a missing projection
+    * only widens the next dedup scan to the full-table fallback, a
+    * partial one would corrupt dedup. Fail towards correctness.
     */
   private def appendKeys(name: String, df: DataFrame): Unit =
     try {
-      if (exists(keysPath(name)))
+      if (hasDataFiles(keysPath(name)))
         df.select(businessKey(name)).write.mode("append")
           .parquet(keysPath(name))
       else
         // Full rebuild; the table already contains the just-appended
         // batch, so the projection comes out complete.
-        table(name).foreach(_.select(businessKey(name))
+        storedTable(name).foreach(_.select(businessKey(name))
           .write.mode("overwrite").parquet(keysPath(name)))
     } catch {
       case _: Exception =>
@@ -128,11 +169,12 @@ final class Warehouse(spark: SparkSession, root: String) {
         p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     }
 
+  private def empty(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** The control table; empty while it holds no data files. */
   def metadata: DataFrame =
-    if (exists(metadataPath)) spark.read.parquet(metadataPath)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Tables.fileMetadataSchema)
+    storedTable("file_metadata").getOrElse(empty(stored("file_metadata")))
 
   /** O8 — append sink (etl/app.py:162,191,220 → to_sql append). The
     * ventes fact is date-partitioned on sale_date (day of date_vente):
@@ -229,12 +271,16 @@ final class Warehouse(spark: SparkSession, root: String) {
 
     val candidates = listed.filter(t => toProcess.contains(t._2))
 
-    // O11 + FK ordering: dimensions before facts (SURVEY.md §2.1 hazard).
-    val ordered = candidates.sortBy { case (_, name, _) =>
-      entities.indexOf(Ingest.entityFor(name).getOrElse("")) match {
+    // O11 + FK ordering: dimensions before facts (SURVEY.md §2.1 hazard);
+    // within an entity oldest first, then by name — the order the cap
+    // above selects by — so when two deliveries of one cycle share a
+    // key, the older one's row lands, whatever the filesystem lists.
+    val ordered = candidates.sortBy { case (_, name, mtime) =>
+      val rank = entities.indexOf(Ingest.entityFor(name).getOrElse("")) match {
         case -1 => Int.MaxValue
         case i => i
       }
+      (rank, mtime.getTime, name)
     }
 
     val results = ordered.flatMap { case (full, name, mtime) =>
@@ -256,6 +302,11 @@ final class Warehouse(spark: SparkSession, root: String) {
   /** O12/O13 — upsert per-file (filename, last_modified, status) rows
     * into the control table (latest-wins MERGE emulation; the small
     * control table is rewritten in full — the plain-parquet MERGE).
+    * The merge reads the live table, so it cannot overwrite it in place:
+    * it is written once beside it and renamed over it. A crash between
+    * the delete and the rename leaves no control table (every listed
+    * file is then re-processed, and dedup keeps that idempotent), never
+    * a half-written one.
     * Synchronized: the read-merge-overwrite is not atomic, and in a
     * concurrent-streams deployment (Trigger.ProcessingTime, one query
     * per entity in this JVM) two foreachBatch callbacks would otherwise
@@ -270,12 +321,12 @@ final class Warehouse(spark: SparkSession, root: String) {
       .map { case (name, mtime, status) => (name, mtime, now, status) }
       .toDF("filename", "last_modified", "last_processed", "status")
     val merged = Ingest.upsertMetadata(metadata, updates)
-    val tmp = s"$metadataPath.__tmp"
-    val fs = new Path(metadataPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(metadataPath)
-    fs.delete(new Path(tmp), true)
+    val live = new Path(metadataPath)
+    val tmp = new Path(s"$metadataPath.__tmp")
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    if (fs.exists(live) && !fs.delete(live, true) || !fs.rename(tmp, live))
+      throw new java.io.IOException(s"could not replace $live with $tmp")
   }
 
   /** E1 steps 4-7 for one file; true = success, false = error status
@@ -408,9 +459,10 @@ final class Warehouse(spark: SparkSession, root: String) {
     Ingest.validateColumns(raw, Tables.requiredColumns(entity)) match {
         case Ingest.MissingColumns(_) => None
         case Ingest.Valid =>
-          val contract = StructType(contracts(entity).fields
-            .filterNot(f => f.name == "source_file" ||
-              f.name == "imported_at" || f.name == "date_creation"))
+          // the stored columns a delivery carries (enrich adds lineage,
+          // append the ventes partition column)
+          val contract = StructType(stored(entity).fields.filterNot(f =>
+            Set("source_file", "imported_at", "sale_date")(f.name)))
           // ventes.date_vente may arrive as an Excel serial (FIXTURES.md).
           // Only values in the plausible Excel-date range [1, 80000]
           // (1900-01-01 .. ~2119) take the serial path — '20250510' or
@@ -431,7 +483,7 @@ final class Warehouse(spark: SparkSession, root: String) {
           val enriched = enrich(coerced)
           // Existing side of the dedup anti-join: the narrow keys
           // projection when present, else the full table (fallback).
-          val existing = keyProjection(entity).orElse(table(entity))
+          val existing = keyProjection(entity).orElse(storedTable(entity))
           val deduped = Ingest.dedupe(enriched, existing,
             Seq(businessKey(entity)))
           deduped.persist()
@@ -439,15 +491,19 @@ final class Warehouse(spark: SparkSession, root: String) {
             if (entity == "ventes") {
               // O10 — FK check before the caller appends a fact batch.
               // One cached plan + ONE action for both orphan counts
-              // (left joins on the distinct dim keys, count the null
-              // arms) — the source file is read once, and a file
-              // mutated mid-cycle cannot slip unchecked rows into the
-              // append.
+              // (left joins on the dim keys, count the null arms) — the
+              // source file is read once, and a file mutated mid-cycle
+              // cannot slip unchecked rows into the append. The dim keys
+              // are not made distinct: a duplicated key only repeats
+              // rows, and a row unmatched on one dim keeps its null arm
+              // there in every repeat, so whether any null arm exists —
+              // all the check decides — is the same. They come from the
+              // dim TABLES, not the keys projections: a crash between a
+              // dim append and its keys write must not turn committed
+              // dims into false orphans.
               def keysOf(name: String, key: String): DataFrame =
-                table(name).map(_.select(key).distinct())
-                  .getOrElse(spark.createDataFrame(
-                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                    StructType(Seq(StructField(key, StringType)))))
+                storedTable(name).map(_.select(key)).getOrElse(
+                  empty(StructType(Seq(StructField(key, StringType)))))
               val flagged = deduped
                 .join(broadcast(keysOf("clients", "client_id")
                   .withColumn("__c", lit(1))), Seq("client_id"), "left")
@@ -461,7 +517,10 @@ final class Warehouse(spark: SparkSession, root: String) {
                 None
               } else Some(deduped)
             } else {
-              deduped.count() // force the full read inside the retry
+              // Force the full read inside the retry. A no-op sink only
+              // scans the cache; count() would add an aggregate and its
+              // shuffle stage (one more job under AQE).
+              deduped.write.format("noop").mode("overwrite").save()
               Some(deduped)
             }
           } catch {

@@ -2107,18 +2107,22 @@ class IngestSpec extends SparkSuite {
     assert(wh.table("clients").get.count() === 3)
   }
 
+  /** Simulate a killed write into `dir`: a part file exists ONLY under
+    * _temporary/. (Named so Spark's own output committer would not
+    * claim it if a real write later reused this directory.)
+    */
+  private def interruptedWrite(dir: java.nio.file.Path): Unit = {
+    val tmpAttempt = dir.resolve("_temporary/0/_temporary/attempt_1")
+    Files.createDirectories(tmpAttempt)
+    Files.writeString(tmpAttempt.resolve("part-00000.snappy.parquet"),
+      "not a real footer")
+  }
+
   test("table(): interrupted write leaving only _temporary files is " +
     "'no data yet', not a persistent failure; committed data reads") {
     val root = tmpDir("wh-tmp")
     val wh = new Warehouse(spark, root)
-    // Simulate a killed write: part file exists ONLY under _temporary/.
-    // (Named so Spark's own output committer would not claim it if a
-    // real write later reused this directory.)
-    val tmpAttempt = java.nio.file.Paths.get(root,
-      "clients", "_temporary", "0", "_temporary", "attempt_1")
-    Files.createDirectories(tmpAttempt)
-    Files.writeString(tmpAttempt.resolve("part-00000.snappy.parquet"),
-      "not a real footer")
+    interruptedWrite(java.nio.file.Paths.get(root, "clients"))
     assert(wh.table("clients").isEmpty,
       "_temporary leftovers must read as empty, not crash every poll")
     // A committed file alongside the stale markers counts as data
@@ -2137,6 +2141,114 @@ class IngestSpec extends SparkSuite {
     Files.copy(part,
       java.nio.file.Paths.get(root, "clients", part.getFileName.toString))
     assert(wh.table("clients").get.count() === 1)
+  }
+
+  test("file_metadata: an interrupted control-table write reads as an " +
+    "empty control table, so polling resumes and replaces it") {
+    val root = tmpDir("wh-meta-tmp")
+    val wh = new Warehouse(spark, root)
+    interruptedWrite(java.nio.file.Paths.get(root, "file_metadata"))
+    assert(wh.metadata.count() === 0)
+    val watch = tmpDir("watch-meta-tmp")
+    writeFile(watch, "clients.csv", clientsCsv)
+    assert(wh.pollForever(watch, maxCycles = 1, sleep = _ => ()) === 1,
+      "the cycle must succeed, not back off")
+    assert(wh.metadata.collect()
+      .map(r => r.getAs[String]("filename") -> r.getAs[String]("status"))
+      .toMap === Map("clients.csv" -> "success"))
+    assert(wh.table("clients").get.count() === 3)
+  }
+
+  test("_keys: an interrupted keys-projection write falls back to the " +
+    "full table for dedup, and the next append rebuilds the projection " +
+    "from the table") {
+    val root = tmpDir("wh-keys-tmp")
+    val wh = new Warehouse(spark, root)
+    val watch = tmpDir("watch-keys-tmp")
+    writeFile(watch, "clients.csv", clientsCsv)
+    assert(wh.pollOnce(watch) === Map("clients.csv" -> "success"))
+    val keys = new org.apache.hadoop.fs.Path(s"$root/_keys/clients")
+    keys.getFileSystem(spark.sessionState.newHadoopConf()).delete(keys, true)
+    interruptedWrite(java.nio.file.Paths.get(keys.toString))
+    assert(wh.keyProjection("clients").isEmpty)
+    // a re-delivered key (CLI001) and a new one
+    writeFile(watch, "clients_2.csv",
+      """client_id,nom,prenom,email,telephone,adresse
+        |CLI001,Dupont,Jean,jean.dupont@email.com,612345678,Paris
+        |CLI004,Durand,Paul,p.durand@email.com,634567890,Nantes
+        |""".stripMargin)
+    assert(wh.pollOnce(watch) === Map("clients_2.csv" -> "success"))
+    assert(wh.table("clients").get.select("client_id").collect()
+      .map(_.getString(0)).sorted.toSeq ===
+      Seq("CLI001", "CLI002", "CLI003", "CLI004"),
+      "the full-table fallback must still drop the re-delivered key")
+    assert(wh.keyProjection("clients").get.collect()
+      .map(_.getString(0)).sorted.toSeq ===
+      Seq("CLI001", "CLI002", "CLI003", "CLI004"),
+      "the projection must be rebuilt from the table, not hold one batch")
+  }
+
+  test("pollOnce: two deliveries of one cycle sharing a key land the " +
+    "older file's row, whatever the file names") {
+    val header = "client_id,nom,prenom,email,telephone,adresse\n"
+    for ((older, newer) <- Seq(("clients_a.csv", "clients_b.csv"),
+      ("clients_b.csv", "clients_a.csv"))) {
+      val watch = tmpDir("watch-order")
+      val wh = new Warehouse(spark, tmpDir("wh-order"))
+      writeFile(watch, older, header + "CLI001,Ancien,Jean,j@e.com,1,a\n")
+      writeFile(watch, newer, header + "CLI001,Nouveau,Jean,j@e.com,1,a\n")
+      val now = System.currentTimeMillis()
+      assert(new java.io.File(watch, older).setLastModified(now - 60000))
+      assert(new java.io.File(watch, newer).setLastModified(now - 30000))
+      assert(wh.pollOnce(watch) ===
+        Map(older -> "success", newer -> "success"))
+      assert(wh.table("clients").get.select("nom").collect()
+        .map(_.getString(0)).toSeq === Seq("Ancien"),
+        s"$older is older than $newer, so its row must land")
+    }
+  }
+
+  private def writeE1Fixture(watch: String): Unit = {
+    writeFile(watch, "clients.csv", clientsCsv)
+    writeFile(watch, "produits.csv", produitsCsv)
+    writeFile(watch, "ventes.csv", ventesCsv)
+  }
+
+  test("work-counter law: building the frames of storedTable(), " +
+    "keyProjection() and metadata runs ZERO Spark jobs, and each carries " +
+    "the schema parquet inference finds") {
+    val root = tmpDir("wh-zero")
+    val wh = new Warehouse(spark, root)
+    val (_, emptyJobs) = jobsDuring(wh.metadata)
+    assert(emptyJobs.size === 0,
+      s"the empty control table ran ${emptyJobs.size} Spark jobs")
+    val watch = tmpDir("watch-zero")
+    writeE1Fixture(watch)
+    assert(wh.pollOnce(watch).values.toSet === Set("success"))
+    val entities = Seq("clients", "produits", "ventes")
+    val (frames, jobs) = jobsDuring {
+      (entities :+ "file_metadata").map(n => n -> wh.storedTable(n).get) ++
+        entities.map(n => s"_keys/$n" -> wh.keyProjection(n).get) :+
+        ("file_metadata" -> wh.metadata)
+    }
+    assert(jobs.size === 0,
+      s"building the frames ran ${jobs.size} Spark jobs: ${jobNames(jobs)}")
+    frames.foreach { case (rel, df) =>
+      assert(df.schema === spark.read.parquet(s"$root/$rel").schema, rel)
+    }
+  }
+
+  test("work-counter pin: one pollOnce over the E1 fixture runs " +
+    "exactly 25 Spark jobs") {
+    // an exact work pin: a new count is a work change to justify, like
+    // a changed plan pin
+    val watch = tmpDir("watch-pin")
+    val wh = new Warehouse(spark, tmpDir("wh-pin"))
+    writeE1Fixture(watch)
+    val (st, jobs) = jobsDuring(wh.pollOnce(watch))
+    assert(st === Map("clients.csv" -> "success",
+      "produits.csv" -> "success", "ventes.csv" -> "success"))
+    assert(jobs.size === 25, jobNames(jobs))
   }
 
   test("E1 negative: missing column → error; FK orphan ventes → error") {

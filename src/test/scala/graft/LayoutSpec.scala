@@ -877,30 +877,10 @@ class LayoutSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("idxstats")
       .toString + "/index"
     val g1 = A.writeIndexVersioned(e, cents, root)
-    // pure-metadata law: stats() spawns no Spark job. The marker job
-    // flushes the FIFO listener bus — once ITS start event has been
-    // delivered, any job stats() had started would have arrived first.
-    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        seen.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val s1 =
-      try {
-        val s = IS.stats(spark, root)
-        // marker: collect on an unshuffled range = exactly ONE job
-        // (count() would be two under AQE — shuffle stage + final)
-        spark.range(1).collect()
-        val deadline = System.currentTimeMillis() + 30000
-        while (seen.get() < 1 && System.currentTimeMillis() < deadline)
-          Thread.sleep(50)
-        assert(seen.get() === 1,
-          s"stats() must run zero Spark jobs (saw ${seen.get() - 1})")
-        s
-      } finally spark.sparkContext.removeSparkListener(l)
+    // pure-metadata law: stats() spawns no Spark job
+    val (s1, statsJobs) = jobsDuring(IS.stats(spark, root))
+    assert(statsJobs.size === 0,
+      s"stats() must run zero Spark jobs (saw ${statsJobs.size})")
     // 1: fresh build — data present, no sidecar, nothing retracted
     assert(s1.generation === g1 && s1.generationsOnDisk === 1 &&
       !s1.predecessorRetained)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,4 +29,42 @@ object SparkSuite {
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
   def sf: String = SparkSuite.sf
+
+  /** Runs `body` and returns its result with the start event of every
+    * Spark job that started while it ran, on any thread (a streaming
+    * query's jobs carry its query and batch ids in their properties). A
+    * marker job then flushes the FIFO listener bus: once the marker's own
+    * start event has been delivered, every earlier job's has been too.
+    * The marker itself is not returned; [[jobNames]] names the rest.
+    */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val jobs = Seq.newBuilder[SparkListenerJobStart]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties)
+            .exists(_.getProperty("graft.test.flush") != null))
+          flushed.countDown()
+        else jobs.synchronized { jobs += j; () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      // marker: collect on an unshuffled range = exactly ONE job
+      // (count() would be two under AQE — shuffle stage + final)
+      spark.sparkContext.setLocalProperty("graft.test.flush", "1")
+      try spark.range(1).collect()
+      finally spark.sparkContext.setLocalProperty("graft.test.flush", null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not deliver the marker job")
+      (out, jobs.synchronized(jobs.result()))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Each job's result-stage name ("count at Warehouse.scala:123"), for
+    * assertion messages.
+    */
+  def jobNames(jobs: Seq[SparkListenerJobStart]): String =
+    jobs.map(_.stageInfos.sortBy(_.stageId).lastOption
+      .fold("(no stage)")(_.name)).mkString("; ")
 }

@@ -23,35 +23,15 @@ class StreamingSpec extends SparkSuite {
 
   /** Spark jobs started per micro-batch while `body` runs, keyed by
     * (query id, batch id) — the local properties every job of a
-    * micro-batch carries. A marker job flushes the FIFO listener bus
-    * before the counts are read.
+    * micro-batch carries (counted by [[SparkSuite.jobsDuring]]).
     */
-  private def jobsPerBatch(body: => Unit): Map[(String, Long), Int] = {
-    val jobs = scala.collection.mutable.Map[(String, Long), Int]()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(j.properties)
-        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
-        if (prop("graft.test.flush").nonEmpty) flushed.countDown()
-        for (q <- prop("sql.streaming.queryId");
-             b <- prop("streaming.sql.batchId")) jobs.synchronized {
-          jobs((q, b.toLong)) = jobs.getOrElse((q, b.toLong), 0) + 1
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      spark.sparkContext.setLocalProperty("graft.test.flush", "1")
-      try spark.range(1).collect()
-      finally spark.sparkContext.setLocalProperty("graft.test.flush", null)
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener bus did not deliver the marker job")
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.synchronized(jobs.toMap)
-  }
+  private def jobsPerBatch(body: => Unit): Map[(String, Long), Int] =
+    jobsDuring(body)._2.flatMap { j =>
+      val p = Option(j.properties).getOrElse(new java.util.Properties)
+      for (q <- Option(p.getProperty("sql.streaming.queryId"));
+           b <- Option(p.getProperty("streaming.sql.batchId")))
+        yield (q, b.toLong)
+    }.groupBy(identity).map { case (k, v) => k -> v.size }
 
   private val clientsCsv =
     """client_id,nom,prenom,email,telephone,adresse
