@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * share reaches `maxDupShare`; two-phase record (persist survivors,
   * then [[recordChunks]] — a crash re-delivers instead of dropping);
   * retraction tombstones chunk hashes; Bloom sidecar prunes
-  * mostly-novel batches; the bucketed-catalog form holds the store as
-  * a single-hash-column DedupStore table so the probe semi-join plans
-  * ZERO store-side exchanges. Hash forms: md5 (32-char, q126-exact)
+  * mostly-novel batches; the [[StoreLayout.Bucketed]] layout holds the
+  * chunk hashes under a `content_hash` bucket column so the probe
+  * semi-join plans ZERO store-side exchanges. Hash forms: md5 (32-char, q126-exact)
   * or xxh64 (8-byte long — [[graft.queries.LlmPipeline.cdcChunks64]];
   * boundaries stay md5-anchored, so both forms chunk identically).
   *
@@ -38,13 +38,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * the null-safe joins. Within-batch chunk reuse is q126's job; this
   * store only compares against HISTORY.
   */
-object CdcChunkStore {
-
-  private val storeSchema = StructType(Seq(StructField("h", StringType)))
-  private val storeSchemaXx = StructType(Seq(StructField("h", LongType)))
-
-  private[graft] val Md5Form = HashForm.Md5
-  private[graft] val XxForm = HashForm.Xx
+object CdcChunkStore extends KeyStore[StoreLayout](KeySpec("CdcChunkStore",
+    form => StructType(Seq(StructField("h",
+      if (form == HashForm.Xx) LongType else StringType))),
+    "h", formProp = "graft.cdc.hashform", tableCol = "content_hash")) {
 
   /** (doc_id, h) chunk stream via the shared q126 derivation, in the
     * store's hash form.
@@ -54,58 +51,19 @@ object CdcChunkStore {
     val base = docs.select(col(idCol).as("doc_id"),
       col(textCol).as("text"))
     val c =
-      if (form == XxForm) graft.queries.LlmPipeline.cdcChunks64(base)
+      if (form == HashForm.Xx) graft.queries.LlmPipeline.cdcChunks64(base)
       else graft.queries.LlmPipeline.cdcChunks(base)
     c.select(col("doc_id"), col("ch").as("h"))
   }
 
-  def storedHashForm(spark: SparkSession, storePath: String): String =
-    HashForm.storedPath(spark, storePath)
-
-  private def commitHashForm(spark: SparkSession, storePath: String,
-      form: String): Unit =
-    HashForm.commitPath(spark, storePath, form, "CdcChunkStore")
-
-  private def schemaOf(form: String): StructType =
-    if (form == XxForm) storeSchemaXx else storeSchema
-
-  private def storeHashes(spark: SparkSession, storePath: String,
-      schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val base =
-      if (fs.exists(p)) spark.read.schema(schema).parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    DedupStore.minusTombstones(base,
-      DedupStore.readTombstones(spark,
-        DedupStore.tombstonesPath(storePath), schema), Seq("h"))
-  }
-
-  // ── Retraction (takedown) — the family's two-phase tombstone
-  // protocol over chunk hashes. Membership is CONTENT-addressed:
-  // retracting a document tombstones its chunk hashes, so chunks
-  // another document shares with it stop counting until re-recorded.
-
+  /** Phase 1 of the takedown: tombstone `docs`' chunk hashes.
+    * Membership is CONTENT-addressed: chunks another document shares
+    * with a retracted one stop counting until re-recorded.
+    */
   def retract(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String): Unit = {
-    val spark = docs.sparkSession
-    val form = storedHashForm(spark, storePath)
-    DedupStore.appendTombstones(
-      chunks(docs, textCol, idCol, form).select("h"),
-      DedupStore.tombstonesPath(storePath))
-  }
-
-  def retractBucketed(docs: DataFrame, textCol: String, idCol: String,
-      table: String): Unit = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val form = storedHashFormBucketed(spark, table)
-    DedupStore.appendTombstones(
-      chunks(docs, textCol, idCol, form)
-        .select(col("h").as("content_hash")),
-      DedupStore.bucketedTombstonesDir(spark, table))
-  }
+      layout: StoreLayout): Unit =
+    layout.retract(spec, chunks(docs, textCol, idCol,
+      storedHashForm(docs.sparkSession, layout)).select("h"))
 
   /** Rows of `docs` whose recycled-chunk share vs HISTORY stays below
     * `maxDupShare`: stream chunks once for the store semi-join, once
@@ -113,25 +71,25 @@ object CdcChunkStore {
     * scan-side part; the exchange — the semi-join — happens once), flag
     * documents with matched/total ≥ the threshold, null-safe anti-join
     * the flagged ids. Returns the original rows/columns of survivors.
+    * With a sidecar the bloom legs are disjoint: every matched chunk
+    * instance is counted exactly as the plain join counts it.
     */
   def newChunkUnique(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, maxDupShare: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    val form = storedHashForm(spark, storePath)
+      layout: StoreLayout, maxDupShare: Double = 0.5): DataFrame = {
+    val form = storedHashForm(docs.sparkSession, layout)
     flagSurvivors(docs, textCol, idCol,
-      chunks(docs, textCol, idCol, form)
-        .join(storeHashes(spark, storePath, schemaOf(form)), Seq("h"),
-          "left_semi"),
+      layout.probe(spec, form, chunks(docs, textCol, idCol, form))(
+        _.join(_, Seq("h"), "left_semi")),
       maxDupShare, form)
   }
 
-  /** Threshold + anti-join shared by the plain/Bloom/bucketed paths:
-    * `matchedChunks` is the (doc_id, h) stream of batch chunks found in
-    * history. Totals come from the batch's own chunk stream (chunk
-    * counts are content-dependent — no closed form), so numerator and
-    * denominator count chunk INSTANCES consistently (a doc carrying a
-    * recycled chunk twice contributes 2 to both). Null ids pool into
-    * one identity end-to-end (null group + null-safe anti-join).
+  /** Threshold + anti-join: `matchedChunks` is the (doc_id, h) stream
+    * of batch chunks found in history. Totals come from the batch's own
+    * chunk stream (chunk counts are content-dependent — no closed
+    * form), so numerator and denominator count chunk INSTANCES
+    * consistently (a doc carrying a recycled chunk twice contributes 2
+    * to both). Null ids pool into one identity end-to-end (null group +
+    * null-safe anti-join).
     */
   private def flagSurvivors(docs: DataFrame, textCol: String,
       idCol: String, matchedChunks: DataFrame, maxDupShare: Double,
@@ -150,239 +108,13 @@ object CdcChunkStore {
 
   /** Mark `docs` as seen: append their distinct chunk hashes. Call
     * AFTER survivors are durably persisted (two-phase contract),
-    * ideally on the persisted read-back. The pre-append localCheckpoint
-    * pins the batch's hashes before the append job could scan the
-    * directory it extends (the family's self-scan guard).
-    * At-least-once re-records append duplicate rows; [[compactStore]]
-    * reclaims them.
+    * ideally on the persisted read-back.
     */
   def recordChunks(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, hashForm: String = ""): Unit = {
-    val spark = docs.sparkSession
-    val form = HashForm.resolve(hashForm, storedHashForm(spark, storePath))
-    commitHashForm(spark, storePath, form)
-    val rows = chunks(docs, textCol, idCol, form)
-      .select("h").distinct().localCheckpoint(true)
-    try rows.write.mode(SaveMode.Append).parquet(storePath)
-    finally rows.unpersist()
-  }
-
-  /** Build/replace the store's Bloom sidecar — DedupStore's sidecar
-    * over the chunk hashes. A miss is PROOF the chunk was never
-    * recorded, so a mostly-novel batch's chunks skip the store join.
-    */
-  def buildBloomSidecar(spark: SparkSession, storePath: String,
-      fpp: Double = 0.01, numShards: Int = 0): Long =
-    DedupStore.buildPathSidecar(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)), "h", fpp, numShards)
-
-  /** [[newChunkUnique]] accelerated by the Bloom sidecar, split
-    * DISJOINT on the bloom predicate: hit chunks semi-join the CURRENT
-    * store files, miss chunks can only match post-sidecar appends and
-    * semi-join just the residual files with the small residual side
-    * broadcast. Disjoint legs = plain union: every matched chunk
-    * instance is counted exactly as the plain path counts it.
-    */
-  def newChunkUniqueWithBloom(docs: DataFrame, textCol: String,
-      idCol: String, storePath: String,
-      maxDupShare: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    val form = storedHashForm(spark, storePath)
-    val schema = schemaOf(form)
-    val manifest = DedupStore.sidecarPath(storePath)
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newChunkUnique(docs, textCol, idCol, storePath, maxDupShare)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = DedupStore.storeDataFiles(fs, store)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newChunkUnique(docs, textCol, idCol, storePath,
-            maxDupShare)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val tomb = DedupStore.readTombstones(spark,
-          DedupStore.tombstonesPath(storePath), schema)
-        val c = chunks(docs, textCol, idCol, form)
-        // the probe expression hashes STRINGS; the xx64 form's long
-        // hashes cast to their decimal string — bit-identical to what
-        // the sidecar build cast when it recorded them
-        val hitMatched = c.filter(mightContain(col("h").cast("string")))
-          .join(DedupStore.minusTombstones(
-            spark.read.schema(schema)
-              .parquet(current.map(_.toString): _*), tomb, Seq("h")),
-            Seq("h"), "left_semi")
-        val matchedChunks =
-          if (residual.isEmpty) hitMatched
-          else hitMatched.unionByName(
-            c.filter(!mightContain(col("h").cast("string")))
-              .join(broadcast(DedupStore.minusTombstones(
-                spark.read.schema(schema)
-                  .parquet(residual.map(_.toString): _*), tomb,
-                Seq("h"))),
-                Seq("h"), "left_semi"))
-        flagSurvivors(docs, textCol, idCol, matchedChunks, maxDupShare,
-          form)
-    }
-  }
-
-  /** Maintenance: one row per hash, tombstones applied — reclaims
-    * at-least-once re-deliveries, same machinery as the siblings.
-    */
-  def compactStore(spark: SparkSession, storePath: String,
-      targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return (0, 0)
-    DedupStore.compactApplyingTombstones(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)), Seq("h"),
-      targetFileBytes)
-  }
-
-  // ── bucketed-catalog store form (the 100 TB path) ──────────────────
-  //
-  // A single hash column, so the chunk store's bucketed table IS a
-  // DedupStore bucketed table (chunk hashes under its `content_hash`
-  // column) — layout, swap-recovery, compaction, and the in-table
-  // `_bloom` sidecar are shared machinery. Only the probe differs:
-  // batch CHUNKS semi-join the history and a share threshold flags the
-  // document. The bucketed scan satisfies the semi-join's hash
-  // distribution straight off the files: only the batch's chunk stream
-  // shuffles, the ever-growing store side NEVER does.
-
-  /** Create the bucketed chunk-store table if absent (idempotent;
-    * recovers a compaction crash first).
-    */
-  def ensureBucketedStore(spark: SparkSession, table: String,
-      buckets: Int = 32): Unit =
-    DedupStore.ensureBucketedStore(spark, table, buckets)
-
-  private val HashFormProp = "graft.cdc.hashform"
-
-  def storedHashFormBucketed(spark: SparkSession, table: String): String =
-    HashForm.storedBucketed(spark, table, HashFormProp)
-
-  private def bucketedSchemaOf(form: String): StructType =
-    if (form == XxForm)
-      StructType(Seq(StructField("content_hash", LongType)))
-    else StructType(Seq(StructField("content_hash", StringType)))
-
-  private def commitHashFormBucketed(spark: SparkSession, table: String,
-      form: String): Unit =
-    HashForm.commitBucketed(spark, table, HashFormProp, form,
-      bucketedSchemaOf, "content_hash", "CdcChunkStore")
-
-  /** The bucketed store's scan minus live tombstones, read with the
-    * store's own hash-form schema.
-    */
-  private def storeTableBucketed(spark: SparkSession, table: String,
-      form: String): DataFrame =
-    DedupStore.minusTombstones(spark.table(table),
-      DedupStore.readTombstones(spark,
-        DedupStore.bucketedTombstonesDir(spark, table),
-        bucketedSchemaOf(form)), Seq("content_hash"))
-
-  /** [[newChunkUnique]] against the bucketed store table — zero
-    * exchanges on the store side of the chunk semi-join.
-    */
-  def newChunkUniqueBucketed(docs: DataFrame, textCol: String,
-      idCol: String, table: String,
-      maxDupShare: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val form = storedHashFormBucketed(spark, table)
-    flagSurvivors(docs, textCol, idCol,
-      chunks(docs, textCol, idCol, form)
-        .join(storeTableBucketed(spark, table, form)
-          .withColumnRenamed("content_hash", "h"), Seq("h"), "left_semi"),
-      maxDupShare, form)
-  }
-
-  /** [[recordChunks]] into the bucketed store table: one bucketed
-    * append of the batch's distinct chunk hashes.
-    */
-  def recordChunksBucketed(docs: DataFrame, textCol: String,
-      idCol: String, table: String, hashForm: String = ""): Unit = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
+      layout: StoreLayout, hashForm: String = ""): Unit = {
     val form = HashForm.resolve(hashForm,
-      storedHashFormBucketed(spark, table))
-    commitHashFormBucketed(spark, table, form)
-    val b = DedupStore.bucketsOf(spark, table)
-    val mat = chunks(docs, textCol, idCol, form)
-      .select(col("h").as("content_hash"))
-      .distinct().localCheckpoint(true)
-    try mat.write.mode(SaveMode.Append)
-      .bucketBy(b, "content_hash").sortBy("content_hash")
-      .format("parquet").saveAsTable(table)
-    finally mat.unpersist()
+      storedHashForm(docs.sparkSession, layout))
+    layout.record(spec, form, 1,
+      chunks(docs, textCol, idCol, form).select("h"))
   }
-
-  /** [[newChunkUniqueBucketed]] accelerated by the table's `_bloom`
-    * sidecar, preserving the zero-exchange property (the SpanStore
-    * split: bloom-hit chunks semi-join the catalog table, bloom-miss
-    * chunks semi-join just the broadcast residual files).
-    */
-  def newChunkUniqueBucketedWithBloom(docs: DataFrame, textCol: String,
-      idCol: String, table: String,
-      maxDupShare: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val form = storedHashFormBucketed(spark, table)
-    val loc = DedupStore.tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = new org.apache.hadoop.fs.Path(loc, "_bloom")
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newChunkUniqueBucketed(docs, textCol, idCol, table, maxDupShare)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = DedupStore.storeDataFiles(fs, loc)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newChunkUniqueBucketed(docs, textCol, idCol, table,
-            maxDupShare)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val tomb = DedupStore.readTombstones(spark,
-          DedupStore.bucketedTombstonesDir(spark, table),
-          bucketedSchemaOf(form))
-        val c = chunks(docs, textCol, idCol, form)
-        val hitMatched = c.filter(mightContain(col("h").cast("string")))
-          .join(storeTableBucketed(spark, table, form)
-            .withColumnRenamed("content_hash", "h"), Seq("h"), "left_semi")
-        val matchedChunks =
-          if (residual.isEmpty) hitMatched
-          else hitMatched.unionByName(
-            c.filter(!mightContain(col("h").cast("string")))
-              .join(broadcast(DedupStore.minusTombstones(
-                spark.read.schema(bucketedSchemaOf(form))
-                  .parquet(residual.map(_.toString): _*), tomb,
-                Seq("content_hash"))
-                .withColumnRenamed("content_hash", "h")),
-                Seq("h"), "left_semi"))
-        flagSurvivors(docs, textCol, idCol, matchedChunks, maxDupShare,
-          form)
-    }
-  }
-
-  /** Bloom sidecar for the bucketed table — DedupStore's, verbatim. */
-  def buildBloomSidecarBucketed(spark: SparkSession, table: String,
-      fpp: Double = 0.01, numShards: Int = 0): Long =
-    DedupStore.buildBloomSidecarBucketed(spark, table, fpp, numShards)
-
-  /** [[compactStore]] for the bucketed table — the shared staging-
-    * table swap with this store's own tombstone application.
-    */
-  def compactBucketedStore(spark: SparkSession,
-      table: String): (Long, Long) =
-    BucketedStore.compact(spark, table, "content_hash",
-      df => DedupStore.minusTombstones(df,
-        DedupStore.readTombstones(spark,
-          DedupStore.bucketedTombstonesDir(spark, table),
-          bucketedSchemaOf(storedHashFormBucketed(spark, table))),
-        Seq("content_hash")))
 }

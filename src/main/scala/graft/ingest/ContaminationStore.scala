@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -38,23 +38,23 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Scale posture (100 TB): a held-out benchmark set is KB–GB of grams
   * at ANY corpus scale — the store side of the probe join is
-  * broadcast whenever it fits [[DedupStore.tombstoneBroadcastCeiling]]
+  * broadcast whenever it fits [[StoreLayout.tombstoneBroadcastCeiling]]
   * (size-gated, never forced: an over-ceiling store degrades to a
   * shuffle join instead of an OOM), so the batch's gram stream
   * usually never shuffles to be gated. The Bloom sidecar prunes the
   * gram stream BEFORE even that: on a mostly-clean batch nearly every
   * gram is a bloom miss, and a miss is proof it is not benchmark
-  * text. No bucketed-catalog form is provided BY DESIGN — bucketing
+  * text. The store is [[StoreLayout.Path]]-only BY DESIGN — bucketing
   * pays off when the store side is too big to broadcast and too hot
   * to shuffle, which contradicts this store's fixed-benchmark sizing;
   * registering a corpus-sized "benchmark" is a usage error, not a
   * layout problem.
   */
-object ContaminationStore {
-
-  private val storeSchema = StructType(Seq(
-    StructField("g", LongType),
-    StructField("bench_id", LongType)))
+object ContaminationStore extends KeyStore[StoreLayout.Path](KeySpec(
+    "ContaminationStore", _ => StructType(Seq(
+      StructField("g", LongType),
+      StructField("bench_id", LongType))),
+    "g")) {
 
   /** Distinct (doc_id, g) gram rows of `docs` via q53's shingle
     * kernel. The explode(array(...)) Generate is the family's kernel
@@ -72,187 +72,78 @@ object ContaminationStore {
       .select(col("doc_id"), explode(col("shd")).as("g"))
   }
 
-  /** The store's live rows: data files minus retraction tombstones
-    * (row-identity keys — a tombstone removes exactly the (g, bench)
-    * pairs a retired benchmark recorded, leaving grams other
-    * benchmarks share still armed).
+  /** `side` of a probe join over the store, broadcast while the
+    * store's files fit [[StoreLayout.tombstoneBroadcastCeiling]] —
+    * size-gated, never forced.
     */
-  private def storeGrams(spark: SparkSession,
-      storePath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val base =
-      if (fs.exists(p)) spark.read.schema(storeSchema).parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storeSchema)
-    DedupStore.minusTombstones(base,
-      DedupStore.readTombstones(spark,
-        DedupStore.tombstonesPath(storePath), storeSchema),
-      Seq("g", "bench_id"))
+  private def gated(store: StoreLayout.Path, side: DataFrame): DataFrame = {
+    val spark = side.sparkSession
+    StoreLayout.gatedHint(spark, side, store.dataBytes(spark))
   }
 
-  /** Store side of a probe join, broadcast when the backing bytes fit
-    * the shared ceiling (class doc: benchmark stores are broadcast-
-    * scale by design, but the hint is size-GATED, never forced).
-    */
-  private def gatedStore(spark: SparkSession,
-      storePath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    DedupStore.gatedHint(spark, storeGrams(spark, storePath),
-      DedupStore.storeDataFileStatuses(fs, p).map(_.getLen).sum)
-  }
+  private def benchRows(bench: DataFrame, textCol: String,
+      idCol: String): DataFrame =
+    grams(bench, textCol, idCol)
+      .select(col("g"), col("doc_id").as("bench_id"))
 
   /** Register benchmark documents: append their distinct
     * (gram, bench_id) rows. Idempotent for every probe (duplicates
     * only widen countDISTINCT inputs; [[compactStore]] reclaims them).
-    * The pre-append localCheckpoint pins the rows before the append
-    * job could scan the directory it extends (the family's self-scan
-    * guard).
     */
   def recordBenchmark(bench: DataFrame, textCol: String, idCol: String,
-      storePath: String): Unit = {
-    val rows = grams(bench, textCol, idCol)
-      .select(col("g"), col("doc_id").as("bench_id"))
-      .distinct().localCheckpoint(true)
-    try rows.write.mode(SaveMode.Append).parquet(storePath)
-    finally rows.unpersist()
-  }
+      store: StoreLayout.Path): Unit =
+    store.record(spec, HashForm.Md5, 1, benchRows(bench, textCol, idCol))
 
   /** The q53 overlap audit THROUGH the store: for each probed document
     * sharing at least one gram with the registered benchmark set,
     * (doc_id, n_shared_grams, n_bench_docs) — countDISTINCT over the
     * gram join, exactly the in-query q53 arithmetic, so the q146
     * oracle replays this result from the raw tables and a drift
-    * anywhere in the record/probe path breaks the hash.
+    * anywhere in the record/probe path breaks the hash. The live store
+    * (data minus tombstones: a tombstone removes exactly the (g, bench)
+    * pairs a retired benchmark recorded, leaving grams other benchmarks
+    * share still armed) rides a size-gated broadcast.
     */
   def overlap(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String): DataFrame =
+      store: StoreLayout.Path): DataFrame =
     grams(docs, textCol, idCol)
-      .join(gatedStore(docs.sparkSession, storePath), Seq("g"))
+      .join(gated(store, store.live(docs.sparkSession, spec, HashForm.Md5)),
+        Seq("g"))
       .groupBy("doc_id")
       .agg(countDistinct(col("g")).as("n_shared_grams"),
         countDistinct(col("bench_id")).as("n_bench_docs"))
-
-  /** Ids of `docs` sharing ≥ `minSharedGrams` distinct grams with the
-    * benchmark set — the flag set of the gate, factored so the plain
-    * and Bloom probes threshold identically. `matched` is the
-    * (doc_id, g) stream of batch grams found in the store.
-    */
-  private def flagged(matched: DataFrame, minSharedGrams: Int): DataFrame =
-    matched.groupBy(col("doc_id").as("__c_id"))
-      .agg(countDistinct(col("g")).as("n"))
-      .filter(col("n") >= minSharedGrams)
-      .select("__c_id")
 
   /** Rows of `docs` NOT contaminated: shingle once, semi-join the
     * store on the gram hash, flag documents with ≥ `minSharedGrams`
     * distinct shared grams, null-safe anti-join the flagged ids (null
     * ids are one identity, the family contract). Documents shorter
     * than 3 tokens have no grams and always survive — a benchmark
-    * cannot be leaked by text shorter than its gram unit.
+    * cannot be leaked by text shorter than its gram unit. With a
+    * sidecar the bloom legs are disjoint, so their union feeds the
+    * same distinct-gram threshold.
     */
   def newClean(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, minSharedGrams: Int = 1): DataFrame = {
+      store: StoreLayout.Path, minSharedGrams: Int = 1): DataFrame = {
     require(minSharedGrams >= 1,
       s"minSharedGrams must be >= 1, got $minSharedGrams")
-    val matched = grams(docs, textCol, idCol)
-      .join(gatedStore(docs.sparkSession, storePath)
-        .select("g").distinct(), Seq("g"), "left_semi")
-    anti(docs, idCol, flagged(matched, minSharedGrams))
-  }
-
-  private def anti(docs: DataFrame, idCol: String,
-      flaggedIds: DataFrame): DataFrame =
-    docs.join(flaggedIds, docs(idCol) <=> flaggedIds("__c_id"),
-      "left_anti")
-
-  /** [[newClean]] accelerated by the Bloom sidecar, split DISJOINT on
-    * the bloom predicate (the family shape): bloom-HIT grams semi-join
-    * the current store files, bloom-MISS grams can only match
-    * post-sidecar appends and semi-join just the residual files
-    * (broadcast — residuals stay small between rebuilds). The legs are
-    * disjoint so their union feeds the same distinct-gram threshold
-    * the plain path applies. No sidecar (or no surviving covered
-    * file) falls back to [[newClean]].
-    */
-  def newCleanWithBloom(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, minSharedGrams: Int = 1): DataFrame = {
-    require(minSharedGrams >= 1,
-      s"minSharedGrams must be >= 1, got $minSharedGrams")
-    val spark = docs.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = DedupStore.sidecarPath(storePath)
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newClean(docs, textCol, idCol, storePath, minSharedGrams)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = DedupStore.storeDataFiles(fs, store)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newClean(docs, textCol, idCol, storePath, minSharedGrams)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val tomb = DedupStore.readTombstones(spark,
-          DedupStore.tombstonesPath(storePath), storeSchema)
-        def live(files: Seq[org.apache.hadoop.fs.Path]): DataFrame =
-          DedupStore.minusTombstones(
-            spark.read.schema(storeSchema)
-              .parquet(files.map(_.toString): _*), tomb,
-            Seq("g", "bench_id"))
-        val w = grams(docs, textCol, idCol)
-        // the probe expression hashes STRINGS; gram longs cast to
-        // their decimal string — bit-identical to the sidecar build
-        val hit = w.filter(mightContain(col("g").cast("string")))
-          .join(live(current).select("g").distinct(), Seq("g"),
-            "left_semi")
-        val matched =
-          if (residual.isEmpty) hit
-          else hit.unionByName(
-            w.filter(!mightContain(col("g").cast("string")))
-              .join(broadcast(live(residual).select("g").distinct()),
-                Seq("g"), "left_semi"))
-        anti(docs, idCol, flagged(matched, minSharedGrams))
-    }
+    val flagged = store.probe(spec, HashForm.Md5,
+        grams(docs, textCol, idCol))(
+        (g, s) => g.join(gated(store, s.select("g").distinct()), Seq("g"),
+          "left_semi"))
+      .groupBy(col("doc_id").as("__c_id"))
+      .agg(countDistinct(col("g")).as("n"))
+      .filter(col("n") >= minSharedGrams)
+      .select("__c_id")
+    docs.join(flagged, docs(idCol) <=> flagged("__c_id"), "left_anti")
   }
 
   /** Phase 1 of retiring a benchmark: tombstone its (gram, bench_id)
     * rows — content-addressed, the SAME derivation recording used, so
-    * the tombstones cover exactly what registration stored. Probes
-    * subtract immediately; [[compactStore]] drops the rows physically.
-    * A gram two benchmarks share stays armed through the OTHER
-    * benchmark's surviving rows — retraction never over-opens the
-    * gate.
+    * the tombstones cover exactly what registration stored. A gram two
+    * benchmarks share stays armed through the OTHER benchmark's
+    * surviving rows — retraction never over-opens the gate.
     */
   def retractBenchmark(bench: DataFrame, textCol: String, idCol: String,
-      storePath: String): Unit =
-    DedupStore.appendTombstones(
-      grams(bench, textCol, idCol)
-        .select(col("g"), col("doc_id").as("bench_id")),
-      DedupStore.tombstonesPath(storePath))
-
-  /** Maintenance: one row per (g, bench_id) — reclaims re-registered
-    * duplicates and physically applies tombstones, the family's shared
-    * phase-2 machinery.
-    */
-  def compactStore(spark: SparkSession, storePath: String,
-      targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return (0, 0)
-    DedupStore.compactApplyingTombstones(spark, storePath, storeSchema,
-      Seq("g", "bench_id"), targetFileBytes)
-  }
-
-  /** Build/replace the store's Bloom sidecar over the gram hash —
-    * DedupStore's sidecar machinery (same on-disk format). Rebuild on
-    * the compaction schedule (i.e. after benchmark registrations),
-    * as with the siblings.
-    */
-  def buildBloomSidecar(spark: SparkSession, storePath: String,
-      fpp: Double = 0.01, numShards: Int = 0): Long =
-    DedupStore.buildPathSidecar(spark, storePath, storeSchema, "g",
-      fpp, numShards)
+      store: StoreLayout.Path): Unit =
+    store.retract(spec, benchRows(bench, textCol, idCol))
 }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
@@ -18,43 +18,21 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * PATH-read parquet store like this one always plans a store-side
   * shuffle, which is still one narrow (hash-only) column — but at
   * 100 TB the store's row count dwarfs every batch, so re-shuffling it
-  * per batch is the dominant cost. The BUCKETED form fixes that:
-  * [[ensureBucketedStore]]/[[newUniqueBucketed]]/[[recordHashesBucketed]]
-  * keep the store in the session catalog as a parquet table bucketed by
-  * content_hash; the bucketed scan satisfies the anti-join's required
-  * hash distribution straight off the files, so ONLY the (small) batch
-  * side shuffles — zero exchange on the store side, at any store size
-  * (LayoutSpec pins the plan).
+  * per batch is the dominant cost. The [[StoreLayout.Bucketed]] layout
+  * fixes that: the store lives in the session catalog as a parquet table
+  * bucketed by content_hash; the bucketed scan satisfies the anti-join's
+  * required hash distribution straight off the files, so ONLY the
+  * (small) batch side shuffles — zero exchange on the store side, at
+  * any store size (LayoutSpec pins the plan).
   *
-  * Two-phase by design: [[newUnique]] answers "which rows are new";
-  * [[recordHashes]] marks them seen. Callers persist the survivors
-  * FIRST and record hashes after — a crash between the two re-delivers
-  * (at-least-once) instead of silently dropping a batch that was never
-  * persisted (the failure mode of a fused check-and-record).
+  * Two-phase by design ([[KeyStore]]): [[newUnique]] answers "which
+  * rows are new"; [[recordHashes]] marks them seen — never a fused
+  * check-and-record, which would drop a batch that was never persisted.
   */
-object DedupStore {
-
-  private[ingest] val storeSchema =
-    StructType(Seq(StructField("content_hash", StringType)))
-
-  private[graft] val Md5Form = HashForm.Md5
-  private[graft] val XxForm = HashForm.Xx
-
-  /** Store shape per persisted hash form ([[HashForm]]): the 32-char
-    * md5 string (the oracle-checked default) or the 8-byte xxhash64
-    * long (4× less store and exchange per document — the 100 TB form).
-    */
-  private def schemaOf(form: String): StructType =
-    if (form == HashForm.Xx)
-      StructType(Seq(StructField("content_hash", LongType)))
-    else storeSchema
-
-  /** The hash form the path store was recorded with (md5 if never
-    * declared). Probes self-configure through this; only the record
-    * steps take an explicit form (to declare it on first append).
-    */
-  def storedHashForm(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): String = HashForm.storedPath(spark, storePath)
+object DedupStore extends KeyStore[StoreLayout](KeySpec("DedupStore",
+    form => StructType(Seq(StructField("content_hash",
+      if (form == HashForm.Xx) LongType else StringType))),
+    "content_hash", formProp = "graft.dedup.hashform")) {
 
   /** Hash column the store keys on — ONE definition with q27/q80
     * (LlmPipeline.contentHash / contentHash64): md5 (or xxhash64, per
@@ -71,23 +49,8 @@ object DedupStore {
     else graft.queries.LlmPipeline.contentHash(c)
   }
 
-  private def storeHashes(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, form: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val schema = schemaOf(form)
-    // explicit schema: a store dir that exists but holds no readable
-    // data files yet (crashed first append = only _temporary/_SUCCESS)
-    // must degrade to an EMPTY store, not an un-inferable-schema error
-    // that wedges every later batch
-    val base =
-      if (fs.exists(p)) spark.read.schema(schema).parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    minusTombstones(base,
-      readTombstones(spark, tombstonesPath(storePath), schema),
-      Seq("content_hash"))
-  }
+  private def antiJoin(rows: DataFrame, store: DataFrame): DataFrame =
+    rows.join(store, Seq("content_hash"), "left_anti")
 
   /** Rows of `docs` never seen before, with the computed `content_hash`
     * as an extra output column (so [[recordHashes]] — and any audit —
@@ -101,16 +64,14 @@ object DedupStore {
     * can never silently miss an xxh64 store with md5 strings.
     */
   def newUnique(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String): DataFrame = {
-    val form = storedHashForm(docs.sparkSession, storePath)
-    keepers(docs, textCol, idCol, form)
-      .join(storeHashes(docs.sparkSession, storePath, form),
-        Seq("content_hash"), "left_anti")
+      layout: StoreLayout): DataFrame = {
+    val form = storedHashForm(docs.sparkSession, layout)
+    layout.probe(spec, form, keepers(docs, textCol, idCol, form))(antiJoin)
+      // the USING-key join leads with the hash, whichever legs ran
+      .select(("content_hash" +: docs.columns.toSeq).map(col): _*)
   }
 
-  /** Within-batch dedup shared by both store forms: hash every row,
-    * keep one row per hash.
-    */
+  /** Within-batch dedup: hash every row, keep one row per hash. */
   private def keepers(docs: DataFrame, textCol: String,
       idCol: String, form: String): DataFrame = {
     for (reserved <- Seq("content_hash", "__rn"))
@@ -145,88 +106,13 @@ object DedupStore {
     * compaction/sidecar likewise.
     */
   def newUnseen(docs: DataFrame, keyCol: String,
-      storePath: String): DataFrame = {
+      layout: StoreLayout): DataFrame = {
     require(!docs.columns.exists(_.equalsIgnoreCase("content_hash")),
       "DedupStore reserves the column name content_hash")
-    val spark = docs.sparkSession
-    val form = storedHashForm(spark, storePath)
-    docs.withColumn("content_hash", hashOf(keyCol, form))
-      .join(storeHashes(spark, storePath, form), Seq("content_hash"),
-        "left_anti")
+    val form = storedHashForm(docs.sparkSession, layout)
+    layout.probe(spec, form,
+        docs.withColumn("content_hash", hashOf(keyCol, form)))(antiJoin)
       .drop("content_hash")
-  }
-
-  /** [[newUnseen]] accelerated by the Bloom sidecar — the
-    * [[newUniqueWithBloom]] split without the keeper collapse:
-    * bloom-MISS rows are proven unlisted against the covered files
-    * and only anti-join the residual; bloom-HIT rows anti-join the
-    * full current store. No sidecar (or no surviving covered file)
-    * falls back to the plain probe.
-    */
-  def newUnseenWithBloom(docs: DataFrame, keyCol: String,
-      storePath: String): DataFrame = {
-    require(!docs.columns.exists(_.equalsIgnoreCase("content_hash")),
-      "DedupStore reserves the column name content_hash")
-    bloomSplitAnti(docs.sparkSession, storePath)(form =>
-        docs.withColumn("content_hash", hashOf(keyCol, form)))
-      .map(_.drop("content_hash"))
-      .getOrElse(newUnseen(docs, keyCol, storePath))
-  }
-
-  /** The path-form bloom-split ANTI-probe core shared by
-    * [[newUniqueWithBloom]] and [[newUnseenWithBloom]] (one skeleton —
-    * a fix to the split's tombstone/residual handling reaches every
-    * probe): resolve the sidecar + a usable covered set, hash the
-    * batch via `hashedOf(form)` (a `content_hash`-carrying frame),
-    * then bloom-MISS rows are proven absent from covered files and
-    * anti-join only the residual, while bloom-HIT rows anti-join the
-    * full current store — live tombstones subtracted from every
-    * store-side frame. Returns None when there is no sidecar or no
-    * covered file survives (caller falls back to its plain probe).
-    */
-  private def bloomSplitAnti(
-      spark: org.apache.spark.sql.SparkSession, storePath: String)(
-      hashedOf: String => DataFrame): Option[DataFrame] = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    readSidecar(fs, sidecarPath(storePath)).flatMap(sc =>
-        probeFor(spark, fs, sidecarPath(storePath), sc).map((sc, _)))
-      .flatMap { case (sc, mightContain) =>
-        val coveredNames = sc.covered
-        val current = storeDataFiles(fs, store)
-        val covered = current.filter(f => coveredNames.contains(f.getName))
-        if (covered.isEmpty) None
-        else {
-          val residual =
-            current.filterNot(f => coveredNames.contains(f.getName))
-          val form = storedHashForm(spark, storePath)
-          val schema = schemaOf(form)
-          val hashed = hashedOf(form)
-          // the probe expression hashes STRINGS; the xx64 form's long
-          // hashes cast to their decimal string — bit-identical to
-          // what the sidecar build cast when it recorded them
-          val probeKey = col("content_hash").cast("string")
-          // live tombstones subtract from EVERY store-side frame (the
-          // retraction contract) — covered and residual alike
-          val tomb = readTombstones(spark, tombstonesPath(storePath),
-            schema)
-          val coveredDf = minusTombstones(
-            spark.read.schema(schema)
-              .parquet(covered.map(_.toString): _*), tomb,
-            Seq("content_hash"))
-          val maybe = hashed.filter(mightContain(probeKey))
-            .join(coveredDf, Seq("content_hash"), "left_anti")
-          val unioned = hashed.filter(!mightContain(probeKey))
-            .unionByName(maybe)
-          Some(
-            if (residual.isEmpty) unioned
-            else unioned.join(
-              minusTombstones(spark.read.schema(schema)
-                .parquet(residual.map(_.toString): _*), tomb,
-                Seq("content_hash")),
-              Seq("content_hash"), "left_anti"))
-        }
-      }
   }
 
   /** Mark `docs` seen: append their content hashes to the store. Call
@@ -234,25 +120,15 @@ object DedupStore {
     * on the persisted read-back. Reuses a `content_hash` column when
     * the frame carries one ([[newUnique]]'s output does) — recomputing
     * from `textCol` would re-run the caller's whole upstream plan,
-    * including the store scan, a second time. One parquet append of a
+    * including the store scan, a second time. One append of a
     * hash-only projection — bytes written scale with the batch, never
     * the store.
     */
-  def recordHashes(docs: DataFrame, textCol: String,
-      storePath: String, hashForm: String = ""): Unit = {
-    val spark = docs.sparkSession
-    val form = HashForm.resolve(hashForm, storedHashForm(spark, storePath))
-    HashForm.commitPath(spark, storePath, form, "DedupStore")
-    val hashes = hashProjection(docs, textCol, form)
-    // materialize BEFORE the append: a caller that passes newUnique's
-    // lazy output straight in has storePath in its plan, and an append
-    // whose input plan scans the directory being appended would bank on
-    // the file listing resolving before new files land. The checkpoint
-    // pins the batch's hashes first, so the store scan can never
-    // overlap the store append.
-    val mat = hashes.distinct().localCheckpoint(true)
-    try mat.write.mode(SaveMode.Append).parquet(storePath)
-    finally mat.unpersist()
+  def recordHashes(docs: DataFrame, textCol: String, layout: StoreLayout,
+      hashForm: String = ""): Unit = {
+    val form = HashForm.resolve(hashForm,
+      storedHashForm(docs.sparkSession, layout))
+    layout.record(spec, form, 1, hashProjection(docs, textCol, form))
   }
 
   /** The batch's hash projection in the store's `form`, reusing a
@@ -265,33 +141,34 @@ object DedupStore {
       form: String): DataFrame =
     if (docs.columns.contains("content_hash")) {
       val t = docs.schema("content_hash").dataType
-      require(t == schemaOf(form).head.dataType,
+      require(t == spec.schemaOf(form).head.dataType,
         s"carried content_hash has type $t but the store's hash form " +
           s"is $form — pass the probe output of a matching store, or " +
           "drop the column to recompute from the text")
       docs.select("content_hash")
     } else docs.select(hashOf(textCol, form).as("content_hash"))
 
-  /** [[recordHashes]] without the localCheckpoint: stages the batch's
-    * hashes to a sibling temp directory (a durable parquet write — no
-    * executor-memory blocks to lose), then MOVES the staged data files
-    * into the store with per-file atomic renames. Use on long-running
-    * clusters where executor loss / dynamic-allocation decommission
-    * between checkpoint and append is a real event; the extra cost is
-    * one staged write of a hash-only projection. The staged write never
-    * scans the store directory it appends to (different path), so the
-    * self-scan race recordHashes checkpoints around cannot occur. A
-    * crash before any rename loses nothing (at-least-once re-delivery);
-    * a crash mid-rename re-delivers the remaining hashes as duplicates,
-    * which [[compactStore]] reclaims — same contract as recordHashes.
-    * Staged part-file names carry the write job's UUID, so they cannot
-    * collide with existing store files.
+  /** [[recordHashes]] without the localCheckpoint, for a path store:
+    * stages the batch's hashes to a sibling temp directory (a durable
+    * parquet write — no executor-memory blocks to lose), then MOVES the
+    * staged data files into the store with per-file atomic renames. Use
+    * on long-running clusters where executor loss / dynamic-allocation
+    * decommission between checkpoint and append is a real event; the
+    * extra cost is one staged write of a hash-only projection. The
+    * staged write never scans the store directory it appends to
+    * (different path), so the self-scan race recordHashes checkpoints
+    * around cannot occur. A crash before any rename loses nothing
+    * (at-least-once re-delivery); a crash mid-rename re-delivers the
+    * remaining hashes as duplicates, which [[compactStore]] reclaims —
+    * same contract as recordHashes. Staged part-file names carry the
+    * write job's UUID, so they cannot collide with existing store files.
     */
   def recordHashesStaged(docs: DataFrame, textCol: String,
       storePath: String, hashForm: String = ""): Unit = {
     val spark = docs.sparkSession
-    val form = HashForm.resolve(hashForm, storedHashForm(spark, storePath))
-    HashForm.commitPath(spark, storePath, form, "DedupStore")
+    val layout = StoreLayout.Path(storePath)
+    val form = HashForm.resolve(hashForm, storedHashForm(spark, layout))
+    layout.commitMeta(spark, spec, form, 1)
     val hashes = hashProjection(docs, textCol, form)
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
@@ -310,186 +187,15 @@ object DedupStore {
     } finally fs.delete(stage, true)
   }
 
-  /** Maintenance: rewrite the store to one row per hash. At-least-once
-    * re-delivery after a crash (the two-phase contract above) re-appends
-    * hashes the store already holds — the anti-join stays CORRECT, but
-    * without this pass the store's row count (and so its scan cost and
-    * shuffle width) grows past the unique-hash count forever, and
-    * [[graft.layout.Layout.compact]] alone merges files without
-    * dropping the duplicate rows. Same crash-safe atomic directory swap
-    * as compact (shared machinery); schedule it with the file-count
-    * compaction, e.g. nightly. Returns (filesBefore, filesAfter);
-    * missing/never-written store is a no-op.
-    */
-  def compactStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return (0, 0)
-    compactApplyingTombstones(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)),
-      Seq("content_hash"), targetFileBytes)
-  }
-
-  // ── Retraction (takedown) ──────────────────────────────────────────
-  //
-  // The first lifecycle op a production corpus store needs beyond
-  // append: REMOVAL (licensing, GDPR, opt-out). Two-phase, mirroring
-  // the record side's contract:
-  //
-  //  phase 1 — retract() appends the keys to a TOMBSTONE set (path
-  //    form: the sibling `<store>.tombstones` directory; bucketed
-  //    form: `_tombstones/` inside the table directory, underscore-
-  //    prefixed so the table scan ignores it). The durable append is
-  //    the COMMIT POINT: every probe subtracts live tombstones from
-  //    the store side of its join, so a retracted key reports
-  //    never-seen from the next query on — no rewrite needed first.
-  //  phase 2 — the next compaction physically drops tombstoned rows
-  //    (the rewrite's transform anti-joins a SNAPSHOT of the tombstone
-  //    files) and then clears exactly that snapshot (path form) or
-  //    drops the old table directory wholesale (bucketed form's swap).
-  //
-  // Crash anywhere between the phases re-applies: tombstones are
-  // durable, probes keep subtracting, the next compaction drops the
-  // rows again (an anti-join against rows already gone is a no-op).
-  // Tombstones appended DURING a compaction survive it (the snapshot
-  // bounds what is cleared). RE-ADMISSION after a retraction needs a
-  // compaction in between: a key re-recorded while its tombstone is
-  // still pending stays masked until the compaction clears it (single
-  // maintenance writer, the family's standing assumption).
-  //
-  // Bloom sidecars need no coordination: a sidecar may still cover
-  // retracted keys, but a bloom "maybe" only routes rows into the
-  // exact join — which subtracts tombstones — so the answer is
-  // already right; the scheduled rebuild tightens the filter.
-
-  private[graft] def tombstonesPath(storePath: String) =
-    new org.apache.hadoop.fs.Path(storePath + ".tombstones")
-
-  private[graft] def bucketedTombstonesDir(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      BucketedStore.tableLocation(spark, table), "_tombstones")
-
-  /** Ceiling (in on-disk parquet bytes) up to which a tombstone /
-    * retraction backlog rides a broadcast into its anti-join. Takedown
-    * lists are small by nature, but NOTHING used to enforce it: a
-    * runaway retraction feed left uncompacted would eventually OOM the
-    * driver through the explicit hint. Above the ceiling the probe
-    * falls back to a plain (shuffle) anti-join — for the BUCKETED
-    * stores the store side still plans zero exchanges (the bucketed
-    * scan's hash distribution satisfies the join on its bucket-column
-    * prefix; only the tombstone side shuffles), so the fallback costs
-    * one small-side exchange, never a store re-shuffle. A backlog near
-    * the ceiling is also the operational signal to run the compaction
-    * that clears it. Operators can tune via the session conf
-    * `graft.tombstone.broadcast.maxBytes`.
-    */
-  private[graft] val TombstoneBroadcastMaxBytes: Long = 64L << 20
-
-  private[graft] def tombstoneBroadcastCeiling(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.tombstone.broadcast.maxBytes")
-      .flatMap(_.toLongOption).getOrElse(TombstoneBroadcastMaxBytes)
-
-  /** Wrap a tombstone frame in the broadcast hint only while its
-    * backing files fit the ceiling — ONE place deciding how takedown
-    * sets enter their anti-joins.
-    */
-  private[graft] def gatedHint(spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame, backingBytes: Long): DataFrame =
-    if (backingBytes <= tombstoneBroadcastCeiling(spark)) broadcast(df)
-    else df
-
-  /** The live tombstone frame under `dir`, or None when none exist.
-    * Read by explicit file list so a concurrent phase-2 clear (which
-    * deletes a snapshot of files) cannot race the directory listing.
-    * The frame arrives pre-wrapped by [[gatedHint]]: broadcast while
-    * the backlog is takedown-list-sized, plain above the ceiling.
-    */
-  private[graft] def readTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: org.apache.hadoop.fs.Path,
-      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = storeDataFileStatuses(fs, dir)
-    if (files.isEmpty) None
-    else Some(gatedHint(spark,
-      spark.read.schema(schema)
-        .parquet(files.map(_.getPath.toString): _*),
-      files.map(_.getLen).sum))
-  }
-
-  /** Phase 1: durably append `rows` (already projected to the store's
-    * key schema) to the tombstone set at `dir`. The pre-append
-    * localCheckpoint is the family's self-scan guard.
-    */
-  private[graft] def appendTombstones(rows: DataFrame,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    val mat = rows.distinct().localCheckpoint(true)
-    try mat.write.mode(SaveMode.Append).parquet(dir.toString)
-    finally mat.unpersist()
-  }
-
-  /** Store frame minus live tombstones. The tombstone frame carries
-    * its join-strategy hint from [[gatedHint]] (applied where it was
-    * read, the only place that knows the backlog's size): broadcast
-    * while takedown-list-sized — which makes the store side's
-    * distribution pass through the anti-join STRUCTURALLY, so the
-    * bucketed forms keep their zero-exchange property under any
-    * broadcast-threshold configuration (LayoutSpec plan-pins it with
-    * auto-broadcast disabled) — and a plain shuffle anti-join above
-    * the [[TombstoneBroadcastMaxBytes]] ceiling, where a broadcast
-    * would OOM the driver (the bucketed store side STILL plans zero
-    * exchanges; see the ceiling's scaladoc).
-    */
-  private[ingest] def minusTombstones(store: DataFrame,
-      tomb: Option[DataFrame], keys: Seq[String]): DataFrame =
-    tomb.fold(store)(t => store.join(t, keys, "left_anti"))
-
-  /** Phase 2 core for the path stores: rewrite to distinct rows minus
-    * a snapshot of the tombstone files, then clear exactly that
-    * snapshot. Shared across the family (schema/keys parameterized).
-    */
-  private[ingest] def compactApplyingTombstones(
-      spark: org.apache.spark.sql.SparkSession, storePath: String,
-      schema: org.apache.spark.sql.types.StructType, keys: Seq[String],
-      targetFileBytes: Long): (Int, Int) = {
-    val tombDir = tombstonesPath(storePath)
-    val fs = tombDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val snapStatuses = storeDataFileStatuses(fs, tombDir)
-    val snapshot = snapStatuses.map(_.getPath)
-    val tomb = if (snapshot.isEmpty) None
-      else Some(gatedHint(spark,
-        spark.read.schema(schema).parquet(snapshot.map(_.toString): _*),
-        snapStatuses.map(_.getLen).sum))
-    val (b, a, committed) = graft.layout.Layout.rewriteInPlaceChecked(
-      spark, storePath,
-      targetFileBytes)(df => minusTombstones(df.distinct(), tomb, keys))
-    // clear ONLY the snapshot (tombstones appended mid-compaction stay
-    // live for the next one), and ONLY when the swap actually
-    // installed: the rewrite's concurrent-appender guard can discard
-    // tmp and leave the store untouched, and clearing the snapshot on
-    // that abort would silently undo a durably-committed takedown —
-    // the rows stay physically present with nothing masking them. On
-    // an uncommitted pass the tombstones remain live (probes keep
-    // subtracting) for the next compaction to apply. A crash before
-    // these deletes leaves applied tombstones in place — harmless
-    // (subtracting absent rows) until the next compaction clears them.
-    if (committed) snapshot.foreach(f => fs.delete(f, false))
-    (b, a)
-  }
-
   /** Retract documents by content: phase 1 of the takedown protocol
-    * (class comment above) for the path store. The batch's hashes are
-    * computed with the store's own derivation, so retract-by-text is
-    * exact against what record-by-text stored.
+    * ([[StoreLayout]]). The batch's hashes are computed with the
+    * store's own derivation, so retract-by-text is exact against what
+    * record-by-text stored.
     */
-  def retract(docs: DataFrame, textCol: String, storePath: String): Unit =
+  def retract(docs: DataFrame, textCol: String, layout: StoreLayout): Unit =
     retractHashes(docs.select(
-      hashOf(textCol, storedHashForm(docs.sparkSession, storePath))
-        .as("content_hash")), storePath)
+      hashOf(textCol, storedHashForm(docs.sparkSession, layout))
+        .as("content_hash")), layout)
 
   /** Retract by precomputed hash (`content_hash` column) — the form a
     * takedown list arrives in when the original text is itself no
@@ -497,438 +203,12 @@ object DedupStore {
     * persisted hash form (a string tombstone can never mask an xxh64
     * store's long rows — refused loudly, like the record side).
     */
-  def retractHashes(hashes: DataFrame, storePath: String): Unit = {
-    requireFormType(hashes,
-      storedHashForm(hashes.sparkSession, storePath))
-    appendTombstones(hashes.select("content_hash"),
-      tombstonesPath(storePath))
-  }
-
-  private def requireFormType(hashes: DataFrame, form: String): Unit = {
+  def retractHashes(hashes: DataFrame, layout: StoreLayout): Unit = {
+    val form = storedHashForm(hashes.sparkSession, layout)
     val t = hashes.schema("content_hash").dataType
-    require(t == schemaOf(form).head.dataType,
+    require(t == spec.schemaOf(form).head.dataType,
       s"content_hash has type $t but the store's hash form is $form — " +
         "tombstones of the other form can never match the stored rows")
+    layout.retract(spec, hashes.select("content_hash"))
   }
-
-  /** [[retract]] for the bucketed store table. */
-  def retractBucketed(docs: DataFrame, textCol: String,
-      table: String): Unit = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    retractHashesBucketed(docs.select(
-      hashOf(textCol, storedHashFormBucketed(spark, table))
-        .as("content_hash")), table)
-  }
-
-  /** [[retractHashes]] for the bucketed store table. */
-  def retractHashesBucketed(hashes: DataFrame, table: String): Unit = {
-    val spark = hashes.sparkSession
-    ensureBucketedStore(spark, table)
-    requireFormType(hashes, storedHashFormBucketed(spark, table))
-    appendTombstones(hashes.select("content_hash"),
-      bucketedTombstonesDir(spark, table))
-  }
-
-  /** The bucketed store's scan minus live tombstones — every bucketed
-    * probe reads the table through this.
-    */
-  private[ingest] def storeTable(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame =
-    minusTombstones(spark.table(table),
-      readTombstones(spark, bucketedTombstonesDir(spark, table),
-        schemaOf(storedHashFormBucketed(spark, table))),
-      Seq("content_hash"))
-
-  // ── Bloom-filter sidecar (batch-side prune for the path store) ─────
-  //
-  // Even with the bucketed store, every batch's anti-join still READS
-  // the full store history. A Bloom filter over the store's hashes
-  // inverts that cost: the filter rides along with the batch (one
-  // broadcast), and every batch row whose hash is definitely-not-in-
-  // filter is new WITHOUT touching the store — the precise anti-join
-  // runs only over the maybe-seen minority (true duplicates + the fpp
-  // sliver). For a mostly-novel corpus feed that is almost the whole
-  // batch skipping the join.
-  //
-  // Correctness under staleness: the sidecar records WHICH store files
-  // it covers. Hashes appended after the sidecar was built are not in
-  // the filter, so a bloom miss alone cannot prove novelty — every
-  // batch row also anti-joins the RESIDUAL files (current minus
-  // covered), which stay small between rebuilds. Compaction rewrites
-  // the store under new file names; covered names then vanish and the
-  // residual degrades to the whole store — still exact, just no prune
-  // until the next [[buildBloomSidecar]] (schedule it with compaction).
-
-  private[graft] def sidecarPath(storePath: String) =
-    new org.apache.hadoop.fs.Path(storePath + ".bloom")
-
-  private[graft] def storeDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-    storeDataFileStatuses(fs, store).map(_.getPath)
-
-  private[graft] def storeDataFileStatuses(
-      fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(store)) Seq.empty
-    else fs.listStatus(store).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-
-  /** A v2 (sharded) sidecar manifest: the store files the filter set
-    * covers, plus the generation directory (sibling of the manifest)
-    * holding the per-shard filters and the shard count that routes a
-    * hash to its filter. The manifest is the COMMIT POINT — shard files
-    * are fully written before the manifest's atomic rename installs
-    * them, and the generation uuid in the directory name makes executor
-    * caches and concurrent readers immune to rebuilds.
-    */
-  private[graft] case class ShardedSidecar(covered: Set[String],
-      shardDirName: String, numShards: Int)
-
-  private[ingest] def writeSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
-      files: Seq[org.apache.hadoop.fs.Path],
-      shardDirName: String, numShards: Int): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-      target.getName + s".tmp-${java.util.UUID.randomUUID()}")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try {
-      out.writeInt(2) // sidecar format version (2 = sharded)
-      out.writeInt(files.size)
-      files.foreach(f => out.writeUTF(f.getName))
-      out.writeUTF(shardDirName)
-      out.writeInt(numShards)
-    } finally out.close()
-    fs.delete(target, false)
-    require(fs.rename(tmp, target),
-      s"bloom sidecar: could not install $target")
-  }
-
-  /** Read a sidecar manifest. Unknown versions (including the retired
-    * v1 single-filter format) read as ABSENT — the probes fall back to
-    * the exact plain-join plan, never to a misinterpreted filter.
-    */
-  private[graft] def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Option[ShardedSidecar] = {
-    if (!fs.exists(target)) return None
-    val in = new java.io.DataInputStream(fs.open(target))
-    try {
-      val ver = in.readInt()
-      if (ver != 2) return None
-      val names = Seq.fill(in.readInt())(in.readUTF()).toSet
-      Some(ShardedSidecar(names, in.readUTF(), in.readInt()))
-    } finally in.close()
-  }
-
-  /** Resolve a manifest to a probe Column, verifying the generation
-    * directory still exists (a vanished directory would turn every
-    * probe into a false "definitely new" — fall back to the exact plan
-    * instead). Returns the `bloom_probe(hash)` predicate builder.
-    */
-  private[ingest] def probeFor(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      manifest: org.apache.hadoop.fs.Path, sc: ShardedSidecar)
-      : Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = {
-    val dir = new org.apache.hadoop.fs.Path(
-      fs.makeQualified(manifest).getParent, sc.shardDirName)
-    if (!fs.exists(dir)) None
-    else {
-      graft.functions.Functions.register(spark)
-      Some(h => call_function("bloom_probe", h,
-        lit(dir.toString), lit(sc.numShards)))
-    }
-  }
-
-  /** Build/replace the store's Bloom sidecar: one pass over the current
-    * store files → a SHARDED filter set at `fpp` (per-shard filters
-    * built and written executor-side — see
-    * [[graft.functions.BloomShards]]; no driver-memory merge exists at
-    * any store size), installed atomically by the manifest rename next
-    * to the store as `<store>.bloom` together with the covered file
-    * names. Total filter bytes are still ~1.2 per hash at 1% fpp —
-    * `fpp`, `numShards`, and rebuild cadence are the operator's levers,
-    * and the filter covers the immutable compacted history while fresh
-    * appends ride the residual join instead of forcing a rebuild.
-    * Returns the number of hashes covered.
-    */
-  def buildBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, fpp: Double = 0.01, numShards: Int = 0): Long =
-    buildPathSidecar(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)), "content_hash", fpp,
-      numShards)
-
-  /** The path-form sidecar builder shared across the store family
-    * (SpanStore reuses it over its window-hash schema) — one
-    * implementation of the list-files → build-shards → atomic-install
-    * protocol, parameterized by store schema and hash column.
-    */
-  private[ingest] def buildPathSidecar(
-      spark: org.apache.spark.sql.SparkSession, storePath: String,
-      schema: org.apache.spark.sql.types.StructType, hashCol: String,
-      fpp: Double, numShards: Int = 0): Long = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = storeDataFiles(fs, store)
-    if (files.isEmpty) { removeSidecar(fs, sidecarPath(storePath)); return 0L }
-    val df = spark.read.schema(schema)
-      .parquet(files.map(_.toString): _*)
-    buildShardedSidecar(spark, df, hashCol, fs,
-      sidecarPath(storePath), files, numShards, fpp)
-  }
-
-  /** Shared sharded-sidecar install protocol (both store forms): write
-    * a fresh generation directory `<manifest>.d-<uuid>` beside the
-    * manifest (for the bucketed form the manifest is `_bloom` inside
-    * the table directory, so the generation dir `_bloom.d-…` keeps the
-    * underscore prefix every parquet reader ignores), fill it with
-    * executor-built per-shard filters, commit via the manifest's atomic
-    * rename, then garbage-collect older generations. A crash anywhere
-    * before the commit leaves the previous manifest + generation fully
-    * intact.
-    */
-  private[ingest] def buildShardedSidecar(
-      spark: org.apache.spark.sql.SparkSession, df: DataFrame,
-      hashCol: String, fs: org.apache.hadoop.fs.FileSystem,
-      manifest: org.apache.hadoop.fs.Path,
-      files: Seq[org.apache.hadoop.fs.Path], numShards: Int,
-      fpp: Double): Long = {
-    // numShards = 0 → derive from the store's row count so every shard
-    // filter lands near BloomShards.TargetShardBytes (floor 32). One
-    // cheap count over the store — sidecar builds are maintenance ops
-    // on the compaction schedule, not the ingest hot path.
-    val shards =
-      if (numShards == 0)
-        graft.functions.BloomShards.autoShards(
-          df.select(hashCol).count(), fpp)
-      else numShards
-    val parent = fs.makeQualified(manifest).getParent
-    val genPrefix = manifest.getName + ".d-"
-    val genName = genPrefix + java.util.UUID.randomUUID().toString
-    val shardDir = new org.apache.hadoop.fs.Path(parent, genName)
-    fs.mkdirs(shardDir)
-    val n = graft.functions.BloomShards.build(df, hashCol,
-      shardDir.toString, shards, fpp)
-    writeSidecar(fs, manifest, files, genName, shards)
-    for (st <- fs.listStatus(parent)
-         if st.isDirectory && st.getPath.getName.startsWith(genPrefix) &&
-           st.getPath.getName != genName)
-      fs.delete(st.getPath, true)
-    n
-  }
-
-  /** Remove a sidecar COMPLETELY: the manifest plus every
-    * `<manifest>.d-<uuid>` generation directory. The empty-store paths
-    * use this — deleting only the manifest leaked generation dirs
-    * forever, since generation GC otherwise runs only on a successful
-    * rebuild.
-    */
-  private[ingest] def removeSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      manifest: org.apache.hadoop.fs.Path): Unit = {
-    fs.delete(manifest, false)
-    val parent = fs.makeQualified(manifest).getParent
-    val genPrefix = manifest.getName + ".d-"
-    if (fs.exists(parent))
-      for (st <- fs.listStatus(parent)
-           if st.isDirectory && st.getPath.getName.startsWith(genPrefix))
-        fs.delete(st.getPath, true)
-  }
-
-  /** [[newUnique]] accelerated by the Bloom sidecar. Batch rows are
-    * split by a broadcast filter probe: definite-new rows (bloom miss)
-    * skip the covered-history anti-join entirely; maybe-seen rows run
-    * it as usual. BOTH still anti-join the residual files appended
-    * since the sidecar was built — exactness does not depend on the
-    * sidecar being fresh. No sidecar (or none of its files surviving)
-    * falls back to the plain [[newUnique]] plan. The probe is the
-    * native codegen'd `bloom_probe` expression ([[graft.functions
-    * .BloomProbe]]) — it stays inside whole-stage codegen on the
-    * ingest predicate, loading only the probed row's shard.
-    */
-  def newUniqueWithBloom(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String): DataFrame =
-    bloomSplitAnti(docs.sparkSession, storePath)(form =>
-        keepers(docs, textCol, idCol, form))
-      // same column order as newUnique (whose USING-key join leads
-      // with the hash), whichever branches ran
-      .map(_.select(("content_hash" +: docs.columns.toSeq).map(col): _*))
-      .getOrElse(newUnique(docs, textCol, idCol, storePath))
-
-  // ── bucketed-catalog store form (the 100 TB path) ──────────────────
-  //
-  // Same two-phase contract as the path form; the store lives in the
-  // session catalog as a parquet table bucketed by content_hash
-  // (Layout.writeBucketed's layout). The bucketed scan satisfies the
-  // anti-join's hash distribution straight off the files: only the
-  // batch side shuffles, the ever-growing store side NEVER does.
-
-  private[ingest] def bucketsOf(spark: org.apache.spark.sql.SparkSession,
-      table: String): Int = BucketedStore.bucketsOf(spark, table)
-
-  /** Create the bucketed store table if absent (idempotent; recovers a
-    * compaction crash first). `buckets` is fixed at creation — size it
-    * for the store's TARGET volume (hash rows / ~1 GB per bucket), not
-    * the first batch; an existing table's bucket count wins.
-    */
-  def ensureBucketedStore(spark: org.apache.spark.sql.SparkSession,
-      table: String, buckets: Int = 32): Unit = {
-    BucketedStore.ensure(spark, table, buckets, storeSchema,
-      "content_hash")
-  }
-
-  private val HashFormProp = "graft.dedup.hashform"
-
-  /** The hash form the bucketed store was recorded with (table
-    * property; [[BucketedStore.compact]] carries `graft.*` properties
-    * across its staging-table swap, so it survives compaction).
-    */
-  def storedHashFormBucketed(spark: org.apache.spark.sql.SparkSession,
-      table: String): String =
-    HashForm.storedBucketed(spark, table, HashFormProp)
-
-  private def commitHashFormBucketed(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      form: String): Unit =
-    HashForm.commitBucketed(spark, table, HashFormProp, form, schemaOf,
-      "content_hash", "DedupStore")
-
-  /** [[newUnique]] against the bucketed store table. The store side of
-    * the anti-join plans ZERO exchanges (LayoutSpec asserts it) — at
-    * 100 TB this is the difference between re-shuffling the full
-    * history every batch and a local per-bucket join.
-    */
-  def newUniqueBucketed(docs: DataFrame, textCol: String, idCol: String,
-      table: String): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    keepers(docs, textCol, idCol, storedHashFormBucketed(spark, table))
-      .join(storeTable(spark, table), Seq("content_hash"), "left_anti")
-  }
-
-  /** [[recordHashes]] into the bucketed store table: one bucketed
-    * append of the batch's distinct hashes. The same pre-append
-    * localCheckpoint pins the batch's hashes before the append job
-    * starts scanning the table it extends.
-    */
-  def recordHashesBucketed(docs: DataFrame, textCol: String,
-      table: String, hashForm: String = ""): Unit = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val form = HashForm.resolve(hashForm,
-      storedHashFormBucketed(spark, table))
-    commitHashFormBucketed(spark, table, form)
-    val b = bucketsOf(spark, table)
-    val hashes = hashProjection(docs, textCol, form)
-    val mat = hashes.distinct().localCheckpoint(true)
-    try mat.write.mode(SaveMode.Append)
-      .bucketBy(b, "content_hash").sortBy("content_hash")
-      .format("parquet").saveAsTable(table)
-    finally mat.unpersist()
-  }
-
-  private[graft] def tableLocation(spark: org.apache.spark.sql.SparkSession,
-      table: String): org.apache.hadoop.fs.Path =
-    BucketedStore.tableLocation(spark, table)
-
-  /** Bloom sidecar for the BUCKETED store table. The sidecar lives
-    * INSIDE the table directory as `_bloom` (underscore-prefixed, so
-    * every parquet reader ignores it) — which makes its lifecycle
-    * self-maintaining: [[compactBucketedStore]]'s staging-table swap
-    * drops the old directory, sidecar included, and the bloom path
-    * degrades to the plain zero-exchange anti-join until the next
-    * rebuild, instead of ever consulting a filter whose covered file
-    * names no longer exist. Returns hashes covered.
-    */
-  def buildBloomSidecarBucketed(spark: org.apache.spark.sql.SparkSession,
-      table: String, fpp: Double = 0.01, numShards: Int = 0): Long = {
-    ensureBucketedStore(spark, table)
-    BucketedStore.buildBloomSidecar(spark, table, "content_hash", fpp,
-      numShards)
-  }
-
-  /** [[newUniqueBucketed]] accelerated by the table's `_bloom` sidecar,
-    * with a split that PRESERVES the bucketed form's zero-exchange
-    * property: bloom-HIT rows anti-join the full catalog table (the
-    * bucketed scan, no store-side shuffle — a superset of the covered
-    * files, which only tightens the check), while bloom-MISS rows are
-    * proven new against just the residual files appended since the
-    * sidecar was built (a small path read). Most rows of a mostly-novel
-    * batch therefore never touch the store history at all; no sidecar
-    * or no surviving covered files falls back to [[newUniqueBucketed]].
-    */
-  def newUniqueBucketedWithBloom(docs: DataFrame, textCol: String,
-      idCol: String, table: String): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val loc = tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = new org.apache.hadoop.fs.Path(loc, "_bloom")
-    readSidecar(fs, manifest)
-        .flatMap(sc => probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None => newUniqueBucketed(docs, textCol, idCol, table)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = storeDataFiles(fs, loc)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newUniqueBucketed(docs, textCol, idCol, table)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val form = storedHashFormBucketed(spark, table)
-        val schema = schemaOf(form)
-        val k = keepers(docs, textCol, idCol, form)
-        // probe hashes strings; xx64 longs cast to their decimal
-        // string, matching what the sidecar build recorded
-        val probeKey = col("content_hash").cast("string")
-        val tomb = readTombstones(spark,
-          bucketedTombstonesDir(spark, table), schema)
-        val maybe = k.filter(mightContain(probeKey))
-          .join(storeTable(spark, table), Seq("content_hash"), "left_anti")
-        val definite0 = k.filter(!mightContain(probeKey))
-        val definite =
-          if (residual.isEmpty) definite0
-          else definite0.join(
-            minusTombstones(spark.read.schema(schema)
-              .parquet(residual.map(_.toString): _*), tomb,
-              Seq("content_hash")),
-            Seq("content_hash"), "left_anti")
-        definite.unionByName(maybe)
-          .select(("content_hash" +: docs.columns.toSeq).map(col): _*)
-    }
-  }
-
-  /** [[compactStore]] for the bucketed table: rewrite to one row per
-    * hash via a staging table + catalog rename swap (the directory-swap
-    * protocol cannot apply — the catalog owns the table location).
-    * Crash between DROP and RENAME is repaired by the entry-time
-    * recovery in [[ensureBucketedStore]]/[[compactBucketedStore]].
-    * Single maintenance writer assumed, same as Layout.compact; a
-    * concurrent APPENDER's rows written after the staging read would be
-    * lost — schedule against a quiesced store. Returns (rowsBefore,
-    * rowsAfter).
-    */
-  def compactBucketedStore(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Long, Long) =
-    BucketedStore.compact(spark, table, "content_hash",
-      // phase 2: drop tombstoned rows in the staging rewrite; the old
-      // directory — `_tombstones` included — goes down with the swap's
-      // DROP, which is what clears the applied tombstones. The hash
-      // form is read INSIDE the transform — compact's entry recovery
-      // has run by then.
-      df => minusTombstones(df,
-        readTombstones(spark, bucketedTombstonesDir(spark, table),
-          schemaOf(storedHashFormBucketed(spark, table))),
-        Seq("content_hash")))
-
-  private def stagingOf(table: String): String =
-    BucketedStore.stagingOf(table)
-
-  /** A death between compaction's DROP and RENAME leaves the data only
-    * in the staging table — install it before anything else touches the
-    * store. A staging table WITH the store still present is a pre-drop
-    * leftover and is torn down by the next compaction instead (it may
-    * be mid-write; the store is intact, so it is garbage, not the sole
-    * copy).
-    */
-  private def recoverBucketedSwap(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = BucketedStore.recoverSwap(spark, table)
 }

@@ -1,32 +1,24 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.StructType
-
-/** Persisted hash-form flag shared by the incremental-dedup store
-  * family ([[DedupStore]], [[NearDupStore]], [[SpanStore]]).
+/** The persisted hash form of a store's keys.
   *
-  * Each store keys on a content-derived hash; two wire forms exist:
-  * `"md5"` (32-char string — byte-identical with the oracle-checked
-  * in-corpus queries) and `"xxh64"` (8-byte long — 4× less store and
-  * exchange per key, the 100 TB form). The form is a property of the
-  * RECORDED DATA, not of any one call: a store recorded as xxhash64
-  * longs can only ever match xxhash64 probes — an md5 probe against it
-  * would silently match nothing. Persisting the form next to the data
-  * (path form: a `<store>.hashform` sibling file; bucketed form: a
-  * `graft.*.hashform` table property, which [[BucketedStore.compact]]
-  * carries across its staging-table swap) makes every probe
-  * self-configuring and a mixed-form store impossible.
-  *
-  * One implementation of the read/commit protocol here; each store
-  * supplies only its property name, schema-per-form, and label.
+  * Each hashed store keys on a content-derived hash; two wire forms
+  * exist: `"md5"` (32-char string — byte-identical with the
+  * oracle-checked in-corpus queries) and `"xxh64"` (8-byte long — 4×
+  * less store and exchange per key, the 100 TB form). The form is a
+  * property of the RECORDED DATA, not of any one call: a store recorded
+  * as xxhash64 longs can only ever match xxhash64 probes. The
+  * [[StoreLayout]] persists it next to the data (a `<store>.hashform`
+  * sibling, or a `graft.*.hashform` table property that compaction's
+  * swap carries), which makes every probe self-configuring and a
+  * mixed-form store impossible.
   */
-private[ingest] object HashForm {
+private[graft] object HashForm {
 
   val Md5 = "md5"
   val Xx = "xxh64"
 
-  private def validate(form: String): Unit =
+  def validate(form: String): Unit =
     require(form == Md5 || form == Xx,
       s"unknown hash form $form (use $Md5 or $Xx)")
 
@@ -37,76 +29,4 @@ private[ingest] object HashForm {
     */
   def resolve(explicit: String, stored: => String): String =
     if (explicit.isEmpty) stored else explicit
-
-  private def formPath(storePath: String) =
-    new org.apache.hadoop.fs.Path(storePath + ".hashform")
-
-  /** The hash form the path store was recorded with (md5 if never
-    * declared — every store recorded before the flag existed is md5).
-    */
-  def storedPath(spark: SparkSession, storePath: String): String = {
-    val p = formPath(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Md5
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-  }
-
-  /** Record the path store's form before its first append; refuse a
-    * form that contradicts a non-empty store (the forms can never
-    * match each other). Atomic tmp-write + rename, like the stride.
-    */
-  def commitPath(spark: SparkSession, storePath: String, form: String,
-      label: String): Unit = {
-    validate(form)
-    val existing = storedPath(spark, storePath)
-    if (existing == form) return
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(p) || DedupStore.storeDataFiles(fs, p).isEmpty,
-      s"$label $storePath was recorded with hash form $existing; " +
-        s"cannot record as $form (the forms can never match each " +
-        "other — use a fresh store)")
-    val hp = formPath(storePath)
-    val tmp = new org.apache.hadoop.fs.Path(hp.getParent,
-      hp.getName + s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(form.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(hp, false)
-    require(fs.rename(tmp, hp), s"$label: could not install $hp")
-  }
-
-  /** The hash form a bucketed table was recorded with under `prop`
-    * (md5 if never declared).
-    */
-  def storedBucketed(spark: SparkSession, table: String,
-      prop: String): String =
-    spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .properties.getOrElse(prop, Md5)
-
-  /** Record a bucketed table's form; an EMPTY table created under the
-    * other form has the wrong column TYPE as well as the wrong
-    * property, so it is recreated in place with `schemaOf(form)`; a
-    * non-empty table refuses the switch.
-    */
-  def commitBucketed(spark: SparkSession, table: String, prop: String,
-      form: String, schemaOf: String => StructType, bucketCol: String,
-      label: String): Unit = {
-    validate(form)
-    val existing = storedBucketed(spark, table, prop)
-    if (existing == form) return
-    require(spark.table(table).isEmpty,
-      s"$label table $table was recorded with hash form $existing; " +
-        s"cannot record as $form (the forms can never match each " +
-        "other — use a fresh store)")
-    val buckets = BucketedStore.bucketsOf(spark, table)
-    spark.sql(s"DROP TABLE $table")
-    BucketedStore.ensure(spark, table, buckets, schemaOf(form), bucketCol)
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$prop' = '$form')")
-  }
 }

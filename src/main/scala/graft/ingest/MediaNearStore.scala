@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField,
   StructType}
@@ -24,27 +24,27 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField,
   * Hamming distance Σ bit_count(xor) ≤ `maxHamming`, so a band
   * collision can create a candidate, never a flag.
   *
-  * The machinery is [[DedupStore]]'s, shared rather than rebuilt:
-  * two-phase records (persist survivors first, [[recordHashes]] from
-  * the committed read-back), tombstoned retraction, compaction
-  * reclaiming at-least-once re-records, and the band_key Bloom
-  * sidecar with the disjoint hit/miss probe split. Callers compute
+  * The machinery is the family's [[KeyStore]] protocol, shared rather
+  * than rebuilt: two-phase records (persist survivors first,
+  * [[recordHashes]] from the committed read-back), tombstoned
+  * retraction, compaction reclaiming at-least-once re-records, and the
+  * band_key Bloom sidecar with the disjoint hit/miss probe split. Callers compute
   * the hash frame ONCE per batch (decode is the expensive step) and
   * pass it to both the probe and the record.
   *
   * At 100 TB: the store's only join is the band-key equi-join — the
-  * same shape as the text near store, so the bucketed-catalog
-  * acceleration applies unchanged if the band_key becomes the at-rest
-  * bucket key; the sidecar keeps mostly-novel batches off the history
+  * same shape as the text near store, so the [[StoreLayout.Bucketed]]
+  * layout (band_key as the at-rest bucket key) plans zero store-side
+  * exchanges; the sidecar keeps mostly-novel batches off the history
   * entirely.
   */
-object MediaNearStore {
+object MediaNearStore extends KeyStore[StoreLayout](KeySpec("MediaNearStore",
+    _ => StructType(Seq(
+      StructField("band_key", LongType),
+      StructField("sig", ArrayType(LongType)))),
+    "band_key")) {
 
-  private val storeSchema = StructType(Seq(
-    StructField("band_key", LongType),
-    StructField("sig", ArrayType(LongType))))
-
-  /** (doc_id, sig, bk) band rows of a (media_id, band0..band3) hash
+  /** (doc_id, sig, band_key) band rows of a (media_id, band0..band3) hash
     * frame — 4 rows per medium, position-tagged keys.
     */
   private def bandRows(hashes: DataFrame): DataFrame =
@@ -56,27 +56,15 @@ object MediaNearStore {
       .select(col("doc_id"), col("sig"),
         explode(expr(
           "transform(sequence(0, 3), " +
-            "b -> b * 65536L + element_at(sig, b + 1))")).as("bk"))
+            "b -> b * 65536L + element_at(sig, b + 1))")).as("band_key"))
+
+  private def storeRows(hashes: DataFrame): DataFrame =
+    bandRows(hashes).select("band_key", "sig")
 
   /** Exact bitwise Hamming distance between two 4-band signatures. */
   private def hammingOf(a: String, b: String) = expr(
     s"aggregate(zip_with($a, $b, (x, y) -> bit_count(x ^ y)), " +
       "0, (acc, h) -> acc + h)")
-
-  private def storeBands(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val base =
-      if (fs.exists(p)) spark.read.schema(storeSchema).parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        storeSchema)
-    DedupStore.minusTombstones(base,
-      DedupStore.readTombstones(spark,
-        DedupStore.tombstonesPath(storePath), storeSchema),
-      Seq("band_key", "sig"))
-  }
 
   /** Survivors of `media` whose hash is NOT within `maxHamming` of any
     * recorded hash: band candidate join + exact Hamming verification +
@@ -87,239 +75,37 @@ object MediaNearStore {
     * pass through — gate them upstream if they must not.
     */
   def newNearUnique(media: DataFrame, idCol: String, hashes: DataFrame,
-      storePath: String, maxHamming: Int = 3): DataFrame =
-    antiJoinFlagged(media, idCol,
-      flaggedIds(bandRows(hashes),
-        storeBands(media.sparkSession, storePath)
-          .withColumnRenamed("sig", "stored_sig"), maxHamming))
-
-  /** The verification step — ONE definition for the plain and bloom
-    * probe forms, the [[NearDupStore]] discipline.
-    */
-  private def flaggedIds(bands: DataFrame, store: DataFrame,
-      maxHamming: Int): DataFrame =
-    bands.join(store, bands("bk") === store("band_key"))
-      .filter(hammingOf("sig", "stored_sig") <= maxHamming)
-      .select(col("doc_id").as("__flagged_id"))
-
-  private def antiJoinFlagged(media: DataFrame, idCol: String,
-      flagged: DataFrame): DataFrame = {
-    val f = flagged.distinct()
-    media.join(f, media(idCol) <=> f("__flagged_id"), "left_anti")
+      layout: StoreLayout, maxHamming: Int = 3): DataFrame = {
+    val flagged = layout.probe(spec, HashForm.Md5, bandRows(hashes))(
+      flaggedIds(_, _, maxHamming)).distinct()
+    media.join(flagged, media(idCol) <=> flagged("__flagged_id"),
+      "left_anti")
   }
 
-  /** [[newNearUnique]] accelerated by the band_key Bloom sidecar —
-    * the disjoint hit/miss split of the sibling stores: bloom-hit
-    * band rows join the current files, bloom-miss rows only the
-    * (broadcast) residual appended since the sidecar build, both legs
-    * through the one [[flaggedIds]] verification; any sidecar doubt
-    * falls back to the exact probe with identical answers.
+  /** The verification step — ONE definition for both probe legs, the
+    * [[NearDupStore]] discipline.
     */
-  def newNearUniqueWithBloom(media: DataFrame, idCol: String,
-      hashes: DataFrame, storePath: String,
-      maxHamming: Int = 3): DataFrame = {
-    val spark = media.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = DedupStore.sidecarPath(storePath)
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newNearUnique(media, idCol, hashes, storePath, maxHamming)
-      case Some((sc, mightContain)) =>
-        val current = DedupStore.storeDataFiles(fs, store)
-        if (!current.exists(f => sc.covered.contains(f.getName)))
-          return newNearUnique(media, idCol, hashes, storePath,
-            maxHamming)
-        val residual =
-          current.filterNot(f => sc.covered.contains(f.getName))
-        val tomb = DedupStore.readTombstones(spark,
-          DedupStore.tombstonesPath(storePath), storeSchema)
-        val bands = bandRows(hashes)
-        val probeKey = col("bk").cast("string")
-        val hit = flaggedIds(bands.filter(mightContain(probeKey)),
-          DedupStore.minusTombstones(
-            spark.read.schema(storeSchema)
-              .parquet(current.map(_.toString): _*),
-            tomb, Seq("band_key", "sig"))
-            .withColumnRenamed("sig", "stored_sig"), maxHamming)
-        val flagged =
-          if (residual.isEmpty) hit
-          else hit.unionByName(flaggedIds(
-            bands.filter(!mightContain(probeKey)),
-            broadcast(DedupStore.minusTombstones(
-              spark.read.schema(storeSchema)
-                .parquet(residual.map(_.toString): _*),
-              tomb, Seq("band_key", "sig")))
-              .withColumnRenamed("sig", "stored_sig"), maxHamming))
-        antiJoinFlagged(media, idCol, flagged)
-    }
+  private def flaggedIds(bands: DataFrame, store: DataFrame,
+      maxHamming: Int): DataFrame = {
+    val s = store.withColumnRenamed("sig", "stored_sig")
+    bands.join(s, Seq("band_key"))
+      .filter(hammingOf("sig", "stored_sig") <= maxHamming)
+      .select(col("doc_id").as("__flagged_id"))
   }
 
   /** Mark hashes as seen — append their (band_key, sig) rows. Call
     * AFTER survivors are durably persisted (two-phase contract), on
-    * the hash frame of the committed read-back; at-least-once
-    * re-records append duplicates that [[compactStore]] reclaims.
+    * the hash frame of the committed read-back.
     */
-  def recordHashes(hashes: DataFrame, storePath: String): Unit = {
-    val rows = bandRows(hashes)
-      .select(col("bk").as("band_key"), col("sig")).distinct()
-      .localCheckpoint(true)
-    try rows.write.mode(SaveMode.Append).parquet(storePath)
-    finally rows.unpersist()
-  }
+  def recordHashes(hashes: DataFrame, layout: StoreLayout): Unit =
+    layout.record(spec, HashForm.Md5, 1, storeRows(hashes))
 
   /** Phase-1 retraction: tombstone the (band_key, sig) rows of the
-    * given hash frame — probes subtract them immediately, the next
-    * [[compactStore]] applies them physically. A distinct medium whose
-    * hash is byte-identical (a Hamming-0 perceptual duplicate of the
-    * retracted one) shares those rows and loses them too — the
-    * content-addressed membership semantics of the sibling stores.
+    * given hash frame. A distinct medium whose hash is byte-identical
+    * (a Hamming-0 perceptual duplicate of the retracted one) shares
+    * those rows and loses them too — the content-addressed membership
+    * semantics of the sibling stores.
     */
-  def retract(hashes: DataFrame, storePath: String): Unit =
-    DedupStore.appendTombstones(
-      bandRows(hashes).select(col("bk").as("band_key"), col("sig")),
-      DedupStore.tombstonesPath(storePath))
-
-  /** Maintenance: dedup rows + apply tombstones, the shared machinery. */
-  def compactStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return (0, 0)
-    DedupStore.compactApplyingTombstones(spark, storePath, storeSchema,
-      Seq("band_key", "sig"), targetFileBytes)
-  }
-
-  /** Band-key Bloom sidecar over the PATH store — the shared
-    * [[DedupStore.buildPathSidecar]] machinery. Rebuild on the
-    * compaction schedule (compaction renames files and voids
-    * coverage).
-    */
-  def buildBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, fpp: Double = 0.01, numShards: Int = 0): Long =
-    DedupStore.buildPathSidecar(spark, storePath, storeSchema,
-      "band_key", fpp, numShards)
-
-  // ── bucketed-catalog store form (the 100 TB path) ───────────────────
-  // The long band_key is the at-rest bucket column, so the candidate
-  // equi-join plans ZERO exchanges on the ever-growing store side —
-  // the same layout/swap/compaction machinery as the sibling stores
-  // (BucketedStore), with this store's Hamming verification on top.
-
-  def ensureBucketedStore(spark: org.apache.spark.sql.SparkSession,
-      table: String, buckets: Int = 32): Unit =
-    BucketedStore.ensure(spark, table, buckets, storeSchema, "band_key")
-
-  /** The bucketed store's scan minus live tombstones. */
-  private def storeTable(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame =
-    DedupStore.minusTombstones(spark.table(table),
-      DedupStore.readTombstones(spark,
-        DedupStore.bucketedTombstonesDir(spark, table), storeSchema),
-      Seq("band_key", "sig"))
-
-  /** [[newNearUnique]] against the bucketed table — zero store-side
-    * exchanges on the band candidate join; verification and the
-    * null-safe anti-join are the path form's, verbatim.
-    */
-  def newNearUniqueBucketed(media: DataFrame, idCol: String,
-      hashes: DataFrame, table: String,
-      maxHamming: Int = 3): DataFrame = {
-    val spark = media.sparkSession
-    ensureBucketedStore(spark, table)
-    antiJoinFlagged(media, idCol,
-      flaggedIds(bandRows(hashes),
-        storeTable(spark, table).withColumnRenamed("sig", "stored_sig"),
-        maxHamming))
-  }
-
-  /** [[recordHashes]] into the bucketed table: one bucketed append of
-    * the distinct (band_key, sig) rows.
-    */
-  def recordHashesBucketed(hashes: DataFrame, table: String): Unit = {
-    val spark = hashes.sparkSession
-    ensureBucketedStore(spark, table)
-    val b = BucketedStore.bucketsOf(spark, table)
-    val rows = bandRows(hashes)
-      .select(col("bk").as("band_key"), col("sig")).distinct()
-      .localCheckpoint(true)
-    try rows.write.mode(SaveMode.Append)
-      .bucketBy(b, "band_key").sortBy("band_key")
-      .format("parquet").saveAsTable(table)
-    finally rows.unpersist()
-  }
-
-  /** [[retract]] for the bucketed table. */
-  def retractBucketed(hashes: DataFrame, table: String): Unit = {
-    val spark = hashes.sparkSession
-    ensureBucketedStore(spark, table)
-    DedupStore.appendTombstones(
-      bandRows(hashes).select(col("bk").as("band_key"), col("sig")),
-      DedupStore.bucketedTombstonesDir(spark, table))
-  }
-
-  /** Bloom sidecar over band_key for the bucketed table. */
-  def buildBloomSidecarBucketed(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      fpp: Double = 0.01, numShards: Int = 0): Long = {
-    ensureBucketedStore(spark, table)
-    BucketedStore.buildBloomSidecar(spark, table, "band_key", fpp,
-      numShards)
-  }
-
-  /** [[newNearUniqueBucketed]] accelerated by the table's `_bloom`
-    * sidecar — the disjoint hit/miss split, both legs through the one
-    * Hamming verification; any sidecar doubt falls back to the exact
-    * bucketed probe.
-    */
-  def newNearUniqueBucketedWithBloom(media: DataFrame, idCol: String,
-      hashes: DataFrame, table: String,
-      maxHamming: Int = 3): DataFrame = {
-    val spark = media.sparkSession
-    ensureBucketedStore(spark, table)
-    val loc = BucketedStore.tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = new org.apache.hadoop.fs.Path(loc, "_bloom")
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newNearUniqueBucketed(media, idCol, hashes, table, maxHamming)
-      case Some((sc, mightContain)) =>
-        val current = DedupStore.storeDataFiles(fs, loc)
-        if (!current.exists(f => sc.covered.contains(f.getName)))
-          return newNearUniqueBucketed(media, idCol, hashes, table,
-            maxHamming)
-        val residual =
-          current.filterNot(f => sc.covered.contains(f.getName))
-        val bands = bandRows(hashes)
-        val probeKey = col("bk").cast("string")
-        val hit = flaggedIds(bands.filter(mightContain(probeKey)),
-          storeTable(spark, table)
-            .withColumnRenamed("sig", "stored_sig"), maxHamming)
-        val flagged =
-          if (residual.isEmpty) hit
-          else hit.unionByName(flaggedIds(
-            bands.filter(!mightContain(probeKey)),
-            broadcast(DedupStore.minusTombstones(
-              spark.read.schema(storeSchema)
-                .parquet(residual.map(_.toString): _*),
-              DedupStore.readTombstones(spark,
-                DedupStore.bucketedTombstonesDir(spark, table),
-                storeSchema), Seq("band_key", "sig")))
-              .withColumnRenamed("sig", "stored_sig"), maxHamming))
-        antiJoinFlagged(media, idCol, flagged)
-    }
-  }
-
-  /** [[compactStore]] for the bucketed table — the shared staging-table
-    * swap (single maintenance writer assumed).
-    */
-  def compactBucketedStore(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Long, Long) =
-    BucketedStore.compact(spark, table, "band_key",
-      df => DedupStore.minusTombstones(df,
-        DedupStore.readTombstones(spark,
-          DedupStore.bucketedTombstonesDir(spark, table), storeSchema),
-        Seq("band_key", "sig")))
+  def retract(hashes: DataFrame, layout: StoreLayout): Unit =
+    layout.retract(spec, storeRows(hashes))
 }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
   StructField, StructType}
@@ -28,9 +28,9 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
   * with [[DedupStore]] (exact hash first) to catch those, as q80's
   * pipeline stages do within a corpus. Within-batch near-dups are the
   * q28/q60 pipeline's job; this store only compares against HISTORY.
-  * At 100 TB the band_key is the store's at-rest bucket key — the
-  * bucketed-catalog and Bloom-sidecar accelerations of DedupStore apply
-  * here unchanged (same join shape, wider key).
+  * At 100 TB the band_key is the store's at-rest bucket key — in the
+  * [[StoreLayout.Bucketed]] layout only the batch's band rows shuffle,
+  * the ever-growing signature history never does.
   *
   * Hash forms ([[HashForm]], persisted like the siblings'): the
   * default `"md5"` form stores the band key as q28's concatenated
@@ -42,38 +42,12 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
   * the ≥ minAgree/16 signature verification, which does not read the
   * band key at all.
   */
-object NearDupStore {
-
-  private val storeSchema = StructType(Seq(
-    StructField("band_key", StringType),
-    StructField("sig", ArrayType(LongType))))
-
-  private[graft] val Md5Form = HashForm.Md5
-  private[graft] val XxForm = HashForm.Xx
-
-  /** Store shape per persisted hash form — the band key narrows to a
-    * long under xxh64; the verification signature is untouched.
-    */
-  private def schemaOf(form: String): StructType =
-    if (form == HashForm.Xx) StructType(Seq(
-      StructField("band_key", LongType),
-      StructField("sig", ArrayType(LongType))))
-    else storeSchema
-
-  /** The hash form the path store was recorded with (md5 if never
-    * declared); probes self-configure through this.
-    */
-  def storedHashForm(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): String = HashForm.storedPath(spark, storePath)
-
-  private val HashFormProp = "graft.neardup.hashform"
-
-  /** The hash form the bucketed store was recorded with (table
-    * property, surviving [[BucketedStore.compact]]'s swap).
-    */
-  def storedHashFormBucketed(spark: org.apache.spark.sql.SparkSession,
-      table: String): String =
-    HashForm.storedBucketed(spark, table, HashFormProp)
+object NearDupStore extends KeyStore[StoreLayout](KeySpec("NearDupStore",
+    form => StructType(Seq(
+      StructField("band_key",
+        if (form == HashForm.Xx) LongType else StringType),
+      StructField("sig", ArrayType(LongType)))),
+    "band_key", formProp = "graft.neardup.hashform")) {
 
   /** Signature agreement count between two 16-long arrays — the q28
     * match statistic (n_match ≥ 8 ⇔ est. Jaccard ≥ 0.5).
@@ -82,82 +56,53 @@ object NearDupStore {
     s"aggregate(zip_with($a, $b, (x, y) -> if(x <=> y, 1, 0)), " +
       "0, (acc, m) -> acc + m)")
 
-  /** (doc_id, sig, bk) band rows of `docs` via the shared q28
+  /** (doc_id, sig, band_key) band rows of `docs` via the shared q28
     * derivation; `idCol`/`textCol` renamed into the kernel's expected
     * shape first.
     */
   private def banded(docs: DataFrame, textCol: String, idCol: String,
-      form: String = HashForm.Md5): DataFrame = {
+      form: String): DataFrame = {
     graft.functions.Functions.register(docs.sparkSession)
     val base = graft.queries.LlmPipeline.minhashedOf(
       docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
+      .withColumnRenamed("bk", "band_key")
     // xx form: the band key narrows to xxhash64 of the q28 string —
     // ONE derivation (hash OF the canonical key), so the two forms
     // can never disagree about which documents share a band
-    if (form == HashForm.Xx) base.withColumn("bk", xxhash64(col("bk")))
+    if (form == HashForm.Xx)
+      base.withColumn("band_key", xxhash64(col("band_key")))
     else base
   }
 
-  private def storeBands(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, form: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val schema = schemaOf(form)
-    val base =
-      if (fs.exists(p)) spark.read.schema(schema).parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    DedupStore.minusTombstones(base,
-      DedupStore.readTombstones(spark,
-        DedupStore.tombstonesPath(storePath), schema),
-      Seq("band_key", "sig"))
-  }
+  /** The store rows of `docs`: one (band_key, sig) per band. */
+  private def storeRows(docs: DataFrame, textCol: String, idCol: String,
+      form: String): DataFrame =
+    banded(docs, textCol, idCol, form).select("band_key", "sig")
 
-  // ── Retraction (takedown) — DedupStore's two-phase protocol over
-  // this store's (band_key, sig) key (see the comment block there).
-  // Retracting a document removes ITS signature rows; a distinct
-  // document that produced byte-identical (band_key, sig) rows — by
-  // construction a ~Jaccard-1.0 near-duplicate of the retracted one —
-  // loses those shared rows too (content-addressed membership, the
-  // same sharing semantics as the span store's windows).
+  // ── Retraction (takedown) — the [[StoreLayout]] two-phase protocol
+  // over this store's (band_key, sig) key. Retracting a document removes
+  // ITS signature rows; a distinct document that produced byte-identical
+  // (band_key, sig) rows — by construction a ~Jaccard-1.0 near-duplicate
+  // of the retracted one — loses those shared rows too (content-addressed
+  // membership, the same sharing semantics as the span store's windows).
 
   /** Phase 1: tombstone the (band_key, sig) rows of `docs` — computed
     * with the store's own signing derivation, so retract-by-text is
-    * exact against what record-by-text stored. Probes subtract live
-    * tombstones immediately; the next [[compactStore]] drops the rows
-    * physically and clears the applied tombstones.
+    * exact against what record-by-text stored.
     */
   def retract(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String): Unit =
-    DedupStore.appendTombstones(
-      banded(docs, textCol, idCol,
-          storedHashForm(docs.sparkSession, storePath))
-        .select(col("bk").as("band_key"), col("sig")),
-      DedupStore.tombstonesPath(storePath))
-
-  /** [[retract]] for the bucketed store table. */
-  def retractBucketed(docs: DataFrame, textCol: String, idCol: String,
-      table: String): Unit = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    DedupStore.appendTombstones(
-      banded(docs, textCol, idCol, storedHashFormBucketed(spark, table))
-        .select(col("bk").as("band_key"), col("sig")),
-      DedupStore.bucketedTombstonesDir(spark, table))
-  }
-
-  /** The bucketed store's scan minus live tombstones. */
-  private def storeTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, form: String): DataFrame =
-    DedupStore.minusTombstones(spark.table(table),
-      DedupStore.readTombstones(spark,
-        DedupStore.bucketedTombstonesDir(spark, table), schemaOf(form)),
-      Seq("band_key", "sig"))
+      layout: StoreLayout): Unit =
+    layout.retract(spec, storeRows(docs, textCol, idCol,
+      storedHashForm(docs.sparkSession, layout)))
 
   /** Rows of `docs` that do NOT near-duplicate any recorded document:
     * sign (one kernel pass), equi-join band keys against the store,
     * verify candidates by ≥ `minAgree`/16 signature positions, anti-join
     * the flagged ids. Returns the original rows/columns of survivors.
+    * With a sidecar, bloom-hit band rows join the live store and
+    * bloom-miss rows only the broadcast residual — both through the one
+    * [[flaggedIds]] verification, so a bloom false positive can create a
+    * CANDIDATE but never a flag.
     *
     * The anti-join is NULL-SAFE (`<=>`): a null id is one identity,
     * exactly as [[DedupStore]]'s keepers treat it (null ids group
@@ -168,282 +113,35 @@ object NearDupStore {
     * precision should supply real ids (the DedupStore contract).
     */
   def newNearUnique(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, minAgree: Int = 8): DataFrame = {
-    val form = storedHashForm(docs.sparkSession, storePath)
-    flagAgainst(docs, textCol, idCol,
-      storeBands(docs.sparkSession, storePath, form)
-        .withColumnRenamed("sig", "stored_sig"), minAgree, form)
+      layout: StoreLayout, minAgree: Int = 8): DataFrame = {
+    val form = storedHashForm(docs.sparkSession, layout)
+    val flagged = layout.probe(spec, form,
+      banded(docs, textCol, idCol, form))(flaggedIds(_, _, minAgree))
+      .distinct()
+    docs.join(flagged, docs(idCol) <=> flagged("__flagged_id"), "left_anti")
   }
-
-  /** Band candidate join + signature verification + null-safe anti-join
-    * shared by the path and bucketed forms; `store` is the (band_key,
-    * stored_sig) history frame in `form`'s key type.
-    */
-  private def flagAgainst(docs: DataFrame, textCol: String, idCol: String,
-      store: DataFrame, minAgree: Int, form: String): DataFrame =
-    antiJoinFlagged(docs, idCol,
-      flaggedIds(banded(docs, textCol, idCol, form), store, minAgree))
 
   /** The verification step itself — band rows equi-join the history,
     * candidates verify by ≥ `minAgree`/16 signature positions, flagged
-    * doc ids come back. ONE definition for every probe form (path,
-    * bucketed, and each bloom leg), so the threshold semantics cannot
-    * drift between them.
+    * doc ids come back. ONE definition for both probe legs, so the
+    * threshold semantics cannot drift between them.
     */
   private def flaggedIds(bandRows: DataFrame, store: DataFrame,
-      minAgree: Int): DataFrame =
-    bandRows.join(store, bandRows("bk") === store("band_key"))
+      minAgree: Int): DataFrame = {
+    val s = store.withColumnRenamed("sig", "stored_sig")
+    bandRows.join(s, Seq("band_key"))
       .filter(agreement("sig", "stored_sig") >= minAgree)
       .select(col("doc_id").as("__flagged_id"))
-
-  /** The null-safe anti-join tail every probe form ends with (null ids
-    * are ONE identity — see [[newNearUnique]]'s scaladoc).
-    */
-  private def antiJoinFlagged(docs: DataFrame, idCol: String,
-      flagged: DataFrame): DataFrame = {
-    val f = flagged.distinct()
-    docs.join(f, docs(idCol) <=> f("__flagged_id"), "left_anti")
-  }
-
-  /** Bloom sidecar over `band_key` for the PATH store — the shared
-    * [[DedupStore.buildPathSidecar]] machinery (SpanStore's pattern
-    * over this store's (band_key, sig) schema; closes the r14 family
-    * asymmetry where only the bucketed near store was bloom-
-    * accelerated). Rebuild on the compaction schedule.
-    */
-  def buildBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, fpp: Double = 0.01, numShards: Int = 0): Long =
-    DedupStore.buildPathSidecar(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)), "band_key", fpp,
-      numShards)
-
-  /** [[newNearUnique]] accelerated by the Bloom sidecar, split
-    * DISJOINT on the bloom predicate (the SpanStore path-form
-    * pattern): bloom-HIT band rows join the CURRENT store files
-    * (covered + residual — exactly the membership question), bloom-
-    * MISS rows can only match post-sidecar appends and join just the
-    * residual files (broadcast — small between rebuilds), both legs
-    * through the ONE [[flaggedIds]] verification, so a bloom false
-    * positive can create a CANDIDATE but never a flag. A missing,
-    * stale-beyond-recognition, or vanished-generation sidecar falls
-    * back to the exact [[newNearUnique]] — identical answers either
-    * way (IngestSpec equality law).
-    */
-  def newNearUniqueWithBloom(docs: DataFrame, textCol: String,
-      idCol: String, storePath: String, minAgree: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = DedupStore.sidecarPath(storePath)
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newNearUnique(docs, textCol, idCol, storePath, minAgree)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = DedupStore.storeDataFiles(fs, store)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newNearUnique(docs, textCol, idCol, storePath,
-            minAgree)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val form = storedHashForm(spark, storePath)
-        val schema = schemaOf(form)
-        val tomb = DedupStore.readTombstones(spark,
-          DedupStore.tombstonesPath(storePath), schema)
-        val bands = banded(docs, textCol, idCol, form)
-        // the probe expression hashes STRINGS; xx64 band keys cast to
-        // their decimal string, matching what the build recorded
-        val probeKey = col("bk").cast("string")
-        val hit = flaggedIds(bands.filter(mightContain(probeKey)),
-          DedupStore.minusTombstones(
-            spark.read.schema(schema)
-              .parquet(current.map(_.toString): _*),
-            tomb, Seq("band_key", "sig"))
-            .withColumnRenamed("sig", "stored_sig"), minAgree)
-        val flagged =
-          if (residual.isEmpty) hit
-          else hit.unionByName(flaggedIds(
-            bands.filter(!mightContain(probeKey)),
-            // residual files stay small between rebuilds: broadcast
-            // them so the miss leg never shuffles the band stream
-            broadcast(DedupStore.minusTombstones(
-              spark.read.schema(schema)
-                .parquet(residual.map(_.toString): _*),
-              tomb, Seq("band_key", "sig")))
-              .withColumnRenamed("sig", "stored_sig"), minAgree))
-        antiJoinFlagged(docs, idCol, flagged)
-    }
   }
 
   /** Mark `docs` as seen: append their (band_key, sig) rows. Call AFTER
     * survivors are durably persisted (two-phase contract — see class
-    * doc), ideally on the persisted read-back. The pre-append
-    * localCheckpoint pins the batch's bands before the append job could
-    * scan the directory it extends (DedupStore's self-scan guard).
-    * At-least-once re-records append duplicate rows; [[compactStore]]
-    * reclaims them.
+    * doc), ideally on the persisted read-back.
     */
   def recordSignatures(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, hashForm: String = ""): Unit = {
-    val spark = docs.sparkSession
+      layout: StoreLayout, hashForm: String = ""): Unit = {
     val form = HashForm.resolve(hashForm,
-      storedHashForm(spark, storePath))
-    HashForm.commitPath(spark, storePath, form, "NearDupStore")
-    val rows = banded(docs, textCol, idCol, form)
-      .select(col("bk").as("band_key"), col("sig")).distinct()
-      .localCheckpoint(true)
-    try rows.write.mode(SaveMode.Append).parquet(storePath)
-    finally rows.unpersist()
+      storedHashForm(docs.sparkSession, layout))
+    layout.record(spec, form, 1, storeRows(docs, textCol, idCol, form))
   }
-
-  /** Maintenance: one row per (band_key, sig) — reclaims at-least-once
-    * re-deliveries, same machinery as DedupStore.compactStore.
-    */
-  def compactStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return (0, 0)
-    DedupStore.compactApplyingTombstones(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)),
-      Seq("band_key", "sig"), targetFileBytes)
-  }
-
-  // ── bucketed-catalog store form (the 100 TB path) ──────────────────
-  //
-  // The (band_key, sig) store in the session catalog, bucketed by
-  // band_key through the shared BucketedStore machinery (lifecycle
-  // identical to the siblings'; the schema is merely wider). The
-  // bucketed scan satisfies the candidate join's hash distribution
-  // straight off the files: only the batch's band rows shuffle, the
-  // ever-growing signature history NEVER does.
-
-  /** Create the bucketed band-store table if absent (idempotent;
-    * recovers a compaction crash first). Size `buckets` for the target
-    * signature volume — ~16 band rows per recorded document.
-    */
-  def ensureBucketedStore(spark: org.apache.spark.sql.SparkSession,
-      table: String, buckets: Int = 32): Unit =
-    BucketedStore.ensure(spark, table, buckets, storeSchema, "band_key")
-
-  private def commitHashFormBucketed(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      form: String): Unit =
-    HashForm.commitBucketed(spark, table, HashFormProp, form, schemaOf,
-      "band_key", "NearDupStore")
-
-  /** [[newNearUnique]] against the bucketed store table — zero
-    * exchanges on the store side of the band candidate join (LayoutSpec
-    * asserts it); verification and the null-safe anti-join are the
-    * path form's, verbatim.
-    */
-  def newNearUniqueBucketed(docs: DataFrame, textCol: String,
-      idCol: String, table: String, minAgree: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val form = storedHashFormBucketed(spark, table)
-    flagAgainst(docs, textCol, idCol,
-      storeTable(spark, table, form)
-        .withColumnRenamed("sig", "stored_sig"),
-      minAgree, form)
-  }
-
-  /** [[recordSignatures]] into the bucketed store table: one bucketed
-    * append of the batch's distinct (band_key, sig) rows, pre-append-
-    * checkpointed like the sibling record steps.
-    */
-  def recordSignaturesBucketed(docs: DataFrame, textCol: String,
-      idCol: String, table: String, hashForm: String = ""): Unit = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val form = HashForm.resolve(hashForm,
-      storedHashFormBucketed(spark, table))
-    commitHashFormBucketed(spark, table, form)
-    val b = BucketedStore.bucketsOf(spark, table)
-    val rows = banded(docs, textCol, idCol, form)
-      .select(col("bk").as("band_key"), col("sig")).distinct()
-      .localCheckpoint(true)
-    try rows.write.mode(SaveMode.Append)
-      .bucketBy(b, "band_key").sortBy("band_key")
-      .format("parquet").saveAsTable(table)
-    finally rows.unpersist()
-  }
-
-  /** [[newNearUniqueBucketed]] accelerated by the table's `_bloom`
-    * sidecar over band_key, preserving the zero-exchange property with
-    * the disjoint split: bloom-HIT band rows join the full catalog
-    * table, bloom-MISS band rows can only match post-sidecar appends
-    * and join just the residual files. A lone band collision still
-    * cannot false-flag — both legs run the ≥`minAgree`/16 signature
-    * verification before any document is flagged.
-    */
-  def newNearUniqueBucketedWithBloom(docs: DataFrame, textCol: String,
-      idCol: String, table: String, minAgree: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val loc = BucketedStore.tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = new org.apache.hadoop.fs.Path(loc, "_bloom")
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newNearUniqueBucketed(docs, textCol, idCol, table, minAgree)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = DedupStore.storeDataFiles(fs, loc)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newNearUniqueBucketed(docs, textCol, idCol, table,
-            minAgree)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val form = storedHashFormBucketed(spark, table)
-        val schema = schemaOf(form)
-        val bands = banded(docs, textCol, idCol, form)
-        // probe hashes strings; xx64 band keys cast to their decimal
-        // string, matching what the sidecar build recorded
-        val probeKey = col("bk").cast("string")
-        val hit = flaggedIds(bands.filter(mightContain(probeKey)),
-          storeTable(spark, table, form)
-            .withColumnRenamed("sig", "stored_sig"), minAgree)
-        val flagged =
-          if (residual.isEmpty) hit
-          else hit.unionByName(flaggedIds(
-            bands.filter(!mightContain(probeKey)),
-            // residual files stay small between rebuilds: broadcast
-            // them so the miss leg never shuffles the band stream
-            broadcast(DedupStore.minusTombstones(
-              spark.read.schema(schema)
-                .parquet(residual.map(_.toString): _*),
-              DedupStore.readTombstones(spark,
-                DedupStore.bucketedTombstonesDir(spark, table),
-                schema), Seq("band_key", "sig"))
-              .withColumnRenamed("sig", "stored_sig")),
-            minAgree))
-        antiJoinFlagged(docs, idCol, flagged)
-    }
-  }
-
-  /** Bloom sidecar over band_key for the bucketed table — the shared
-    * machinery; rebuild on the compaction schedule.
-    */
-  def buildBloomSidecarBucketed(spark: org.apache.spark.sql.SparkSession,
-      table: String, fpp: Double = 0.01, numShards: Int = 0): Long = {
-    ensureBucketedStore(spark, table)
-    BucketedStore.buildBloomSidecar(spark, table, "band_key", fpp,
-      numShards)
-  }
-
-  /** [[compactStore]] for the bucketed table — the shared staging-table
-    * swap (single maintenance writer assumed).
-    */
-  def compactBucketedStore(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Long, Long) =
-    BucketedStore.compact(spark, table, "band_key",
-      // hash form read INSIDE the transform — entry recovery first
-      df => DedupStore.minusTombstones(df,
-        DedupStore.readTombstones(spark,
-          DedupStore.bucketedTombstonesDir(spark, table),
-          schemaOf(storedHashFormBucketed(spark, table))),
-        Seq("band_key", "sig")))
 }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
@@ -35,9 +35,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   *
   * Scale posture: the store is ~1 hash row per corpus character — the
   * exhaustive flank, priced accordingly. The levers, composable with
-  * DedupStore's bucketed-catalog and Bloom-sidecar accelerations
-  * (same equi-join shape): (1) `stride` — record only every stride-th
-  * window; the probe still streams ALL windows of the new batch
+  * the [[StoreLayout.Bucketed]] layout (window hashes stored under a
+  * `content_hash` bucket column; only the batch's window stream
+  * shuffles) and the Bloom sidecar: (1) `stride` — record only every
+  * stride-th window; the probe still streams ALL windows of the new batch
   * (alignment between copy and original differs, content equality does
   * not), so a copied passage of length L still matches
   * ⌊(L−k+1)/stride⌋ recorded windows and the effective share threshold
@@ -52,10 +53,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * identity byte-identical with q101's oracle-checked one). (3) q101
   * itself as the in-corpus pre-pass, so only survivors probe history.
   */
-object SpanStore {
-
-  private val storeSchema = StructType(Seq(StructField("h", StringType)))
-  private val storeSchemaXx = StructType(Seq(StructField("h", LongType)))
+object SpanStore extends KeyStore[StoreLayout](KeySpec("SpanStore",
+    form => StructType(Seq(StructField("h",
+      if (form == HashForm.Xx) LongType else StringType))),
+    "h", formProp = "graft.span.hashform", tableCol = "content_hash")) {
 
   /** (doc_id, h) window stream via the shared q101 derivation —
     * `form` picks the window identity: `"md5"` (32-char string, the
@@ -63,102 +64,24 @@ object SpanStore {
     * store and exchange per recorded character, the 100 TB form).
     */
   private def windows(docs: DataFrame, textCol: String, idCol: String,
-      k: Int, form: String = Md5Form): DataFrame = {
+      k: Int, form: String): DataFrame = {
     val base = docs.select(col(idCol).as("doc_id"),
       col(textCol).as("text"))
-    if (form == XxForm)
+    if (form == HashForm.Xx)
       graft.queries.LlmPipeline.windowHashes64Of(base, k)
     else graft.queries.LlmPipeline.windowHashesOf(base, k)
   }
 
-  // ── persisted hash form — the family-shared [[HashForm]] protocol
-  // (this store pioneered it; the flag files/properties are unchanged).
-
-  private[graft] val Md5Form = HashForm.Md5
-  private[graft] val XxForm = HashForm.Xx
-
-  /** The hash form the path store was recorded with (md5 if never
-    * declared — every store recorded before the flag existed is md5).
+  /** The stride the store was recorded with (1 if never strided —
+    * including stores recorded before stride persistence existed).
+    * The stride is a property of the RECORDED DATA: a store recorded at
+    * stride 4 holds a quarter of each document's windows, so every
+    * probe against it divides its share threshold by 4 — persisting it
+    * next to the data is what makes the scaling automatic and a
+    * mixed-stride store impossible.
     */
-  def storedHashForm(spark: SparkSession, storePath: String): String =
-    HashForm.storedPath(spark, storePath)
-
-  private def commitHashForm(spark: SparkSession, storePath: String,
-      form: String): Unit =
-    HashForm.commitPath(spark, storePath, form, "SpanStore")
-
-  private def schemaOf(form: String): StructType =
-    if (form == XxForm) storeSchemaXx else storeSchema
-
-  // ── persisted stride ───────────────────────────────────────────────
-  //
-  // The stride is a property of the RECORDED DATA, not of any one call:
-  // a store recorded at stride 4 holds a quarter of each document's
-  // windows, so every probe against it must divide its share threshold
-  // by 4 — silently probing with the unscaled default under-flags by
-  // exactly the stride. Persisting it next to the data (not in a
-  // caller's head) is what makes the scaling automatic and a
-  // mixed-stride store impossible.
-
-  private def stridePath(storePath: String) =
-    new org.apache.hadoop.fs.Path(storePath + ".stride")
-
-  /** The stride the path store was recorded with (1 if never strided —
-    * including stores recorded before stride persistence existed, which
-    * were stride-1 by default).
-    */
-  def storedStride(spark: SparkSession, storePath: String): Int = {
-    val p = stridePath(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 1
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    }
-  }
-
-  /** Record the stride before the first strided append; refuse a
-    * stride that contradicts what the store already holds.
-    */
-  private def commitStride(spark: SparkSession, storePath: String,
-      stride: Int): Unit = {
-    val existing = storedStride(spark, storePath)
-    if (existing == stride) {
-      if (stride == 1) return // default — nothing to persist
-    } else {
-      val p = new org.apache.hadoop.fs.Path(storePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      // a non-empty store recorded at another stride cannot be extended
-      // at this one — the share scaling would be undefined
-      require(!fs.exists(p) || DedupStore.storeDataFiles(fs, p).isEmpty,
-        s"SpanStore $storePath was recorded with stride $existing; " +
-          s"cannot record at stride $stride (mixed-stride share " +
-          "thresholds are undefined — use a fresh store)")
-      val sp = stridePath(storePath)
-      val tmp = new org.apache.hadoop.fs.Path(sp.getParent,
-        sp.getName + s".tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(stride.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(sp, false)
-      require(fs.rename(tmp, sp), s"SpanStore: could not install $sp")
-    }
-  }
-
-  private def storeHashes(spark: SparkSession, storePath: String,
-      schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val base =
-      if (fs.exists(p)) spark.read.schema(schema).parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    DedupStore.minusTombstones(base,
-      DedupStore.readTombstones(spark,
-        DedupStore.tombstonesPath(storePath), schema), Seq("h"))
-  }
+  def storedStride(spark: SparkSession, layout: StoreLayout): Int =
+    layout.meta(spark)._2
 
   /** The batch's recordable window rows — stride-picked and
     * form-hashed exactly as [[recordWindows]] stores them; ONE
@@ -166,50 +89,30 @@ object SpanStore {
     * stored.
     */
   private def pickedWindows(docs: DataFrame, textCol: String,
-      idCol: String, stride: Int, k: Int,
-      form: String = Md5Form): DataFrame = {
+      idCol: String, stride: Int, k: Int, form: String): DataFrame = {
     val w = windows(docs, textCol, idCol, k, form)
-    if (stride <= 1) w
-    else w.filter((col("pos") - lit(1L)) % lit(stride.toLong) === 0L)
+    (if (stride <= 1) w
+    else w.filter((col("pos") - lit(1L)) % lit(stride.toLong) === 0L))
+      .select("h")
   }
 
-  // ── Retraction (takedown) — DedupStore's two-phase protocol over
-  // the window hashes (see the comment block there). Span membership
-  // is CONTENT-addressed: retracting a document tombstones its window
-  // hashes, so spans another document SHARES with it (boilerplate both
-  // carry) stop counting as recycled until something re-records them —
-  // the conservative direction for takedown (text adjacent to removed
+  // ── Retraction (takedown) — the [[StoreLayout]] two-phase protocol
+  // over the window hashes. Span membership is CONTENT-addressed:
+  // retracting a document tombstones its window hashes, so spans
+  // another document SHARES with it (boilerplate both carry) stop
+  // counting as recycled until something re-records them — the
+  // conservative direction for takedown (text adjacent to removed
   // content is admitted, never over-flagged).
 
   /** Phase 1: tombstone `docs`' window hashes, computed at the store's
-    * PERSISTED stride (the same pick recording used). Probes subtract
-    * immediately; the next [[compactStore]] drops the rows physically.
+    * PERSISTED stride and form (the same pick recording used). Probes
+    * subtract immediately; the next compaction drops the rows.
     */
   def retract(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String,
+      layout: StoreLayout,
       k: Int = graft.queries.LlmPipeline.SpanK): Unit = {
-    val spark = docs.sparkSession
-    val stride = storedStride(spark, storePath)
-    val form = storedHashForm(spark, storePath)
-    DedupStore.appendTombstones(
-      pickedWindows(docs, textCol, idCol, stride, k, form).select("h"),
-      DedupStore.tombstonesPath(storePath))
-  }
-
-  /** [[retract]] for the bucketed store table (hashes live under the
-    * DedupStore table shape's `content_hash` column).
-    */
-  def retractBucketed(docs: DataFrame, textCol: String, idCol: String,
-      table: String,
-      k: Int = graft.queries.LlmPipeline.SpanK): Unit = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val stride = storedStrideBucketed(spark, table)
-    val form = storedHashFormBucketed(spark, table)
-    DedupStore.appendTombstones(
-      pickedWindows(docs, textCol, idCol, stride, k, form)
-        .select(col("h").as("content_hash")),
-      DedupStore.bucketedTombstonesDir(spark, table))
+    val (form, stride) = layout.meta(docs.sparkSession)
+    layout.retract(spec, pickedWindows(docs, textCol, idCol, stride, k, form))
   }
 
   /** Rows of `docs` whose recycled-text share vs HISTORY stays below
@@ -218,26 +121,28 @@ object SpanStore {
     * the flagged ids. Returns the original rows/columns of survivors.
     * `maxDupShare` is the SEMANTIC share of recycled text — the probe
     * reads the store's persisted stride and scales the threshold by
-    * 1/stride itself (class doc).
+    * 1/stride itself (class doc). With a sidecar, bloom-hit windows
+    * semi-join the live store and bloom-miss windows only the broadcast
+    * residual: the legs are disjoint, so every matched POSITION is
+    * counted exactly as the plain join counts it — which keeps the
+    * dup-share invariant under duplicate-id / null-id-cohort row
+    * multiplicity.
     */
   def newSpanUnique(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, maxDupShare: Double = 0.5,
+      layout: StoreLayout, maxDupShare: Double = 0.5,
       k: Int = graft.queries.LlmPipeline.SpanK): DataFrame = {
-    val spark = docs.sparkSession
-    val form = storedHashForm(spark, storePath)
+    val (form, stride) = layout.meta(docs.sparkSession)
     flagSurvivors(docs, textCol, idCol,
-      windows(docs, textCol, idCol, k, form)
-        .join(storeHashes(spark, storePath, schemaOf(form)), Seq("h"),
-          "left_semi"),
-      maxDupShare / storedStride(spark, storePath), k)
+      layout.probe(spec, form, windows(docs, textCol, idCol, k, form))(
+        _.join(_, Seq("h"), "left_semi")),
+      maxDupShare / stride, k)
   }
 
-  /** Threshold + anti-join shared by the plain and Bloom paths:
-    * `matchedPositions` is the (doc_id, pos, …) stream of batch windows
-    * found in the store history. Null ids are one identity end-to-end:
-    * the totals⋈matched join and the final anti-join are BOTH null-safe
-    * (a plain using-column join would silently drop the null-id cohort
-    * before the threshold test).
+  /** Threshold + anti-join: `matchedPositions` is the (doc_id, pos, …)
+    * stream of batch windows found in the store history. Null ids are
+    * one identity end-to-end: the totals⋈matched join and the final
+    * anti-join are BOTH null-safe (a plain using-column join would
+    * silently drop the null-id cohort before the threshold test).
     */
   private def flagSurvivors(docs: DataFrame, textCol: String,
       idCol: String, matchedPositions: DataFrame, maxDupShare: Double,
@@ -260,326 +165,19 @@ object SpanStore {
   /** Mark `docs` as seen: append their distinct window hashes (every
     * stride-th position; stride 1 = all). Call AFTER survivors are
     * durably persisted (two-phase contract), ideally on the persisted
-    * read-back. The pre-append localCheckpoint pins the batch's hashes
-    * before the append job could scan the directory it extends (the
-    * family's self-scan guard). At-least-once re-records append
-    * duplicate rows; [[compactStore]] reclaims them.
+    * read-back. `stride` and `hashForm` are persisted with the store on
+    * its first append (empty form FOLLOWS the store's recorded one, so
+    * a long-running appender needs no form plumbing); recording at
+    * another stride or form into a non-empty store is refused.
     */
   def recordWindows(docs: DataFrame, textCol: String, idCol: String,
-      storePath: String, stride: Int = 1,
+      layout: StoreLayout, stride: Int = 1,
       k: Int = graft.queries.LlmPipeline.SpanK,
       hashForm: String = ""): Unit = {
     require(stride >= 1, s"stride must be >= 1, got $stride")
-    // empty form = FOLLOW the store's recorded form (md5 for a fresh
-    // store) — so a long-running appender (the streamed span pipeline)
-    // needs no form plumbing and can never trip the mixed-form guard
-    // against a store someone declared xxh64
-    val form =
-      if (hashForm.isEmpty) storedHashForm(docs.sparkSession, storePath)
-      else hashForm
-    // stride + form first: a crash between the commits leaves an
-    // empty-or-partial store whose persisted properties already match
-    // what this append would have recorded — probes stay correct
-    // either side
-    commitStride(docs.sparkSession, storePath, stride)
-    commitHashForm(docs.sparkSession, storePath, form)
-    val rows = pickedWindows(docs, textCol, idCol, stride, k, form)
-      .select("h").distinct().localCheckpoint(true)
-    try rows.write.mode(SaveMode.Append).parquet(storePath)
-    finally rows.unpersist()
+    val form = HashForm.resolve(hashForm,
+      storedHashForm(docs.sparkSession, layout))
+    layout.record(spec, form, stride,
+      pickedWindows(docs, textCol, idCol, stride, k, form))
   }
-
-  /** Build/replace the store's Bloom sidecar — DedupStore's sidecar
-    * (same on-disk format, shared plumbing) over the window hashes.
-    * The span store is the family's LARGEST (~1 row per recorded
-    * character), so the sidecar matters most here: a mostly-novel
-    * batch's windows are overwhelmingly bloom misses, and a miss is
-    * PROOF the window was never recorded — those rows skip the store
-    * join entirely. Rebuild on the compaction schedule, as with the
-    * siblings.
-    */
-  def buildBloomSidecar(spark: SparkSession, storePath: String,
-      fpp: Double = 0.01, numShards: Int = 0): Long =
-    DedupStore.buildPathSidecar(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)), "h", fpp, numShards)
-
-  /** [[newSpanUnique]] accelerated by the Bloom sidecar, split DISJOINT
-    * on the bloom predicate: hit windows semi-join the CURRENT store
-    * files (covered + residual — exactly the membership question), miss
-    * windows can only match post-sidecar appends and semi-join just the
-    * residual files, with the small residual side broadcast so the miss
-    * leg never shuffles the amplified window stream. Disjoint legs =
-    * plain union: every matched POSITION is counted exactly as the
-    * plain path counts it, which keeps the dup-share invariant under
-    * duplicate-id / null-id-cohort row multiplicity (a position dedup
-    * here would halve the pooled cohort's share). The window stream is
-    * generated once per leg — generation is the embarrassingly-parallel
-    * cheap part; the exchange, which is the scale cost, happens at most
-    * once (the hit leg's semi-join).
-    */
-  def newSpanUniqueWithBloom(docs: DataFrame, textCol: String,
-      idCol: String, storePath: String, maxDupShare: Double = 0.5,
-      k: Int = graft.queries.LlmPipeline.SpanK): DataFrame = {
-    val spark = docs.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    val effShare = maxDupShare / storedStride(spark, storePath)
-    val form = storedHashForm(spark, storePath)
-    val schema = schemaOf(form)
-    val manifest = DedupStore.sidecarPath(storePath)
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newSpanUnique(docs, textCol, idCol, storePath, maxDupShare, k)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = DedupStore.storeDataFiles(fs, store)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newSpanUnique(docs, textCol, idCol, storePath,
-            maxDupShare, k)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val tomb = DedupStore.readTombstones(spark,
-          DedupStore.tombstonesPath(storePath), schema)
-        val w = windows(docs, textCol, idCol, k, form)
-        // the probe expression hashes STRINGS; the xx64 form's long
-        // hashes cast to their decimal string — bit-identical to what
-        // the sidecar build cast when it recorded them
-        val hitMatched = w.filter(mightContain(col("h").cast("string")))
-          .join(DedupStore.minusTombstones(
-            spark.read.schema(schema)
-              .parquet(current.map(_.toString): _*), tomb, Seq("h")),
-            Seq("h"), "left_semi")
-        val matchedPositions =
-          if (residual.isEmpty) hitMatched
-          else hitMatched.unionByName(
-            w.filter(!mightContain(col("h").cast("string")))
-              .join(broadcast(DedupStore.minusTombstones(
-                spark.read.schema(schema)
-                  .parquet(residual.map(_.toString): _*), tomb,
-                Seq("h"))),
-                Seq("h"), "left_semi"))
-        flagSurvivors(docs, textCol, idCol, matchedPositions,
-          effShare, k)
-    }
-  }
-
-  /** Maintenance: one row per hash — reclaims at-least-once
-    * re-deliveries, same machinery as the sibling stores.
-    */
-  def compactStore(spark: SparkSession, storePath: String,
-      targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return (0, 0)
-    DedupStore.compactApplyingTombstones(spark, storePath,
-      schemaOf(storedHashForm(spark, storePath)), Seq("h"),
-      targetFileBytes)
-  }
-
-  // ── bucketed-catalog store form (the 100 TB path) ──────────────────
-  //
-  // Both stores in this family's catalog form are a SINGLE hash
-  // column, so the span store's bucketed table IS a DedupStore
-  // bucketed table — layout, swap-recovery, compaction, and the
-  // in-table `_bloom` sidecar are DedupStore's machinery verbatim
-  // (window hashes stored under its `content_hash` column). Only the
-  // probe differs: batch WINDOWS semi-join the history (how much text
-  // is recycled), where whole documents anti-join it (is this exact
-  // content new). The bucketed scan satisfies the semi-join's hash
-  // distribution straight off the files: only the batch's window
-  // stream shuffles, the ever-growing store side NEVER does — on the
-  // family's largest store, the form that holds up after a year of
-  // recording.
-
-  /** Create the bucketed span-store table if absent (idempotent;
-    * recovers a compaction crash first). Size `buckets` for the TARGET
-    * window-hash volume — this store grows ~1 row per recorded
-    * character, so err high.
-    */
-  def ensureBucketedStore(spark: SparkSession, table: String,
-      buckets: Int = 32): Unit =
-    DedupStore.ensureBucketedStore(spark, table, buckets)
-
-  private val StrideProp = "graft.span.stride"
-  private val HashFormProp = "graft.span.hashform"
-
-  /** The stride the bucketed store was recorded with (table property;
-    * [[BucketedStore.compact]] carries `graft.*` properties across its
-    * staging-table swap, so it survives compaction).
-    */
-  def storedStrideBucketed(spark: SparkSession, table: String): Int =
-    spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .properties.get(StrideProp).map(_.toInt).getOrElse(1)
-
-  private def commitStrideBucketed(spark: SparkSession, table: String,
-      stride: Int): Unit = {
-    val existing = storedStrideBucketed(spark, table)
-    if (existing == stride) return
-    require(spark.table(table).isEmpty,
-      s"SpanStore table $table was recorded with stride $existing; " +
-        s"cannot record at stride $stride (mixed-stride share " +
-        "thresholds are undefined — use a fresh store)")
-    spark.sql(
-      s"ALTER TABLE $table SET TBLPROPERTIES ('$StrideProp' = '$stride')")
-  }
-
-  /** The hash form the bucketed store was recorded with (table
-    * property, compaction-surviving like the stride; md5 if never
-    * declared).
-    */
-  def storedHashFormBucketed(spark: SparkSession, table: String): String =
-    HashForm.storedBucketed(spark, table, HashFormProp)
-
-  /** The bucketed table shape per hash form: the DedupStore string
-    * shape for md5, an 8-byte long `content_hash` for xxh64 (same
-    * bucket column, 4× narrower at rest and in the batch exchange).
-    */
-  private def bucketedSchemaOf(form: String): StructType =
-    if (form == XxForm)
-      StructType(Seq(StructField("content_hash", LongType)))
-    else StructType(Seq(StructField("content_hash", StringType)))
-
-  private def commitHashFormBucketed(spark: SparkSession, table: String,
-      form: String): Unit =
-    HashForm.commitBucketed(spark, table, HashFormProp, form,
-      bucketedSchemaOf, "content_hash", "SpanStore")
-
-  /** The bucketed store's scan minus live tombstones, read with the
-    * store's own hash-form schema.
-    */
-  private def storeTableBucketed(spark: SparkSession, table: String,
-      form: String): DataFrame =
-    DedupStore.minusTombstones(spark.table(table),
-      DedupStore.readTombstones(spark,
-        DedupStore.bucketedTombstonesDir(spark, table),
-        bucketedSchemaOf(form)), Seq("content_hash"))
-
-  /** [[newSpanUnique]] against the bucketed store table — zero
-    * exchanges on the store side of the window semi-join (LayoutSpec
-    * asserts it).
-    */
-  def newSpanUniqueBucketed(docs: DataFrame, textCol: String,
-      idCol: String, table: String, maxDupShare: Double = 0.5,
-      k: Int = graft.queries.LlmPipeline.SpanK): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val form = storedHashFormBucketed(spark, table)
-    flagSurvivors(docs, textCol, idCol,
-      windows(docs, textCol, idCol, k, form)
-        // the bucketed scan minus live tombstones (the retraction
-        // contract; broadcast anti-join, zero-exchange preserved)
-        .join(storeTableBucketed(spark, table, form)
-          .withColumnRenamed("content_hash", "h"), Seq("h"), "left_semi"),
-      maxDupShare / storedStrideBucketed(spark, table), k)
-  }
-
-  /** [[recordWindows]] into the bucketed store table: one bucketed
-    * append of the batch's distinct (optionally strided) window
-    * hashes, pre-append-checkpointed like the sibling record steps.
-    */
-  def recordWindowsBucketed(docs: DataFrame, textCol: String,
-      idCol: String, table: String, stride: Int = 1,
-      k: Int = graft.queries.LlmPipeline.SpanK,
-      hashForm: String = ""): Unit = {
-    require(stride >= 1, s"stride must be >= 1, got $stride")
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    // empty form = follow the table's recorded form (see recordWindows)
-    val form =
-      if (hashForm.isEmpty) storedHashFormBucketed(spark, table)
-      else hashForm
-    commitStrideBucketed(spark, table, stride)
-    commitHashFormBucketed(spark, table, form)
-    val b = DedupStore.bucketsOf(spark, table)
-    val mat = pickedWindows(docs, textCol, idCol, stride, k, form)
-      .select(col("h").as("content_hash"))
-      .distinct().localCheckpoint(true)
-    try mat.write.mode(SaveMode.Append)
-      .bucketBy(b, "content_hash").sortBy("content_hash")
-      .format("parquet").saveAsTable(table)
-    finally mat.unpersist()
-  }
-
-  /** [[newSpanUniqueBucketed]] accelerated by the table's `_bloom`
-    * sidecar, preserving the zero-exchange property: bloom-HIT windows
-    * semi-join the full catalog table (covered + residual — exactly
-    * the membership question, no second leg needed), bloom-MISS
-    * windows can only match post-sidecar appends and semi-join just
-    * the residual files. The two legs are DISJOINT by the filter
-    * predicate, so their union needs no position dedup. No sidecar or
-    * no surviving covered files falls back to the plain bucketed form.
-    */
-  def newSpanUniqueBucketedWithBloom(docs: DataFrame, textCol: String,
-      idCol: String, table: String, maxDupShare: Double = 0.5,
-      k: Int = graft.queries.LlmPipeline.SpanK): DataFrame = {
-    val spark = docs.sparkSession
-    ensureBucketedStore(spark, table)
-    val effShare = maxDupShare / storedStrideBucketed(spark, table)
-    val form = storedHashFormBucketed(spark, table)
-    val loc = DedupStore.tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = new org.apache.hadoop.fs.Path(loc, "_bloom")
-    DedupStore.readSidecar(fs, manifest).flatMap(sc =>
-        DedupStore.probeFor(spark, fs, manifest, sc).map((sc, _))) match {
-      case None =>
-        newSpanUniqueBucketed(docs, textCol, idCol, table, maxDupShare, k)
-      case Some((sc, mightContain)) =>
-        val coveredNames = sc.covered
-        val current = DedupStore.storeDataFiles(fs, loc)
-        if (!current.exists(f => coveredNames.contains(f.getName)))
-          return newSpanUniqueBucketed(docs, textCol, idCol, table,
-            maxDupShare, k)
-        val residual =
-          current.filterNot(f => coveredNames.contains(f.getName))
-        val tomb = DedupStore.readTombstones(spark,
-          DedupStore.bucketedTombstonesDir(spark, table),
-          bucketedSchemaOf(form))
-        val w = windows(docs, textCol, idCol, k, form)
-        // string-cast for the probe expression — identity for md5,
-        // decimal string for xx64 longs, matching the sidecar build
-        val hitMatched = w.filter(mightContain(col("h").cast("string")))
-          .join(storeTableBucketed(spark, table, form)
-            .withColumnRenamed("content_hash", "h"), Seq("h"), "left_semi")
-        val matchedPositions =
-          if (residual.isEmpty) hitMatched
-          else hitMatched.unionByName(
-            w.filter(!mightContain(col("h").cast("string")))
-              // residual files stay small between rebuilds: broadcast
-              // them so the miss leg never shuffles the window stream
-              .join(broadcast(DedupStore.minusTombstones(
-                spark.read.schema(bucketedSchemaOf(form))
-                  .parquet(residual.map(_.toString): _*), tomb,
-                Seq("content_hash"))
-                .withColumnRenamed("content_hash", "h")),
-                Seq("h"), "left_semi"))
-        flagSurvivors(docs, textCol, idCol, matchedPositions,
-          effShare, k)
-    }
-  }
-
-  /** Bloom sidecar for the bucketed table — DedupStore's, verbatim
-    * (same table shape). Rebuild on the compaction schedule.
-    */
-  def buildBloomSidecarBucketed(spark: SparkSession, table: String,
-      fpp: Double = 0.01, numShards: Int = 0): Long =
-    DedupStore.buildBloomSidecarBucketed(spark, table, fpp, numShards)
-
-  /** [[compactStore]] for the bucketed table — the shared staging-
-    * table swap with this store's OWN tombstone application (the
-    * hash-form schema differs from DedupStore's string shape under
-    * xxh64; single maintenance writer assumed).
-    */
-  def compactBucketedStore(spark: SparkSession,
-      table: String): (Long, Long) =
-    // the hash form is read INSIDE the transform — compact's entry
-    // recovery has run by then, so a half-swapped table's metadata is
-    // never consulted before it is repaired
-    BucketedStore.compact(spark, table, "content_hash",
-      df => DedupStore.minusTombstones(df,
-        DedupStore.readTombstones(spark,
-          DedupStore.bucketedTombstonesDir(spark, table),
-          bucketedSchemaOf(storedHashFormBucketed(spark, table))),
-        Seq("content_hash")))
 }

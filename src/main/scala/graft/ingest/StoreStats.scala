@@ -2,9 +2,8 @@ package graft.ingest
 
 import org.apache.spark.sql.SparkSession
 
-/** Operational statistics + maintenance signals for the incremental-
-  * dedup store family ([[DedupStore]], [[NearDupStore]], [[SpanStore]],
-  * both path and bucketed-catalog forms).
+/** Operational statistics + maintenance signals for the cross-run
+  * store family ([[KeyStore]]), in either [[StoreLayout]].
   *
   * The family's maintenance contract is spread across scaladocs:
   * compaction reclaims at-least-once re-deliveries AND physically
@@ -17,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * is safe to call at any frequency against a store of any size.
   *
   * `compactionDue` fires when the tombstone backlog passes half the
-  * [[DedupStore.tombstoneBroadcastCeiling]] (compact BEFORE probes
+  * [[StoreLayout.tombstoneBroadcastCeiling]] (compact BEFORE probes
   * fall off the broadcast plan, not after) or the data file count
   * passes `maxDataFiles`. `sidecarStale` fires when residual bytes —
   * appends the bloom filter does not cover — pass `maxResidualShare`
@@ -29,7 +28,7 @@ object StoreStats {
 
   /** One snapshot of a store's physical + maintenance state.
     * `hashForm`/`stride` echo the persisted recording discipline
-    * ([[HashForm]]; the stride is meaningful for span stores and
+    * ([[StoreLayout.meta]]; the stride is meaningful for span stores and
     * reads 1 — the recorded-nothing default — elsewhere).
     */
   final case class Stats(
@@ -44,28 +43,30 @@ object StoreStats {
   /** Residual share above which the sidecar counts as stale. */
   private val MaxResidualShare = 0.25
 
-  private def build(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path,
-      tombDir: org.apache.hadoop.fs.Path,
-      manifest: org.apache.hadoop.fs.Path,
-      hashForm: String, stride: Int, maxDataFiles: Int): Stats = {
-    val data = DedupStore.storeDataFileStatuses(fs, store)
-    val tomb = DedupStore.storeDataFileStatuses(fs, tombDir)
+  /** The report for the store at `layout` (any of the family: data
+    * files, tombstones and sidecar wherever the layout keeps them; the
+    * hash form and stride as the layout persisted them).
+    */
+  def of(spark: SparkSession, layout: StoreLayout,
+      maxDataFiles: Int = 256): Stats = {
+    val store = layout.dataDir(spark)
+    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    val data = StoreLayout.storeDataFileStatuses(fs, store)
+    val tomb = StoreLayout.storeDataFileStatuses(fs, layout.tombstoneDir(spark))
     val dataBytes = data.map(_.getLen).sum
     val tombBytes = tomb.map(_.getLen).sum
     // a sidecar counts as present only if its generation directory
     // still resolves — same liveness rule the probes apply
-    val sidecar = DedupStore.readSidecar(fs, manifest).filter { sc =>
-      fs.exists(new org.apache.hadoop.fs.Path(
-        fs.makeQualified(manifest).getParent, sc.shardDirName))
-    }
+    val manifest = layout.manifest(spark)
+    val sidecar = StoreLayout.readSidecar(fs, manifest)
+      .filter(sc => StoreLayout.liveGeneration(fs, manifest, sc).isDefined)
     val covered = sidecar.fold(Set.empty[String])(_.covered)
     val coveredLive = data.count(st => covered.contains(st.getPath.getName))
     val residual =
       data.filterNot(st => covered.contains(st.getPath.getName))
     val residualBytes = residual.map(_.getLen).sum
-    val ceiling = DedupStore.tombstoneBroadcastCeiling(spark)
+    val ceiling = StoreLayout.tombstoneBroadcastCeiling(spark)
+    val (hashForm, stride) = layout.meta(spark)
     Stats(
       dataFiles = data.size, dataBytes = dataBytes,
       tombstoneFiles = tomb.size, tombstoneBytes = tombBytes,
@@ -77,41 +78,5 @@ object StoreStats {
         tombBytes > ceiling / 2 || data.size > maxDataFiles,
       sidecarStale = data.nonEmpty && (sidecar.isEmpty ||
         residualBytes.toDouble > MaxResidualShare * dataBytes))
-  }
-
-  /** Stats for a PATH-form store ([[DedupStore]]/[[NearDupStore]]/
-    * [[SpanStore]] `storePath` — they share the layout: data files +
-    * `.tombstones` + `.bloom` + `.hashform`/`.stride` siblings).
-    */
-  def path(spark: SparkSession, storePath: String,
-      maxDataFiles: Int = 256): Stats = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    build(spark, fs, store, DedupStore.tombstonesPath(storePath),
-      DedupStore.sidecarPath(storePath),
-      HashForm.storedPath(spark, storePath),
-      SpanStore.storedStride(spark, storePath), maxDataFiles)
-  }
-
-  /** Stats for a BUCKETED-catalog store table (any of the family —
-    * `_tombstones`/`_bloom` live inside the table directory; the hash
-    * form is read from whichever `graft.*.hashform` property the
-    * owning store recorded, and the span stride from its property).
-    */
-  def bucketed(spark: SparkSession, table: String,
-      maxDataFiles: Int = 256): Stats = {
-    val loc = BucketedStore.tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .properties
-    val form = props.collectFirst {
-      case (k, v) if k.startsWith("graft.") && k.endsWith(".hashform") => v
-    }.getOrElse(HashForm.Md5)
-    val stride = props.get("graft.span.stride").map(_.toInt).getOrElse(1)
-    build(spark, fs, loc,
-      DedupStore.bucketedTombstonesDir(spark, table),
-      new org.apache.hadoop.fs.Path(loc, "_bloom"),
-      form, stride, maxDataFiles)
   }
 }

@@ -354,7 +354,7 @@ object AnnIndex {
     */
   def retrainFromStats(spark: SparkSession, root: String): String = {
     val fs = fsOf(spark, root)
-    val snap = graft.ingest.DedupStore.storeDataFiles(fs,
+    val snap = graft.ingest.StoreLayout.storeDataFiles(fs,
       retractedDir(root))
     val vectors = minusRetractedSnapshot(spark, snap,
       spark.read.parquet(currentIndexDir(spark, root))
@@ -691,7 +691,7 @@ object AnnIndex {
     // install — a retraction landing mid-retrain stays live for the
     // next rewrite (the stores' snapshot-bounded clear, applied here)
     val fs = fsOf(spark, root)
-    val snap = graft.ingest.DedupStore.storeDataFiles(fs,
+    val snap = graft.ingest.StoreLayout.storeDataFiles(fs,
       retractedDir(root))
     val vectors = minusRetractedSnapshot(spark, snap,
       spark.read.parquet(currentIndexDir(spark, root))
@@ -765,7 +765,7 @@ object AnnIndex {
     * feed arrives in.
     */
   def retractFrame(ids: DataFrame, root: String): Unit =
-    graft.ingest.DedupStore.appendTombstones(
+    graft.ingest.StoreLayout.appendTombstones(
       ids.select(col("vec_id").cast("long").as("vec_id")),
       retractedDir(root))
 
@@ -774,10 +774,10 @@ object AnnIndex {
     */
   private def readRetracted(spark: SparkSession,
       root: String): Option[DataFrame] =
-    graft.ingest.DedupStore.readTombstones(spark, retractedDir(root),
+    graft.ingest.StoreLayout.readTombstones(spark, retractedDir(root),
       retractedSchema)
 
-  // the retraction frame arrives pre-wrapped by DedupStore.gatedHint:
+  // the retraction frame arrives pre-wrapped by StoreLayout.gatedHint:
   // broadcast while takedown-list-sized, plain shuffle anti-join above
   // the ceiling (the stores' OOM guard, shared)
   private def minusRetracted(spark: SparkSession, root: String,
@@ -788,7 +788,7 @@ object AnnIndex {
   private def retractedSnapshotFrame(spark: SparkSession,
       snap: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
     val fs = snap.head.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.ingest.DedupStore.gatedHint(spark,
+    graft.ingest.StoreLayout.gatedHint(spark,
       spark.read.schema(retractedSchema)
         .parquet(snap.map(_.toString): _*),
       snap.map(p => fs.getFileStatus(p).getLen).sum)
@@ -816,7 +816,7 @@ object AnnIndex {
     val fs = fsOf(spark, root)
     val curGen = currentGeneration(spark, root).getOrElse(
       throw new IllegalStateException(s"no installed generation at $root"))
-    val snap = graft.ingest.DedupStore.storeDataFiles(fs,
+    val snap = graft.ingest.StoreLayout.storeDataFiles(fs,
       retractedDir(root))
     if (snap.isEmpty) return curGen
     val curDir = s"$root/$curGen"

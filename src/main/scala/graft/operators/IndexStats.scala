@@ -71,10 +71,10 @@ object IndexStats {
       .getModificationTime
     val data = AnnIndex.listCidFiles(fs, genDir, None)
     val dataBytes = data.map(_._2.getLen).sum
-    val retracted = graft.ingest.DedupStore.storeDataFileStatuses(fs,
+    val retracted = graft.ingest.StoreLayout.storeDataFileStatuses(fs,
       AnnIndex.retractedDir(root))
     val retractedBytes = retracted.map(_.getLen).sum
-    val ceiling = graft.ingest.DedupStore.tombstoneBroadcastCeiling(spark)
+    val ceiling = graft.ingest.StoreLayout.tombstoneBroadcastCeiling(spark)
     // the MANIFEST is the sidecar's commit point (codes without one
     // are a partial build and serve nothing) — same liveness rule the
     // PQ probes apply

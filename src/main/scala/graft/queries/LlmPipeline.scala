@@ -4535,7 +4535,7 @@ object LlmPipeline {
     * registering the % 7 ∈ {2, 5} domain slices through
     * [[graft.ingest.DedupStore.recordHashes]] (a blocklist IS a
     * content-hash store whose keys are domains — zero new machinery),
-    * and the gate via `newUnseenWithBloom` — the membership shape
+    * and the gate via `newUnseen` — the membership shape
     * that preserves row MULTIPLICITY (every doc of an unlisted domain
     * survives; `newUnique`'s keeper collapse would be wrong here).
     * The oracle replays the synthesis + the slice rule semantically;
@@ -4577,7 +4577,7 @@ object LlmPipeline {
       .select("doc_id", "domain")
     val store = blocklistStandingStore(s, dir)
     val kept = graft.ingest.DedupStore
-      .newUnseenWithBloom(withDomain, "domain", store)
+      .newUnseen(withDomain, "domain", store)
     withDomain.groupBy("domain").agg(count(lit(1)).as("n_docs"))
       .join(kept.groupBy("domain").agg(count(lit(1)).as("n_kept")),
         Seq("domain"), "left_outer")
@@ -4738,7 +4738,7 @@ object LlmPipeline {
     val lidDense = lidModelStanding(s, dir)
     val ulmVocab = ulmVocabStanding(s, dir)
     val afterBlock = graft.ingest.DedupStore
-      .newUnseenWithBloom(
+      .newUnseen(
         withDomainOf(docs).select("doc_id", "text", "n_chars", "domain"),
         "domain", blockStore)
       .select("doc_id", "text", "n_chars")
@@ -4748,7 +4748,7 @@ object LlmPipeline {
         Q150KeepLangs)
       .transform(graft.operators.Exec.materialize)
     val afterContam = graft.ingest.ContaminationStore
-      .newCleanWithBloom(afterLid, "text", "doc_id", contamStore)
+      .newClean(afterLid, "text", "doc_id", contamStore)
       .transform(graft.operators.Exec.materialize)
     val (passed, admitted, exact, labels) =
       pipelineStagesOf(afterContam, materializePassed = true,

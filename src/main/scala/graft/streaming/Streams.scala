@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.Tables
-import graft.ingest.{Ingest, Warehouse}
+import graft.ingest.{Ingest, StoreLayout, Warehouse}
 
 /** Structured Streaming port of the reference's poll loop (reference:
   * etl/app.py:253-278, operator O1 in SURVEY.md §2.1) plus the event-time
@@ -1276,26 +1276,6 @@ object Streams {
         new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
       .map(_.getPath.getName.stripPrefix("batch=").toLong)
 
-  /** Where a cross-run dedup store lives: a parquet directory
-    * ([[Path]]) or a bucketed catalog table ([[Bucketed]]). The layout
-    * picks the store's probe, record, compaction, sidecar rebuild and
-    * [[graft.ingest.StoreStats]] signal; every probe is bloom-aware
-    * (identical answers with no sidecar, and micro-batches skip the
-    * covered history once one is built).
-    */
-  sealed trait StoreLayout
-
-  final case class Path(dir: String) extends StoreLayout
-
-  /** A bucketed catalog table, created on first use with `buckets` (an
-    * existing table's bucket count wins). Its probes plan zero
-    * exchanges on the ever-growing store side (LayoutSpec-pinned) —
-    * the form that holds up when a stream has been recording for a
-    * year; the in-table sidecar retires with compaction's swap.
-    */
-  final case class Bucketed(table: String, buckets: Int = 32)
-      extends StoreLayout
-
   /** One step of a [[curationFeed]] micro-batch. `check` narrows the
     * batch: a gate drops rejects, a store probe drops what its history
     * already holds, a fingerprint stage joins hash columns onto the
@@ -1421,8 +1401,9 @@ object Streams {
     curationFeed(docs,
       fullStackStages(textCol, idCol, keyCol, blocklistStorePath,
         lidModels, lidDims, keepLangSet, contamStorePath, denseWeights,
-        thFp, dims, ulmVocab, minLlMeanFp, Path(exactStorePath),
-        Path(nearStorePath), Path(spanStorePath), minSharedGrams,
+        thFp, dims, ulmVocab, minLlMeanFp, StoreLayout.Path(exactStorePath),
+        StoreLayout.Path(nearStorePath), StoreLayout.Path(spanStorePath),
+        minSharedGrams,
         ulmMaxLen, extractMainContent),
       outDir, checkpointDir, maintenanceEvery, yieldDir,
       rejectSampleSlots, idCol, textCol)
@@ -1470,65 +1451,33 @@ object Streams {
       spanDedup(span, textCol, idCol))
   }
 
-  /** A store's calls in one layout form. */
-  private final case class StoreOps(
-      probe: (DataFrame, String) => DataFrame,
-      record: (DataFrame, String) => Unit,
-      compact: (SparkSession, String) => Unit,
-      sidecar: (SparkSession, String) => Unit)
-
-  /** A dedup store as a stage: `layout` picks the path or bucketed
-    * calls (a bucketed table is ensured now, at its requested size).
+  /** A store as a stage: `check` probes it, `record` marks the
+    * committed survivors seen, and `maintain` is the store's own
+    * [[graft.ingest.KeyStore.maintain]]. The store is ensured now (a
+    * bucketed table at its requested size).
     */
-  private def storeStage(label: String, layout: StoreLayout,
-      path: StoreOps, bucketed: StoreOps,
-      ensure: (SparkSession, String, Int) => Unit,
+  private def storeStage[L <: StoreLayout](label: String,
+      store: graft.ingest.KeyStore[L], layout: L)(
+      check: DataFrame => DataFrame, record: DataFrame => Unit = _ => (),
       addedColumns: Seq[StructField] = Nil): Stage = {
-    val (ops, at, stats) = layout match {
-      case Path(dir) =>
-        (path, dir, graft.ingest.StoreStats.path(_: SparkSession, dir))
-      case Bucketed(table, buckets) =>
-        ensure(SparkSession.active, table, buckets)
-        (bucketed, table,
-          graft.ingest.StoreStats.bucketed(_: SparkSession, table))
-    }
-    Stage(label, ops.probe(_, at), ops.record(_, at),
-      s => maintainIfDue(stats(s), ops.compact(s, at), ops.sidecar(s, at)),
-      addedColumns)
+    store.ensureStore(SparkSession.active, layout)
+    Stage(label, check, record, store.maintain(_, layout), addedColumns)
   }
-
-  /** Inline self-maintenance for a store, driven by the
-    * [[graft.ingest.StoreStats]] signals: compaction when
-    * `compactionDue` (the tombstone backlog is approaching the
-    * broadcast ceiling, or file-count pressure), always followed by a
-    * sidecar rebuild (the rewritten file names void the old sidecar's
-    * coverage); a sidecar rebuild alone when `sidecarStale` (residual
-    * share past 25%).
-    */
-  private def maintainIfDue(stats: graft.ingest.StoreStats.Stats,
-      compact: => Unit, rebuildSidecar: => Unit): Unit =
-    if (stats.compactionDue) { compact; rebuildSidecar }
-    else if (stats.sidecarStale) rebuildSidecar
 
   /** Cross-run EXACT dedup ([[graft.ingest.DedupStore]]) keyed on
     * `keyCol`'s normalized content hash: formatting variants of
     * anything ever recorded drop, within-batch copies collapse to the
-    * min-id keeper. Survivors carry the store's `content_hash`, which
-    * the record step reuses. The store is hash-agnostic: a media feed
-    * keys it on a fingerprint column (`__phash`, `__vhash`).
+    * min-id keeper. Survivors carry the store's `content_hash`, typed
+    * by the store's persisted hash form, which the record step reuses.
+    * The store is hash-agnostic: a media feed keys it on a fingerprint
+    * column (`__phash`, `__vhash`).
     */
   def exactDedup(layout: StoreLayout, keyCol: String,
       idCol: String): Stage = {
     val D = graft.ingest.DedupStore
-    storeStage(graft.operators.CurationOutcome.ExactDup, layout,
-      StoreOps(D.newUniqueWithBloom(_, keyCol, idCol, _),
-        D.recordHashes(_, keyCol, _), D.compactStore(_, _),
-        D.buildBloomSidecar(_, _)),
-      StoreOps(D.newUniqueBucketedWithBloom(_, keyCol, idCol, _),
-        D.recordHashesBucketed(_, keyCol, _), D.compactBucketedStore(_, _),
-        D.buildBloomSidecarBucketed(_, _)),
-      D.ensureBucketedStore(_, _, _),
-      Seq(StructField("content_hash", StringType)))
+    storeStage(graft.operators.CurationOutcome.ExactDup, D, layout)(
+      D.newUnique(_, keyCol, idCol, layout), D.recordHashes(_, keyCol, layout),
+      D.schemaOf(SparkSession.active, layout).fields.toSeq)
   }
 
   /** Cross-run NEAR dedup ([[graft.ingest.NearDupStore]]): documents
@@ -1538,14 +1487,9 @@ object Streams {
   def nearDedup(layout: StoreLayout, textCol: String,
       idCol: String): Stage = {
     val N = graft.ingest.NearDupStore
-    storeStage(graft.operators.CurationOutcome.NearDup, layout,
-      StoreOps(N.newNearUniqueWithBloom(_, textCol, idCol, _),
-        N.recordSignatures(_, textCol, idCol, _), N.compactStore(_, _),
-        N.buildBloomSidecar(_, _)),
-      StoreOps(N.newNearUniqueBucketedWithBloom(_, textCol, idCol, _),
-        N.recordSignaturesBucketed(_, textCol, idCol, _),
-        N.compactBucketedStore(_, _), N.buildBloomSidecarBucketed(_, _)),
-      N.ensureBucketedStore(_, _, _))
+    storeStage(graft.operators.CurationOutcome.NearDup, N, layout)(
+      N.newNearUnique(_, textCol, idCol, layout),
+      N.recordSignatures(_, textCol, idCol, layout))
   }
 
   /** Cross-run SPAN dedup ([[graft.ingest.SpanStore]]): documents whose
@@ -1556,15 +1500,9 @@ object Streams {
   def spanDedup(layout: StoreLayout, textCol: String, idCol: String,
       maxDupShare: Double = 0.5): Stage = {
     val S = graft.ingest.SpanStore
-    storeStage(graft.operators.CurationOutcome.SpanDup, layout,
-      StoreOps(S.newSpanUniqueWithBloom(_, textCol, idCol, _, maxDupShare),
-        S.recordWindows(_, textCol, idCol, _), S.compactStore(_, _),
-        S.buildBloomSidecar(_, _)),
-      StoreOps(
-        S.newSpanUniqueBucketedWithBloom(_, textCol, idCol, _, maxDupShare),
-        S.recordWindowsBucketed(_, textCol, idCol, _),
-        S.compactBucketedStore(_, _), S.buildBloomSidecarBucketed(_, _)),
-      S.ensureBucketedStore(_, _, _))
+    storeStage(graft.operators.CurationOutcome.SpanDup, S, layout)(
+      S.newSpanUnique(_, textCol, idCol, layout, maxDupShare),
+      S.recordWindows(_, textCol, idCol, layout))
   }
 
   /** Cross-run CDC-CHUNK dedup ([[graft.ingest.CdcChunkStore]]): the
@@ -1575,15 +1513,9 @@ object Streams {
   def chunkDedup(layout: StoreLayout, textCol: String, idCol: String,
       maxDupShare: Double = 0.5): Stage = {
     val C = graft.ingest.CdcChunkStore
-    storeStage("chunk_dup", layout,
-      StoreOps(C.newChunkUniqueWithBloom(_, textCol, idCol, _, maxDupShare),
-        C.recordChunks(_, textCol, idCol, _), C.compactStore(_, _),
-        C.buildBloomSidecar(_, _)),
-      StoreOps(
-        C.newChunkUniqueBucketedWithBloom(_, textCol, idCol, _, maxDupShare),
-        C.recordChunksBucketed(_, textCol, idCol, _),
-        C.compactBucketedStore(_, _), C.buildBloomSidecarBucketed(_, _)),
-      C.ensureBucketedStore(_, _, _))
+    storeStage("chunk_dup", C, layout)(
+      C.newChunkUnique(_, textCol, idCol, layout, maxDupShare),
+      C.recordChunks(_, textCol, idCol, layout))
   }
 
   /** Cross-run PERCEPTUAL NEAR dedup ([[graft.ingest.MediaNearStore]])
@@ -1596,21 +1528,15 @@ object Streams {
     val M = graft.ingest.MediaNearStore
     def bands(df: DataFrame): DataFrame =
       df.select(col(idCol).as("media_id") +: bandCols.map(col): _*)
-    storeStage(graft.operators.CurationOutcome.NearDup, layout,
-      StoreOps((b, p) => M.newNearUniqueWithBloom(b, idCol, bands(b), p),
-        (c, p) => M.recordHashes(bands(c), p), M.compactStore(_, _),
-        M.buildBloomSidecar(_, _)),
-      StoreOps(
-        (b, t) => M.newNearUniqueBucketedWithBloom(b, idCol, bands(b), t),
-        (c, t) => M.recordHashesBucketed(bands(c), t),
-        M.compactBucketedStore(_, _), M.buildBloomSidecarBucketed(_, _)),
-      M.ensureBucketedStore(_, _, _))
+    storeStage(graft.operators.CurationOutcome.NearDup, M, layout)(
+      b => M.newNearUnique(b, idCol, bands(b), layout),
+      c => M.recordHashes(bands(c), layout))
   }
 
   /** The URL/DOMAIN BLOCKLIST gate — stage #1 of every production
     * web-curation pipeline: rows whose `keyCol` (the extracted domain)
     * is on the blocklist store drop, via the multiplicity-preserving
-    * membership probe [[graft.ingest.DedupStore.newUnseenWithBloom]] (a
+    * membership probe [[graft.ingest.DedupStore.newUnseen]] (a
     * blocklist is a content-hash store whose keys are domains:
     * case-insensitive matching, bloom pruning, retraction =
     * un-listing). History-INDEPENDENT and read-only here (listing is
@@ -1618,12 +1544,9 @@ object Streams {
     * compacts it on the feed's schedule.
     */
   def blocklistGate(keyCol: String, storePath: String): Stage = {
-    val D = graft.ingest.DedupStore
-    Stage(graft.operators.CurationOutcome.Blocklisted,
-      D.newUnseenWithBloom(_, keyCol, storePath),
-      maintain = s => maintainIfDue(
-        graft.ingest.StoreStats.path(s, storePath),
-        D.compactStore(s, storePath), D.buildBloomSidecar(s, storePath)))
+    val (d, store) = (graft.ingest.DedupStore, StoreLayout.Path(storePath))
+    storeStage(graft.operators.CurationOutcome.Blocklisted, d, store)(
+      d.newUnseen(_, keyCol, store))
   }
 
   /** The BENCHMARK-CONTAMINATION gate: documents sharing ≥
@@ -1637,12 +1560,10 @@ object Streams {
     */
   def contaminationGate(textCol: String, idCol: String,
       storePath: String, minSharedGrams: Int = 1): Stage = {
-    val C = graft.ingest.ContaminationStore
-    Stage(graft.operators.CurationOutcome.Contaminated,
-      C.newCleanWithBloom(_, textCol, idCol, storePath, minSharedGrams),
-      maintain = s => maintainIfDue(
-        graft.ingest.StoreStats.path(s, storePath),
-        C.compactStore(s, storePath), C.buildBloomSidecar(s, storePath)))
+    val (c, store) =
+      (graft.ingest.ContaminationStore, StoreLayout.Path(storePath))
+    storeStage(graft.operators.CurationOutcome.Contaminated, c, store)(
+      c.newClean(_, textCol, idCol, store, minSharedGrams))
   }
 
   /** The learned LANGUAGE-ID gate (CCNet's stage #2): documents whose
@@ -2135,7 +2056,7 @@ object Streams {
 
   /** Inline self-maintenance for the versioned-index appenders — the
     * [[graft.operators.IndexStats]] signals consumed the way the
-    * store stages consume StoreStats (see [[maintainIfDue]]):
+    * store stages consume StoreStats (see [[graft.ingest.KeyStore.maintain]]):
     * `vacuumDue` → [[graft.operators.AnnIndex.vacuumRetracted]] (the
     * retraction backlog is approaching the broadcast ceiling —
     * physically drop it BEFORE probes fall off the broadcast plan),

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ingest.{Ingest, Warehouse}
+import graft.ingest.{HashForm, Ingest, Warehouse}
+import graft.ingest.StoreLayout.Bucketed
 
 /** Reference-parity ingest behavior on the shipped dirty fixtures
   * (FIXTURES.md; reference: etl/app.py + init-db/init.sql constraints).
@@ -166,7 +167,7 @@ class IngestSpec extends SparkSuite {
       df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     // no sidecar yet → identical to the plain path (fallback branch)
     val b1 = batch((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
-    val n1 = D.newUniqueWithBloom(b1, "text", "doc_id", store)
+    val n1 = D.newUnique(b1, "text", "doc_id", store)
     assert(ids(n1) === Seq(1L, 2L, 3L))
     D.recordHashes(n1, "text", store)
     // empty/missing store: sidecar build is a no-op reporting 0
@@ -175,13 +176,13 @@ class IngestSpec extends SparkSuite {
     assert(D.buildBloomSidecar(spark, store) === 3L)
     // covered duplicate pruned by the filter path; novel row passes
     val b2 = batch((9L, "ALPHA"), (10L, "delta"))
-    val n2 = D.newUniqueWithBloom(b2, "text", "doc_id", store)
+    val n2 = D.newUnique(b2, "text", "doc_id", store)
     assert(ids(n2) === Seq(10L))
     D.recordHashes(n2, "text", store)
     // STALE sidecar: "delta" was recorded after the build, so it lives
     // only in residual files — a bloom miss alone must not pass it
     val b3 = batch((20L, "delta  "), (21L, "epsilon"))
-    val n3 = D.newUniqueWithBloom(b3, "text", "doc_id", store)
+    val n3 = D.newUnique(b3, "text", "doc_id", store)
     assert(ids(n3) === Seq(21L))
     D.recordHashes(n3, "text", store)
     // compaction rewrites the store under NEW file names: every covered
@@ -189,15 +190,15 @@ class IngestSpec extends SparkSuite {
     // stay exact (and the all-covered-files-gone branch must not throw)
     D.compactStore(spark, store, 1L << 20)
     val b4 = batch((30L, "epsilon"), (31L, "zeta"))
-    assert(ids(D.newUniqueWithBloom(b4, "text", "doc_id", store))
+    assert(ids(D.newUnique(b4, "text", "doc_id", store))
       === Seq(31L))
     // equality law on one mixed batch (dups, novel, null text), same
     // store state for both paths: row-identical outputs
     val b5 = batch((40L, "alpha"), (41L, "ETA"), (42L, "eta"), (43L, null))
-    val plain = D.newUnique(b5, "text", "doc_id", store)
+    val plain = D.newUnique(b5, "text", "doc_id", plainTwin(store))
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[String]("content_hash"))).toSet
-    val bloomed = D.newUniqueWithBloom(b5, "text", "doc_id", store)
+    val bloomed = D.newUnique(b5, "text", "doc_id", store)
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[String]("content_hash"))).toSet
     assert(bloomed === plain)
@@ -205,7 +206,7 @@ class IngestSpec extends SparkSuite {
     // holds (store = alpha, beta, gamma, delta, epsilon)
     assert(D.buildBloomSidecar(spark, store) === 5L)
     val b6 = batch((50L, "epsilon"), (51L, "theta"))
-    assert(ids(D.newUniqueWithBloom(b6, "text", "doc_id", store))
+    assert(ids(D.newUnique(b6, "text", "doc_id", store))
       === Seq(51L))
   }
 
@@ -220,28 +221,28 @@ class IngestSpec extends SparkSuite {
       val D = graft.ingest.DedupStore
       val b1 = Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "ALPHA  beta"))
         .toDF("doc_id", "text")
-      val n1 = D.newUniqueBucketed(b1, "text", "doc_id", table)
+      val n1 = D.newUnique(b1, "text", "doc_id", Bucketed(table))
       assert(n1.select("doc_id").collect().map(_.getLong(0)).sorted
         === Array(1L, 2L)) // formatting variant collapses to min-id keeper
       // crash before record: the same batch re-delivers in full
-      assert(D.newUniqueBucketed(b1, "text", "doc_id", table).count() === 2)
+      assert(D.newUnique(b1, "text", "doc_id", Bucketed(table)).count() === 2)
       // at-least-once: the persisted survivor set recorded twice (crash
       // mid-record, retry re-records). Pinned first — the contract says
       // record from the persisted read-back, not the live anti-join
       // plan, which would see its own first record and go empty.
       val n1mat = n1.localCheckpoint(true)
-      D.recordHashesBucketed(n1mat, "text", table)
-      D.recordHashesBucketed(n1mat, "text", table)
+      D.recordHashes(n1mat, "text", Bucketed(table))
+      D.recordHashes(n1mat, "text", Bucketed(table))
       assert(spark.table(table).count() === 4) // 2 hashes × 2 deliveries
-      assert(D.compactBucketedStore(spark, table) === ((4L, 2L)))
+      assert(D.compactStore(spark, Bucketed(table)) === ((4L, 2L)))
       assert(spark.table(table).count() === 2)
       // the swapped-in table kept its bucket spec: a bucketed append
       // still works (it would throw on a non-bucketed table)…
       val b2 = Seq((9L, "gamma"), (10L, "delta")).toDF("doc_id", "text")
-      val n2 = D.newUniqueBucketed(b2, "text", "doc_id", table)
+      val n2 = D.newUnique(b2, "text", "doc_id", Bucketed(table))
       assert(n2.select("doc_id").collect().map(_.getLong(0)).toSeq
         === Seq(10L))
-      D.recordHashesBucketed(n2, "text", table)
+      D.recordHashes(n2, "text", Bucketed(table))
       // …and the catalog agrees
       assert(spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
         .exists(r => r.getString(0) == "Num Buckets"))
@@ -252,7 +253,7 @@ class IngestSpec extends SparkSuite {
       graft.layout.Layout.writeBucketed(
         spark.table(table).localCheckpoint(true), staging, 8, "content_hash")
       spark.sql(s"DROP TABLE $table")
-      D.ensureBucketedStore(spark, table)
+      D.ensureStore(spark, Bucketed(table))
       assert(spark.table(table).collect().map(_.getString(0)).sorted.toSeq
         === hashesBefore)
       assert(!spark.catalog.tableExists(staging))
@@ -276,45 +277,46 @@ class IngestSpec extends SparkSuite {
         df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       // no sidecar yet → fallback branch, everything new
       val b1 = batch((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
-      val n1 = D.newUniqueBucketedWithBloom(b1, "text", "doc_id", table)
+      val n1 = D.newUnique(b1, "text", "doc_id", Bucketed(table))
       assert(ids(n1) === Seq(1L, 2L, 3L))
-      D.recordHashesBucketed(n1.localCheckpoint(true), "text", table)
-      assert(D.buildBloomSidecarBucketed(spark, table) === 3L)
+      D.recordHashes(n1.localCheckpoint(true), "text", Bucketed(table))
+      assert(D.buildBloomSidecar(spark, Bucketed(table)) === 3L)
       // covered dup pruned via the bloom-hit zero-exchange table join;
       // novel row proven new by the (empty) residual alone
       val b2 = batch((9L, "ALPHA"), (10L, "delta"))
-      val n2 = D.newUniqueBucketedWithBloom(b2, "text", "doc_id", table)
+      val n2 = D.newUnique(b2, "text", "doc_id", Bucketed(table))
       assert(ids(n2) === Seq(10L))
-      D.recordHashesBucketed(n2.localCheckpoint(true), "text", table)
+      D.recordHashes(n2.localCheckpoint(true), "text", Bucketed(table))
       // STALE sidecar: "delta" lives only in post-build residual files —
       // a bloom miss alone must not pass it
       val b3 = batch((20L, "delta  "), (21L, "epsilon"))
-      assert(ids(D.newUniqueBucketedWithBloom(b3, "text", "doc_id", table))
+      assert(ids(D.newUnique(b3, "text", "doc_id", Bucketed(table)))
         === Seq(21L))
       // equality law vs the plain bucketed path on a mixed batch
       val b4 = batch((30L, "beta"), (31L, "zeta"), (32L, "ZETA"), (33L, null))
-      val plain = D.newUniqueBucketed(b4, "text", "doc_id", table)
+      val plain = D.newUnique(b4, "text", "doc_id",
+        Bucketed(plainTwinTable(table)))
         .collect().map(r => (r.getAs[Long]("doc_id"),
           r.getAs[String]("content_hash"))).toSet
-      val bloomed = D.newUniqueBucketedWithBloom(b4, "text", "doc_id", table)
+      val bloomed = D.newUnique(b4, "text", "doc_id", Bucketed(table))
         .collect().map(r => (r.getAs[Long]("doc_id"),
           r.getAs[String]("content_hash"))).toSet
       assert(bloomed === plain)
       // compaction swaps in a staging directory WITHOUT a sidecar: the
       // bloom path must degrade to the plain bucketed join, not consult
       // dead covered-file names — and answers stay exact
-      D.compactBucketedStore(spark, table)
+      D.compactStore(spark, Bucketed(table))
       val b5 = batch((40L, "DELTA"), (41L, "eta"))
-      assert(ids(D.newUniqueBucketedWithBloom(b5, "text", "doc_id", table))
+      assert(ids(D.newUnique(b5, "text", "doc_id", Bucketed(table)))
         === Seq(41L))
       // rebuild restores the prune over the compacted history
-      assert(D.buildBloomSidecarBucketed(spark, table) === 4L)
-      assert(ids(D.newUniqueBucketedWithBloom(
-        batch((50L, "gamma"), (51L, "theta")), "text", "doc_id", table))
-        === Seq(51L))
+      assert(D.buildBloomSidecar(spark, Bucketed(table)) === 4L)
+      assert(ids(D.newUnique(batch((50L, "gamma"), (51L, "theta")),
+        "text", "doc_id", Bucketed(table))) === Seq(51L))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS $staging")
+      spark.sql(s"DROP TABLE IF EXISTS ${table}_plain_twin")
     }
   }
 
@@ -482,7 +484,7 @@ class IngestSpec extends SparkSuite {
     val doc3 = (1 to 30).map(i => f"gamma$i%02d reed$i%02d").mkString(" ")
     // no sidecar yet → fallback branch, identical to the plain path
     val b1 = batch((1L, doc1), (2L, doc2))
-    val n1 = S.newSpanUniqueWithBloom(b1, "text", "doc_id", store)
+    val n1 = S.newSpanUnique(b1, "text", "doc_id", store)
     assert(ids(n1) === Seq(1L, 2L))
     S.recordWindows(n1, "text", "doc_id", store)
     // empty/missing store: sidecar build is a no-op reporting 0
@@ -491,14 +493,14 @@ class IngestSpec extends SparkSuite {
     assert(S.buildBloomSidecar(spark, store) > 0L)
     // covered mashup flagged through the filter path; novel doc passes
     val mashup12 = doc1.substring(10, 160) + " " + doc2.substring(5, 155)
-    val n2 = S.newSpanUniqueWithBloom(
+    val n2 = S.newSpanUnique(
       batch((9L, mashup12), (10L, doc3)), "text", "doc_id", store)
     assert(ids(n2) === Seq(10L))
     S.recordWindows(n2, "text", "doc_id", store)
     // STALE sidecar: doc3 was recorded after the build — its windows
     // live only in residual files; a bloom miss alone must not pass a
     // copy of it
-    val n3 = S.newSpanUniqueWithBloom(
+    val n3 = S.newSpanUnique(
       batch((20L, doc3), (21L, (1 to 30).map(i =>
         f"delta$i%02d moss$i%02d").mkString(" "))),
       "text", "doc_id", store)
@@ -506,7 +508,7 @@ class IngestSpec extends SparkSuite {
     // compaction rewrites under new file names: covered names vanish,
     // residual degrades to the full store, answers stay exact
     S.compactStore(spark, store, 1L << 20)
-    assert(ids(S.newSpanUniqueWithBloom(batch((30L, doc1)), "text",
+    assert(ids(S.newSpanUnique(batch((30L, doc1)), "text",
       "doc_id", store)) === Seq())
     // equality law on one mixed batch (a recorded copy, a mashup
     // straddling covered+residual history, fresh, short) at the
@@ -515,8 +517,8 @@ class IngestSpec extends SparkSuite {
       (42L, doc3.substring(0, 150) + " " + doc1.substring(150)),
       (43L, (1 to 30).map(i => f"eps$i%02d fern$i%02d").mkString(" ")),
       (44L, "short doc"))
-    assert(ids(S.newSpanUniqueWithBloom(mixed, "text", "doc_id", store))
-      === ids(S.newSpanUnique(mixed, "text", "doc_id", store)))
+    assert(ids(S.newSpanUnique(mixed, "text", "doc_id", store))
+      === ids(S.newSpanUnique(mixed, "text", "doc_id", plainTwin(store))))
     // pooled-identity share under a STALE sidecar: rebuild, then record
     // fresh content so residual files exist, then deliver a null-id
     // cohort of copies of RECORDED history. The cohort's pooled share
@@ -533,8 +535,9 @@ class IngestSpec extends SparkSuite {
       spark.sparkContext.parallelize(Seq(
         Row(null, doc1), Row(null, late), Row(null, doc2))),
       nullableSchema)
-    assert(S.newSpanUnique(cohort, "text", "doc_id", store).count() === 0)
-    assert(S.newSpanUniqueWithBloom(cohort, "text", "doc_id", store)
+    assert(S.newSpanUnique(cohort, "text", "doc_id", plainTwin(store))
+      .count() === 0)
+    assert(S.newSpanUnique(cohort, "text", "doc_id", store)
       .count() === 0,
       "stale-sidecar bloom path leaked the pooled null-id cohort")
   }
@@ -553,20 +556,20 @@ class IngestSpec extends SparkSuite {
     val doc3 = (1 to 60).map(i => s"gamma$i fresh$i novel$i").mkString(" ")
     // no sidecar yet → fallback branch, identical to the plain path
     val b1 = batch((1L, doc1), (2L, doc2))
-    assert(ids(N.newNearUniqueWithBloom(b1, "text", "doc_id", store))
+    assert(ids(N.newNearUnique(b1, "text", "doc_id", store))
       === Seq(1L, 2L))
     N.recordSignatures(b1, "text", "doc_id", store)
     // fresh sidecar: paraphrase of recorded content flagged via the
     // hit leg; fresh doc passes
     assert(N.buildBloomSidecar(spark, store) > 0L)
-    assert(ids(N.newNearUniqueWithBloom(
+    assert(ids(N.newNearUnique(
       batch((10L, doc1 + " edited trailing footer"), (11L, doc3)),
       "text", "doc_id", store)) === Seq(11L))
     // STALE sidecar: doc3 recorded after the build lives only in
     // residual files — its paraphrase must still be flagged (the
     // miss leg's residual join), and truly-novel content passes
     N.recordSignatures(batch((30L, doc3)), "text", "doc_id", store)
-    assert(ids(N.newNearUniqueWithBloom(
+    assert(ids(N.newNearUnique(
       batch((31L, doc3 + " late footer"),
         (32L, (1 to 60).map(i => s"delta$i null$i case$i")
           .mkString(" "))),
@@ -574,22 +577,22 @@ class IngestSpec extends SparkSuite {
     // equality law on one mixed batch, same store state both paths
     val b4 = batch((40L, doc1 + " tiny edit"), (41L, doc2),
       (42L, (1 to 60).map(i => s"eps$i zx$i qq$i").mkString(" ")))
-    assert(ids(N.newNearUniqueWithBloom(b4, "text", "doc_id", store))
-      === ids(N.newNearUnique(b4, "text", "doc_id", store)))
+    assert(ids(N.newNearUnique(b4, "text", "doc_id", store))
+      === ids(N.newNearUnique(b4, "text", "doc_id", plainTwin(store))))
     // compaction rewrites file names → every covered name vanishes;
     // the probe degrades to the exact plan, answers unchanged, and a
     // rebuild restores the prune
     N.compactStore(spark, store)
-    assert(ids(N.newNearUniqueWithBloom(
+    assert(ids(N.newNearUnique(
       batch((50L, doc2 + " another tiny edit")), "text", "doc_id",
       store)) === Seq())
     assert(N.buildBloomSidecar(spark, store) > 0L)
-    assert(ids(N.newNearUniqueWithBloom(
+    assert(ids(N.newNearUnique(
       batch((51L, doc1 + " yet another edit"), (52L, (1 to 60)
         .map(i => s"zeta$i brand$i new$i").mkString(" "))),
       "text", "doc_id", store)) === Seq(52L))
     // StoreStats now sees the near store's sidecar like its siblings'
-    val st = graft.ingest.StoreStats.path(spark, store)
+    val st = graft.ingest.StoreStats.of(spark, store)
     assert(st.sidecarPresent && !st.sidecarStale)
   }
 
@@ -609,36 +612,36 @@ class IngestSpec extends SparkSuite {
       val doc2 = (1 to 60).map(i => s"beta$i item$i entry$i").mkString(" ")
       val doc3 = (1 to 60).map(i => s"gamma$i fresh$i novel$i").mkString(" ")
       val b1 = batch((1L, doc1), (2L, doc2))
-      assert(ids(N.newNearUniqueBucketed(b1, "text", "doc_id", table))
+      assert(ids(N.newNearUnique(b1, "text", "doc_id", Bucketed(table)))
         === Seq(1L, 2L))
-      N.recordSignaturesBucketed(b1, "text", "doc_id", table)
+      N.recordSignatures(b1, "text", "doc_id", Bucketed(table))
       // paraphrase of recorded content flagged; fresh passes
-      assert(ids(N.newNearUniqueBucketed(
+      assert(ids(N.newNearUnique(
         batch((10L, doc1 + " edited trailing footer"), (11L, doc3)),
-        "text", "doc_id", table)) === Seq(11L))
+        "text", "doc_id", Bucketed(table))) === Seq(11L))
       // bloom fast path: same answers
-      assert(N.buildBloomSidecarBucketed(spark, table) > 0L)
-      assert(ids(N.newNearUniqueBucketedWithBloom(
+      assert(N.buildBloomSidecar(spark, Bucketed(table)) > 0L)
+      assert(ids(N.newNearUnique(
         batch((20L, doc2 + " small appended edit"), (21L, doc3)),
-        "text", "doc_id", table)) === Seq(21L))
+        "text", "doc_id", Bucketed(table))) === Seq(21L))
       // stale sidecar: doc3 recorded after the build lives only in
       // residual files — its paraphrase must still be flagged
-      N.recordSignaturesBucketed(batch((30L, doc3)), "text", "doc_id",
-        table)
-      assert(ids(N.newNearUniqueBucketedWithBloom(
+      N.recordSignatures(batch((30L, doc3)), "text", "doc_id",
+        Bucketed(table))
+      assert(ids(N.newNearUnique(
         batch((31L, doc3 + " late footer"),
           (32L, (1 to 60).map(i => s"delta$i null$i case$i")
             .mkString(" "))),
-        "text", "doc_id", table)) === Seq(32L))
+        "text", "doc_id", Bucketed(table))) === Seq(32L))
       // re-record + compaction: distinct rows, answers exact
-      N.recordSignaturesBucketed(b1, "text", "doc_id", table)
-      val (before, after) = N.compactBucketedStore(spark, table)
+      N.recordSignatures(b1, "text", "doc_id", Bucketed(table))
+      val (before, after) = N.compactStore(spark, Bucketed(table))
       assert(before > after && after > 0L)
       assert(spark.table(table).count()
         === spark.table(table).distinct().count())
-      assert(ids(N.newNearUniqueBucketedWithBloom(
+      assert(ids(N.newNearUnique(
         batch((40L, doc1 + " another tiny edit")), "text", "doc_id",
-        table)) === Seq())
+        Bucketed(table))) === Seq())
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
@@ -662,35 +665,35 @@ class IngestSpec extends SparkSuite {
       val doc3 = (1 to 30).map(i => f"gamma$i%02d reed$i%02d").mkString(" ")
       // empty table: everything survives; unrecorded re-delivers
       val b1 = batch((1L, doc1), (2L, doc2))
-      assert(ids(S.newSpanUniqueBucketed(b1, "text", "doc_id", table))
+      assert(ids(S.newSpanUnique(b1, "text", "doc_id", Bucketed(table)))
         === Seq(1L, 2L))
-      S.recordWindowsBucketed(b1, "text", "doc_id", table)
+      S.recordWindows(b1, "text", "doc_id", Bucketed(table))
       // mashup of recorded passages flagged; fresh passes
       val mashup = doc1.substring(10, 160) + " " + doc2.substring(5, 155)
-      assert(ids(S.newSpanUniqueBucketed(batch((10L, mashup), (11L, doc3)),
-        "text", "doc_id", table)) === Seq(11L))
+      assert(ids(S.newSpanUnique(batch((10L, mashup), (11L, doc3)),
+        "text", "doc_id", Bucketed(table))) === Seq(11L))
       // bloom sidecar: same answers through the fast path
-      assert(S.buildBloomSidecarBucketed(spark, table) > 0L)
-      assert(ids(S.newSpanUniqueBucketedWithBloom(
-        batch((20L, mashup), (21L, doc3)), "text", "doc_id", table))
+      assert(S.buildBloomSidecar(spark, Bucketed(table)) > 0L)
+      assert(ids(S.newSpanUnique(
+        batch((20L, mashup), (21L, doc3)), "text", "doc_id", Bucketed(table)))
         === Seq(21L))
       // stale sidecar: doc3 recorded AFTER the build lives only in
       // residual table files — a bloom miss must not pass its copy
-      S.recordWindowsBucketed(batch((30L, doc3)), "text", "doc_id", table)
-      assert(ids(S.newSpanUniqueBucketedWithBloom(
+      S.recordWindows(batch((30L, doc3)), "text", "doc_id", Bucketed(table))
+      assert(ids(S.newSpanUnique(
         batch((31L, doc3),
           (32L, (1 to 30).map(i => f"delta$i%02d moss$i%02d")
             .mkString(" "))),
-        "text", "doc_id", table)) === Seq(32L))
+        "text", "doc_id", Bucketed(table))) === Seq(32L))
       // at-least-once re-record, compaction collapses; answers exact;
       // the swap retires the in-table sidecar with the old directory
-      S.recordWindowsBucketed(b1, "text", "doc_id", table)
-      val (before, after) = S.compactBucketedStore(spark, table)
+      S.recordWindows(b1, "text", "doc_id", Bucketed(table))
+      val (before, after) = S.compactStore(spark, Bucketed(table))
       assert(before > after && after > 0L)
       assert(spark.table(table).count()
         === spark.table(table).distinct().count())
-      assert(ids(S.newSpanUniqueBucketedWithBloom(
-        batch((40L, mashup)), "text", "doc_id", table)) === Seq())
+      assert(ids(S.newSpanUnique(
+        batch((40L, mashup)), "text", "doc_id", Bucketed(table))) === Seq())
       // strided recording composes with the catalog form — on a FRESH
       // table (a different stride over a non-empty store is refused):
       // the stride rides a graft.* table property, the probe scales the
@@ -701,20 +704,20 @@ class IngestSpec extends SparkSuite {
       spark.sql(s"DROP TABLE IF EXISTS ${stridedTable}_compact_stage")
       try {
         val fresh2 = (1 to 30).map(i => f"eps$i%02d fern$i%02d").mkString(" ")
-        S.recordWindowsBucketed(batch((50L, fresh2)), "text", "doc_id",
-          stridedTable, stride = 4)
-        assert(S.storedStrideBucketed(spark, stridedTable) === 4)
-        assert(ids(S.newSpanUniqueBucketed(batch((51L, fresh2)), "text",
-          "doc_id", stridedTable)) === Seq())
+        S.recordWindows(batch((50L, fresh2)), "text", "doc_id",
+          Bucketed(stridedTable), stride = 4)
+        assert(S.storedStride(spark, Bucketed(stridedTable)) === 4)
+        assert(ids(S.newSpanUnique(batch((51L, fresh2)), "text",
+          "doc_id", Bucketed(stridedTable))) === Seq())
         intercept[IllegalArgumentException] {
-          S.recordWindowsBucketed(batch((52L, doc3)), "text", "doc_id",
-            stridedTable, stride = 2)
+          S.recordWindows(batch((52L, doc3)), "text", "doc_id",
+            Bucketed(stridedTable), stride = 2)
         }
-        S.compactBucketedStore(spark, stridedTable)
-        assert(S.storedStrideBucketed(spark, stridedTable) === 4,
+        S.compactStore(spark, Bucketed(stridedTable))
+        assert(S.storedStride(spark, Bucketed(stridedTable)) === 4,
           "stride property lost across the compaction staging swap")
-        assert(ids(S.newSpanUniqueBucketed(batch((53L, fresh2)), "text",
-          "doc_id", stridedTable)) === Seq())
+        assert(ids(S.newSpanUnique(batch((53L, fresh2)), "text",
+          "doc_id", Bucketed(stridedTable))) === Seq())
       } finally {
         spark.sql(s"DROP TABLE IF EXISTS $stridedTable")
         spark.sql(s"DROP TABLE IF EXISTS ${stridedTable}_compact_stage")
@@ -825,8 +828,8 @@ class IngestSpec extends SparkSuite {
       .toDF("doc_id", "text")
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids(D.newUniqueWithBloom(b2, "text", "doc_id", store))
-      === ids(D.newUnique(b2, "text", "doc_id", store)))
+    assert(ids(D.newUnique(b2, "text", "doc_id", store))
+      === ids(D.newUnique(b2, "text", "doc_id", plainTwin(store))))
     // rebuild replaces the generation atomically and GCs the old one
     assert(D.buildBloomSidecar(spark, store, fpp = 0.01, numShards = 8)
       === 2000L)
@@ -858,14 +861,15 @@ class IngestSpec extends SparkSuite {
     for (shards <- Seq(8, 16, 0)) {
       assert(D.buildBloomSidecar(spark, store, fpp = 0.01,
         numShards = shards) === 1500L)
-      assert(ids(D.newUniqueWithBloom(probe, "text", "doc_id", store))
+      assert(ids(D.newUnique(probe, "text", "doc_id", store))
         === want, s"probe answers changed under numShards=$shards")
     }
     // the auto build's manifest records the RESOLVED count (32), not
     // the sentinel — a probe planned from it must route correctly
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val sc = D.readSidecar(fs, D.sidecarPath(store)).get
+    val sc = graft.ingest.StoreLayout.readSidecar(fs,
+      graft.ingest.StoreLayout.Path(store).manifest(spark)).get
     assert(sc.numShards === 32, s"manifest shard count ${sc.numShards}")
   }
 
@@ -887,9 +891,10 @@ class IngestSpec extends SparkSuite {
     // empty the store (keep the directory), then rebuild: 0 covered,
     // and BOTH the manifest and the orphaned generation must be gone
     val storePath = new org.apache.hadoop.fs.Path(store)
-    D.storeDataFiles(fs, storePath).foreach(f => fs.delete(f, false))
+    graft.ingest.StoreLayout.storeDataFiles(fs, storePath).foreach(f => fs.delete(f, false))
     assert(D.buildBloomSidecar(spark, store, numShards = 4) === 0L)
-    assert(!fs.exists(D.sidecarPath(store)), "manifest survived")
+    assert(!fs.exists(graft.ingest.StoreLayout.Path(store).manifest(spark)),
+      "manifest survived")
     assert(gens().isEmpty, "generation directories leaked")
   }
 
@@ -922,15 +927,16 @@ class IngestSpec extends SparkSuite {
           .as("content_hash")), store)
     // probe-after-retract: never-seen, on BOTH the exact and the
     // (stale-sidecar) bloom path
-    assert(ids(D.newUnique(probe, "text", "doc_id", store))
+    assert(ids(D.newUnique(probe, "text", "doc_id", plainTwin(store)))
       === Seq(9001L, 9002L, 9003L))
-    assert(ids(D.newUniqueWithBloom(probe, "text", "doc_id", store))
+    assert(ids(D.newUnique(probe, "text", "doc_id", store))
       === Seq(9001L, 9002L, 9003L))
     // phase 2: compaction drops the rows and clears the tombstones
     D.compactStore(spark, store)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(D.storeDataFiles(fs, D.tombstonesPath(store)).isEmpty,
+    assert(graft.ingest.StoreLayout.storeDataFiles(fs,
+      graft.ingest.StoreLayout.Path(store).tombstoneDir(spark)).isEmpty,
       "applied tombstones not cleared")
     assert(spark.read.parquet(store).count() === 198L,
       "tombstoned rows survived compaction")
@@ -954,29 +960,33 @@ class IngestSpec extends SparkSuite {
     try {
       val docs = (1 to 100).map(i => (i.toLong, s"bretract doc $i"))
         .toDF("doc_id", "text")
-      D.ensureBucketedStore(spark, table, buckets = 4)
-      D.recordHashesBucketed(docs, "text", table)
+      D.ensureStore(spark, Bucketed(table, 4))
+      D.recordHashes(docs, "text", Bucketed(table))
       def ids(df: org.apache.spark.sql.DataFrame) =
         df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       val probe = Seq((9001L, "bretract doc 5"), (9002L, "fresh"))
         .toDF("doc_id", "text")
-      assert(ids(D.newUniqueBucketed(probe, "text", "doc_id", table))
+      assert(ids(D.newUnique(probe, "text", "doc_id", Bucketed(table)))
         === Seq(9002L))
-      D.retractBucketed(
-        Seq((0L, "bretract doc 5")).toDF("doc_id", "text"), "text", table)
-      assert(ids(D.newUniqueBucketed(probe, "text", "doc_id", table))
+      D.retract(
+        Seq((0L, "bretract doc 5")).toDF("doc_id", "text"), "text", Bucketed(table))
+      assert(ids(D.newUnique(probe, "text", "doc_id", Bucketed(table)))
         === Seq(9001L, 9002L))
-      assert(ids(D.newUniqueBucketedWithBloom(probe, "text", "doc_id",
-        table)) === Seq(9001L, 9002L))
-      val (before, after) = D.compactBucketedStore(spark, table)
+      // a sidecar built over the tombstoned rows: the bloom hit routes
+      // the retracted key into the live store, which subtracts it
+      assert(D.buildBloomSidecar(spark, Bucketed(table), numShards = 4)
+        === 100L)
+      assert(ids(D.newUnique(probe, "text", "doc_id",
+        Bucketed(table))) === Seq(9001L, 9002L))
+      val (before, after) = D.compactStore(spark, Bucketed(table))
       assert(before === 100L && after === 99L,
         s"compaction kept $after of $before — tombstone not applied")
       // the swap dropped the old directory, _tombstones included
-      val loc = graft.ingest.DedupStore.tableLocation(spark, table)
+      val loc = Bucketed(table).dataDir(spark)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
       assert(!fs.exists(new org.apache.hadoop.fs.Path(loc, "_tombstones")),
         "tombstones survived the compaction swap")
-      assert(ids(D.newUniqueBucketed(probe, "text", "doc_id", table))
+      assert(ids(D.newUnique(probe, "text", "doc_id", Bucketed(table)))
         === Seq(9001L, 9002L))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -1002,36 +1012,36 @@ class IngestSpec extends SparkSuite {
       // NEAR: record, variant flagged; retract → unflagged; compact
       val base = "the quick brown fox jumps over the lazy dog and " +
         "then runs far away into the deep green forest tonight"
-      N.recordSignaturesBucketed(Seq((1L, base)).toDF("doc_id", "text"),
-        "text", "doc_id", nearT)
+      N.recordSignatures(Seq((1L, base)).toDF("doc_id", "text"),
+        "text", "doc_id", Bucketed(nearT))
       val nProbe = Seq((2L, base + " extra")).toDF("doc_id", "text")
-      assert(ids(N.newNearUniqueBucketed(nProbe, "text", "doc_id",
-        nearT)) === Seq())
-      N.retractBucketed(Seq((1L, base)).toDF("doc_id", "text"), "text",
-        "doc_id", nearT)
-      assert(ids(N.newNearUniqueBucketed(nProbe, "text", "doc_id",
-        nearT)) === Seq(2L))
-      val (nb, na) = N.compactBucketedStore(spark, nearT)
+      assert(ids(N.newNearUnique(nProbe, "text", "doc_id",
+        Bucketed(nearT))) === Seq())
+      N.retract(Seq((1L, base)).toDF("doc_id", "text"), "text",
+        "doc_id", Bucketed(nearT))
+      assert(ids(N.newNearUnique(nProbe, "text", "doc_id",
+        Bucketed(nearT))) === Seq(2L))
+      val (nb, na) = N.compactStore(spark, Bucketed(nearT))
       assert(nb > 0L && na === 0L, s"near compaction kept $na of $nb")
-      assert(ids(N.newNearUniqueBucketed(nProbe, "text", "doc_id",
-        nearT)) === Seq(2L))
+      assert(ids(N.newNearUnique(nProbe, "text", "doc_id",
+        Bucketed(nearT))) === Seq(2L))
       // SPAN: record, identical doc flagged; retract → unflagged;
       // compact drops the rows
       val doc = ("alpha beta gamma delta epsilon zeta eta theta iota " +
         "kappa lambda mu nu xi omicron pi rho sigma tau upsilon") * 3
-      S.recordWindowsBucketed(Seq((1L, doc)).toDF("doc_id", "text"),
-        "text", "doc_id", spanT)
+      S.recordWindows(Seq((1L, doc)).toDF("doc_id", "text"),
+        "text", "doc_id", Bucketed(spanT))
       val sProbe = Seq((2L, doc)).toDF("doc_id", "text")
-      assert(ids(S.newSpanUniqueBucketed(sProbe, "text", "doc_id",
-        spanT)) === Seq())
-      S.retractBucketed(Seq((1L, doc)).toDF("doc_id", "text"), "text",
-        "doc_id", spanT)
-      assert(ids(S.newSpanUniqueBucketed(sProbe, "text", "doc_id",
-        spanT)) === Seq(2L), "retracted spans still flagged")
-      val (sb, sa) = S.compactBucketedStore(spark, spanT)
+      assert(ids(S.newSpanUnique(sProbe, "text", "doc_id",
+        Bucketed(spanT))) === Seq())
+      S.retract(Seq((1L, doc)).toDF("doc_id", "text"), "text",
+        "doc_id", Bucketed(spanT))
+      assert(ids(S.newSpanUnique(sProbe, "text", "doc_id",
+        Bucketed(spanT))) === Seq(2L), "retracted spans still flagged")
+      val (sb, sa) = S.compactStore(spark, Bucketed(spanT))
       assert(sb > 0L && sa === 0L, s"span compaction kept $sa of $sb")
-      assert(ids(S.newSpanUniqueBucketed(sProbe, "text", "doc_id",
-        spanT)) === Seq(2L))
+      assert(ids(S.newSpanUnique(sProbe, "text", "doc_id",
+        Bucketed(spanT))) === Seq(2L))
     } finally {
       for (t <- Seq(nearT, spanT)) {
         spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -1114,9 +1124,9 @@ class IngestSpec extends SparkSuite {
       .toDF("doc_id", "text")
     S.recordWindows(recorded, "text", "doc_id", md5Store)
     S.recordWindows(recorded, "text", "doc_id", xxStore,
-      hashForm = S.XxForm)
-    assert(S.storedHashForm(spark, md5Store) === S.Md5Form)
-    assert(S.storedHashForm(spark, xxStore) === S.XxForm)
+      hashForm = HashForm.Xx)
+    assert(S.storedHashForm(spark, md5Store) === HashForm.Md5)
+    assert(S.storedHashForm(spark, xxStore) === HashForm.Xx)
     // the xx store physically holds 8-byte longs — the 4× width win
     assert(spark.read.parquet(xxStore).schema("h").dataType
       === org.apache.spark.sql.types.LongType)
@@ -1135,9 +1145,9 @@ class IngestSpec extends SparkSuite {
     // flagged-doc equality, bloom path (sidecar per store)
     assert(S.buildBloomSidecar(spark, md5Store, numShards = 4) > 0L)
     assert(S.buildBloomSidecar(spark, xxStore, numShards = 4) > 0L)
-    assert(ids(S.newSpanUniqueWithBloom(probe, "text", "doc_id",
+    assert(ids(S.newSpanUnique(probe, "text", "doc_id",
       md5Store)) === wantPlain)
-    assert(ids(S.newSpanUniqueWithBloom(probe, "text", "doc_id",
+    assert(ids(S.newSpanUnique(probe, "text", "doc_id",
       xxStore)) === wantPlain, "hash forms disagree on the bloom path")
     // retraction works on the xx form too
     S.retract(recorded.filter(col("doc_id") === 1L), "text", "doc_id",
@@ -1147,7 +1157,7 @@ class IngestSpec extends SparkSuite {
     // a non-empty store refuses the other form
     intercept[IllegalArgumentException] {
       S.recordWindows(probe, "text", "doc_id", md5Store,
-        hashForm = S.XxForm)
+        hashForm = HashForm.Xx)
     }
     // a form-LESS append follows the store's recorded form (the
     // streamed appender's contract — no form plumbing required)
@@ -1166,70 +1176,83 @@ class IngestSpec extends SparkSuite {
     val S = graft.ingest.SpanStore
     val md5T = "span_form_md5_t"
     val xxT = "span_form_xx_t"
-    for (t <- Seq(md5T, xxT)) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_compact_stage")
-    }
-    try {
-      val boiler = "this exact boilerplate sentence is recycled " +
-        "across the corpus verbatim and is long enough to window " * 2
-      val recorded = Seq((1L, boiler)).toDF("doc_id", "text")
-      S.recordWindowsBucketed(recorded, "text", "doc_id", md5T)
-      S.recordWindowsBucketed(recorded, "text", "doc_id", xxT,
-        hashForm = S.XxForm)
-      assert(S.storedHashFormBucketed(spark, md5T) === S.Md5Form)
-      assert(S.storedHashFormBucketed(spark, xxT) === S.XxForm)
-      assert(spark.table(xxT).schema("content_hash").dataType
-        === org.apache.spark.sql.types.LongType)
-      val probe = Seq((10L, boiler), (11L, "entirely novel text that " +
-        "matches nothing recorded in either span table at all today"))
-        .toDF("doc_id", "text")
-      def ids(df: org.apache.spark.sql.DataFrame) =
-        df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      val want = ids(S.newSpanUniqueBucketed(probe, "text", "doc_id",
-        md5T))
-      assert(want === Seq(11L), "fixture did not discriminate")
-      assert(ids(S.newSpanUniqueBucketed(probe, "text", "doc_id", xxT))
-        === want, "hash forms disagree on the bucketed plain path")
-      // bloom path equality (sidecar over the long hashes casts to
-      // decimal strings on build and probe alike)
-      assert(S.buildBloomSidecarBucketed(spark, xxT, numShards = 4) > 0L)
-      assert(ids(S.newSpanUniqueBucketedWithBloom(probe, "text",
-        "doc_id", xxT)) === want, "xx bucketed bloom path diverges")
-      // retraction + compaction on the xx table
-      S.retractBucketed(recorded, "text", "doc_id", xxT)
-      assert(ids(S.newSpanUniqueBucketed(probe, "text", "doc_id", xxT))
-        === Seq(10L, 11L), "xx bucketed retraction did not un-flag")
-      val (b, a) = S.compactBucketedStore(spark, xxT)
-      assert(b > 0L && a === 0L, s"xx compaction kept $a of $b")
-      assert(S.storedHashFormBucketed(spark, xxT) === S.XxForm,
-        "hash form property lost across the compaction swap")
-      // a form-less append follows the table's recorded form; the
-      // compaction cleared the tombstones, so the content is seen again
-      S.recordWindowsBucketed(recorded, "text", "doc_id", xxT)
-      assert(spark.table(xxT).schema("content_hash").dataType
-        === org.apache.spark.sql.types.LongType)
-      assert(ids(S.newSpanUniqueBucketed(probe, "text", "doc_id", xxT))
-        === Seq(11L), "re-recorded xx content not flagged")
-      // a non-empty table refuses the other form
-      intercept[IllegalArgumentException] {
-        S.recordWindowsBucketed(probe, "text", "doc_id", md5T,
-          hashForm = S.XxForm)
-      }
-      // an EMPTY table switches forms by recreation (column type flips)
-      val emptyT = "span_form_empty_t"
-      spark.sql(s"DROP TABLE IF EXISTS $emptyT")
-      try {
-        S.ensureBucketedStore(spark, emptyT, buckets = 4)
-        S.recordWindowsBucketed(recorded, "text", "doc_id", emptyT,
-          hashForm = S.XxForm)
-        assert(spark.table(emptyT).schema("content_hash").dataType
-          === org.apache.spark.sql.types.LongType)
-      } finally spark.sql(s"DROP TABLE IF EXISTS $emptyT")
-    } finally {
+    // stride 4 is one more input: a strided table keeps its stride
+    // through the hash-form declaration
+    for (stride <- Seq(1, 4)) {
       for (t <- Seq(md5T, xxT)) {
         spark.sql(s"DROP TABLE IF EXISTS $t")
         spark.sql(s"DROP TABLE IF EXISTS ${t}_compact_stage")
+      }
+      try {
+        val boiler = "this exact boilerplate sentence is recycled " +
+          "across the corpus verbatim and is long enough to window " * 2
+        val recorded = Seq((1L, boiler)).toDF("doc_id", "text")
+        S.recordWindows(recorded, "text", "doc_id", Bucketed(md5T),
+          stride = stride)
+        S.recordWindows(recorded, "text", "doc_id", Bucketed(xxT),
+          stride = stride, hashForm = HashForm.Xx)
+        assert(S.storedHashForm(spark, Bucketed(md5T)) === HashForm.Md5)
+        assert(S.storedHashForm(spark, Bucketed(xxT)) === HashForm.Xx)
+        // the table's metadata is written once, at creation: declaring
+        // the form must not drop the stride
+        for (t <- Seq(md5T, xxT))
+          assert(S.storedStride(spark, Bucketed(t)) === stride,
+            s"$t lost its stride")
+        assert(spark.table(xxT).schema("content_hash").dataType
+          === org.apache.spark.sql.types.LongType)
+        val probe = Seq((10L, boiler), (11L, "entirely novel text that " +
+          "matches nothing recorded in either span table at all today"))
+          .toDF("doc_id", "text")
+        def ids(df: org.apache.spark.sql.DataFrame) =
+          df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+        val want = ids(S.newSpanUnique(probe, "text", "doc_id",
+          Bucketed(md5T)))
+        assert(want === Seq(11L), "fixture did not discriminate")
+        assert(ids(S.newSpanUnique(probe, "text", "doc_id", Bucketed(xxT)))
+          === want, "hash forms disagree on the bucketed plain path")
+        // bloom path equality (sidecar over the long hashes casts to
+        // decimal strings on build and probe alike)
+        assert(S.buildBloomSidecar(spark, Bucketed(xxT), numShards = 4) > 0L)
+        assert(ids(S.newSpanUnique(probe, "text",
+          "doc_id", Bucketed(xxT))) === want,
+          "xx bucketed bloom path diverges")
+        // retraction + compaction on the xx table
+        S.retract(recorded, "text", "doc_id", Bucketed(xxT))
+        assert(ids(S.newSpanUnique(probe, "text", "doc_id", Bucketed(xxT)))
+          === Seq(10L, 11L), "xx bucketed retraction did not un-flag")
+        val (b, a) = S.compactStore(spark, Bucketed(xxT))
+        assert(b > 0L && a === 0L, s"xx compaction kept $a of $b")
+        assert(S.storedHashForm(spark, Bucketed(xxT)) === HashForm.Xx,
+          "hash form property lost across the compaction swap")
+        // a form-less append follows the table's recorded form; the
+        // compaction cleared the tombstones, so the content is seen again
+        S.recordWindows(recorded, "text", "doc_id", Bucketed(xxT),
+          stride = stride)
+        assert(spark.table(xxT).schema("content_hash").dataType
+          === org.apache.spark.sql.types.LongType)
+        assert(ids(S.newSpanUnique(probe, "text", "doc_id", Bucketed(xxT)))
+          === Seq(11L), "re-recorded xx content not flagged")
+        // a non-empty table refuses the other form
+        intercept[IllegalArgumentException] {
+          S.recordWindows(probe, "text", "doc_id", Bucketed(md5T),
+            hashForm = HashForm.Xx)
+        }
+        // an EMPTY table switches forms by recreation (column type flips)
+        val emptyT = "span_form_empty_t"
+        spark.sql(s"DROP TABLE IF EXISTS $emptyT")
+        try {
+          S.ensureStore(spark, Bucketed(emptyT, 4))
+          S.recordWindows(recorded, "text", "doc_id", Bucketed(emptyT),
+            stride = stride, hashForm = HashForm.Xx)
+          assert(spark.table(emptyT).schema("content_hash").dataType
+            === org.apache.spark.sql.types.LongType)
+          assert(S.storedStride(spark, Bucketed(emptyT)) === stride)
+        } finally spark.sql(s"DROP TABLE IF EXISTS $emptyT")
+      } finally {
+        for (t <- Seq(md5T, xxT)) {
+          spark.sql(s"DROP TABLE IF EXISTS $t")
+          spark.sql(s"DROP TABLE IF EXISTS ${t}_compact_stage")
+        }
       }
     }
   }
@@ -1315,9 +1338,9 @@ class IngestSpec extends SparkSuite {
     val recorded = batch((1L, doc1))
     S.recordChunks(recorded, "text", "doc_id", md5Store)
     S.recordChunks(recorded, "text", "doc_id", xxStore,
-      hashForm = S.XxForm)
-    assert(S.storedHashForm(spark, md5Store) === S.Md5Form)
-    assert(S.storedHashForm(spark, xxStore) === S.XxForm)
+      hashForm = HashForm.Xx)
+    assert(S.storedHashForm(spark, md5Store) === HashForm.Md5)
+    assert(S.storedHashForm(spark, xxStore) === HashForm.Xx)
     // the xx store physically holds 8-byte longs — the 4× width win
     assert(spark.read.parquet(xxStore).schema("h").dataType
       === org.apache.spark.sql.types.LongType)
@@ -1336,17 +1359,18 @@ class IngestSpec extends SparkSuite {
     // record more content after the build so residual files exist)
     assert(S.buildBloomSidecar(spark, md5Store, numShards = 4) > 0L)
     assert(S.buildBloomSidecar(spark, xxStore, numShards = 4) > 0L)
-    assert(ids(S.newChunkUniqueWithBloom(probe, "text", "doc_id",
+    assert(ids(S.newChunkUnique(probe, "text", "doc_id",
       md5Store)) === want)
-    assert(ids(S.newChunkUniqueWithBloom(probe, "text", "doc_id",
+    assert(ids(S.newChunkUnique(probe, "text", "doc_id",
       xxStore)) === want, "hash forms disagree on the bloom path")
     val late = (1 to 150).map(i => f"late$i%03d vine$i%03d").mkString(" ")
     S.recordChunks(batch((2L, late)), "text", "doc_id", md5Store)
     val staleProbe = batch((20L, late), (21L, edited),
       (22L, (1 to 150).map(i => f"xi$i%03d bay$i%03d").mkString(" ")))
-    assert(ids(S.newChunkUniqueWithBloom(staleProbe, "text", "doc_id",
+    assert(ids(S.newChunkUnique(staleProbe, "text", "doc_id",
       md5Store))
-      === ids(S.newChunkUnique(staleProbe, "text", "doc_id", md5Store)),
+      === ids(S.newChunkUnique(staleProbe, "text", "doc_id",
+        plainTwin(md5Store))),
       "stale-sidecar bloom path diverges from the plain path")
     // xx retraction un-flags
     S.retract(recorded, "text", "doc_id", xxStore)
@@ -1355,7 +1379,7 @@ class IngestSpec extends SparkSuite {
     // a non-empty store refuses the other form
     intercept[IllegalArgumentException] {
       S.recordChunks(probe, "text", "doc_id", md5Store,
-        hashForm = S.XxForm)
+        hashForm = HashForm.Xx)
     }
     // bucketed-catalog form: same answers on plain/bloom paths, the
     // hash-form property survives compaction, mixed forms refused
@@ -1363,31 +1387,31 @@ class IngestSpec extends SparkSuite {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}_compact_stage")
     try {
-      S.recordChunksBucketed(recorded, "text", "doc_id", tbl,
-        hashForm = S.XxForm)
-      assert(S.storedHashFormBucketed(spark, tbl) === S.XxForm)
+      S.recordChunks(recorded, "text", "doc_id", Bucketed(tbl),
+        hashForm = HashForm.Xx)
+      assert(S.storedHashForm(spark, Bucketed(tbl)) === HashForm.Xx)
       assert(spark.table(tbl).schema("content_hash").dataType
         === org.apache.spark.sql.types.LongType)
-      assert(ids(S.newChunkUniqueBucketed(probe, "text", "doc_id", tbl))
+      assert(ids(S.newChunkUnique(probe, "text", "doc_id", Bucketed(tbl)))
         === want, "bucketed plain path diverges")
-      assert(S.buildBloomSidecarBucketed(spark, tbl, numShards = 4) > 0L)
-      assert(ids(S.newChunkUniqueBucketedWithBloom(probe, "text",
-        "doc_id", tbl)) === want, "bucketed bloom path diverges")
+      assert(S.buildBloomSidecar(spark, Bucketed(tbl), numShards = 4) > 0L)
+      assert(ids(S.newChunkUnique(probe, "text",
+        "doc_id", Bucketed(tbl))) === want, "bucketed bloom path diverges")
       // at-least-once re-record, compact, answers preserved
-      S.recordChunksBucketed(recorded, "text", "doc_id", tbl)
-      val (before, after) = S.compactBucketedStore(spark, tbl)
+      S.recordChunks(recorded, "text", "doc_id", Bucketed(tbl))
+      val (before, after) = S.compactStore(spark, Bucketed(tbl))
       assert(before > after && after > 0L)
-      assert(S.storedHashFormBucketed(spark, tbl) === S.XxForm,
+      assert(S.storedHashForm(spark, Bucketed(tbl)) === HashForm.Xx,
         "hash form property lost across the compaction swap")
-      assert(ids(S.newChunkUniqueBucketed(probe, "text", "doc_id", tbl))
+      assert(ids(S.newChunkUnique(probe, "text", "doc_id", Bucketed(tbl)))
         === want, "bucketed answers changed across compaction")
       // bucketed retraction
-      S.retractBucketed(recorded, "text", "doc_id", tbl)
-      assert(ids(S.newChunkUniqueBucketed(probe, "text", "doc_id", tbl))
+      S.retract(recorded, "text", "doc_id", Bucketed(tbl))
+      assert(ids(S.newChunkUnique(probe, "text", "doc_id", Bucketed(tbl)))
         === Seq(10L, 11L), "bucketed retraction did not un-flag")
       intercept[IllegalArgumentException] {
-        S.recordChunksBucketed(probe, "text", "doc_id", tbl,
-          hashForm = S.Md5Form)
+        S.recordChunks(probe, "text", "doc_id", Bucketed(tbl),
+          hashForm = HashForm.Md5)
       }
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -1408,9 +1432,9 @@ class IngestSpec extends SparkSuite {
       df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val rec = batch((1L, "alpha beta"), (2L, "gamma delta"))
     D.recordHashes(rec, "text", md5Store)
-    D.recordHashes(rec, "text", xxStore, hashForm = D.XxForm)
-    assert(D.storedHashForm(spark, md5Store) === D.Md5Form)
-    assert(D.storedHashForm(spark, xxStore) === D.XxForm)
+    D.recordHashes(rec, "text", xxStore, hashForm = HashForm.Xx)
+    assert(D.storedHashForm(spark, md5Store) === HashForm.Md5)
+    assert(D.storedHashForm(spark, xxStore) === HashForm.Xx)
     // the xx store physically holds 8-byte longs — the 4× width win
     assert(spark.read.parquet(xxStore).schema("content_hash").dataType
       === org.apache.spark.sql.types.LongType)
@@ -1426,9 +1450,9 @@ class IngestSpec extends SparkSuite {
     // survivor equality, bloom path
     assert(D.buildBloomSidecar(spark, md5Store, numShards = 4) > 0L)
     assert(D.buildBloomSidecar(spark, xxStore, numShards = 4) > 0L)
-    assert(ids(D.newUniqueWithBloom(probe, "text", "doc_id", md5Store))
+    assert(ids(D.newUnique(probe, "text", "doc_id", md5Store))
       === want)
-    assert(ids(D.newUniqueWithBloom(probe, "text", "doc_id", xxStore))
+    assert(ids(D.newUnique(probe, "text", "doc_id", xxStore))
       === want, "hash forms disagree on the bloom path")
     // retraction works on the xx form: doc 1's content reports new
     D.retract(rec.filter(col("doc_id") === 1L), "text", xxStore)
@@ -1437,10 +1461,10 @@ class IngestSpec extends SparkSuite {
     // compaction drops the retracted rows physically; form survives
     D.compactStore(spark, xxStore)
     assert(spark.read.parquet(xxStore).count() === 1L)
-    assert(D.storedHashForm(spark, xxStore) === D.XxForm)
+    assert(D.storedHashForm(spark, xxStore) === HashForm.Xx)
     // a non-empty store refuses the other form
     intercept[IllegalArgumentException] {
-      D.recordHashes(probe, "text", md5Store, hashForm = D.XxForm)
+      D.recordHashes(probe, "text", md5Store, hashForm = HashForm.Xx)
     }
     // a carried content_hash of the WRONG type is refused, not
     // silently recorded unmatchable (md5 probe output → xx store)
@@ -1472,47 +1496,47 @@ class IngestSpec extends SparkSuite {
       def ids(df: org.apache.spark.sql.DataFrame) =
         df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       val rec = batch((1L, "alpha beta"), (2L, "gamma delta"))
-      D.recordHashesBucketed(rec, "text", md5T)
-      D.recordHashesBucketed(rec, "text", xxT, hashForm = D.XxForm)
-      assert(D.storedHashFormBucketed(spark, md5T) === D.Md5Form)
-      assert(D.storedHashFormBucketed(spark, xxT) === D.XxForm)
+      D.recordHashes(rec, "text", Bucketed(md5T))
+      D.recordHashes(rec, "text", Bucketed(xxT), hashForm = HashForm.Xx)
+      assert(D.storedHashForm(spark, Bucketed(md5T)) === HashForm.Md5)
+      assert(D.storedHashForm(spark, Bucketed(xxT)) === HashForm.Xx)
       assert(spark.table(xxT).schema("content_hash").dataType
         === org.apache.spark.sql.types.LongType)
       val probe = batch((10L, "ALPHA  beta"), (11L, "epsilon zeta"))
-      val want = ids(D.newUniqueBucketed(probe, "text", "doc_id", md5T))
+      val want = ids(D.newUnique(probe, "text", "doc_id", Bucketed(md5T)))
       assert(want === Seq(11L), "fixture did not discriminate")
-      assert(ids(D.newUniqueBucketed(probe, "text", "doc_id", xxT))
+      assert(ids(D.newUnique(probe, "text", "doc_id", Bucketed(xxT)))
         === want, "hash forms disagree on the bucketed plain path")
       // bloom path equality (long keys cast to decimal strings on
       // build and probe alike)
-      assert(D.buildBloomSidecarBucketed(spark, xxT, numShards = 4) > 0L)
-      assert(ids(D.newUniqueBucketedWithBloom(probe, "text", "doc_id",
-        xxT)) === want, "xx bucketed bloom path diverges")
+      assert(D.buildBloomSidecar(spark, Bucketed(xxT), numShards = 4) > 0L)
+      assert(ids(D.newUnique(probe, "text", "doc_id",
+        Bucketed(xxT))) === want, "xx bucketed bloom path diverges")
       // retraction + compaction on the xx table
-      D.retractBucketed(rec.filter(col("doc_id") === 1L), "text", xxT)
-      assert(ids(D.newUniqueBucketed(probe, "text", "doc_id", xxT))
+      D.retract(rec.filter(col("doc_id") === 1L), "text", Bucketed(xxT))
+      assert(ids(D.newUnique(probe, "text", "doc_id", Bucketed(xxT)))
         === Seq(10L, 11L), "xx bucketed retraction did not unmask")
-      val (b, a) = D.compactBucketedStore(spark, xxT)
+      val (b, a) = D.compactStore(spark, Bucketed(xxT))
       assert(b === 2L && a === 1L, s"xx compaction kept $a of $b")
-      assert(D.storedHashFormBucketed(spark, xxT) === D.XxForm,
+      assert(D.storedHashForm(spark, Bucketed(xxT)) === HashForm.Xx,
         "hash form property lost across the compaction swap")
       // a form-less append follows the table's form; re-recorded
       // content is seen again (tombstones cleared by the compaction)
-      D.recordHashesBucketed(rec, "text", xxT)
+      D.recordHashes(rec, "text", Bucketed(xxT))
       assert(spark.table(xxT).schema("content_hash").dataType
         === org.apache.spark.sql.types.LongType)
-      assert(ids(D.newUniqueBucketed(probe, "text", "doc_id", xxT))
+      assert(ids(D.newUnique(probe, "text", "doc_id", Bucketed(xxT)))
         === Seq(11L), "re-recorded xx content not dropped")
       // a non-empty table refuses the other form
       intercept[IllegalArgumentException] {
-        D.recordHashesBucketed(probe, "text", md5T, hashForm = D.XxForm)
+        D.recordHashes(probe, "text", Bucketed(md5T), hashForm = HashForm.Xx)
       }
       // an EMPTY table switches forms by recreation (column type flips)
       val emptyT = "dedup_form_empty_t"
       spark.sql(s"DROP TABLE IF EXISTS $emptyT")
       try {
-        D.ensureBucketedStore(spark, emptyT, buckets = 4)
-        D.recordHashesBucketed(rec, "text", emptyT, hashForm = D.XxForm)
+        D.ensureStore(spark, Bucketed(emptyT, 4))
+        D.recordHashes(rec, "text", Bucketed(emptyT), hashForm = HashForm.Xx)
         assert(spark.table(emptyT).schema("content_hash").dataType
           === org.apache.spark.sql.types.LongType)
       } finally spark.sql(s"DROP TABLE IF EXISTS $emptyT")
@@ -1542,8 +1566,8 @@ class IngestSpec extends SparkSuite {
     val rec = batch((1L, doc1), (2L, doc2))
     N.recordSignatures(rec, "text", "doc_id", md5Store)
     N.recordSignatures(rec, "text", "doc_id", xxStore,
-      hashForm = N.XxForm)
-    assert(N.storedHashForm(spark, xxStore) === N.XxForm)
+      hashForm = HashForm.Xx)
+    assert(N.storedHashForm(spark, xxStore) === HashForm.Xx)
     // the xx store's band key is an 8-byte long, not the ~60-char key
     assert(spark.read.parquet(xxStore).schema("band_key").dataType
       === org.apache.spark.sql.types.LongType)
@@ -1564,44 +1588,44 @@ class IngestSpec extends SparkSuite {
     // a non-empty store refuses the other form
     intercept[IllegalArgumentException] {
       N.recordSignatures(probe, "text", "doc_id", md5Store,
-        hashForm = N.XxForm)
+        hashForm = HashForm.Xx)
     }
     // BUCKETED: same laws through the catalog table
     val xxT = "near_form_xx_t"
     spark.sql(s"DROP TABLE IF EXISTS $xxT")
     spark.sql(s"DROP TABLE IF EXISTS ${xxT}_compact_stage")
     try {
-      N.recordSignaturesBucketed(rec, "text", "doc_id", xxT,
-        hashForm = N.XxForm)
-      assert(N.storedHashFormBucketed(spark, xxT) === N.XxForm)
+      N.recordSignatures(rec, "text", "doc_id", Bucketed(xxT),
+        hashForm = HashForm.Xx)
+      assert(N.storedHashForm(spark, Bucketed(xxT)) === HashForm.Xx)
       assert(spark.table(xxT).schema("band_key").dataType
         === org.apache.spark.sql.types.LongType)
-      assert(ids(N.newNearUniqueBucketed(probe, "text", "doc_id", xxT))
+      assert(ids(N.newNearUnique(probe, "text", "doc_id", Bucketed(xxT)))
         === want, "hash forms disagree on the bucketed plain path")
       // bloom path equality over the long band keys
-      assert(N.buildBloomSidecarBucketed(spark, xxT, numShards = 4) > 0L)
-      assert(ids(N.newNearUniqueBucketedWithBloom(probe, "text",
-        "doc_id", xxT)) === want, "xx bucketed bloom path diverges")
+      assert(N.buildBloomSidecar(spark, Bucketed(xxT), numShards = 4) > 0L)
+      assert(ids(N.newNearUnique(probe, "text",
+        "doc_id", Bucketed(xxT))) === want, "xx bucketed bloom path diverges")
       // stale-residual: doc3 recorded after the sidecar build — its
       // copy must still be flagged through the residual leg
-      N.recordSignaturesBucketed(batch((30L, doc3)), "text", "doc_id",
-        xxT)
-      assert(ids(N.newNearUniqueBucketedWithBloom(
+      N.recordSignatures(batch((30L, doc3)), "text", "doc_id",
+        Bucketed(xxT))
+      assert(ids(N.newNearUnique(
         batch((31L, doc3 + " late footer"), (32L, (1 to 60)
           .map(i => s"delta$i null$i case$i").mkString(" "))),
-        "text", "doc_id", xxT)) === Seq(32L))
+        "text", "doc_id", Bucketed(xxT))) === Seq(32L))
       // compaction keeps the form property and the answers (doc3 is
       // recorded history by now, so only genuinely fresh content
       // survives the post-compaction probe)
-      val (b, a) = N.compactBucketedStore(spark, xxT)
+      val (b, a) = N.compactStore(spark, Bucketed(xxT))
       assert(b >= a && a > 0L)
-      assert(N.storedHashFormBucketed(spark, xxT) === N.XxForm,
+      assert(N.storedHashForm(spark, Bucketed(xxT)) === HashForm.Xx,
         "hash form property lost across the compaction swap")
-      assert(ids(N.newNearUniqueBucketed(
+      assert(ids(N.newNearUnique(
         batch((40L, doc1 + " another tiny edit"),
           (41L, (1 to 60).map(i => s"zeta$i omega$i final$i")
             .mkString(" "))),
-        "text", "doc_id", xxT)) === Seq(41L))
+        "text", "doc_id", Bucketed(xxT))) === Seq(41L))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $xxT")
       spark.sql(s"DROP TABLE IF EXISTS ${xxT}_compact_stage")
@@ -1635,15 +1659,13 @@ class IngestSpec extends SparkSuite {
       (14L, 0x8888, 0x7777, 0x6666, 0x9999)) // far: no shared band
     def probe() = M.newNearUnique(media(probeRows: _*), "media_id",
       hashes(probeRows: _*), store)
-    def probeBloom() = M.newNearUniqueWithBloom(media(probeRows: _*),
-      "media_id", hashes(probeRows: _*), store)
     assert(ids(probe()) === Seq(13L, 14L),
       "H<=3 neighbors must flag; the H-4 candidate and the far hash " +
         "must survive")
-    // no sidecar yet: the bloom entry point falls back, same answer
-    assert(ids(probeBloom()) === Seq(13L, 14L))
+    // no sidecar yet: the one probe plans the plain join, same answer
+    assert(ids(probe()) === Seq(13L, 14L))
     assert(M.buildBloomSidecar(spark, store, numShards = 4) > 0L)
-    assert(ids(probeBloom()) === Seq(13L, 14L),
+    assert(ids(probe()) === Seq(13L, 14L),
       "the bloom-split probe diverged from the exact one")
     // residual leg: history appended AFTER the sidecar build must
     // still flag its neighbors
@@ -1651,7 +1673,7 @@ class IngestSpec extends SparkSuite {
     M.recordHashes(hashes(hC), store)
     val late = Seq((20L, 0x00AB, 0x1234, 0x00BB, 0x00CC), // H 2 of C
       (21L, 0x7070, 0x0707, 0x7007, 0x0770))
-    assert(ids(M.newNearUniqueWithBloom(media(late: _*), "media_id",
+    assert(ids(M.newNearUnique(media(late: _*), "media_id",
       hashes(late: _*), store)) === Seq(21L),
       "a post-sidecar record must flag through the residual leg")
     // retraction: A's rows tombstone; its 1-bit neighbor passes, B's
@@ -1688,33 +1710,31 @@ class IngestSpec extends SparkSuite {
         df.select("media_id").collect().map(_.getLong(0)).sorted.toSeq
       val hA = (1L, 0x1111, 0x2222, 0x3333, 0x4444)
       val hB = (2L, 0x0F0F, 0x00FF, 0x0F00, 0x5A5A)
-      M.recordHashesBucketed(hashes(hA, hB), t)
+      M.recordHashes(hashes(hA, hB), Bucketed(t))
       val probeRows = Seq(
         (10L, 0x1111, 0x2222, 0x3333, 0x4444), // H 0
         (11L, 0x1110, 0x2222, 0x3333, 0x4444), // H 1
         (13L, 0x111E, 0x2222, 0x3333, 0x4444), // H 4 candidate: passes
         (14L, 0x8888, 0x7777, 0x6666, 0x9999)) // far
-      def probe() = M.newNearUniqueBucketed(media(probeRows: _*),
-        "media_id", hashes(probeRows: _*), t)
-      def probeBloom() = M.newNearUniqueBucketedWithBloom(
-        media(probeRows: _*), "media_id", hashes(probeRows: _*), t)
+      def probe() = M.newNearUnique(media(probeRows: _*),
+        "media_id", hashes(probeRows: _*), Bucketed(t))
       assert(ids(probe()) === Seq(13L, 14L))
-      assert(ids(probeBloom()) === Seq(13L, 14L)) // fallback, no sidecar
-      assert(M.buildBloomSidecarBucketed(spark, t, numShards = 4) > 0L)
-      assert(ids(probeBloom()) === Seq(13L, 14L),
+      assert(ids(probe()) === Seq(13L, 14L)) // fallback, no sidecar
+      assert(M.buildBloomSidecar(spark, Bucketed(t), numShards = 4) > 0L)
+      assert(ids(probe()) === Seq(13L, 14L),
         "bucketed bloom probe diverged")
       // residual leg: post-sidecar record still flags its neighbors
-      M.recordHashesBucketed(hashes((3L, 0x00AA, 0x1234, 0x00BB,
-        0x00CC)), t)
+      M.recordHashes(hashes((3L, 0x00AA, 0x1234, 0x00BB,
+        0x00CC)), Bucketed(t))
       val late = Seq((20L, 0x00AB, 0x1234, 0x00BB, 0x00CC),
         (21L, 0x7070, 0x0707, 0x7007, 0x0770))
-      assert(ids(M.newNearUniqueBucketedWithBloom(media(late: _*),
-        "media_id", hashes(late: _*), t)) === Seq(21L))
+      assert(ids(M.newNearUnique(media(late: _*),
+        "media_id", hashes(late: _*), Bucketed(t))) === Seq(21L))
       // retraction + compaction
-      M.retractBucketed(hashes(hA), t)
+      M.retract(hashes(hA), Bucketed(t))
       assert(ids(probe()) === Seq(10L, 11L, 13L, 14L),
         "bucketed retraction must un-flag A's neighbors")
-      val (before, after) = M.compactBucketedStore(spark, t)
+      val (before, after) = M.compactStore(spark, Bucketed(t))
       assert(before >= after && after > 0L)
       assert(ids(probe()) === Seq(10L, 11L, 13L, 14L),
         "answers changed across the bucketed compaction swap")
@@ -1733,47 +1753,47 @@ class IngestSpec extends SparkSuite {
     val store = tmpDir("storestats") + "/hashes"
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     // empty store: nothing due
-    val s0 = SS.path(spark, store)
+    val s0 = SS.of(spark, store)
     assert(s0.dataFiles === 0 && !s0.compactionDue && !s0.sidecarStale)
     // recorded, no sidecar yet: stale by definition, no compaction due
     D.recordHashes(batch((1L, "alpha"), (2L, "beta")), "text", store)
-    val s1 = SS.path(spark, store)
+    val s1 = SS.of(spark, store)
     assert(s1.dataFiles > 0 && s1.dataBytes > 0L)
     assert(s1.tombstoneFiles === 0 && s1.tombstoneBytes === 0L)
     assert(!s1.sidecarPresent && s1.sidecarStale,
       "a non-empty store without a sidecar must read stale")
     assert(!s1.compactionDue)
-    assert(s1.hashForm === D.Md5Form && s1.stride === 1)
+    assert(s1.hashForm === HashForm.Md5 && s1.stride === 1)
     // sidecar built: fresh, fully covered
     assert(D.buildBloomSidecar(spark, store, numShards = 4) > 0L)
-    val s2 = SS.path(spark, store)
+    val s2 = SS.of(spark, store)
     assert(s2.sidecarPresent && !s2.sidecarStale)
     assert(s2.coveredFiles === s2.dataFiles && s2.residualFiles === 0)
     // comparable-size append: residual share ~half, sidecar stale again
     D.recordHashes(batch((3L, "gamma"), (4L, "delta")), "text", store)
-    val s3 = SS.path(spark, store)
+    val s3 = SS.of(spark, store)
     assert(s3.residualFiles > 0 && s3.residualBytes > 0L)
     assert(s3.sidecarStale, "a ~50% residual share must read stale")
     // retraction: backlog visible; a lowered ceiling flips the
     // compact-before-the-broadcast-gate-falls-over signal
     D.retract(batch((1L, "alpha")), "text", store)
-    val s4 = SS.path(spark, store)
+    val s4 = SS.of(spark, store)
     assert(s4.tombstoneFiles > 0 && s4.tombstoneBytes > 0L)
     assert(!s4.compactionDue, "takedown-list backlog under the " +
       "default ceiling must not demand compaction")
     spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
     try {
-      val s5 = SS.path(spark, store)
+      val s5 = SS.of(spark, store)
       assert(s5.broadcastCeilingBytes === 2L)
       assert(s5.compactionDue,
         "backlog past half the ceiling must demand compaction")
     } finally spark.conf.unset("graft.tombstone.broadcast.maxBytes")
     // file-count pressure alone also fires
-    assert(SS.path(spark, store, maxDataFiles = 0).compactionDue)
+    assert(SS.of(spark, store, maxDataFiles = 0).compactionDue)
     // compaction clears the backlog; the rewritten file names void the
     // sidecar's coverage (probes already degrade to the exact plan)
     D.compactStore(spark, store)
-    val s6 = SS.path(spark, store)
+    val s6 = SS.of(spark, store)
     assert(s6.tombstoneBytes === 0L)
     assert(s6.coveredFiles === 0 && s6.sidecarStale,
       "post-compaction coverage must read stale until a rebuild")
@@ -1781,13 +1801,13 @@ class IngestSpec extends SparkSuite {
     val t = "storestats_xx_t"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     try {
-      D.recordHashesBucketed(batch((1L, "alpha")), "text", t,
-        hashForm = D.XxForm)
-      val b1 = SS.bucketed(spark, t)
-      assert(b1.dataFiles > 0 && b1.hashForm === D.XxForm)
+      D.recordHashes(batch((1L, "alpha")), "text", Bucketed(t),
+        hashForm = HashForm.Xx)
+      val b1 = SS.of(spark, Bucketed(t))
+      assert(b1.dataFiles > 0 && b1.hashForm === HashForm.Xx)
       assert(!b1.sidecarPresent && b1.sidecarStale)
-      D.retractBucketed(batch((1L, "alpha")), "text", t)
-      assert(SS.bucketed(spark, t).tombstoneBytes > 0L)
+      D.retract(batch((1L, "alpha")), "text", Bucketed(t))
+      assert(SS.of(spark, Bucketed(t)).tombstoneBytes > 0L)
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
@@ -1826,14 +1846,14 @@ class IngestSpec extends SparkSuite {
     // bloom parity: with a sidecar, and with post-sidecar residual
     // appends, the gated answer is unchanged
     C.buildBloomSidecar(spark, store)
-    assert(ids(C.newCleanWithBloom(probe, "text", "doc_id", store))
+    assert(ids(C.newClean(probe, "text", "doc_id", store))
       === Seq(1L))
     C.recordBenchmark(Seq((102L, "gamma delta epsilon www"))
       .toDF("doc_id", "text"), "text", "doc_id", store)
-    assert(ids(C.newCleanWithBloom(probe, "text", "doc_id", store))
+    assert(ids(C.newClean(probe, "text", "doc_id", store))
       === Seq(), "a residual (post-sidecar) registration must gate " +
         "through the miss leg")
-    assert(ids(C.newCleanWithBloom(probe, "text", "doc_id", store,
+    assert(ids(C.newClean(probe, "text", "doc_id", store,
       minSharedGrams = 2)) === Seq(1L, 2L, 4L))
     // retraction: retiring A disarms A-only grams immediately, but the
     // gram A SHARES with B stays armed through B's rows
@@ -1842,17 +1862,17 @@ class IngestSpec extends SparkSuite {
         .filter(col("doc_id").isin(2L, 3L, 4L)))
       === Set((3L, 1L, 1L), (4L, 1L, 1L)),
       "retraction must not disarm a gram another benchmark shares")
-    val stats1 = graft.ingest.StoreStats.path(spark, store)
+    val stats1 = graft.ingest.StoreStats.of(spark, store)
     assert(stats1.tombstoneFiles > 0 && stats1.dataFiles > 0
       && stats1.sidecarPresent)
     C.compactStore(spark, store)
     assert(spark.read.parquet(store)
       .filter(col("bench_id") === 100L).count() === 0L,
       "retracted benchmark rows survived compaction")
-    assert(graft.ingest.StoreStats.path(spark, store).tombstoneFiles
+    assert(graft.ingest.StoreStats.of(spark, store).tombstoneFiles
       === 0, "compaction must consume the tombstone backlog")
     C.buildBloomSidecar(spark, store)
-    assert(ids(C.newCleanWithBloom(probe, "text", "doc_id", store))
+    assert(ids(C.newClean(probe, "text", "doc_id", store))
       === Seq(2L), "post-compaction gate drifted")
   }
 
@@ -1928,11 +1948,11 @@ class IngestSpec extends SparkSuite {
     assert(D.newUnique(docs, "domain", "doc_id", store).count() === 1L)
     // bloom parity, incl. a residual (post-sidecar) listing
     D.buildBloomSidecar(spark, store)
-    assert(ids(D.newUnseenWithBloom(docs, "domain", store))
+    assert(ids(D.newUnseen(docs, "domain", store))
       === Seq(1L, 2L))
     D.recordHashes(Seq(Tuple1("good.example.com")).toDF("domain"),
       "domain", store)
-    assert(ids(D.newUnseenWithBloom(docs, "domain", store)) === Seq(),
+    assert(ids(D.newUnseen(docs, "domain", store)) === Seq(),
       "a residual listing must gate through the miss leg")
     // un-listing = the standard retraction: probes reopen immediately
     D.retract(Seq(Tuple1("spam.example.com")).toDF("domain"),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import graft.ingest.StoreLayout.Bucketed
 import graft.layout.Layout
 
 /** Physical-layout levers: bucketed co-located joins (zero exchanges)
@@ -106,10 +107,10 @@ class LayoutSpec extends SparkSuite {
     spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      graft.ingest.DedupStore.ensureBucketedStore(spark, table, buckets = 8)
+      graft.ingest.DedupStore.ensureStore(spark, Bucketed(table, 8))
       val hist = (1 to 200).map(i => (i.toLong, s"doc number $i"))
         .toDF("doc_id", "text")
-      graft.ingest.DedupStore.recordHashesBucketed(hist, "text", table)
+      graft.ingest.DedupStore.recordHashes(hist, "text", Bucketed(table))
       // Force a shuffle-based join: broadcasting the store would hide
       // the claim under test (and is exactly what CANNOT happen at
       // 100 TB — the store is the big side).
@@ -117,7 +118,7 @@ class LayoutSpec extends SparkSuite {
       val batch = (150 to 250).map(i => (i.toLong, s"doc number $i"))
         .toDF("doc_id", "text")
       val nu = graft.ingest.DedupStore
-        .newUniqueBucketed(batch, "text", "doc_id", table)
+        .newUnique(batch, "text", "doc_id", Bucketed(table))
       val plan = nu.queryExecution.sparkPlan
       val anti = plan.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -135,11 +136,11 @@ class LayoutSpec extends SparkSuite {
       // LIVE TOMBSTONES must not cost the property: the subtraction's
       // anti-join carries an explicit broadcast hint, so even with
       // auto-broadcast still disabled the store side plans no exchange
-      graft.ingest.DedupStore.retractBucketed(
+      graft.ingest.DedupStore.retract(
         Seq((160L, "doc number 160")).toDF("doc_id", "text"), "text",
-        table)
+        Bucketed(table))
       val nuT = graft.ingest.DedupStore
-        .newUniqueBucketed(batch, "text", "doc_id", table)
+        .newUnique(batch, "text", "doc_id", Bucketed(table))
       val planT = nuT.queryExecution.sparkPlan
       val exchangesT = planT.collect {
         case e: ShuffleExchangeExec => e
@@ -168,17 +169,17 @@ class LayoutSpec extends SparkSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val N = graft.ingest.NearDupStore
-      N.ensureBucketedStore(spark, table, buckets = 8)
+      N.ensureStore(spark, Bucketed(table, 8))
       def mk(tag: String, n: Int): String =
         (1 to 60).map(i => s"$tag$n w$i t${i * n} q${i + n}").mkString(" ")
       val hist = (1 to 10).map(i => (i.toLong, mk("alpha", i)))
         .toDF("doc_id", "text")
-      N.recordSignaturesBucketed(hist, "text", "doc_id", table)
+      N.recordSignatures(hist, "text", "doc_id", Bucketed(table))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val batch = Seq(
         (100L, mk("alpha", 3) + " edited trailing footer"),
         (101L, mk("fresh", 9))).toDF("doc_id", "text")
-      val nu = N.newNearUniqueBucketed(batch, "text", "doc_id", table)
+      val nu = N.newNearUnique(batch, "text", "doc_id", Bucketed(table))
       val plan = nu.queryExecution.sparkPlan
       val inner = plan.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -208,12 +209,12 @@ class LayoutSpec extends SparkSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val S = graft.ingest.SpanStore
-      S.ensureBucketedStore(spark, table, buckets = 8)
+      S.ensureStore(spark, Bucketed(table, 8))
       def mk(tag: String, n: Int): String =
         (1 to 30).map(i => f"$tag$n%02dw$i%02d q${i * n}%03d").mkString(" ")
       val hist = (1 to 20).map(i => (i.toLong, mk("alpha", i)))
         .toDF("doc_id", "text")
-      S.recordWindowsBucketed(hist, "text", "doc_id", table)
+      S.recordWindows(hist, "text", "doc_id", Bucketed(table))
       // Force a shuffle-based join: broadcasting the store would hide
       // the claim under test (at 100 TB the window store is the big side)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -223,7 +224,7 @@ class LayoutSpec extends SparkSuite {
         (100L, a1.substring(0, a1.length / 2) + " " +
           a2.substring(a2.length / 2)),
         (101L, mk("fresh", 9))).toDF("doc_id", "text")
-      val nu = S.newSpanUniqueBucketed(batch, "text", "doc_id", table)
+      val nu = S.newSpanUnique(batch, "text", "doc_id", Bucketed(table))
       val plan = nu.queryExecution.sparkPlan
       val semi = plan.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -241,12 +242,12 @@ class LayoutSpec extends SparkSuite {
       // bloom form under a STALE sidecar (residual files present): the
       // hit leg keeps the zero-exchange store side, the residual leg is
       // a broadcast — no semi-join's store side may plan a shuffle
-      S.buildBloomSidecarBucketed(spark, table)
-      S.recordWindowsBucketed(
+      S.buildBloomSidecar(spark, Bucketed(table))
+      S.recordWindows(
         Seq((50L, mk("late", 7))).toDF("doc_id", "text"),
-        "text", "doc_id", table)
-      val nb = S.newSpanUniqueBucketedWithBloom(batch, "text", "doc_id",
-        table)
+        "text", "doc_id", Bucketed(table))
+      val nb = S.newSpanUnique(batch, "text", "doc_id",
+        Bucketed(table))
       val planB = nb.queryExecution.sparkPlan
       val semiB = planB.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -276,12 +277,12 @@ class LayoutSpec extends SparkSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val M = graft.ingest.MediaNearStore
-      M.ensureBucketedStore(spark, table, buckets = 8)
+      M.ensureStore(spark, Bucketed(table, 8))
       def hashes(rows: (Long, Int, Int, Int, Int)*) =
         rows.toSeq.toDF("media_id", "band0", "band1", "band2", "band3")
-      M.recordHashesBucketed(
+      M.recordHashes(
         hashes((1L, 0x1111, 0x2222, 0x3333, 0x4444),
-          (2L, 0x0F0F, 0x00FF, 0x0F00, 0x5A5A)), table)
+          (2L, 0x0F0F, 0x00FF, 0x0F00, 0x5A5A)), Bucketed(table))
       // Force a shuffle-based join: broadcasting the store would hide
       // the claim under test (at 100 TB the hash history is the big side)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -290,8 +291,8 @@ class LayoutSpec extends SparkSuite {
         (101L, 0x8888, 0x7777, 0x6666, 0x9999)) // far
       val media = probes.map(r => (r._1, s"payload${r._1}"))
         .toDF("media_id", "content")
-      val nu = M.newNearUniqueBucketed(media, "media_id",
-        hashes(probes: _*), table)
+      val nu = M.newNearUnique(media, "media_id",
+        hashes(probes: _*), Bucketed(table))
       val plan = nu.queryExecution.sparkPlan
       val inner = plan.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -815,7 +816,7 @@ class LayoutSpec extends SparkSuite {
     assert(spark.read.parquet(A.currentIndexDir(spark, root))
       .filter(col("vec_id") === x).count() === 0L,
       "retrain did not physically drop the retracted rows")
-    assert(graft.ingest.DedupStore.storeDataFiles(fs,
+    assert(graft.ingest.StoreLayout.storeDataFiles(fs,
         A.retractedDir(root)).isEmpty,
       "applied retraction files not cleared by retrain")
     // phase 2b: vacuum — prompt physical drop, affected lists only
@@ -850,7 +851,7 @@ class LayoutSpec extends SparkSuite {
     // predecessor retained for in-flight readers; applied set cleared
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/$genBefore")),
       "vacuum GC'd the predecessor generation")
-    assert(graft.ingest.DedupStore.storeDataFiles(fs,
+    assert(graft.ingest.StoreLayout.storeDataFiles(fs,
         A.retractedDir(root)).isEmpty,
       "applied retraction files not cleared by vacuum")
     // re-admission: with the set clear, a re-appended vector serves again

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.ingest.Ingest
+import graft.ingest.StoreLayout
+import graft.ingest.StoreLayout.Bucketed
 
 /** Property-based operator laws (SURVEY.md §5 commitment): ingest
   * idempotence under arbitrary re-delivery, dedup uniqueness, and
@@ -300,21 +302,26 @@ class PropertySpec extends SparkSuite {
       action <- Gen.choose(0, 3) // 0 none, 1 rebuild, 2 compact, 3 both
     } yield (rows, action)
     for (trial <- 0 until 3) {
-      val store = java.nio.file.Files
-        .createTempDirectory(s"bloomlaw$trial").toString + "/hashes"
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"bloomlaw$trial").toString
+      // the plain reference: a twin recorded and compacted alike that
+      // never gets a sidecar
+      val (store, twin) = (dir + "/hashes", dir + "/twin")
       for ((rows, action) <- samples(Gen.listOfN(6, stepGen), 1,
           7000L + trial).head) {
         val batch = rows.toDF("doc_id", "text")
-        val plain = D.newUnique(batch, "text", "doc_id", store)
+        val plain = D.newUnique(batch, "text", "doc_id", twin)
           .collect().map(r => (r.getAs[Long]("doc_id"),
             r.getAs[String]("content_hash"))).toSet
-        val bloomed = D.newUniqueWithBloom(batch, "text", "doc_id", store)
+        val bloomed = D.newUnique(batch, "text", "doc_id", store)
           .collect().map(r => (r.getAs[Long]("doc_id"),
             r.getAs[String]("content_hash"))).toSet
         assert(bloomed === plain, s"trial $trial diverged on $rows")
-        D.recordHashes(batch, "text", store) // record ALL (superset ok)
+        for (s <- Seq(store, twin)) // record ALL (superset ok)
+          D.recordHashes(batch, "text", s)
         if (action == 1 || action == 3) D.buildBloomSidecar(spark, store)
-        if (action == 2 || action == 3) D.compactStore(spark, store)
+        if (action == 2 || action == 3)
+          for (s <- Seq(store, twin)) D.compactStore(spark, s)
       }
     }
   }
@@ -410,6 +417,71 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  /** A store as the four-form law drives it: `delivery(id, k1, k2)`
+    * is the step's one-row batch for families (k1, k2), `probe` its
+    * surviving ids, `record` marks it seen.
+    */
+  private final case class LawStore(
+      store: graft.ingest.KeyStore[StoreLayout],
+      delivery: (Long, Int, Int) => DataFrame,
+      probe: (DataFrame, StoreLayout) => Seq[Long],
+      record: (DataFrame, StoreLayout) => Unit)
+
+  private def survivorIds(df: DataFrame, idCol: String): Seq[Long] =
+    df.select(idCol).collect().map(_.getLong(0)).sorted.toSeq
+
+  /** The four-form equivalence law: {Path, Bucketed} × {a twin that
+    * never gets a sidecar, a store whose sidecar is rebuilt on the
+    * random schedule} answer every delivery identically, across random
+    * record / compact / sidecar interleavings. Surviving deliveries
+    * record into all four forms and are delivered again at once;
+    * compaction runs on all four.
+    */
+  private def fourFormLaw(law: LawStore, table: String, seed: Long,
+      steps: Int): Unit = {
+    val stepGen: Gen[(Int, Int, Boolean, Boolean, Boolean)] = for {
+      k1 <- Gen.choose(1, 4)
+      k2 <- Gen.frequency(2 -> Gen.const(-1), 3 -> Gen.choose(1, 4))
+      record <- Gen.oneOf(true, false)
+      compact <- Gen.frequency(4 -> Gen.const(false), 1 -> Gen.const(true))
+      sidecar <- Gen.frequency(3 -> Gen.const(false), 1 -> Gen.const(true))
+    } yield (k1, if (k2 == -1) k1 else k2, record, compact, sidecar)
+    val tables = Seq(table, table + "_plain")
+    def drop(): Unit = for (t <- tables; x <- Seq(t, t + "_compact_stage"))
+      spark.sql(s"DROP TABLE IF EXISTS $x")
+    drop()
+    try {
+      val dir = java.nio.file.Files.createTempDirectory(table).toString
+      val (withSidecar, plain) = (
+        Seq[StoreLayout](dir + "/store", Bucketed(table)),
+        Seq[StoreLayout](dir + "/plain", Bucketed(table + "_plain")))
+      val forms = plain ++ withSidecar
+      var id = 0L
+      for ((k1, k2, record, compact, sidecar) <-
+          samples(Gen.listOfN(steps, stepGen), 1, seed).head) {
+        id += 1
+        val batch = law.delivery(id, k1, k2)
+        val answers = forms.map(law.probe(batch, _))
+        assert(answers.distinct.size === 1,
+          s"step $id (${(k1, k2, record, compact, sidecar)}): " +
+            s"forms disagree: $answers")
+        if (record && answers.head.nonEmpty) {
+          forms.foreach(law.record(batch, _))
+          // the just-recorded keys sit in residual files no sidecar
+          // covers: a re-delivery must be judged alike by all four
+          val again = forms.map(law.probe(batch, _))
+          assert(again.distinct.size === 1,
+            s"step $id re-delivery: forms disagree: $again")
+        }
+        if (compact) forms.foreach {
+          case p: StoreLayout.Path => law.store.compactStore(spark, p, 1L << 20)
+          case b => law.store.compactStore(spark, b)
+        }
+        if (sidecar) withSidecar.foreach(law.store.buildBloomSidecar(spark, _))
+      }
+    } finally drop()
+  }
+
   test("span store four-form equivalence law: path/bucketed x " +
     "plain/bloom agree on every delivery across random record/compact/" +
     "sidecar interleavings") {
@@ -421,51 +493,91 @@ class PropertySpec extends SparkSuite {
       val (ta, tb) = (base(a), base(b))
       ta.substring(0, ta.length / 2) + " " + tb.substring(tb.length / 2)
     }
-    val stepGen: Gen[(Int, Int, Boolean, Boolean, Boolean)] = for {
-      k1 <- Gen.choose(1, 4)
-      k2 <- Gen.frequency(2 -> Gen.const(-1), 3 -> Gen.choose(1, 4))
-      record <- Gen.oneOf(true, false)
-      compact <- Gen.frequency(4 -> Gen.const(false), 1 -> Gen.const(true))
-      sidecar <- Gen.frequency(3 -> Gen.const(false), 1 -> Gen.const(true))
-    } yield (k1, if (k2 == -1) k1 else k2, record, compact, sidecar)
-    val table = "graft_prop_span_bucketed"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
-    try {
-      val store = java.nio.file.Files
-        .createTempDirectory("spaneqlaw").toString + "/windows"
-      var id = 0L
-      for ((k1, k2, record, compact, sidecar) <-
-          samples(Gen.listOfN(8, stepGen), 1, 7300L).head) {
-        id += 1
-        val txt = if (k1 == k2) base(k1) else mashup(k1, k2)
-        val batch = Seq((id, txt)).toDF("doc_id", "text")
-        val answers = Seq(
-          S.newSpanUnique(batch, "text", "doc_id", store).count(),
-          S.newSpanUniqueWithBloom(batch, "text", "doc_id", store).count(),
-          S.newSpanUniqueBucketed(batch, "text", "doc_id", table).count(),
-          S.newSpanUniqueBucketedWithBloom(batch, "text", "doc_id", table)
-            .count())
-        assert(answers.distinct.size === 1,
-          s"step $id (${(k1, k2, record, compact, sidecar)}): " +
-            s"forms disagree: $answers")
-        if (record && answers.head == 1L) {
-          S.recordWindows(batch, "text", "doc_id", store)
-          S.recordWindowsBucketed(batch, "text", "doc_id", table)
-        }
-        if (compact) {
-          S.compactStore(spark, store, 1L << 20)
-          S.compactBucketedStore(spark, table)
-        }
-        if (sidecar) {
-          S.buildBloomSidecar(spark, store)
-          S.buildBloomSidecarBucketed(spark, table)
-        }
-      }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
+    fourFormLaw(LawStore(S,
+      (id, k1, k2) => Seq((id, if (k1 == k2) base(k1) else mashup(k1, k2)))
+        .toDF("doc_id", "text"),
+      (b, l) => survivorIds(S.newSpanUnique(b, "text", "doc_id", l),
+        "doc_id"),
+      S.recordWindows(_, "text", "doc_id", _)),
+      "graft_prop_span_bucketed", 7300L, 8)
+  }
+
+  test("exact store four-form equivalence law: path/bucketed x " +
+    "plain/bloom agree on every delivery across random record/compact/" +
+    "sidecar interleavings") {
+    import spark.implicits._
+    val D = graft.ingest.DedupStore
+    // formatting variants of one family exercise the normalized hash
+    fourFormLaw(LawStore(D,
+      (id, k1, k2) => Seq((id,
+          if (k2 % 2 == 0) s"doc number $k1 content"
+          else s"DOC  NUMBER $k1   CONTENT"))
+        .toDF("doc_id", "text"),
+      (b, l) => survivorIds(D.newUnique(b, "text", "doc_id", l), "doc_id"),
+      D.recordHashes(_, "text", _)),
+      "graft_prop_exact_bucketed", 7400L, 8)
+  }
+
+  test("near store four-form equivalence law: path/bucketed x " +
+    "plain/bloom agree on every delivery across random record/compact/" +
+    "sidecar interleavings") {
+    import spark.implicits._
+    val N = graft.ingest.NearDupStore
+    def base(k: Int): String =
+      (1 to 60).map(i => s"near$k w$i t${i * k} q${i + k}").mkString(" ")
+    // light edits stay inside the >=8/16 agreement radius of family k1
+    fourFormLaw(LawStore(N,
+      (id, k1, k2) => Seq((id, k2 % 3 match {
+          case 0 => base(k1)
+          case 1 => base(k1) + s" footer$k2"
+          case _ => base(k1).toUpperCase
+        })).toDF("doc_id", "text"),
+      (b, l) => survivorIds(N.newNearUnique(b, "text", "doc_id", l),
+        "doc_id"),
+      N.recordSignatures(_, "text", "doc_id", _)),
+      "graft_prop_near_bucketed", 7500L, 8)
+  }
+
+  test("chunk store four-form equivalence law: path/bucketed x " +
+    "plain/bloom agree on every delivery across random record/compact/" +
+    "sidecar interleavings") {
+    import spark.implicits._
+    val C = graft.ingest.CdcChunkStore
+    def base(k: Int): String =
+      (1 to 120).map(i => f"ch${k}t$i%03d z${i * k}%04d").mkString(" ")
+    def mashup(a: Int, b: Int): String = {
+      val (ta, tb) = (base(a), base(b))
+      ta.substring(0, ta.length / 2) + " " + tb.substring(tb.length / 2)
     }
+    fourFormLaw(LawStore(C,
+      (id, k1, k2) => Seq((id, if (k1 == k2) base(k1) else mashup(k1, k2)))
+        .toDF("doc_id", "text"),
+      (b, l) => survivorIds(C.newChunkUnique(b, "text", "doc_id", l),
+        "doc_id"),
+      C.recordChunks(_, "text", "doc_id", _)),
+      "graft_prop_chunk_bucketed", 7600L, 8)
+  }
+
+  test("media store four-form equivalence law: path/bucketed x " +
+    "plain/bloom agree on every delivery across random record/compact/" +
+    "sidecar interleavings") {
+    import spark.implicits._
+    val M = graft.ingest.MediaNearStore
+    // family k1's hash, with k2 - 1 low bits of band0 flipped: Hamming
+    // 0..3 neighbors of the family (k1 == k2 flips k1 - 1 bits)
+    def bands(k1: Int, k2: Int): (Int, Int, Int, Int) =
+      ((0x1000 * k1 + 0x0F0) ^ ((1 << (k2 - 1)) - 1), 0x2200 + 17 * k1,
+        0x3300 ^ (k1 << 4), 0x4400 + 7 * k1)
+    fourFormLaw(LawStore(M,
+      (id, k1, k2) => {
+        val (b0, b1, b2, b3) = bands(k1, k2)
+        Seq((id, b0, b1, b2, b3))
+          .toDF("media_id", "band0", "band1", "band2", "band3")
+      },
+      (h, l) => survivorIds(M.newNearUnique(h.select("media_id"),
+        "media_id", h, l), "media_id"),
+      M.recordHashes(_, _)),
+      "graft_prop_media_bucketed", 7702L, 8)
   }
 
   test("compaction race law: a LIVE appender racing compact never loses " +

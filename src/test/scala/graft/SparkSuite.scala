@@ -67,4 +67,53 @@ trait SparkSuite extends AnyFunSuite {
   def jobNames(jobs: Seq[SparkListenerJobStart]): String =
     jobs.map(_.stageInfos.sortBy(_.stageId).lastOption
       .fold("(no stage)")(_.name)).mkString("; ")
+
+  /** A twin of path store `store` that never gets a Bloom sidecar: a
+    * copy of its data, tombstones and metadata siblings, but not its
+    * `.bloom`. The one store probe over the twin plans the plain join
+    * against the same store state — the reference a sidecar probe must
+    * reproduce.
+    */
+  def plainTwin(store: String): String = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(conf)
+    val twin = java.nio.file.Files.createTempDirectory("plain-twin")
+      .toString + "/store"
+    for (suffix <- Seq("", ".tombstones", ".hashform", ".stride")) {
+      val from = new org.apache.hadoop.fs.Path(store + suffix)
+      if (fs.exists(from))
+        org.apache.hadoop.fs.FileUtil.copy(fs, from, fs,
+          new org.apache.hadoop.fs.Path(twin + suffix), false, conf)
+    }
+    twin
+  }
+
+  /** [[plainTwin]] for a bucketed store table: `<table>_plain_twin`,
+    * with the table's rows, bucket spec, `graft.*` properties and
+    * `_tombstones`, but not its `_bloom`. Replaces an earlier twin.
+    */
+  def plainTwinTable(table: String): String = {
+    val twin = table + "_plain_twin"
+    spark.sql(s"DROP TABLE IF EXISTS $twin")
+    val catalog = spark.sessionState.catalog
+    def entry(t: String) = catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(t))
+    val md = entry(table)
+    val bucketing = md.bucketSpec.get
+    graft.layout.Layout.writeBucketed(spark.table(table), twin,
+      bucketing.numBuckets, bucketing.bucketColumnNames.head)
+    val props = md.properties.filter(_._1.startsWith("graft."))
+    if (props.nonEmpty)
+      spark.sql(s"ALTER TABLE $twin SET TBLPROPERTIES (" +
+        props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
+    val conf = spark.sessionState.newHadoopConf()
+    val tomb = new org.apache.hadoop.fs.Path(md.location.toString,
+      "_tombstones")
+    val fs = tomb.getFileSystem(conf)
+    if (fs.exists(tomb))
+      org.apache.hadoop.fs.FileUtil.copy(fs, tomb, fs,
+        new org.apache.hadoop.fs.Path(entry(twin).location.toString,
+          "_tombstones"), false, conf)
+    twin
+  }
 }

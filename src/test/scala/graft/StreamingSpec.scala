@@ -4,7 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ingest.Warehouse
 import graft.streaming.Streams
-import graft.streaming.Streams.{Bucketed, Path, curationFeed}
+import graft.ingest.StoreLayout.{Bucketed, Path}
+import graft.streaming.Streams.curationFeed
 
 /** Structured Streaming mode: the readStream→foreachBatch port of the
   * reference's poll loop (etl/app.py:253-278) and the event-time windowed
@@ -833,7 +834,7 @@ class StreamingSpec extends SparkSuite {
         .toDF("doc_id", "text"), "text", store)
       D.retract(Seq((0L, "seed doc 1"), (0L, "seed doc 2"))
         .toDF("doc_id", "text"), "text", store)
-      assert(SS.path(spark, store).tombstoneBytes > 0L)
+      assert(SS.of(spark, store).tombstoneBytes > 0L)
       def broadcasts(): Int =
         D.newUnique(probe, "text", "doc_id", store)
           .queryExecution.sparkPlan.collect {
@@ -852,7 +853,7 @@ class StreamingSpec extends SparkSuite {
         spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
         assert(broadcasts() === 0,
           s"$tag: over-ceiling backlog should ride the shuffle fallback")
-        assert(SS.path(spark, store).compactionDue)
+        assert(SS.of(spark, store).compactionDue)
         curationFeed(
           spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
@@ -860,7 +861,7 @@ class StreamingSpec extends SparkSuite {
           maintenanceEvery = 1).awaitTermination()
         // maintenance ran INSIDE the stream: backlog compacted away,
         // sidecar rebuilt over the rewritten files
-        val s = SS.path(spark, store)
+        val s = SS.of(spark, store)
         assert(s.tombstoneBytes === 0L,
           s"$tag: the mid-stream compaction must have cleared the backlog")
         assert(!s.compactionDue, tag)
@@ -2035,86 +2036,95 @@ class StreamingSpec extends SparkSuite {
     "everything ever seen; a full replay neither duplicates survivors " +
     "nor loses hashes") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("dedup-src").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("dedup-out").toString + "/docs"
-    val store = java.nio.file.Files
-      .createTempDirectory("dedup-store").toString + "/hashes"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("dedup-ckpt").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    def deliver(name: String, rows: Seq[(Long, String)]): Unit =
-      rows.toDF("doc_id", "text").coalesce(1).write
-        .mode("overwrite").parquet(s"$srcDir/$name")
-    def drain(): Unit = curationFeed(
-      spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true").parquet(srcDir),
-      Seq(Streams.exactDedup(Path(store), "text", "doc_id")),
-      outDir, ckpt).awaitTermination()
-    def survivors(): Seq[(Long, String)] = spark.read.parquet(outDir)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    // batch 1: one internal formatting-variant duplicate
-    deliver("b1", Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "ALPHA  beta")))
-    drain()
-    assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma")))
-    // a maintenance pass builds the Bloom sidecar mid-stream: later
-    // micro-batches take the bloom fast path with identical answers
-    assert(graft.ingest.DedupStore.buildBloomSidecar(spark, store) === 2L)
-    // batch 2: one cross-batch duplicate, one genuinely new
-    deliver("b2", Seq((9L, "GAMMA"), (10L, "delta")))
-    drain()
-    assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
-      (10L, "delta")))
-    // outDir reads as a batch-partitioned table
-    assert(spark.read.parquet(outDir).columns.contains("batch"))
-    // RETRACTION mid-stream (while checkpoint and outDir are still one
-    // unit — batch ids must not collide with committed directories):
-    // take down "gamma"; the next micro-batch's formatting variant is
-    // re-admitted (the probe subtracts the live tombstone — no
-    // compaction needed first), while "delta" stays suppressed
-    graft.ingest.DedupStore.retract(
-      Seq((0L, "gamma")).toDF("doc_id", "text"), "text", store)
-    deliver("b3", Seq((20L, "GaMMa"), (21L, "delta")))
-    drain()
-    assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
-      (10L, "delta"), (20L, "GaMMa")),
-      "retracted content was not re-admitted by the stream")
-    // b3's re-record stays MASKED while the tombstone is pending (the
-    // documented re-admission contract: a pending tombstone subtracts
-    // every record of its key, old or new, until compaction)
-    assert(graft.ingest.DedupStore.newUnique(
-      Seq((99L, "GAMMA")).toDF("doc_id", "text"),
-      "text", "doc_id", store).count() === 1)
-    // full-history replay (checkpoint wiped): committed batch dirs are
-    // skipped — survivors unchanged, hashes re-recorded not lost
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    drain()
-    assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
-      (10L, "delta"), (20L, "GaMMa")))
-    // compaction: one row per unique content MINUS the pending gamma
-    // tombstone (both the original record and b3's re-record drop —
-    // alpha-beta and delta remain), tombstone cleared with it
-    graft.ingest.DedupStore.compactStore(spark, store)
-    assert(spark.read.parquet(store).count() === 2)
-    // the store still suppresses the never-retracted content…
-    assert(graft.ingest.DedupStore.newUnique(
-      Seq((99L, "delta"), (100L, "alpha  BETA")).toDF("doc_id", "text"),
-      "text", "doc_id", store).count() === 0)
-    // …and the retracted key records FRESH now that the tombstone is
-    // gone — the full takedown → re-admission lifecycle
-    graft.ingest.DedupStore.recordHashes(
-      Seq((30L, "gamma")).toDF("doc_id", "text"), "text", store)
-    assert(graft.ingest.DedupStore.newUnique(
-      Seq((99L, "GAMMA")).toDF("doc_id", "text"),
-      "text", "doc_id", store).count() === 0)
+    for (form <- Seq(graft.ingest.HashForm.Md5,
+        graft.ingest.HashForm.Xx)) {
+      val srcDir = java.nio.file.Files
+        .createTempDirectory("dedup-src").toString
+      val outDir = java.nio.file.Files
+        .createTempDirectory("dedup-out").toString + "/docs"
+      val store = java.nio.file.Files
+        .createTempDirectory("dedup-store").toString + "/hashes"
+      val ckpt = java.nio.file.Files
+        .createTempDirectory("dedup-ckpt").toString
+      // an xxh64 store declared before the feed starts: the stage's
+      // content_hash column takes the store's persisted type
+      if (form == graft.ingest.HashForm.Xx)
+        graft.ingest.DedupStore.recordHashes(Seq.empty[(Long, String)]
+          .toDF("doc_id", "text"), "text", store, hashForm = form)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      def deliver(name: String, rows: Seq[(Long, String)]): Unit =
+        rows.toDF("doc_id", "text").coalesce(1).write
+          .mode("overwrite").parquet(s"$srcDir/$name")
+      def drain(): Unit = curationFeed(
+        spark.readStream.schema(schema)
+          .option("recursiveFileLookup", "true").parquet(srcDir),
+        Seq(Streams.exactDedup(Path(store), "text", "doc_id")),
+        outDir, ckpt).awaitTermination()
+      def survivors(): Seq[(Long, String)] = spark.read.parquet(outDir)
+        .select("doc_id", "text").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      // batch 1: one internal formatting-variant duplicate
+      deliver("b1", Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "ALPHA  beta")))
+      drain()
+      assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma")))
+      // a maintenance pass builds the Bloom sidecar mid-stream: later
+      // micro-batches take the bloom fast path with identical answers
+      assert(graft.ingest.DedupStore.buildBloomSidecar(spark, store) === 2L)
+      // batch 2: one cross-batch duplicate, one genuinely new
+      deliver("b2", Seq((9L, "GAMMA"), (10L, "delta")))
+      drain()
+      assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
+        (10L, "delta")))
+      // outDir reads as a batch-partitioned table
+      assert(spark.read.parquet(outDir).columns.contains("batch"))
+      // RETRACTION mid-stream (while checkpoint and outDir are still one
+      // unit — batch ids must not collide with committed directories):
+      // take down "gamma"; the next micro-batch's formatting variant is
+      // re-admitted (the probe subtracts the live tombstone — no
+      // compaction needed first), while "delta" stays suppressed
+      graft.ingest.DedupStore.retract(
+        Seq((0L, "gamma")).toDF("doc_id", "text"), "text", store)
+      deliver("b3", Seq((20L, "GaMMa"), (21L, "delta")))
+      drain()
+      assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
+        (10L, "delta"), (20L, "GaMMa")),
+        "retracted content was not re-admitted by the stream")
+      // b3's re-record stays MASKED while the tombstone is pending (the
+      // documented re-admission contract: a pending tombstone subtracts
+      // every record of its key, old or new, until compaction)
+      assert(graft.ingest.DedupStore.newUnique(
+        Seq((99L, "GAMMA")).toDF("doc_id", "text"),
+        "text", "doc_id", store).count() === 1)
+      // full-history replay (checkpoint wiped): committed batch dirs are
+      // skipped — survivors unchanged, hashes re-recorded not lost
+      val fs = new org.apache.hadoop.fs.Path(ckpt)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+      drain()
+      assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
+        (10L, "delta"), (20L, "GaMMa")))
+      // compaction: one row per unique content MINUS the pending gamma
+      // tombstone (both the original record and b3's re-record drop —
+      // alpha-beta and delta remain), tombstone cleared with it
+      graft.ingest.DedupStore.compactStore(spark, store)
+      assert(spark.read.parquet(store).count() === 2)
+      // the store still suppresses the never-retracted content…
+      assert(graft.ingest.DedupStore.newUnique(
+        Seq((99L, "delta"), (100L, "alpha  BETA")).toDF("doc_id", "text"),
+        "text", "doc_id", store).count() === 0)
+      // …and the retracted key records FRESH now that the tombstone is
+      // gone — the full takedown → re-admission lifecycle
+      graft.ingest.DedupStore.recordHashes(
+        Seq((30L, "gamma")).toDF("doc_id", "text"), "text", store)
+      assert(graft.ingest.DedupStore.newUnique(
+        Seq((99L, "GAMMA")).toDF("doc_id", "text"),
+        "text", "doc_id", store).count() === 0)
+  
+    }
   }
 
   test("streaming IVF index ingest: appended vectors land in the list " +
@@ -2560,7 +2570,7 @@ class StreamingSpec extends SparkSuite {
       drain()
       assert(survivors() === Seq(1L, 2L))
       assert(graft.ingest.NearDupStore
-        .buildBloomSidecarBucketed(spark, table) > 0L)
+        .buildBloomSidecar(spark, Bucketed(table)) > 0L)
       deliver("b2", Seq(
         (10L, doc1 + " edited trailing footer"),
         (11L, (1 to 60).map(i => s"gamma$i fresh$i novel$i")
@@ -2572,12 +2582,12 @@ class StreamingSpec extends SparkSuite {
       fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
       drain()
       assert(survivors() === Seq(1L, 2L, 11L))
-      graft.ingest.NearDupStore.compactBucketedStore(spark, table)
+      graft.ingest.NearDupStore.compactStore(spark, Bucketed(table))
       assert(spark.table(table).count()
         === spark.table(table).distinct().count())
-      assert(graft.ingest.NearDupStore.newNearUniqueBucketed(
+      assert(graft.ingest.NearDupStore.newNearUnique(
         Seq((99L, doc2 + " small late edit")).toDF("doc_id", "text"),
-        "text", "doc_id", table).count() === 0)
+        "text", "doc_id", Bucketed(table)).count() === 0)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
@@ -2619,7 +2629,7 @@ class StreamingSpec extends SparkSuite {
       drain()
       assert(survivors() === Seq(1L, 2L))
       assert(graft.ingest.SpanStore
-        .buildBloomSidecarBucketed(spark, table) > 0L)
+        .buildBloomSidecar(spark, Bucketed(table)) > 0L)
       deliver("b2", Seq(
         (10L, doc1.substring(10, 160) + " " + doc2.substring(5, 155)),
         (11L, (1 to 30).map(i => f"gamma$i%02d reed$i%02d").mkString(" "))))
@@ -2632,11 +2642,11 @@ class StreamingSpec extends SparkSuite {
       drain()
       assert(survivors() === Seq(1L, 2L, 11L))
       // compaction reclaims replay re-records; history still bites
-      graft.ingest.SpanStore.compactBucketedStore(spark, table)
+      graft.ingest.SpanStore.compactStore(spark, Bucketed(table))
       assert(spark.table(table).count()
         === spark.table(table).distinct().count())
-      assert(graft.ingest.SpanStore.newSpanUniqueBucketed(
-        Seq((99L, doc1)).toDF("doc_id", "text"), "text", "doc_id", table)
+      assert(graft.ingest.SpanStore.newSpanUnique(
+        Seq((99L, doc1)).toDF("doc_id", "text"), "text", "doc_id", Bucketed(table))
         .count() === 0)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -2741,7 +2751,7 @@ class StreamingSpec extends SparkSuite {
       drain()
       assert(survivors() === Seq(1L, 2L))
       assert(graft.ingest.CdcChunkStore
-        .buildBloomSidecarBucketed(spark, table) > 0L)
+        .buildBloomSidecar(spark, Bucketed(table)) > 0L)
       val toks = doc1.split(" ")
       deliver("b2", Seq(
         (10L, (toks.take(150) ++ Array("inserted") ++ toks.drop(150))
@@ -2757,11 +2767,11 @@ class StreamingSpec extends SparkSuite {
       drain()
       assert(survivors() === Seq(1L, 2L, 11L))
       // compaction reclaims replay re-records; history still bites
-      graft.ingest.CdcChunkStore.compactBucketedStore(spark, table)
+      graft.ingest.CdcChunkStore.compactStore(spark, Bucketed(table))
       assert(spark.table(table).count()
         === spark.table(table).distinct().count())
-      assert(graft.ingest.CdcChunkStore.newChunkUniqueBucketed(
-        Seq((99L, doc1)).toDF("doc_id", "text"), "text", "doc_id", table)
+      assert(graft.ingest.CdcChunkStore.newChunkUnique(
+        Seq((99L, doc1)).toDF("doc_id", "text"), "text", "doc_id", Bucketed(table))
         .count() === 0)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -2968,7 +2978,7 @@ class StreamingSpec extends SparkSuite {
       assert(survivors() === Seq(1L, 2L))
       // one sidecar built mid-stream exercises the bloom legs too
       assert(graft.ingest.SpanStore
-        .buildBloomSidecarBucketed(spark, tables(2)) > 0L)
+        .buildBloomSidecar(spark, Bucketed(tables(2))) > 0L)
       // exact copy, formatting variant, paraphrase, half-and-half
       // mashup (span-stage-only catch), fresh
       deliver("b2", Seq(
@@ -3060,59 +3070,69 @@ class StreamingSpec extends SparkSuite {
   test("streamed cross-run dedup through the BUCKETED store: same " +
     "semantics, catalog-table store, replay-safe") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("bdedup-src").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("bdedup-out").toString + "/docs"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("bdedup-ckpt").toString
-    val table = "graft_stream_bucketed_store"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    try {
-      def deliver(name: String, rows: Seq[(Long, String)]): Unit =
-        rows.toDF("doc_id", "text").coalesce(1).write
-          .mode("overwrite").parquet(s"$srcDir/$name")
-      def drain(): Unit = curationFeed(
-        spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(srcDir),
-        Seq(Streams.exactDedup(Bucketed(table, 4), "text", "doc_id")),
-        outDir, ckpt)
-        .awaitTermination()
-      def survivors(): Seq[(Long, String)] = spark.read.parquet(outDir)
-        .select("doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-      deliver("b1", Seq((1L, "alpha beta"), (2L, "gamma"),
-        (3L, "ALPHA  beta")))
-      drain()
-      assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma")))
-      deliver("b2", Seq((9L, "GAMMA"), (10L, "delta")))
-      drain()
-      assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
-        (10L, "delta")))
-      // full-history replay after checkpoint loss: a no-op, not a loss
-      val fs = new org.apache.hadoop.fs.Path(ckpt)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      drain()
-      assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
-        (10L, "delta")))
-      // replay re-recorded hashes (at-least-once); compaction reclaims
-      val (before, after) = graft.ingest.DedupStore
-        .compactBucketedStore(spark, table)
-      assert(after === 3L && before >= after, s"($before, $after)")
-      // and the compacted table still suppresses everything ever seen
-      assert(graft.ingest.DedupStore.newUniqueBucketed(
-        Seq((99L, "delta"), (100L, "alpha  BETA")).toDF("doc_id", "text"),
-        "text", "doc_id", table).count() === 0)
-    } finally {
+    for (form <- Seq(graft.ingest.HashForm.Md5,
+        graft.ingest.HashForm.Xx)) {
+      val srcDir = java.nio.file.Files
+        .createTempDirectory("bdedup-src").toString
+      val outDir = java.nio.file.Files
+        .createTempDirectory("bdedup-out").toString + "/docs"
+      val ckpt = java.nio.file.Files
+        .createTempDirectory("bdedup-ckpt").toString
+      val table = "graft_stream_bucketed_store"
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      try {
+        // an xxh64 table declared before the feed starts: the stage's
+        // content_hash column takes the store's persisted type
+        if (form == graft.ingest.HashForm.Xx)
+          graft.ingest.DedupStore.recordHashes(Seq.empty[(Long, String)]
+            .toDF("doc_id", "text"), "text", Bucketed(table, 4),
+            hashForm = form)
+        def deliver(name: String, rows: Seq[(Long, String)]): Unit =
+          rows.toDF("doc_id", "text").coalesce(1).write
+            .mode("overwrite").parquet(s"$srcDir/$name")
+        def drain(): Unit = curationFeed(
+          spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true").parquet(srcDir),
+          Seq(Streams.exactDedup(Bucketed(table, 4), "text", "doc_id")),
+          outDir, ckpt)
+          .awaitTermination()
+        def survivors(): Seq[(Long, String)] = spark.read.parquet(outDir)
+          .select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+        deliver("b1", Seq((1L, "alpha beta"), (2L, "gamma"),
+          (3L, "ALPHA  beta")))
+        drain()
+        assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma")))
+        deliver("b2", Seq((9L, "GAMMA"), (10L, "delta")))
+        drain()
+        assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
+          (10L, "delta")))
+        // full-history replay after checkpoint loss: a no-op, not a loss
+        val fs = new org.apache.hadoop.fs.Path(ckpt)
+          .getFileSystem(spark.sessionState.newHadoopConf())
+        fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+        drain()
+        assert(survivors() === Seq((1L, "alpha beta"), (2L, "gamma"),
+          (10L, "delta")))
+        // replay re-recorded hashes (at-least-once); compaction reclaims
+        val (before, after) = graft.ingest.DedupStore
+          .compactStore(spark, Bucketed(table))
+        assert(after === 3L && before >= after, s"($before, $after)")
+        // and the compacted table still suppresses everything ever seen
+        assert(graft.ingest.DedupStore.newUnique(
+          Seq((99L, "delta"), (100L, "alpha  BETA")).toDF("doc_id", "text"),
+          "text", "doc_id", Bucketed(table)).count() === 0)
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_stage")
+      }
+  
     }
   }
 
@@ -3416,7 +3436,7 @@ class StreamingSpec extends SparkSuite {
     C.buildBloomSidecar(spark, contamStore)
     C.retractBenchmark(Seq((901L, "retired benchmark phrase two"))
       .toDF("doc_id", "text"), "text", "doc_id", contamStore)
-    assert(SS.path(spark, contamStore).tombstoneBytes > 0L)
+    assert(SS.of(spark, contamStore).tombstoneBytes > 0L)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -3429,7 +3449,7 @@ class StreamingSpec extends SparkSuite {
       .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
     try {
       spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
-      assert(SS.path(spark, contamStore).compactionDue)
+      assert(SS.of(spark, contamStore).compactionDue)
       curationFeed(
         spark.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
@@ -3438,7 +3458,7 @@ class StreamingSpec extends SparkSuite {
           Streams.nearDedup(Path(nearStore), "text", "doc_id")),
         outDir, tmpDir("cmaint-ckpt"),
         maintenanceEvery = 1).awaitTermination()
-      val s = SS.path(spark, contamStore)
+      val s = SS.of(spark, contamStore)
       assert(s.tombstoneBytes === 0L,
         "mid-stream compaction must clear the contamination backlog")
       assert(!s.compactionDue)
@@ -3874,13 +3894,13 @@ class StreamingSpec extends SparkSuite {
         (53L, wrongLang), (54L, lowLm))) {
         val d = Seq((id, tx)).toDF("doc_id", "text")
         assert(graft.ingest.DedupStore
-          .newUniqueBucketed(d, "text", "doc_id", tables(0))
+          .newUnique(d, "text", "doc_id", Bucketed(tables(0)))
           .count() === 1, s"doc $id leaked into the exact table")
         assert(graft.ingest.NearDupStore
-          .newNearUniqueBucketed(d, "text", "doc_id", tables(1))
+          .newNearUnique(d, "text", "doc_id", Bucketed(tables(1)))
           .count() === 1, s"doc $id leaked into the near table")
         assert(graft.ingest.SpanStore
-          .newSpanUniqueBucketed(d, "text", "doc_id", tables(2))
+          .newSpanUnique(d, "text", "doc_id", Bucketed(tables(2)))
           .count() === 1, s"doc $id leaked into the span table")
       }
       // dedup legs behind the gates, against catalog history — note

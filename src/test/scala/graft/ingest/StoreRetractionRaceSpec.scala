@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.functions._
+import graft.ingest.StoreLayout.Bucketed
 
 /** The r13 maintenance-race fixes, pinned as laws:
   *
@@ -153,31 +154,31 @@ class StoreRetractionRaceSpec extends graft.SparkSuite {
     try {
       val docs = (1 to 50).map(i => (i.toLong, s"latetomb doc $i"))
         .toDF("doc_id", "text")
-      D.ensureBucketedStore(spark, table, buckets = 4)
-      D.recordHashesBucketed(docs, "text", table)
+      D.ensureStore(spark, Bucketed(table, 4))
+      D.recordHashes(docs, "text", Bucketed(table))
       val probe = Seq((9001L, "latetomb doc 5")).toDF("doc_id", "text")
       def retractedIsNew(): Boolean =
-        D.newUniqueBucketed(probe, "text", "doc_id", table).count() === 1L
+        D.newUnique(probe, "text", "doc_id", Bucketed(table)).count() === 1L
       assert(!retractedIsNew(), "recorded doc must report seen")
       // the transform runs after compact's entry tombstone snapshot and
       // before the swap's DROP — the deterministic form of a retraction
       // racing the compaction. It does NOT apply the tombstone (the
       // frame passes through untouched), so only the rescue keeps it.
-      val (before, after) = BucketedStore.compact(spark, table,
-        "content_hash", { df =>
-          D.retractBucketed(Seq((0L, "latetomb doc 5"))
-            .toDF("doc_id", "text"), "text", table)
+      val (before, after) = Bucketed(table).swap(spark,
+        "content_hash") { df =>
+          D.retract(Seq((0L, "latetomb doc 5"))
+            .toDF("doc_id", "text"), "text", Bucketed(table))
           df
-        })
+        }
       assert(before === 50L && after === 50L)
       // the late tombstone survived the swap and masks immediately
-      val loc = D.tableLocation(spark, table)
-      assert(D.storeDataFiles(fsOf(loc.toString),
+      val loc = Bucketed(table).dataDir(spark)
+      assert(StoreLayout.storeDataFiles(fsOf(loc.toString),
         new org.apache.hadoop.fs.Path(loc, "_tombstones")).nonEmpty,
         "late tombstone destroyed by the compaction swap")
       assert(retractedIsNew(), "late tombstone not masking after swap")
       // the NEXT (quiesced) compaction applies and clears it
-      val (b2, a2) = D.compactBucketedStore(spark, table)
+      val (b2, a2) = D.compactStore(spark, Bucketed(table))
       assert(b2 === 50L && a2 === 49L,
         s"follow-up compaction kept $a2 of $b2 — late tombstone not applied")
       assert(retractedIsNew(), "takedown lost after follow-up compaction")
