@@ -3,7 +3,8 @@ package graft.ingest
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Immutable-generation + manifest commit protocol — the
-  * [[graft.operators.AnnIndex]] versioned-index lifecycle generalized
+  * [[graft.operators.AnnIndex]] versioned-index lifecycle (which
+  * installs, resolves and GCs its generations here) generalized
   * for every standing artifact that previously installed by renaming
   * a directory onto a mutable name (the r19 verdict's rename-atomicity
   * gap: HDFS renames directories atomically, object stores do not, so

@@ -253,11 +253,12 @@ object Layout {
     * schema migration would NOT qualify without a follow-up pass).
     *
     * PARTITIONED tables (a `partitionBy` root whose data lives in
-    * `key=value` subdirectories — e.g. an [[graft.operators.AnnIndex]]
-    * `cid=<n>` layout): the rewrite RECURSES, running the full
-    * swap protocol independently per leaf partition directory and
-    * summing the counts — so `rewriteInPlace(root)(dropDuplicates)` on
-    * a partitioned index is the real maintenance pass, not a silent
+    * `key=value` subdirectories — e.g. the `cid=<n>` lists of an
+    * [[graft.operators.AnnIndex.Generation]]'s directory): the rewrite
+    * RECURSES, running the full swap protocol independently per leaf
+    * partition directory and summing the counts — so
+    * `rewriteInPlace(generationDir)(dropDuplicates)` on an index
+    * generation is the real maintenance pass, not a silent
     * (0,0) no-op on a root with no top-level files. Within a leaf the
     * frame does NOT contain the partition columns (they live in the
     * directory names, exactly as a partition-pruned scan sees them), so

@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
+import graft.ingest.{Generations, StoreLayout}
 
 /** Disk-backed IVF index — the AT-REST form of the inverted-file ANN
   * the query-side operators assume (q40/q85 say "the inverted list is
@@ -17,8 +20,28 @@ import org.apache.spark.sql.functions._
   * Scoring uses the same native `cosine_sim` kernel as the query
   * operators, with ties broken on centroid id, so index assignment,
   * probe selection, and re-ranking can never disagree about order.
+  *
+  * The index at rest is always a VERSIONED root (see the lifecycle
+  * comment below); every serving call takes a [[Generation]] handle
+  * resolved once by [[current]].
   */
 object AnnIndex {
+
+  /** One resolved index generation — the handle every serving call
+    * takes: the index `root` (where the manifest and the root-level
+    * `_retracted` set live), the generation's `name`, and the
+    * centroids that define its inverted lists; its data directory is
+    * `root/name`. Resolving once and passing the handle is what keeps
+    * the (directory, centroids) pair from ever mixing across
+    * generations: a later install does not move a handle, and the
+    * retained predecessor keeps its files for one install cycle, so a
+    * plan built on a handle resolved just before a swap still answers
+    * from intact files.
+    */
+  final case class Generation(root: String, name: String,
+      centroids: Seq[(Int, Array[Double])]) {
+    val dir: String = s"$root/$name"
+  }
 
   private[operators] def centroidFrame(spark: SparkSession,
       centroids: Seq[(Int, Array[Double])]): DataFrame = {
@@ -29,9 +52,10 @@ object AnnIndex {
 
   /** The index's assignment rule: each vector to its argmax-cosine
     * centroid (ties → lowest cid). ONE definition shared by
-    * [[writeIndex]] and the streaming appender
-    * ([[graft.streaming.Streams.indexIngestStream]]) — a streamed
-    * vector must land in exactly the list a rebuild would choose.
+    * [[writeIndex]] and the streaming appenders
+    * ([[graft.streaming.Streams.indexIngestStreamVersioned]]) — a
+    * streamed vector must land in exactly the list a rebuild would
+    * choose.
     * Returns (vec_id, v, cid).
     */
   def assignByCosine(embeddings: DataFrame,
@@ -43,10 +67,11 @@ object AnnIndex {
     * [[probeLists]] (same (cosine desc, cid asc) order, so rn = 1 IS
     * the [[assignByCosine]] assignment, which delegates here: one
     * definition, two depths). Returns (vec_id, v, cid, rn), one row
-    * per (vector, probed list). The streaming semantic gate pairs
-    * within-batch candidates over THIS frame so its recall matches the
-    * cross-run probe's nprobe-list window instead of the narrower
-    * top-1 list.
+    * per (vector, probed list). Both semantic gates select their
+    * probed lists in-plan through THIS frame, and the streaming
+    * semantic gate pairs within-batch candidates over it, so its
+    * recall matches the cross-run probe's nprobe-list window instead
+    * of the narrower top-1 list.
     */
   def probeByCosine(embeddings: DataFrame,
       centroids: Seq[(Int, Array[Double])], nprobe: Int): DataFrame = {
@@ -62,24 +87,18 @@ object AnnIndex {
       .select(col("vec_id"), col("v"), col("cid"), col("rn"))
   }
 
-  /** Write the index: one [[assignByCosine]] pass then
-    * `partitionBy(cid)` parquet. The pre-write `repartition(cid)` makes
-    * each inverted list a contiguous file set instead of one sliver per
-    * upstream task. `embeddings` must have (`vec_id` long,
-    * `v` array<double>).
-    */
-  def writeIndex(embeddings: DataFrame,
-      centroids: Seq[(Int, Array[Double])], dir: String): Unit =
-    assignByCosine(embeddings, centroids)
-      .repartition(col("cid"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(dir)
-
   /** The `nprobe` list ids nearest to `query` — driver-side over the
     * small centroid set, same (cosine desc, cid asc) order as the
-    * assignment window.
+    * assignment window. Every literal-query serving form passes
+    * through here, so a query whose dimension differs from the
+    * centroids' is refused here, before any plan is built.
     */
   def probeLists(query: Array[Double],
       centroids: Seq[(Int, Array[Double])], nprobe: Int): Seq[Int] = {
+    centroids.headOption.foreach { case (_, cv) =>
+      require(query.length == cv.length, s"query has ${query.length} " +
+        s"dimensions, the index centroids ${cv.length}")
+    }
     def cos(a: Array[Double], b: Array[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) {
@@ -92,58 +111,13 @@ object AnnIndex {
       .take(nprobe).map(_._1)
   }
 
-  /** Top-k by cosine against the probed lists ONLY: the `cid` filter is
-    * a partition filter — the scan opens `nprobe` directories of the
-    * index and no others (LayoutSpec pins `PartitionFilters` + the
-    * file count) — and the re-rank lowers to TakeOrderedAndProject.
-    */
-  def topK(spark: SparkSession, indexDir: String, query: Array[Double],
-      centroids: Seq[(Int, Array[Double])], k: Int,
-      nprobe: Int): DataFrame = {
-    graft.functions.Functions.register(spark)
-    val probes = probeLists(query, centroids, nprobe)
-    spark.read.parquet(indexDir)
-      .filter(col("cid").isin(probes: _*))
-      .withColumn("qv", typedLit(query.toSeq))
-      .select(col("vec_id"), col("cid").cast("int").as("cid"),
-        expr("cosine_sim(v, qv)").as("cosine"))
-      .orderBy(desc("cosine"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** Batch serving — the q84/q85 query-SET shape against the AT-REST
-    * index: all queries' probe lists union into ONE partition filter
-    * (the scan still opens only probed directories, once, shared by
-    * every query), a broadcast (query, probed-cid, vector) frame
-    * equi-joins each index row to exactly the queries probing its list
-    * (never all-pairs), and the per-query top-k is the q84 window with
-    * its partial WindowGroupLimit prune. Per-query answers are
-    * IDENTICAL to one [[topK]] call each — LayoutSpec pins it — for
-    * the cost of a single index pass.
-    */
-  def topKBatch(spark: SparkSession, indexDir: String,
+  /** (query_id, cid, qv) — one row per (query, probed list). */
+  private def probePairs(gen: Generation,
       queries: Seq[(Long, Array[Double])],
-      centroids: Seq[(Int, Array[Double])], k: Int,
-      nprobe: Int): DataFrame = {
-    graft.functions.Functions.register(spark)
-    import spark.implicits._
-    val probeRows = queries.flatMap { case (qid, qv) =>
-      probeLists(qv, centroids, nprobe)
-        .map(cid => (qid, cid, qv.toSeq))
+      nprobe: Int): Seq[(Long, Int, Seq[Double])] =
+    queries.flatMap { case (qid, qv) =>
+      probeLists(qv, gen.centroids, nprobe).map(cid => (qid, cid, qv.toSeq))
     }
-    val pdf = probeRows.toDF("query_id", "cid", "qv")
-    val cids = probeRows.map(_._2).distinct
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("cosine"), col("vec_id"))
-    spark.read.parquet(indexDir)
-      .filter(col("cid").isin(cids: _*))
-      .join(broadcast(pdf), "cid")
-      .select(col("query_id"), col("vec_id"),
-        expr("cosine_sim(v, qv)").as("cosine"))
-      .withColumn("rank_n", row_number().over(w).cast("long"))
-      .filter(col("rank_n") <= k)
-      .orderBy("query_id", "rank_n")
-  }
 
   // ── versioned lifecycle (retrain while serving) ────────────────────
   //
@@ -151,11 +125,12 @@ object AnnIndex {
   // centroids); this closes the loop. The VERSIONED index root is
   //
   //   <root>/_manifest            commit point: current generation name
-  //   <root>/gen-<uuid>/cid=*/    one immutable generation (the
-  //                               [[writeIndex]] layout, verbatim)
+  //   <root>/gen-<uuid>/cid=*/    one immutable generation (one
+  //                               [[assignByCosine]] pass, partitionBy cid)
   //   <root>/gen-<uuid>/_centroids/   that generation's centroid frame
   //
-  // — the BloomShards generation pattern: a rebuild fills a FRESH
+  // — the [[graft.ingest.Generations]] protocol, which installs,
+  // resolves and GCs every generation here: a rebuild fills a FRESH
   // uuid'd directory, the manifest's atomic rename installs it, and a
   // reader that resolved the old generation keeps a complete immutable
   // directory under its feet. GC retains the PREVIOUS generation for
@@ -170,80 +145,58 @@ object AnnIndex {
   // selection can never disagree about which centroids produced the
   // lists being probed.
 
-  private[operators] def manifestPath(root: String) =
-    new org.apache.hadoop.fs.Path(root, "_manifest")
+  private[graft] def fsOf(spark: SparkSession, root: String) =
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private[operators] def fsOf(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** The installed generation's name, if a versioned index exists. */
-  def currentGeneration(spark: SparkSession,
-      root: String): Option[String] = {
-    val fs = fsOf(spark, root)
-    val m = manifestPath(root)
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim)
-      finally in.close()
-    }
-  }
-
-  /** Resolved data directory of the current generation. */
-  def currentIndexDir(spark: SparkSession, root: String): String = {
-    val gen = currentGeneration(spark, root).getOrElse(
+  /** The installed generation's name (through the manifest). */
+  private[operators] def installed(spark: SparkSession,
+      root: String): String =
+    Generations.current(fsOf(spark, root), new Path(root)).getOrElse(
       throw new IllegalStateException(s"no installed generation at $root"))
-    s"$root/$gen"
+
+  /** The installed generation as a [[Generation]] handle: the manifest
+    * is read ONCE, and the centroids come from that generation's own
+    * `_centroids` frame (k × dim doubles — KB-scale, driver-side by
+    * design, exactly like [[KMeans.trainCollected]]).
+    */
+  def current(spark: SparkSession, root: String): Generation = {
+    val name = installed(spark, root)
+    Generation(root, name,
+      spark.read.parquet(s"$root/$name/_centroids")
+        .collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).toSeq)
   }
-
-  /** The current generation's centroids (k × dim doubles — KB-scale,
-    * driver-side by design, exactly like [[KMeans.trainCollected]]).
-    */
-  def readCentroids(spark: SparkSession,
-      root: String): Seq[(Int, Array[Double])] =
-    readCentroidsOf(spark, root,
-      currentGeneration(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no installed generation at $root")))
-
-  /** The NAMED generation's centroids — for callers that pinned a
-    * generation up front (the streaming appender) and must not let a
-    * concurrent swap mix the directory/centroid triple between two
-    * manifest reads.
-    */
-  def readCentroidsOf(spark: SparkSession, root: String,
-      gen: String): Seq[(Int, Array[Double])] =
-    spark.read.parquet(s"$root/$gen/_centroids")
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1).toSeq
 
   /** Build a fresh generation from `embeddings` + `centroids` and
-    * atomically install it; generations older than the one being
-    * replaced are GC'd (the replaced one is RETAINED for in-flight
-    * readers — see the lifecycle comment). Returns the generation name.
+    * atomically install it: one [[assignByCosine]] pass, then
+    * `partitionBy(cid)` parquet (the pre-write `repartition(cid)`
+    * makes each inverted list a contiguous file set instead of one
+    * sliver per upstream task), plus the generation's centroid frame.
+    * Generations older than the one being replaced are GC'd (the
+    * replaced one is RETAINED for in-flight readers — see the
+    * lifecycle comment). `embeddings` must have (`vec_id` long, `v`
+    * array<double>). Returns the generation name.
     */
-  def writeIndexVersioned(embeddings: DataFrame,
+  def writeIndex(embeddings: DataFrame,
       centroids: Seq[(Int, Array[Double])], root: String,
       lloydStats: Boolean = false): String = {
     val spark = embeddings.sparkSession
-    val fs = fsOf(spark, root)
-    val previous = currentGeneration(spark, root)
-    val gen = s"gen-${java.util.UUID.randomUUID()}"
-    writeIndex(embeddings, centroids, s"$root/$gen")
-    centroidFrame(spark, centroids)
-      .select(col("cid").cast("int").as("cid"), col("cv"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$gen/_centroids")
-    if (lloydStats)
-      KMeans.statsOf(KMeans.assign(embeddings.select("vec_id", "v"),
-          centroidFrame(spark, centroids)))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$root/$gen/_lloyd/batch=-1")
-    installGeneration(fs, root, gen, previous)
-    gen
+    Generations.install(fsOf(spark, root), new Path(root)) { genDir =>
+      val dir = genDir.toString
+      assignByCosine(embeddings, centroids)
+        .repartition(col("cid"))
+        .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(dir)
+      centroidFrame(spark, centroids)
+        .select(col("cid").cast("int").as("cid"), col("cv"))
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/_centroids")
+      if (lloydStats)
+        KMeans.statsOf(KMeans.assign(embeddings.select("vec_id", "v"),
+            centroidFrame(spark, centroids)))
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$dir/_lloyd/batch=-1")
+    }.getName
   }
 
   // ── Maintained Lloyd statistics (the zero-rescan retrain) ─────────
@@ -280,38 +233,32 @@ object AnnIndex {
   // the family's standard transients, documented rather than hidden.
 
   private[operators] def lloydDir(root: String, gen: String) =
-    new org.apache.hadoop.fs.Path(s"$root/$gen/_lloyd")
+    new Path(s"$root/$gen/_lloyd")
 
-  private[operators] def committedLloydVersions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[Long] =
+  private[operators] def committedLloydVersions(fs: FileSystem,
+      dir: Path): Seq[Long] =
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith("batch="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
       .map(_.getPath.getName.stripPrefix("batch=").toLong)
 
-  /** The current generation's latest committed Lloyd-stats frame
-    * ((cid, dim, s, n) — k × dim rows). Defined only for generations
-    * built with `lloydStats = true`.
+  /** The generation's latest committed Lloyd-stats frame ((cid, dim,
+    * s, n) — k × dim rows). Defined only for generations built with
+    * `lloydStats = true`.
     */
-  def readLloydStats(spark: SparkSession, root: String): DataFrame = {
-    val gen = currentGeneration(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no installed generation at $root"))
-    val dir = lloydDir(root, gen)
-    val fs = fsOf(spark, root)
-    val latest = committedLloydVersions(fs, dir).sorted.lastOption
+  def readLloydStats(spark: SparkSession, gen: Generation): DataFrame = {
+    val dir = lloydDir(gen.root, gen.name)
+    val latest = committedLloydVersions(fsOf(spark, gen.root), dir)
+      .sorted.lastOption
       .getOrElse(throw new IllegalStateException(
-        s"generation $gen has no Lloyd stats (built without " +
+        s"generation ${gen.name} has no Lloyd stats (built without " +
           "lloydStats = true?)"))
-    spark.read.parquet(
-      new org.apache.hadoop.fs.Path(dir, s"batch=$latest").toString)
+    spark.read.parquet(new Path(dir, s"batch=$latest").toString)
   }
 
-  /** Fold one micro-batch's Lloyd stats into the NAMED generation's
+  /** Fold one micro-batch's Lloyd stats into the PINNED generation's
     * maintained frame — (vec_id, v) rows assigned under that
     * generation's centroids ([[KMeans.assign]] — the trainer's L2
     * rule, NOT the layout's cosine rule: these stats must reproduce
@@ -321,26 +268,24 @@ object AnnIndex {
     * for a generation without seeded stats: the lifecycle is opt-in
     * and an appender must not sprout it.
     */
-  def foldLloydStats(spark: SparkSession, root: String, gen: String,
+  def foldLloydStats(spark: SparkSession, gen: Generation,
       batchId: Long, batch: DataFrame): Unit = {
-    val dir = lloydDir(root, gen)
-    val fs = fsOf(spark, root)
+    val dir = lloydDir(gen.root, gen.name)
+    val fs = fsOf(spark, gen.root)
     val committed = committedLloydVersions(fs, dir)
     if (committed.isEmpty || committed.contains(batchId)) return
     val batchStats = KMeans.statsOf(KMeans.assign(
-      batch.select("vec_id", "v"),
-      centroidFrame(spark, readCentroidsOf(spark, root, gen))))
+      batch.select("vec_id", "v"), centroidFrame(spark, gen.centroids)))
     val prev = committed.filter(_ < batchId).sorted.last
-    val target = new org.apache.hadoop.fs.Path(dir, s"batch=$batchId")
+    val target = new Path(dir, s"batch=$batchId")
     fs.delete(target, true) // partial leftovers from a crash
     KMeans.mergeStats(
-        spark.read.parquet(
-          new org.apache.hadoop.fs.Path(dir, s"batch=$prev").toString),
+        spark.read.parquet(new Path(dir, s"batch=$prev").toString),
         batchStats)
       .write.parquet(target.toString) // _SUCCESS = commit
     // retain the immediately-previous version for concurrent readers
     committedLloydVersions(fs, dir).filter(_ < batchId - 1).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"batch=$v"), true))
+      fs.delete(new Path(dir, s"batch=$v"), true))
   }
 
   /** [[retrain]] with the update step served from the MAINTAINED
@@ -352,60 +297,72 @@ object AnnIndex {
     * generation's stats from its own layout pass. The retraction
     * snapshot protocol is [[retrain]]'s verbatim.
     */
-  def retrainFromStats(spark: SparkSession, root: String): String = {
+  def retrainFromStats(spark: SparkSession, root: String): String =
+    rebuild(spark, root, lloydStats = true)((gen, _) =>
+      KMeans.centroidsFromStats(readLloydStats(spark, gen)))
+
+  /** The shared body of [[retrain]] and [[retrainFromStats]]: resolve
+    * the current generation once, snapshot the live retraction files
+    * FIRST (the rebuild physically drops exactly this set, and exactly
+    * this set is cleared after the install — a retraction landing
+    * mid-retrain stays live for the next rewrite: the stores'
+    * snapshot-bounded clear, applied here), step the centroids from
+    * (generation, live vectors), build and install the new generation.
+    * The install is unconditional (fresh uuid directory + manifest
+    * rename — no abort path), so the applied snapshot can be cleared.
+    */
+  private def rebuild(spark: SparkSession, root: String,
+      lloydStats: Boolean)(
+      step: (Generation, DataFrame) => DataFrame): String = {
+    val gen = current(spark, root)
     val fs = fsOf(spark, root)
-    val snap = graft.ingest.StoreLayout.storeDataFiles(fs,
-      retractedDir(root))
+    val snap = StoreLayout.storeDataFiles(fs, retractedDir(root))
     val vectors = minusRetractedSnapshot(spark, snap,
-      spark.read.parquet(currentIndexDir(spark, root))
-        .select(col("vec_id"), col("v")))
-    val stepped = KMeans.centroidsFromStats(
-        readLloydStats(spark, root))
+      spark.read.parquet(gen.dir).select(col("vec_id"), col("v")))
+    val stepped = step(gen, vectors)
       .collect()
       .map(r => (r.get(0).toString.toInt, r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
-    val gen = writeIndexVersioned(vectors, stepped, root,
-      lloydStats = true)
+    val name = writeIndex(vectors, stepped, root, lloydStats)
     snap.foreach(f => fs.delete(f, false))
-    gen
+    name
   }
 
-  /** Commit a fully-written generation: write-temp + atomic rename of
-    * the manifest, then GC every generation except the new one and its
-    * immediate predecessor (retained for in-flight readers).
+  /** The generation's float rows in the listed inverted lists of
+    * `dir` (the generation directory, or its `_pq` code lists), live
+    * retractions subtracted: the `cid` filter is a PARTITION filter,
+    * so the scan opens those `cid=` directories and no others.
     */
-  private def installGeneration(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, gen: String, previous: Option[String]): Unit = {
-    val m = manifestPath(root)
-    val tmp = new org.apache.hadoop.fs.Path(m.getParent,
-      m.getName + s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(m, false)
-    require(fs.rename(tmp, m), s"AnnIndex: could not install $m")
-    val keep = Set(gen) ++ previous
-    for (st <- fs.listStatus(new org.apache.hadoop.fs.Path(root))
-         if st.isDirectory && st.getPath.getName.startsWith("gen-") &&
-           !keep.contains(st.getPath.getName))
-      fs.delete(st.getPath, true)
-  }
+  private def scanLists(spark: SparkSession, gen: Generation, dir: String,
+      cids: Seq[Int]): DataFrame =
+    minusRetracted(spark, gen.root,
+      spark.read.parquet(dir).filter(col("cid").isin(cids: _*)))
 
-  /** [[topK]] against the CURRENT generation, resolving manifest,
-    * data directory, and centroids together — the triple can never be
-    * mixed across generations. Subtracts live [[retract]]ions: a
+  /** Float rows (vec_id, v, cid) of explicitly listed data files
+    * (`cid=N/name`, as [[listCidFiles]] returns them), live
+    * retractions subtracted — the PQ forms' covered and residual
+    * legs, split by the covered-files watermark.
+    */
+  private def fileRows(spark: SparkSession, gen: Generation,
+      files: Seq[(String, FileStatus)]): DataFrame =
+    minusRetracted(spark, gen.root,
+      spark.read.option("basePath", gen.dir)
+        .schema(indexRowSchema.add("cid", IntegerType))
+        .parquet(files.map(f => s"${gen.dir}/${f._1}"): _*))
+
+  /** Top-k by cosine against the probed lists ONLY: the `cid` filter
+    * is a partition filter — the scan opens `nprobe` directories of
+    * the generation and no others (LayoutSpec pins `PartitionFilters`
+    * + the file count) — and the re-rank lowers to
+    * TakeOrderedAndProject. Subtracts live [[retract]]ions: a
     * retracted vector is never served, whether or not a rewrite has
     * physically dropped it yet.
     */
-  def topKCurrent(spark: SparkSession, root: String,
-      query: Array[Double], k: Int, nprobe: Int): DataFrame = {
-    val dir = currentIndexDir(spark, root)
-    val cents = readCentroids(spark, root)
-    val probes = probeLists(query, cents, nprobe)
+  def topK(spark: SparkSession, gen: Generation, query: Array[Double],
+      k: Int, nprobe: Int): DataFrame = {
     graft.functions.Functions.register(spark)
-    val scanned = minusRetracted(spark, root,
-      spark.read.parquet(dir).filter(col("cid").isin(probes: _*)))
-    scanned
+    scanLists(spark, gen, gen.dir,
+        probeLists(query, gen.centroids, nprobe))
       .withColumn("qv", typedLit(query.toSeq))
       .select(col("vec_id"), col("cid").cast("int").as("cid"),
         expr("cosine_sim(v, qv)").as("cosine"))
@@ -413,26 +370,27 @@ object AnnIndex {
       .limit(k)
   }
 
-  /** [[topKBatch]] against the CURRENT generation — resolves the
-    * manifest/centroids triple and subtracts live retractions, like
-    * [[topKCurrent]].
+  /** Batch serving — the q84/q85 query-SET shape against the
+    * generation: all queries' probe lists union into ONE partition
+    * filter (the scan still opens only probed directories, once,
+    * shared by every query), a broadcast (query, probed-cid, vector)
+    * frame equi-joins each index row to exactly the queries probing
+    * its list (never all-pairs), and the per-query top-k is the q84
+    * window with its partial WindowGroupLimit prune. Per-query answers
+    * are IDENTICAL to one [[topK]] call each — LayoutSpec pins it —
+    * for the cost of a single index pass. Subtracts live retractions,
+    * like [[topK]].
     */
-  def topKBatchCurrent(spark: SparkSession, root: String,
+  def topKBatch(spark: SparkSession, gen: Generation,
       queries: Seq[(Long, Array[Double])], k: Int,
       nprobe: Int): DataFrame = {
-    val dir = currentIndexDir(spark, root)
-    val cents = readCentroids(spark, root)
     graft.functions.Functions.register(spark)
     import spark.implicits._
-    val probeRows = queries.flatMap { case (qid, qv) =>
-      probeLists(qv, cents, nprobe).map(cid => (qid, cid, qv.toSeq))
-    }
+    val probeRows = probePairs(gen, queries, nprobe)
     val pdf = probeRows.toDF("query_id", "cid", "qv")
-    val cids = probeRows.map(_._2).distinct
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(desc("cosine"), col("vec_id"))
-    minusRetracted(spark, root,
-      spark.read.parquet(dir).filter(col("cid").isin(cids: _*)))
+    scanLists(spark, gen, gen.dir, probeRows.map(_._2).distinct)
       .join(broadcast(pdf), "cid")
       .select(col("query_id"), col("vec_id"),
         expr("cosine_sim(v, qv)").as("cosine"))
@@ -442,23 +400,26 @@ object AnnIndex {
   }
 
   /** SemDeDup's cross-run form: gate a BATCH of incoming vectors
-    * against the CURRENT generation — flag every vector that already
-    * has a near-duplicate (cosine ≥ `tau`) among the index's live
-    * vectors, probing only its `nprobe` nearest lists. This is
+    * against the generation — flag every vector that already has a
+    * near-duplicate (cosine ≥ `tau`) among the index's live vectors,
+    * probing only its `nprobe` nearest lists. This is
     * q112_semdedup's within-cluster pairing with the index's
     * clustering as the clusters and the generation at rest as the
     * stored side: the semantic family's NearDupStore, riding the
     * serving index instead of a second store (the index IS the
-    * cross-run record of every vector's cluster and value).
+    * cross-run record of every vector's cluster and value). A caller
+    * that pinned the handle up front (the gated streaming appender)
+    * gates and appends against the SAME directory/centroid pair even
+    * when a retrain swaps mid-batch.
     *
-    * Scale: the batch is never collected — probe lists come from the
-    * shared assignment window ([[assignByCosine]]'s rule, top-nprobe
-    * instead of top-1) in-plan; only the DISTINCT probed cid set
-    * (≤ the centroid count — the same k-row bound as the centroid
-    * collect itself) is collected, to prune the index scan to its
-    * `cid=` partitions. Candidate pairing shuffles on cid only; live
-    * retractions are subtracted, so a retracted (taken-down) vector
-    * can never veto a new one.
+    * Scale: the batch is never collected — probe lists come from
+    * [[probeByCosine]] (the assignment window, top-nprobe instead of
+    * top-1) in-plan; only the DISTINCT probed cid set (≤ the centroid
+    * count — the same k-row bound as the centroid collect itself) is
+    * collected, to prune the index scan to its `cid=` partitions.
+    * Candidate pairing shuffles on cid only; live retractions are
+    * subtracted, so a retracted (taken-down) vector can never veto a
+    * new one.
     *
     * Returns one row per batch vector: (vec_id, is_dup, dup_of,
     * dup_cosine) — dup_of = the strongest (highest-cosine, then
@@ -467,45 +428,21 @@ object AnnIndex {
     * same record re-delivered, not a duplicate — id self-matches are
     * excluded.
     */
-  def semanticDedupProbe(spark: SparkSession, root: String,
-      batch: DataFrame, tau: Double, nprobe: Int = 2): DataFrame =
-    semanticDedupProbeOf(spark, root,
-      currentGeneration(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no installed generation at $root")),
-      batch, tau, nprobe)
-
-  /** [[semanticDedupProbe]] against a NAMED generation — for callers
-    * that pinned a generation up front (the gated streaming appender)
-    * and must gate and append against the SAME directory/centroid
-    * triple even when a retrain swaps mid-batch.
-    */
-  def semanticDedupProbeOf(spark: SparkSession, root: String,
-      gen: String, batch: DataFrame, tau: Double,
-      nprobe: Int = 2): DataFrame = {
-    val dir = s"$root/$gen"
-    val cents = readCentroidsOf(spark, root, gen)
-    graft.functions.Functions.register(spark)
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(desc("csim"), col("cid"))
+  def semanticDedupProbe(spark: SparkSession, gen: Generation,
+      batch: DataFrame, tau: Double, nprobe: Int = 2): DataFrame = {
     // NOT materialized here: a per-call barrier inside a library gate
     // would leak one checkpoint per streaming micro-batch (the
     // Exec.release contract) — a caller whose batch plan is expensive
     // materializes and releases the BATCH around the call (the gated
     // appender does); re-deriving the probe projection itself is
     // batch × k-centroids work
-    val probes = batch.select("vec_id", "v")
-      .crossJoin(broadcast(centroidFrame(spark, cents)))
-      .withColumn("csim", expr("cosine_sim(v, cv)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+    val probes = probeByCosine(batch, gen.centroids, nprobe)
       .select(col("vec_id"), col("v"), col("cid"))
     // k-row collect: distinct probed lists, bounded by the centroid
     // count regardless of batch size
     val cids = probes.select("cid").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val idx = minusRetracted(spark, root,
-        spark.read.parquet(dir).filter(col("cid").isin(cids: _*)))
+    val idx = scanLists(spark, gen, gen.dir, cids)
       .select(col("vec_id").as("dup_of"), col("v").as("iv"), col("cid"))
     val wBest = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(desc("dup_cosine"), col("dup_of"))
@@ -537,19 +474,8 @@ object AnnIndex {
     * appended after the sidecar build can still veto a copy of
     * itself. Retractions are subtracted on both the code and float
     * sides; an id self-match reads as re-delivery, like the float
-    * form. Falls back to [[semanticDedupProbeOf]] when the generation
+    * form. Falls back to [[semanticDedupProbe]] when the generation
     * has no PQ sidecar (the post-retrain window).
-    */
-  def semanticDedupProbePq(spark: SparkSession, root: String,
-      batch: DataFrame, tau: Double, nprobe: Int = 2,
-      rerankC: Int = 8): DataFrame =
-    semanticDedupProbePqOf(spark, root,
-      currentGeneration(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no installed generation at $root")),
-      batch, tau, nprobe, rerankC)
-
-  /** [[semanticDedupProbePq]] against a NAMED generation.
     *
     * Candidate ordering matches the GATE CRITERION: per (sub, code)
     * the LUT carries the fixed-point dot(q_sub, c_sub) and the code
@@ -563,37 +489,25 @@ object AnnIndex {
     * gate's documented trade; raise `rerankC` or use
     * [[semanticDedupProbe]] when exact-probe recall is required.
     */
-  def semanticDedupProbePqOf(spark: SparkSession, root: String,
-      gen: String, batch: DataFrame, tau: Double, nprobe: Int = 2,
+  def semanticDedupProbePq(spark: SparkSession, gen: Generation,
+      batch: DataFrame, tau: Double, nprobe: Int = 2,
       rerankC: Int = 8): DataFrame = {
-    val dir = s"$root/$gen"
-    val fs = fsOf(spark, root)
+    val fs = fsOf(spark, gen.root)
     // the MANIFEST is the sidecar's commit point: codes without one
     // are a partial build — serve from the float probe instead
-    val coveredOpt =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(pqDir(dir)))) None
-      else readPqManifest(fs, dir)
+    val coveredOpt = readPqManifest(fs, gen.dir)
     if (coveredOpt.isEmpty)
-      return semanticDedupProbeOf(spark, root, gen, batch, tau, nprobe)
+      return semanticDedupProbe(spark, gen, batch, tau, nprobe)
     val covered = coveredOpt.get
-    val cents = readCentroidsOf(spark, root, gen)
-    val cb = readPqCodebook(spark, dir)
+    val cb = readPqCodebook(spark, gen.dir)
     val m = cb.map(_._1).max + 1
     val d = cb.head._3.length
-    graft.functions.Functions.register(spark)
     import spark.implicits._
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("csim"), col("cid"))
     // NOT materialized: same leak rationale as the float form — the
     // gated appender materializes/releases the batch around the call;
     // probe re-derivation is batch × k-centroids work per reference
-    val probes = batch
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .crossJoin(broadcast(centroidFrame(spark, cents)))
-      .withColumn("csim", expr("cosine_sim(qv, cv)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cid"))
+    val probes = probeByCosine(batch, gen.centroids, nprobe)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cid"))
     val cids = probes.select("cid").distinct()
       .collect().map(_.getInt(0)).toSeq
     // the batch LUT, in-plan: (query_id, cid, sub, code RANK — the
@@ -611,8 +525,7 @@ object AnnIndex {
     val lut = probes.crossJoin(broadcast(cbDf))
       .select(col("query_id"), col("cid"), col("sub"), col("code"),
         dotFp.as("qdot_fp"), col("normsq_fp"))
-    val adc = minusRetracted(spark, root,
-        spark.read.parquet(pqDir(dir)).filter(col("cid").isin(cids: _*)))
+    val adc = scanLists(spark, gen, pqDir(gen.dir), cids)
       .select(col("vec_id").as("dup_of"), col("cid"),
         posexplode(pqRankArrayExpr(m)).as(Seq("sub", "code")))
       .join(broadcast(lut), Seq("cid", "sub", "code"))
@@ -631,19 +544,15 @@ object AnnIndex {
       .select("query_id", "dup_of")
     // one directory listing, split by the covered watermark: the
     // covered files feed the exact re-rank, the rest the residual leg
-    val (coveredFiles, residualFiles0) =
-      listCidFiles(fs, dir, Some(cids.toSet))
+    val (coveredFiles, residualFiles) =
+      listCidFiles(fs, gen.dir, Some(cids.toSet))
         .partition(f => covered.contains(f._1))
     val qvs = batch.select(col("vec_id").as("query_id"), col("v").as("qv"))
     val reranked =
       if (coveredFiles.isEmpty)
         Seq.empty[(Long, Long, Double)]
           .toDF("query_id", "dup_of", "dup_cosine")
-      else minusRetracted(spark, root,
-          spark.read.option("basePath", dir)
-            .schema(indexRowSchema.add("cid",
-              org.apache.spark.sql.types.IntegerType))
-            .parquet(coveredFiles.map(f => s"$dir/${f._1}"): _*))
+      else fileRows(spark, gen, coveredFiles)
         .select(col("vec_id").as("dup_of"), col("v").as("iv"))
         .join(broadcast(cand), "dup_of")
         .join(broadcast(qvs), "query_id")
@@ -651,14 +560,9 @@ object AnnIndex {
           expr("cosine_sim(iv, qv)").as("dup_cosine"))
     // residual leg: post-sidecar appends have no codes — their float
     // rows score exactly against the queries probing their list
-    val residualFiles = residualFiles0
     val scored =
       if (residualFiles.isEmpty) reranked
-      else reranked.unionByName(minusRetracted(spark, root,
-          spark.read.option("basePath", dir)
-            .schema(indexRowSchema.add("cid",
-              org.apache.spark.sql.types.IntegerType))
-            .parquet(residualFiles.map(f => s"$dir/${f._1}"): _*))
+      else reranked.unionByName(fileRows(spark, gen, residualFiles)
         .select(col("vec_id").as("dup_of"), col("v").as("iv"), col("cid"))
         .join(broadcast(probes), "cid")
         .filter(col("dup_of") =!= col("query_id"))
@@ -685,28 +589,9 @@ object AnnIndex {
     * immutable files; the next probe resolves the new one. Returns the
     * new generation name.
     */
-  def retrain(spark: SparkSession, root: String, iters: Int = 2): String = {
-    // snapshot the live retraction files FIRST: the rebuild physically
-    // drops exactly this set, and exactly this set is cleared after the
-    // install — a retraction landing mid-retrain stays live for the
-    // next rewrite (the stores' snapshot-bounded clear, applied here)
-    val fs = fsOf(spark, root)
-    val snap = graft.ingest.StoreLayout.storeDataFiles(fs,
-      retractedDir(root))
-    val vectors = minusRetractedSnapshot(spark, snap,
-      spark.read.parquet(currentIndexDir(spark, root))
-        .select(col("vec_id"), col("v")))
-    val seeded = centroidFrame(spark, readCentroids(spark, root))
-    val refit = KMeans.trainFrom(vectors, seeded, iters)
-      .collect()
-      .map(r => (r.get(0).toString.toInt, r.getSeq[Double](1).toArray))
-      .sortBy(_._1).toSeq
-    val gen = writeIndexVersioned(vectors, refit, root)
-    // the install is unconditional (fresh uuid directory + manifest
-    // rename — no abort path), so the applied snapshot can be cleared
-    snap.foreach(f => fs.delete(f, false))
-    gen
-  }
+  def retrain(spark: SparkSession, root: String, iters: Int = 2): String =
+    rebuild(spark, root, lloydStats = false)((gen, vectors) =>
+      KMeans.trainFrom(vectors, centroidFrame(spark, gen.centroids), iters))
 
   // ── Retraction (takedown) ──────────────────────────────────────────
   //
@@ -720,7 +605,7 @@ object AnnIndex {
   //    inside a generation — so the set applies to whichever
   //    generation is current, including one installed by a retrain
   //    racing the retraction). The append is the commit point: every
-  //    versioned probe ([[topKCurrent]]/[[topKBatchCurrent]]) subtracts
+  //    serving call ([[topK]], [[topKBatch]], the PQ forms) subtracts
   //    live retractions, so a retracted vector is never served from
   //    the next query on.
   //  phase 2 — the next [[retrain]] (scheduled) or [[vacuumRetracted]]
@@ -734,8 +619,7 @@ object AnnIndex {
   // appender needs no coordination — appended rows of a retracted id
   // are masked by the same subtraction.
 
-  private[graft] def retractedDir(root: String) =
-    new org.apache.hadoop.fs.Path(root, "_retracted")
+  private[graft] def retractedDir(root: String) = new Path(root, "_retracted")
 
   private val retractedSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("vec_id",
@@ -765,7 +649,7 @@ object AnnIndex {
     * feed arrives in.
     */
   def retractFrame(ids: DataFrame, root: String): Unit =
-    graft.ingest.StoreLayout.appendTombstones(
+    StoreLayout.appendTombstones(
       ids.select(col("vec_id").cast("long").as("vec_id")),
       retractedDir(root))
 
@@ -774,7 +658,7 @@ object AnnIndex {
     */
   private def readRetracted(spark: SparkSession,
       root: String): Option[DataFrame] =
-    graft.ingest.StoreLayout.readTombstones(spark, retractedDir(root),
+    StoreLayout.readTombstones(spark, retractedDir(root),
       retractedSchema)
 
   // the retraction frame arrives pre-wrapped by StoreLayout.gatedHint:
@@ -786,16 +670,16 @@ object AnnIndex {
       index.join(r, Seq("vec_id"), "left_anti"))
 
   private def retractedSnapshotFrame(spark: SparkSession,
-      snap: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
+      snap: Seq[Path]): DataFrame = {
     val fs = snap.head.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.ingest.StoreLayout.gatedHint(spark,
+    StoreLayout.gatedHint(spark,
       spark.read.schema(retractedSchema)
         .parquet(snap.map(_.toString): _*),
       snap.map(p => fs.getFileStatus(p).getLen).sum)
   }
 
   private def minusRetractedSnapshot(spark: SparkSession,
-      snap: Seq[org.apache.hadoop.fs.Path], index: DataFrame): DataFrame =
+      snap: Seq[Path], index: DataFrame): DataFrame =
     if (snap.isEmpty) index
     else index.join(retractedSnapshotFrame(spark, snap),
       Seq("vec_id"), "left_anti")
@@ -814,10 +698,8 @@ object AnnIndex {
     */
   def vacuumRetracted(spark: SparkSession, root: String): String = {
     val fs = fsOf(spark, root)
-    val curGen = currentGeneration(spark, root).getOrElse(
-      throw new IllegalStateException(s"no installed generation at $root"))
-    val snap = graft.ingest.StoreLayout.storeDataFiles(fs,
-      retractedDir(root))
+    val curGen = installed(spark, root)
+    val snap = StoreLayout.storeDataFiles(fs, retractedDir(root))
     if (snap.isEmpty) return curGen
     val curDir = s"$root/$curGen"
     val retracted = retractedSnapshotFrame(spark, snap)
@@ -827,35 +709,33 @@ object AnnIndex {
       .join(retracted, Seq("vec_id"), "left_semi")
       .select("cid").distinct()
       .collect().map(_.get(0).toString.toInt).toSet
-    val gen = s"gen-${java.util.UUID.randomUUID()}"
-    val genPath = new org.apache.hadoop.fs.Path(root, gen)
-    fs.mkdirs(genPath)
     val conf = spark.sessionState.newHadoopConf()
-    // untouched lists + the centroid frame: verbatim file copies — the
-    // predecessor stays immutable for its in-flight readers, and the
-    // copy is pure I/O proportional to the index, with CPU only on the
-    // affected partitions below
-    for (st <- fs.listStatus(new org.apache.hadoop.fs.Path(curDir))
-         if st.isDirectory) {
-      val n = st.getPath.getName
-      val keepVerbatim = n == "_centroids" ||
-        (n.startsWith("cid=") &&
-          !affected.contains(n.stripPrefix("cid=").toInt))
-      if (keepVerbatim)
-        require(org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-          new org.apache.hadoop.fs.Path(genPath, n), false, true, conf),
-          s"vacuumRetracted: could not copy $n forward")
-    }
-    // affected lists: partition-pruned scan → anti-join → rewrite
-    if (affected.nonEmpty)
-      spark.read.parquet(curDir)
-        .filter(col("cid").isin(affected.toSeq: _*))
-        .join(retracted, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("v"), col("cid"))
-        .repartition(col("cid"))
-        .write.mode(SaveMode.Append).partitionBy("cid")
-        .parquet(genPath.toString)
-    installGeneration(fs, root, gen, Some(curGen))
+    val gen = Generations.install(fs, new Path(root)) { genPath =>
+      fs.mkdirs(genPath)
+      // untouched lists + the centroid frame: verbatim file copies — the
+      // predecessor stays immutable for its in-flight readers, and the
+      // copy is pure I/O proportional to the index, with CPU only on the
+      // affected partitions below
+      for (st <- fs.listStatus(new Path(curDir)) if st.isDirectory) {
+        val n = st.getPath.getName
+        val keepVerbatim = n == "_centroids" ||
+          (n.startsWith("cid=") &&
+            !affected.contains(n.stripPrefix("cid=").toInt))
+        if (keepVerbatim)
+          require(org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+            new Path(genPath, n), false, true, conf),
+            s"vacuumRetracted: could not copy $n forward")
+      }
+      // affected lists: partition-pruned scan → anti-join → rewrite
+      if (affected.nonEmpty)
+        spark.read.parquet(curDir)
+          .filter(col("cid").isin(affected.toSeq: _*))
+          .join(retracted, Seq("vec_id"), "left_anti")
+          .select(col("vec_id"), col("v"), col("cid"))
+          .repartition(col("cid"))
+          .write.mode(SaveMode.Append).partitionBy("cid")
+          .parquet(genPath.toString)
+    }.getName
     snap.foreach(f => fs.delete(f, false))
     gen
   }
@@ -875,7 +755,7 @@ object AnnIndex {
   //                                inverted-list partitioning as the
   //                                floats (see pqRankArrayExpr)
   //
-  // [[topKPqCurrent]] then serves top-k from the CODES: the query's
+  // [[topKPq]] then serves top-k from the CODES: the query's
   // exact per-(sub, code) distances become an m×k literal lookup
   // table, a probed-list scan of (vec_id, codes) ranks candidates by
   // the sum of m lookups (never touching a float vector), and an
@@ -884,13 +764,13 @@ object AnnIndex {
   // generation's own parquet scan ignores the sidecar; lifecycle is
   // the bloom sidecar's: a retrain or vacuum installs a FRESH
   // generation without `_pq`, and the PQ path degrades to the exact
-  // [[topKCurrent]] plan until [[buildPqSidecar]] runs again (schedule
+  // [[topK]] plan until [[buildPqSidecar]] runs again (schedule
   // it with the retrain) — never a stale-codebook answer.
 
   private[operators] def pqDir(genDir: String) = s"$genDir/_pq"
   private def pqCodebookDir(genDir: String) = s"$genDir/_pq_codebook"
   private[operators] def pqManifestPath(genDir: String) =
-    new org.apache.hadoop.fs.Path(genDir, "_pq_covered")
+    new Path(genDir, "_pq_covered")
 
   /** r14: `_pq` codes are PACKED at rest — one BinaryType cell of m
     * bytes per vector, byte s = the code's RANK within subspace s's
@@ -910,14 +790,14 @@ object AnnIndex {
   /** The float data files the PQ sidecar covers, as `cid=N/name`
     * strings — the bloom sidecar's covered-files watermark, applied
     * here: rows appended AFTER the build (the streaming appender) have
-    * no codes, so [[topKPqCurrent]] must know which files the codes
+    * no codes, so [[topKPq]] must know which files the codes
     * account for and score the RESIDUAL exactly instead of silently
     * missing fresh vectors.
     */
-  private[operators] def listCidFiles(fs: org.apache.hadoop.fs.FileSystem,
-      genDir: String, cids: Option[Set[Int]]): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+  private[operators] def listCidFiles(fs: FileSystem, genDir: String,
+      cids: Option[Set[Int]]): Seq[(String, FileStatus)] =
     for {
-      d <- fs.listStatus(new org.apache.hadoop.fs.Path(genDir)).toSeq
+      d <- fs.listStatus(new Path(genDir)).toSeq
       if d.isDirectory && d.getPath.getName.startsWith("cid=") &&
         cids.forall(_.contains(d.getPath.getName.stripPrefix("cid=").toInt))
       f <- fs.listStatus(d.getPath).toSeq
@@ -925,10 +805,10 @@ object AnnIndex {
         !f.getPath.getName.startsWith(".")
     } yield (s"${d.getPath.getName}/${f.getPath.getName}", f)
 
-  private def writePqManifest(fs: org.apache.hadoop.fs.FileSystem,
-      genDir: String, names: Seq[String]): Unit = {
+  private def writePqManifest(fs: FileSystem, genDir: String,
+      names: Seq[String]): Unit = {
     val m = pqManifestPath(genDir)
-    val tmp = new org.apache.hadoop.fs.Path(m.getParent,
+    val tmp = new Path(m.getParent,
       m.getName + s".tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     try out.write(names.mkString("\n")
@@ -938,10 +818,14 @@ object AnnIndex {
     require(fs.rename(tmp, m), s"AnnIndex: could not install $m")
   }
 
-  private[operators] def readPqManifest(fs: org.apache.hadoop.fs.FileSystem,
+  /** The covered-files watermark of a COMMITTED sidecar: None when
+    * the generation has no `_pq` codes or no manifest (codes without
+    * one are a partial build and serve nothing).
+    */
+  private[operators] def readPqManifest(fs: FileSystem,
       genDir: String): Option[Set[String]] = {
     val m = pqManifestPath(genDir)
-    if (!fs.exists(m)) return None
+    if (!fs.exists(new Path(pqDir(genDir))) || !fs.exists(m)) return None
     val in = fs.open(m)
     try Some(scala.io.Source.fromInputStream(in, "UTF-8")
       .getLines().map(_.trim).filter(_.nonEmpty).toSet)
@@ -954,14 +838,14 @@ object AnnIndex {
     * generation's `k` smallest vec_ids. `m` must divide the vector
     * dim. Codes are stored PACKED: one m-byte binary per vector, byte
     * s = the rank of subspace s's code in the sorted codebook (see
-    * [[pqRankArrayExpr]]) — the shape [[topKPqCurrent]]'s lookup
+    * [[pqRankArrayExpr]]) — the shape [[topKPq]]'s lookup
     * expression consumes.
     */
   def buildPqSidecar(spark: SparkSession, root: String, m: Int = 8,
       k: Int = 8, iters: Int = 1): Unit = {
     require(k <= 256,
       s"k $k must be <= 256: _pq packs one code RANK per byte")
-    val dir = currentIndexDir(spark, root)
+    val dir = s"$root/${installed(spark, root)}"
     val fs = fsOf(spark, root)
     // snapshot the float files FIRST and encode exactly those: a file
     // appended mid-build lands in the residual (scored exactly) rather
@@ -1031,7 +915,7 @@ object AnnIndex {
     s
   }
 
-  /** [[topKCurrent]] served from the PQ sidecar: probed `_pq` lists are
+  /** [[topK]] served from the PQ sidecar: probed `_pq` lists are
     * scanned as (vec_id, codes) — the `cid` filter is the same
     * partition prune, the scan never reads a float vector — and each
     * candidate's approximate distance is the sum of m lookups into the
@@ -1041,31 +925,27 @@ object AnnIndex {
     * exactly (cosine) against the float lists — a broadcast semi-join
     * of a bounded candidate set into the same partition-pruned scan —
     * and the final order is exact-first; `rerank` ≥ the probed-list
-    * population makes the answer EQUAL to [[topKCurrent]] by
-    * construction (LayoutSpec pins it). Live retractions subtract from
-    * BOTH passes. Rows appended after the sidecar build (the streaming
-    * appender) ride a RESIDUAL leg — float files outside the covered
-    * watermark are scored exactly and merged before the cut, so fresh
-    * vectors are never silently unserved. No `_pq` sidecar (fresh
-    * generation after a retrain / vacuum) falls back to the exact
-    * plan.
+    * population makes the answer EQUAL to [[topK]] by construction
+    * (LayoutSpec pins it). Live retractions subtract from BOTH passes.
+    * Rows appended after the sidecar build (the streaming appender)
+    * ride a RESIDUAL leg — float files outside the covered watermark
+    * are scored exactly and merged before the cut, so fresh vectors
+    * are never silently unserved. No `_pq` sidecar (fresh generation
+    * after a retrain / vacuum) falls back to the exact plan.
     *
     * Output: (vec_id, adist_fp) for the pure-ADC form, (vec_id,
     * cosine) for the re-ranked form — the ranking metric is part of
     * the answer either way.
     */
-  def topKPqCurrent(spark: SparkSession, root: String,
-      query: Array[Double], k: Int, nprobe: Int,
-      rerank: Int = 0): DataFrame = {
+  def topKPq(spark: SparkSession, gen: Generation, query: Array[Double],
+      k: Int, nprobe: Int, rerank: Int = 0): DataFrame = {
     graft.functions.Functions.register(spark)
-    val dir = currentIndexDir(spark, root)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(pqDir(dir))))
-      return topKCurrent(spark, root, query, k, nprobe)
+    val fs = fsOf(spark, gen.root)
+    if (!fs.exists(new Path(pqDir(gen.dir))))
+      return topK(spark, gen, query, k, nprobe)
         .select("vec_id", "cosine") // the re-ranked form's shape
-    val cents = readCentroids(spark, root)
-    val probes = probeLists(query, cents, nprobe)
-    val cb = readPqCodebook(spark, dir)
+    val probes = probeLists(query, gen.centroids, nprobe)
+    val cb = readPqCodebook(spark, gen.dir)
     val m = cb.map(_._1).max + 1
     val d = cb.head._3.length
     // the query's LUT: per subspace, code RANK (byte value in the
@@ -1076,9 +956,7 @@ object AnnIndex {
       cb.filter(_._1 == s)
         .map { case (_, _, cv) => distFpLocal(qs, cv) }.toSeq
     }
-    val ranked = minusRetracted(spark, root,
-      spark.read.parquet(pqDir(dir))
-        .filter(col("cid").isin(probes: _*)))
+    val ranked = scanLists(spark, gen, pqDir(gen.dir), probes)
       .withColumn("__lut", typedLit(lut))
       .withColumn("__ranks", pqRankArrayExpr(m))
       .select(col("vec_id"),
@@ -1093,25 +971,21 @@ object AnnIndex {
     // apples-to-apples and a fresh vector can never be silently
     // unserved. A manifest-less sidecar degrades to all-residual —
     // exact everywhere, never wrong.
-    val covered = readPqManifest(fs, dir).getOrElse(Set.empty[String])
-    val residual = listCidFiles(fs, dir, Some(probes.toSet))
+    val covered = readPqManifest(fs, gen.dir).getOrElse(Set.empty[String])
+    val residual = listCidFiles(fs, gen.dir, Some(probes.toSet))
       .filterNot(f => covered.contains(f._1))
     val withResidual =
       if (residual.isEmpty) ranked
-      else ranked.unionByName(minusRetracted(spark, root,
-        spark.read.schema(indexRowSchema)
-          .parquet(residual.map(f => s"$dir/${f._1}"): _*))
+      else ranked.unionByName(fileRows(spark, gen, residual)
         .withColumn("qv", typedLit(query.toSeq))
         .select(col("vec_id"), KMeans.distFp("v", "qv").as("adist_fp")))
     if (rerank <= 0)
       withResidual.orderBy(col("adist_fp"), col("vec_id")).limit(k)
     else {
-      graft.functions.Functions.register(spark)
       val cand = withResidual
         .orderBy(col("adist_fp"), col("vec_id"))
         .limit(math.max(rerank, k)).select("vec_id")
-      minusRetracted(spark, root,
-        spark.read.parquet(dir).filter(col("cid").isin(probes: _*)))
+      scanLists(spark, gen, gen.dir, probes)
         .join(broadcast(cand), "vec_id")
         .withColumn("qv", typedLit(query.toSeq))
         .select(col("vec_id"), expr("cosine_sim(v, qv)").as("cosine"))
@@ -1120,48 +994,44 @@ object AnnIndex {
     }
   }
 
-  /** [[topKBatchCurrent]] served from the PQ sidecar — the query-SET
-    * form of [[topKPqCurrent]]: all queries' probe lists union into
-    * one partition filter over the `_pq` code lists, the per-query
-    * LUTs ride ONE broadcast frame (query_id, cid, sub, code,
-    * qdist_fp — |Q|·nprobe·m·k rows, KB-scale), each code row explodes
-    * to its m (sub, code) pairs and equi-joins only the queries
-    * probing its list, and the per-query top-k is the q84 window with
-    * its partial WindowGroupLimit prune. The residual leg and
-    * retraction subtraction compose exactly as in the single-query
-    * form; per-query answers are IDENTICAL to one [[topKPqCurrent]]
-    * call each (LayoutSpec pins it). Pure-ADC form only — re-rank
-    * composes by feeding the ids into [[topKBatchCurrent]]'s exact
-    * scan. No `_pq` sidecar falls back to [[topKBatchCurrent]]
-    * verbatim (the exact cosine shape).
+  /** [[topKBatch]] served from the PQ sidecar — the query-SET form of
+    * [[topKPq]]: all queries' probe lists union into one partition
+    * filter over the `_pq` code lists, the per-query LUTs ride ONE
+    * broadcast frame (query_id, cid, sub, code, qdist_fp —
+    * |Q|·nprobe·m·k rows, KB-scale), each code row explodes to its m
+    * (sub, code) pairs and equi-joins only the queries probing its
+    * list, and the per-query top-k is the q84 window with its partial
+    * WindowGroupLimit prune. The residual leg and retraction
+    * subtraction compose exactly as in the single-query form;
+    * per-query answers are IDENTICAL to one [[topKPq]] call each
+    * (LayoutSpec pins it). Pure-ADC form only — re-rank composes by
+    * feeding the ids into [[topKBatch]]'s exact scan. No `_pq` sidecar
+    * falls back to [[topKBatch]] verbatim (the exact cosine shape).
     */
-  def topKBatchPqCurrent(spark: SparkSession, root: String,
+  def topKBatchPq(spark: SparkSession, gen: Generation,
       queries: Seq[(Long, Array[Double])], k: Int,
       nprobe: Int): DataFrame = {
     graft.functions.Functions.register(spark)
-    val dir = currentIndexDir(spark, root)
-    val fs = fsOf(spark, root)
-    val cents = readCentroids(spark, root)
+    val fs = fsOf(spark, gen.root)
     import spark.implicits._
-    if (!fs.exists(new org.apache.hadoop.fs.Path(pqDir(dir))))
-      return topKBatchCurrent(spark, root, queries, k, nprobe)
-    val cb = readPqCodebook(spark, dir)
+    if (!fs.exists(new Path(pqDir(gen.dir))))
+      return topKBatch(spark, gen, queries, k, nprobe)
+    val probeRows = probePairs(gen, queries, nprobe)
+    val cb = readPqCodebook(spark, gen.dir)
     val m = cb.map(_._1).max + 1
     val d = cb.head._3.length
     // one row per (query, probed cid, subspace, code RANK — the byte
     // value in the packed codes column): the batch LUT
     val lutRows = for {
-      (qid, qv) <- queries
-      cid <- probeLists(qv, cents, nprobe)
+      (qid, cid, qv) <- probeRows
       s <- 0 until m
       ((sub, _, cv), rank) <- cb.filter(_._1 == s).zipWithIndex
         if sub == s
     } yield (qid, cid, s, rank,
-      distFpLocal(qv.slice(s * d, s * d + d), cv))
+      distFpLocal(qv.slice(s * d, s * d + d).toArray, cv))
     val lutDf = lutRows.toDF("query_id", "cid", "sub", "code", "qdist_fp")
-    val cids = lutRows.map(_._2).distinct
-    val adc = minusRetracted(spark, root,
-      spark.read.parquet(pqDir(dir)).filter(col("cid").isin(cids: _*)))
+    val cids = probeRows.map(_._2).distinct
+    val adc = scanLists(spark, gen, pqDir(gen.dir), cids)
       .select(col("vec_id"), col("cid"),
         posexplode(pqRankArrayExpr(m)).as(Seq("sub", "code")))
       .join(broadcast(lutDf), Seq("cid", "sub", "code"))
@@ -1177,24 +1047,16 @@ object AnnIndex {
     // against ONLY the queries probing their list (the cid rides the
     // partition-aware read; a cross join would hand every query
     // vectors from lists it never probed)
-    val covered = readPqManifest(fs, dir).getOrElse(Set.empty[String])
-    val residual = listCidFiles(fs, dir, Some(cids.toSet))
+    val covered = readPqManifest(fs, gen.dir).getOrElse(Set.empty[String])
+    val residual = listCidFiles(fs, gen.dir, Some(cids.toSet))
       .filterNot(f => covered.contains(f._1))
     val withResidual =
       if (residual.isEmpty) adc
-      else {
-        val probePairs = queries.flatMap { case (qid, qv) =>
-          probeLists(qv, cents, nprobe).map(cid => (qid, cid, qv.toSeq))
-        }.toDF("query_id", "cid", "qv")
-        adc.unionByName(minusRetracted(spark, root,
-          spark.read.option("basePath", dir)
-            .schema(indexRowSchema.add("cid",
-              org.apache.spark.sql.types.IntegerType))
-            .parquet(residual.map(f => s"$dir/${f._1}"): _*))
-          .join(broadcast(probePairs), Seq("cid"))
-          .select(col("query_id"), col("vec_id"),
-            KMeans.distFp("v", "qv").as("adist_fp")))
-      }
+      else adc.unionByName(fileRows(spark, gen, residual)
+        .join(broadcast(probeRows.toDF("query_id", "cid", "qv")),
+          Seq("cid"))
+        .select(col("query_id"), col("vec_id"),
+          KMeans.distFp("v", "qv").as("adist_fp")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("adist_fp"), col("vec_id"))
     withResidual

@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Operational statistics + maintenance signals for a versioned
-  * [[AnnIndex]] root — the [[graft.ingest.StoreStats]] pattern applied
-  * to the serving-index side of the pipeline. The index's maintenance
-  * contract is spread across [[AnnIndex]]'s scaladocs: the PQ sidecar
-  * covers only the float files present at its build, so serving cost
+  * [[AnnIndex]] root (its manifest resolved through
+  * [[graft.ingest.Generations]]) — the [[graft.ingest.StoreStats]]
+  * pattern applied to the serving-index side of the pipeline. The
+  * index's maintenance contract is spread across [[AnnIndex]]'s
+  * scaladocs: the PQ sidecar covers only the float files present at
+  * its build, so serving cost
   * quietly degrades as the exact-scored residual leg grows; a
   * retraction backlog rides a broadcast anti-join until
   * [[AnnIndex.vacuumRetracted]] physically drops it; a retrain
@@ -60,15 +62,14 @@ object IndexStats {
   /** The pure-metadata report (no Spark job — see the object doc). */
   def stats(spark: SparkSession, root: String): Stats = {
     val fs = AnnIndex.fsOf(spark, root)
-    val gen = AnnIndex.currentGeneration(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no installed generation at $root"))
+    val gen = AnnIndex.installed(spark, root)
     val genDir = s"$root/$gen"
-    val gens = fs.listStatus(new org.apache.hadoop.fs.Path(root))
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val gens = fs.listStatus(rootPath)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
       .map(_.getPath.getName)
-    val manifestM = fs.getFileStatus(AnnIndex.manifestPath(root))
-      .getModificationTime
+    val manifestM = fs.getFileStatus(
+      graft.ingest.Generations.manifestPath(rootPath)).getModificationTime
     val data = AnnIndex.listCidFiles(fs, genDir, None)
     val dataBytes = data.map(_._2.getLen).sum
     val retracted = graft.ingest.StoreLayout.storeDataFileStatuses(fs,
@@ -78,10 +79,7 @@ object IndexStats {
     // the MANIFEST is the sidecar's commit point (codes without one
     // are a partial build and serve nothing) — same liveness rule the
     // PQ probes apply
-    val covered =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(
-          AnnIndex.pqDir(genDir)))) None
-      else AnnIndex.readPqManifest(fs, genDir)
+    val covered = AnnIndex.readPqManifest(fs, genDir)
     val coveredSet = covered.getOrElse(Set.empty[String])
     val coveredLive = data.count(f => coveredSet.contains(f._1))
     val residual = data.filterNot(f => coveredSet.contains(f._1))
@@ -117,10 +115,10 @@ object IndexStats {
     */
   def listDistortion(spark: SparkSession, root: String): DataFrame = {
     graft.functions.Functions.register(spark)
-    val dir = AnnIndex.currentIndexDir(spark, root)
-    val cents = AnnIndex.readCentroids(spark, root)
-    spark.read.parquet(dir)
-      .join(broadcast(AnnIndex.centroidFrame(spark, cents)), Seq("cid"))
+    val gen = AnnIndex.current(spark, root)
+    spark.read.parquet(gen.dir)
+      .join(broadcast(AnnIndex.centroidFrame(spark, gen.centroids)),
+        Seq("cid"))
       .withColumn("dist_fp", KMeans.distFp("v", "cv"))
       .groupBy(col("cid").cast("int").as("cid"))
       .agg(count(lit(1)).as("n_vectors"),

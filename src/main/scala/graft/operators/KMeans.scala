@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.DoubleType
   *
   * Centroid frames are (cid int-like, cv array<double>); embedding
   * frames are (vec_id, v array<double>). [[train]]'s output feeds
-  * [[AnnIndex.writeIndex]] (as a collected seq) or [[assign]] directly.
+  * [[AnnIndex.writeIndex]] (as a collected seq — it installs a new
+  * index generation) or [[assign]] directly.
   */
 object KMeans {
 
@@ -98,7 +99,7 @@ object KMeans {
     * (cid = the seed's vec_id — deterministic init, k-means++ style
     * seeding is an orthogonal upstream choice). Returns the centroid
     * frame after the final update; callers [[assign]] against it or
-    * collect it for [[AnnIndex]].
+    * collect it for [[AnnIndex.writeIndex]].
     */
   def train(embeddings: DataFrame, seedIds: Seq[Long],
       iters: Int): DataFrame = {

@@ -51,40 +51,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   */
 object LangId {
 
-  /** Hashed char-ngram feature-array SQL over `textCol` (an expression
-    * yielding string): lowercased sliding n-grams, deduplicated and
-    * hashed by [[QualityModel]]'s convention. Empty/short text yields
-    * the empty array (sequence(1, 0) would throw).
-    */
-  /** Raw ngram array SQL over an ALREADY-LOWERED string expression —
-    * the spec-facing semantic definition (Catalyst does not hoist
-    * loop invariants out of HOF lambdas, so the inlined-lower form
-    * would re-run lower() once per ngram). The hot paths stopped
-    * using this SQL form in r21: the native [[featuresKernelSql]]
-    * kernel computes the same values in one compiled pass.
-    */
-  private def ngramsOfLoweredSql(c: String, n: Int): String =
-    s"""if(char_length($c) < $n,
-       |  cast(array() as array<string>),
-       |  transform(sequence(1, char_length($c) - ${n - 1}, 1),
-       |    i -> substring($c, cast(i as int), $n)))""".stripMargin
-
-  /** Raw lowercased char-ngram array SQL — the SEMANTIC definition
-    * (lower inlined), exposed so the spec can feed the SAME ngrams
-    * through QualityModel.train for the one-vs-rest parity law; the
-    * hot paths use the native [[featuresKernelSql]] kernel, same
-    * values (FunctionsSpec pins the parity).
-    */
-  private[graft] def ngramsSql(textCol: String, n: Int): String =
-    ngramsOfLoweredSql(s"lower($textCol)", n)
-
-  private[operators] def featuresSql(textCol: String, dims: Int,
-      n: Int): String =
-    QualityModel.featuresExprSql(ngramsSql(textCol, n), dims)
-
   /** The NATIVE feature kernel call — one compiled pass per row
-    * ([[graft.functions.TextSignatures.lidFeatures]]), bit-identical
-    * to [[featuresSql]] (FunctionsSpec pins the parity): the SQL chain
+    * ([[graft.functions.TextSignatures.lidFeatures]]): lowercased
+    * sliding char n-grams, deduplicated and hashed by
+    * [[QualityModel]]'s convention, bit-identical to the SQL md5-hash
+    * chain it replaced (FunctionsSpec pins the parity): the SQL chain
     * ran the per-gram md5 + hex + conv lambda interpreted with a
     * per-gram UTF8String/hex-string allocation, measured as the q151
     * featurize hot spot. Callers register [[graft.functions.Functions]]

@@ -25,7 +25,8 @@ import org.apache.spark.sql.types.DoubleType
   * frame into an equi-join on (sub, code) and bounds the result with
   * TakeOrderedAndProject — the corpus side moves only its code rows.
   * Composes with [[AnnIndex]]: partition by IVF cid at rest, PQ codes
-  * inside each list.
+  * inside each list ([[AnnIndex.buildPqSidecar]] writes them per
+  * generation, [[AnnIndex.topKPq]] serves from them).
   *
   * Everything is deterministic and reduce-order-proof, exactly as
   * [[KMeans]]: quantized squared-L2 (integer sums are exact in any

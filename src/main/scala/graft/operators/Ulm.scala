@@ -76,65 +76,6 @@ object Ulm {
           .as("score_fp"))
   }
 
-  /** The Viterbi fold over one word column: `best(i)` = the optimal
-    * (score, pieces, cut) for the length-i prefix, maximizing score,
-    * then minimizing piece count, then preferring the LONGEST final
-    * piece (smallest cut) — a total order, so the DP is deterministic.
-    * Pure codegen'd expression (nested aggregate/transform, a map
-    * literal for the vocab — no UDF); pieces reconstruct by walking
-    * the cut chain backward, ≤ len steps.
-    */
-  private[graft] def viterbiExprs(wordCol: String,
-      vocab: Seq[(String, Long)], maxLen: Int): (String, String) = {
-    require(vocab.nonEmpty, "empty vocabulary")
-    val unk = vocab.map(_._2).min - 1L
-    val mapLit = "map(" + vocab.map { case (p, s) =>
-      s"${lit_(p)}, ${s}L" }.mkString(", ") + ")"
-    // score of the candidate piece word[j..i] (1-based, inclusive):
-    // vocab lookup, unknown single chars at unkScore, else invalid
-    def sc = s"""coalesce(element_at($mapLit,
-                |   substring($wordCol, j, i - j + 1)),
-                | if(i = j, ${unk}L, cast(null as bigint)))""".stripMargin
-    // the empty word (possible through the public segment/encodeDocs
-    // entry points; internal callers feed \w+ words) short-circuits:
-    // sequence(1, 0, 1) would throw Spark's illegal-boundaries error,
-    // and its answer is trivially the empty segmentation
-    val best =
-      s"""if(char_length($wordCol) = 0,
-         | array(named_struct('s', 0L, 'np', 0L, 'cut', 0)),
-         | aggregate(sequence(1, char_length($wordCol), 1),
-         | array(named_struct('s', 0L, 'np', 0L, 'cut', 0)),
-         | (acc, i) -> concat(acc, array(
-         |   aggregate(sequence(greatest(1, i - ${maxLen - 1}), i, 1),
-         |     cast(null as struct<s: bigint, np: bigint, cut: int>),
-         |     (b, j) -> if($sc is null OR element_at(acc, j).s is null, b,
-         |       if(b is null
-         |          OR element_at(acc, j).s + $sc > b.s
-         |          OR (element_at(acc, j).s + $sc = b.s
-         |              AND element_at(acc, j).np + 1L < b.np)
-         |          OR (element_at(acc, j).s + $sc = b.s
-         |              AND element_at(acc, j).np + 1L = b.np
-         |              AND j - 1 < b.cut),
-         |         named_struct('s', element_at(acc, j).s + $sc,
-         |                      'np', element_at(acc, j).np + 1L,
-         |                      'cut', j - 1),
-         |         b)))))))""".stripMargin
-    val pieces =
-      s"""if(char_length($wordCol) = 0,
-         | cast(array() as array<string>),
-         | aggregate(sequence(1, char_length($wordCol), 1),
-         | named_struct('pos', char_length($wordCol),
-         |              'ps', cast(array() as array<string>)),
-         | (st, x) -> if(st.pos <= 0, st,
-         |   named_struct(
-         |     'pos', element_at(__ulm_best, st.pos + 1).cut,
-         |     'ps', concat(st.ps, array(substring($wordCol,
-         |       element_at(__ulm_best, st.pos + 1).cut + 1,
-         |       st.pos - element_at(__ulm_best, st.pos + 1).cut))))),
-         | st -> reverse(st.ps)))""".stripMargin
-    (best, pieces)
-  }
-
   /** The vocab rendered as foldable SQL array literals for the native
     * Viterbi kernels (the `pq_codes` convention — the kernel unpacks
     * them once at plan time): aligned `array<string>` pieces and
@@ -149,10 +90,10 @@ object Ulm {
   /** (…, pieces) — Viterbi segmentation of `wordCol` under `vocab`.
     * r22: the DP is the native `ulm_pieces` kernel
     * ([[graft.functions.UlmPieces]]) — the nested-aggregate SQL
-    * composition it replaces ([[viterbiExprs]], kept as the parity
-    * reference) is CodegenFallback and rebuilds the whole DP array via
-    * `concat(acc, array(...))` per step, O(len²) interpreted
-    * allocation per word. Same fold, same total tie order, same unk
+    * composition it replaces (kept as the parity reference in the
+    * test tree's `ParityRefs.viterbiExprs`) is CodegenFallback and
+    * rebuilds the whole DP array via `concat(acc, array(...))` per
+    * step, O(len²) interpreted allocation per word. Same fold, same total tie order, same unk
     * fallback — FunctionsSpec pins the kernel against the SQL form.
     * A word whose every segmentation hits an invalid piece cannot
     * occur (single chars are always scorable), so `pieces` is total.

@@ -614,7 +614,7 @@ object LlmPipeline {
     * q91/q92 close it for IVF. Per q84-convention query (vec_id ≤ 9):
     * the exact quantized-L2 top-3 over the corpus (vec_id > 9), the
     * ADC top-3 from the m=8 code rows, and the RE-RANKED top-3 —
-    * ADC's top-8 shortlist exact-rescored (AnnIndex.topKPqCurrent's
+    * ADC's top-8 shortlist exact-rescored (AnnIndex.topKPq's
     * `rerankC` trade, measured: per query, recall_rerank ≥ recall_adc
     * by construction — a true top-3 member inside any shortlist
     * re-ranks into the top 3 — and the gap between them is what the

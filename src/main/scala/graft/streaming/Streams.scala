@@ -1964,46 +1964,30 @@ object Streams {
 
   /** Streaming IVF-index maintenance — the freshness leg of the
     * trainer → index → serve lifecycle ([[graft.operators.KMeans]] →
-    * [[graft.operators.AnnIndex]]): each micro-batch of new embeddings
-    * (`vec_id`, `v` array<double>) is assigned to its nearest centroid
-    * and APPENDED into the index's `cid=<n>` partition directories, so
-    * queries running [[graft.operators.AnnIndex.topK]] against the same
-    * path see new vectors as soon as their batch commits — no rebuild,
-    * no read-side change, the probe's partition pruning is untouched.
-    * Centroids stay fixed between retrains (standard IVF operation;
-    * retrain + [[graft.operators.AnnIndex.writeIndex]] when drift
-    * warrants, exactly like the sidecar-rebuild cadence of DedupStore).
+    * [[graft.operators.AnnIndex]]) against a VERSIONED index root
+    * ([[graft.operators.AnnIndex.writeIndex]]): each micro-batch of new
+    * embeddings (`vec_id`, `v` array<double>) pins the CURRENT
+    * generation ([[graft.operators.AnnIndex.current]] — its name and
+    * ITS stored centroids, one handle), is assigned to its nearest
+    * centroid and APPENDED into that generation's `cid=<n>` partition
+    * directories, so queries running
+    * [[graft.operators.AnnIndex.topK]] see new vectors as soon as their
+    * batch commits — no rebuild, no read-side change, the probe's
+    * partition pruning is untouched. The stream keeps feeding
+    * whichever generation a retrain has installed, with assignment
+    * always consistent with the centroids that define the
+    * generation's lists (the pair can never mix). Centroids stay fixed
+    * between retrains (standard IVF operation).
+    *
     * Appends are idempotent per Spark's streaming-sink contract only at
     * the file level — a replayed batch re-appends its rows, so pair a
-    * periodic `Layout.rewriteInPlace(indexDir)(_.dropDuplicates("vec_id"))`
-    * run against the INDEX ROOT with the retrain schedule if exact-once
-    * listing matters downstream: rewriteInPlace recurses into the
-    * `cid=<n>` partition leaves (each with its own crash-safe swap), and
-    * a replayed vector re-appends into the same `cid` leaf by
-    * construction — single-assignment rule — so the per-leaf
-    * `dropDuplicates("vec_id")` is exactly the global one.
-    */
-  def indexIngestStream(embeddings: DataFrame,
-      centroids: Seq[(Int, Array[Double])], indexDir: String,
-      checkpointDir: String): StreamingQuery =
-    embeddings.writeStream
-      .queryName("ivf_index_ingest")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.AnnIndex.assignByCosine(batch, centroids)
-          .write.mode("append").partitionBy("cid").parquet(indexDir)
-        ()
-      }
-      .start()
-
-  /** [[indexIngestStream]] against a VERSIONED index root
-    * ([[graft.operators.AnnIndex.writeIndexVersioned]]): each
-    * micro-batch resolves the CURRENT generation and ITS stored
-    * centroids, then appends under that generation — so the stream
-    * keeps feeding whichever generation a retrain has installed, with
-    * assignment always consistent with the centroids that define the
-    * generation's lists (the triple can never mix).
+    * periodic `Layout.rewriteInPlace(generation.dir)(_.dropDuplicates(
+    * "vec_id"))` run with the retrain schedule if exact-once listing matters
+    * downstream: rewriteInPlace recurses into the `cid=<n>` partition
+    * leaves (each with its own crash-safe swap), and a replayed vector
+    * re-appends into the same `cid` leaf by construction —
+    * single-assignment rule — so the per-leaf `dropDuplicates("vec_id")`
+    * is exactly the global one.
     *
     * Strand guard: a retrain concurrent with an IN-FLIGHT batch would
     * leave that batch's rows in the predecessor generation (the
@@ -2024,9 +2008,9 @@ object Streams {
     * retrains — the family's single-maintenance-writer posture.
     *
     * Lloyd-stats leg: when the generation was built with
-    * `lloydStats = true`, each batch also folds its
-    * [[graft.operators.KMeans.statsOf]] cells into the generation's
-    * maintained `_lloyd` frame
+    * `lloydStats = true`, each batch also folds the
+    * [[graft.operators.KMeans.statsOf]] cells of the rows it appended
+    * into the generation's maintained `_lloyd` frame
     * ([[graft.operators.AnnIndex.foldLloydStats]] — exactly-once per
     * batch id), so the distortion-triggered retrain can take
     * [[graft.operators.AnnIndex.retrainFromStats]] and skip the
@@ -2036,18 +2020,52 @@ object Streams {
   def indexIngestStreamVersioned(embeddings: DataFrame, root: String,
       checkpointDir: String,
       maintenanceEvery: Int = 0): StreamingQuery =
+    indexIngest(embeddings, "ivf_index_ingest_versioned", root,
+      checkpointDir, None, maintenanceEvery)
+
+  /** [[indexIngestStreamVersioned]] with a SEMANTIC DEDUP GATE — the
+    * streaming form of SemDeDup (q112) against the serving index:
+    * each micro-batch is probed against the pinned generation
+    * ([[graft.operators.AnnIndex.semanticDedupProbePq]], cosine ≥
+    * `tau` within `nprobe` lists, from the PQ codes when the
+    * generation has a sidecar) and only vectors with NO live
+    * indexed near-duplicate are appended. Within-batch copies are
+    * resolved FIRST by the q112 rule (lower vec_id wins at ≥ `tau`),
+    * paired over the UNION of each vector's top-`nprobe` lists — the
+    * same probe window as the cross-run gate, so two near-duplicates
+    * arriving in one micro-batch that straddle a centroid boundary
+    * are still paired (r13 paired top-1 lists only, which the r13
+    * advice flagged: a boundary-straddling pair could both append).
+    * The residual recall gap is the gate's own documented one: a true
+    * pair sharing NO list within `nprobe` — the same trade the
+    * cross-run probe makes. Gate and append both run against the
+    * generation pinned at batch start, and the batch cycle is
+    * [[indexIngestStreamVersioned]]'s: the strand guard fails the
+    * batch if a retrain swapped mid-batch, so replay re-gates against
+    * the installed generation — survivors exactly-once, drops
+    * at-least-once, like every other streamed dedup cycle here — and
+    * the Lloyd-stats fold covers exactly the survivors appended.
+    */
+  def semanticDedupIngestStream(embeddings: DataFrame, root: String,
+      checkpointDir: String, tau: Double, nprobe: Int = 2,
+      rerankC: Int = 8, maintenanceEvery: Int = 0): StreamingQuery =
+    indexIngest(embeddings, "ivf_index_ingest_semantic_dedup", root,
+      checkpointDir, Some(SemanticGate(tau, nprobe, rerankC)),
+      maintenanceEvery)
+
+  /** The semantic gate's parameters (see [[semanticDedupIngestStream]]). */
+  private[graft] final case class SemanticGate(tau: Double, nprobe: Int,
+      rerankC: Int)
+
+  private def indexIngest(embeddings: DataFrame, name: String,
+      root: String, checkpointDir: String, gate: Option[SemanticGate],
+      maintenanceEvery: Int): StreamingQuery =
     embeddings.writeStream
-      .queryName("ivf_index_ingest_versioned")
+      .queryName(name)
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val gen = appendVersionedBatch(batch, root)
-        // fold AFTER the strand guard: a swapped-mid-batch append has
-        // already thrown, so stats only ever fold into the generation
-        // the rows actually serve from. Exactly-once per batch id;
-        // no-op for generations built without lloydStats (opt-in).
-        graft.operators.AnnIndex.foldLloydStats(batch.sparkSession,
-          root, gen, batchId, batch)
+        appendVersionedBatch(batch, root, batchId, gate)
         if (maintenanceEvery > 0 &&
             (batchId + 1) % maintenanceEvery == 0)
           maintainIndexIfDue(batch.sparkSession, root)
@@ -2091,160 +2109,118 @@ object Streams {
       A.buildPqSidecar(spark, root)
   }
 
-  /** One micro-batch of [[indexIngestStreamVersioned]], factored out so
-    * the strand guard is testable: resolve the generation ONCE, assign
-    * with THAT generation's centroids, append under it, then re-read
-    * the manifest and fail if a swap landed mid-batch (the scaladoc
-    * above). `postWriteProbe` is a test seam — it runs inside the
-    * guard's detection window (after the append, before the re-check),
-    * where a deterministic spec can inject the racing retrain.
+  /** One micro-batch of the versioned appenders — the ONE batch cycle
+    * behind [[indexIngestStreamVersioned]] and
+    * [[semanticDedupIngestStream]], factored out so the strand guard
+    * is testable: pin the generation handle ONCE, run the optional
+    * semantic gate against it, assign with ITS centroids, append under
+    * it, re-read the manifest and fail if a swap landed mid-batch (the
+    * scaladoc above), then fold the Lloyd stats of the rows actually
+    * appended — AFTER the guard, so stats only ever fold into the
+    * generation the rows serve from. `postWriteProbe` is a test seam —
+    * it runs inside the guard's detection window (after the append,
+    * before the re-check), where a deterministic spec can inject the
+    * racing retrain.
     */
   private[graft] def appendVersionedBatch(batch: DataFrame, root: String,
-      postWriteProbe: () => Unit = () => ()): String = {
-    val spark = batch.sparkSession
-    val gen0 = graft.operators.AnnIndex
-      .currentGeneration(spark, root)
-      .getOrElse(throw new IllegalStateException(
-        s"no installed generation at $root"))
-    val cents = graft.operators.AnnIndex
-      .readCentroidsOf(spark, root, gen0)
-    graft.operators.AnnIndex.assignByCosine(batch, cents)
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$root/$gen0")
-    postWriteProbe()
-    val gen1 = graft.operators.AnnIndex.currentGeneration(spark, root)
-    if (gen1 != Some(gen0))
-      throw new IllegalStateException(
-        s"index generation swapped mid-batch ($gen0 -> " +
-          s"${gen1.getOrElse("<none>")}): failing the batch so the " +
-          "replay re-appends into the installed generation")
-    gen0
-  }
-
-  /** [[indexIngestStreamVersioned]] with a SEMANTIC DEDUP GATE — the
-    * streaming form of SemDeDup (q112) against the serving index:
-    * each micro-batch is probed against the pinned generation
-    * ([[graft.operators.AnnIndex.semanticDedupProbeOf]], cosine ≥
-    * `tau` within `nprobe` lists) and only vectors with NO live
-    * indexed near-duplicate are appended. Within-batch copies are
-    * resolved FIRST by the q112 rule (lower vec_id wins at ≥ `tau`),
-    * paired over the UNION of each vector's top-`nprobe` lists — the
-    * same probe window as the cross-run gate, so two near-duplicates
-    * arriving in one micro-batch that straddle a centroid boundary
-    * are still paired (r13 paired top-1 lists only, which the r13
-    * advice flagged: a boundary-straddling pair could both append).
-    * The residual recall gap is the gate's own documented one: a true
-    * pair sharing NO list within `nprobe` — the same trade the
-    * cross-run probe makes. Gate and
-    * append both run against the generation pinned at batch start;
-    * the strand guard then fails the batch if a retrain swapped
-    * mid-batch, so replay re-gates against the installed generation —
-    * survivors exactly-once, drops at-least-once, like every other
-    * streamed dedup cycle here.
-    */
-  def semanticDedupIngestStream(embeddings: DataFrame, root: String,
-      checkpointDir: String, tau: Double, nprobe: Int = 2,
-      rerankC: Int = 8, maintenanceEvery: Int = 0): StreamingQuery =
-    embeddings.writeStream
-      .queryName("ivf_index_ingest_semantic_dedup")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendVersionedBatchDeduped(batch, root, tau, nprobe, rerankC)
-        if (maintenanceEvery > 0 &&
-            (batchId + 1) % maintenanceEvery == 0)
-          maintainIndexIfDue(batch.sparkSession, root)
-      }
-      .start()
-
-  /** One micro-batch of [[semanticDedupIngestStream]], factored out
-    * for the same testability as [[appendVersionedBatch]]. Three
-    * passes over the micro-batch (within-batch pairing, index probe,
-    * assignment append) — batch-scale work; the index side is read
-    * once, pruned to the probed `cid=` partitions.
-    */
-  private[graft] def appendVersionedBatchDeduped(batch: DataFrame,
-      root: String, tau: Double, nprobe: Int, rerankC: Int = 8,
+      batchId: Long = -1L, gate: Option[SemanticGate] = None,
       postWriteProbe: () => Unit = () => ()): Unit = {
     val A = graft.operators.AnnIndex
     val spark = batch.sparkSession
-    val gen0 = A.currentGeneration(spark, root)
-      .getOrElse(throw new IllegalStateException(
-        s"no installed generation at $root"))
-    val cents = A.readCentroidsOf(spark, root, gen0)
-    // both per-batch barriers release together in the one finally —
-    // the Exec loop contract (barriers must not accumulate across
-    // micro-batches)
+    val gen = A.current(spark, root)
+    // the gate's per-batch barriers release together in the one
+    // finally — the Exec loop contract (barriers must not accumulate
+    // across micro-batches)
     val barriers = scala.collection.mutable.ListBuffer[DataFrame]()
     def barrier(df: DataFrame): DataFrame = {
       val m = df.transform(graft.operators.Exec.materialize)
       barriers += m; m
     }
     try {
-      // within-batch first: q112's rule — the lower id wins at ≥ tau —
-      // paired over the UNION of each vector's top-nprobe lists (the
-      // cross-run probe's own window; top-1-only pairing missed
-      // boundary-straddling pairs, the r13 advice gap). Materialized
-      // for the batch's lifetime: the pair join references it twice and
-      // the probed-cid collect below walks it once more.
-      val probed = barrier(
-        A.probeByCosine(batch.select("vec_id", "v"), cents, nprobe))
-      val a = probed.select(col("vec_id").as("vec_a"), col("cid"),
-        col("v").as("v_a"))
-      val b = probed.select(col("vec_id").as("vec_b"), col("cid"),
-        col("v").as("v_b"))
-      val inBatchDups = a.join(b, "cid")
-        .filter(col("vec_a") < col("vec_b"))
-        .filter(expr("cosine_sim(v_a, v_b)") >= tau)
-        .select(col("vec_b").as("vec_id")).distinct()
-      // the batch's probed lists — ≤ k rows by construction (the
-      // vacuumRetracted collect-bound argument); a re-delivered id
-      // lands in its ARGMAX list (deterministic assignment), which the
-      // probed set contains (rn = 1 ⊆ rn ≤ nprobe), so the id guard
-      // below may prune its scan to these partitions
-      val batchCids = probed.select("cid").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      // id-level replay guard: the probe reads an id self-match as
-      // re-delivery (not a duplicate), which is right for AUDITING but
-      // would let an at-least-once re-delivery (wiped checkpoint, crash
-      // between the parquet append and the streaming commit) append the
-      // same vec_id twice. Ids already in the pinned generation never
-      // re-append — the anti-join reads one column of the PROBED `cid=`
-      // partitions only (partition prune + columnar prune; r13 scanned
-      // the whole generation's id column, a per-batch cost that grew
-      // with index size — the r13 advice item. A DedupStore-backed id
-      // set is the same structure with a bloom sidecar when even the
-      // pruned scan is too much). MATERIALIZED for the batch's lifetime
-      // and RELEASED after the append (the Exec loop contract): the
-      // gate and the survivor join reference this frame several times,
-      // and its plan carries the two anti-joins above.
-      val batchSurvivors = barrier(batch.select("vec_id", "v")
-        .join(inBatchDups, Seq("vec_id"), "left_anti")
-        .join(spark.read.parquet(s"$root/$gen0")
-            .filter(col("cid").isin(batchCids: _*)).select("vec_id"),
-          Seq("vec_id"), "left_anti"))
-      // then the cross-run gate against the pinned generation — served
-      // from the PQ codes when the generation has a sidecar
-      // (candidates never read the float column; exact re-rank bounds
-      // the float reads), falling back to the float probe otherwise
-      val kept = A.semanticDedupProbePqOf(spark, root, gen0,
-          batchSurvivors, tau, nprobe, rerankC)
-        .filter(!col("is_dup")).select("vec_id")
-      val survivors = batchSurvivors.join(kept, "vec_id")
-      A.assignByCosine(survivors, cents)
-        .write.mode("append").partitionBy("cid")
-        .parquet(s"$root/$gen0")
+      val appended = gate.fold(batch.select("vec_id", "v"))(g =>
+        semanticallyNovel(batch, gen, g, barrier))
+      A.assignByCosine(appended, gen.centroids)
+        .write.mode("append").partitionBy("cid").parquet(gen.dir)
+      postWriteProbe()
+      val now = graft.ingest.Generations.current(A.fsOf(spark, root),
+        new org.apache.hadoop.fs.Path(root))
+      if (now != Some(gen.name))
+        throw new IllegalStateException(
+          s"index generation swapped mid-batch (${gen.name} -> " +
+            s"${now.getOrElse("<none>")}): failing the batch so the " +
+            "replay re-gates and re-appends against the installed " +
+            "generation")
+      // exactly-once per batch id; no-op for generations built without
+      // lloydStats (opt-in)
+      A.foldLloydStats(spark, gen, batchId, appended)
     } finally {
       barriers.foreach(graft.operators.Exec.release)
     }
-    postWriteProbe()
-    val gen1 = A.currentGeneration(spark, root)
-    if (gen1 != Some(gen0))
-      throw new IllegalStateException(
-        s"index generation swapped mid-batch ($gen0 -> " +
-          s"${gen1.getOrElse("<none>")}): failing the batch so the " +
-          "replay re-gates and re-appends against the installed " +
-          "generation")
+  }
+
+  /** The semantic gate of [[appendVersionedBatch]]: the (vec_id, v)
+    * rows of `batch` with no near-duplicate — within the batch or
+    * among the pinned generation's live vectors — and no id already
+    * in the generation. Three passes over the micro-batch
+    * (within-batch pairing, index probe, assignment append) —
+    * batch-scale work; the index side is read once, pruned to the
+    * probed `cid=` partitions.
+    */
+  private def semanticallyNovel(batch: DataFrame,
+      gen: graft.operators.AnnIndex.Generation, g: SemanticGate,
+      barrier: DataFrame => DataFrame): DataFrame = {
+    val A = graft.operators.AnnIndex
+    val spark = batch.sparkSession
+    // within-batch first: q112's rule — the lower id wins at ≥ tau —
+    // paired over the UNION of each vector's top-nprobe lists (the
+    // cross-run probe's own window; top-1-only pairing missed
+    // boundary-straddling pairs, the r13 advice gap). Materialized
+    // for the batch's lifetime: the pair join references it twice and
+    // the probed-cid collect below walks it once more.
+    val probed = barrier(
+      A.probeByCosine(batch.select("vec_id", "v"), gen.centroids, g.nprobe))
+    val a = probed.select(col("vec_id").as("vec_a"), col("cid"),
+      col("v").as("v_a"))
+    val b = probed.select(col("vec_id").as("vec_b"), col("cid"),
+      col("v").as("v_b"))
+    val inBatchDups = a.join(b, "cid")
+      .filter(col("vec_a") < col("vec_b"))
+      .filter(expr("cosine_sim(v_a, v_b)") >= g.tau)
+      .select(col("vec_b").as("vec_id")).distinct()
+    // the batch's probed lists — ≤ k rows by construction (the
+    // vacuumRetracted collect-bound argument); a re-delivered id
+    // lands in its ARGMAX list (deterministic assignment), which the
+    // probed set contains (rn = 1 ⊆ rn ≤ nprobe), so the id guard
+    // below may prune its scan to these partitions
+    val batchCids = probed.select("cid").distinct()
+      .collect().map(_.getInt(0)).toSeq
+    // id-level replay guard: the probe reads an id self-match as
+    // re-delivery (not a duplicate), which is right for AUDITING but
+    // would let an at-least-once re-delivery (wiped checkpoint, crash
+    // between the parquet append and the streaming commit) append the
+    // same vec_id twice. Ids already in the pinned generation never
+    // re-append — the anti-join reads one column of the PROBED `cid=`
+    // partitions only (partition prune + columnar prune; r13 scanned
+    // the whole generation's id column, a per-batch cost that grew
+    // with index size — the r13 advice item. A DedupStore-backed id
+    // set is the same structure with a bloom sidecar when even the
+    // pruned scan is too much). MATERIALIZED for the batch's lifetime
+    // and RELEASED after the append (the Exec loop contract): the
+    // gate and the survivor join reference this frame several times,
+    // and its plan carries the two anti-joins above.
+    val batchSurvivors = barrier(batch.select("vec_id", "v")
+      .join(inBatchDups, Seq("vec_id"), "left_anti")
+      .join(spark.read.parquet(gen.dir)
+          .filter(col("cid").isin(batchCids: _*)).select("vec_id"),
+        Seq("vec_id"), "left_anti"))
+    // then the cross-run gate against the pinned generation — served
+    // from the PQ codes when the generation has a sidecar
+    // (candidates never read the float column; exact re-rank bounds
+    // the float reads), falling back to the float probe otherwise
+    val kept = A.semanticDedupProbePq(spark, gen, batchSurvivors, g.tau,
+        g.nprobe, g.rerankC)
+      .filter(!col("is_dup")).select("vec_id")
+    batchSurvivors.join(kept, "vec_id")
   }
 
   def windowedEventCounts(events: DataFrame,

@@ -593,7 +593,7 @@ class FunctionsSpec extends SparkSuite {
       .distinct().limit(512)
       .unionByName(edge)
     val (best, piecesSql) =
-      graft.operators.Ulm.viterbiExprs("word", vocab, maxLen)
+      ParityRefs.viterbiExprs("word", vocab, maxLen)
     val ps = vocab.map(p => "'" + p._1.replace("\\", "\\\\")
       .replace("'", "\\'") + "'").mkString("array(", ", ", ")")
     val ss = vocab.map(p => s"${p._2}L").mkString("array(", ", ", ")")

@@ -495,14 +495,16 @@ class LayoutSpec extends SparkSuite {
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray)).toSeq
     val query = e.filter(col("vec_id") === 0)
       .collect()(0).getSeq[Double](1).toArray
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString +
+    val root = java.nio.file.Files.createTempDirectory("ivf").toString +
       "/index"
-    graft.operators.AnnIndex.writeIndex(e, cents, dir)
+    graft.operators.AnnIndex.writeIndex(e, cents, root)
+    val gen = graft.operators.AnnIndex.current(spark, root)
+    val dir = gen.dir
     // every list directory exists on disk (8 centroids, corpus covers all)
     val lists = new java.io.File(dir).listFiles
       .filter(_.getName.startsWith("cid=")).map(_.getName).sorted
     assert(lists.length === 8, lists.toSeq)
-    val q = graft.operators.AnnIndex.topK(spark, dir, query, cents,
+    val q = graft.operators.AnnIndex.topK(spark, gen, query,
       k = 5, nprobe = 2)
     val got = q.collect().map(_.getLong(0)).toSeq
     assert(got.size === 5)
@@ -551,22 +553,24 @@ class LayoutSpec extends SparkSuite {
     val cents = e.filter(col("vec_id").between(1, 8))
       .collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray)).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("ivf-batch")
+    val root = java.nio.file.Files.createTempDirectory("ivf-batch")
       .toString + "/index"
-    graft.operators.AnnIndex.writeIndex(e, cents, dir)
+    graft.operators.AnnIndex.writeIndex(e, cents, root)
+    val gen = graft.operators.AnnIndex.current(spark, root)
+    val dir = gen.dir
     val queries = Seq(0L, 5L, 9L).map { id =>
       id -> e.filter(col("vec_id") === id)
         .collect()(0).getSeq[Double](1).toArray
     }
     val batch = graft.operators.AnnIndex
-      .topKBatch(spark, dir, queries, cents, k = 4, nprobe = 2)
+      .topKBatch(spark, gen, queries, k = 4, nprobe = 2)
     val got = batch.collect()
       .groupBy(_.getLong(0))
       .map { case (q, rs) =>
         q -> rs.sortBy(_.getLong(3)).map(_.getLong(1)).toSeq }
     for ((qid, qv) <- queries) {
       val single = graft.operators.AnnIndex
-        .topK(spark, dir, qv, cents, k = 4, nprobe = 2)
+        .topK(spark, gen, qv, k = 4, nprobe = 2)
         .collect().map(_.getLong(0)).toSeq
       assert(got(qid) === single, s"query $qid diverged from topK")
     }
@@ -595,13 +599,14 @@ class LayoutSpec extends SparkSuite {
       iters = 2)
     assert(cents.map(_._1) === (1 to 8), "a seed cluster vanished")
     assert(cents.forall(_._2.length === 64))
-    val dir = java.nio.file.Files.createTempDirectory("ivf-trained")
+    val root = java.nio.file.Files.createTempDirectory("ivf-trained")
       .toString + "/index"
-    graft.operators.AnnIndex.writeIndex(e, cents, dir)
+    graft.operators.AnnIndex.writeIndex(e, cents, root)
     val query = e.filter(col("vec_id") === 0)
       .collect()(0).getSeq[Double](1).toArray
     val hits = graft.operators.AnnIndex
-      .topK(spark, dir, query, cents, k = 5, nprobe = 2)
+      .topK(spark, graft.operators.AnnIndex.current(spark, root), query,
+        k = 5, nprobe = 2)
       .collect()
     assert(hits.length === 5)
     // trained centroids partition the corpus non-degenerately: the top
@@ -712,20 +717,20 @@ class LayoutSpec extends SparkSuite {
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray)).toSeq
     val root = java.nio.file.Files.createTempDirectory("ivfgen")
       .toString + "/index"
-    val g1 = A.writeIndexVersioned(e, bad, root)
-    assert(A.currentGeneration(spark, root) === Some(g1))
-    assert(A.readCentroids(spark, root).map(_._1) === Seq(1, 2))
+    val g1 = A.writeIndex(e, bad, root)
+    val h1 = A.current(spark, root)
+    assert(h1.name === g1)
+    assert(h1.centroids.map(_._1) === Seq(1, 2))
     // resolve a probe against g1 BEFORE the swap…
-    val inflight = A.topKCurrent(spark, root, query, k = 5, nprobe = 2)
+    val inflight = A.topK(spark, h1, query, k = 5, nprobe = 2)
     val before = inflight.collect().map(_.getLong(0)).toSeq
     def distortion(): Double = {
-      val cents = A.readCentroids(spark, root)
+      val gen = A.current(spark, root)
       import spark.implicits._
-      val cdf = cents.map { case (cid, cv) => (cid, cv.toSeq) }
+      val cdf = gen.centroids.map { case (cid, cv) => (cid, cv.toSeq) }
         .toDF("cid", "cv")
       graft.operators.KMeans.assign(
-        spark.read.parquet(A.currentIndexDir(spark, root))
-          .select("vec_id", "v"), cdf)
+        spark.read.parquet(gen.dir).select("vec_id", "v"), cdf)
         .agg(avg(col("dist_fp"))).collect()(0).getDouble(0)
     }
     val distBefore = distortion()
@@ -733,11 +738,24 @@ class LayoutSpec extends SparkSuite {
     // predecessor)…
     val g2 = A.retrain(spark, root, iters = 3)
     assert(g2 !== g1)
-    assert(A.currentGeneration(spark, root) === Some(g2))
+    assert(A.current(spark, root).name === g2)
     // …the in-flight plan still answers — g1's files are RETAINED for
     // one cycle — and answers identically
     assert(inflight.collect().map(_.getLong(0)).toSeq === before,
       "in-flight probe changed answers across the generation swap")
+    // …and so does a FRESH plan on the handle resolved before the swap:
+    // a handle pins its generation; only a new resolve moves to g2
+    assert(A.topK(spark, h1, query, k = 5, nprobe = 2)
+      .collect().map(_.getLong(0)).toSeq === before,
+      "a plan on the pre-swap handle changed answers after the swap")
+    val h2 = A.current(spark, root)
+    assert(h2.name === g2)
+    val h2Roots = scansOf(A.topK(spark, h2, query, k = 5, nprobe = 2)
+        .queryExecution.executedPlan)
+      .flatMap(_.relation.location.rootPaths.map(_.toString))
+    assert(h2Roots.nonEmpty && h2Roots.forall(_.contains(g2)),
+      s"a handle resolved after the swap must serve the new generation: " +
+        s"$h2Roots")
     val gens = new java.io.File(root).listFiles
       .filter(_.getName.startsWith("gen-")).map(_.getName).toSet
     assert(gens === Set(g1, g2), s"GC kept the wrong generations: $gens")
@@ -787,33 +805,33 @@ class LayoutSpec extends SparkSuite {
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray)).toSeq
     val root = java.nio.file.Files.createTempDirectory("ivfretract")
       .toString + "/index"
-    A.writeIndexVersioned(e, cents, root)
+    A.writeIndex(e, cents, root)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // the self-query: vec X must be its own top hit before retraction
     val x = 7L
     val qx = e.filter(col("vec_id") === x)
       .collect()(0).getSeq[Double](1).toArray
-    def served(): Seq[Long] = A.topKCurrent(spark, root, qx, k = 5,
+    def served(): Seq[Long] = A.topK(spark, A.current(spark, root), qx, k = 5,
       nprobe = 4).collect().map(_.getLong(0)).toSeq
     assert(served().head === x)
     // phase 1: retract → masked from the NEXT query on, no rewrite ran
     A.retract(spark, root, Seq(x))
     assert(!served().contains(x), "retracted id still served")
-    assert(!A.topKBatchCurrent(spark, root, Seq((1L, qx)), k = 5,
+    assert(!A.topKBatch(spark, A.current(spark, root), Seq((1L, qx)), k = 5,
         nprobe = 4).collect().map(_.getLong(1)).contains(x),
       "retracted id still served by the batch probe")
     // a (streaming-appender-shaped) re-append while the retraction is
     // pending stays masked — takedown needs no appender coordination
     A.assignByCosine(e.filter(col("vec_id") === x),
-        A.readCentroids(spark, root))
+        A.current(spark, root).centroids)
       .write.mode("append").partitionBy("cid")
-      .parquet(A.currentIndexDir(spark, root))
+      .parquet(A.current(spark, root).dir)
     assert(!served().contains(x), "re-appended retracted id served")
     // phase 2a: retrain physically drops it and clears the applied set
     A.retrain(spark, root, iters = 1)
     assert(!served().contains(x), "retracted id back after retrain")
-    assert(spark.read.parquet(A.currentIndexDir(spark, root))
+    assert(spark.read.parquet(A.current(spark, root).dir)
       .filter(col("vec_id") === x).count() === 0L,
       "retrain did not physically drop the retracted rows")
     assert(graft.ingest.StoreLayout.storeDataFiles(fs,
@@ -821,8 +839,8 @@ class LayoutSpec extends SparkSuite {
       "applied retraction files not cleared by retrain")
     // phase 2b: vacuum — prompt physical drop, affected lists only
     val y = served().head // currently-served vector to take down next
-    val genBefore = A.currentGeneration(spark, root).get
-    val dirBefore = A.currentIndexDir(spark, root)
+    val genBefore = A.current(spark, root).name
+    val dirBefore = A.current(spark, root).dir
     val yCid = spark.read.parquet(dirBefore)
       .filter(col("vec_id") === y).select("cid")
       .collect().map(_.get(0).toString.toInt).toSet
@@ -830,15 +848,15 @@ class LayoutSpec extends SparkSuite {
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/cid=$cid"))
         .filter(_.isFile).map(_.getPath.getName)
         .filterNot(_.startsWith("_")).toSet
-    val untouchedCids = A.readCentroids(spark, root).map(_._1)
+    val untouchedCids = A.current(spark, root).centroids.map(_._1)
       .filterNot(yCid).filter(c => fs.exists(
         new org.apache.hadoop.fs.Path(s"$dirBefore/cid=$c")))
     val untouchedBefore = untouchedCids.map(c => c -> partFiles(dirBefore, c))
     A.retract(spark, root, Seq(y))
     val genAfter = A.vacuumRetracted(spark, root)
     assert(genAfter !== genBefore, "vacuum did not swap a generation")
-    assert(A.currentGeneration(spark, root) === Some(genAfter))
-    val dirAfter = A.currentIndexDir(spark, root)
+    assert(A.current(spark, root).name === genAfter)
+    val dirAfter = A.current(spark, root).dir
     assert(spark.read.parquet(dirAfter)
       .filter(col("vec_id") === y).count() === 0L,
       "vacuum did not physically drop the retracted rows")
@@ -856,9 +874,9 @@ class LayoutSpec extends SparkSuite {
       "applied retraction files not cleared by vacuum")
     // re-admission: with the set clear, a re-appended vector serves again
     A.assignByCosine(e.filter(col("vec_id") === x),
-        A.readCentroids(spark, root))
+        A.current(spark, root).centroids)
       .write.mode("append").partitionBy("cid")
-      .parquet(A.currentIndexDir(spark, root))
+      .parquet(A.current(spark, root).dir)
     assert(served().contains(x),
       "re-admitted vector still masked after the set was cleared")
   }
@@ -877,7 +895,7 @@ class LayoutSpec extends SparkSuite {
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray)).toSeq
     val root = java.nio.file.Files.createTempDirectory("idxstats")
       .toString + "/index"
-    val g1 = A.writeIndexVersioned(e, cents, root)
+    val g1 = A.writeIndex(e, cents, root)
     // pure-metadata law: stats() spawns no Spark job
     val (s1, statsJobs) = jobsDuring(IS.stats(spark, root))
     assert(statsJobs.size === 0,
@@ -902,7 +920,7 @@ class LayoutSpec extends SparkSuite {
     A.assignByCosine(
         e.withColumn("vec_id", col("vec_id") + 100000L), cents)
       .write.mode("append").partitionBy("cid")
-      .parquet(A.currentIndexDir(spark, root))
+      .parquet(A.current(spark, root).dir)
     val s3 = IS.stats(spark, root)
     assert(s3.pqResidualFiles > 0 && s3.pqResidualBytes > 0L)
     assert(s3.sidecarRebuildDue, "a ~50% residual share must read due")
@@ -952,7 +970,7 @@ class LayoutSpec extends SparkSuite {
     // opt-in rebuild flips it
     assert(!s7.lloydStats,
       "a generation built without lloydStats must not report one")
-    A.writeIndexVersioned(e, cents, root, lloydStats = true)
+    A.writeIndex(e, cents, root, lloydStats = true)
     assert(IS.stats(spark, root).lloydStats,
       "a stats-seeded generation must report the zero-rescan form")
   }
@@ -973,19 +991,37 @@ class LayoutSpec extends SparkSuite {
       .collect()(0).getSeq[Double](1).toArray
     val root = java.nio.file.Files.createTempDirectory("ivfpq")
       .toString + "/index"
-    A.writeIndexVersioned(e, cents, root)
-    val exact = A.topKCurrent(spark, root, query, k = 5, nprobe = 2)
+    A.writeIndex(e, cents, root)
+    val exact = A.topK(spark, A.current(spark, root), query, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     // no sidecar yet: the PQ entry point serves the exact plan
-    assert(A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2)
+    assert(A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       === exact, "missing-sidecar fallback diverged from exact")
     A.buildPqSidecar(spark, root, m = 8, k = 8, iters = 1)
     // full-depth re-rank = the exact answer by construction
-    assert(A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2,
+    assert(A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2,
         rerank = 1000000)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       === exact, "full-depth re-rank diverged from the exact plan")
+    // a query of the wrong dimension is refused by every literal-query
+    // form (probeLists), shorter and longer alike, naming both lengths
+    val gen = A.current(spark, root)
+    for (bad <- Seq(query.take(32), query ++ query)) {
+      val forms: Seq[(String, () => Any)] = Seq(
+        "topK" -> (() => A.topK(spark, gen, bad, k = 5, nprobe = 2)),
+        "topKBatch" -> (() =>
+          A.topKBatch(spark, gen, Seq((1L, bad)), k = 5, nprobe = 2)),
+        "topKPq" -> (() => A.topKPq(spark, gen, bad, k = 5, nprobe = 2)),
+        "topKBatchPq" -> (() =>
+          A.topKBatchPq(spark, gen, Seq((1L, bad)), k = 5, nprobe = 2)))
+      for ((name, call) <- forms) {
+        val err = intercept[IllegalArgumentException](call())
+        assert(err.getMessage.contains(s"${bad.length} dimensions") &&
+          err.getMessage.contains(s"centroids ${query.length}"),
+          s"$name: ${err.getMessage}")
+      }
+    }
     // pure-ADC pass: equals the standalone Pq pipeline restricted to
     // the probed lists (ONE arithmetic, two spellings)
     val probes = A.probeLists(query, cents, 2)
@@ -997,7 +1033,7 @@ class LayoutSpec extends SparkSuite {
     val want = P.adcTopK(P.encode(probedVecs, cb, 8, 64),
         P.adcLut(e.filter(col("vec_id") === 0L), cb, 8, 64), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val adc = A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2)
+    val adc = A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2)
     val got = adc.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got === want, "ADC serving diverged from the Pq pipeline")
     // scan proof: the ADC plan prunes to the probed _pq lists and its
@@ -1007,7 +1043,7 @@ class LayoutSpec extends SparkSuite {
     }.head
     assert(scan.metadata.getOrElse("PartitionFilters", "[]") != "[]",
       "cid filter did not prune the _pq partitions")
-    val dir = A.currentIndexDir(spark, root)
+    val dir = A.current(spark, root).dir
     val probedFiles = probes.map(c =>
       new java.io.File(s"$dir/_pq/cid=$c").listFiles
         .count(f => f.getName.endsWith(".parquet"))).sum
@@ -1038,25 +1074,25 @@ class LayoutSpec extends SparkSuite {
     val fresh = Seq((freshId, query.toSeq)).toDF("vec_id", "v")
     A.assignByCosine(fresh, cents)
       .write.mode("append").partitionBy("cid")
-      .parquet(A.currentIndexDir(spark, root))
-    val withFresh = A.topKPqCurrent(spark, root, query, k = 5,
+      .parquet(A.current(spark, root).dir)
+    val withFresh = A.topKPq(spark, A.current(spark, root), query, k = 5,
       nprobe = 2).collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(withFresh.map(_._1).contains(freshId),
       "post-build append invisible to PQ serving (residual leg broken)")
     assert(withFresh.head === ((freshId, 0L)),
       s"appended query copy must rank first at distance 0: " +
         s"${withFresh.toSeq}")
-    assert(A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2,
+    assert(A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2,
         rerank = 50)
       .collect().map(_.getLong(0)).contains(freshId),
       "post-build append invisible to the re-rank pass")
     // retraction masks the ADC pass and the re-ranked pass alike
     val top = got.head._1
     A.retract(spark, root, Seq(top))
-    assert(!A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2)
+    assert(!A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2)
       .collect().map(_.getLong(0)).contains(top),
       "retracted id served by ADC")
-    assert(!A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2,
+    assert(!A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2,
         rerank = 50)
       .collect().map(_.getLong(0)).contains(top),
       "retracted id served by the re-rank pass")
@@ -1067,17 +1103,17 @@ class LayoutSpec extends SparkSuite {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        A.currentIndexDir(spark, root) + "/_pq")),
+        A.current(spark, root).dir + "/_pq")),
       "a fresh generation must not inherit the predecessor's codes")
-    val exact2 = A.topKCurrent(spark, root, query, k = 5, nprobe = 2)
+    val exact2 = A.topK(spark, A.current(spark, root), query, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    assert(A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2)
+    assert(A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       === exact2)
     // rebuilt on the new generation: serving again, retraction still
     // honored (the root-level set applies to every generation)
     A.buildPqSidecar(spark, root, m = 8, k = 8, iters = 1)
-    assert(!A.topKPqCurrent(spark, root, query, k = 5, nprobe = 2)
+    assert(!A.topKPq(spark, A.current(spark, root), query, k = 5, nprobe = 2)
       .collect().map(_.getLong(0)).contains(top))
     // batch PQ serving: per-query answers identical to one single-
     // query call each, from ONE code-list pass — including a query
@@ -1088,14 +1124,15 @@ class LayoutSpec extends SparkSuite {
       .select("vec_id", "v")
     import spark.implicits._
     val fresh2 = Seq((900002L, query.toSeq)).toDF("vec_id", "v")
-    A.assignByCosine(fresh2, A.readCentroids(spark, root))
+    A.assignByCosine(fresh2, A.current(spark, root).centroids)
       .write.mode("append").partitionBy("cid")
-      .parquet(A.currentIndexDir(spark, root))
+      .parquet(A.current(spark, root).dir)
     val qs = Seq(0L, 3L, 11L).map { qid =>
       qid -> e2.filter(col("vec_id") === qid)
         .collect()(0).getSeq[Double](1).toArray
     }
-    val batch = A.topKBatchPqCurrent(spark, root, qs, k = 4, nprobe = 2)
+    val batch = A.topKBatchPq(spark, A.current(spark, root), qs, k = 4,
+        nprobe = 2)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (qid, rows) =>
@@ -1103,7 +1140,8 @@ class LayoutSpec extends SparkSuite {
           .map(r => (r.getLong(1), r.getLong(2))).toSeq
       }
     for ((qid, qv) <- qs) {
-      val single = A.topKPqCurrent(spark, root, qv, k = 4, nprobe = 2)
+      val single = A.topKPq(spark, A.current(spark, root), qv, k = 4,
+        nprobe = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(batch(qid) === single,
         s"batch PQ serving diverged from the single call for $qid")
@@ -1123,7 +1161,7 @@ class LayoutSpec extends SparkSuite {
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray)).toSeq
     val root = java.nio.file.Files.createTempDirectory("ivfsem")
       .toString + "/index"
-    A.writeIndexVersioned(e, cents, root)
+    A.writeIndex(e, cents, root)
     val v7 = e.filter(col("vec_id") === 7)
       .collect()(0).getSeq[Double](1)
     // batch: an exact copy of indexed vec 7, a novel vector (the
@@ -1133,7 +1171,8 @@ class LayoutSpec extends SparkSuite {
     val batch = Seq((99001L, v7), (99002L, v7.map(x => -x)), (7L, v7))
       .toDF("vec_id", "v")
     def probe(): Map[Long, org.apache.spark.sql.Row] =
-      A.semanticDedupProbe(spark, root, batch, tau = 0.9, nprobe = 2)
+      A.semanticDedupProbe(spark, A.current(spark, root), batch, tau = 0.9,
+        nprobe = 2)
         .collect().map(r => r.getLong(0) -> r).toMap
     val out = probe()
     assert(out.size === 3)
@@ -1146,7 +1185,8 @@ class LayoutSpec extends SparkSuite {
       "an id self-match must read as the same record, not a duplicate")
     // plan law: the index side is a partition-pruned scan of the
     // probed cid= lists, never a full-index read
-    val q = A.semanticDedupProbe(spark, root, batch, tau = 0.9,
+    val q = A.semanticDedupProbe(spark, A.current(spark, root), batch,
+      tau = 0.9,
       nprobe = 2)
     q.collect()
     val idxScans = scansOf(q.queryExecution.executedPlan)
@@ -1175,7 +1215,7 @@ class LayoutSpec extends SparkSuite {
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray)).toSeq
     val root = java.nio.file.Files.createTempDirectory("ivfsempq")
       .toString + "/index"
-    A.writeIndexVersioned(e, cents, root)
+    A.writeIndex(e, cents, root)
     A.buildPqSidecar(spark, root, m = 8, k = 8, iters = 1)
     val v7 = e.filter(col("vec_id") === 7)
       .collect()(0).getSeq[Double](1)
@@ -1186,9 +1226,9 @@ class LayoutSpec extends SparkSuite {
         if (r.isNullAt(2)) -1L else r.getLong(2),
         if (r.isNullAt(3)) Double.NaN else r.getDouble(3)))
         .sortBy(_._1).toSeq
-    val pq = audit(A.semanticDedupProbePq(spark, root, batch,
+    val pq = audit(A.semanticDedupProbePq(spark, A.current(spark, root), batch,
       tau = 0.9, nprobe = 2))
-    val flt = audit(A.semanticDedupProbe(spark, root, batch,
+    val flt = audit(A.semanticDedupProbe(spark, A.current(spark, root), batch,
       tau = 0.9, nprobe = 2))
     assert(pq.map(t => (t._1, t._2, t._3)) ===
       flt.map(t => (t._1, t._2, t._3)),
@@ -1197,7 +1237,8 @@ class LayoutSpec extends SparkSuite {
       .get._3 === 7L)
     // plan law: the candidate pass scans the _pq code lists and its
     // read schema never includes the float column
-    val q = A.semanticDedupProbePq(spark, root, batch, tau = 0.9,
+    val q = A.semanticDedupProbePq(spark, A.current(spark, root), batch,
+      tau = 0.9,
       nprobe = 2)
     q.collect()
     val pqScans = scansOf(q.queryExecution.executedPlan)
@@ -1213,10 +1254,10 @@ class LayoutSpec extends SparkSuite {
     val novel2 = e.filter(col("vec_id") === 5)
       .collect()(0).getSeq[Double](1).map(x => -x)
     A.assignByCosine(Seq((88001L, novel2.toSeq)).toDF("vec_id", "v"),
-        A.readCentroids(spark, root))
+        A.current(spark, root).centroids)
       .write.mode("append").partitionBy("cid")
-      .parquet(A.currentIndexDir(spark, root))
-    val resid = audit(A.semanticDedupProbePq(spark, root,
+      .parquet(A.current(spark, root).dir)
+    val resid = audit(A.semanticDedupProbePq(spark, A.current(spark, root),
       Seq((88002L, novel2.toSeq)).toDF("vec_id", "v"),
       tau = 0.9, nprobe = 2))
     assert(resid.head._2 && resid.head._3 === 88001L,
@@ -1224,7 +1265,8 @@ class LayoutSpec extends SparkSuite {
     // takedown law: retracting the duplicate clears the veto in the
     // PQ path too (code rows are retraction-subtracted)
     A.retract(spark, root, Seq(7L))
-    val after = audit(A.semanticDedupProbePq(spark, root, batch,
+    val after = audit(A.semanticDedupProbePq(spark, A.current(spark, root),
+      batch,
       tau = 0.9, nprobe = 2))
     assert(!after.find(_._1 == 99001L).get._2,
       "retracted vector still vetoed through the code path")

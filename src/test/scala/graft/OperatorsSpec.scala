@@ -195,7 +195,7 @@ class OperatorsSpec extends SparkSuite {
       // QualityModel.train over the same ngram features produces the
       // same (fid, n_pos, n_neg, weight_fp) rows exactly
       val withNgrams = docs.withColumn("ngrams",
-        expr(LangId.ngramsSql("text", 3)))
+        expr(ParityRefs.ngramsSql("text", 3)))
       val langs = docs.select("lang").distinct()
         .collect().map(_.getString(0)).sorted.toSeq
       for (l <- langs) {

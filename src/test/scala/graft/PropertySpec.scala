@@ -323,6 +323,20 @@ class PropertySpec extends SparkSuite {
         if (action == 2 || action == 3)
           for (s <- Seq(store, twin)) D.compactStore(spark, s)
       }
+      // fixed tail: a usable sidecar, then a fresh delivery recorded
+      // and delivered again — its hash sits only in residual files the
+      // sidecar does not cover, so the sidecar path must find it there
+      D.buildBloomSidecar(spark, store)
+      val fresh = Seq((20001L, "doc number 7 content")).toDF("doc_id", "text")
+      def survivors(s: String) = D.newUnique(fresh, "text", "doc_id", s)
+        .collect().map(r => (r.getAs[Long]("doc_id"),
+          r.getAs[String]("content_hash"))).toSet
+      assert(survivors(store) === survivors(twin) &&
+        survivors(store).nonEmpty, s"trial $trial: tail delivery not fresh")
+      for (s <- Seq(store, twin)) D.recordHashes(fresh, "text", s)
+      assert(survivors(store).isEmpty && survivors(twin).isEmpty,
+        s"trial $trial: a recorded re-delivery passed the sidecar path " +
+          s"(${survivors(store)}) or the plain path (${survivors(twin)})")
     }
   }
 
@@ -435,7 +449,10 @@ class PropertySpec extends SparkSuite {
     * random schedule} answer every delivery identically, across random
     * record / compact / sidecar interleavings. Surviving deliveries
     * record into all four forms and are delivered again at once;
-    * compaction runs on all four.
+    * compaction runs on all four. A fixed tail then builds the sidecar,
+    * records a fresh delivery (family 5, outside the random families
+    * 1..4) and delivers it again: every form must agree and suppress
+    * it, which the sidecar forms can only do through the residual leg.
     */
   private def fourFormLaw(law: LawStore, table: String, seed: Long,
       steps: Int): Unit = {
@@ -479,6 +496,15 @@ class PropertySpec extends SparkSuite {
         }
         if (sidecar) withSidecar.foreach(law.store.buildBloomSidecar(spark, _))
       }
+      withSidecar.foreach(law.store.buildBloomSidecar(spark, _))
+      val fresh = law.delivery(id + 1, 5, 5)
+      val first = forms.map(law.probe(fresh, _))
+      assert(first.distinct.size === 1 && first.head.nonEmpty,
+        s"tail: the fresh delivery is not fresh in every form: $first")
+      forms.foreach(law.record(fresh, _))
+      val again = forms.map(law.probe(fresh, _))
+      assert(again.forall(_.isEmpty),
+        s"tail: a recorded re-delivery passed some form: $again")
     } finally drop()
   }
 

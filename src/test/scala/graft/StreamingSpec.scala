@@ -2134,13 +2134,15 @@ class StreamingSpec extends SparkSuite {
       .withColumn("v", col("embedding").cast("array<double>"))
       .select("vec_id", "v")
     val cents = graft.operators.KMeans.trainCollected(e, 1L to 8L, 1)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-stream")
+    val root = java.nio.file.Files.createTempDirectory("ivf-stream")
       .toString + "/index"
     val srcDir = java.nio.file.Files
       .createTempDirectory("ivf-stream-src").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("ivf-stream-ckpt").toString
-    graft.operators.AnnIndex.writeIndex(e, cents, dir)
+    graft.operators.AnnIndex.writeIndex(e, cents, root)
+    val gen = graft.operators.AnnIndex.current(spark, root)
+    val dir = gen.dir
     val before = spark.read.parquet(dir).count()
     // new corpus rows: exact copies of two existing vectors under fresh
     // ids — their list assignment and top-rank placement are known
@@ -2156,10 +2158,10 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("v",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType))))
-    graft.streaming.Streams.indexIngestStream(
+    graft.streaming.Streams.indexIngestStreamVersioned(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(srcDir),
-      cents, dir, ckpt).awaitTermination()
+      root, ckpt).awaitTermination()
     assert(spark.read.parquet(dir).count() === before + 2)
     // the streamed copy of vector 0 sits in the same list as vector 0
     // (one assignment rule) …
@@ -2172,12 +2174,13 @@ class StreamingSpec extends SparkSuite {
     // top rank (cosine 1.0; tie broken by vec_id puts the original
     // first, the streamed copy immediately after)
     val top = graft.operators.AnnIndex
-      .topK(spark, dir, q0.toArray, cents, k = 2, nprobe = 2)
+      .topK(spark, gen, q0.toArray, k = 2, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq
     assert(top === Seq(0L, 100000L), s"got $top")
     // a foreachBatch replay re-appends its rows (at-least-once); the
     // documented maintenance pairing — rewriteInPlace(dropDuplicates on
-    // vec_id) AT THE INDEX ROOT, which recurses into the cid= leaves —
+    // vec_id) AT THE GENERATION DIRECTORY, which recurses into the cid=
+    // leaves —
     // restores one row per vector without changing any answer
     graft.operators.AnnIndex.assignByCosine(
       spark.read.parquet(s"$srcDir/delivery1"), cents)
@@ -2190,7 +2193,7 @@ class StreamingSpec extends SparkSuite {
     assert(nAfter <= nBefore)
     assert(spark.read.parquet(dir).count() === before + 2)
     assert(graft.operators.AnnIndex
-      .topK(spark, dir, q0.toArray, cents, k = 2, nprobe = 2)
+      .topK(spark, gen, q0.toArray, k = 2, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 100000L))
   }
 
@@ -2210,7 +2213,7 @@ class StreamingSpec extends SparkSuite {
       .createTempDirectory("ivf-vstream-src").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("ivf-vstream-ckpt").toString
-    val g1 = A.writeIndexVersioned(e, cents, root)
+    val g1 = A.writeIndex(e, cents, root)
     val before = spark.read.parquet(s"$root/$g1").count()
     val q0 = e.filter(col("vec_id") === 0).collect()(0).getSeq[Double](1)
     Seq((100000L, q0)).toDF("vec_id", "v")
@@ -2229,13 +2232,13 @@ class StreamingSpec extends SparkSuite {
     drain()
     // the appended copy landed in generation 1 and is probeable there
     assert(spark.read.parquet(s"$root/$g1").count() === before + 1)
-    assert(A.topKCurrent(spark, root, q0.toArray, k = 2, nprobe = 2)
+    assert(A.topK(spark, A.current(spark, root), q0.toArray, k = 2, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 100000L))
     // retrain: the new generation is built from generation 1's vectors
     // INCLUDING the streamed append — nothing recorded is lost
     val g2 = A.retrain(spark, root, iters = 1)
     assert(spark.read.parquet(s"$root/$g2").count() === before + 1)
-    assert(A.topKCurrent(spark, root, q0.toArray, k = 2, nprobe = 2)
+    assert(A.topK(spark, A.current(spark, root), q0.toArray, k = 2, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 100000L))
     // a later delivery follows the swap: rows land under generation 2,
     // generation 1 is untouched
@@ -2247,7 +2250,7 @@ class StreamingSpec extends SparkSuite {
       "post-swap delivery missed the current generation")
     assert(spark.read.parquet(s"$root/$g1").count() === g1Count,
       "post-swap delivery leaked into the retired generation")
-    assert(A.topKCurrent(spark, root, q0.toArray, k = 3, nprobe = 2)
+    assert(A.topK(spark, A.current(spark, root), q0.toArray, k = 3, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 100000L, 100001L))
   }
 
@@ -2266,66 +2269,91 @@ class StreamingSpec extends SparkSuite {
     val d1 = e.filter(col("vec_id").between(60, 69))
     val d2 = e.filter(col("vec_id").between(70, 79))
     val fed = e.filter(col("vec_id") < 80)
+    val fedIds = fed.select("vec_id").as[Long].collect().sorted.toSeq
     val cents = K.trainCollected(e0, 1L to 6L, 1)
     val centsDf = cents.map { case (c, v) => (c, v.toSeq) }
       .toDF("cid", "cv")
-    val root = tmpDir("ivf-lloyd") + "/index"
-    val srcDir = tmpDir("ivf-lloyd-src")
-    val ckpt = tmpDir("ivf-lloyd-ckpt")
-    val g1 = A.writeIndexVersioned(e0, cents, root, lloydStats = true)
     def cellMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.get(0).toString.toLong, r.get(1).toString.toInt)
         -> (r.getLong(2), r.getLong(3))).toMap
-    // seed law: the generation's stats are its own vectors' statsOf
-    assert(cellMap(A.readLloydStats(spark, root))
-      === cellMap(K.statsOf(K.assign(e0, centsDf))))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType))))
-    def drain(): Unit = graft.streaming.Streams
-      .indexIngestStreamVersioned(
-        spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(srcDir),
-        root, ckpt).awaitTermination()
-    d1.coalesce(1).write.parquet(s"$srcDir/delivery1")
-    drain()
-    d2.coalesce(1).write.parquet(s"$srcDir/delivery2")
-    drain()
-    val fedCells = cellMap(K.statsOf(K.assign(fed, centsDf)))
-    assert(cellMap(A.readLloydStats(spark, root)) === fedCells,
-      "folded stats must equal the one-shot stats of everything fed")
-    // checkpoint loss: rows re-append (the family's at-least-once),
-    // but the stats folds are keyed by batch id — exactly-once
-    val rowsBefore = spark.read.parquet(s"$root/$g1").count()
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    drain()
-    assert(spark.read.parquet(s"$root/$g1").count() > rowsBefore,
-      "precondition: the replay re-appended rows")
-    assert(cellMap(A.readLloydStats(spark, root)) === fedCells,
-      "a replayed batch id must not fold twice")
-    // the zero-rescan retrain: centroids step exactly as one
-    // trainFrom round over everything fed (stats cover the DISTINCT
-    // fed vectors — the replayed duplicates are the rows the
-    // dropDuplicates reclaim owns, not the trainer's business)
-    val expected = K.trainFrom(fed, centsDf, 1).collect()
-      .map(r => r.get(0).toString.toLong -> r.getSeq[Double](1).toSeq)
-      .toMap
-    val g2 = A.retrainFromStats(spark, root)
-    assert(A.readCentroids(spark, root)
-      .map { case (c, v) => c.toLong -> v.toSeq }.toMap === expected,
-      "stepped centroids diverged from the full Lloyd round")
-    // the new generation serves, and re-seeded its own stats
-    val q0 = e.filter(col("vec_id") === 0).collect()(0)
-      .getSeq[Double](1)
-    assert(A.topKCurrent(spark, root, q0.toArray, k = 3, nprobe = 2)
-      .collect().nonEmpty)
-    assert(A.readLloydStats(spark, root).count() > 0,
-      s"generation $g2 must re-seed its Lloyd stats")
+    // both appenders run one batch cycle; the gated one's first
+    // delivery also carries a planted copy of seeded vector 5, which
+    // its gate drops — so its stats must cover exactly the rows it
+    // appended, not the raw batch
+    val planted = e.filter(col("vec_id") === 5L)
+      .select((col("vec_id") + 900000L).as("vec_id"), col("v"))
+    for (gated <- Seq(false, true)) {
+      val label = if (gated) "gated appender" else "plain appender"
+      val root = tmpDir("ivf-lloyd") + "/index"
+      val srcDir = tmpDir("ivf-lloyd-src")
+      val ckpt = tmpDir("ivf-lloyd-ckpt")
+      val g1 = A.writeIndex(e0, cents, root, lloydStats = true)
+      // seed law: the generation's stats are its own vectors' statsOf
+      assert(cellMap(A.readLloydStats(spark, A.current(spark, root)))
+        === cellMap(K.statsOf(K.assign(e0, centsDf))), label)
+      def drain(): Unit = {
+        val in = spark.readStream.schema(schema)
+          .option("recursiveFileLookup", "true").parquet(srcDir)
+        (if (gated) graft.streaming.Streams
+          .semanticDedupIngestStream(in, root, ckpt, tau = 0.99)
+        else graft.streaming.Streams
+          .indexIngestStreamVersioned(in, root, ckpt)).awaitTermination()
+      }
+      (if (gated) d1.unionByName(planted) else d1)
+        .coalesce(1).write.parquet(s"$srcDir/delivery1")
+      drain()
+      d2.coalesce(1).write.parquet(s"$srcDir/delivery2")
+      drain()
+      // the rows actually appended: everything fed (the gate dropped
+      // only the planted copy)
+      val appended = spark.read.parquet(s"$root/$g1")
+        .select("vec_id", "v").localCheckpoint(eager = true)
+      assert(appended.select("vec_id").as[Long].collect().sorted.toSeq
+        === fedIds, s"$label: appended rows are not exactly the fed ones")
+      val fedCells = cellMap(K.statsOf(K.assign(appended, centsDf)))
+      assert(cellMap(A.readLloydStats(spark, A.current(spark, root)))
+        === fedCells, s"$label: folded stats must equal the one-shot " +
+        "stats of every row appended")
+      // checkpoint loss: the plain appender's rows re-append (the
+      // family's at-least-once; the gated one's id guard appends
+      // nothing), but the stats folds are keyed by batch id —
+      // exactly-once
+      val rowsBefore = spark.read.parquet(s"$root/$g1").count()
+      val fs = new org.apache.hadoop.fs.Path(ckpt)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+      drain()
+      if (!gated)
+        assert(spark.read.parquet(s"$root/$g1").count() > rowsBefore,
+          "precondition: the replay re-appended rows")
+      assert(cellMap(A.readLloydStats(spark, A.current(spark, root)))
+        === fedCells, s"$label: a replayed batch id must not fold twice")
+      // the zero-rescan retrain: centroids step exactly as one
+      // trainFrom round over everything appended (stats cover the
+      // DISTINCT appended vectors — the replayed duplicates are the
+      // rows the dropDuplicates reclaim owns, not the trainer's
+      // business)
+      val expected = K.trainFrom(appended, centsDf, 1).collect()
+        .map(r => r.get(0).toString.toLong -> r.getSeq[Double](1).toSeq)
+        .toMap
+      val g2 = A.retrainFromStats(spark, root)
+      assert(A.current(spark, root).centroids
+        .map { case (c, v) => c.toLong -> v.toSeq }.toMap === expected,
+        s"$label: stepped centroids diverged from the full Lloyd round")
+      // the new generation serves, and re-seeded its own stats
+      val q0 = e.filter(col("vec_id") === 0).collect()(0)
+        .getSeq[Double](1)
+      assert(A.topK(spark, A.current(spark, root), q0.toArray, k = 3,
+        nprobe = 2).collect().nonEmpty)
+      assert(A.readLloydStats(spark, A.current(spark, root)).count() > 0,
+        s"generation $g2 must re-seed its Lloyd stats")
+    }
   }
 
   test("PQ serving composes with the streaming appender: streamed " +
@@ -2343,7 +2371,7 @@ class StreamingSpec extends SparkSuite {
       .createTempDirectory("ivf-pqstream-src").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("ivf-pqstream-ckpt").toString
-    A.writeIndexVersioned(e, cents, root)
+    A.writeIndex(e, cents, root)
     A.buildPqSidecar(spark, root, m = 8, k = 8, iters = 1)
     val q0 = e.filter(col("vec_id") === 0).collect()(0).getSeq[Double](1)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -2362,7 +2390,7 @@ class StreamingSpec extends SparkSuite {
     // leg serves it exactly, at distance 0, ahead of every quantized
     // candidate (including vec 0 itself, whose ADC distance is its
     // own quantization distortion)
-    val got = A.topKPqCurrent(spark, root, q0.toArray, k = 3,
+    val got = A.topKPq(spark, A.current(spark, root), q0.toArray, k = 3,
       nprobe = 2).collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.head === ((200000L, 0L)),
       s"streamed vector not served exactly through the residual leg: " +
@@ -2371,7 +2399,7 @@ class StreamingSpec extends SparkSuite {
     // vec 0's vector, hence vec 0's codes and ADC distance, and the
     // (adist, vec_id) tie-break orders 0 immediately before it
     A.buildPqSidecar(spark, root, m = 8, k = 8, iters = 1)
-    val got2 = A.topKPqCurrent(spark, root, q0.toArray, k = 50,
+    val got2 = A.topKPq(spark, A.current(spark, root), q0.toArray, k = 50,
       nprobe = 2).collect().map(r => (r.getLong(0), r.getLong(1)))
     val i0 = got2.indexWhere(_._1 == 0L)
     val iS = got2.indexWhere(_._1 == 200000L)
@@ -2394,7 +2422,7 @@ class StreamingSpec extends SparkSuite {
     val cents = graft.operators.KMeans.trainCollected(e, 1L to 8L, 1)
     val root = java.nio.file.Files.createTempDirectory("ivf-strand")
       .toString + "/index"
-    val g1 = A.writeIndexVersioned(e, cents, root)
+    val g1 = A.writeIndex(e, cents, root)
     val q0 = e.filter(col("vec_id") === 0).collect()(0).getSeq[Double](1)
     val batch = Seq((200000L, q0)).toDF("vec_id", "v")
     // the deterministic race: the retrain swaps generations inside the
@@ -2404,7 +2432,7 @@ class StreamingSpec extends SparkSuite {
         postWriteProbe = () => { A.retrain(spark, root, iters = 1); () })
     }
     assert(err.getMessage.contains("swapped mid-batch"))
-    val g2 = A.currentGeneration(spark, root).get
+    val g2 = A.current(spark, root).name
     assert(g2 !== g1)
     // the replay (what the restarted stream does) lands the rows in
     // the INSTALLED generation, where probes serve them. At-least-once:
@@ -2414,7 +2442,7 @@ class StreamingSpec extends SparkSuite {
     graft.streaming.Streams.appendVersionedBatch(batch, root)
     assert(spark.read.parquet(s"$root/$g2")
       .filter(col("vec_id") === 200000L).count() >= 1L)
-    assert(A.topKCurrent(spark, root, q0.toArray, k = 2, nprobe = 2)
+    assert(A.topK(spark, A.current(spark, root), q0.toArray, k = 2, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 200000L))
     // an undisturbed batch passes the guard silently
     graft.streaming.Streams.appendVersionedBatch(
@@ -4207,7 +4235,7 @@ class StreamingSpec extends SparkSuite {
       .createTempDirectory("idx-selfmaint-src").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("idx-selfmaint-ckpt").toString
-    val g1 = A.writeIndexVersioned(e, cents, root)
+    val g1 = A.writeIndex(e, cents, root)
     A.buildPqSidecar(spark, root, m = 8, k = 8, iters = 1)
     // pending takedowns — and a lowered ceiling so the backlog reads
     // past half of it (the vacuumDue trigger)
@@ -4238,7 +4266,7 @@ class StreamingSpec extends SparkSuite {
       "the vacuum must have cleared the retraction backlog")
     // the batch appended into the pre-vacuum generation BEFORE the
     // maintenance ran — the rewrite must carry it forward
-    val ids = spark.read.parquet(A.currentIndexDir(spark, root))
+    val ids = spark.read.parquet(A.current(spark, root).dir)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(ids.contains(500007L),
       "the vacuum dropped the batch's own append")
@@ -4268,7 +4296,7 @@ class StreamingSpec extends SparkSuite {
       .createTempDirectory("ivf-semstream-src").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("ivf-semstream-ckpt").toString
-    val g1 = A.writeIndexVersioned(e, cents, root)
+    val g1 = A.writeIndex(e, cents, root)
     // sidecar ON: the gate serves candidates from the PQ codes; the
     // gate's own appends carry no codes, so every later batch must
     // see them through the covered-watermark residual leg — this test
@@ -4350,7 +4378,7 @@ class StreamingSpec extends SparkSuite {
     // the pair on the bisector of the two most-similar current
     // centroids, each nudged toward its own side, and assert the
     // construction really straddles before asserting the gate holds.
-    val cents2 = A.readCentroids(spark, root)
+    val cents2 = A.current(spark, root).centroids
     def cos(x: Seq[Double], y: Seq[Double]): Double = {
       val dot = x.zip(y).map { case (p, q) => p * q }.sum
       dot / (math.sqrt(x.map(p => p * p).sum) *
