@@ -59,16 +59,23 @@ abstract class KeyStore[L <: StoreLayout] private[ingest] (
   /** Build/replace the store's Bloom sidecar at `fpp` (`numShards` = 0
     * sizes the shards from the row count). The filter covers the
     * immutable compacted history while fresh appends ride the residual
-    * join, so rebuild on the compaction schedule. Returns the keys
-    * covered (0 for an empty store, whose sidecar is removed).
+    * join, so rebuild on the compaction schedule. An explicit build
+    * holds at any store size — every probe uses it — while [[maintain]]
+    * keeps a sidecar only above the broadcast threshold. Returns the
+    * keys covered (0 for an empty store, whose sidecar is removed).
     */
   def buildBloomSidecar(spark: SparkSession, layout: L, fpp: Double = 0.01,
       numShards: Int = 0): Long =
     layout.buildSidecar(spark, spec, fpp, numShards)
 
-  /** Inline upkeep driven by [[StoreStats]]: compaction and a sidecar
-    * rebuild when `compactionDue`, a rebuild alone when `sidecarStale`.
-    * Idempotent — the signals re-check on every call.
+  /** Inline upkeep driven by [[StoreStats]]: compaction when
+    * `compactionDue`, followed by a sidecar rebuild on a store above
+    * the planner's broadcast threshold (`spark.sql.autoBroadcastJoinThreshold`)
+    * and the voided sidecar's removal below it; a rebuild alone when
+    * `sidecarStale`, which only a store above the threshold reads. A
+    * store under the threshold keeps no sidecar: its plain probe is
+    * already one broadcast join. Idempotent — the signals re-check on
+    * every call.
     */
   def maintain(spark: SparkSession, layout: L): Unit =
     layout.maintain(spark, spec)

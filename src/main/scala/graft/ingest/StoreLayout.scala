@@ -68,7 +68,10 @@ private[ingest] final case class KeySpec(label: String,
   * only the residual files (current minus covered, broadcast — small
   * between rebuilds). Compaction rewrites the store under new file
   * names; the covered names vanish and the probe plans the plain join
-  * until the next rebuild (schedule it with compaction).
+  * until the next rebuild (schedule it with compaction). The sidecar
+  * pays only above the planner's broadcast threshold, where the plain
+  * probe cannot broadcast the store: [[maintain]] keeps one there and
+  * none below it ([[StoreStats]]).
   */
 sealed trait StoreLayout {
 
@@ -230,16 +233,21 @@ sealed trait StoreLayout {
   }
 
   /** Inline self-maintenance driven by the [[StoreStats]] signals:
-    * compaction when `compactionDue`, always followed by a sidecar
-    * rebuild (the rewritten file names void the old coverage); a
-    * rebuild alone when `sidecarStale`.
+    * compaction when `compactionDue`, then the sidecar the rewritten
+    * file names voided is rebuilt on a store above the broadcast
+    * threshold ([[StoreStats.sidecarPays]]) and removed below it; a
+    * rebuild alone when `sidecarStale`. A store under the threshold
+    * never gains a sidecar here — its plain probe is one broadcast join.
     */
   private[ingest] def maintain(spark: SparkSession, spec: KeySpec): Unit = {
     ensure(spark, spec)
     val st = StoreStats.of(spark, this)
-    if (st.compactionDue) compact(spark, spec, StoreLayout.TargetFileBytes)
-    if (st.compactionDue || st.sidecarStale)
-      buildSidecar(spark, spec, 0.01, 0)
+    if (st.compactionDue) {
+      compact(spark, spec, StoreLayout.TargetFileBytes)
+      if (StoreStats.sidecarPays(spark, dataBytes(spark)))
+        buildSidecar(spark, spec, 0.01, 0)
+      else StoreLayout.removeSidecar(fs(spark), manifest(spark))
+    } else if (st.sidecarStale) buildSidecar(spark, spec, 0.01, 0)
   }
 
   /** Refuse a metadata change over a non-empty store. */
@@ -739,7 +747,7 @@ object StoreLayout {
     * directory (deleting only the manifest would leak generations,
     * which are otherwise collected only by a successful rebuild).
     */
-  private def removeSidecar(fs: FileSystem, manifest: HPath): Unit = {
+  private[ingest] def removeSidecar(fs: FileSystem, manifest: HPath): Unit = {
     fs.delete(manifest, false)
     val parent = fs.makeQualified(manifest).getParent
     val genPrefix = manifest.getName + ".d-"

@@ -18,10 +18,19 @@ import org.apache.spark.sql.SparkSession
   * `compactionDue` fires when the tombstone backlog passes half the
   * [[StoreLayout.tombstoneBroadcastCeiling]] (compact BEFORE probes
   * fall off the broadcast plan, not after) or the data file count
-  * passes `maxDataFiles`. `sidecarStale` fires when residual bytes —
-  * appends the bloom filter does not cover — pass `maxResidualShare`
-  * of the store (the bloom prune erodes as the residual grows; a
-  * missing sidecar on a non-empty store is 100% residual by
+  * passes `maxDataFiles`.
+  *
+  * The Bloom sidecar is a large-store structure: it pays only where
+  * the plain probe cannot broadcast the whole store, i.e. where the
+  * store's data bytes exceed the planner's broadcast threshold
+  * (`spark.sql.autoBroadcastJoinThreshold`, reported as
+  * `sidecarThresholdBytes`; `-1` means every non-empty store wants
+  * one). Below it the plain probe is already one broadcast join, and
+  * a sidecar only adds its rebuilds and a second join. So
+  * `sidecarStale` fires only on a store above the threshold, when
+  * residual bytes — appends the bloom filter does not cover — pass
+  * `maxResidualShare` of the store (the bloom prune erodes as the
+  * residual grows; a missing sidecar there is 100% residual by
   * definition and reports stale).
   */
 object StoreStats {
@@ -34,7 +43,7 @@ object StoreStats {
   final case class Stats(
       dataFiles: Int, dataBytes: Long,
       tombstoneFiles: Int, tombstoneBytes: Long,
-      broadcastCeilingBytes: Long,
+      broadcastCeilingBytes: Long, sidecarThresholdBytes: Long,
       sidecarPresent: Boolean, coveredFiles: Int,
       residualFiles: Int, residualBytes: Long,
       hashForm: String, stride: Int,
@@ -42,6 +51,21 @@ object StoreStats {
 
   /** Residual share above which the sidecar counts as stale. */
   private val MaxResidualShare = 0.25
+
+  /** The planner's broadcast threshold, which a store's data bytes
+    * must exceed before its inline upkeep keeps a Bloom sidecar.
+    */
+  private def sidecarThreshold(spark: SparkSession): Long =
+    spark.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Whether a store of `dataBytes` is worth a Bloom sidecar: it holds
+    * data and cannot ride the plain probe's broadcast whole.
+    */
+  private[ingest] def sidecarPays(spark: SparkSession,
+      dataBytes: Long): Boolean = {
+    val threshold = sidecarThreshold(spark)
+    dataBytes > 0 && (threshold < 0 || dataBytes > threshold)
+  }
 
   /** The report for the store at `layout` (any of the family: data
     * files, tombstones and sidecar wherever the layout keeps them; the
@@ -71,12 +95,13 @@ object StoreStats {
       dataFiles = data.size, dataBytes = dataBytes,
       tombstoneFiles = tomb.size, tombstoneBytes = tombBytes,
       broadcastCeilingBytes = ceiling,
+      sidecarThresholdBytes = sidecarThreshold(spark),
       sidecarPresent = sidecar.isDefined, coveredFiles = coveredLive,
       residualFiles = residual.size, residualBytes = residualBytes,
       hashForm = hashForm, stride = stride,
       compactionDue =
         tombBytes > ceiling / 2 || data.size > maxDataFiles,
-      sidecarStale = data.nonEmpty && (sidecar.isEmpty ||
+      sidecarStale = sidecarPays(spark, dataBytes) && (sidecar.isEmpty ||
         residualBytes.toDouble > MaxResidualShare * dataBytes))
   }
 }

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
@@ -16,7 +16,10 @@ import graft.Tables
   *   facts (the FK ordering hazard, SURVEY.md §2.1) → per file: read →
   *   validate (O5) → coerce (O7) → enrich lineage (O6) → dedupe (O9) →
   *   FK orphan check for facts (O10) → append (O8) → metadata upsert
-  *   (O12) with success/error status (O13).
+  *   (O12) with success/error status (O13). A delivery with no new rows
+  *   (a re-touched or fully re-delivered file) appends nothing — an
+  *   empty append would still write a schema-only part file to the
+  *   table and to its keys projection — and records `success`.
   *
   * The poll cycle's reads of the warehouse's own tables
   * (`storedTable`, `keyProjection`, `metadata`) carry each table's
@@ -365,14 +368,15 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   /** Commit phase shared by the batch and streaming entries: append the
     * prepared frame (which prepareBatch left persisted and
-    * materialized), maintain the keys projection, always unpersist.
+    * materialized) and maintain the keys projection — nothing when it
+    * holds no new rows — then always unpersist.
     */
   private def commitPrepared(entity: String,
-      prepared: Option[DataFrame]): Boolean =
+      prepared: Option[(DataFrame, Boolean)]): Boolean =
     prepared match {
       case None => false
-      case Some(deduped) =>
-        try { commitBatch(entity, deduped); true }
+      case Some((deduped, hasRows)) =>
+        try { if (hasRows) commitBatch(entity, deduped); true }
         finally deduped.unpersist(blocking = false)
     }
 
@@ -449,13 +453,14 @@ final class Warehouse(spark: SparkSession, root: String) {
     * writes — safe to retry arbitrarily, and because the returned frame
     * is persisted and force-computed here, the full source read happens
     * INSIDE the retried phase for every entity (without it, a dim
-    * batch's first real scan would be the unretried append). None ⇒
-    * validation/FK failure (error status). The caller unpersists after
-    * commit; every failure path unpersists before propagating so
-    * retried attempts cannot leak cache entries.
+    * batch's first real scan would be the unretried append). The
+    * frame comes with whether it holds any new row, read off that same
+    * forcing action. None ⇒ validation/FK failure (error status). The
+    * caller unpersists after commit; every failure path unpersists
+    * before propagating so retried attempts cannot leak cache entries.
     */
   private def prepareBatch(entity: String, raw: DataFrame,
-      enrich: DataFrame => DataFrame): Option[DataFrame] =
+      enrich: DataFrame => DataFrame): Option[(DataFrame, Boolean)] =
     Ingest.validateColumns(raw, Tables.requiredColumns(entity)) match {
         case Ingest.MissingColumns(_) => None
         case Ingest.Valid =>
@@ -497,7 +502,8 @@ final class Warehouse(spark: SparkSession, root: String) {
               // are not made distinct: a duplicated key only repeats
               // rows, and a row unmatched on one dim keeps its null arm
               // there in every repeat, so whether any null arm exists —
-              // all the check decides — is the same. They come from the
+              // all the check decides — is the same, and so is whether
+              // any row exists (the third count). They come from the
               // dim TABLES, not the keys projections: a crash between a
               // dim append and its keys write must not turn committed
               // dims into false orphans.
@@ -511,17 +517,21 @@ final class Warehouse(spark: SparkSession, root: String) {
                   .withColumn("__p", lit(1))), Seq("produit_id"), "left")
               val counts = flagged.agg(
                 coalesce(sum(when(col("__c").isNull, 1L).otherwise(0L)), lit(0L)),
-                coalesce(sum(when(col("__p").isNull, 1L).otherwise(0L)), lit(0L))).head()
+                coalesce(sum(when(col("__p").isNull, 1L).otherwise(0L)), lit(0L)),
+                count(lit(1))).head()
               if (counts.getLong(0) > 0 || counts.getLong(1) > 0) {
                 deduped.unpersist(blocking = false)
                 None
-              } else Some(deduped)
+              } else Some((deduped, counts.getLong(2) > 0))
             } else {
               // Force the full read inside the retry. A no-op sink only
               // scans the cache; count() would add an aggregate and its
-              // shuffle stage (one more job under AQE).
-              deduped.write.format("noop").mode("overwrite").save()
-              Some(deduped)
+              // shuffle stage (one more job under AQE). The observed
+              // row count rides the same job.
+              val rows = Observation()
+              deduped.observe(rows, count(lit(1)).as("n"))
+                .write.format("noop").mode("overwrite").save()
+              Some((deduped, rows.get("n").asInstanceOf[Long] > 0))
             }
           } catch {
             case e: Throwable =>

@@ -1329,7 +1329,10 @@ object Streams {
     * toward the StoreStats signals): the appender IS the stores' single
     * writer, so compacting between its own batches never races an
     * append, and a year-long feed self-maintains without an external
-    * scheduler.
+    * scheduler. A store under the planner's broadcast threshold is
+    * compacted when due but keeps no Bloom sidecar
+    * ([[graft.ingest.KeyStore.maintain]]), so a small store's batch
+    * neither rebuilds one nor splits its probe.
     *
     * Each batch runs as ONE composed plan. `yieldDir` turns on per-stage
     * observability instead ([[observedStageRun]]): per-batch
@@ -1352,13 +1355,18 @@ object Streams {
         val target = new org.apache.hadoop.fs.Path(outDir, s"batch=$batchId")
         val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
         if (!fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))) {
-          val fresh = yieldDir
-            .map(yd => observedStageRun(stages, idCol, textCol, yd,
-              rejectSampleSlots, pendingRelease)(batch, batchId))
-            .getOrElse(stages.foldLeft(batch)((d, s) => s.check(d)))
-            .localCheckpoint(true) // one evaluation feeds the write
-          try fresh.write.mode("overwrite").parquet(target.toString)
-          finally fresh.unpersist()
+          yieldDir match {
+            // the observed run returns its final barrier, already
+            // materialized; it releases at the next batch
+            case Some(yd) => observedStageRun(stages, idCol, textCol, yd,
+              rejectSampleSlots, pendingRelease)(batch, batchId)
+              .write.mode("overwrite").parquet(target.toString)
+            case None =>
+              val fresh = stages.foldLeft(batch)((d, s) => s.check(d))
+                .localCheckpoint(true) // one evaluation feeds the write
+              try fresh.write.mode("overwrite").parquet(target.toString)
+              finally fresh.unpersist()
+          }
         }
         val committed = spark.read
           .schema(StructType(batch.schema ++ stages.flatMap(_.addedColumns)))

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ingest.{HashForm, Ingest, Warehouse}
@@ -1750,64 +1751,162 @@ class IngestSpec extends SparkSuite {
     import spark.implicits._
     val D = graft.ingest.DedupStore
     val SS = graft.ingest.StoreStats
-    val store = tmpDir("storestats") + "/hashes"
+    // the sidecar signals judged here are the large-store ones: with
+    // the planner's broadcast threshold off (-1) every non-empty store
+    // wants a sidecar; a store under the threshold keeps none (the
+    // sidecar-threshold law below)
+    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val store = tmpDir("storestats") + "/hashes"
+      def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+      // empty store: nothing due
+      val s0 = SS.of(spark, store)
+      assert(s0.dataFiles === 0 && !s0.compactionDue && !s0.sidecarStale)
+      // recorded, no sidecar yet: stale by definition, no compaction due
+      D.recordHashes(batch((1L, "alpha"), (2L, "beta")), "text", store)
+      val s1 = SS.of(spark, store)
+      assert(s1.dataFiles > 0 && s1.dataBytes > 0L)
+      assert(s1.tombstoneFiles === 0 && s1.tombstoneBytes === 0L)
+      assert(!s1.sidecarPresent && s1.sidecarStale,
+        "a non-empty store without a sidecar must read stale")
+      assert(!s1.compactionDue)
+      assert(s1.hashForm === HashForm.Md5 && s1.stride === 1)
+      // sidecar built: fresh, fully covered
+      assert(D.buildBloomSidecar(spark, store, numShards = 4) > 0L)
+      val s2 = SS.of(spark, store)
+      assert(s2.sidecarPresent && !s2.sidecarStale)
+      assert(s2.coveredFiles === s2.dataFiles && s2.residualFiles === 0)
+      // comparable-size append: residual share ~half, sidecar stale again
+      D.recordHashes(batch((3L, "gamma"), (4L, "delta")), "text", store)
+      val s3 = SS.of(spark, store)
+      assert(s3.residualFiles > 0 && s3.residualBytes > 0L)
+      assert(s3.sidecarStale, "a ~50% residual share must read stale")
+      // retraction: backlog visible; a lowered ceiling flips the
+      // compact-before-the-broadcast-gate-falls-over signal
+      D.retract(batch((1L, "alpha")), "text", store)
+      val s4 = SS.of(spark, store)
+      assert(s4.tombstoneFiles > 0 && s4.tombstoneBytes > 0L)
+      assert(!s4.compactionDue, "takedown-list backlog under the " +
+        "default ceiling must not demand compaction")
+      spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
+      try {
+        val s5 = SS.of(spark, store)
+        assert(s5.broadcastCeilingBytes === 2L)
+        assert(s5.compactionDue,
+          "backlog past half the ceiling must demand compaction")
+      } finally spark.conf.unset("graft.tombstone.broadcast.maxBytes")
+      // file-count pressure alone also fires
+      assert(SS.of(spark, store, maxDataFiles = 0).compactionDue)
+      // compaction clears the backlog; the rewritten file names void the
+      // sidecar's coverage (probes already degrade to the exact plan)
+      D.compactStore(spark, store)
+      val s6 = SS.of(spark, store)
+      assert(s6.tombstoneBytes === 0L)
+      assert(s6.coveredFiles === 0 && s6.sidecarStale,
+        "post-compaction coverage must read stale until a rebuild")
+      // bucketed form: the xxh64 table reports its persisted form
+      val t = "storestats_xx_t"
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      try {
+        D.recordHashes(batch((1L, "alpha")), "text", Bucketed(t),
+          hashForm = HashForm.Xx)
+        val b1 = SS.of(spark, Bucketed(t))
+        assert(b1.dataFiles > 0 && b1.hashForm === HashForm.Xx)
+        assert(!b1.sidecarPresent && b1.sidecarStale)
+        D.retract(batch((1L, "alpha")), "text", Bucketed(t))
+        assert(SS.of(spark, Bucketed(t)).tombstoneBytes > 0L)
+      } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+    } finally
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+  }
+
+  test("sidecar-threshold law: inline upkeep keeps no Bloom sidecar " +
+    "on a store under the planner's broadcast threshold, answers as a " +
+    "sidecar'd twin does, builds one once the threshold drops under " +
+    "the store, and a due compaction removes a small store's sidecar " +
+    "whole (path and bucketed forms)") {
+    import spark.implicits._
+    val D = graft.ingest.DedupStore
+    val SS = graft.ingest.StoreStats
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-    // empty store: nothing due
+    val early = batch((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
+    val late = batch((4L, "delta"), (5L, "epsilon"))
+    // seen in both deliveries, one formatting variant, and fresh rows
+    val probe = batch((10L, "ALPHA"), (11L, "epsilon "), (12L, "zeta"),
+      (13L, "beta"), (14L, "eta"))
+    def fresh(layout: graft.ingest.StoreLayout): Set[Long] =
+      D.newUnique(probe, "text", "doc_id", layout).select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+    def generations(store: String): Seq[String] = {
+      val parent = new java.io.File(store).getParentFile
+      parent.list().toSeq.filter(_.startsWith("hashes.bloom")).sorted
+    }
+    val store = tmpDir("sidecar-threshold") + "/hashes"
+    D.recordHashes(early, "text", store)
+    D.recordHashes(late, "text", store)
     val s0 = SS.of(spark, store)
-    assert(s0.dataFiles === 0 && !s0.compactionDue && !s0.sidecarStale)
-    // recorded, no sidecar yet: stale by definition, no compaction due
-    D.recordHashes(batch((1L, "alpha"), (2L, "beta")), "text", store)
-    val s1 = SS.of(spark, store)
-    assert(s1.dataFiles > 0 && s1.dataBytes > 0L)
-    assert(s1.tombstoneFiles === 0 && s1.tombstoneBytes === 0L)
-    assert(!s1.sidecarPresent && s1.sidecarStale,
-      "a non-empty store without a sidecar must read stale")
-    assert(!s1.compactionDue)
-    assert(s1.hashForm === HashForm.Md5 && s1.stride === 1)
-    // sidecar built: fresh, fully covered
-    assert(D.buildBloomSidecar(spark, store, numShards = 4) > 0L)
-    val s2 = SS.of(spark, store)
-    assert(s2.sidecarPresent && !s2.sidecarStale)
-    assert(s2.coveredFiles === s2.dataFiles && s2.residualFiles === 0)
-    // comparable-size append: residual share ~half, sidecar stale again
-    D.recordHashes(batch((3L, "gamma"), (4L, "delta")), "text", store)
-    val s3 = SS.of(spark, store)
-    assert(s3.residualFiles > 0 && s3.residualBytes > 0L)
-    assert(s3.sidecarStale, "a ~50% residual share must read stale")
-    // retraction: backlog visible; a lowered ceiling flips the
-    // compact-before-the-broadcast-gate-falls-over signal
-    D.retract(batch((1L, "alpha")), "text", store)
-    val s4 = SS.of(spark, store)
-    assert(s4.tombstoneFiles > 0 && s4.tombstoneBytes > 0L)
-    assert(!s4.compactionDue, "takedown-list backlog under the " +
-      "default ceiling must not demand compaction")
+    assert(s0.sidecarThresholdBytes === threshold && threshold > 0L)
+    assert(s0.dataBytes > 0L && s0.dataBytes < threshold)
+    assert(!s0.sidecarPresent && !s0.sidecarStale,
+      "a store under the broadcast threshold must not read stale")
+    D.maintain(spark, store)
+    assert(!SS.of(spark, store).sidecarPresent && generations(store).isEmpty,
+      "inline upkeep must build no sidecar under the threshold")
+    // the twin: an explicit sidecar over the early delivery, the late
+    // one a post-sidecar residual append — every probe uses the sidecar
+    val twin = tmpDir("sidecar-threshold-twin") + "/hashes"
+    D.recordHashes(early, "text", twin)
+    assert(D.buildBloomSidecar(spark, twin, numShards = 4) === 3L)
+    D.recordHashes(late, "text", twin)
+    val t0 = SS.of(spark, twin)
+    assert(t0.sidecarPresent && t0.residualFiles > 0 && !t0.sidecarStale)
+    assert(fresh(store) === Set(12L, 14L))
+    assert(fresh(twin) === fresh(store),
+      "the sidecar-free store must answer as its sidecar'd twin")
+    // threshold under the store's size: the next upkeep builds one
+    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      assert(SS.of(spark, store).sidecarStale)
+      D.maintain(spark, store)
+      val s1 = SS.of(spark, store)
+      assert(s1.sidecarPresent && !s1.sidecarStale &&
+        s1.coveredFiles === s1.dataFiles)
+      assert(generations(store).size === 2, "one manifest, one generation")
+    } finally
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+    assert(fresh(store) === Set(12L, 14L))
+    // a due compaction on the sidecar'd twin under the threshold: the
+    // manifest and every generation go, the answers stay
+    D.retract(batch((0L, "gamma")), "text", twin)
     spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
     try {
-      val s5 = SS.of(spark, store)
-      assert(s5.broadcastCeilingBytes === 2L)
-      assert(s5.compactionDue,
-        "backlog past half the ceiling must demand compaction")
+      assert(SS.of(spark, twin).compactionDue)
+      D.maintain(spark, twin)
     } finally spark.conf.unset("graft.tombstone.broadcast.maxBytes")
-    // file-count pressure alone also fires
-    assert(SS.of(spark, store, maxDataFiles = 0).compactionDue)
-    // compaction clears the backlog; the rewritten file names void the
-    // sidecar's coverage (probes already degrade to the exact plan)
-    D.compactStore(spark, store)
-    val s6 = SS.of(spark, store)
-    assert(s6.tombstoneBytes === 0L)
-    assert(s6.coveredFiles === 0 && s6.sidecarStale,
-      "post-compaction coverage must read stale until a rebuild")
-    // bucketed form: the xxh64 table reports its persisted form
-    val t = "storestats_xx_t"
+    val t1 = SS.of(spark, twin)
+    assert(t1.tombstoneBytes === 0L && !t1.sidecarPresent &&
+      !t1.sidecarStale)
+    assert(generations(twin).isEmpty,
+      "compaction under the threshold must remove the whole sidecar")
+    assert(fresh(twin) === Set(12L, 14L))
+    // bucketed form: the same rule through the table's _bloom
+    val t = "sidecar_threshold_t"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     try {
-      D.recordHashes(batch((1L, "alpha")), "text", Bucketed(t),
-        hashForm = HashForm.Xx)
-      val b1 = SS.of(spark, Bucketed(t))
-      assert(b1.dataFiles > 0 && b1.hashForm === HashForm.Xx)
-      assert(!b1.sidecarPresent && b1.sidecarStale)
-      D.retract(batch((1L, "alpha")), "text", Bucketed(t))
-      assert(SS.of(spark, Bucketed(t)).tombstoneBytes > 0L)
+      D.recordHashes(early, "text", Bucketed(t))
+      D.maintain(spark, Bucketed(t))
+      assert(!SS.of(spark, Bucketed(t)).sidecarPresent)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try D.maintain(spark, Bucketed(t))
+      finally
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+      assert(SS.of(spark, Bucketed(t)).sidecarPresent)
+      assert(D.newUnique(probe, "text", "doc_id", Bucketed(t))
+        .select("doc_id").collect().map(_.getLong(0)).toSet ===
+        Set(11L, 12L, 14L))
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
@@ -2269,6 +2368,36 @@ class IngestSpec extends SparkSuite {
     assert(st === Map("clients.csv" -> "success",
       "produits.csv" -> "success", "ventes.csv" -> "success"))
     assert(jobs.size === 25, jobNames(jobs))
+  }
+
+  test("a re-touched delivery with no new rows commits nothing: no " +
+    "file lands under the table or its keys projection, the status " +
+    "stays success, and the pollOnce runs exactly 16 Spark jobs") {
+    val watch = tmpDir("watch-retouch")
+    val root = tmpDir("wh-retouch")
+    val wh = new Warehouse(spark, root)
+    writeE1Fixture(watch)
+    assert(wh.pollOnce(watch).values.toSet === Set("success"))
+    def files(): Set[String] = {
+      val top = java.nio.file.Paths.get(root)
+      val walk = Files.walk(top)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(top.relativize(_).toString)
+        .filterNot(_.startsWith("file_metadata")).toSet
+      finally walk.close()
+    }
+    val before = files()
+    // a dim and the fact, each re-delivered whole under a newer mtime
+    val later = System.currentTimeMillis() + 60000
+    for (f <- Seq("clients.csv", "ventes.csv"))
+      assert(new java.io.File(watch, f).setLastModified(later))
+    val (st, jobs) = jobsDuring(wh.pollOnce(watch))
+    assert(st === Map("clients.csv" -> "success", "ventes.csv" -> "success"))
+    assert(files() === before,
+      "a delivery with no new rows must add no file to any table")
+    assert(wh.table("clients").get.count() === 3L)
+    assert(wh.table("ventes").get.count() === 1L)
+    assert(jobs.size === 16, jobNames(jobs))
   }
 
   test("E1 negative: missing column → error; FK orphan ventes → error") {

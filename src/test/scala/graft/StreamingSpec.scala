@@ -3475,8 +3475,12 @@ class StreamingSpec extends SparkSuite {
     val clean = (1 to 40).map(i => s"c$i fresh$i").mkString(" ")
     Seq((1L, clean), (2L, leak)).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/b1")
+    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("graft.tombstone.broadcast.maxBytes", "2")
+      // the threshold under the store's size: maintenance keeps a
+      // sidecar only on a store the plain probe cannot broadcast
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       assert(SS.of(spark, contamStore).compactionDue)
       curationFeed(
         spark.readStream.schema(schema)
@@ -3499,7 +3503,10 @@ class StreamingSpec extends SparkSuite {
       // the retired benchmark's rows are physically gone
       assert(spark.read.parquet(contamStore)
         .filter(col("bench_id") === 901L).count() === 0L)
-    } finally spark.conf.unset("graft.tombstone.broadcast.maxBytes")
+    } finally {
+      spark.conf.unset("graft.tombstone.broadcast.maxBytes")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+    }
   }
 
   test("blocklist-gated curation feed: a listed-domain doc drops on " +
@@ -3805,7 +3812,7 @@ class StreamingSpec extends SparkSuite {
     // commit, the three store records) — a composer that adds a
     // barrier changes this pin
     assert((observedJobs ++ observedJobs1).toSeq.sortBy(_._1._2)
-      .map(_._2) === Seq(64, 65),
+      .map(_._2) === Seq(63, 64),
       "jobs per observed full-stack micro-batch changed")
   }
 
@@ -4054,6 +4061,91 @@ class StreamingSpec extends SparkSuite {
     assert((plainJobs ++ plainJobs1).toSeq.sortBy(_._1._2)
       .map(_._2) === Seq(26, 31),
       "jobs per plain full-stack micro-batch changed")
+  }
+
+  test("work-counter pin: the benchmark's feed configuration — the " +
+    "observed full-stack feed with inline upkeep every batch — runs " +
+    "a fixed job count per batch, and its small dedup stores keep no " +
+    "Bloom sidecar") {
+    import spark.implicits._
+    val srcDir = tmpDir("mfs-src")
+    val outDir = tmpDir("mfs-out") + "/docs"
+    val blockStore = tmpDir("mfs-block") + "/domains"
+    val contamStore = tmpDir("mfs-contam") + "/bench_grams"
+    val stores = tmpDir("mfs-stores")
+    val Seq(exactStore, nearStore, spanStore) =
+      Seq("hashes", "bands", "windows").map(n => s"$stores/$n")
+    // standing gate stores with their sidecars, built offline as the
+    // benchmark builds them
+    graft.ingest.DedupStore.recordHashes(
+      Seq(Tuple1("unrelated.example.com")).toDF("domain"), "domain",
+      blockStore)
+    graft.ingest.DedupStore.buildBloomSidecar(spark, blockStore)
+    graft.ingest.ContaminationStore.recordBenchmark(
+      Seq((900L, "completely unrelated benchmark material here"))
+        .toDF("doc_id", "text"), "text", "doc_id", contamStore)
+    graft.ingest.ContaminationStore.buildBloomSidecar(spark, contamStore)
+    val docA = (1 to 60).map(i => s"alpha$i story$i detail$i")
+      .mkString(" ")
+    val docB = (1 to 60).map(i => s"beta$i report$i figure$i")
+      .mkString(" ")
+    val docC = (1 to 60).map(i => s"gamma$i novel$i fresh$i")
+      .mkString(" ")
+    val lidDims = 512
+    val lidModels = graft.operators.LangId.collectModels(
+      graft.operators.LangId.train(
+        Seq((1L, docA, "en"), (2L, docB, "en"),
+          (3L, (1 to 30).map(i => s"qz$i zq$i qqzz$i").mkString(" "),
+            "xx"),
+          (4L, (1 to 30).map(i => s"zzq$i qzz$i zqq$i").mkString(" "),
+            "xx")).toDF("doc_id", "text", "lang"),
+        "text", "lang", lidDims), lidDims)
+    val ulmVocab = graft.operators.Ulm.train(
+      Seq((1L, docA), (2L, docB)).toDF("doc_id", "text"),
+      "text", maxLen = 4, maxVocab = 256, emRounds = 0)
+    val dims = 512
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("domain",
+        org.apache.spark.sql.types.StringType)))
+    def deliver(name: String, rows: Seq[(Long, String, String)]): Unit =
+      rows.toDF("doc_id", "text", "domain").coalesce(1).write
+        .mode("overwrite").parquet(s"$srcDir/$name")
+    val yieldRoot = tmpDir("mfs-yield")
+    val ckpt = tmpDir("mfs-ckpt")
+    def drain(): Unit =
+      graft.streaming.Streams.fullStackCurationFeed(
+        spark.readStream.schema(schema)
+          .option("recursiveFileLookup", "true").parquet(srcDir),
+        "text", "doc_id", "domain", blockStore,
+        lidModels, lidDims, Set("en"), contamStore,
+        Seq.fill(dims)(1000L), 0L, dims, ulmVocab, Long.MinValue,
+        exactStore, nearStore, spanStore, outDir, ckpt,
+        maintenanceEvery = 1, yieldDir = Some(yieldRoot))
+        .awaitTermination()
+    val ok = "ok.example.com"
+    deliver("b1", Seq((1L, docA, ok), (2L, docB, ok)))
+    val jobs0 = jobsPerBatch(drain())
+    // batch 2: an exact copy, a paraphrase, a half-and-half mashup and
+    // fresh content
+    deliver("b2", Seq((10L, docA, ok), (11L, docB + " appended footer", ok),
+      (12L, docA.substring(0, docA.length / 2) + " " +
+        docB.substring(docB.length / 2), ok),
+      (13L, docC, ok)))
+    val jobs1 = jobsPerBatch(drain())
+    assert(spark.read.parquet(outDir).select("doc_id").collect()
+      .map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 13L))
+    for (store <- Seq(exactStore, nearStore, spanStore))
+      assert(!graft.ingest.StoreStats.of(spark, store).sidecarPresent &&
+        !new java.io.File(s"$store.bloom").exists,
+        s"inline upkeep built a sidecar on the small store $store")
+    // THE WORK COUNTER: Spark jobs per maintained observed micro-batch
+    assert((jobs0 ++ jobs1).toSeq.sortBy(_._1._2).map(_._2) ===
+      Seq(54, 60), "jobs per maintained observed full-stack micro-batch " +
+      "changed")
   }
 
   test("quality-gated feed FROM the maintained snapshot: gating " +
