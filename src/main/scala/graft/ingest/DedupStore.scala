@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   *
   * The store is a plain parquet directory of (content_hash) rows,
   * appended once per committed batch — append-only, no merge, so a
-  * batch commit is one parquet write. Periodic Layout.compact keeps the
-  * file count flat. The anti-join shuffles both sides on the hash; a
+  * batch commit is one parquet write. A periodic [[compactStore]] keeps
+  * the file count flat and drops re-delivered rows; it too only adds
+  * and deletes files. The anti-join shuffles both sides on the hash; a
   * PATH-read parquet store like this one always plans a store-side
   * shuffle, which is still one narrow (hash-only) column — but at
   * 100 TB the store's row count dwarfs every batch, so re-shuffling it
@@ -148,43 +149,27 @@ object DedupStore extends KeyStore[StoreLayout](KeySpec("DedupStore",
       docs.select("content_hash")
     } else docs.select(hashOf(textCol, form).as("content_hash"))
 
-  /** [[recordHashes]] without the localCheckpoint, for a path store:
-    * stages the batch's hashes to a sibling temp directory (a durable
-    * parquet write — no executor-memory blocks to lose), then MOVES the
-    * staged data files into the store with per-file atomic renames. Use
-    * on long-running clusters where executor loss / dynamic-allocation
-    * decommission between checkpoint and append is a real event; the
-    * extra cost is one staged write of a hash-only projection. The
-    * staged write never scans the store directory it appends to
-    * (different path), so the self-scan race recordHashes checkpoints
-    * around cannot occur. A crash before any rename loses nothing
-    * (at-least-once re-delivery); a crash mid-rename re-delivers the
-    * remaining hashes as duplicates, which [[compactStore]] reclaims —
-    * same contract as recordHashes. Staged part-file names carry the
-    * write job's UUID, so they cannot collide with existing store files.
+  /** [[recordHashes]] without the checkpoint barrier, for a path
+    * store: stages the batch's hashes in a sibling directory (a durable
+    * parquet write — no executor-memory blocks to lose), then moves the
+    * staged files in ([[StoreLayout.Path.stageIn]], the same
+    * stage-and-move step compaction uses). Use on long-running clusters
+    * where executor loss / dynamic-allocation decommission between
+    * checkpoint and append is a real event; the extra cost is one
+    * staged write of a hash-only projection. The staged write never
+    * scans the store directory it appends to (different path), so the
+    * self-scan race recordHashes pins against cannot occur. A crash
+    * before any move loses nothing (at-least-once re-delivery); a crash
+    * mid-move re-delivers the remaining hashes as duplicates, which
+    * [[compactStore]] reclaims — same contract as recordHashes.
     */
   def recordHashesStaged(docs: DataFrame, textCol: String,
       storePath: String, hashForm: String = ""): Unit = {
-    val spark = docs.sparkSession
     val layout = StoreLayout.Path(storePath)
-    val form = HashForm.resolve(hashForm, storedHashForm(spark, layout))
-    layout.commitMeta(spark, spec, form, 1)
-    val hashes = hashProjection(docs, textCol, form)
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    val qual = fs.makeQualified(store)
-    val stage = new org.apache.hadoop.fs.Path(qual.getParent,
-      qual.getName + s".stage-${java.util.UUID.randomUUID()}")
-    hashes.distinct().write.parquet(stage.toString)
-    try {
-      fs.mkdirs(qual) // first-ever append: store dir may not exist yet
-      for (st <- fs.listStatus(stage)
-           if st.isFile && !st.getPath.getName.startsWith("_") &&
-             !st.getPath.getName.startsWith("."))
-        require(fs.rename(st.getPath,
-          new org.apache.hadoop.fs.Path(qual, st.getPath.getName)),
-          s"recordHashesStaged: could not move ${st.getPath} into $qual")
-    } finally fs.delete(stage, true)
+    val form = HashForm.resolve(hashForm,
+      storedHashForm(docs.sparkSession, layout))
+    layout.commitMeta(docs.sparkSession, spec, form, 1)
+    layout.stageIn(hashProjection(docs, textCol, form).distinct(), "stage")
   }
 
   /** Retract documents by content: phase 1 of the takedown protocol

@@ -46,11 +46,14 @@ abstract class KeyStore[L <: StoreLayout] private[ingest] (
     * physically apply the pending tombstones. Without it, at-least-once
     * re-deliveries grow the store's row count (and so its scan cost and
     * shuffle width) past the unique-key count forever. A path store
-    * swaps directories crash-safely (Layout.rewriteInPlaceChecked) and
-    * returns (filesBefore, filesAfter); a bucketed table swaps through
-    * a staging table and returns (rowsBefore, rowsAfter). A
-    * never-written store is a no-op. Single maintenance writer assumed;
-    * schedule it with the sidecar rebuild.
+    * stages the rewrite of a snapshot of its files in a sibling, moves
+    * it in and deletes exactly those inputs ([[StoreLayout.Path]]'s
+    * `compact`: no directory rename, no abort, any crash state answers
+    * every probe as before; the Bloom sidecar the rewrite voids goes
+    * first) and returns (filesBefore, filesAfter); a
+    * bucketed table swaps through a staging table and returns
+    * (rowsBefore, rowsAfter). A never-written store is a no-op. Single
+    * maintenance writer assumed; schedule it with the sidecar rebuild.
     */
   def compactStore(spark: SparkSession, layout: L,
       targetFileBytes: Long = StoreLayout.TargetFileBytes): (Long, Long) =
@@ -69,9 +72,9 @@ abstract class KeyStore[L <: StoreLayout] private[ingest] (
     layout.buildSidecar(spark, spec, fpp, numShards)
 
   /** Inline upkeep driven by [[StoreStats]]: compaction when
-    * `compactionDue`, followed by a sidecar rebuild on a store above
-    * the planner's broadcast threshold (`spark.sql.autoBroadcastJoinThreshold`)
-    * and the voided sidecar's removal below it; a rebuild alone when
+    * `compactionDue` (which removes the sidecar it voids), followed by
+    * a sidecar rebuild on a store above the planner's broadcast
+    * threshold (`spark.sql.autoBroadcastJoinThreshold`); a rebuild alone when
     * `sidecarStale`, which only a store above the threshold reads. A
     * store under the threshold keeps no sidecar: its plain probe is
     * already one broadcast join. Idempotent — the signals re-check on

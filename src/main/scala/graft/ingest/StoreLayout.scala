@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.Exec
+
 /** What a cross-run store keys on — everything the [[StoreLayout]]
   * needs from a store besides its key derivation and verify step.
   *
@@ -29,7 +31,7 @@ private[ingest] final case class KeySpec(label: String,
   * or a bucketed catalog table ([[StoreLayout.Bucketed]]). The layout
   * owns every decision that depends on it — the live store frame minus
   * tombstones, the data / covered / residual files, the Bloom sidecar
-  * manifest, the append, the compaction swap, the sidecar build, the
+  * manifest, the append, the compaction, the sidecar build, the
   * persisted hash form and stride, and the [[StoreStats]] report — so
   * each store operation exists once ([[KeyStore]]) and each store only
   * supplies a [[KeySpec]], its key derivation and its verify step.
@@ -43,19 +45,20 @@ private[ingest] final case class KeySpec(label: String,
   *    POINT: every probe subtracts live tombstones from the store side
   *    of its join, so a retracted key reports never-seen from the next
   *    query on — no rewrite needed first.
-  *  phase 2 — the next compaction physically drops tombstoned rows (the
-  *    rewrite's transform anti-joins a SNAPSHOT of the tombstone files)
-  *    and then clears exactly that snapshot (path form) or drops the
-  *    old table directory wholesale (bucketed form's swap).
+  *  phase 2 — the next compaction physically drops tombstoned rows (it
+  *    anti-joins a SNAPSHOT of the tombstone files) and then clears
+  *    exactly that snapshot (path form) or drops the old table
+  *    directory wholesale (bucketed form's swap).
   * Crash anywhere between the phases re-applies: tombstones are durable,
   * probes keep subtracting, the next compaction drops the rows again.
   * Tombstones appended DURING a compaction survive it. RE-ADMISSION
   * after a retraction needs a compaction in between: a key re-recorded
-  * while its tombstone is still pending stays masked until the
-  * compaction clears it (single maintenance writer, the family's
-  * standing assumption). Bloom sidecars need no coordination: a bloom
-  * "maybe" only routes rows into the exact join, which subtracts
-  * tombstones.
+  * while its tombstone is still pending stays masked until a
+  * compaction clears it — on a path store, a re-record that lands
+  * while that compaction runs is re-admitted when it ends (single
+  * maintenance writer, the family's standing assumption). Bloom
+  * sidecars need no coordination: a bloom "maybe" only routes rows
+  * into the exact join, which subtracts tombstones.
   *
   * ── Bloom sidecar ─────────────────────────────────────────────────
   * A Bloom filter over the store's probe column rides along with the
@@ -86,7 +89,9 @@ sealed trait StoreLayout {
   /** The Bloom sidecar manifest ([[StoreLayout.ShardedSidecar]]). */
   private[graft] def manifest(spark: SparkSession): HPath
 
-  /** Create the store if absent (a path store needs nothing). */
+  /** Create the store if absent (a path store needs nothing, but
+    * refuses a directory-swap leftover).
+    */
   private[ingest] def ensure(spark: SparkSession, spec: KeySpec): Unit
 
   /** The persisted (hash form, stride); md5 and 1 where never declared
@@ -109,7 +114,9 @@ sealed trait StoreLayout {
   protected def append(rows: DataFrame, spec: KeySpec): Unit
 
   /** Maintenance: rewrite the store to one row per distinct row minus
-    * a snapshot of the live tombstones (phase 2 of the takedown).
+    * a snapshot of the live tombstones (phase 2 of the takedown). The
+    * rewrite voids the Bloom sidecar and leaves none: a path store
+    * removes it first, a bucketed swap drops it with the old table.
     */
   private[ingest] def compact(spark: SparkSession, spec: KeySpec,
       targetFileBytes: Long): (Long, Long)
@@ -121,7 +128,7 @@ sealed trait StoreLayout {
 
   protected def fromDisk(df: DataFrame, spec: KeySpec): DataFrame
 
-  private def fs(spark: SparkSession): FileSystem =
+  protected def fs(spark: SparkSession): FileSystem =
     dataDir(spark).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def tombstones(spark: SparkSession,
@@ -191,17 +198,18 @@ sealed trait StoreLayout {
   }
 
   /** Mark rows seen: persist the form and stride, then one append of
-    * the distinct rows. The pre-append localCheckpoint pins the batch's
-    * rows first — a caller passing a probe's lazy output has the store
-    * in its plan, and an append whose input scans the store it extends
-    * would bank on the listing resolving before new files land.
+    * the distinct rows. The pre-append barrier ([[Exec.materialize]])
+    * pins the batch's rows first — a caller passing a probe's lazy
+    * output has the store in its plan, and an append whose input scans
+    * the store it extends would bank on the listing resolving before
+    * new files land.
     */
   private[ingest] def record(spec: KeySpec, form: String, stride: Int,
       rows: DataFrame): Unit = {
     commitMeta(rows.sparkSession, spec, form, stride)
-    val mat = toDisk(rows, spec).distinct().localCheckpoint(true)
+    val mat = Exec.materialize(toDisk(rows, spec).distinct())
     try append(mat, spec)
-    finally mat.unpersist()
+    finally Exec.release(mat)
   }
 
   /** Phase 1 of the takedown: durably append `rows` (in `spec`'s
@@ -233,11 +241,11 @@ sealed trait StoreLayout {
   }
 
   /** Inline self-maintenance driven by the [[StoreStats]] signals:
-    * compaction when `compactionDue`, then the sidecar the rewritten
-    * file names voided is rebuilt on a store above the broadcast
-    * threshold ([[StoreStats.sidecarPays]]) and removed below it; a
-    * rebuild alone when `sidecarStale`. A store under the threshold
-    * never gains a sidecar here — its plain probe is one broadcast join.
+    * compaction when `compactionDue`, which leaves no sidecar, then a
+    * rebuild on a store above the broadcast threshold
+    * ([[StoreStats.sidecarPays]]); a rebuild alone when `sidecarStale`.
+    * A store under the threshold never gains a sidecar here — its
+    * plain probe is one broadcast join.
     */
   private[ingest] def maintain(spark: SparkSession, spec: KeySpec): Unit = {
     ensure(spark, spec)
@@ -246,7 +254,6 @@ sealed trait StoreLayout {
       compact(spark, spec, StoreLayout.TargetFileBytes)
       if (StoreStats.sidecarPays(spark, dataBytes(spark)))
         buildSidecar(spark, spec, 0.01, 0)
-      else StoreLayout.removeSidecar(fs(spark), manifest(spark))
     } else if (st.sidecarStale) buildSidecar(spark, spec, 0.01, 0)
   }
 
@@ -269,7 +276,8 @@ object StoreLayout {
 
   /** A parquet directory store, plain appends, with its metadata in
     * siblings: `<dir>.hashform`, `<dir>.stride`, `<dir>.tombstones`,
-    * `<dir>.bloom`. A path read always plans a store-side shuffle in a
+    * `<dir>.bloom`, and a staging sibling while a staged write runs
+    * ([[stageIn]]). A path read always plans a store-side shuffle in a
     * probe join — fine while the store is small next to its batches.
     */
   final case class Path(dir: String) extends StoreLayout {
@@ -279,7 +287,18 @@ object StoreLayout {
       new HPath(dir + ".tombstones")
     private[graft] def manifest(spark: SparkSession): HPath =
       new HPath(dir + ".bloom")
-    private[ingest] def ensure(spark: SparkSession, spec: KeySpec): Unit = ()
+
+    /** Refuse the `.old` sibling an earlier release's directory-swap
+      * compaction left when it stopped mid-swap: it may hold the only
+      * copy of the store's rows, and reading past it would admit every
+      * key it holds as new. Every probe, record and compaction checks.
+      */
+    private[ingest] def ensure(spark: SparkSession, spec: KeySpec): Unit = {
+      val old = sibling(s".$CompactTag.old")
+      require(!fs(spark).exists(old), s"$old is left from an interrupted " +
+        s"directory-swap compaction: move its data files into $dir (or " +
+        s"rename it to $dir if $dir is absent), delete it, and retry")
+    }
 
     private def sibling(suffix: String) = new HPath(dir + suffix)
 
@@ -314,6 +333,7 @@ object StoreLayout {
 
     private[ingest] def commitMeta(spark: SparkSession, spec: KeySpec,
         form: String, stride: Int): Unit = {
+      ensure(spark, spec)
       if (spec.hasForms) HashForm.validate(form)
       val (curForm, curStride) = meta(spark)
       val p = dataDir(spark)
@@ -341,32 +361,80 @@ object StoreLayout {
     protected def append(rows: DataFrame, spec: KeySpec): Unit =
       rows.write.mode(SaveMode.Append).parquet(dir)
 
-    /** (filesBefore, filesAfter) of the crash-safe directory swap; a
+    /** Write `rows` into a fresh sibling `<dir>.<tag>-<uuid>` and move
+      * its part files into the store, one rename per file. A sibling,
+      * not a subdirectory: two jobs writing into one directory share its
+      * `_temporary`. Part names carry the write job's UUID, so a moved
+      * file never collides with a store file. Returns the moved files.
+      * A crash before the last rename leaves the staging sibling and a
+      * store holding some of `rows` on top of what it held; no
+      * directory is ever renamed.
+      */
+    private[ingest] def stageIn(rows: DataFrame, tag: String): Seq[HPath] = {
+      val f = fs(rows.sparkSession)
+      val store = f.makeQualified(dataDir(rows.sparkSession))
+      val stage = new HPath(store.getParent,
+        s"${store.getName}.$tag-${java.util.UUID.randomUUID()}")
+      rows.write.parquet(stage.toString)
+      try {
+        f.mkdirs(store) // a first-ever write: the store may not exist yet
+        storeDataFiles(f, stage).map { p =>
+          val to = new HPath(store, p.getName)
+          require(f.rename(p, to), s"could not move $p into $store")
+          to
+        }
+      } finally f.delete(stage, true)
+    }
+
+    /** (filesBefore, filesAfter). Snapshot the data files and the
+      * tombstone files, stage one row per distinct row of exactly those
+      * data files minus the snapshot's tombstones (coalesced to
+      * ⌈bytes / targetFileBytes⌉ files, no shuffle) and move it in
+      * ([[stageIn]]), delete exactly the input files, then clear exactly
+      * the tombstone snapshot. Files appended meanwhile are not inputs,
+      * so they survive untouched, as do tombstones appended meanwhile.
+      * The Bloom sidecar goes before anything moves in: the moved files
+      * carry new names, so a sidecar still covering the inputs would
+      * route them into its residual leg, which a probe broadcasts, and
+      * the rewrite voids it anyway ([[maintain]] rebuilds it). Every
+      * crash state — staged but not moved, half moved, inputs half
+      * deleted, snapshot not cleared — then holds a superset of the
+      * live rows with the applied tombstones still live, which every
+      * probe answers as before with the plain join, and the next pass
+      * converges. So there is no abort path and no recovery step beyond
+      * deleting the staging siblings a crashed pass left. A
       * never-written store is a no-op.
       */
     private[ingest] def compact(spark: SparkSession, spec: KeySpec,
         targetFileBytes: Long): (Long, Long) = {
-      val tombDir = tombstoneDir(spark)
-      val fs = tombDir.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(dataDir(spark))) return (0L, 0L)
-      val schema = diskSchema(spec, meta(spark)._1)
-      val snapStatuses = storeDataFileStatuses(fs, tombDir)
-      val snapshot = snapStatuses.map(_.getPath)
-      val tomb = if (snapshot.isEmpty) None
-        else Some(gatedHint(spark, readFiles(spark, schema, snapshot),
-          snapStatuses.map(_.getLen).sum))
-      val (b, a, committed) = graft.layout.Layout.rewriteInPlaceChecked(
-        spark, dir, targetFileBytes)(df =>
-        minusTombstones(df.distinct(), tomb, schema.fieldNames.toSeq))
-      // clear ONLY the snapshot (tombstones appended mid-compaction stay
-      // live for the next one), and ONLY when the swap actually
-      // installed: the rewrite's concurrent-appender guard can discard
-      // tmp and leave the store untouched, and clearing the snapshot on
-      // that abort would silently undo a durably-committed takedown. A
-      // crash before these deletes leaves applied tombstones in place —
-      // harmless (subtracting absent rows) until the next compaction.
-      if (committed) snapshot.foreach(f => fs.delete(f, false))
-      (b.toLong, a.toLong)
+      ensure(spark, spec)
+      val f = fs(spark)
+      val store = f.makeQualified(dataDir(spark))
+      if (!f.exists(store)) return (0L, 0L)
+      for (st <- f.listStatus(store.getParent)
+           if st.isDirectory &&
+             st.getPath.getName.startsWith(s"${store.getName}.$CompactTag-"))
+        f.delete(st.getPath, true)
+      removeSidecar(f, manifest(spark))
+      val tombs = storeDataFileStatuses(f, tombstoneDir(spark))
+      val inputs = storeDataFileStatuses(f, store)
+      val moved = if (inputs.isEmpty) Nil else {
+        val schema = diskSchema(spec, meta(spark)._1)
+        val tomb = if (tombs.isEmpty) None
+          else Some(gatedHint(spark,
+            readFiles(spark, schema, tombs.map(_.getPath)),
+            tombs.map(_.getLen).sum))
+        val bytes = inputs.map(_.getLen).sum
+        stageIn(minusTombstones(
+            readFiles(spark, schema, inputs.map(_.getPath)).distinct(),
+            tomb, schema.fieldNames.toSeq)
+          .coalesce(math.max(1L,
+            (bytes + targetFileBytes - 1) / targetFileBytes).toInt),
+          CompactTag)
+      }
+      inputs.foreach(st => f.delete(st.getPath, false))
+      tombs.foreach(st => f.delete(st.getPath, false))
+      (inputs.size.toLong, moved.size.toLong)
     }
 
     protected def diskSchema(spec: KeySpec, form: String): StructType =
@@ -463,6 +531,7 @@ object StoreLayout {
       */
     private[ingest] def commitMeta(spark: SparkSession, spec: KeySpec,
         form: String, stride: Int): Unit = {
+      ensure(spark, spec)
       if (spec.hasForms) HashForm.validate(form)
       val (curForm, curStride) = meta(spark)
       if (!spark.catalog.tableExists(table))
@@ -484,10 +553,12 @@ object StoreLayout {
         .bucketBy(bucketsOf(rows.sparkSession), spec.bucketCol)
         .sortBy(spec.bucketCol).format("parquet").saveAsTable(table)
 
-    /** (rowsBefore, rowsAfter) of the staging-table swap — the directory
-      * swap cannot apply, the catalog owns the table location. The
-      * tombstones are read INSIDE the transform, after the entry-time
-      * recovery, so a half-swapped table's metadata is never consulted.
+    /** (rowsBefore, rowsAfter) of the staging-table swap ([[swap]]). A
+      * bucketed table cannot take the path store's moved-in files: the
+      * catalog owns its location and its bucket layout, so the rewrite
+      * is a new table. The tombstones are read INSIDE the transform,
+      * after the entry-time recovery, so a half-swapped table's
+      * metadata is never consulted.
       */
     private[ingest] def compact(spark: SparkSession, spec: KeySpec,
         targetFileBytes: Long): (Long, Long) =
@@ -571,6 +642,9 @@ object StoreLayout {
 
   private[ingest] val TargetFileBytes: Long = 128L << 20
 
+  /** The staging-sibling tag of a path store's compaction. */
+  private val CompactTag = "compact"
+
   /** Ceiling (in on-disk parquet bytes) up to which a tombstone /
     * retraction backlog rides a broadcast into its anti-join. Above it
     * the probe falls back to a plain (shuffle) anti-join — for the
@@ -638,9 +712,9 @@ object StoreLayout {
     * record.
     */
   private[graft] def appendTombstones(rows: DataFrame, dir: HPath): Unit = {
-    val mat = rows.distinct().localCheckpoint(true)
+    val mat = Exec.materialize(rows.distinct())
     try mat.write.mode(SaveMode.Append).parquet(dir.toString)
-    finally mat.unpersist()
+    finally Exec.release(mat)
   }
 
   private[ingest] def minusTombstones(store: DataFrame,

@@ -236,7 +236,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     * crawl-frontier-sized backlog drains across cycles at a bounded
     * per-cycle cost instead of turning cycle one into an unbounded
     * collect+process marathon. A directory too large to even LIST
-    * belongs on the streaming path (Streams.fileStream) or should be
+    * belongs on the streaming path (Streams.entityStream) or should be
     * date-partitioned into per-day watch dirs — a flat 10⁷-file dir is
     * a layout bug no poller can absorb.
     */

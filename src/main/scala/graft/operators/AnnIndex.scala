@@ -224,7 +224,7 @@ object AnnIndex {
   // while index ROWS are at-least-once (the appender's documented
   // replay), so across a crash-retrain-replay interleaving the stats
   // can transiently count a replayed batch twice — precisely the rows
-  // the maintenance `dropDuplicates` reclaim owns; the next rebuild
+  // the rebuild drops as exact replay duplicates; the next rebuild
   // re-seeds stats from the cleaned layout and exactness returns
   // (self-healing, like the rows themselves). Pending RETRACTIONS are
   // subtracted from the rebuild's vectors but not from the maintained
@@ -308,8 +308,13 @@ object AnnIndex {
     * mid-retrain stays live for the next rewrite: the stores'
     * snapshot-bounded clear, applied here), step the centroids from
     * (generation, live vectors), build and install the new generation.
-    * The install is unconditional (fresh uuid directory + manifest
-    * rename — no abort path), so the applied snapshot can be cleared.
+    * An appender's replayed batch re-appends rows identical to the
+    * ones it already landed; the rebuild reclaims them with no pass of
+    * its own, because every assignment it runs ([[KMeans.assign]] in
+    * the step and the stats, [[assignByCosine]] in the layout write)
+    * keeps one row per `vec_id` through its per-`vec_id` window. The
+    * install is unconditional (fresh uuid directory + manifest rename
+    * — no abort path), so the applied snapshot can be cleared.
     */
   private def rebuild(spark: SparkSession, root: String,
       lloydStats: Boolean)(
@@ -859,8 +864,8 @@ object AnnIndex {
     val e = vecs.select("vec_id", "v")
     val seedIds = e.select("vec_id").orderBy("vec_id").limit(k)
       .collect().map(_.getLong(0)).toSeq
-    val cb = Pq.train(e, seedIds, m, dim, iters)
-      .localCheckpoint(true) // one training, two consumers below
+    // one training, two consumers below
+    val cb = Exec.materialize(Pq.train(e, seedIds, m, dim, iters))
     try {
       cb.coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(pqCodebookDir(dir))
@@ -889,7 +894,7 @@ object AnnIndex {
       // the manifest is the commit point — codes + codebook are fully
       // written before the covered watermark installs
       writePqManifest(fs, dir, covered.map(_._1))
-    } finally cb.unpersist()
+    } finally Exec.release(cb)
   }
 
   /** The generation's PQ codebook: (sub, code, centroid) — m×k rows,

@@ -1083,14 +1083,15 @@ object Streams {
     * [[curationFeed]] — committed batches skip on replay), and
     * the per-group manifest accumulates in
     * `outDir/_export_manifest/batch=<id>` via the versioned-snapshot
-    * protocol of [[maintainTermStats]] (merged from the COMMITTED
-    * data read-back, previous version retained for concurrent
-    * readers). Because selection is per-row content-addressed, the
-    * streamed export over ANY micro-batching of a corpus selects
-    * exactly the one-shot [[graft.operators.CorpusExport.materialize]]
-    * document set into the same shards — including the nested-sample
-    * property: raising a threshold later keeps every already-exported
-    * row eligible. Read the manifest with [[readExportManifest]].
+    * commit of [[maintainTermStats]] ([[commitSnapshot]]; merged from
+    * the COMMITTED data read-back, previous version retained for
+    * concurrent readers). Because selection is per-row
+    * content-addressed, the streamed export over ANY micro-batching of
+    * a corpus selects exactly the one-shot
+    * [[graft.operators.CorpusExport.materialize]] document set into
+    * the same shards — including the nested-sample property: raising a
+    * threshold later keeps every already-exported row eligible. Read
+    * the manifest with [[readExportManifest]].
     */
   def exportMixStream(docs: DataFrame, groupCol: String, idCol: String,
       thresholds: Seq[(String, Long)], outDir: String,
@@ -1141,15 +1142,9 @@ object Streams {
             .write.partitionBy("shard").parquet(dataDir.toString)
         }
         // manifest: accumulated from the COMMITTED read-back (what
-        // landed, not what the plan promised), versioned-snapshot
-        // protocol — replayed committed batches skip, the previous
-        // version is retained for concurrent readers
-        val mroot = new org.apache.hadoop.fs.Path(
-          s"$outDir/_export_manifest")
-        val mtarget = new org.apache.hadoop.fs.Path(mroot,
-          s"batch=$batchId")
-        val committedM = committedVersions(fs, mroot)
-        if (!committedM.contains(batchId)) {
+        // landed, not what the plan promised)
+        commitSnapshot(spark, new org.apache.hadoop.fs.Path(
+            s"$outDir/_export_manifest"), batchId) { prev =>
           val th = thresholds.toDF("group", "threshold_ppm")
           // explicit schema: a zero-survivor batch commits a
           // data-file-less directory schema inference cannot read
@@ -1162,20 +1157,10 @@ object Streams {
             .join(broadcast(th), Seq("group"), "right_outer")
             .select(col("group"), col("threshold_ppm"),
               coalesce(col("n_selected"), lit(0L)).as("n_selected"))
-          val merged = committedM.filter(_ < batchId).sorted.lastOption
-            match {
-              case Some(v) => landed.unionByName(
-                  spark.read.parquet(new org.apache.hadoop.fs.Path(
-                    mroot, s"batch=$v").toString))
-                .groupBy("group", "threshold_ppm")
-                .agg(sum(col("n_selected")).as("n_selected"))
-              case None => landed
-            }
-          fs.delete(mtarget, true)
-          merged.coalesce(1).write.parquet(mtarget.toString)
-          committedVersions(fs, mroot).filter(_ < batchId - 1).foreach(
-            v => fs.delete(new org.apache.hadoop.fs.Path(
-              mroot, s"batch=$v"), true))
+          prev.fold(landed)(p => landed.unionByName(p)
+              .groupBy("group", "threshold_ppm")
+              .agg(sum(col("n_selected")).as("n_selected")))
+            .coalesce(1)
         }
         ()
       }
@@ -1186,18 +1171,17 @@ object Streams {
     */
   def readExportManifest(spark: SparkSession,
       outDir: String): DataFrame =
-    readTermStats(spark, s"$outDir/_export_manifest")
+    readMergedSnapshot(spark, s"$outDir/_export_manifest", "export manifest")
 
   /** The shared versioned-snapshot maintenance loop behind
     * [[maintainTermStats]], [[maintainCountMin]], and
     * [[maintainQuantileHistogram]]: per batch,
     * aggregate the micro-batch (`perBatch`), merge it with the latest
-    * snapshot committed BEFORE this batch (`mergeWith` — a replay of
-    * batch N must not merge into N's own output), and commit to
-    * `batch=<id>` (_SUCCESS = commit point), retaining the
-    * immediately-previous version for concurrent readers. Replayed
-    * already-committed batches skip the snapshot write — exactly-once
-    * snapshots on an at-least-once stream — but the batch is still
+    * snapshot committed BEFORE this batch (`mergeWith`), and commit
+    * it through [[commitSnapshot]] — the step the streamed export's
+    * manifest shares. Replayed already-committed batches skip the
+    * snapshot write — exactly-once snapshots on an at-least-once
+    * stream — but the batch is still
     * CONSUMED (an empty foreachPartition pass): a maintainer whose
     * streaming plan carries a stateful operator (the funnel fold)
     * must commit its state stores on EVERY micro-batch, and Spark
@@ -1215,36 +1199,43 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        val target = new org.apache.hadoop.fs.Path(root, s"batch=$batchId")
-        val committed = committedVersions(fs, root)
-        if (!committed.contains(batchId)) { // replayed & committed → skip
+        val wrote = commitSnapshot(spark, root, batchId) { prev =>
           val batchDf = perBatch(batch)
-          val prev = committed.filter(_ < batchId).sorted.lastOption
-          val merged = prev match {
-            case Some(v) =>
-              mergeWith(spark.read
-                .parquet(new org.apache.hadoop.fs.Path(root, s"batch=$v")
-                  .toString), batchDf)
-            case None => batchDf
-          }
-          fs.delete(target, true) // partial leftovers from a crash
-          merged.write.parquet(target.toString) // _SUCCESS = commit
-          // retain the immediately-previous committed version: a reader
-          // that resolved it as latest just before this commit can still
-          // finish its scan (single-writer, but readers are concurrent)
-          committedVersions(fs, root).filter(_ < batchId - 1).foreach(v =>
-            fs.delete(new org.apache.hadoop.fs.Path(root, s"batch=$v"),
-              true))
-        } else {
-          // skip the write but DRAIN the batch: a stateful upstream
-          // commits its state stores only when every partition's
-          // iterator is exhausted, even on a replayed batch
-          batch.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
+          prev.fold(batchDf)(mergeWith(_, batchDf))
         }
+        // a replayed committed batch skips the write but DRAINS the
+        // batch: a stateful upstream commits its state stores only when
+        // every partition's iterator is exhausted, even on a replay
+        if (!wrote)
+          batch.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
         ()
       }
       .start()
+
+  /** The versioned-snapshot commit under `root`: unless `batch=<id>` is
+    * already committed (a replay — returns false), build the snapshot
+    * from the latest version committed BEFORE this batch (a replay of
+    * batch N must not merge into N's own output; None for the first),
+    * write it to `batch=<id>` (`_SUCCESS` = commit point), then delete
+    * versions older than id − 1: the immediately-previous version stays
+    * for a reader that resolved it as latest just before this commit
+    * (single writer, concurrent readers).
+    */
+  private def commitSnapshot(spark: SparkSession,
+      root: org.apache.hadoop.fs.Path, batchId: Long)(
+      build: Option[DataFrame] => DataFrame): Boolean = {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val committed = committedVersions(fs, root)
+    if (committed.contains(batchId)) return false
+    def version(v: Long) = new org.apache.hadoop.fs.Path(root, s"batch=$v")
+    val merged = build(committed.filter(_ < batchId).sorted.lastOption
+      .map(v => spark.read.parquet(version(v).toString)))
+    fs.delete(version(batchId), true) // partial leftovers from a crash
+    merged.write.parquet(version(batchId).toString)
+    committedVersions(fs, root).filter(_ < batchId - 1)
+      .foreach(v => fs.delete(version(v), true))
+    true
+  }
 
   /** Latest committed (term, df) snapshot maintained by
     * [[maintainTermStats]]; empty schema-less read errors are the
@@ -1362,10 +1353,11 @@ object Streams {
               rejectSampleSlots, pendingRelease)(batch, batchId)
               .write.mode("overwrite").parquet(target.toString)
             case None =>
-              val fresh = stages.foldLeft(batch)((d, s) => s.check(d))
-                .localCheckpoint(true) // one evaluation feeds the write
+              // one evaluation feeds the write
+              val fresh = graft.operators.Exec.materialize(
+                stages.foldLeft(batch)((d, s) => s.check(d)))
               try fresh.write.mode("overwrite").parquet(target.toString)
-              finally fresh.unpersist()
+              finally graft.operators.Exec.release(fresh)
           }
         }
         val committed = spark.read
@@ -1988,14 +1980,11 @@ object Streams {
     * between retrains (standard IVF operation).
     *
     * Appends are idempotent per Spark's streaming-sink contract only at
-    * the file level — a replayed batch re-appends its rows, so pair a
-    * periodic `Layout.rewriteInPlace(generation.dir)(_.dropDuplicates(
-    * "vec_id"))` run with the retrain schedule if exact-once listing matters
-    * downstream: rewriteInPlace recurses into the `cid=<n>` partition
-    * leaves (each with its own crash-safe swap), and a replayed vector
-    * re-appends into the same `cid` leaf by construction —
-    * single-assignment rule — so the per-leaf `dropDuplicates("vec_id")`
-    * is exactly the global one.
+    * the file level — a replayed batch re-appends its rows, each equal
+    * in `(vec_id, v)` to its first copy. Every
+    * [[graft.operators.AnnIndex.retrain]] (or `retrainFromStats`)
+    * rebuilds the generation from one row per `(vec_id, v)`, so the
+    * retrain schedule is the reclaim schedule.
     *
     * Strand guard: a retrain concurrent with an IN-FLIGHT batch would
     * leave that batch's rows in the predecessor generation (the
@@ -2009,9 +1998,9 @@ object Streams {
     * served — only the current generation is). Appending twice is the
     * family's at-least-once posture; q40/q85-style probes dedup
     * nothing because the replayed rows land in the SAME (vec_id, v)
-    * identity the maintenance `rewriteInPlace(dropDuplicates)` pass
-    * reclaims. An install landing after this check but before the
-    * checkpoint commit can still strand (vanishingly narrow window);
+    * identity the next retrain drops. An install landing after this
+    * check but before the checkpoint commit can still strand
+    * (vanishingly narrow window);
     * production deployments additionally quiesce the appender around
     * retrains — the family's single-maintenance-writer posture.
     *

@@ -130,10 +130,25 @@ class IngestSpec extends SparkSuite {
     val n = graft.ingest.DedupStore.newUnique(docs, "text", "doc_id", store)
     assert(n.count() === 1) // empty store ⇒ everything is new
     // maintenance on the same zero-data-file state: a no-op, not an
-    // UNABLE_TO_INFER_SCHEMA error (distinct() bypasses the
-    // already-compact early return, so this exercises rewriteInPlace's
-    // own zero-file guard)
+    // UNABLE_TO_INFER_SCHEMA error (the compaction reads its explicit
+    // input file list, and an empty list stages nothing)
     assert(graft.ingest.DedupStore.compactStore(spark, store) === ((0, 0)))
+  }
+
+  test("store barriers free their blocks: recordHashes and retract on " +
+    "a path store leave no persisted RDD behind") {
+    import spark.implicits._
+    val D = graft.ingest.DedupStore
+    val sc = spark.sparkContext
+    val store = tmpDir("dedupstore-barrier") + "/hashes"
+    val docs = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
+    val before = sc.getPersistentRDDs.keySet
+    D.recordHashes(docs, "text", store)
+    D.retract(docs.filter(col("doc_id") === 1L), "text", store)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"store barriers left RDDs cached: $leaked")
+    assert(D.newUnique(docs, "text", "doc_id", store)
+      .select("doc_id").as[Long].collect().toSeq === Seq(1L))
   }
 
   test("cross-run content dedup: staged record (no localCheckpoint) is " +

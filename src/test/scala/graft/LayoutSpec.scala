@@ -434,32 +434,29 @@ class LayoutSpec extends SparkSuite {
     assert(a === b && a.length === 1000)
   }
 
-  test("compaction merges a micro-batched directory, preserves rows, " +
-    "and no-ops when already compact") {
+  test("path-store compaction merges a micro-batched store into one " +
+    "file, keeps one row per key, and leaves no staging sibling") {
     import spark.implicits._
+    val D = graft.ingest.DedupStore
     val dir = java.nio.file.Files.createTempDirectory("compact")
       .resolve("t").toString
-    // 12 one-row micro-batch appends = 12 tiny files
-    for (i <- 1 to 12)
-      Seq((i.toLong, s"row$i")).toDF("id", "s")
-        .coalesce(1).write.mode("append").parquet(dir)
+    // 12 one-row micro-batch records plus an at-least-once re-record
+    for (i <- (1 to 12) :+ 1)
+      D.recordHashes(Seq((i.toLong, s"row$i")).toDF("doc_id", "text"),
+        "text", dir)
     def dataFiles = new java.io.File(dir).listFiles.toSeq
       .map(_.getName).filter(n => !n.startsWith("_") && !n.startsWith("."))
-    assert(dataFiles.size === 12)
-    val (before, after) = Layout.compact(spark, dir, 1L << 20)
-    assert(before === 12 && after === 1, s"($before, $after)")
+    def hashes = spark.read.parquet(dir).as[String].collect().toSeq
+    val recorded = hashes.distinct.sorted
+    assert(dataFiles.size === 13 && recorded.size === 12)
+    assert(D.compactStore(spark, dir, 1L << 20) === ((13L, 1L)))
     assert(dataFiles.size === 1)
-    // swap is complete: no tmp/old siblings left behind
+    assert(hashes.sorted === recorded, "compaction changed the key set")
     val parent = new java.io.File(dir).getParentFile.listFiles.map(_.getName)
-    assert(!parent.exists(_.contains("compact.")), parent.toSeq)
-    // content identical
-    val got = spark.read.parquet(dir).as[(Long, String)]
-      .collect().sortBy(_._1).toSeq
-    assert(got === (1 to 12).map(i => (i.toLong, s"row$i")))
-    // second pass: already compact → untouched (same file name survives)
-    val fileBefore = dataFiles
-    assert(Layout.compact(spark, dir, 1L << 20) === ((1, 1)))
-    assert(dataFiles === fileBefore)
+    assert(!parent.exists(_.startsWith("t.compact-")), parent.toSeq)
+    // a second pass rewrites the one file into one file, same keys
+    assert(D.compactStore(spark, dir, 1L << 20) === ((1L, 1L)))
+    assert(hashes.sorted === recorded)
   }
 
   test("date-partitioned fact scans prune to the filtered partition") {
@@ -615,91 +612,156 @@ class LayoutSpec extends SparkSuite {
     assert(hits.map(_.getInt(1)).toSet.subsetOf(probed))
   }
 
-  test("compaction rescues a file appended between the race re-list " +
-    "and the retire rename (recovered from the crash state)") {
+  test("path-store compaction crash-state law: staged but not moved, " +
+    "half moved, and moved with inputs half deleted each answer every " +
+    "probe as before without broadcasting a moved file, and the next " +
+    "compactStore converges (exact, exact with a Bloom sidecar, and " +
+    "span stores)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact-late")
-      .resolve("t").toString
-    for (i <- 1 to 4)
-      Seq((i.toLong, s"r$i")).toDF("id", "s")
-        .coalesce(1).write.mode("append").parquet(dir)
-    def names(d: String) = new java.io.File(d).listFiles.toSeq
-      .map(_.getName).filter(n => !n.startsWith("_") && !n.startsWith("."))
-    val names0 = names(dir)
-    // reconstruct the worst-case swap state: install already happened,
-    // but the process died BEFORE the late-file rescue — the retired
-    // copy holds the 4 compaction inputs PLUS one file an appender
-    // slipped in after the race re-list, and the manifest (written
-    // before the retire rename) records which 4 were inputs
-    val inst = dir + ".inst"
-    spark.read.parquet(dir).coalesce(1).write.parquet(inst)
-    val f = new java.io.File(dir)
-    val old = new java.io.File(dir + ".compact.old")
-    assert(f.renameTo(old) && new java.io.File(inst).renameTo(f))
-    Seq((99L, "late")).toDF("id", "s")
-      .coalesce(1).write.mode("append").parquet(old.getPath)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir + ".compact.names"),
-      names0.sorted.mkString("\n").getBytes("UTF-8"))
-    // next maintenance invocation: rescue the late file into the
-    // installed dir (NOT the retired originals — that would duplicate
-    // every row), then compact normally
-    val (before, after) = Layout.compact(spark, dir, 1L << 20)
-    assert(before === 2 && after === 1, s"($before, $after)")
-    assert(!old.exists)
-    assert(!new java.io.File(dir + ".compact.names").exists)
-    val got = spark.read.parquet(dir).as[(Long, String)]
-      .collect().sortBy(_._1).toSeq
-    assert(got === (1 to 4).map(i => (i.toLong, s"r$i")) :+ (99L, "late"))
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join,
+      LogicalPlan}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.hadoop.fs.Path
+    val D = graft.ingest.DedupStore
+    val S = graft.ingest.SpanStore
+    def text(i: Int) = (1 to 12).map(j => s"w${i * 31 + j}").mkString(" ")
+    val docs = (1 to 30).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
+    val gone = docs.filter(col("doc_id") <= 3L)
+    val probe = docs.filter(col("doc_id") <= 6L || col("doc_id") > 27L)
+      .union(Seq((99L, text(99))).toDF("doc_id", "text"))
+    def ids(df: DataFrame): Seq[Long] =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    // the names of the files a plan scans under a broadcast join hint
+    def broadcastFiles(df: DataFrame): Set[String] = {
+      def scanned(p: LogicalPlan): Seq[String] = p.collect {
+        case l: LogicalRelation => l.relation match {
+          case r: HadoopFsRelation =>
+            r.location.inputFiles.map(new Path(_).getName).toSeq
+          case _ => Nil
+        }
+      }.flatten
+      df.queryExecution.optimizedPlan.collect {
+        case j: Join =>
+          def forced(h: Option[org.apache.spark.sql.catalyst.plans.logical
+            .HintInfo]) = h.exists(_.strategy.contains(BROADCAST))
+          (if (forced(j.hint.leftHint)) scanned(j.left) else Nil) ++
+            (if (forced(j.hint.rightHint)) scanned(j.right) else Nil)
+      }.flatten.toSet
+    }
+    // (store, key column, with a sidecar, record, retract, probe)
+    val exactProbe = (st: String) => D.newUnique(probe, "text", "doc_id", st)
+    val stores: Seq[(String, String, Boolean, (DataFrame, String) => Unit,
+        String => Unit, String => DataFrame)] = Seq(
+      ("exact", "content_hash", false, D.recordHashes(_, "text", _),
+        D.retract(gone, "text", _), exactProbe),
+      ("exact with sidecar", "content_hash", true,
+        D.recordHashes(_, "text", _), D.retract(gone, "text", _),
+        exactProbe),
+      ("span", "h", false, S.recordWindows(_, "text", "doc_id", _),
+        S.retract(gone, "text", "doc_id", _),
+        st => S.newSpanUnique(probe, "text", "doc_id", st)))
+    for ((label, key, sidecar, record, retract, answer) <- stores;
+         state <- Seq("staged", "half moved", "half deleted")) {
+      val parent = java.nio.file.Files.createTempDirectory("compact-crash")
+      val dir = parent.resolve("s").toString
+      val store = new Path(dir)
+      val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+      def files(d: String) =
+        graft.ingest.StoreLayout.storeDataFiles(fs, new Path(d))
+      def keys(paths: Seq[Path]): DataFrame =
+        spark.read.parquet(paths.map(_.toString): _*).select(key)
+      def compact(target: Long) =
+        if (key == "h") S.compactStore(spark, dir, target)
+        else D.compactStore(spark, dir, target)
+      // three appends, one of them an at-least-once re-record
+      record(docs.filter(col("doc_id") <= 15L), dir)
+      record(docs.filter(col("doc_id") > 15L), dir)
+      record(docs.filter(col("doc_id") <= 10L), dir)
+      if (sidecar) assert(D.buildBloomSidecar(spark, dir) > 0L)
+      retract(dir)
+      val before = ids(answer(dir))
+      val inputs = files(dir)
+      val tombs = files(dir + ".tombstones")
+      assert(inputs.size >= 2 && tombs.nonEmpty)
+      val want = keys(inputs).distinct()
+        .join(keys(tombs), Seq(key), "left_anti")
+        .collect().map(_.get(0).toString).sorted.toSeq
+      // crash a real compaction right after its staged output commits,
+      // one file per shuffle partition (no AQE coalescing, 1-byte target)
+      val confs = Seq(
+        "spark.sql.sources.commitProtocolClass" ->
+          classOf[CrashAfterCompactionStage].getName,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val crash = try intercept[Exception](compact(1L))
+        finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      assert(Iterator.iterate[Throwable](crash)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains(
+          CrashAfterCompactionStage.Message)), crash)
+      val stages = parent.toFile.list().filter(_.startsWith("s.compact-"))
+      assert(stages.length === 1)
+      val staged = files(parent.resolve(stages.head).toString)
+      assert(staged.size >= 2, s"$label: staged $staged")
+      def moveIn(ps: Seq[Path]): Unit = ps.foreach(p =>
+        assert(fs.rename(p, new Path(store, p.getName))))
+      state match {
+        case "staged" => ()
+        case "half moved" => moveIn(staged.take(staged.size / 2))
+        case "half deleted" =>
+          moveIn(staged)
+          inputs.take(inputs.size / 2).foreach(fs.delete(_, false))
+      }
+      val moved = files(dir).map(_.getName).toSet --
+        inputs.map(_.getName)
+      val crashed = answer(dir)
+      assert(ids(crashed) === before, s"$label/$state: a probe changed")
+      assert((broadcastFiles(crashed) intersect moved).isEmpty,
+        s"$label/$state: the probe broadcasts moved files")
+      compact(1L << 20)
+      val got = keys(files(dir)).collect().map(_.get(0).toString)
+        .sorted.toSeq
+      assert(got === want,
+        s"$label/$state: not one row per key minus the applied tombstones")
+      assert(files(dir + ".tombstones").isEmpty,
+        s"$label/$state: the applied tombstones were not cleared")
+      val left = parent.toFile.list().filter(_.startsWith("s.compact-"))
+      assert(left.isEmpty, s"$label/$state: staging left: ${left.toSeq}")
+      assert(ids(answer(dir)) === before,
+        s"$label/$state: the compaction changed a probe")
+    }
   }
 
-  test("rewriteInPlace on a partitionBy root recurses into the leaves: " +
-    "per-leaf dedup, partition column intact, crashed leaf restored, " +
-    "mixed layout refused") {
+  test("a path store an interrupted directory-swap compaction left " +
+    "behind (its `.compact.old` sibling) is refused by probes, records " +
+    "and compactions instead of reading as empty") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("part-rewrite")
-      .resolve("idx").toString
-    val rows = Seq((1L, 10, "a"), (2L, 10, "b"), (3L, 20, "c"))
-    rows.toDF("vec_id", "cid", "s")
-      .write.partitionBy("cid").parquet(root)
-    // a replayed append lands in the same cid leaf (single assignment
-    // rule) — duplicate vec_ids inside cid=10 and cid=20
-    rows.toDF("vec_id", "cid", "s")
-      .write.mode("append").partitionBy("cid").parquet(root)
-    assert(spark.read.parquet(root).count() === 6)
-    // the documented maintenance call, against the ROOT — must not be
-    // the empty-root (0,0) no-op
-    val (before, after) = Layout.rewriteInPlace(spark, root, 1L << 20)(
-      _.dropDuplicates("vec_id"))
-    assert(before > 0, "root call saw zero files — silent no-op is back")
-    assert(after <= before)
-    val got = spark.read.parquet(root)
-      .select("vec_id", "cid", "s").as[(Long, Int, String)]
-      .collect().sortBy(_._1).toSeq
-    assert(got === rows, s"got $got") // rows deduped, cid column intact
-    // crashed leaf: cid=20 retired mid-swap (only .compact.old remains) —
-    // AND the manifest FILE the leaf wrote just before its retire rename
-    // is still present at the root. That file must not read as top-level
-    // data (it would trip the mixed-layout refusal and wedge every rerun
-    // in exactly the crash state this recovery exists for); the root call
-    // must name the missing leaf, restore it, and consume the manifest.
-    val leaf = new java.io.File(s"$root/cid=20")
-    val oldLeaf = new java.io.File(s"$root/cid=20.compact.old")
-    assert(leaf.renameTo(oldLeaf))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/cid=20.compact.names"),
-      "part-00000-dead.parquet\n".getBytes("UTF-8"))
-    val (b2, _) = Layout.rewriteInPlace(spark, root, 1L << 20)(identity)
-    assert(b2 > 0 && leaf.exists && !oldLeaf.exists)
-    assert(!new java.io.File(s"$root/cid=20.compact.names").exists,
-      "leaf entry-time recovery must consume the stale manifest")
-    assert(spark.read.parquet(root).count() === 3)
-    // a root mixing top-level data files and partition dirs is refused
-    Seq((9L, "x")).toDF("vec_id", "s")
-      .coalesce(1).write.mode("append").parquet(root)
-    intercept[IllegalArgumentException] {
-      Layout.rewriteInPlace(spark, root, 1L << 20)(identity)
+    val D = graft.ingest.DedupStore
+    val docs = Seq((1L, "alpha beta"), (2L, "gamma delta"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("swap-leftover")
+      .resolve("s").toString
+    D.recordHashes(docs, "text", dir)
+    val old = new java.io.File(dir + ".compact.old")
+    assert(new java.io.File(dir).renameTo(old))
+    for (op <- Seq[() => Any](
+        () => D.newUnique(docs, "text", "doc_id", dir).collect(),
+        () => D.recordHashes(docs, "text", dir),
+        () => D.compactStore(spark, dir))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(old.getName) &&
+        e.getMessage.contains("rename it to"), e.getMessage)
     }
+    assert(!new java.io.File(dir).exists, "a record created a fresh store")
+    // the documented hand fix restores the store
+    assert(old.renameTo(new java.io.File(dir)))
+    assert(D.newUnique(docs, "text", "doc_id", dir).count() === 0L)
   }
 
   test("versioned IVF index: retrain swaps generations atomically " +
@@ -768,29 +830,6 @@ class LayoutSpec extends SparkSuite {
     val gens2 = new java.io.File(root).listFiles
       .filter(_.getName.startsWith("gen-")).map(_.getName).toSet
     assert(gens2 === Set(g2, g3), s"predecessor GC wrong: $gens2")
-  }
-
-  test("compaction recovers a crash between the swap renames") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact-crash")
-      .resolve("t").toString
-    for (i <- 1 to 4)
-      Seq((i.toLong, s"r$i")).toDF("id", "s")
-        .coalesce(1).write.mode("append").parquet(dir)
-    // simulate a death after rename(dir -> .compact.old): the table
-    // exists ONLY as the retired copy
-    val f = new java.io.File(dir)
-    val old = new java.io.File(dir + ".compact.old")
-    assert(f.renameTo(old))
-    assert(!f.exists && old.exists)
-    // next maintenance invocation restores it BEFORE doing anything
-    // destructive, then compacts normally
-    val (before, after) = Layout.compact(spark, dir, 1L << 20)
-    assert(before === 4 && after === 1, s"($before, $after)")
-    assert(!old.exists)
-    val got = spark.read.parquet(dir).as[(Long, String)]
-      .collect().sortBy(_._1).toSeq
-    assert(got === (1 to 4).map(i => (i.toLong, s"r$i")))
   }
 
   test("ANN takedown law: post-retract topKCurrent never returns a " +
@@ -1271,35 +1310,27 @@ class LayoutSpec extends SparkSuite {
     assert(!after.find(_._1 == 99001L).get._2,
       "retracted vector still vetoed through the code path")
   }
+}
 
-  test("rename-atomicity contract is runtime-checked: the directory " +
-    "swap refuses object-store schemes loudly, accepts HDFS-style " +
-    "filesystems, and honors the explicit operator override") {
-    val L = graft.layout.Layout
-    // HDFS-style schemes pass
-    for (s <- Seq("file", "hdfs", "viewfs", "FILE"))
-      L.requireAtomicRenameScheme(spark, s, "test")
-    // object-store schemes refuse with the documented requirement
-    for (s <- Seq("s3a", "s3", "gs", "abfs", "wasbs")) {
-      val e = intercept[IllegalStateException] {
-        L.requireAtomicRenameScheme(spark, s, "test")
-      }
-      assert(e.getMessage.contains("non-atomic") &&
-        e.getMessage.contains("Generations"),
-        s"refusal for $s must name the contract and the alternative")
-    }
-    // the override conf restores the old behavior explicitly
-    spark.conf.set("spark.graft.allowNonAtomicRename", "true")
-    try L.requireAtomicRenameScheme(spark, "s3a", "test")
-    finally spark.conf.unset("spark.graft.allowNonAtomicRename")
-    // and the real swap path runs the check (local fs passes through:
-    // a compact on file:// must still work)
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("atomic-ck")
-      .toString + "/t"
-    (1 to 10).map(i => (i.toLong, s"r$i")).toDF("id", "s")
-      .repartition(4).write.parquet(dir)
-    val (b, a) = L.compact(spark, dir)
-    assert(b >= a && spark.read.parquet(dir).count() === 10L)
+/** A commit protocol that fails a store compaction's staged write right
+  * after it commits: the crash between staging and the first move. Any
+  * other write commits as usual.
+  */
+class CrashAfterCompactionStage(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path,
+        dynamicPartitionOverwrite) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      commits: Seq[org.apache.spark.internal.io.FileCommitProtocol
+        .TaskCommitMessage]): Unit = {
+    super.commitJob(job, commits)
+    if (new org.apache.hadoop.fs.Path(path).getName.contains(".compact-"))
+      throw new IllegalStateException(
+        s"${CrashAfterCompactionStage.Message} $path")
   }
+}
+
+object CrashAfterCompactionStage {
+  val Message = "crashed after staging"
 }

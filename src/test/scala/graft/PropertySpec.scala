@@ -606,20 +606,22 @@ class PropertySpec extends SparkSuite {
       "graft_prop_media_bucketed", 7702L, 8)
   }
 
-  test("compaction race law: a LIVE appender racing compact never loses " +
-    "a committed row — abort, rescue, or clean pass, across interleavings") {
+  test("compaction race law: a LIVE appender recording through " +
+    "DedupStore.recordHashes while compactStore runs never loses a " +
+    "committed key, across interleavings") {
     import spark.implicits._
+    val D = graft.ingest.DedupStore
     // LayoutSpec covers the RECONSTRUCTED crash states; this is the real
-    // thing: a writer thread appending one-row batches non-stop while
-    // compact runs. The law: every append whose write() RETURNED must be
-    // readable afterwards (an append that THREW mid-swap is the
+    // thing: a writer thread recording one-row batches non-stop while
+    // the compaction runs. The law: every record whose call RETURNED
+    // must still probe as seen afterwards (a record that THREW is the
     // appender's retry problem — at-least-once, not silent loss).
     for (trial <- 1 to 4) {
-      val dir = java.nio.file.Files
+      val store = java.nio.file.Files
         .createTempDirectory(s"compact-race-$trial").resolve("t").toString
       for (i <- 1 to 6)
-        Seq((i.toLong, s"seed$i")).toDF("id", "s")
-          .coalesce(1).write.mode("append").parquet(dir)
+        D.recordHashes(Seq((i.toLong, s"seed$i")).toDF("doc_id", "text"),
+          "text", store)
       @volatile var stop = false
       val committed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
       val appender = new Thread(() => {
@@ -627,9 +629,9 @@ class PropertySpec extends SparkSuite {
         while (!stop) {
           val id = 1000L * trial + i
           try {
-            Seq((id, s"live$id")).toDF("id", "s")
-              .coalesce(1).write.mode("append").parquet(dir)
-            committed.add(id) // only a RETURNED write joins the law
+            D.recordHashes(Seq((id, s"live$id")).toDF("doc_id", "text"),
+              "text", store)
+            committed.add(id) // only a RETURNED record joins the law
           } catch { case _: Throwable => () } // thrown = not committed
           i += 1
         }
@@ -639,77 +641,18 @@ class PropertySpec extends SparkSuite {
         // vary the interleaving: let the appender get ahead by a
         // trial-dependent amount before compaction starts
         Thread.sleep(50L * trial)
-        graft.layout.Layout.compact(spark, dir, 1L << 20)
-        graft.layout.Layout.compact(spark, dir, 1L << 20)
+        D.compactStore(spark, store, 1L << 20)
+        D.compactStore(spark, store, 1L << 20)
       } finally {
         stop = true
         appender.join(60000)
       }
       import scala.jdk.CollectionConverters._
-      val want = (1 to 6).map(_.toLong).toSet ++
-        committed.iterator().asScala.toSet
-      val got = spark.read.parquet(dir)
-        .select("id").collect().map(_.getLong(0)).toSet
-      assert(want.subsetOf(got),
-        s"trial $trial lost committed rows: ${want.diff(got)}")
-    }
-  }
-
-  test("partitioned rewrite race law: a LIVE appender into the cid= " +
-    "leaves racing a root-level rewriteInPlace never loses a committed " +
-    "row, and the partition column survives") {
-    import spark.implicits._
-    // The r10 recursion (rewriteInPlace at a partitionBy root) under a
-    // real concurrent writer: per-leaf swaps must abort/rescue around
-    // appends exactly like the flat-dir law above, and a leaf CREATED
-    // mid-rewrite must pass through untouched.
-    for (trial <- 1 to 3) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"part-race-$trial").resolve("idx").toString
-      Seq.tabulate(6)(i => ((i + 1).toLong, (i + 1) % 3))
-        .toDF("id", "cid")
-        .write.partitionBy("cid").parquet(root)
-      @volatile var stop = false
-      val committed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val appender = new Thread(() => {
-        var i = 0L
-        while (!stop) {
-          val id = 1000L * trial + i
-          try {
-            // cid = id % 4: trial appends also CREATE leaf cid=3, which
-            // does not exist in the seed layout
-            Seq((id, (id % 4).toInt)).toDF("id", "cid")
-              .coalesce(1).write.mode("append")
-              .partitionBy("cid").parquet(root)
-            committed.add(id)
-          } catch { case _: Throwable => () }
-          i += 1
-        }
-      })
-      appender.start()
-      try {
-        Thread.sleep(40L * trial)
-        graft.layout.Layout.rewriteInPlace(spark, root, 1L << 20)(
-          _.dropDuplicates("id"))
-        graft.layout.Layout.rewriteInPlace(spark, root, 1L << 20)(
-          _.dropDuplicates("id"))
-      } finally {
-        stop = true
-        appender.join(60000)
-      }
-      import scala.jdk.CollectionConverters._
-      val want = (1 to 6).map(_.toLong).toSet ++
-        committed.iterator().asScala.toSet
-      val rows = spark.read.parquet(root)
-        .select("id", "cid").collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(want.subsetOf(rows.keySet),
-        s"trial $trial lost committed rows: ${want.diff(rows.keySet)}")
-      // per-leaf rewrite must not scramble the partition column
-      rows.foreach { case (id, cid) =>
-        val expect = if (id <= 6) (id % 3).toInt else (id % 4).toInt
-        assert(cid === expect, s"id $id landed in cid=$cid")
-      }
+      val want = (1 to 6).map(i => (i.toLong, s"seed$i")) ++
+        committed.iterator().asScala.map(id => (id, s"live$id"))
+      val lost = D.newUnique(want.toDF("doc_id", "text"), "text", "doc_id",
+        store).select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(lost.isEmpty, s"trial $trial lost committed keys: $lost")
     }
   }
 

@@ -1951,6 +1951,10 @@ class StreamingSpec extends SparkSuite {
       graft.streaming.Streams.readExportManifest(spark, outS)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    // before any batch commits, the manifest read names what is missing
+    val none = intercept[IllegalArgumentException](manifest())
+    assert(none.getMessage.contains("no committed export manifest"),
+      none.getMessage)
     deliver("b1", b1)
     drain()
     deliver("b2", b2)
@@ -2178,22 +2182,21 @@ class StreamingSpec extends SparkSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(top === Seq(0L, 100000L), s"got $top")
     // a foreachBatch replay re-appends its rows (at-least-once); the
-    // documented maintenance pairing — rewriteInPlace(dropDuplicates on
-    // vec_id) AT THE GENERATION DIRECTORY, which recurses into the cid=
-    // leaves —
-    // restores one row per vector without changing any answer
+    // next retrain rebuilds from one row per (vec_id, v), which
+    // restores one row per vector without changing the answer
     graft.operators.AnnIndex.assignByCosine(
       spark.read.parquet(s"$srcDir/delivery1"), cents)
       .write.mode("append").partitionBy("cid").parquet(dir)
     assert(spark.read.parquet(dir).count() === before + 4) // dup rows
-    val (nBefore, nAfter) = graft.layout.Layout.rewriteInPlace(
-      spark, dir, 1L << 20)(_.dropDuplicates("vec_id"))
-    assert(nBefore > 0, "root-level rewrite must see the leaf files, " +
-      "not return the empty-root no-op")
-    assert(nAfter <= nBefore)
-    assert(spark.read.parquet(dir).count() === before + 2)
+    graft.operators.AnnIndex.retrain(spark, root, iters = 1)
+    val rebuilt = graft.operators.AnnIndex.current(spark, root)
+    assert(rebuilt.name !== gen.name)
+    val perId = spark.read.parquet(rebuilt.dir).groupBy("vec_id").count()
+    assert(perId.count() === before + 2 &&
+      perId.filter(col("count") > 1L).isEmpty,
+      "the retrain kept a replayed duplicate")
     assert(graft.operators.AnnIndex
-      .topK(spark, gen, q0.toArray, k = 2, nprobe = 2)
+      .topK(spark, rebuilt, q0.toArray, k = 2, nprobe = 2)
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 100000L))
   }
 
@@ -2437,8 +2440,7 @@ class StreamingSpec extends SparkSuite {
     // the replay (what the restarted stream does) lands the rows in
     // the INSTALLED generation, where probes serve them. At-least-once:
     // this retrain's snapshot already included the completed append, so
-    // the replayed copy is a duplicate row — the documented
-    // rewriteInPlace(dropDuplicates) maintenance reclaims it.
+    // the replayed copy is a duplicate row — the next retrain drops it.
     graft.streaming.Streams.appendVersionedBatch(batch, root)
     assert(spark.read.parquet(s"$root/$g2")
       .filter(col("vec_id") === 200000L).count() >= 1L)

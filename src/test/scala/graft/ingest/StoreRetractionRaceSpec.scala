@@ -3,16 +3,13 @@ package graft.ingest
 import org.apache.spark.sql.functions._
 import graft.ingest.StoreLayout.Bucketed
 
-/** The r13 maintenance-race fixes, pinned as laws:
+/** The maintenance races of a store's takedown, pinned as laws:
   *
-  *  1. [[graft.layout.Layout.rewriteInPlaceChecked]] truthfully
-  *     reports whether the rewrite installed — the concurrent-appender
-  *     abort returns `committed = false` with the directory untouched.
-  *  2. A takedown is never silently undone: DedupStore's compaction
-  *     clears its tombstone snapshot ONLY on a committed swap, so a
-  *     retracted key keeps reporting never-seen across any interleaving
-  *     of appends and compactions.
-  *  3. A retraction landing DURING a bucketed compaction survives the
+  *  1. A takedown is never silently undone: a path store's compaction
+  *     clears exactly the tombstone snapshot it applied, and only after
+  *     the rows it masked are gone, so a retracted key keeps reporting
+  *     never-seen across any interleaving of appends and compactions.
+  *  2. A retraction landing DURING a bucketed compaction survives the
   *     swap's DROP (copied into the staging directory) instead of
   *     being destroyed unapplied.
   */
@@ -24,36 +21,6 @@ class StoreRetractionRaceSpec extends graft.SparkSuite {
   private def fsOf(path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-
-  test("rewriteInPlaceChecked commit flag: clean pass true, " +
-    "appender-race abort false (directory untouched), empty dir true") {
-    import spark.implicits._
-    val L = graft.layout.Layout
-    val dir = tmpDir("rwc") + "/t"
-    (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(4).write.parquet(dir)
-    // clean pass installs
-    val (b1, _, c1) = L.rewriteInPlaceChecked(spark, dir, 1L << 20)(
-      _.dropDuplicates("id"))
-    assert(b1 === 4 && c1, "clean rewrite must report committed")
-    // a transform that side-effects an append into the directory lands
-    // a file between the input listing and the post-write re-list —
-    // the deterministic form of the appender race. The swap must abort
-    // AND say so.
-    val (_, _, c2) = L.rewriteInPlaceChecked(spark, dir, 1L << 20) { df =>
-      Seq((9999L, "late")).toDF("id", "v")
-        .coalesce(1).write.mode("append").parquet(dir)
-      df.dropDuplicates("id")
-    }
-    assert(!c2, "aborted swap must report committed=false")
-    // nothing lost: the original rows AND the racing append survive
-    assert(spark.read.parquet(dir).count() === 101L)
-    // zero-data-file directory commits vacuously
-    val empty = tmpDir("rwc-empty") + "/e"
-    fsOf(empty).mkdirs(new org.apache.hadoop.fs.Path(empty))
-    assert(L.rewriteInPlaceChecked(spark, empty, 1L << 20)(identity)
-      === ((0, 0, true)))
-  }
 
   test("takedown law under a racing appender (path DedupStore): no " +
     "interleaving of appends and compactions un-retracts a key") {
@@ -86,9 +53,8 @@ class StoreRetractionRaceSpec extends graft.SparkSuite {
       appender.start()
       try {
         Thread.sleep(30L * trial)
-        // with the pre-fix code, an appender-aborted swap cleared the
-        // snapshot anyway: rows stayed, masking gone, and the probe
-        // below reported the retracted key as SEEN again
+        // a compaction that cleared its tombstone snapshot while the
+        // masked rows survived would report the retracted key as SEEN
         D.compactStore(spark, store)
         assert(retractedIsNew(),
           s"trial $trial: compaction un-retracted a committed takedown")
