@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
@@ -13,13 +14,17 @@ import graft.Tables
   * One poll cycle = `pollOnce(watchDir)`:
   *   list csv/parquet/xlsx/jsonl files → drop lock files (O2) → incremental filter
   *   against file_metadata (O3) → route by name (O11), dimensions before
-  *   facts (the FK ordering hazard, SURVEY.md §2.1) → per file: read →
-  *   validate (O5) → coerce (O7) → enrich lineage (O6) → dedupe (O9) →
-  *   FK orphan check for facts (O10) → append (O8) → metadata upsert
-  *   (O12) with success/error status (O13). A delivery with no new rows
-  *   (a re-touched or fully re-delivered file) appends nothing — an
-  *   empty append would still write a schema-only part file to the
-  *   table and to its keys projection — and records `success`.
+  *   facts (the FK ordering hazard, SURVEY.md §2.1) → per ENTITY, one
+  *   plan over its due files: each file read by its own reader →
+  *   validate (O5) → coerce (O7) → enrich lineage (O6); the valid files
+  *   unioned → dedupe across files and against history (O9) → FK orphan
+  *   check per file for facts (O10) → one append (O8) → metadata upsert
+  *   (O12) with per-file success/error status (O13). A file is still
+  *   committed all-or-nothing: a failed file's rows never land. A
+  *   delivery with no new rows (a re-touched or fully re-delivered
+  *   file) appends nothing — an empty append would still write a
+  *   schema-only part file to the table and to its keys projection —
+  *   and records `success`.
   *
   * The poll cycle's reads of the warehouse's own tables
   * (`storedTable`, `keyProjection`, `metadata`) carry each table's
@@ -32,13 +37,18 @@ import graft.Tables
   * to the full table and is rebuilt from it on the next append.
   *
   * At scale: dims are plain parquet dirs (broadcast-size by design); the
-  * ventes fact is date-partitioned on sale_date at append time, so
-  * time-range queries prune partitions (the reference's date_vente
-  * index, init-db/init.sql:67). A continuous deployment runs
-  * `pollForever` (O14) or the Structured Streaming mode
-  * (graft.streaming.Streams).
+  * ventes fact is one flat parquet dir whose `sale_date` data column
+  * each append writes sorted, so every file's row groups cover a narrow
+  * date range and a day or time-range filter skips the others by their
+  * min/max statistics (the reference's date_vente index,
+  * init-db/init.sql:67) — without one file per sale date per delivery.
+  * A fact written by the earlier daily-partitioned layout
+  * (`ventes/sale_date=…/`) is refused, never read mixed or appended to.
+  * A continuous deployment runs `pollForever` (O14) or the Structured
+  * Streaming mode (graft.streaming.Streams).
   */
 final class Warehouse(spark: SparkSession, root: String) {
+  import Warehouse.Planned
 
   private val entities = Seq("clients", "produits", "ventes") // dims first
   private def tablePath(name: String): String = s"$root/$name"
@@ -46,9 +56,9 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   /** The schema each table is stored with, fixed by contract: the
     * entity contract minus `date_creation` (no delivery carries it, so
-    * `prepareBatch` never writes it), lineage columns last, all
+    * `conform` never writes it), lineage columns last, all
     * nullable as parquet reads them; ventes adds its `sale_date`
-    * partition column. The writer coerces to it and every poll-cycle
+    * column. The writer coerces to it and every poll-cycle
     * read of the warehouse's own tables passes it, so no such read
     * re-infers (one Spark job each) a schema the warehouse itself fixed.
     */
@@ -65,6 +75,9 @@ final class Warehouse(spark: SparkSession, root: String) {
     "clients" -> "client_id", "produits" -> "produit_id",
     "ventes" -> "vente_id")
 
+  private def fsOf(path: Path) =
+    path.getFileSystem(spark.sessionState.newHadoopConf())
+
   // -- table access -----------------------------------------------------
 
   /** True when `path` holds a data file anywhere below it. The no-data
@@ -74,35 +87,73 @@ final class Warehouse(spark: SparkSession, root: String) {
     * disable the dedup anti-join and re-admit every previously-loaded
     * key as 'success'. Any exception from a directory that does hold
     * data files therefore propagates.
+    *
+    * ANY non-marker file counts as data — not just *.parquet names: a
+    * table populated by an external tool with unsuffixed parquet files
+    * must fail LOUD on read problems, not be classified "empty" (which
+    * would silently disable the dedup anti-join). Markers are judged on
+    * EVERY path component below `path`, not just the leaf: an
+    * interrupted write leaves part files under _temporary/…, and
+    * counting those as data would turn "no data yet" into a persistent
+    * read failure (Spark's own file index prunes _-/.-prefixed
+    * directories). `path` itself may be a single data file (an
+    * externally materialized single-file table). The walk uses
+    * `listStatusIterator`, whose statuses load no permissions: the
+    * `LocatedFileStatus` of `listFiles` does, which on the local FS
+    * forks one `ls -ld` per entry.
     */
   private def hasDataFiles(path: String): Boolean = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && {
-      // Recursive so partitioned layouts (ventes/sale_date=…/*.parquet)
-      // are seen. ANY non-marker file counts as data — not just
-      // *.parquet names: a table populated by an external tool with
-      // unsuffixed parquet files must fail LOUD on read problems, not
-      // be classified "empty" (which would silently disable the dedup
-      // anti-join). Markers are judged on EVERY path component relative
-      // to the root, not just the leaf: an interrupted write leaves
-      // part files under _temporary/…, and counting those as data
-      // would turn "no data yet" into a persistent read failure
-      // (Spark's own file index prunes _-/.-prefixed directories).
-      val qualifiedRoot = fs.makeQualified(p).toString
-      val it = fs.listFiles(p, true)
-      var hasData = false
-      while (!hasData && it.hasNext) {
-        val f = it.next().getPath.toString
-        val rel = f.stripPrefix(qualifiedRoot).stripPrefix("/")
-        // rel empty ⇒ the path IS a single data file (externally
-        // materialized single-file table) — data, not a marker: the
-        // root's own name is the table name, never _-/.-prefixed.
-        hasData = rel.isEmpty || rel.split('/').forall(c =>
-          !c.startsWith("_") && !c.startsWith("."))
-      }
-      hasData
+    val fs = fsOf(p)
+    def marker(st: FileStatus): Boolean = {
+      val name = st.getPath.getName
+      name.startsWith("_") || name.startsWith(".")
     }
+    def holdsData(dir: Path): Boolean = {
+      val it = fs.listStatusIterator(dir)
+      var found = false
+      while (!found && it.hasNext) {
+        val st = it.next()
+        found = !marker(st) && (st.isFile || holdsData(st.getPath))
+      }
+      found
+    }
+    try {
+      val st = fs.getFileStatus(p)
+      st.isFile || holdsData(p)
+    } catch { case _: java.io.FileNotFoundException => false }
+  }
+
+  /** Refuses a ventes fact written by the earlier daily-partitioned
+    * layout (`ventes/sale_date=…/` directories): Spark cannot read those
+    * together with the flat files this warehouse appends (it reports
+    * conflicting directory structures), so such a root is neither read
+    * nor appended to until it is rewritten once as a flat table.
+    */
+  private def requireFlatFact(): Unit = {
+    val p = new Path(tablePath("ventes"))
+    val fs = fsOf(p)
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) {
+      val it = fs.listStatusIterator(p)
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isDirectory && st.getPath.getName.startsWith("sale_date="))
+          throw new IllegalStateException(
+            s"$p holds sale_date= partition directories, the earlier " +
+              "daily-partitioned ventes layout; it cannot be read mixed " +
+              "with or appended to as the flat fact table. Rewrite it " +
+              s"once: spark.read.parquet(\"$p\").write.parquet(<new dir>), " +
+              s"then replace $p with <new dir>.")
+      }
+    }
+  }
+
+  /** Whether table `name` holds data, refusing a daily-partitioned
+    * ventes fact ([[requireFlatFact]]).
+    */
+  private def tableHasData(name: String): Boolean = {
+    if (name == "ventes") requireFlatFact()
+    hasDataFiles(tablePath(name))
   }
 
   /** The parquet data at `path` read with `schema`; None when
@@ -119,8 +170,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     * no data files. The poll cycle reads through [[storedTable]].
     */
   def table(name: String): Option[DataFrame] =
-    if (hasDataFiles(tablePath(name)))
-      Some(spark.read.parquet(tablePath(name)))
+    if (tableHasData(name)) Some(spark.read.parquet(tablePath(name)))
     else None
 
   /** One of `clients`, `produits`, `ventes` or `file_metadata`, read
@@ -128,7 +178,9 @@ final class Warehouse(spark: SparkSession, root: String) {
     * while it holds no data files.
     */
   private[graft] def storedTable(name: String): Option[DataFrame] =
-    readStored(tablePath(name), stored(name))
+    if (tableHasData(name))
+      Some(spark.read.schema(stored(name)).parquet(tablePath(name)))
+    else None
 
   // -- keys-only projection (scale path for O9 dedup) --------------------
 
@@ -169,7 +221,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     } catch {
       case _: Exception =>
         val p = new Path(keysPath(name))
-        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+        fsOf(p).delete(p, true)
     }
 
   private def empty(schema: StructType): DataFrame =
@@ -180,17 +232,19 @@ final class Warehouse(spark: SparkSession, root: String) {
     storedTable("file_metadata").getOrElse(empty(stored("file_metadata")))
 
   /** O8 — append sink (etl/app.py:162,191,220 → to_sql append). The
-    * ventes fact is date-partitioned on sale_date (day of date_vente):
-    * the parquet analog of the reference's date_vente index
-    * (init-db/init.sql:67) — time-range scans prune whole partitions,
-    * which is what keeps q06-style queries sub-scan at 100 TB.
+    * ventes fact gets its `sale_date` column (day of date_vente) and is
+    * written flat, sorted on sale_date within each written file: the
+    * parquet analog of the reference's date_vente index
+    * (init-db/init.sql:67) — a day or time-range filter on sale_date is
+    * pushed to the scan and skips every row group whose min/max
+    * statistics miss it, while one delivery writes one file per written
+    * partition instead of one per sale date.
     */
   private def append(name: String, df: DataFrame): Unit =
-    if (name == "ventes")
+    (if (name == "ventes")
       df.withColumn("sale_date", to_date(col("date_vente")))
-        .write.mode("append").partitionBy("sale_date")
-        .parquet(tablePath(name))
-    else df.write.mode("append").parquet(tablePath(name))
+        .sortWithinPartitions("sale_date")
+    else df).write.mode("append").parquet(tablePath(name))
 
   // -- continuous service loop (etl/app.py:253-288) ----------------------
 
@@ -239,12 +293,14 @@ final class Warehouse(spark: SparkSession, root: String) {
     * belongs on the streaming path (Streams.entityStream) or should be
     * date-partitioned into per-day watch dirs — a flat 10⁷-file dir is
     * a layout bug no poller can absorb.
+    *
+    * A cycle with a ventes file due refuses a daily-partitioned fact
+    * before it writes anything (see [[requireFlatFact]]).
     */
   def pollOnce(watchDir: String,
       maxFilesPerCycle: Int = 10000): Map[String, String] = {
     require(maxFilesPerCycle > 0, "maxFilesPerCycle must be positive")
-    val fs = new Path(watchDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(new Path(watchDir))
     if (!fs.exists(new Path(watchDir))) return Map.empty
     val it = fs.listStatusIterator(new Path(watchDir))
     val listedB = Seq.newBuilder[(String, String, java.sql.Timestamp)]
@@ -272,33 +328,30 @@ final class Warehouse(spark: SparkSession, root: String) {
       .limit(maxFilesPerCycle)
       .select("filename").collect().map(_.getString(0)).toSet
 
-    val candidates = listed.filter(t => toProcess.contains(t._2))
-
-    // O11 + FK ordering: dimensions before facts (SURVEY.md §2.1 hazard);
-    // within an entity oldest first, then by name — the order the cap
+    // Within an entity oldest first, then by name — the order the cap
     // above selects by — so when two deliveries of one cycle share a
     // key, the older one's row lands, whatever the filesystem lists.
-    val ordered = candidates.sortBy { case (_, name, mtime) =>
-      val rank = entities.indexOf(Ingest.entityFor(name).getOrElse("")) match {
-        case -1 => Int.MaxValue
-        case i => i
-      }
-      (rank, mtime.getTime, name)
-    }
+    val due = listed.filter(t => toProcess.contains(t._2))
+      .sortBy { case (_, name, mtime) => (mtime.getTime, name) }
+    if (due.exists(t => Ingest.entityFor(t._2).contains("ventes")))
+      requireFlatFact()
 
-    val results = ordered.flatMap { case (full, name, mtime) =>
-      Ingest.entityFor(name) match {
-        case None => None // unrecognized → warn + skip (etl/app.py:244-246)
-        case Some(entity) =>
-          val ok = processFile(entity, full, name)
-          Some((name, mtime, if (ok) "success" else "error"))
+    // O11 + FK ordering: dimensions before facts (SURVEY.md §2.1
+    // hazard); an unrecognized file is skipped (etl/app.py:244-246).
+    val mtimes = due.map { case (_, name, mtime) => name -> mtime }.toMap
+    val results = entities.flatMap { entity =>
+      val files = due.collect {
+        case (full, name, _) if Ingest.entityFor(name).contains(entity) =>
+          (full, name)
+      }
+      if (files.isEmpty) Nil
+      else ingestFiles(entity, files).map { case (name, ok) =>
+        (name, mtimes(name), if (ok) "success" else "error")
       }
     }
 
     // O12/O13 — metadata upsert with per-file status.
-    recordStatuses(results.map { case (name, mtime, status) =>
-      (name, mtime, status)
-    })
+    recordStatuses(results)
     results.map { case (name, _, status) => name -> status }.toMap
   }
 
@@ -326,64 +379,101 @@ final class Warehouse(spark: SparkSession, root: String) {
     val merged = Ingest.upsertMetadata(metadata, updates)
     val live = new Path(metadataPath)
     val tmp = new Path(s"$metadataPath.__tmp")
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(live)
     merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     if (fs.exists(live) && !fs.delete(live, true) || !fs.rename(tmp, live))
       throw new java.io.IOException(s"could not replace $live with $tmp")
   }
 
-  /** E1 steps 4-7 for one file; true = success, false = error status
-    * (validation failure, FK orphans, or read error — etl/app.py:168-170).
+  /** E1 steps 4-7 for one entity's due files (`(fullPath, filename)`,
+    * in (mtime, name) order); returns each file's outcome in that
+    * order, true = success, false = error status (read error,
+    * validation failure, FK orphans, or a failed write —
+    * etl/app.py:168-170).
+    *
+    * Each file is read by its own reader, so an unreadable file or one
+    * missing a required column is in error alone; the rest go through
+    * ONE plan ([[prepareFiles]]) and ONE append. Should that combined
+    * plan throw (a file whose rows fail at execution — a value no cast
+    * can read, a corrupt data page), this same function re-runs once
+    * per file, so such a file is in error alone and the others land
+    * exactly as the combined plan would have landed them.
     *
     * O4 — transient failures retry with backoff (etl/app.py:92-141). The
-    * retry wraps the READ-ONLY phase (source read, validation, dedup
-    * derivation, FK checks — safe to re-run arbitrarily); the append is
-    * deliberately OUTSIDE it: a partially-committed append is not
-    * idempotent under retry (the keys projection only learns the batch
-    * after success, so a re-run would re-admit the committed part), and
-    * the reference likewise turns a load failure into a plain error
-    * status, not a re-load (etl/app.py:168-170).
+    * retry wraps the READ-ONLY phase (each source read, then the plan:
+    * validation, dedup derivation, FK checks — safe to re-run
+    * arbitrarily); the append is deliberately OUTSIDE it: a
+    * partially-committed append is not idempotent under retry (the keys
+    * projection only learns the batch after success, so a re-run would
+    * re-admit the committed part), and the reference likewise turns a
+    * load failure into a plain error status, not a re-load
+    * (etl/app.py:168-170).
     */
-  private def processFile(entity: String, fullPath: String,
-      filename: String): Boolean = {
-    try {
-      commitPrepared(entity, Ingest.withRetry() {
-        val raw =
-          if (fullPath.endsWith(".csv"))
-            spark.read.option("header", "true").csv(fullPath)
-          else if (fullPath.endsWith(".xlsx")) Xlsx.read(spark, fullPath)
-          // JSONL (line-delimited JSON) — the standard corpus delivery
-          // format; Spark's json source IS line-delimited by default.
-          // Inferred types then flow through the same validate/coerce
-          // pipeline as the other formats (pandas-read parity). NOTE:
-          // inference is a full extra pass over the file — correct for
-          // the reference's file-sized deliveries; a high-volume corpus
-          // feed should pass the declared entity schema instead.
-          else if (fullPath.endsWith(".jsonl")) spark.read.json(fullPath)
-          else spark.read.parquet(fullPath)
-        prepareBatch(entity, raw, Ingest.withLineage(_, filename))
-      })
-    } catch { case _: Exception => false }
+  private def ingestFiles(entity: String,
+      files: Seq[(String, String)]): Seq[(String, Boolean)] = {
+    val parts = files.zipWithIndex.flatMap { case ((full, name), rank) =>
+      try Ingest.withRetry()(conform(entity, readDelivery(full),
+        Ingest.withLineage(_, name), rank)).map(name -> _)
+      catch { case _: Exception => None }
+    }
+    val planned =
+      if (parts.isEmpty) None
+      else try Some(Ingest.withRetry()(prepareFiles(entity, parts)))
+      catch { case _: Exception => None }
+    val outcomes: Map[String, Boolean] = planned match {
+      case Some(p) =>
+        val ok = try { commit(entity, p); true }
+        catch { case _: Exception => false }
+        parts.map { case (name, _) => name -> (ok && !p.failed(name)) }.toMap
+      case None if parts.size > 1 =>
+        val valid = parts.map(_._1).toSet
+        files.filter(f => valid(f._2))
+          .flatMap(f => ingestFiles(entity, Seq(f))).toMap
+      case None => Map.empty
+    }
+    files.map { case (_, name) => name -> outcomes.getOrElse(name, false) }
   }
 
-  /** Commit phase shared by the batch and streaming entries: append the
-    * prepared frame (which prepareBatch left persisted and
-    * materialized) and maintain the keys projection — nothing when it
-    * holds no new rows — then always unpersist.
+  /** A delivery read by the reader its extension names. */
+  private def readDelivery(fullPath: String): DataFrame =
+    if (fullPath.endsWith(".csv"))
+      spark.read.option("header", "true").csv(fullPath)
+    else if (fullPath.endsWith(".xlsx")) Xlsx.read(spark, fullPath)
+    // JSONL (line-delimited JSON) — the standard corpus delivery
+    // format; Spark's json source IS line-delimited by default.
+    // Inferred types then flow through the same validate/coerce
+    // pipeline as the other formats (pandas-read parity). NOTE:
+    // inference is a full extra pass over the file — correct for
+    // the reference's file-sized deliveries; a high-volume corpus
+    // feed should pass the declared entity schema instead.
+    else if (fullPath.endsWith(".jsonl")) spark.read.json(fullPath)
+    else spark.read.parquet(fullPath)
+
+  /** The poll cycle's plan over the valid files `parts` (filename →
+    * conformed frame): [[plan]], re-planned without the files the FK
+    * check failed whenever one of those had shadowed a later file's key
+    * — the later file's row must then land, and be FK-checked, as if the
+    * failed file had never been delivered. Each re-plan drops at least
+    * one file, so the loop ends (at the latest when every file failed).
+    * The returned plan's `failed` holds every file failed on the way.
     */
-  private def commitPrepared(entity: String,
-      prepared: Option[(DataFrame, Boolean)]): Boolean =
-    prepared match {
-      case None => false
-      case Some((deduped, hasRows)) =>
-        try { if (hasRows) commitBatch(entity, deduped); true }
-        finally deduped.unpersist(blocking = false)
+  private def prepareFiles(entity: String,
+      parts: Seq[(String, DataFrame)]): Planned = {
+    val p = plan(entity, parts.map(_._2))
+    val live = parts.filterNot(x => p.failed(x._1))
+    if (p.shadowing.isEmpty || live.isEmpty) p
+    else {
+      p.rows.unpersist(blocking = false)
+      val rest = prepareFiles(entity, live)
+      rest.copy(failed = rest.failed ++ p.failed)
     }
+  }
 
   /** Streaming entry: ingest one micro-batch for an entity (called from
-    * `foreachBatch` — graft.streaming.Streams). Identical semantics to
-    * the batch path; lineage comes from `input_file_name()` since a
-    * micro-batch may span several source files. Streaming-mode change
+    * `foreachBatch` — graft.streaming.Streams). The batch path's plan,
+    * all-or-nothing over the whole batch; lineage comes from
+    * `input_file_name()` since a micro-batch may span several source
+    * files. Streaming-mode change
     * detection is the file-source checkpoint (documented divergence: the
     * checkpoint never re-ingests a modified file; the batch path's
     * mtime check does — SURVEY.md §7.4), but per-file STATUS tracking
@@ -418,17 +508,22 @@ final class Warehouse(spark: SparkSession, root: String) {
           .filter(r => r.getString(0).nonEmpty)
           .map(r => (r.getString(0).split('/').last, r.getTimestamp(1)))
       // Empty batch (e.g. every row routed to another entity) ⇒ no-op:
-      // appending an empty partitioned frame would create a schema-less
-      // table directory, and there is no outcome to record. files being
+      // appending an empty frame would create a schema-less table
+      // directory, and there is no outcome to record. files being
       // empty is NOT sufficient — a non-file source has rows but blank
       // filenames — so confirm with the batch itself.
       if (files.isEmpty && batch.isEmpty) return true
+      if (entity == "ventes") requireFlatFact()
       val ok =
-        try commitPrepared(entity, Ingest.withRetry() {
-          // O4 parity with the batch path: the retried phase includes
-          // the materializing reads inside prepareBatch.
-          prepareBatch(entity, batch, (df: DataFrame) => Ingest.withLineage(df))
-        }) catch {
+        try conform(entity, batch, Ingest.withLineage(_), 0) match {
+          case None => false
+          case Some(conformed) =>
+            // O4 parity with the batch path: the retried phase includes
+            // the materializing reads inside plan.
+            val p = Ingest.withRetry()(plan(entity, Seq(conformed)))
+            if (p.failed.isEmpty) { commit(entity, p); true }
+            else { p.rows.unpersist(blocking = false); false }
+        } catch {
           // Swallow-and-record ONLY when a status row can witness the
           // failure; with no attributable files (non-file source) the
           // exception must fail the query so the checkpoint does not
@@ -448,103 +543,137 @@ final class Warehouse(spark: SparkSession, root: String) {
     // ingested and no status row: silent, unrecoverable loss.
   }
 
-  /** Shared E1 read-only core: validate (O5) → coerce (O7) → enrich
-    * (O6) → dedupe (O9) → FK check for facts (O10), MATERIALIZED. No
-    * writes — safe to retry arbitrarily, and because the returned frame
-    * is persisted and force-computed here, the full source read happens
-    * INSIDE the retried phase for every entity (without it, a dim
-    * batch's first real scan would be the unretried append). The
-    * frame comes with whether it holds any new row, read off that same
-    * forcing action. None ⇒ validation/FK failure (error status). The
-    * caller unpersists after commit; every failure path unpersists
-    * before propagating so retried attempts cannot leak cache entries.
+  /** O5 → O7 → O6 for one delivery: None when `raw` misses a required
+    * column (error status); else `raw` coerced to the entity contract,
+    * enriched with lineage by `lineage`, and tagged `__rank` = `rank` —
+    * its place in the cycle's (mtime, name) order, which decides whose
+    * row lands when two deliveries share a key. Builds a plan only.
     */
-  private def prepareBatch(entity: String, raw: DataFrame,
-      enrich: DataFrame => DataFrame): Option[(DataFrame, Boolean)] =
+  private def conform(entity: String, raw: DataFrame,
+      lineage: DataFrame => DataFrame, rank: Int): Option[DataFrame] =
     Ingest.validateColumns(raw, Tables.requiredColumns(entity)) match {
-        case Ingest.MissingColumns(_) => None
-        case Ingest.Valid =>
-          // the stored columns a delivery carries (enrich adds lineage,
-          // append the ventes partition column)
-          val contract = StructType(stored(entity).fields.filterNot(f =>
-            Set("source_file", "imported_at", "sale_date")(f.name)))
-          // ventes.date_vente may arrive as an Excel serial (FIXTURES.md).
-          // Only values in the plausible Excel-date range [1, 80000]
-          // (1900-01-01 .. ~2119) take the serial path — '20250510' or
-          // epoch-seconds strings would otherwise become far-future
-          // garbage; they fall through to to_timestamp. try_cast (not
-          // cast): under ANSI mode (Spark 4 default) a plain cast THROWS
-          // on non-numeric date strings instead of yielding null.
-          val prepared =
-            if (entity == "ventes") {
-              val serial = expr("try_cast(date_vente as double)")
-              raw.withColumn("date_vente",
-                when(serial.isNotNull && !col("date_vente").contains("-") &&
-                  serial >= 1 && serial <= 80000,
-                  Ingest.excelSerialToTimestamp(serial))
-                  .otherwise(expr("try_to_timestamp(date_vente)")))
-            } else raw
-          val coerced = Ingest.coerceToContract(prepared, contract)
-          val enriched = enrich(coerced)
-          // Existing side of the dedup anti-join: the narrow keys
-          // projection when present, else the full table (fallback).
-          val existing = keyProjection(entity).orElse(storedTable(entity))
-          val deduped = Ingest.dedupe(enriched, existing,
-            Seq(businessKey(entity)))
-          deduped.persist()
-          try {
-            if (entity == "ventes") {
-              // O10 — FK check before the caller appends a fact batch.
-              // One cached plan + ONE action for both orphan counts
-              // (left joins on the dim keys, count the null arms) — the
-              // source file is read once, and a file mutated mid-cycle
-              // cannot slip unchecked rows into the append. The dim keys
-              // are not made distinct: a duplicated key only repeats
-              // rows, and a row unmatched on one dim keeps its null arm
-              // there in every repeat, so whether any null arm exists —
-              // all the check decides — is the same, and so is whether
-              // any row exists (the third count). They come from the
-              // dim TABLES, not the keys projections: a crash between a
-              // dim append and its keys write must not turn committed
-              // dims into false orphans.
-              def keysOf(name: String, key: String): DataFrame =
-                storedTable(name).map(_.select(key)).getOrElse(
-                  empty(StructType(Seq(StructField(key, StringType)))))
-              val flagged = deduped
-                .join(broadcast(keysOf("clients", "client_id")
-                  .withColumn("__c", lit(1))), Seq("client_id"), "left")
-                .join(broadcast(keysOf("produits", "produit_id")
-                  .withColumn("__p", lit(1))), Seq("produit_id"), "left")
-              val counts = flagged.agg(
-                coalesce(sum(when(col("__c").isNull, 1L).otherwise(0L)), lit(0L)),
-                coalesce(sum(when(col("__p").isNull, 1L).otherwise(0L)), lit(0L)),
-                count(lit(1))).head()
-              if (counts.getLong(0) > 0 || counts.getLong(1) > 0) {
-                deduped.unpersist(blocking = false)
-                None
-              } else Some((deduped, counts.getLong(2) > 0))
-            } else {
-              // Force the full read inside the retry. A no-op sink only
-              // scans the cache; count() would add an aggregate and its
-              // shuffle stage (one more job under AQE). The observed
-              // row count rides the same job.
-              val rows = Observation()
-              deduped.observe(rows, count(lit(1)).as("n"))
-                .write.format("noop").mode("overwrite").save()
-              Some((deduped, rows.get("n").asInstanceOf[Long] > 0))
-            }
-          } catch {
-            case e: Throwable =>
-              deduped.unpersist(blocking = false)
-              throw e
-          }
+      case Ingest.MissingColumns(_) => None
+      case Ingest.Valid =>
+        // the stored columns a delivery carries (lineage is added
+        // here, the ventes sale_date column at append)
+        val contract = StructType(stored(entity).fields.filterNot(f =>
+          Set("source_file", "imported_at", "sale_date")(f.name)))
+        // ventes.date_vente may arrive as an Excel serial (FIXTURES.md).
+        // Only values in the plausible Excel-date range [1, 80000]
+        // (1900-01-01 .. ~2119) take the serial path — '20250510' or
+        // epoch-seconds strings would otherwise become far-future
+        // garbage; they fall through to to_timestamp. try_cast (not
+        // cast): under ANSI mode (Spark 4 default) a plain cast THROWS
+        // on non-numeric date strings instead of yielding null.
+        val prepared =
+          if (entity == "ventes") {
+            val serial = expr("try_cast(date_vente as double)")
+            raw.withColumn("date_vente",
+              when(serial.isNotNull && !col("date_vente").contains("-") &&
+                serial >= 1 && serial <= 80000,
+                Ingest.excelSerialToTimestamp(serial))
+                .otherwise(expr("try_to_timestamp(date_vente)")))
+          } else raw
+        Some(lineage(Ingest.coerceToContract(prepared, contract))
+          .withColumn("__rank", lit(rank)))
     }
 
-  /** Write phase (NOT retried — see processFile): data append (O8) then
-    * the keys-projection maintenance.
+  /** Shared E1 read-only core over conformed deliveries: union →
+    * dedupe (O9) → FK check for facts (O10), MATERIALIZED. No writes —
+    * safe to retry arbitrarily, and because the returned frame is
+    * persisted and force-computed here, every source read happens
+    * INSIDE the retried phase for every entity (without it, a dim
+    * batch's first real scan would be the unretried append).
+    *
+    * Dedup keeps one row per business key — the lowest-ranked
+    * delivery's, any one row within a delivery (what `dropDuplicates`
+    * keeps) — then anti-joins it against the keys already loaded. For
+    * ventes, the forcing action is the FK check itself: one aggregate
+    * grouped by `source_file` over left joins on the dim keys, counting
+    * each file's null arms (orphans) and rows. The dim keys are not
+    * made distinct: a duplicated key only repeats rows, and a row
+    * unmatched on one dim keeps its null arm there in every repeat, so
+    * whether a file has any orphan — all the check decides — is the
+    * same, and so is whether it has any row. They come from the dim
+    * TABLES, not the keys projections: a crash between a dim append and
+    * its keys write must not turn committed dims into false orphans.
+    * The caller unpersists after commit; every failure path unpersists
+    * before propagating so retried attempts cannot leak cache entries.
     */
-  private def commitBatch(entity: String, deduped: DataFrame): Unit = {
-    append(entity, deduped)
-    appendKeys(entity, deduped)
+  private def plan(entity: String, parts: Seq[DataFrame]): Planned = {
+    val key = businessKey(entity)
+    val byKey = Window.partitionBy(key)
+    val firsts = parts.reduce(_.unionByName(_))
+      .withColumn("__first", row_number().over(byKey.orderBy("__rank")))
+      .withColumn("__shadows", max("__rank").over(byKey) > col("__rank"))
+      .filter(col("__first") === 1)
+      .drop("__first", "__rank")
+    // Existing side of the dedup anti-join: the narrow keys projection
+    // when present, else the full table (fallback).
+    val rows = keyProjection(entity).orElse(storedTable(entity))
+      .fold(firsts)(e => firsts.join(e.select(key), Seq(key), "left_anti"))
+    rows.persist()
+    try {
+      if (entity == "ventes") {
+        def keysOf(name: String, key: String): DataFrame =
+          storedTable(name).map(_.select(key)).getOrElse(
+            empty(StructType(Seq(StructField(key, StringType)))))
+        val perFile = rows
+          .join(broadcast(keysOf("clients", "client_id")
+            .withColumn("__c", lit(1))), Seq("client_id"), "left")
+          .join(broadcast(keysOf("produits", "produit_id")
+            .withColumn("__p", lit(1))), Seq("produit_id"), "left")
+          .groupBy("source_file")
+          .agg(max(col("__c").isNull || col("__p").isNull).as("orphaned"),
+            max(col("__shadows")).as("shadows"))
+          .collect()
+        val failed = perFile.filter(_.getBoolean(1)).map(_.getString(0)).toSet
+        Planned(rows, failed,
+          perFile.filter(r => r.getBoolean(1) && r.getBoolean(2))
+            .map(_.getString(0)).toSet,
+          perFile.exists(r => !r.getBoolean(1)))
+      } else {
+        // Force the full read inside the retry. A no-op sink only
+        // scans the cache; count() would add an aggregate and its
+        // shuffle stage (one more job under AQE). The observed row
+        // count rides the same job.
+        val n = Observation()
+        rows.observe(n, count(lit(1)).as("n"))
+          .write.format("noop").mode("overwrite").save()
+        Planned(rows, Set.empty, Set.empty,
+          n.get("n").asInstanceOf[Long] > 0)
+      }
+    } catch {
+      case e: Throwable =>
+        rows.unpersist(blocking = false)
+        throw e
+    }
   }
+
+  /** Write phase (NOT retried — see [[ingestFiles]]): the rows of the
+    * files not failed, when there are any, appended (O8), then the keys
+    * projection maintained; the plan's frame is unpersisted either way.
+    */
+  private def commit(entity: String, p: Planned): Unit =
+    try if (p.hasRows) {
+      val kept = (if (p.failed.isEmpty) p.rows
+        else p.rows.filter(!col("source_file").isin(p.failed.toSeq: _*)))
+        .drop("__shadows")
+      append(entity, kept)
+      appendKeys(entity, kept)
+    } finally p.rows.unpersist(blocking = false)
+}
+
+private object Warehouse {
+
+  /** A prepared entity batch: `rows` — the new rows, persisted and
+    * materialized, with their `source_file` lineage and a `__shadows`
+    * flag (the row's key also came in a later-ranked file); `failed` —
+    * the source files whose rows failed the FK check (O10);
+    * `shadowing` — those of them holding a row that shadowed a
+    * later-ranked file's; `hasRows` — whether any file not failed
+    * brought a new row.
+    */
+  final case class Planned(rows: DataFrame, failed: Set[String],
+      shadowing: Set[String], hasRows: Boolean)
 }

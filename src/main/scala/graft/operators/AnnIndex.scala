@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
-import graft.ingest.{Generations, StoreLayout}
+import graft.ingest.{Generations, Snapshots, StoreLayout}
 
 /** Disk-backed IVF index — the AT-REST form of the inverted-file ANN
   * the query-side operators assume (q40/q85 say "the inverted list is
@@ -236,56 +236,39 @@ object AnnIndex {
     new Path(s"$root/$gen/_lloyd")
 
   private[operators] def committedLloydVersions(fs: FileSystem,
-      dir: Path): Seq[Long] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch="))
-      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
+      dir: Path): Seq[Long] = Snapshots.committed(fs, dir)
 
   /** The generation's latest committed Lloyd-stats frame ((cid, dim,
     * s, n) — k × dim rows). Defined only for generations built with
     * `lloydStats = true`.
     */
   def readLloydStats(spark: SparkSession, gen: Generation): DataFrame = {
-    val dir = lloydDir(gen.root, gen.name)
-    val latest = committedLloydVersions(fsOf(spark, gen.root), dir)
-      .sorted.lastOption
+    val latest = Snapshots.latest(fsOf(spark, gen.root),
+      lloydDir(gen.root, gen.name))
       .getOrElse(throw new IllegalStateException(
         s"generation ${gen.name} has no Lloyd stats (built without " +
           "lloydStats = true?)"))
-    spark.read.parquet(new Path(dir, s"batch=$latest").toString)
+    spark.read.parquet(latest.toString)
   }
 
   /** Fold one micro-batch's Lloyd stats into the PINNED generation's
     * maintained frame — (vec_id, v) rows assigned under that
     * generation's centroids ([[KMeans.assign]] — the trainer's L2
     * rule, NOT the layout's cosine rule: these stats must reproduce
-    * [[KMeans.update]] bit-for-bit), then merged cell-wise under the
-    * maintained-snapshot commit protocol (fresh `batch=<id>` +
-    * `_SUCCESS`, replayed committed ids skip — exactly-once). No-op
-    * for a generation without seeded stats: the lifecycle is opt-in
-    * and an appender must not sprout it.
+    * [[KMeans.update]] bit-for-bit), then merged cell-wise through the
+    * versioned-snapshot commit ([[graft.ingest.Snapshots.commit]]:
+    * fresh `batch=<id>` + `_SUCCESS`, replayed committed ids skip —
+    * exactly-once). No-op for a generation without seeded stats: the
+    * lifecycle is opt-in and an appender must not sprout it.
     */
   def foldLloydStats(spark: SparkSession, gen: Generation,
       batchId: Long, batch: DataFrame): Unit = {
     val dir = lloydDir(gen.root, gen.name)
-    val fs = fsOf(spark, gen.root)
-    val committed = committedLloydVersions(fs, dir)
-    if (committed.isEmpty || committed.contains(batchId)) return
-    val batchStats = KMeans.statsOf(KMeans.assign(
-      batch.select("vec_id", "v"), centroidFrame(spark, gen.centroids)))
-    val prev = committed.filter(_ < batchId).sorted.last
-    val target = new Path(dir, s"batch=$batchId")
-    fs.delete(target, true) // partial leftovers from a crash
-    KMeans.mergeStats(
-        spark.read.parquet(new Path(dir, s"batch=$prev").toString),
-        batchStats)
-      .write.parquet(target.toString) // _SUCCESS = commit
-    // retain the immediately-previous version for concurrent readers
-    committedLloydVersions(fs, dir).filter(_ < batchId - 1).foreach(v =>
-      fs.delete(new Path(dir, s"batch=$v"), true))
+    if (committedLloydVersions(fsOf(spark, gen.root), dir).isEmpty) return
+    Snapshots.commit(spark, dir, batchId) { prev =>
+      KMeans.mergeStats(prev.get, KMeans.statsOf(KMeans.assign(
+        batch.select("vec_id", "v"), centroidFrame(spark, gen.centroids))))
+    }
   }
 
   /** [[retrain]] with the update step served from the MAINTAINED

@@ -181,9 +181,11 @@ object LangId {
           col("t_pos"), col("t_neg")).as("weight_fp"))
   }
 
-  /** Deterministic argmax predictions from an EXPLODED (doc_id,
-    * extra..., fid) feature frame and a fitted model — the
-    * SHARED-SCAN serving form: when the scorer's input is the very
+  /** TRAIN-SET-ONLY (hence `private[graft]`: its one caller is the
+    * q151 audit; fresh or out-of-vocabulary text goes through
+    * [[predictLiteral]] or [[predict]]). Deterministic argmax
+    * predictions from an EXPLODED (doc_id, extra..., fid) feature frame
+    * and a fitted model — the SHARED-SCAN serving form: when the scorer's input is the very
     * frame the trainer aggregated (the q151 audit: train-set
     * predictions), re-deriving features per side doubles the corpus
     * scan; this form broadcast-joins the KB model onto the one
@@ -208,7 +210,7 @@ object LangId {
     * once, where the r21 exploded form dropped per (fid, lang) pair —
     * indistinguishable on total grids, divergent on partial ones.
     */
-  def predictFromFeats(feats: DataFrame, model: DataFrame,
+  private[graft] def predictFromFeats(feats: DataFrame, model: DataFrame,
       extra: Seq[String] = Seq.empty,
       langsHint: Option[Seq[String]] = None): DataFrame = {
     val keys = col("doc_id") +: extra.map(col)

@@ -133,7 +133,8 @@ object CoreAnalytics {
 
   /** q06: time-range scan + monthly aggregation over the fact table
     * (reference: init-db/init.sql:67). At scale the fact table is
-    * date-partitioned, so this filter is partition pruning, not a scan.
+    * clustered by date, so this filter skips every row group whose
+    * min/max statistics miss the range instead of scanning it.
     */
   private val q06: Q = (s, dir) =>
     t(s, dir, "lineitem")

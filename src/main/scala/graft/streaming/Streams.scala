@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.Tables
-import graft.ingest.{Ingest, StoreLayout, Warehouse}
+import graft.ingest.{Ingest, Snapshots, StoreLayout, Warehouse}
 
 /** Structured Streaming port of the reference's poll loop (reference:
   * etl/app.py:253-278, operator O1 in SURVEY.md §2.1) plus the event-time
@@ -1083,11 +1083,12 @@ object Streams {
     * [[curationFeed]] — committed batches skip on replay), and
     * the per-group manifest accumulates in
     * `outDir/_export_manifest/batch=<id>` via the versioned-snapshot
-    * commit of [[maintainTermStats]] ([[commitSnapshot]]; merged from
-    * the COMMITTED data read-back, previous version retained for
-    * concurrent readers). Because selection is per-row
-    * content-addressed, the streamed export over ANY micro-batching of
-    * a corpus selects exactly the one-shot
+    * commit of [[maintainTermStats]]
+    * ([[graft.ingest.Snapshots.commit]]; merged from the COMMITTED data
+    * read-back, previous version retained for concurrent readers).
+    * Because selection is per-row content-addressed, the streamed
+    * export over ANY micro-batching of a corpus selects exactly the
+    * one-shot
     * [[graft.operators.CorpusExport.materialize]] document set into
     * the same shards — including the nested-sample property: raising a
     * threshold later keeps every already-exported row eligible. Read
@@ -1143,7 +1144,7 @@ object Streams {
         }
         // manifest: accumulated from the COMMITTED read-back (what
         // landed, not what the plan promised)
-        commitSnapshot(spark, new org.apache.hadoop.fs.Path(
+        Snapshots.commit(spark, new org.apache.hadoop.fs.Path(
             s"$outDir/_export_manifest"), batchId) { prev =>
           val th = thresholds.toDF("group", "threshold_ppm")
           // explicit schema: a zero-survivor batch commits a
@@ -1178,10 +1179,10 @@ object Streams {
     * [[maintainQuantileHistogram]]: per batch,
     * aggregate the micro-batch (`perBatch`), merge it with the latest
     * snapshot committed BEFORE this batch (`mergeWith`), and commit
-    * it through [[commitSnapshot]] — the step the streamed export's
-    * manifest shares. Replayed already-committed batches skip the
-    * snapshot write — exactly-once snapshots on an at-least-once
-    * stream — but the batch is still
+    * it through [[graft.ingest.Snapshots.commit]] — the step the
+    * streamed export's manifest shares. Replayed already-committed
+    * batches skip the snapshot write — exactly-once snapshots on an
+    * at-least-once stream — but the batch is still
     * CONSUMED (an empty foreachPartition pass): a maintainer whose
     * streaming plan carries a stateful operator (the funnel fold)
     * must commit its state stores on EVERY micro-batch, and Spark
@@ -1199,7 +1200,7 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val root = new org.apache.hadoop.fs.Path(path)
-        val wrote = commitSnapshot(spark, root, batchId) { prev =>
+        val wrote = Snapshots.commit(spark, root, batchId) { prev =>
           val batchDf = perBatch(batch)
           prev.fold(batchDf)(mergeWith(_, batchDf))
         }
@@ -1211,31 +1212,6 @@ object Streams {
         ()
       }
       .start()
-
-  /** The versioned-snapshot commit under `root`: unless `batch=<id>` is
-    * already committed (a replay — returns false), build the snapshot
-    * from the latest version committed BEFORE this batch (a replay of
-    * batch N must not merge into N's own output; None for the first),
-    * write it to `batch=<id>` (`_SUCCESS` = commit point), then delete
-    * versions older than id − 1: the immediately-previous version stays
-    * for a reader that resolved it as latest just before this commit
-    * (single writer, concurrent readers).
-    */
-  private def commitSnapshot(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, batchId: Long)(
-      build: Option[DataFrame] => DataFrame): Boolean = {
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val committed = committedVersions(fs, root)
-    if (committed.contains(batchId)) return false
-    def version(v: Long) = new org.apache.hadoop.fs.Path(root, s"batch=$v")
-    val merged = build(committed.filter(_ < batchId).sorted.lastOption
-      .map(v => spark.read.parquet(version(v).toString)))
-    fs.delete(version(batchId), true) // partial leftovers from a crash
-    merged.write.parquet(version(batchId).toString)
-    committedVersions(fs, root).filter(_ < batchId - 1)
-      .foreach(v => fs.delete(version(v), true))
-    true
-  }
 
   /** Latest committed (term, df) snapshot maintained by
     * [[maintainTermStats]]; empty schema-less read errors are the
@@ -1250,22 +1226,12 @@ object Streams {
   private def readMergedSnapshot(spark: SparkSession, path: String,
       what: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val latest = committedVersions(fs, root).sorted.lastOption
+    val latest = Snapshots.latest(
+      root.getFileSystem(spark.sessionState.newHadoopConf()), root)
       .getOrElse(throw new IllegalArgumentException(
         s"no committed $what under $path"))
-    spark.read.parquet(
-      new org.apache.hadoop.fs.Path(root, s"batch=$latest").toString)
+    spark.read.parquet(latest.toString)
   }
-
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
 
   /** One step of a [[curationFeed]] micro-batch. `check` narrows the
     * batch: a gate drops rejects, a store probe drops what its history
@@ -1862,8 +1828,9 @@ object Streams {
     * write and the data commit replays into an identical overwrite —
     * the stages are deterministic and the crashed attempt recorded
     * nothing, so the store state they judge against is unchanged.
-    * Cost: one materialization barrier + count per stage on the
-    * MICRO-BATCH (not the corpus) — the observed form trades the
+    * Cost: one materialization barrier per stage on the MICRO-BATCH
+    * (not the corpus), whose job also yields the stage's row count
+    * through an observed metric — the observed form trades the
     * single fused plan for per-stage visibility; leave `yieldDir`
     * unset to keep today's one-plan path. Barrier lifecycle: every
     * intermediate barrier releases before returning; the FINAL
@@ -1883,14 +1850,21 @@ object Streams {
     pending.foreach(graft.operators.Exec.release)
     pending.clear()
     val barriers = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var cur = graft.operators.Exec.materialize(batch)
+    // the barrier and its row count in ONE job: the count is observed
+    // on the frame the barrier materializes (in either checkpoint mode
+    // the barrier computes that frame exactly once)
+    def counted(df: DataFrame): (DataFrame, Long) = {
+      val rows = org.apache.spark.sql.Observation()
+      val barrier = graft.operators.Exec.materialize(
+        df.observe(rows, count(lit(1)).as("n")))
+      (barrier, rows.get("n").asInstanceOf[Long])
+    }
+    var (cur, curN) = counted(batch)
     barriers += cur
-    var curN = cur.count()
     val yields = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
     val rejectParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (stage <- stages) {
-      val next = graft.operators.Exec.materialize(stage.check(cur))
-      val nextN = next.count()
+      val (next, nextN) = counted(stage.check(cur))
       yields += ((batchId, stage.label, curN - nextN))
       if (rejectSampleSlots > 0 && nextN != curN)
         rejectParts += cur

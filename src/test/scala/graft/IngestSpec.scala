@@ -2387,7 +2387,7 @@ class IngestSpec extends SparkSuite {
 
   test("a re-touched delivery with no new rows commits nothing: no " +
     "file lands under the table or its keys projection, the status " +
-    "stays success, and the pollOnce runs exactly 16 Spark jobs") {
+    "stays success, and the pollOnce runs exactly 15 Spark jobs") {
     val watch = tmpDir("watch-retouch")
     val root = tmpDir("wh-retouch")
     val wh = new Warehouse(spark, root)
@@ -2412,7 +2412,114 @@ class IngestSpec extends SparkSuite {
       "a delivery with no new rows must add no file to any table")
     assert(wh.table("clients").get.count() === 3L)
     assert(wh.table("ventes").get.count() === 1L)
-    assert(jobs.size === 16, jobNames(jobs))
+    assert(jobs.size === 15, jobNames(jobs))
+  }
+
+  test("work-counter pin: one pollOnce over 1, 2 and 4 clients CSV " +
+    "files runs one plan — each extra file adds exactly its header read") {
+    val header = "client_id,nom,prenom,email,telephone,adresse\n"
+    def poll(n: Int): Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+      val watch = tmpDir(s"watch-files-$n")
+      val wh = new Warehouse(spark, tmpDir(s"wh-files-$n"))
+      for (i <- 1 to n)
+        writeFile(watch, s"clients_$i.csv", header +
+          s"CLI00$i,N$i,P$i,e$i@x.com,$i,a$i\nCLI100,Shared,S,s@x.com,0,s\n")
+      val (st, jobs) = jobsDuring(wh.pollOnce(watch))
+      assert(st === (1 to n).map(i => s"clients_$i.csv" -> "success").toMap)
+      assert(wh.table("clients").get.count() === n + 1L)
+      jobs
+    }
+    val byFiles = Seq(1, 2, 4).map(n => n -> poll(n)).toMap
+    def headerReads(n: Int) = jobNames(byFiles(n)).split("; ")
+      .count(_.startsWith("csv at "))
+    for (n <- Seq(1, 2, 4)) {
+      assert(headerReads(n) === n, jobNames(byFiles(n)))
+      assert(byFiles(n).size === byFiles(1).size + (n - 1),
+        s"$n files: ${jobNames(byFiles(n))}")
+    }
+  }
+
+  test("pollOnce: an older ventes file failing the FK check does not " +
+    "shadow a newer file's row with the same key, and that row is " +
+    "FK-checked in its own file") {
+    val dims = Seq(
+      "clients.csv" -> ("client_id,nom,prenom,email,telephone,adresse\n" +
+        "CLI001,D,J,e,1,2\n"),
+      "produits.csv" -> ("produit_id,nom,categorie,prix_unitaire," +
+        "stock_disponible,description\nPRO001,X,c,5,1,d\n"))
+    val header = "vente_id,client_id,produit_id,quantite,prix_total,date_vente\n"
+    val orphan = "VNT001,CLI999,PRO001,1,5,2025-05-10 10:00:00\n"
+    def poll(newer: String): (Map[String, String], Warehouse) = {
+      val watch = tmpDir("watch-fk-shadow")
+      val wh = new Warehouse(spark, tmpDir("wh-fk-shadow"))
+      dims.foreach { case (n, c) => writeFile(watch, n, c) }
+      writeFile(watch, "ventes_a.csv", header + orphan)
+      writeFile(watch, "ventes_b.csv", header + newer)
+      val now = System.currentTimeMillis()
+      assert(new java.io.File(watch, "ventes_a.csv").setLastModified(now - 60000))
+      assert(new java.io.File(watch, "ventes_b.csv").setLastModified(now - 30000))
+      (wh.pollOnce(watch), wh)
+    }
+    // the newer file's VNT001 is valid: it lands, from ventes_b
+    val (st, wh) = poll("VNT001,CLI001,PRO001,2,10,2025-05-11 10:00:00\n" +
+      "VNT002,CLI001,PRO001,1,5,2025-05-12 10:00:00\n")
+    assert(st === Map("clients.csv" -> "success", "produits.csv" -> "success",
+      "ventes_a.csv" -> "error", "ventes_b.csv" -> "success"))
+    assert(wh.table("ventes").get.select("vente_id", "source_file").collect()
+      .map(r => r.getString(0) -> r.getString(1)).sorted.toSeq ===
+      Seq("VNT001" -> "ventes_b.csv", "VNT002" -> "ventes_b.csv"))
+    assert(wh.keyProjection("ventes").get.count() === 2)
+    // the newer file's VNT001 is itself an orphan: once the older file
+    // is out, the newer one fails too, and nothing lands
+    val (st2, wh2) = poll("VNT001,CLI998,PRO001,2,10,2025-05-11 10:00:00\n" +
+      "VNT002,CLI001,PRO001,1,5,2025-05-12 10:00:00\n")
+    assert(st2("ventes_a.csv") === "error" && st2("ventes_b.csv") === "error")
+    assert(wh2.table("ventes").isEmpty)
+  }
+
+  test("pollOnce: a file whose rows fail at execution is in error alone; " +
+    "the entity's other files land") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true",
+      "premise: an unreadable number fails the cast at execution")
+    val watch = tmpDir("watch-corrupt")
+    val wh = new Warehouse(spark, tmpDir("wh-corrupt"))
+    val header = "produit_id,nom,categorie,prix_unitaire,stock_disponible," +
+      "description\n"
+    writeFile(watch, "produits_a.csv", header + "PRO001,A,c,5,1,d\n")
+    writeFile(watch, "produits_b.csv", header + "PRO002,B,c,5,lots,d\n")
+    writeFile(watch, "produits_c.csv", header + "PRO003,C,c,5,3,d\n")
+    assert(wh.pollOnce(watch) === Map("produits_a.csv" -> "success",
+      "produits_b.csv" -> "error", "produits_c.csv" -> "success"))
+    assert(wh.table("produits").get.select("produit_id").collect()
+      .map(_.getString(0)).sorted.toSeq === Seq("PRO001", "PRO003"))
+  }
+
+  test("a ventes fact in the earlier daily-partitioned layout is refused " +
+    "loudly, before the cycle writes anything, and never appended to") {
+    import spark.implicits._
+    val root = tmpDir("wh-daily")
+    Seq(("VNT000", "CLI001", "PRO001", 1, java.sql.Timestamp.valueOf(
+      "2025-05-01 10:00:00"))).toDF("vente_id", "client_id", "produit_id",
+      "quantite", "date_vente")
+      .withColumn("sale_date", to_date(col("date_vente")))
+      .write.partitionBy("sale_date").parquet(s"$root/ventes")
+    def listing(): Set[String] = {
+      val top = java.nio.file.Paths.get(root)
+      val walk = Files.walk(top)
+      try walk.iterator().asScala.map(top.relativize(_).toString).toSet
+      finally walk.close()
+    }
+    val before = listing()
+    val watch = tmpDir("watch-daily")
+    writeE1Fixture(watch)
+    val wh = new Warehouse(spark, root)
+    for (attempt <- Seq[() => Any](() => wh.pollOnce(watch),
+      () => wh.table("ventes"))) {
+      val e = intercept[IllegalStateException](attempt())
+      assert(e.getMessage.contains("sale_date=") &&
+        e.getMessage.contains("Rewrite it once"), e.getMessage)
+    }
+    assert(listing() === before, "the refused cycle must write nothing")
   }
 
   test("E1 negative: missing column → error; FK orphan ventes → error") {

@@ -3689,22 +3689,41 @@ class StreamingSpec extends SparkSuite {
       .map(ll).min
     assert(ll(lowLm) < minLl,
       "fixture premise: the OOV doc scores strictly lowest")
-    def deliver(name: String, rows: Seq[(Long, String, String)]): Unit =
+    val batch1 = Seq((1L, docA, ok), (2L, docB, ok),
+      (3L, blockedText, "bad.example.com"), (4L, leaky, ok),
+      (5L, spam, ok), (6L, wrongLang, ok), (7L, lowLm, ok))
+    // batch 2 exercises the dedup legs BEHIND the gates: an exact
+    // copy, a paraphrase, a half-and-half mashup (under the near
+    // threshold — only the span store flags it), and fresh content —
+    // all of which clear the two learned gates first (the ll premise
+    // above covers every batch-2 text)
+    val batch2 = Seq(
+      (10L, docA, ok),
+      (11L, footerDoc, ok),
+      (12L, mashup, ok),
+      (13L, gammaText, ok))
+    def deliverTo(src: String, name: String,
+        rows: Seq[(Long, String, String)]): Unit =
       rows.toDF("doc_id", "text", "domain").coalesce(1).write
-        .mode("overwrite").parquet(s"$srcDir/$name")
-    // the OBSERVED form: per-stage yields + the full (100-slot)
-    // content-addressed reject sample, written beside the commit
-    val yieldRoot = tmpDir("fsc-yield")
-    def drain(ckpt: String): Unit =
+        .mode("overwrite").parquet(s"$src/$name")
+    def deliver(name: String, rows: Seq[(Long, String, String)]): Unit =
+      deliverTo(srcDir, name, rows)
+    def drainFeed(src: String, stores: Seq[String], out: String,
+        yields: String, ckpt: String): Unit =
       graft.streaming.Streams.fullStackCurationFeed(
         spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(srcDir),
+          .option("recursiveFileLookup", "true").parquet(src),
         "text", "doc_id", "domain", blockStore,
         lidModels, lidDims, Set("en"), contamStore,
         dense, 0L, dims, ulmVocab, minLl,
-        exactStore, nearStore, spanStore,
-        outDir, ckpt, yieldDir = Some(yieldRoot),
+        stores(0), stores(1), stores(2),
+        out, ckpt, yieldDir = Some(yields),
         rejectSampleSlots = 100).awaitTermination()
+    // the OBSERVED form: per-stage yields + the full (100-slot)
+    // content-addressed reject sample, written beside the commit
+    val yieldRoot = tmpDir("fsc-yield")
+    def drain(ckpt: String): Unit = drainFeed(srcDir,
+      Seq(exactStore, nearStore, spanStore), outDir, yieldRoot, ckpt)
     val O = graft.operators.CurationOutcome
     def batchYields(): Map[(Long, String), Long] =
       spark.read.parquet(s"$yieldRoot/yields").collect()
@@ -3722,9 +3741,7 @@ class StreamingSpec extends SparkSuite {
     def survivors(): Seq[Long] = spark.read.parquet(outDir)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val ckpt1 = tmpDir("fsc-ckpt1")
-    deliver("b1", Seq((1L, docA, ok), (2L, docB, ok),
-      (3L, blockedText, "bad.example.com"), (4L, leaky, ok),
-      (5L, spam, ok), (6L, wrongLang, ok), (7L, lowLm, ok)))
+    deliver("b1", batch1)
     val observedJobs = jobsPerBatch(drain(ckpt1))
     assert(survivors() === Seq(1L, 2L),
       "exactly the gate-clean docs must land")
@@ -3760,16 +3777,7 @@ class StreamingSpec extends SparkSuite {
         .newSpanUnique(d, "text", "doc_id", spanStore).count() === 1,
         s"doc $id leaked into the span store")
     }
-    // batch 2 exercises the dedup legs BEHIND the gates: an exact
-    // copy, a paraphrase, a half-and-half mashup (under the near
-    // threshold — only the span store flags it), and fresh content —
-    // all of which clear the two learned gates first (the ll premise
-    // above covers every batch-2 text)
-    deliver("b2", Seq(
-      (10L, docA, ok),
-      (11L, footerDoc, ok),
-      (12L, mashup, ok),
-      (13L, gammaText, ok)))
+    deliver("b2", batch2)
     val observedJobs1 = jobsPerBatch(drain(ckpt1))
     assert(survivors() === Seq(1L, 2L, 13L),
       "copy/paraphrase/mashup must drop via the store legs")
@@ -3810,12 +3818,43 @@ class StreamingSpec extends SparkSuite {
       .select("batch_id").distinct().count() === 2L,
       "replay must add no yield batch")
     // THE WORK COUNTER: Spark jobs per observed micro-batch (one
-    // barrier + count per stage, the yield and reject writes, the
-    // commit, the three store records) — a composer that adds a
-    // barrier changes this pin
+    // barrier per stage, its row count observed on the barrier's own
+    // job; the yield and reject writes, the commit, the three store
+    // records) — a composer that adds a barrier changes this pin
     assert((observedJobs ++ observedJobs1).toSeq.sortBy(_._1._2)
-      .map(_._2) === Seq(63, 64),
+      .map(_._2) === Seq(45, 46),
       "jobs per observed full-stack micro-batch changed")
+    // THE SAME YIELDS under a RELIABLE checkpoint dir: each barrier is
+    // then a checkpoint to files, and the observed counts ride that
+    // job exactly once. Fresh dedup stores, output and yield dirs; the
+    // session's earlier checkpoint dir (if any) is restored after.
+    val sc = spark.sparkContext
+    val priorDir = sc.getCheckpointDir
+    sc.setCheckpointDir(tmpDir("fsc-reliable-ckdir"))
+    try {
+      val srcR = tmpDir("fsc-reliable-src")
+      val storesR = Seq("hashes", "bands", "windows")
+        .map(n => tmpDir("fsc-reliable-stores") + s"/$n")
+      val yieldR = tmpDir("fsc-reliable-yield")
+      val outR = tmpDir("fsc-reliable-out") + "/docs"
+      val ckptR = tmpDir("fsc-reliable-ckpt")
+      for ((name, rows) <- Seq("b1" -> batch1, "b2" -> batch2)) {
+        deliverTo(srcR, name, rows)
+        drainFeed(srcR, storesR, outR, yieldR, ckptR)
+      }
+      assert(spark.read.parquet(outR).select("doc_id").collect()
+        .map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 13L))
+      assert(spark.read.parquet(s"$yieldR/yields").collect()
+        .map(r => (r.getAs[Long]("batch_id"),
+          r.getAs[String]("outcome")) -> r.getAs[Long]("n_docs"))
+        .toMap === batchYields(),
+        "per-batch yields must not depend on the checkpoint mode")
+      assert(graft.streaming.Streams.readCurationYields(spark, yieldR)
+        .collect().map(r => r.getAs[String]("outcome") ->
+          r.getAs[Long]("n_docs")).toMap === cum,
+        "the yield report must not depend on the checkpoint mode")
+    } finally sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]])
+      .invoke(sc, priorDir)
   }
 
   test("full-stack curation feed against BUCKETED dedup tables: same " +
@@ -4146,7 +4185,7 @@ class StreamingSpec extends SparkSuite {
         s"inline upkeep built a sidecar on the small store $store")
     // THE WORK COUNTER: Spark jobs per maintained observed micro-batch
     assert((jobs0 ++ jobs1).toSeq.sortBy(_._1._2).map(_._2) ===
-      Seq(54, 60), "jobs per maintained observed full-stack micro-batch " +
+      Seq(36, 42), "jobs per maintained observed full-stack micro-batch " +
       "changed")
   }
 
