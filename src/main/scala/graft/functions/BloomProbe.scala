@@ -43,11 +43,12 @@ import org.apache.spark.util.sketch.BloomFilter
   * inside WholeStageCodegen.
   *
   * Shard-file lifecycle: each build writes a fresh generation directory
-  * `<manifest>.d-<uuid>` next to the manifest and commits by atomically
-  * renaming the manifest (which records the generation name); older
-  * generations are garbage-collected after commit. Cache keys embed the
-  * generation directory, so a stale executor cache can never serve a
-  * rebuilt filter's answers.
+  * `<manifest>.d-<uuid>` next to the manifest and commits by installing
+  * the manifest (which records the generation name); shard files and
+  * the manifest install and read through [[graft.ingest.SmallFile]];
+  * older generations are garbage-collected after commit. Cache keys
+  * embed the generation directory, so a stale executor cache can never
+  * serve a rebuilt filter's answers.
   */
 object BloomShards {
 
@@ -86,12 +87,8 @@ object BloomShards {
     // executor-side FS resolution: scheme from the path, config from
     // the executor classpath (core-site/hdfs-site) — the standard
     // task-side Hadoop access path; local FS in local mode
-    val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p)) Vanished
-    else {
-      val in = fs.open(p)
-      try BloomFilter.readFrom(in) finally in.close()
-    }
+    graft.ingest.SmallFile.read(p.getFileSystem(new Configuration()), p)(
+      BloomFilter.readFrom).getOrElse(Vanished)
   }
 
   /** Probe `h` against its shard's filter. Null → false (a null hash
@@ -140,17 +137,11 @@ object BloomShards {
     else v.asInstanceOf[BloomFilter].mightContainBinary(h.getBytes)
   }
 
+  // a task retry or a speculative copy reinstalls identical bits
   private[graft] def writeShard(fs: FileSystem, dir: Path, sid: Int,
-      bloom: BloomFilter): Unit = {
-    val target = new Path(dir, shardFileName(sid))
-    val tmp = new Path(dir,
-      shardFileName(sid) + s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try bloom.writeTo(out) finally out.close()
-    fs.delete(target, false) // retry/speculation rewrites identical bits
-    require(fs.rename(tmp, target),
-      s"bloom shard: could not install $target")
-  }
+      bloom: BloomFilter): Unit =
+    graft.ingest.SmallFile.install(fs, new Path(dir, shardFileName(sid)))(
+      bloom.writeTo)
 
   /** Bytes a Bloom filter spends per recorded element at `fpp` —
     * `-ln(fpp) / ln²2 / 8` (≈1.2 B at 1%). Drives [[autoShards]].

@@ -112,14 +112,15 @@ final case class CosineSimilarity(left: Expression, right: Expression)
   * per element `(long) Math.floor((x−y)·(x−y) · 1e12)` — double
   * subtract, double square, double scale, exact floor-to-long (Spark's
   * floor(double) is the same `math.floor(_).toLong`, NaN → 0) —
-  * summed left-to-right into a long (associative; order irrelevant).
-  * NULL if either array is null, the lengths differ, or any element is
-  * null — exactly the zip_with-pads-with-null / null-poisons-the-fold
-  * behavior (FunctionsSpec pins the parity). Domain note: on element
-  * differences beyond ±3 (unit-scale vectors) the per-element value
-  * approaches 2^63 and the SQL fold ANSI-ERRORS where this kernel
-  * would saturate/wrap — every caller feeds embedding/centroid
-  * vectors, far inside the safe range.
+  * summed left-to-right into a long with `Math.addExact`, so a sum past
+  * 2^63 throws `ArithmeticException` as the ANSI fold does. NULL if
+  * either array is null, the lengths differ, or any element is null —
+  * exactly the zip_with-pads-with-null / null-poisons-the-fold
+  * behavior (FunctionsSpec pins the parity, overflow included).
+  * Domain: one element saturates at Long.MaxValue near |x−y| ≈ 3.0e3
+  * (in both forms); the sum overflows once Σ(x−y)²·1e12 passes 2^63.
+  * Every caller feeds unit-scale embedding/centroid vectors, far
+  * inside both bounds.
   */
 final case class L2Fp(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -150,7 +151,8 @@ final case class L2Fp(left: Expression, right: Expression)
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
       val d = x.getDouble(i) - y.getDouble(i)
-      acc += java.lang.Math.floor(d * d * 1.0e12).toLong
+      acc = java.lang.Math.addExact(acc,
+        java.lang.Math.floor(d * d * 1.0e12).toLong)
       i += 1
     }
     acc
@@ -174,7 +176,8 @@ final case class L2Fp(left: Expression, right: Expression)
          |      ${ev.isNull} = true; break;
          |    }
          |    double $d = $a.getDouble($i) - $b.getDouble($i);
-         |    $acc += (long) java.lang.Math.floor($d * $d * 1.0e12);
+         |    $acc = java.lang.Math.addExact($acc,
+         |      (long) java.lang.Math.floor($d * $d * 1.0e12));
          |  }
          |  if (!${ev.isNull}) {
          |    ${ev.value} = $acc;
@@ -193,8 +196,9 @@ final case class L2Fp(left: Expression, right: Expression)
   * bit-identical to `aggregate(zip_with(a, b, (x, y) ->
   * cast(floor((x * y) * <scale>d) as bigint)), 0L, (acc, d) ->
   * acc + d)` (the q89 random-projection fold at 1e6 and the ADC
-  * batch-LUT fold at 1e12), with the same NULL semantics as
-  * [[L2Fp]]. `scale` must be a foldable double literal.
+  * batch-LUT fold at 1e12), with the same NULL and overflow semantics
+  * as [[L2Fp]]: a sum past the long range throws, as the ANSI fold
+  * does. `scale` must be a foldable double literal.
   */
 final case class DotFp(first: Expression, second: Expression,
     third: Expression)
@@ -231,8 +235,8 @@ final case class DotFp(first: Expression, second: Expression,
     var i = 0
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      acc += java.lang.Math
-        .floor(x.getDouble(i) * y.getDouble(i) * scale).toLong
+      acc = java.lang.Math.addExact(acc, java.lang.Math
+        .floor(x.getDouble(i) * y.getDouble(i) * scale).toLong)
       i += 1
     }
     acc
@@ -254,8 +258,8 @@ final case class DotFp(first: Expression, second: Expression,
          |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
          |      ${ev.isNull} = true; break;
          |    }
-         |    $acc += (long) java.lang.Math.floor(
-         |      $a.getDouble($i) * $b.getDouble($i) * ${scale}D);
+         |    $acc = java.lang.Math.addExact($acc, (long) java.lang.Math.floor(
+         |      $a.getDouble($i) * $b.getDouble($i) * ${scale}D));
          |  }
          |  if (!${ev.isNull}) {
          |    ${ev.value} = $acc;

@@ -4,25 +4,28 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Immutable-generation + manifest commit protocol — the
   * [[graft.operators.AnnIndex]] versioned-index lifecycle (which
-  * installs, resolves and GCs its generations here) generalized
-  * for every standing artifact that previously installed by renaming
-  * a directory onto a mutable name (the r19 verdict's rename-atomicity
-  * gap: HDFS renames directories atomically, object stores do not, so
-  * a directory swap can expose a half-visible store at exactly the
-  * scale this engine targets). Layout under one `root`:
+  * installs, resolves and GCs its generations here), also used by
+  * `LlmPipeline`'s standing stores. No directory is renamed onto a
+  * mutable name (HDFS renames directories atomically, object stores do
+  * not, so a directory swap can expose a half-visible store at exactly
+  * the scale this engine targets). The one filesystem directory rename
+  * left in the engine is [[Warehouse.recordStatuses]]' control-table
+  * swap, which this protocol does not cover (a bucketed store's
+  * compaction swaps tables through the catalog instead,
+  * [[StoreLayout.Bucketed]]). Layout under one `root`:
   *
   *   root/_manifest        commit point: the live generation's name
   *   root/gen-<uuid>/      one IMMUTABLE generation (never mutated,
   *                         never renamed after its build completes)
   *
   * Writers build into a FRESH generation directory and commit by
-  * installing the manifest — a temp FILE plus one single-file rename,
-  * the only rename in the protocol: no directory is ever renamed, and
-  * no rename ever targets an existing destination, so the protocol
-  * never leans on rename(dst-exists) semantics. Readers resolve the
-  * manifest and then read an immutable directory; a reader can never
-  * observe a partial generation because the manifest is written only
-  * after `build` returns. The previously live generation is RETAINED
+  * installing the manifest ([[SmallFile.install]]: a temp FILE plus
+  * one single-file rename, the only rename in the protocol — no
+  * directory is ever renamed, and no rename ever targets an existing
+  * destination). Readers resolve the manifest and then read an
+  * immutable directory; a reader can never observe a partial
+  * generation because the manifest is written only after `build`
+  * returns. The previously live generation is RETAINED
   * for one install cycle (an in-flight reader that resolved just
   * before a swap finishes against intact files — the AnnIndex GC
   * posture); older generations, and junk left by crashed builds, are
@@ -39,30 +42,13 @@ object Generations {
 
   def manifestPath(root: Path): Path = new Path(root, "_manifest")
 
-  /** The live generation's name, if one is installed.
-    *
-    * exists-then-open is a TOCTOU against a concurrent installer's
-    * delete+rename commit window; a reader that loses the race sees
-    * FileNotFoundException on open, which MEANS "between manifests" —
-    * report absent (exactly what exists=false would have said a
-    * millisecond earlier), never throw. Callers treat absent as
-    * rebuild-or-retry, so the documented reader guarantee (never a
-    * partial store) holds through the window.
+  /** The live generation's name, if one is installed. A reader inside
+    * an install's delete-then-rename window reads absent
+    * ([[SmallFile.read]]), which callers treat as rebuild-or-retry, so
+    * the reader guarantee (never a partial store) holds through it.
     */
-  def current(fs: FileSystem, root: Path): Option[String] = {
-    val m = manifestPath(root)
-    if (!fs.exists(m)) None
-    else {
-      try {
-        val in = fs.open(m)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim).filter(_.nonEmpty)
-        finally in.close()
-      } catch {
-        case _: java.io.FileNotFoundException => None
-      }
-    }
-  }
+  def current(fs: FileSystem, root: Path): Option[String] =
+    SmallFile.readText(fs, manifestPath(root)).filter(_.nonEmpty)
 
   /** The live generation's directory, if one is installed. */
   def resolve(fs: FileSystem, root: Path): Option[Path] =
@@ -71,8 +57,8 @@ object Generations {
   /** Build a fresh generation and commit it: `build` fills the new
     * directory (a throw aborts with the manifest — and every reader —
     * untouched; the junk directory is GC'd by the next successful
-    * install), then the manifest installs via temp file + single-file
-    * rename. Returns the new generation directory.
+    * install), then the manifest installs ([[SmallFile.install]]).
+    * Returns the new generation directory.
     */
   def install(fs: FileSystem, root: Path)(
       build: Path => Unit): Path = {
@@ -87,23 +73,16 @@ object Generations {
     // predecessor, or a reader that resolved it moments ago loses
     // the directory under its feet
     val superseded = current(fs, root)
-    val tmp = new Path(root, s"_manifest.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(m, false)
-    require(fs.rename(tmp, m), s"Generations: could not install $m")
+    SmallFile.installText(fs, m, gen)
     // GC: every generation except the new one and its predecessors
     // (in-flight-reader retention), plus stale manifest temp files
     val keep: Set[String] = Set(gen) ++ previous ++ superseded
-    for (st <- fs.listStatus(root)
-         if st.isDirectory && st.getPath.getName.startsWith("gen-") &&
-           !keep.contains(st.getPath.getName))
-      fs.delete(st.getPath, true)
-    for (st <- fs.listStatus(root)
-         if st.isFile && st.getPath.getName.startsWith("_manifest.tmp-") &&
-           st.getPath.getName != tmp.getName)
-      fs.delete(st.getPath, false)
+    for (st <- fs.listStatus(root)) {
+      val n = st.getPath.getName
+      if (st.isDirectory && n.startsWith("gen-") && !keep.contains(n) ||
+          st.isFile && SmallFile.isTempOf(m, n))
+        fs.delete(st.getPath, true)
+    }
     genDir
   }
 }

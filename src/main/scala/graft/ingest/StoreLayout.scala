@@ -223,9 +223,9 @@ sealed trait StoreLayout {
 
   /** Build/replace the Bloom sidecar over `spec.probeCol`: one pass
     * over the current data files → a sharded filter set at `fpp`,
-    * installed atomically by the manifest rename together with the
-    * covered file names. An empty store removes the sidecar and
-    * returns 0; otherwise returns the keys covered.
+    * committed by installing the manifest ([[SmallFile.install]])
+    * together with the covered file names. An empty store removes the
+    * sidecar and returns 0; otherwise returns the keys covered.
     */
   private[ingest] def buildSidecar(spark: SparkSession, spec: KeySpec,
       fpp: Double, numShards: Int): Long = {
@@ -277,8 +277,10 @@ object StoreLayout {
   /** A parquet directory store, plain appends, with its metadata in
     * siblings: `<dir>.hashform`, `<dir>.stride`, `<dir>.tombstones`,
     * `<dir>.bloom`, and a staging sibling while a staged write runs
-    * ([[stageIn]]). A path read always plans a store-side shuffle in a
-    * probe join — fine while the store is small next to its batches.
+    * ([[stageIn]]). The `.hashform` and `.stride` files install and
+    * read through [[SmallFile]]. A path read always plans a store-side
+    * shuffle in a probe join — fine while the store is small next to
+    * its batches.
     */
   final case class Path(dir: String) extends StoreLayout {
     private[ingest] def name: String = dir
@@ -302,30 +304,12 @@ object StoreLayout {
 
     private def sibling(suffix: String) = new HPath(dir + suffix)
 
-    private def readSibling(spark: SparkSession, suffix: String): Option[String] = {
-      val p = sibling(suffix)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        finally in.close()
-      }
-    }
+    private def readSibling(spark: SparkSession, suffix: String): Option[String] =
+      SmallFile.readText(fs(spark), sibling(suffix))
 
-    /** Atomic tmp-write + rename of a metadata sibling. */
     private def writeSibling(spark: SparkSession, suffix: String,
-        value: String): Unit = {
-      val p = sibling(suffix)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val tmp = new HPath(p.getParent,
-        p.getName + s".tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(p, false)
-      require(fs.rename(tmp, p), s"could not install $p")
-    }
+        value: String): Unit =
+      SmallFile.installText(fs(spark), sibling(suffix), value)
 
     private[graft] def meta(spark: SparkSession): (String, Int) =
       (readSibling(spark, ".hashform").getOrElse(HashForm.Md5),
@@ -725,43 +709,37 @@ object StoreLayout {
     * covers, plus the generation directory (sibling of the manifest)
     * holding the per-shard filters and the shard count that routes a
     * hash to its filter. The manifest is the COMMIT POINT — shard files
-    * are fully written before the manifest's atomic rename installs
-    * them, and the generation uuid in the directory name makes executor
+    * are fully written before [[SmallFile.install]] installs it, and
+    * the generation uuid in the directory name makes executor
     * caches and concurrent readers immune to rebuilds.
     */
   private[graft] case class ShardedSidecar(covered: Set[String],
       shardDirName: String, numShards: Int)
 
   private def writeSidecar(fs: FileSystem, target: HPath, files: Seq[HPath],
-      shardDirName: String, numShards: Int): Unit = {
-    val tmp = new HPath(target.getParent,
-      target.getName + s".tmp-${java.util.UUID.randomUUID()}")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try {
+      shardDirName: String, numShards: Int): Unit =
+    SmallFile.install(fs, target) { out =>
       out.writeInt(2) // sidecar format version (2 = sharded)
       out.writeInt(files.size)
       files.foreach(f => out.writeUTF(f.getName))
       out.writeUTF(shardDirName)
       out.writeInt(numShards)
-    } finally out.close()
-    fs.delete(target, false)
-    require(fs.rename(tmp, target), s"bloom sidecar: could not install $target")
-  }
+    }
 
   /** Read a sidecar manifest. Unknown versions (including the retired
     * v1 single-filter format) read as ABSENT — the probes fall back to
-    * the exact plain-join plan, never to a misinterpreted filter.
+    * the exact plain-join plan, never to a misinterpreted filter — and
+    * so does a manifest a concurrent rebuild is installing.
     */
   private[graft] def readSidecar(fs: FileSystem,
-      target: HPath): Option[ShardedSidecar] = {
-    if (!fs.exists(target)) return None
-    val in = new java.io.DataInputStream(fs.open(target))
-    try {
-      if (in.readInt() != 2) return None
-      val names = Seq.fill(in.readInt())(in.readUTF()).toSet
-      Some(ShardedSidecar(names, in.readUTF(), in.readInt()))
-    } finally in.close()
-  }
+      target: HPath): Option[ShardedSidecar] =
+    SmallFile.read(fs, target) { in =>
+      if (in.readInt() != 2) None
+      else {
+        val names = Seq.fill(in.readInt())(in.readUTF()).toSet
+        Some(ShardedSidecar(names, in.readUTF(), in.readInt()))
+      }
+    }.flatten
 
   /** The generation directory a manifest points at, if it still exists
     * — a vanished directory would turn every probe into a false
@@ -789,10 +767,10 @@ object StoreLayout {
     * the manifest (inside a bucketed table it keeps the underscore
     * prefix every parquet reader ignores), fill it with executor-built
     * per-shard filters ([[graft.functions.BloomShards]] — no
-    * driver-memory merge at any store size), commit via the manifest's
-    * atomic rename, then garbage-collect older generations. A crash
-    * before the commit leaves the previous manifest and generation
-    * intact. `numShards` = 0 derives the count from the row count so
+    * driver-memory merge at any store size), commit by installing the
+    * manifest ([[SmallFile.install]]), then garbage-collect older
+    * generations. A crash before the commit leaves the previous
+    * manifest and generation intact. `numShards` = 0 derives the count from the row count so
     * each shard filter lands near BloomShards.TargetShardBytes.
     */
   private def buildShardedSidecar(spark: SparkSession, df: DataFrame,

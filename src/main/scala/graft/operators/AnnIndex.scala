@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
-import graft.ingest.{Generations, Snapshots, StoreLayout}
+import graft.ingest.{Generations, SmallFile, Snapshots, StoreLayout}
 
 /** Disk-backed IVF index — the AT-REST form of the inverted-file ANN
   * the query-side operators assume (q40/q85 say "the inverted list is
@@ -131,9 +131,10 @@ object AnnIndex {
   //
   // — the [[graft.ingest.Generations]] protocol, which installs,
   // resolves and GCs every generation here: a rebuild fills a FRESH
-  // uuid'd directory, the manifest's atomic rename installs it, and a
-  // reader that resolved the old generation keeps a complete immutable
-  // directory under its feet. GC retains the PREVIOUS generation for
+  // uuid'd directory, installing the manifest commits it
+  // ([[graft.ingest.SmallFile.install]]), and a reader that resolved
+  // the old generation keeps a complete immutable directory under its
+  // feet. GC retains the PREVIOUS generation for
   // one full rebuild cycle (deleting only older-still generations), so
   // a query planned just before a swap finishes against intact files —
   // the lesson of the bloom GC race, applied before the same bug could
@@ -195,7 +196,7 @@ object AnnIndex {
         KMeans.statsOf(KMeans.assign(embeddings.select("vec_id", "v"),
             centroidFrame(spark, centroids)))
           .write.mode(SaveMode.Overwrite)
-          .parquet(s"$dir/_lloyd/batch=-1")
+          .parquet(Snapshots.batchDir(new Path(genDir, "_lloyd"), -1).toString)
     }.getName
   }
 
@@ -210,8 +211,8 @@ object AnnIndex {
   // applied to the trainer. So a generation built with
   // `lloydStats = true` SEEDS `<gen>/_lloyd` with the stats of its own
   // vectors, the streaming appender FOLDS each micro-batch's stats in
-  // as it appends (same versioned `batch=<id>` + `_SUCCESS` commit
-  // protocol as the maintained snapshots, exactly-once per batch id),
+  // as it appends (the maintained snapshots' versioned `batch=<id>`
+  // commit, [[graft.ingest.Snapshots.commit]], exactly-once per batch id),
   // and when IndexStats.retrainDue fires, [[retrainFromStats]] reads
   // ONE KB-scale frame, derives the stepped centroids
   // ([[KMeans.centroidsFromStats]] — bit-identical arithmetic to the
@@ -296,7 +297,7 @@ object AnnIndex {
     * its own, because every assignment it runs ([[KMeans.assign]] in
     * the step and the stats, [[assignByCosine]] in the layout write)
     * keeps one row per `vec_id` through its per-`vec_id` window. The
-    * install is unconditional (fresh uuid directory + manifest rename
+    * install is unconditional (fresh uuid directory + manifest install
     * — no abort path), so the applied snapshot can be cleared.
     */
   private def rebuild(spark: SparkSession, root: String,
@@ -742,6 +743,9 @@ object AnnIndex {
   //                                byte (code rank) per subspace, same
   //                                inverted-list partitioning as the
   //                                floats (see pqRankArrayExpr)
+  //   <root>/gen-X/_pq_covered     the commit point: the float files
+  //                                the codes cover, installed last
+  //                                ([[graft.ingest.SmallFile.install]])
   //
   // [[topKPq]] then serves top-k from the CODES: the query's
   // exact per-(sub, code) distances become an m×k literal lookup
@@ -794,31 +798,19 @@ object AnnIndex {
     } yield (s"${d.getPath.getName}/${f.getPath.getName}", f)
 
   private def writePqManifest(fs: FileSystem, genDir: String,
-      names: Seq[String]): Unit = {
-    val m = pqManifestPath(genDir)
-    val tmp = new Path(m.getParent,
-      m.getName + s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(names.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(m, false)
-    require(fs.rename(tmp, m), s"AnnIndex: could not install $m")
-  }
+      names: Seq[String]): Unit =
+    SmallFile.installText(fs, pqManifestPath(genDir), names.mkString("\n"))
 
   /** The covered-files watermark of a COMMITTED sidecar: None when
     * the generation has no `_pq` codes or no manifest (codes without
-    * one are a partial build and serve nothing).
+    * one are a partial build and serve nothing), including while a
+    * rebuild installs the manifest ([[SmallFile.read]]).
     */
-  private[operators] def readPqManifest(fs: FileSystem,
-      genDir: String): Option[Set[String]] = {
-    val m = pqManifestPath(genDir)
-    if (!fs.exists(new Path(pqDir(genDir))) || !fs.exists(m)) return None
-    val in = fs.open(m)
-    try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().map(_.trim).filter(_.nonEmpty).toSet)
-    finally in.close()
-  }
+  private[graft] def readPqManifest(fs: FileSystem,
+      genDir: String): Option[Set[String]] =
+    if (!fs.exists(new Path(pqDir(genDir)))) None
+    else SmallFile.readText(fs, pqManifestPath(genDir))
+      .map(_.split("\n").map(_.trim).filter(_.nonEmpty).toSet)
 
   /** Train a PQ codebook on the CURRENT generation's vectors and write
     * the compressed serving sidecar into the generation directory.
@@ -890,14 +882,15 @@ object AnnIndex {
       .sortBy(t => (t._1, t._2)).toSeq
 
   /** Quantized squared-L2, driver-side — the exact [[KMeans.distFp]]
-    * spelling (same IEEE ops, same floor), so the LUT can never
-    * disagree with what a distributed re-computation would produce.
+    * spelling (same IEEE ops, same floor, same throw on a sum past the
+    * long range), so the LUT can never disagree with what a
+    * distributed re-computation would produce.
     */
   private def distFpLocal(a: Array[Double], b: Array[Double]): Long = {
     var s = 0L; var i = 0
     while (i < a.length) {
       val d = a(i) - b(i)
-      s += math.floor(d * d * 1000000000000d).toLong
+      s = Math.addExact(s, math.floor(d * d * 1000000000000d).toLong)
       i += 1
     }
     s

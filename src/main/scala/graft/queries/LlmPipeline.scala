@@ -4379,9 +4379,9 @@ object LlmPipeline {
     * distinct/append or the prober's gram join breaks the hash
     * against q53's own SQL. The store lives at a DETERMINISTIC
     * temp-dir path keyed by the table directory and registers ONCE
-    * per completed build (a `.complete` marker commits it; a partial
-    * crash rebuilds from scratch) — registration is "offline" in the
-    * operator's own doctrine, so bench reps time the PROBE path
+    * per completed build ([[standingStore]]: a manifest install
+    * commits it; a partial crash rebuilds from scratch) — registration
+    * is "offline" in the operator's own doctrine, so bench reps time the PROBE path
     * against a standing store rather than re-paying the write job,
     * and /tmp holds one store per sf-dir instead of one per
     * invocation. Re-registration would be harmless anyway (the probe
@@ -4422,9 +4422,7 @@ object LlmPipeline {
     * and the predecessor is retained one install cycle for in-flight
     * readers. Superseded sibling KEYS (regenerated testdata) are
     * pruned only after a successful install, scoped to this table
-    * directory's `dirKey` and never matching legacy `-staging-`
-    * names; legacy pre-manifest layouts (marker-file roots, aged
-    * staging dirs) get a one-time marked-or-aged sweep.
+    * directory's `dirKey`.
     */
   private[graft] def standingStore(s: SparkSession, dir: String,
       tag: String, srcTable: String = "documents")(
@@ -4466,40 +4464,11 @@ object LlmPipeline {
     val G = graft.ingest.Generations
     if (G.resolve(fs, root).isEmpty) {
       G.install(fs, root)(gen => build(s"$gen/store"))
-      // legacy intra-root layout (a pre-Generations `store` +
-      // `store.complete` under this root): settled junk once a
-      // manifest generation serves — swept so the root holds only
-      // the generation layout
-      fs.delete(new org.apache.hadoop.fs.Path(root, "store"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(root, "store.complete"),
-        true)
       // prune superseded KEYS of this table directory only, and only
-      // after our install succeeded; legacy staging dirs carry
-      // `-staging-` (never a hex dirKey segment) and are excluded
+      // after our install succeeded
       fs.globStatus(new org.apache.hadoop.fs.Path(
           s"$tmpDir/graft-$tag-$dirKey-*"))
-        .filter(st => st.getPath.getName != root.getName &&
-          !st.getPath.getName.contains("-staging-"))
-        .foreach(st => fs.delete(st.getPath, true))
-      // legacy sweeps (pre-Generations layouts), kept one transition
-      // round: orphaned `-staging-` dirs from crashed r19 builders
-      // age out; pre-dirKey roots (graft-<tag>-<32 hex>) settle by
-      // their old marker or by age — no current reader resolves
-      // either layout
-      val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-      fs.globStatus(new org.apache.hadoop.fs.Path(
-          s"$tmpDir/graft-$tag-staging-*"))
-        .filter(st => st.getModificationTime < cutoff)
-        .foreach(st => fs.delete(st.getPath, true))
-      val oldLayout =
-        ("graft-" + java.util.regex.Pattern.quote(tag) +
-          "-[0-9a-f]{32}").r
-      fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmpDir/graft-$tag-*"))
-        .filter(st =>
-          oldLayout.pattern.matcher(st.getPath.getName).matches())
-        .filter(st => fs.exists(new org.apache.hadoop.fs.Path(
-            st.getPath, "store.complete")) ||
-          st.getModificationTime < cutoff)
+        .filter(_.getPath.getName != root.getName)
         .foreach(st => fs.delete(st.getPath, true))
     }
     s"${G.resolve(fs, root).get}/store"

@@ -1079,8 +1079,8 @@ object Streams {
     * keep-thresholds and disjoint-hash shard assignment
     * ([[graft.operators.CorpusExport.selectAndShard]], shared
     * verbatim), lands exactly-once in `outDir/data/batch=<id>/shard=N/`
-    * (the `batch=<id>` + `_SUCCESS` commit protocol of
-    * [[curationFeed]] — committed batches skip on replay), and
+    * ([[graft.ingest.Snapshots.writeBatch]], as in [[curationFeed]] —
+    * committed batches skip on replay), and
     * the per-group manifest accumulates in
     * `outDir/_export_manifest/batch=<id>` via the versioned-snapshot
     * commit of [[maintainTermStats]]
@@ -1132,16 +1132,13 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val dataDir = new org.apache.hadoop.fs.Path(
-          s"$outDir/data", s"batch=$batchId")
-        val fs = dataDir.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(
-            new org.apache.hadoop.fs.Path(dataDir, "_SUCCESS"))) {
-          fs.delete(dataDir, true) // partial leftovers from a crash
+        val data = new org.apache.hadoop.fs.Path(s"$outDir/data")
+        Snapshots.writeBatch(spark, data, batchId) { dir =>
           select(batch)
             .repartition(col("shard"))
-            .write.partitionBy("shard").parquet(dataDir.toString)
+            .write.partitionBy("shard").parquet(dir.toString)
         }
+        val dataDir = Snapshots.batchDir(data, batchId)
         // manifest: accumulated from the COMMITTED read-back (what
         // landed, not what the plan promised)
         Snapshots.commit(spark, new org.apache.hadoop.fs.Path(
@@ -1261,12 +1258,13 @@ object Streams {
     *
     * Delivery semantics, per crash window (foreachBatch replays are
     * at-least-once):
-    *  - survivors in `outDir` are EXACTLY-ONCE: a replayed batch id
+    *  - survivors in `outDir` are EXACTLY-ONCE
+    *    ([[graft.ingest.Snapshots.writeBatch]]): a replayed batch id
     *    that already has its `_SUCCESS` marker is not rewritten (a
     *    replay AFTER the stores recorded would recompute an EMPTY
     *    survivor set and overwrite data with nothing), and a
-    *    half-written directory (no marker) is recomputed from the
-    *    unchanged stores and overwritten cleanly. A replayed committed
+    *    half-written directory (no marker) is cleared and recomputed
+    *    from the unchanged stores. A replayed committed
     *    batch skips every check, so gates and yields run once per
     *    batch id;
     *  - store records are AT-LEAST-ONCE: recorded from the committed
@@ -1309,23 +1307,23 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val target = new org.apache.hadoop.fs.Path(outDir, s"batch=$batchId")
-        val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))) {
+        val root = new org.apache.hadoop.fs.Path(outDir)
+        Snapshots.writeBatch(spark, root, batchId) { dir =>
           yieldDir match {
             // the observed run returns its final barrier, already
             // materialized; it releases at the next batch
             case Some(yd) => observedStageRun(stages, idCol, textCol, yd,
               rejectSampleSlots, pendingRelease)(batch, batchId)
-              .write.mode("overwrite").parquet(target.toString)
+              .write.parquet(dir.toString)
             case None =>
               // one evaluation feeds the write
               val fresh = graft.operators.Exec.materialize(
                 stages.foldLeft(batch)((d, s) => s.check(d)))
-              try fresh.write.mode("overwrite").parquet(target.toString)
+              try fresh.write.parquet(dir.toString)
               finally graft.operators.Exec.release(fresh)
           }
         }
+        val target = Snapshots.batchDir(root, batchId)
         val committed = spark.read
           .schema(StructType(batch.schema ++ stages.flatMap(_.addedColumns)))
           .parquet(target.toString)

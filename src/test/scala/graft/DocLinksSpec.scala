@@ -27,23 +27,7 @@ class DocLinksSpec extends AnyFunSuite {
     link.trim.replaceAll(raw"\(.*\)$$", "").split("[.#]").last
       .stripSuffix("$").stripSuffix("!")
 
-  private lazy val lines: Seq[(java.nio.file.Path, Int, String)] = {
-    val root = java.nio.file.Paths.get("src", "main", "scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"run from the repository root: no $root under " +
-        sys.props("user.dir"))
-    import scala.jdk.CollectionConverters._
-    val files = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.toSeq
-        .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
-      finally s.close()
-    }
-    files.flatMap { f =>
-      java.nio.file.Files.readAllLines(f).asScala.toSeq
-        .zipWithIndex.map { case (l, i) => (f, i + 1, l) }
-    }
-  }
+  private def lines = MainSources.lines
 
   private lazy val defined: Set[String] = lines.flatMap { case (_, _, l) =>
     Definition.findAllMatchIn(l).map(_.group(1)) ++
@@ -51,9 +35,7 @@ class DocLinksSpec extends AnyFunSuite {
   }.toSet
 
   private def commentLines = lines.filter { case (_, _, l) =>
-    val t = l.trim
-    t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
-  }
+    MainSources.isComment(l) }
 
   test("every scaladoc [[link]] in src/main/scala names a definition " +
     "in src/main/scala") {

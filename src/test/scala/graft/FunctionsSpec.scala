@@ -166,7 +166,8 @@ class FunctionsSpec extends SparkSuite {
     Functions.register(spark)
     val rnd = new scala.util.Random(21)
     // domain = unit-scale embedding/centroid vectors (values where the
-    // SQL fold itself is ANSI-safe; a 1e8 element overflows BOTH forms)
+    // SQL fold itself is ANSI-safe; an overflowing sum throws in BOTH
+    // forms, checked below)
     val rows = Seq.fill(128)((
       Array.fill(64)(rnd.nextDouble() * 2 - 1),
       Array.fill(64)(rnd.nextDouble() * 2 - 1))) ++
@@ -190,7 +191,26 @@ class FunctionsSpec extends SparkSuite {
       assert(r.isNullAt(0) === r.isNullAt(1))
       if (!r.isNullAt(0)) assert(r.getLong(0) === r.getLong(1))
     }
+    // each element 6.25e18 (below the per-element saturation), the sum
+    // past 2^63: the ANSI fold raises, and so must the kernel
+    val over = Seq((Array(1250.0, 1250.0), Array(-1250.0, -1250.0)))
+      .toDF("a", "b")
+    for (e <- Seq("l2_fp(a, b)", foldSql)) overflows(over, e)
   }
+
+  /** `e` over `df` throws an ArithmeticException on both evaluation
+    * paths: a projection over a local relation may be folded by the
+    * optimizer (interpreted), one over a shuffle runs in whole-stage
+    * codegen.
+    */
+  private def overflows(df: org.apache.spark.sql.DataFrame,
+      e: String): Unit =
+    for (d <- Seq(df, df.repartition(1))) {
+      val ex = intercept[Exception](d.select(expr(e)).collect())
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]),
+        s"$e: expected a long overflow, got $ex")
+    }
 
   test("pq_codes matches the transform/array_min struct composition " +
     "it replaces, including null/short/long-vector, null-element and " +
@@ -333,6 +353,12 @@ class FunctionsSpec extends SparkSuite {
           expr(foldSql).as("ref"))
         .collect()
       got.foreach(r => assert(r.getLong(0) === r.getLong(1)))
+      // each element 6.25e18 at this scale, the sum past 2^63: both
+      // forms throw
+      val v = math.sqrt(6.25e18 / scale.stripSuffix("d").toDouble)
+      overflows(Seq((Array(v, v), Array(v, v))).toDF("a", "b"),
+        s"dot_fp(a, b, $scale)")
+      overflows(Seq((Array(v, v), Array(v, v))).toDF("a", "b"), foldSql)
     }
     val edge = Seq(
       (null.asInstanceOf[Seq[Double]], Seq(1.0)),

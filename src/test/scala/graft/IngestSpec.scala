@@ -804,6 +804,101 @@ class IngestSpec extends SparkSuite {
     assert(G.resolve(fs, root).contains(g3))
   }
 
+  test("SmallFile: a throwing install leaves the previous target " +
+    "byte-identical and no temp file; an absent target reads None") {
+    val F = graft.ingest.SmallFile
+    val dir = new org.apache.hadoop.fs.Path(tmpDir("smallfile"))
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val target = new org.apache.hadoop.fs.Path(dir, "meta")
+    assert(F.read(fs, target)(_.read()).isEmpty, "absent target")
+    assert(F.readText(fs, target).isEmpty)
+    F.installText(fs, target, "v1")
+    intercept[IllegalStateException] {
+      F.install(fs, target) { out =>
+        out.write("partial".getBytes("UTF-8"))
+        throw new IllegalStateException("writer died mid-install")
+      }
+    }
+    assert(F.readText(fs, target).contains("v1"),
+      "a failed install must leave the previous target")
+    val bytes = F.read(fs, target)(_.readAllBytes()).get
+    assert(bytes.toSeq === "v1".getBytes("UTF-8").toSeq)
+    assert(fs.listStatus(dir).map(_.getPath.getName)
+      .filter(n => n.contains(".tmp-")).isEmpty,
+      "a failed install must delete its temp file")
+    F.installText(fs, target, "v2")
+    assert(F.readText(fs, target).contains("v2"))
+    assert(fs.listStatus(dir).map(_.getPath.getName)
+      .filter(n => !n.startsWith(".")).toSeq === Seq("meta"))
+  }
+
+  test("a reader that finds an installed file present but loses it to " +
+    "the install window reads absent: the Generations manifest, the " +
+    "Bloom sidecar manifest and the PQ covered-files manifest") {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, FilterFileSystem, Path}
+    val dir = new Path(tmpDir("installwindow"))
+    val local = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    // reports `target` present, as exists/getFileStatus did just before
+    // a concurrent install deleted it, and then fails the open
+    def racing(target: Path): FileSystem = new FilterFileSystem(local) {
+      private def hit(p: Path) = makeQualified(p) == makeQualified(target)
+      override def exists(p: Path): Boolean = hit(p) || super.exists(p)
+      override def getFileStatus(p: Path): FileStatus =
+        if (hit(p)) new FileStatus(8L, false, 1, 4096L, 0L, makeQualified(p))
+        else super.getFileStatus(p)
+      override def open(p: Path,
+          bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+        if (hit(p)) throw new java.io.FileNotFoundException(p.toString)
+        else super.open(p, bufferSize)
+    }
+    val root = new Path(dir, "gens")
+    assert(graft.ingest.Generations.current(
+      racing(graft.ingest.Generations.manifestPath(root)), root).isEmpty)
+    val bloom = new Path(dir, "store.bloom")
+    assert(graft.ingest.StoreLayout.readSidecar(racing(bloom), bloom)
+      .isEmpty)
+    val gen = new Path(dir, "gen-1")
+    assert(local.mkdirs(new Path(gen, "_pq")))
+    assert(graft.operators.AnnIndex.readPqManifest(
+      racing(new Path(gen, "_pq_covered")), gen.toString).isEmpty)
+  }
+
+  test("Snapshots.writeBatch: a batch directory holding part files but " +
+    "no _SUCCESS is cleared and rewritten; a committed one is skipped " +
+    "with its files untouched") {
+    import spark.implicits._
+    val S = graft.ingest.Snapshots
+    val root = new org.apache.hadoop.fs.Path(tmpDir("batchwrite"), "out")
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dir = S.batchDir(root, 3L)
+    // a crashed write: a part file landed, the job never committed
+    val stale = new org.apache.hadoop.fs.Path(dir, "part-00000-crashed.parquet")
+    val out = fs.create(stale, true)
+    try out.write("not parquet".getBytes("UTF-8")) finally out.close()
+    assert(S.committed(fs, root).isEmpty, "no marker, no commit")
+    assert(S.writeBatch(spark, root, 3L)(d =>
+      Seq(1L, 2L).toDF("x").write.parquet(d.toString)))
+    assert(!fs.exists(stale), "the crashed write's part file survived")
+    assert(S.committed(fs, root) === Seq(3L))
+    assert(spark.read.parquet(dir.toString).as[Long].collect().sorted
+      .toSeq === Seq(1L, 2L))
+    def files() = fs.listStatus(dir).map(st =>
+      (st.getPath.getName, st.getLen, st.getModificationTime)).toSet
+    val before = files()
+    assert(!S.writeBatch(spark, root, 3L)(_ =>
+      sys.error("a committed batch must not be rewritten")))
+    assert(files() === before)
+    // the versioned commit writes through the same rule
+    val snap = S.batchDir(root, 4L)
+    assert(fs.mkdirs(snap) && fs.createNewFile(
+      new org.apache.hadoop.fs.Path(snap, "part-00000-crashed.parquet")))
+    assert(S.commit(spark, root, 4L)(prev =>
+      prev.get.selectExpr("x + 10 AS x")))
+    assert(spark.read.parquet(snap.toString).as[Long].collect().sorted
+      .toSeq === Seq(11L, 12L))
+    assert(!S.commit(spark, root, 4L)(_ => sys.error("replayed")))
+  }
+
   test("sharded bloom sidecar: per-shard executor-built filters, each " +
     "sized for its own shard (build memory bounded by largest shard, " +
     "never the store); rebuild GCs the old generation") {

@@ -1379,8 +1379,8 @@ class LlmPipelineSpec extends SparkSuite {
     "root, build-once per (tag, dir, fingerprint); a crashed build " +
     "leaves no manifest and a clean retry; a mid-build concurrent " +
     "install converges under last-writer-wins with the predecessor " +
-    "retained; reinstall prunes superseded keys and legacy layouts " +
-    "but spares other directories' stores and young staging dirs") {
+    "retained; reinstall prunes superseded keys but spares other " +
+    "directories' stores and in-flight staging dirs") {
     val confRoot = java.nio.file.Files
       .createTempDirectory("graft-ss-root").toString
     spark.conf.set("spark.graft.standingStoreRoot", confRoot)
@@ -1423,10 +1423,8 @@ class LlmPipelineSpec extends SparkSuite {
       }
       assert(!new java.io.File(rootDir, "_manifest").exists(),
         "a crashed build must not commit a manifest")
-      // superseded KEY of THIS dir is pruned on reinstall; a legacy
-      // in-flight staging dir survives; legacy pre-dirKey roots get
-      // the marked-or-aged sweep; legacy intra-root store layout is
-      // cleared once a generation serves
+      // superseded KEY of THIS dir is pruned on reinstall; an
+      // in-flight staging dir survives
       val base = rootDir.getName
       val keyPrefix = base.substring(0, base.lastIndexOf('-') + 1)
       val oldKey = new java.io.File(confRoot, keyPrefix + "0ldkey")
@@ -1434,31 +1432,12 @@ class LlmPipelineSpec extends SparkSuite {
       val inflight = new java.io.File(confRoot,
         "graft-spec-tag-staging-inflight")
       assert(new java.io.File(inflight, "store").mkdirs())
-      val oldMarked = new java.io.File(confRoot,
-        "graft-spec-tag-" + "a" * 32)
-      assert(new java.io.File(oldMarked, "store").mkdirs())
-      java.nio.file.Files.write(java.nio.file.Paths.get(
-        oldMarked.getPath, "store.complete"), Array.empty[Byte])
-      val oldUnmarked = new java.io.File(confRoot,
-        "graft-spec-tag-" + "b" * 32)
-      assert(new java.io.File(oldUnmarked, "store").mkdirs())
-      // legacy intra-root layout under THIS key's root
-      assert(new java.io.File(rootDir, "store").mkdirs())
-      java.nio.file.Files.write(java.nio.file.Paths.get(
-        rootDir.getPath, "store.complete"), Array.empty[Byte])
       val preBuilds = builds
       val p2 = LlmPipeline.standingStore(spark, sf, "spec-tag")(build)
       assert(builds === preBuilds + 1, "no manifest -> rebuild")
       assert(new java.io.File(p2, "data.txt").exists())
       assert(!oldKey.exists(), "superseded key survived the prune")
       assert(inflight.exists(), "in-flight staging dir was pruned")
-      assert(!oldMarked.exists(),
-        "marked old-layout root survived the upgrade sweep")
-      assert(oldUnmarked.exists(),
-        "fresh unmarked old-layout root was swept (mid-install hazard)")
-      assert(!new java.io.File(rootDir, "store").exists() &&
-        !new java.io.File(rootDir, "store.complete").exists(),
-        "legacy intra-root layout survived the sweep")
       assert(new java.io.File(pOther, "data.txt").exists(),
         "reinstall pruned another directory's store")
       // mid-build CONCURRENT install: last manifest wins (both builds
